@@ -169,7 +169,7 @@ object Bench {
     * round-over-round comparison (PERF_r10 `prev_bench_ok: false`).
     */
   def renderLine(allNames: Seq[String], allSamples: Map[String, Seq[Option[Double]]],
-      isolatedNames: Seq[String], harness: String, sfDir: String): String = {
+      isolatedNames: Seq[String], harness: String, sfDir: String, nPasses: Int = 2): String = {
     val results = allNames.map { name =>
       // a failed attempt must not masquerade as a fast run
       val goodTimes = allSamples.getOrElse(name, Seq.empty).flatten
@@ -191,7 +191,8 @@ object Bench {
     val perPass = allNames.map { name =>
       val samples = allSamples.getOrElse(name, Seq.empty)
         .map(_.map(t => f"$t%.3f").getOrElse("null"))
-      "\"" + name + "\":[" + (if (samples.isEmpty) "null,null" else samples.mkString(",")) + "]"
+      val shown = if (samples.isEmpty) Seq.fill(nPasses)("null") else samples
+      "\"" + name + "\":[" + shown.mkString(",") + "]"
     }.mkString("{", ",", "}")
     val isolated = isolatedNames.map("\"" + _ + "\"").mkString("[", ",", "]")
     s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","harness":"$harness","isolated":$isolated,"queries":$qs,"passes":$perPass,"failed":$failed,"sf":"$sfDir"}"""
@@ -247,6 +248,10 @@ object Bench {
       (dt, ok)
     }
 
+    // timed passes after the warm-up, also the null count of a row
+    // that never sampled (see runInJvm)
+    val nPasses = math.max(1, sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt)
+
     /** Warm-up then TWO COMPLETE PASSES over the subset, per-query min
       * ACROSS passes (not min-of-two-consecutive): back-to-back runs of
       * the same query share whatever JIT/GC state its predecessors left
@@ -270,7 +275,6 @@ object Bench {
       // showed the bimodal JIT inflation can fire within a single
       // row's own JVM when warm-up + 2 passes share it (tfidf charged
       // [45.3, 36.8] while fresh-JVM single runs read 10-16 s).
-      val nPasses = math.max(1, sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt)
       val passes = (1 to nPasses).map { p => fns.map { case (n, fn) => n -> timeOne(n, fn, p) } }
       fns.map { case (name, _) =>
         name -> passes.map(_.collectFirst { case (`name`, (t, ok)) => if (ok) Some(t) else None }
@@ -311,8 +315,10 @@ object Bench {
                 System.err.println(s"[bench]   heavy ${c.head} pass $p (own fresh JVM)")
                 runIsolated(c, sfDir, passes = 1)
               }
-              if (runs.forall(_.isDefined))
-                Some(Map(c.head -> runs.flatMap(_.get(c.head))))
+              // a child whose map lacks the row counts as a failed fork
+              val samples = runs.flatMap(_.flatMap(_.get(c.head)))
+              if (samples.size == runs.size)
+                Some(Map(c.head -> samples.flatten))
               else {
                 System.err.println(
                   s"[bench] per-pass fork failed for ${c.head}; single-fork 2-pass fallback")
@@ -331,7 +337,7 @@ object Bench {
     val allNames = selected.keySet.toSeq.sorted
     val harness =
       if (only.isEmpty && !noChunk) "2-pass-min/v5-passfork" else "2-pass-min/v3-cleanstate"
-    val line = renderLine(allNames, allSamples, isolatedNames, harness, sfDir)
+    val line = renderLine(allNames, allSamples, isolatedNames, harness, sfDir, nPasses)
     // Persist FIRST, then print: the driver's log-tail capture clipped
     // the head of the stdout line in r3 AND r4 ("parsed": null) — the
     // authoritative copy is the file; the canonical path is named in

@@ -38,15 +38,14 @@ object GraftSession {
     // joins — depend on it at scale, so state the dependency explicitly
     // rather than inherit whatever a deployment's base conf says)
     spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-    // events.parquet carries INT64 TIMESTAMP(NANOS) — read as long and
-    // convert in Tables.events (integral ns→µs division: no precision
-    // loss, same floor semantics as the DuckDB oracle's read path)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // tz-naive parquet TIMESTAMP(MICROS) (isAdjustedToUTC=false) must
-    // read as session-local TIMESTAMP, not TIMESTAMP_NTZ: the session
-    // is pinned UTC, so wall-clock values are identical, and the whole
-    // epoch-math layer (unix_millis/epochMs) stays type-correct — the
-    // same instant the DuckDB oracle reads from the same file
+    // the tables' timestamp columns (events.ts, lineitem.l_shipdate,
+    // orders.o_orderdate) are tz-naive parquet TIMESTAMP(MICROS)
+    // (isAdjustedToUTC=false), and Tables declares them TIMESTAMP. An
+    // inferred read must agree: session-local TIMESTAMP, not
+    // TIMESTAMP_NTZ. The session is pinned UTC, so wall-clock values
+    // are identical, and the whole epoch-math layer
+    // (unix_millis/epochMs) stays type-correct — the same instant the
+    // DuckDB oracle reads from the same file
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     // custom operators (SURVEY §2: native as-of join) — injected through
     // the public experimental-strategies hook so externally created

@@ -1,10 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType}
 
 /** Hamming distance between two 64-bit fingerprints (simhash near-dup
   * distance). A native Catalyst expression with codegen: stays inside
@@ -143,15 +144,26 @@ case class SortedTokenDot(left: Expression, right: Expression)
   * UTF8String.compareTo that dominated the verify stage's CPU. Like
   * [[SortedTokenDot]], the sorted-unique precondition is DETECTED: a
   * non-increasing element on either side throws instead of silently
-  * undercounting.
+  * undercounting. The element types are checked at analysis: both
+  * sides `array<string>` or both `array<bigint>`, so a mismatched or
+  * `array<int>` call fails to analyze instead of running the wrong
+  * merge.
   */
 case class SortedIntersectCount(left: Expression, right: Expression)
     extends BinaryExpression {
   override def dataType: DataType = org.apache.spark.sql.types.IntegerType
 
+  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
+    case (ArrayType(StringType, _), ArrayType(StringType, _)) |
+        (ArrayType(LongType, _), ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
+    case (l, r) => TypeCheckResult.TypeCheckFailure(
+      "graft_sorted_intersect needs two array<string> or two array<bigint> arguments, got " +
+        s"${l.catalogString} and ${r.catalogString}")
+  }
+
   private lazy val isLong = left.dataType match {
-    case org.apache.spark.sql.types.ArrayType(LongType, _) => true
-    case _                                                 => false
+    case ArrayType(LongType, _) => true
+    case _ => false
   }
 
   /** Merge body in [[NativeMerges.sortedIntersect]] /

@@ -8,11 +8,14 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
 /** Optimizer rule: push comparisons through the engine's monotone time
   * conversions so they reach the parquet scan.
   *
-  * events.ts arrives as INT64 nanos and is exposed as
-  * `timestamp_micros(ts div 1000)` (Tables.events). A window predicate
-  * over the converted column compares a *function* of the raw column,
-  * which the parquet source cannot translate — the scan reads
-  * everything. Both conversion steps are strictly monotone, so a
+  * A time column derived from a raw epoch long, as
+  * `timestamp_micros(x)` or `timestamp_micros(x div k)` (the firehose
+  * feed derives `ts` from each record's created_at micros this way),
+  * turns a window predicate into a comparison of a *function* of the
+  * raw column, which the parquet source cannot translate — the scan
+  * reads everything. (events.ts itself is parquet TIMESTAMP(MICROS)
+  * and reads as TIMESTAMP, so its predicates reach the scan without
+  * this rule.) Both conversion steps are strictly monotone, so a
   * literal comparison can be rewritten onto the raw column:
   *
   *   micros_to_ts(y) cmp TIMESTAMP_LIT  ⟺  y cmp lit_micros

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * should touch the postings of ITS terms, not every document. This
   * index materializes:
   *
-  *   <dir>/postings/  (token, doc_id, tf, dl) PARTITIONED BY bucket —
+  *   <dir>/postings/  (doc_id, token, tf, dl) PARTITIONED BY bucket —
   *                    bucket = xxhash64(token) mod 64, so one term's
   *                    postings live in exactly one storage partition
   *   <dir>/stats/     (n_docs, tot_dl) — one row, the corpus-level
@@ -28,6 +28,12 @@ object InvertedIndex {
   val Buckets = 64
 
   def bucketOf(tok: Column): Column = pmod(xxhash64(tok), lit(Buckets.toLong)).cast("int")
+
+  /** `<dir>/postings`: one row per (doc, token), partitioned by bucket. */
+  val Postings = Layout("doc_id BIGINT, token STRING, tf BIGINT, dl INT, bucket INT")
+
+  /** `<dir>/stats`: one partial row per build or append. */
+  val Stats = Layout("n_docs BIGINT, tot_dl BIGINT")
 
   private def docLengths(docs: DataFrame): DataFrame = docs
     .select(col("doc_id"), size(filter(split(col("text"), " "), t => t =!= "")).as("dl"))
@@ -48,9 +54,9 @@ object InvertedIndex {
     * the per-row doc length, hashed into bucket partitions.
     */
   def build(docs: DataFrame, outDir: String): Unit = {
-    postingRows(docs).repartition(col("bucket"))
+    Postings.conform(postingRows(docs)).repartition(col("bucket"))
       .write.mode("overwrite").partitionBy("bucket").parquet(s"$outDir/postings")
-    statsRow(docs).write.mode("overwrite").parquet(s"$outDir/stats")
+    Stats.conform(statsRow(docs)).write.mode("overwrite").parquet(s"$outDir/stats")
   }
 
   /** Fold a NEW batch of docs into an existing index: postings rows
@@ -64,17 +70,17 @@ object InvertedIndex {
     * the hash-index intake for exactly-once ingestion).
     */
   def append(docs: DataFrame, indexDir: String): Unit = {
-    postingRows(docs).repartition(col("bucket"))
+    Postings.conform(postingRows(docs)).repartition(col("bucket"))
       .write.mode("append").partitionBy("bucket").parquet(s"$indexDir/postings")
-    statsRow(docs).write.mode("append").parquet(s"$indexDir/stats")
+    Stats.conform(statsRow(docs)).write.mode("append").parquet(s"$indexDir/stats")
   }
 
   def postings(s: SparkSession, indexDir: String): DataFrame =
-    s.read.parquet(s"$indexDir/postings")
+    Postings.read(s, s"$indexDir/postings")
 
   /** Corpus stats — the SUM of the build + append partial rows. */
   def stats(s: SparkSession, indexDir: String): DataFrame =
-    s.read.parquet(s"$indexDir/stats")
+    Stats.read(s, s"$indexDir/stats")
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("tot_dl")).as("tot_dl"))
 
   /** BM25 top-k over the index: identical scoring algebra to
@@ -90,11 +96,13 @@ object InvertedIndex {
       terms.toDF("token").withColumn("bucket", bucketOf(col("token")))
     }
     // the term list is a query-time CONSTANT, so the bucket set is
-    // resolved eagerly (a LocalTableScan over |terms| rows — no
-    // distributed work) and pushed as a STATIC partition filter: the
+    // resolved eagerly and pushed as a STATIC partition filter: the
     // scan lists only the probed bucket directories, which beats
-    // relying on runtime DPP for a constant relation
-    val probedBuckets = q.select(col("bucket")).distinct().collect().map(_.getInt(0)).toSeq
+    // relying on runtime DPP for a constant relation. Catalyst folds
+    // the projection into the local relation, so the collect runs no
+    // Spark job; de-duplicating here rather than with .distinct()
+    // keeps it that way (an aggregate would be a job)
+    val probedBuckets = q.select(col("bucket")).collect().map(_.getInt(0)).toSeq.distinct
     val tf = postings(s, indexDir)
       .filter(col("bucket").isin(probedBuckets: _*))
       .join(broadcast(q), Seq("bucket", "token"))

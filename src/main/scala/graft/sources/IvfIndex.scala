@@ -29,28 +29,31 @@ import org.apache.spark.sql.functions._
   */
 object IvfIndex {
 
+  /** `<dir>/centroids`: one row per trained centroid. */
+  val Centroids = Layout("cent_id INT, ce ARRAY<DOUBLE>")
+
+  /** `<dir>/lists`: the inverted lists, partitioned by cent_id. */
+  val Lists = Layout("vec_id BIGINT, e ARRAY<DOUBLE>, cent_id INT")
+
   /** Train centroids on (vec_id, e) and write both index artifacts.
     * cent_id is stored as INT (k never approaches 2^31; partition
     * values read back as their written type this way).
     */
   def build(emb: DataFrame, outDir: String, k: Int = 16, iters: Int = 2): Unit = {
-    val cents = TextOps
-      .ivfCentroids(emb, k, iters)
-      .select(col("cent_id").cast("int").as("cent_id"), col("ce"))
+    val cents = Centroids.conform(TextOps.ivfCentroids(emb, k, iters))
     cents.write.mode("overwrite").parquet(s"$outDir/centroids")
-    TextOps
+    Lists.conform(TextOps
       .nearestCentroids(emb, cents.select(col("cent_id").cast("long").as("cent_id"), col("ce")),
-        "vec_id", "e", 1)
-      .select(col("vec_id"), col("e"), col("cent_id").cast("int").as("cent_id"))
+        "vec_id", "e", 1))
       .repartition(col("cent_id"))
       .write.mode("overwrite").partitionBy("cent_id").parquet(s"$outDir/lists")
   }
 
   def centroids(s: SparkSession, indexDir: String): DataFrame =
-    s.read.parquet(s"$indexDir/centroids")
+    Centroids.read(s, s"$indexDir/centroids")
 
   def lists(s: SparkSession, indexDir: String): DataFrame =
-    s.read.parquet(s"$indexDir/lists")
+    Lists.read(s, s"$indexDir/lists")
 
   /** ANN search over the persisted index: assign each query row
     * (query_id, qe) to its `probes` nearest centroids (broadcast of

@@ -64,8 +64,7 @@ object SemanticIndex {
 
   /** Fold admitted vectors into their nearest list partition. */
   def append(s: SparkSession, admitted: DataFrame, indexDir: String): Unit =
-    graft.queries.TextOps
-      .nearestCentroids(admitted, cents(s, indexDir), "vec_id", "e", 1)
-      .select(col("vec_id"), col("e"), col("cent_id").cast("int").as("cent_id"))
+    IvfIndex.Lists.conform(graft.queries.TextOps
+      .nearestCentroids(admitted, cents(s, indexDir), "vec_id", "e", 1))
       .write.mode("append").partitionBy("cent_id").parquet(s"$indexDir/lists")
 }

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.Tables
 import graft.sources.{InvertedIndex, IvfIndex, Sources}
 import graft.streaming.Streams
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -89,11 +90,11 @@ object Serve {
     import spark.implicits._
 
     // ---- build (or cache-hit) the three persisted layouts ----------
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = Tables.documents(spark, sfDir)
     val bm25Dir = Sources.cachedIndexDir(sfDir, "documents", "bm25-inverted-v1")(p =>
       InvertedIndex.build(docs, p))
 
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val emb = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("e"))
     val ivfDir = Sources.cachedIndexDir(sfDir, "embeddings", "ivf-index-v1")(p =>
       IvfIndex.build(emb, p))
@@ -102,7 +103,7 @@ object Serve {
     // source), checkpoint kept as the serving layout — rebuilt only
     // when the input fingerprint changes, exactly like the indexes
     val feedDir = Sources.cachedIndexDir(sfDir, "events", "serve-feed-v1") { p =>
-      val batch = spark.read.parquet(s"$sfDir/events.parquet")
+      val batch = Tables.events(spark, sfDir)
       val anchorMs = batch.agg(max(unix_millis(col("ts")))).head().getLong(0)
       val stage = s"$p/stage"
       batch.write.mode("overwrite").parquet(stage)

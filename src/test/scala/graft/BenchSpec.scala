@@ -84,6 +84,10 @@ class BenchSpec extends AnyFunSuite {
       "failed rows serialize as null, never a numeric sentinel")
     assert(root.get("failed").toString == "[\"beta_failed\",\"gamma_missing\"]")
     assert(root.get("passes").get("gamma_missing").toString == "[null,null]")
+    // a never-sampled row shows one null per pass the run took
+    val onePass = mapper.readTree(Bench.renderLine(names, samples, Seq.empty,
+      "2-pass-min/v3-cleanstate", "sf0.001", nPasses = 1))
+    assert(onePass.get("passes").get("gamma_missing").toString == "[null]")
     assert(root.get("isolated").toString == "[\"alpha_ok\"]")
     assert(root.get("sf").asText() == "/root/testdata/sf0.001")
   }

@@ -4005,6 +4005,18 @@ class QueryCatalogSpec extends AnyFunSuite {
       }
       assert(msgs(e).exists(_.contains("sorted with unique")), s"wrong error for $bad: $e")
     }
+    // the element types are checked at analysis: array<int> and mixed
+    // string/bigint sides fail there instead of running the wrong merge
+    for (bad <- Seq("array(1, 2), array(1, 2)", "array('a', 'b'), array(1L, 2L)",
+        "array(1L, 2L), array('a', 'b')")) {
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        spark.sql(s"SELECT graft_sorted_intersect($bad)")
+      }
+      assert(msgs(e).exists(_.contains("two array<string> or two array<bigint>")),
+        s"wrong error for $bad: $e")
+    }
+    assert(spark.sql("SELECT graft_sorted_intersect(array(1L, 3L), array(1L, 2L, 3L))")
+      .head().getInt(0) == 2)
     // the dot's precondition is detected the same way (the out-of-order
     // element must sit inside the merged region to be observable)
     val ed = intercept[Exception] {
