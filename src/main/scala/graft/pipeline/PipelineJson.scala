@@ -69,7 +69,8 @@ case class Binding(
     /** Likes bipartite graph for the custom_liked* inputs: first column
       * = liker user key, second = liked post key (the reference's
       * likes_user_to_posts / likes_post_to_users RoaringBitmaps as one
-      * edge relation).
+      * edge relation). A row with a null liker or a null post is not an
+      * edge and is ignored.
       */
     likes: Option[DataFrame] = None,
     /** Resolved feed skeletons for the `feed` input (main.rs:1704):
@@ -540,12 +541,34 @@ object PipelineJson {
     b.likes.getOrElse(
       throw new IllegalArgumentException(s"$blockType needs Binding.likes (liker, post)"))
 
-  /** Shared tail of the custom_liked* inputs: max-normalize the raw
-    * decimal per-post scores (single-row broadcast, no driver collect)
-    * and join the scored ids back onto the (optionally windowed) store.
+  /** Shared core of the custom_liked* inputs. `weightsOf` maps the like
+    * edges to one `(__u, __w)` row per scoring liker; a post's raw score
+    * is the decimal sum of its likers' weights. Scores are
+    * max-normalized and joined back onto the (optionally windowed)
+    * store.
+    *
+    * A like with a null liker or a null post is not an edge, as in the
+    * reference's u32 RoaringBitmaps: it is dropped here, before both
+    * `weightsOf` and the score aggregation read the edges, so it counts
+    * toward no liker's degree and scores no post, not even in the max.
+    *
+    * The raw scores feed two plans: the scores themselves and their max
+    * (a single-row broadcast, no driver collect). The two must
+    * canonicalize alike, so that the max reads the score shuffle
+    * (`hashpartitioning(post)`) as a ReusedExchange instead of scanning,
+    * joining and aggregating the graph a second time. The null-post
+    * filter is what keeps them alike: without it the store join's
+    * inferred `isnotnull(post)` is pushed into the score plan alone.
     */
-  private def normalizedStoreJoin(
-      raw: DataFrame, b: Binding, win: Seq[Block], mult: Double): DataFrame = {
+  private def normalizedStoreJoin(likes: DataFrame, b: Binding, win: Seq[Block], mult: Double)(
+      weightsOf: DataFrame => DataFrame): DataFrame = {
+    val (uCol, pCol) = (likes.columns(0), likes.columns(1))
+    val edges = likes.filter(col(uCol).isNotNull && col(pCol).isNotNull)
+    val weights = weightsOf(edges)
+    val raw = edges
+      .join(weights, edges(uCol) === weights("__u"))
+      .groupBy(edges(pCol).as("__post"))
+      .agg(sum(col("__w")).as("__raw"))
     val mx = raw.agg(max(col("__raw")).as("__mx"))
     val scored = raw
       .crossJoin(broadcast(mx))
@@ -623,26 +646,29 @@ object PipelineJson {
             // (main.rs:1453): posts liked by the list's users; prolific
             // likers weigh less — per-like weight 1/(base + likes(u)),
             // post score = max-normalized weight sum. Replaces the
-            // working set with the scored posts. Weight rounded then
-            // decimal-summed (order-independent, oracle-exact); the
-            // normalizing max arrives by single-row broadcast, no
-            // driver collect.
+            // working set with the scored posts. The weight is rounded
+            // then decimal-summed (order-independent, oracle-exact), and
+            // computed once per member liker, not once per like: the
+            // likes are semi-joined to the list, counted per liker and
+            // weighted, and that relation reaches the edges by a
+            // broadcast inner join, which also keeps only members' likes.
+            // The list's size bounds the broadcast.
             val likes = boundLikes(b, "custom_likedweighted")
             val members = boundList(n, b, "input")
             val baseCnt =
               if (n.hasNonNull("baseLikeCount")) n.get("baseLikeCount").asDouble() else 0.0
             val mult = str(n, "scoreNormalizationMultiplier", "1.0").toDouble
-            val (uCol, pCol) = (likes.columns(0), likes.columns(1))
+            val uCol = likes.columns(0)
             val win = histWindow(n, b)
             Seq(Compute { _ =>
-              val userCnt = likes.groupBy(col(uCol)).agg(count(lit(1)).as("__n"))
-              val raw = likes
-                .join(members, likes(uCol) === members(members.columns.head), "left_semi")
-                .join(userCnt, uCol)
-                .withColumn("__w", round(lit(1.0) / (lit(baseCnt) + col("__n")), 10).cast(Dec12))
-                .groupBy(col(pCol).as("__post"))
-                .agg(sum(col("__w")).as("__raw"))
-              normalizedStoreJoin(raw, b, win, mult)
+              normalizedStoreJoin(likes, b, win, mult) { edges =>
+                broadcast(edges
+                  .join(members, edges(uCol) === members(members.columns.head), "left_semi")
+                  .groupBy(col(uCol).as("__u"))
+                  .agg(count(lit(1)).as("__n"))
+                  .select(col("__u"),
+                    round(lit(1.0) / (lit(baseCnt) + col("__n")), 10).cast(Dec12).as("__w")))
+              }
             })
 
           case "custom_likedbylikers" =>
@@ -650,7 +676,11 @@ object PipelineJson {
             // CURRENT working set — each seed post's likers become
             // curators scored by f0..f5 of that post's liker count;
             // the new working set is everything the curators liked,
-            // scored by the max-normalized curator-score sum.
+            // scored by the max-normalized curator-score sum. The
+            // curator relation is the working set's size, which the
+            // payload does not bound (a 24h firehose can precede this
+            // block), so its joins carry no broadcast hint: the session
+            // threshold and AQE choose, and at scale they shuffle.
             val likes = boundLikes(b, "custom_likedbylikers")
             val fnName = str(n, "userScoreFunction", "f1")
             val exponent = str(n, "scoreExponent", "1.3").toDouble
@@ -658,20 +688,17 @@ object PipelineJson {
             val (uCol, pCol) = (likes.columns(0), likes.columns(1))
             val win = histWindow(n, b)
             Seq(Compute { working =>
-              val postCnt = likes.groupBy(col(pCol)).agg(count(lit(1)).as("__cnt"))
-              val seeds = working.select(col(b.idCol).as("__sid")).distinct()
-              val curators = likes
-                .join(seeds, likes(pCol) === col("__sid"))
-                .join(postCnt, pCol)
-                .withColumn("__s", round(UserScore.fn(fnName, exponent)(col("__cnt")), 10).cast(Dec12))
-                .filter(col("__s") > 0) // the reference drops non-positive scores
-                .groupBy(col(uCol).as("__cu"))
-                .agg(sum(col("__s")).as("__cscore"))
-              val raw = likes
-                .join(curators, likes(uCol) === col("__cu"))
-                .groupBy(col(pCol).as("__post"))
-                .agg(sum(col("__cscore")).as("__raw"))
-              normalizedStoreJoin(raw, b, win, mult)
+              normalizedStoreJoin(likes, b, win, mult) { edges =>
+                val postCnt = edges.groupBy(col(pCol)).agg(count(lit(1)).as("__cnt"))
+                val seeds = working.select(col(b.idCol).as("__sid")).distinct()
+                edges
+                  .join(seeds, edges(pCol) === col("__sid"))
+                  .join(postCnt, pCol)
+                  .withColumn("__s", round(UserScore.fn(fnName, exponent)(col("__cnt")), 10).cast(Dec12))
+                  .filter(col("__s") > 0) // the reference drops non-positive scores
+                  .groupBy(col(uCol).as("__u"))
+                  .agg(sum(col("__s")).as("__w"))
+              }
             })
 
           case "feed" =>

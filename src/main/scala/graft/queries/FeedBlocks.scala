@@ -496,8 +496,8 @@ object FeedBlocks {
   /** #16 custom_likedweighted (main.rs:1453): likes = lineitem
     * (l_suppkey likes l_partkey); prolific likers weigh less:
     * weight(u) = 1/(base + n_likes(u)); post score = Σ weights.
-    * Per-row weight rounded then summed as DECIMAL → order-independent,
-    * bit-identical to the oracle.
+    * Each liker's weight is rounded once, then summed per post as
+    * DECIMAL → order-independent, bit-identical to the oracle.
     */
   def likesWeighted(s: SparkSession, dir: String): DataFrame =
     likesWeightedOver(
@@ -510,10 +510,13 @@ object FeedBlocks {
     * attention, not audience.
     */
   private[graft] def likesWeightedOver(likes: DataFrame): DataFrame = {
-    val userCnt = likes.groupBy(col("u")).agg(count(lit(1)).as("n_likes"))
+    // the weight is computed once per liker, on the aggregated side
+    val userW = likes
+      .groupBy(col("u"))
+      .agg(count(lit(1)).as("n_likes"))
+      .select(col("u"), round(lit(1.0) / (lit(5.0) + col("n_likes")), 10).cast(Dec12).as("w"))
     likes
-      .join(userCnt, "u")
-      .withColumn("w", round(lit(1.0) / (lit(5.0) + col("n_likes")), 10).cast(Dec12))
+      .join(userW, "u")
       .groupBy(col("p"))
       .agg(sum(col("w")).as("raw"), count(lit(1)).as("n_likers"))
       .select(col("p"), emit(col("raw"), 8).as("like_score"), col("n_likers"))
@@ -554,10 +557,13 @@ object FeedBlocks {
     */
   private[graft] def likesBylikersOver(likes: DataFrame): DataFrame = {
     val postLikers = likes.groupBy(col("p")).agg(count(lit(1)).as("n_likers"))
-    val seeds = postLikers.orderBy(col("n_likers").desc, col("p")).limit(10).select(col("p"), col("n_likers"))
+    // the f1 weight is computed once per seed, on the 10-row seed side
+    val seeds = postLikers
+      .orderBy(col("n_likers").desc, col("p"))
+      .limit(10)
+      .select(col("p"), round(userScoreFn("f1")(col("n_likers")), 10).cast(Dec12).as("w"))
     val curators = likes
       .join(broadcast(seeds), "p")
-      .withColumn("w", round(userScoreFn("f1")(col("n_likers")), 10).cast(Dec12))
       .groupBy(col("u"))
       .agg(sum(col("w")).as("curator_score"))
     likes

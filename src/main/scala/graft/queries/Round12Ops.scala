@@ -1342,7 +1342,10 @@ object Round12Ops {
       .select(col("src"), col("dst"), col("p"))
     val starts = agg.groupBy(col("src")).agg(sum(col("n_start")).as("n"))
       .filter(col("n") > 0)
-    val types = agg
+    // states are the ends of observed transitions, as in the oracle: an
+    // event type seen only as a single-event user's sole event is no
+    // state (agg's dst-null rows would add it)
+    val types = trans
       .select(explode(array(col("src"), col("dst"))).as("src"))
       .filter(col("src").isNotNull).distinct()
     // coalesce(1) collapses the union's 2-partition output so every

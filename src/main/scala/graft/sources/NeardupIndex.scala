@@ -9,9 +9,9 @@ import org.apache.spark.sql.functions._
   * cannot re-shingle history to ask "is today's batch a near-copy of
   * anything we already kept"; it keeps the banded signatures instead:
   *
-  *   <dir>/bands/  (doc_id, sig ARRAY<LONG> 16, band INT, bandhash
-  *                 LONG) — 4 rows per historical doc, ~2 orders
-  *                 smaller than the text it summarizes
+  *   <dir>/bands/  (doc_id, sig ARRAY<BIGINT> 16, band INT, bandhash
+  *                 INT; [[NeardupIndex.Bands]]) — 4 rows per historical
+  *                 doc, ~2 orders smaller than the text it summarizes
   *
   * Intake = the same two-step as batch MinHash-LSH
   * (`TextOps.minhashPairs`), but the candidate join runs NEW-vs-INDEX
@@ -35,6 +35,9 @@ object NeardupIndex {
 
   private val sigCols = (0 until 16).map(i => col(s"m$i"))
 
+  /** `<dir>/bands`: one row per (doc, band). */
+  val Bands = Layout("doc_id BIGINT, sig ARRAY<BIGINT>, band INT, bandhash INT")
+
   /** Banded rows of a (doc_id, text) frame, signature packed to one
     * array column for storage and zip_with matching.
     */
@@ -43,17 +46,16 @@ object NeardupIndex {
       .select(col("doc_id"), array(sigCols: _*).as("sig"), col("band"), col("bandhash"))
 
   def build(docs: DataFrame, outDir: String): Unit =
-    bandRows(docs).write.mode("overwrite").parquet(s"$outDir/bands")
+    Bands.conform(bandRows(docs)).write.mode("overwrite").parquet(s"$outDir/bands")
 
-  def read(s: SparkSession, indexDir: String): DataFrame =
-    s.read.parquet(s"$indexDir/bands")
+  def read(s: SparkSession, indexDir: String): DataFrame = Bands.read(s, s"$indexDir/bands")
 
   /** Append the admitted docs' band rows (call after [[intake]] with
     * the docs it admitted — by construction they matched nothing, so
     * the append introduces no duplicate signatures).
     */
   def append(admittedDocs: DataFrame, indexDir: String): Unit =
-    bandRows(admittedDocs).write.mode("append").parquet(s"$indexDir/bands")
+    Bands.conform(bandRows(admittedDocs)).write.mode("append").parquet(s"$indexDir/bands")
 
   private def estJaccard(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
     size(filter(zip_with(a, b, (x, y) => x === y), m => m)).cast("double") / 16.0
@@ -64,11 +66,8 @@ object NeardupIndex {
     * bounded per-key output at any scale, the r6 guard contract.
     */
   def intake(newDocs: DataFrame, index: DataFrame, threshold: Double = 0.5): DataFrame = {
-    val batch = graft.queries.TextOps
-      .minhashBandedRows(newDocs)
-      .select(col("doc_id"), array(sigCols: _*).as("sig"), col("band"), col("bandhash"))
     val guarded = graft.queries.TextOps
-      .dropHotBuckets(batch, Seq("band", "bandhash"), "neardup_intake_hot_buckets", None)
+      .dropHotBuckets(bandRows(newDocs), Seq("band", "bandhash"), "neardup_intake_hot_buckets", None)
     // 1. within-batch: younger doc of any matching pair drops
     val selfDupes = guarded
       .select(col("band"), col("bandhash"), col("doc_id").as("a"), col("sig").as("sig_a"))

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.NamedExpression
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Regression guard for the physical-plan shapes the 100 TB story
@@ -167,5 +168,84 @@ class PlanShapeSpec extends AnyFunSuite {
       // driver-materialized rows would mean a hidden collect
       assert(!plan.contains("LocalTableScan ["), s"$q materializes driver-side rows")
     }
+  }
+
+  private object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  /** The BroadcastHashJoins of an executed plan whose build side
+    * outputs the column `out`.
+    */
+  private def broadcastsOf(plan: org.apache.spark.sql.execution.SparkPlan, out: String) = {
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    Plans.collectWithSubqueries(plan) {
+      case j: BroadcastHashJoinExec
+          if (if (j.buildSide == BuildRight) j.right else j.left).output.exists(_.name == out) => j
+    }
+  }
+
+  test("each like-graph input scores the graph once: the max reuses the post shuffle") {
+    import org.apache.spark.sql.catalyst.plans.Inner
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    for (q <- Seq("feed_pipeline_liked", "feed_pipeline_bylikers")) {
+      val df = SparkEntry.queries(q)(spark, dir)
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      def aggOf(out: String) =
+        Plans.collectWithSubqueries(plan) { case a: HashAggregateExec if a.output.exists(_.name == out) => a }
+      // the post key the raw scores are grouped by
+      val post = aggOf("__post").flatMap(_.groupingExpressions).map(_.exprId)
+      assert(post.size == 1, s"$q: expected one score aggregate:\n$plan")
+      def onPost(e: ShuffleExchangeExec) = e.outputPartitioning match {
+        case h: HashPartitioning => h.expressions.collect { case a: NamedExpression => a.exprId } == post
+        case _ => false
+      }
+      val shuffles = Plans.collectWithSubqueries(plan) { case e: ShuffleExchangeExec if onPost(e) => e }
+      assert(shuffles.size == 1, s"$q shuffles the like edges on the post key ${shuffles.size} times:\n$plan")
+      val maxReads = aggOf("__mx").flatMap(a =>
+        Plans.collect(a) { case r @ ReusedExchangeExec(_, e: ShuffleExchangeExec) if onPost(e) => r })
+      assert(maxReads.size == 1, s"$q: the max does not read the score shuffle as a ReusedExchange:\n$plan")
+    }
+    // custom_likedweighted: the list-bounded per-liker weights are
+    // broadcast into an inner join with the edges
+    val liked = SparkEntry.queries("feed_pipeline_liked")(spark, dir)
+    liked.collect()
+    assert(broadcastsOf(liked.queryExecution.executedPlan, "__w").exists(_.joinType == Inner),
+      s"the per-liker weight side is not a broadcast inner join:\n${liked.queryExecution.executedPlan}")
+  }
+
+  test("custom_likedbylikers forces no broadcast: a firehose-seeded working set shuffles") {
+    import org.apache.spark.sql.functions.col
+    // every event seeds the walk; the curator relation then has no
+    // bound the payload sets, so only the session threshold may
+    // broadcast it. A threshold nothing fits under stands for a
+    // working set too large to broadcast.
+    val events = Tables.events(spark, dir)
+    val b = pipeline.Binding(
+      idCol = "event_id", authorCol = "user_id", tsCol = "ts", valueCol = "value",
+      nowEpochMs = 4102444800000L, regexTargets = Map.empty, whereFields = Map.empty,
+      store = Some(events),
+      likes = Some(Tables.lineitem(spark, dir).select(col("l_suppkey").as("liker"), col("l_partkey").as("post"))))
+    val payload =
+      """{"blocks":[{"type":"input","inputType":"firehose","firehoseSeconds":4000000000},
+        |{"type":"input","inputType":"custom_likedbylikers","historySeconds":4000000000}]}""".stripMargin
+    def run() = {
+      val df = pipeline.PipelineJson.run(events, payload, b).select(col("event_id"), col("score"))
+      (df.collect().map(r => (r.getLong(0), r.getDouble(1))).sorted.toSeq, df.queryExecution.executedPlan)
+    }
+    val (expected, _) = run()
+    assert(expected.size > 100, s"the walk scored only ${expected.size} posts")
+    val conf = spark.conf
+    val saved = conf.getOption("spark.sql.autoBroadcastJoinThreshold")
+    conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val (rows, plan) = run()
+      for (out <- Seq("__sid", "__cnt", "__s", "__w"))
+        assert(broadcastsOf(plan, out).isEmpty, s"the curator side broadcasts $out past the threshold:\n$plan")
+      assert(rows == expected)
+    } finally saved.fold(conf.unset("spark.sql.autoBroadcastJoinThreshold"))(v =>
+      conf.set("spark.sql.autoBroadcastJoinThreshold", v))
   }
 }

@@ -2682,6 +2682,26 @@ class QueryCatalogSpec extends AnyFunSuite {
     assert(df.filter(col("removed") === "view").head.getAs[Double]("removal_effect") > 0)
   }
 
+  test("markov attribution's states are transition ends: a sole-event type adds no variant") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.StructType
+    // user 1: view → purchase; user 3: click → view; user 2's only
+    // event is 'ghost', a start that is no transition end, so no state
+    def ev(id: Long, user: Long, typ: String) =
+      Row(id, new java.sql.Timestamp(1700000000000L + id * 1000L), user, typ, 1.0, null)
+    val rows = Seq(ev(1, 1, "view"), ev(2, 1, "purchase"), ev(3, 3, "click"), ev(4, 3, "view"),
+      ev(5, 2, "ghost"))
+    val tmp = java.nio.file.Files.createTempDirectory("graft_markov").toString
+    spark.createDataFrame(spark.sparkContext.parallelize(rows), StructType.fromDDL(Tables.Ddl("events")))
+      .write.parquet(s"$tmp/events.parquet")
+    val out = SparkEntry.queries("markov_attribution")(spark, tmp).collect()
+      .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2))).toSeq
+    // 3 users start; the view and click starts convert, the ghost start
+    // reaches no state. Removing click leaves view's path: conversion
+    // falls from 2/3 to 1/3 (effect 0.5). Removing view cuts both.
+    assert(out == Seq(("click", 0.333333, 0.5), ("none", 0.666667, 0.0), ("view", 0.0, 1.0)))
+  }
+
   test("sequential monitor boundary decays and cumulative counts are monotone") {
     import org.apache.spark.sql.functions._
     val df = SparkEntry.queries("ab_sequential_monitor")(spark, dir).cache()

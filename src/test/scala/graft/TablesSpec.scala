@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{InvertedIndex, IvfIndex, Layout, SemanticIndex}
+import graft.sources.{InvertedIndex, IvfIndex, Layout, NeardupIndex, SemanticIndex}
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -79,11 +79,22 @@ class TablesSpec extends AnyFunSuite {
     assertLayout(IvfIndex.Lists, s"$idx/lists")
   }
 
+  test("the near-dup index's bands match their declared layout after build and append") {
+    val idx = Files.createTempDirectory("graft_nd_layout").toString
+    val d = Tables.documents(spark, dir)
+    NeardupIndex.build(d.filter(col("doc_id") < 100), idx)
+    assertLayout(NeardupIndex.Bands, s"$idx/bands")
+    NeardupIndex.append(d.filter(col("doc_id") >= 100 && col("doc_id") < 150), idx)
+    assertLayout(NeardupIndex.Bands, s"$idx/bands")
+  }
+
   test("building a table read, a BM25 search or an ANN search launches no Spark job") {
     val bm = Files.createTempDirectory("graft_bm_jobs").toString
     val ivf = Files.createTempDirectory("graft_ivf_jobs").toString
+    val nd = Files.createTempDirectory("graft_nd_jobs").toString
     InvertedIndex.build(Tables.documents(spark, dir), bm)
     IvfIndex.build(vectors(dir), ivf)
+    NeardupIndex.build(Tables.documents(spark, dir).filter(col("doc_id") < 100), nd)
     // the counter sees the footer-reading job an inferred schema costs
     assert(jobsDuring(spark.read.parquet(s"$dir/region.parquet")) > 0)
     val built = jobsDuring {
@@ -92,6 +103,8 @@ class TablesSpec extends AnyFunSuite {
       val q = vectors(dir).filter(col("vec_id") < 3)
         .select(col("vec_id").as("query_id"), col("e").as("qe"))
       IvfIndex.search(spark, ivf, q)
+      // and a near-dup index read
+      NeardupIndex.read(spark, nd)
     }
     assert(built == 0, s"building the reads launched $built Spark job(s)")
   }

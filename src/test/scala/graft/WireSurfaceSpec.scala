@@ -505,4 +505,51 @@ class WireSurfaceSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](
       runWire("""{"type":"input","inputType":"list","listUri":"at://unbound"}"""))
   }
+
+  /** The like graph of the two custom_* inputs over the store's posts.
+    * Members 10 and 12 like 1, 2, 3 and 1; non-member 11 likes 1 and 4.
+    * The null rows are likes that are not edges: they must move no
+    * liker's count, no seed's count and no max. Counted, they would
+    * change the expected scores below.
+    */
+  private lazy val likedBinding: Binding = {
+    val s = spark
+    import s.implicits._
+    val edges = Seq(10L -> 1L, 10L -> 2L, 10L -> 3L, 12L -> 1L, 11L -> 1L, 11L -> 4L)
+      .map { case (u, p) => (Option(u), Option(p)) }
+    val notEdges = Seq[(Option[Long], Option[Long])](
+      (Some(10L), None), (Some(10L), None), (Some(11L), None), (Some(12L), None),
+      (None, Some(1L)), (None, Some(2L)), (None, None))
+    binding.copy(likes = Some((edges ++ notEdges).toDF("liker", "post")))
+  }
+
+  private def runScored(blocksJson: String): Seq[(Long, Double)] =
+    PipelineJson.run(store, s"""{"blocks":[$blocksJson]}""", likedBinding)
+      .select(col("id"), col("score")).collect()
+      .map(r => (r.getLong(0), r.getDouble(1))).toSeq.sortBy(_._1)
+
+  test("custom_likedweighted: members' likes only, 1/(base + n) per liker, max-normalized") {
+    val input = """{"type":"input","inputType":"custom_likedweighted","listUri":"at://lists/team""""
+    // base 0: w(10) = 1/3, w(12) = 1; raw 1 = 4/3, raw 2 = raw 3 = 1/3.
+    // Non-member 11's likes score nothing, so post 4 is absent.
+    assert(runScored(s"""$input}""") == Seq(1L -> 1.0, 2L -> 0.25, 3L -> 0.25))
+    // base 2: w(10) = 1/5, w(12) = 1/3; raw 1 = 8/15, raw 2 = 1/5 → 0.375,
+    // times the multiplier. The 25-minute history window drops post 3
+    // (30 minutes old) from the store, not from the max.
+    assert(runScored(
+      s"""$input,"baseLikeCount":2,"scoreNormalizationMultiplier":10,"historySeconds":1500}""")
+      == Seq(1L -> 10.0, 2L -> 3.75))
+  }
+
+  test("custom_likedbylikers: f1 of each seed's liker count, curators' likes summed, max-normalized") {
+    val seeded = """{"type":"input","inputType":"post","postUri":[1,2]}"""
+    val input = """{"type":"input","inputType":"custom_likedbylikers","historySeconds":999999999"""
+    // seed 1 has 3 likers (f1 = 1/3), seed 2 has 1 (f1 = 1). Curators:
+    // 10 = 4/3, 11 = 1/3, 12 = 1/3. Raw: 1 ≈ 2, 2 = 3 ≈ 4/3, 4 ≈ 1/3
+    // (each weight is rounded to 10 places before it is summed).
+    assert(runScored(s"""$seeded,$input}""") ==
+      Seq(1L -> 1.0, 2L -> 0.666667, 3L -> 0.666667, 4L -> 0.166667))
+    assert(runScored(s"""$seeded,$input,"scoreNormalizationMultiplier":2}""") ==
+      Seq(1L -> 2.0, 2L -> 1.333333, 3L -> 1.333333, 4L -> 0.333333))
+  }
 }
