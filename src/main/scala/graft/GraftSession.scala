@@ -26,10 +26,8 @@ object GraftSession {
     // per-task fixed costs dwarf the parallelism gained, exactly the
     // guide §1.2 warning that config is the LAST lever. Core
     // starvation on genuinely expensive narrow stages is fixed
-    // per-operator with GraftSession.fan instead; the env knob stays
-    // for future A/Bs.
-    sys.env.get("SPARK_GRAFT_MIN_PART_SIZE").foreach(
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", _))
+    // per-operator with GraftSession.fan instead, so minPartitionSize
+    // stays at Spark's default.
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
     // dims (region/nation/customer/part/supplier at test SF) broadcast freely
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
@@ -277,6 +275,11 @@ object OracleMath {
     */
   val Dec12 = DecimalType(38, 12)
 
+  /** Integral exact decimal: counts and integer sums whose products
+    * must not overflow a long or round through a double.
+    */
+  def dec0(c: Column): Column = c.cast("decimal(38,0)")
+
   /** Order-independent sum: cast to decimal first. */
   def dsum(c: Column): Column = sum(c.cast(Dec))
 
@@ -292,6 +295,18 @@ object OracleMath {
     */
   def emit(c: Column, scale: Int = 4): Column =
     round(c, scale).cast("double") + lit(0.0)
+
+  /** DuckDB's `round(DOUBLE, s)`: round(x·10^s) / 10^s on the binary
+    * value. Spark's `round` rounds the double's shortest decimal string
+    * HALF_UP instead, and the two differ where x·10^s sits within an
+    * ulp of a half: 323/640 prints as 0.5046875 (Spark → 0.504688), but
+    * times 1e6 it is 504687.49999999994 (DuckDB → 0.504687). Use it
+    * where the oracle rounds a DOUBLE (a ratio of counts or doubles).
+    */
+  def roundDouble(c: Column, scale: Int): Column = {
+    val m = math.pow(10, scale)
+    round(c * lit(m)) / lit(m)
+  }
 
   /** Exact average as sum/count on decimals, emitted as double. */
   def davg(c: Column, scale: Int = 4): Column =

@@ -1,10 +1,13 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.queries._
 
-/** Driver contract — see /root/repo/SURVEY.md §2 for the inventory.
+/** Driver contract — see SURVEY.md §2 for the inventory.
   * Each key runs one operator's query; `oracleSql` holds the DuckDB
-  * equivalent the driver hash-compares against.
+  * equivalent the driver hash-compares against. Every module declares
+  * its keys once (`Key.exact` / `Key.rowsOnly`); both maps derive from
+  * that one list.
   */
 object SparkEntry {
 
@@ -12,72 +15,24 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("feed_pipeline")(spark, "/root/testdata/sf0.001")
 
-  private lazy val catalog: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.Analytics.queries ++
-      graft.queries.FeedBlocks.queries ++
-      graft.queries.TextOps.queries ++
-      graft.queries.GraphOps.queries ++
-      graft.queries.Round2Ops.queries ++
-      graft.queries.Round3Ops.queries ++
-      graft.queries.Round4Ops.queries ++
-      graft.queries.Round5Ops.queries ++
-      graft.queries.Round6Ops.queries ++
-      graft.queries.Round8Ops.queries ++
-      graft.queries.Round9Ops.queries ++
-      graft.queries.Round10Ops.queries ++
-      graft.queries.Round11Ops.queries ++
-      graft.queries.Round12Ops.queries ++
-      graft.queries.Round13Ops.queries ++
-      graft.queries.Round14Ops.queries ++
-      graft.queries.Round15Ops.queries ++
-      graft.queries.Round16Ops.queries ++
-      graft.queries.Round17Ops.queries ++
-      graft.queries.Round18Ops.queries ++
-      graft.queries.Round19Ops.queries ++
-      graft.queries.Round20Ops.queries ++
-      graft.queries.Round21Ops.queries ++
-      graft.queries.Round22Ops.queries ++
-      graft.queries.Round23Ops.queries ++
-      graft.queries.Round24Ops.queries ++
-      graft.queries.Round25Ops.queries ++
-      graft.queries.DssOps.queries ++
-      graft.queries.BehaviorOps.queries
+  /** Each module once; a key name declared twice fails initialization. */
+  private val catalog: Map[String, Key] = Key.byName(Seq(
+    Analytics.keys, FeedBlocks.keys, TextOps.keys, GraphOps.keys,
+    Round2Ops.keys, Round3Ops.keys, Round4Ops.keys, Round5Ops.keys,
+    Round6Ops.keys, Round8Ops.keys, Round9Ops.keys, Round10Ops.keys,
+    Round11Ops.keys, Round12Ops.keys, Round13Ops.keys, Round14Ops.keys,
+    Round15Ops.keys, Round16Ops.keys, Round17Ops.keys, Round18Ops.keys,
+    Round19Ops.keys, Round20Ops.keys, Round21Ops.keys, Round22Ops.keys,
+    Round23Ops.keys, Round24Ops.keys, Round25Ops.keys, DssOps.keys,
+    BehaviorOps.keys).flatten)
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    catalog.map { case (k, fn) =>
-      k -> ((s: SparkSession, dir: String) => fn(GraftSession.tune(s), dir))
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    catalog.map { case (k, key) =>
+      k -> ((s: SparkSession, dir: String) => key.run(GraftSession.tune(s), dir))
     }
 
   /** DuckDB oracle SQL per query key (rows-only ops omitted). */
-  def oracleSql: Map[String, String] =
-    graft.queries.Analytics.oracles ++
-      graft.queries.FeedBlocks.oracles ++
-      graft.queries.TextOps.oracles ++
-      graft.queries.GraphOps.oracles ++
-      graft.queries.Round2Ops.oracles ++
-      graft.queries.Round3Ops.oracles ++
-      graft.queries.Round4Ops.oracles ++
-      graft.queries.Round5Ops.oracles ++
-      graft.queries.Round6Ops.oracles ++
-      graft.queries.Round8Ops.oracles ++
-      graft.queries.Round9Ops.oracles ++
-      graft.queries.Round10Ops.oracles ++
-      graft.queries.Round11Ops.oracles ++
-      graft.queries.Round12Ops.oracles ++
-      graft.queries.Round13Ops.oracles ++
-      graft.queries.Round14Ops.oracles ++
-      graft.queries.Round15Ops.oracles ++
-      graft.queries.Round16Ops.oracles ++
-      graft.queries.Round17Ops.oracles ++
-      graft.queries.Round18Ops.oracles ++
-      graft.queries.Round19Ops.oracles ++
-      graft.queries.Round20Ops.oracles ++
-      graft.queries.Round21Ops.oracles ++
-      graft.queries.Round22Ops.oracles ++
-      graft.queries.Round23Ops.oracles ++
-      graft.queries.Round24Ops.oracles ++
-      graft.queries.Round25Ops.oracles ++
-      graft.queries.DssOps.oracles ++
-      graft.queries.BehaviorOps.oracles
+  val oracleSql: Map[String, String] =
+    catalog.collect { case (k, Key(_, _, Some(sql))) => k -> sql }
 }

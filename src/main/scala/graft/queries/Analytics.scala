@@ -1,6 +1,7 @@
 package graft.queries
 
-import graft.{OracleMath, Tables}
+import graft.{Key, OracleMath, Tables}
+import graft.Key.{exact, rowsOnly}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -895,51 +896,28 @@ object Analytics {
       |FROM e GROUP BY CUBE(event_type, month)
       |ORDER BY event_type, month""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1_agg" -> (q1Agg(_, _)),
-    "cube_agg" -> (cubeAgg(_, _)),
-    "q3_join_topk" -> (q3JoinTopk(_, _)),
-    "q5_multi_join" -> (q5MultiJoin(_, _)),
-    "window_running" -> (windowRunning(_, _)),
-    "sessionize" -> (sessionize(_, _)),
-    "funnel_stages" -> (funnelStages(_, _)),
-    "concurrency_peak" -> (concurrencyPeak(_, _)),
-    "concurrency_peak_hourly" -> (concurrencyPeakHourly(_, _)),
-    "rollup_agg" -> (rollupAgg(_, _)),
-    "skew_salted_agg" -> (skewSaltedAgg(_, _)),
-    "update_counts" -> (updateCounts(_, _)),
-    "percentiles" -> (percentiles(_, _)),
-    "percentiles_approx" -> (percentilesApprox(_, _)),
-    "distinct_count" -> (distinctCount(_, _)),
-    "distinct_approx" -> (distinctApprox(_, _)),
-    "gap_fill" -> (gapFill(_, _)),
-    "retention_cohorts" -> (retentionCohorts(_, _)),
-    "asof_join" -> (asofJoin(_, _)),
-    "asof_join_native" -> (asofJoinNative(_, _)),
-    "range_join" -> (rangeJoin(_, _)),
-    "json_extract" -> (jsonExtract(_, _)),
-    "pivot_agg" -> (pivotAgg(_, _)))
-
-  val oracles: Map[String, String] = Map(
-    "q1_agg" -> q1AggSql,
-    "cube_agg" -> cubeAggSql,
-    "q3_join_topk" -> q3JoinTopkSql,
-    "q5_multi_join" -> q5MultiJoinSql,
-    "window_running" -> windowRunningSql,
-    "sessionize" -> sessionizeSql,
-    "funnel_stages" -> funnelStagesSql,
-    "concurrency_peak" -> concurrencyPeakSql,
-    "concurrency_peak_hourly" -> concurrencyPeakHourlySql,
-    "rollup_agg" -> rollupAggSql,
-    "skew_salted_agg" -> skewSaltedAggSql,
-    "update_counts" -> updateCountsSql,
-    "percentiles" -> percentilesSql,
-    "distinct_count" -> distinctCountSql,
-    "gap_fill" -> gapFillSql,
-    "retention_cohorts" -> retentionCohortsSql,
-    "asof_join" -> asofJoinSql,
-    "asof_join_native" -> asofJoinSql,
-    "range_join" -> rangeJoinSql,
-    "json_extract" -> jsonExtractSql,
-    "pivot_agg" -> pivotAggSql)
+  val keys: Seq[Key] = Seq(
+    exact("q1_agg", q1Agg, q1AggSql),
+    exact("cube_agg", cubeAgg, cubeAggSql),
+    exact("q3_join_topk", q3JoinTopk, q3JoinTopkSql),
+    exact("q5_multi_join", q5MultiJoin, q5MultiJoinSql),
+    exact("window_running", windowRunning, windowRunningSql),
+    exact("sessionize", sessionize, sessionizeSql),
+    exact("funnel_stages", funnelStages, funnelStagesSql),
+    exact("concurrency_peak", concurrencyPeak, concurrencyPeakSql),
+    exact("concurrency_peak_hourly", concurrencyPeakHourly, concurrencyPeakHourlySql),
+    exact("rollup_agg", rollupAgg, rollupAggSql),
+    exact("skew_salted_agg", skewSaltedAgg, skewSaltedAggSql),
+    exact("update_counts", updateCounts, updateCountsSql),
+    exact("percentiles", percentiles, percentilesSql),
+    rowsOnly("percentiles_approx", percentilesApprox),
+    exact("distinct_count", distinctCount, distinctCountSql),
+    rowsOnly("distinct_approx", distinctApprox),
+    exact("gap_fill", gapFill, gapFillSql),
+    exact("retention_cohorts", retentionCohorts, retentionCohortsSql),
+    exact("asof_join", asofJoin, asofJoinSql),
+    exact("asof_join_native", asofJoinNative, asofJoinSql),
+    exact("range_join", rangeJoin, rangeJoinSql),
+    exact("json_extract", jsonExtract, jsonExtractSql),
+    exact("pivot_agg", pivotAgg, pivotAggSql))
 }

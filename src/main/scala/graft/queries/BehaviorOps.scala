@@ -1,6 +1,7 @@
 package graft.queries
 
-import graft.{OracleMath, Tables}
+import graft.{Key, OracleMath, Tables}
+import graft.Key.exact
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -698,31 +699,17 @@ object BehaviorOps {
       |FROM ds JOIN wau ON ds.w = wau.w
       |ORDER BY week""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_punchcard" -> (eventsPunchcard(_, _)),
-    "user_stickiness" -> (userStickiness(_, _)),
-    "rising_users" -> (risingUsers(_, _)),
-    "user_overlap_matrix" -> (userOverlapMatrix(_, _)),
-    "user_cohort_ltv" -> (userCohortLtv(_, _)),
-    "events_autocorr" -> (eventsAutocorr(_, _)),
-    "markov_transitions" -> (markovTransitions(_, _)),
-    "purchase_attribution" -> (purchaseAttribution(_, _)),
-    "ewma_hourly" -> (ewmaHourly(_, _)),
-    "quantile_drift" -> (quantileDrift(_, _)),
-    "anomaly_attribution" -> (anomalyAttribution(_, _)),
-    "mad_anomalies" -> (madAnomalies(_, _)))
-
-  val oracles: Map[String, String] = Map(
-    "events_punchcard" -> eventsPunchcardSql,
-    "user_stickiness" -> userStickinessSql,
-    "rising_users" -> risingUsersSql,
-    "user_overlap_matrix" -> userOverlapMatrixSql,
-    "user_cohort_ltv" -> userCohortLtvSql,
-    "events_autocorr" -> eventsAutocorrSql,
-    "markov_transitions" -> markovTransitionsSql,
-    "purchase_attribution" -> purchaseAttributionSql,
-    "ewma_hourly" -> ewmaHourlySql,
-    "quantile_drift" -> quantileDriftSql,
-    "anomaly_attribution" -> anomalyAttributionSql,
-    "mad_anomalies" -> madAnomaliesSql)
+  val keys: Seq[Key] = Seq(
+    exact("events_punchcard", eventsPunchcard, eventsPunchcardSql),
+    exact("user_stickiness", userStickiness, userStickinessSql),
+    exact("rising_users", risingUsers, risingUsersSql),
+    exact("user_overlap_matrix", userOverlapMatrix, userOverlapMatrixSql),
+    exact("user_cohort_ltv", userCohortLtv, userCohortLtvSql),
+    exact("events_autocorr", eventsAutocorr, eventsAutocorrSql),
+    exact("markov_transitions", markovTransitions, markovTransitionsSql),
+    exact("purchase_attribution", purchaseAttribution, purchaseAttributionSql),
+    exact("ewma_hourly", ewmaHourly, ewmaHourlySql),
+    exact("quantile_drift", quantileDrift, quantileDriftSql),
+    exact("anomaly_attribution", anomalyAttribution, anomalyAttributionSql),
+    exact("mad_anomalies", madAnomalies, madAnomaliesSql))
 }

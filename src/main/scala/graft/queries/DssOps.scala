@@ -1,6 +1,7 @@
 package graft.queries
 
-import graft.{OracleMath, Tables}
+import graft.{Key, OracleMath, Tables}
+import graft.Key.exact
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -563,7 +564,10 @@ object DssOps {
         dsum(rev).as("rev_d"),
         dsum(col("l_discount")).as("disc_d"))
 
-  /** Rates + revenue share + top-25 over any per-supplier partials. */
+  /** Rates + revenue share + top-25 over any per-supplier partials.
+    * Every ratio is a DOUBLE the oracle rounds, so it rounds the
+    * DuckDB way (`roundDouble`).
+    */
   private[graft] def scorecardTail(s: SparkSession, dir: String, per: DataFrame): DataFrame = {
     val total = per.agg(emit(sum(col("rev_d"))).as("total_rev"))
     per
@@ -573,12 +577,12 @@ object DssOps {
       .select(
         col("s_suppkey"), col("s_name"), col("n_name").as("nation"),
         col("n_lines"),
-        emit(col("n_returned") / col("n_lines"), 6).as("return_rate"),
-        emit(col("n_slow") / col("n_lines"), 6).as("slow_rate"),
-        round(col("disc_d").cast("double") / col("n_lines"), 6).as("avg_discount"),
+        (roundDouble(col("n_returned") / col("n_lines"), 6) + lit(0.0)).as("return_rate"),
+        (roundDouble(col("n_slow") / col("n_lines"), 6) + lit(0.0)).as("slow_rate"),
+        roundDouble(col("disc_d").cast("double") / col("n_lines"), 6).as("avg_discount"),
         emit(col("rev_d")).as("revenue"),
         col("total_rev"))
-      .withColumn("rev_share", emit(col("revenue") / col("total_rev"), 6))
+      .withColumn("rev_share", roundDouble(col("revenue") / col("total_rev"), 6) + lit(0.0))
       .drop("total_rev")
       .orderBy(col("revenue").desc, col("s_suppkey"))
       .limit(25)
@@ -673,35 +677,19 @@ object DssOps {
       |          sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6) AS DOUBLE) + 0.0) END AS r_disc_qty
       |FROM m ORDER BY p_brand""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "discount_uplift" -> (discountUplift(_, _)),
-    "supplier_scorecard" -> (supplierScorecard(_, _)),
-    "q8_market_share" -> (q8MarketShare(_, _)),
-    "q9_profit_by_nation" -> (q9ProfitByNation(_, _)),
-    "q19_disjunctive_join" -> (q19DisjunctiveJoin(_, _)),
-    "q20_dominant_suppliers" -> (q20DominantSuppliers(_, _)),
-    "q2_min_cost_supplier" -> (q2MinCostSupplier(_, _)),
-    "q11_important_parts" -> (q11ImportantParts(_, _)),
-    "q15_top_supplier" -> (q15TopSupplier(_, _)),
-    "q17_small_quantity" -> (q17SmallQuantity(_, _)),
-    "q6_revenue_delta" -> (q6RevenueDelta(_, _)),
-    "q7_nation_volume" -> (q7NationVolume(_, _)),
-    "q10_returned_items" -> (q10ReturnedItems(_, _)),
-    "q14_promo_share" -> (q14PromoShare(_, _)))
-
-  val oracles: Map[String, String] = Map(
-    "discount_uplift" -> discountUpliftSql,
-    "supplier_scorecard" -> supplierScorecardSql,
-    "q8_market_share" -> q8MarketShareSql,
-    "q9_profit_by_nation" -> q9ProfitByNationSql,
-    "q19_disjunctive_join" -> q19DisjunctiveJoinSql,
-    "q20_dominant_suppliers" -> q20DominantSuppliersSql,
-    "q2_min_cost_supplier" -> q2MinCostSupplierSql,
-    "q11_important_parts" -> q11ImportantPartsSql,
-    "q15_top_supplier" -> q15TopSupplierSql,
-    "q17_small_quantity" -> q17SmallQuantitySql,
-    "q6_revenue_delta" -> q6RevenueDeltaSql,
-    "q7_nation_volume" -> q7NationVolumeSql,
-    "q10_returned_items" -> q10ReturnedItemsSql,
-    "q14_promo_share" -> q14PromoShareSql)
+  val keys: Seq[Key] = Seq(
+    exact("discount_uplift", discountUplift, discountUpliftSql),
+    exact("supplier_scorecard", supplierScorecard, supplierScorecardSql),
+    exact("q8_market_share", q8MarketShare, q8MarketShareSql),
+    exact("q9_profit_by_nation", q9ProfitByNation, q9ProfitByNationSql),
+    exact("q19_disjunctive_join", q19DisjunctiveJoin, q19DisjunctiveJoinSql),
+    exact("q20_dominant_suppliers", q20DominantSuppliers, q20DominantSuppliersSql),
+    exact("q2_min_cost_supplier", q2MinCostSupplier, q2MinCostSupplierSql),
+    exact("q11_important_parts", q11ImportantParts, q11ImportantPartsSql),
+    exact("q15_top_supplier", q15TopSupplier, q15TopSupplierSql),
+    exact("q17_small_quantity", q17SmallQuantity, q17SmallQuantitySql),
+    exact("q6_revenue_delta", q6RevenueDelta, q6RevenueDeltaSql),
+    exact("q7_nation_volume", q7NationVolume, q7NationVolumeSql),
+    exact("q10_returned_items", q10ReturnedItems, q10ReturnedItemsSql),
+    exact("q14_promo_share", q14PromoShare, q14PromoShareSql))
 }

@@ -1,6 +1,7 @@
 package graft.queries
 
-import graft.{OracleMath, Tables}
+import graft.{Key, OracleMath, Tables}
+import graft.Key.exact
 import graft.pipeline._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -539,12 +540,6 @@ object FeedBlocks {
     * curators who liked them. Both hops shuffle on the same like-table
     * keys; the curator side is small → broadcast.
     */
-  /** The reference's user-score function family f0..f5 (main.rs:1548) —
-    * shared with the wire front-end (pipeline.UserScore).
-    */
-  def userScoreFn(name: String, exponent: Double = 1.3): Column => Column =
-    UserScore.fn(name, exponent)
-
   def likesBylikers(s: SparkSession, dir: String): DataFrame =
     likesBylikersOver(
       Tables.lineitem(s, dir).select(col("l_suppkey").as("u"), col("l_partkey").as("p")))
@@ -561,7 +556,7 @@ object FeedBlocks {
     val seeds = postLikers
       .orderBy(col("n_likers").desc, col("p"))
       .limit(10)
-      .select(col("p"), round(userScoreFn("f1")(col("n_likers")), 10).cast(Dec12).as("w"))
+      .select(col("p"), round(UserScore.fn("f1")(col("n_likers")), 10).cast(Dec12).as("w"))
     val curators = likes
       .join(broadcast(seeds), "p")
       .groupBy(col("u"))
@@ -1244,85 +1239,44 @@ object FeedBlocks {
       |ORDER BY score DESC, event_id LIMIT 100""".stripMargin
 
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "input_window" -> (inputWindow(_, _)),
-    "point_lookup" -> (pointLookup(_, _)),
-    "filter_compare" -> (filterCompare(_, _)),
-    "filter_in_set" -> (filterInSet(_, _)),
-    "filter_language" -> (filterLanguage(_, _)),
-    "filter_null_props" -> (filterNullProps(_, _)),
-    "input_tags" -> (inputTags(_, _)),
-    "replace_root" -> (replaceRoot(_, _)),
-    "replace_all_replies" -> (replaceAllReplies(_, _)),
-    "sort_random" -> (sortRandom(_, _)),
-    "filter_regex" -> (filterRegex(_, _)),
-    "filter_where" -> (filterWhere(_, _)),
-    "filter_where_rhai" -> (filterWhereRhai(_, _)),
-    "dedup_exact" -> (dedupExact(_, _)),
-    "dedup_keep_dupes" -> (dedupKeepDupes(_, _)),
-    "score_hn" -> (scoreHn(_, _)),
-    "score_normalize" -> (scoreNormalize(_, _)),
-    "sort_topk" -> (sortTopk(_, _)),
-    "limit_per_user" -> (limitPerUser(_, _)),
-    "stash_subtract" -> (stashSubtract(_, _)),
-    "stash_pop_union" -> (stashPopUnion(_, _)),
-    "replace_parent" -> (replaceParent(_, _)),
-    "replace_replies" -> (replaceReplies(_, _)),
-    "likes_weighted" -> (likesWeighted(_, _)),
-    "likes_bylikers" -> (likesBylikers(_, _)),
-    "trending_tags" -> (trendingTags(_, _)),
-    "trending_tags_named" -> (trendingTagsNamed(_, _)),
-    "tag_variations" -> (tagVariations(_, _)),
-    "replace_record" -> (replaceRecord(_, _)),
-    "quote_posts" -> (quotePosts(_, _)),
-    "feed_pipeline" -> (feedPipeline(_, _)),
-    "feed_pipeline_json" -> (feedPipelineJson(_, _)),
-    "feed_pipeline_stash" -> (feedPipelineStash(_, _)),
-    "feed_pipeline_wire" -> (feedPipelineWire(_, _)),
-    "feed_pipeline_quotes" -> (feedPipelineQuotes(_, _)),
-    "feed_pipeline_tags" -> (feedPipelineTags(_, _)),
-    "feed_pipeline_liked" -> (feedPipelineLiked(_, _)),
-    "feed_pipeline_bylikers" -> (feedPipelineBylikers(_, _)),
-    "feed_pipeline_feedinput" -> (feedPipelineFeedinput(_, _)))
-
-  val oracles: Map[String, String] = Map(
-    "input_window" -> inputWindowSql,
-    "point_lookup" -> pointLookupSql,
-    "filter_compare" -> filterCompareSql,
-    "filter_in_set" -> filterInSetSql,
-    "filter_language" -> filterLanguageSql,
-    "filter_null_props" -> filterNullPropsSql,
-    "input_tags" -> inputTagsSql,
-    "replace_root" -> replaceRootSql,
-    "replace_all_replies" -> replaceAllRepliesSql,
-    "sort_random" -> sortRandomSql,
-    "filter_regex" -> filterRegexSql,
-    "filter_where" -> filterWhereSql,
-    "filter_where_rhai" -> filterWhereRhaiSql,
-    "dedup_exact" -> dedupExactSql,
-    "dedup_keep_dupes" -> dedupKeepDupesSql,
-    "score_hn" -> scoreHnSql,
-    "score_normalize" -> scoreNormalizeSql,
-    "sort_topk" -> sortTopkSql,
-    "limit_per_user" -> limitPerUserSql,
-    "stash_subtract" -> stashSubtractSql,
-    "stash_pop_union" -> stashPopUnionSql,
-    "replace_parent" -> replaceParentSql,
-    "replace_replies" -> replaceRepliesSql,
-    "likes_weighted" -> likesWeightedSql,
-    "likes_bylikers" -> likesBylikersSql,
-    "trending_tags" -> trendingTagsSql,
-    "trending_tags_named" -> trendingTagsNamedSql,
-    "tag_variations" -> tagVariationsSql,
-    "replace_record" -> replaceRecordSql,
-    "quote_posts" -> quotePostsSql,
-    "feed_pipeline" -> feedPipelineSql,
-    "feed_pipeline_json" -> feedPipelineSql,
-    "feed_pipeline_stash" -> feedPipelineStashSql,
-    "feed_pipeline_wire" -> feedPipelineWireSql,
-    "feed_pipeline_quotes" -> feedPipelineQuotesSql,
-    "feed_pipeline_tags" -> feedPipelineTagsSql,
-    "feed_pipeline_liked" -> feedPipelineLikedSql,
-    "feed_pipeline_bylikers" -> feedPipelineBylikersSql,
-    "feed_pipeline_feedinput" -> feedPipelineFeedinputSql)
+  val keys: Seq[Key] = Seq(
+    exact("input_window", inputWindow, inputWindowSql),
+    exact("point_lookup", pointLookup, pointLookupSql),
+    exact("filter_compare", filterCompare, filterCompareSql),
+    exact("filter_in_set", filterInSet, filterInSetSql),
+    exact("filter_language", filterLanguage, filterLanguageSql),
+    exact("filter_null_props", filterNullProps, filterNullPropsSql),
+    exact("input_tags", inputTags, inputTagsSql),
+    exact("replace_root", replaceRoot, replaceRootSql),
+    exact("replace_all_replies", replaceAllReplies, replaceAllRepliesSql),
+    exact("sort_random", sortRandom, sortRandomSql),
+    exact("filter_regex", filterRegex, filterRegexSql),
+    exact("filter_where", filterWhere, filterWhereSql),
+    exact("filter_where_rhai", filterWhereRhai, filterWhereRhaiSql),
+    exact("dedup_exact", dedupExact, dedupExactSql),
+    exact("dedup_keep_dupes", dedupKeepDupes, dedupKeepDupesSql),
+    exact("score_hn", scoreHn, scoreHnSql),
+    exact("score_normalize", scoreNormalize, scoreNormalizeSql),
+    exact("sort_topk", sortTopk, sortTopkSql),
+    exact("limit_per_user", limitPerUser, limitPerUserSql),
+    exact("stash_subtract", stashSubtract, stashSubtractSql),
+    exact("stash_pop_union", stashPopUnion, stashPopUnionSql),
+    exact("replace_parent", replaceParent, replaceParentSql),
+    exact("replace_replies", replaceReplies, replaceRepliesSql),
+    exact("likes_weighted", likesWeighted, likesWeightedSql),
+    exact("likes_bylikers", likesBylikers, likesBylikersSql),
+    exact("trending_tags", trendingTags, trendingTagsSql),
+    exact("trending_tags_named", trendingTagsNamed, trendingTagsNamedSql),
+    exact("tag_variations", tagVariations, tagVariationsSql),
+    exact("replace_record", replaceRecord, replaceRecordSql),
+    exact("quote_posts", quotePosts, quotePostsSql),
+    exact("feed_pipeline", feedPipeline, feedPipelineSql),
+    exact("feed_pipeline_json", feedPipelineJson, feedPipelineSql),
+    exact("feed_pipeline_stash", feedPipelineStash, feedPipelineStashSql),
+    exact("feed_pipeline_wire", feedPipelineWire, feedPipelineWireSql),
+    exact("feed_pipeline_quotes", feedPipelineQuotes, feedPipelineQuotesSql),
+    exact("feed_pipeline_tags", feedPipelineTags, feedPipelineTagsSql),
+    exact("feed_pipeline_liked", feedPipelineLiked, feedPipelineLikedSql),
+    exact("feed_pipeline_bylikers", feedPipelineBylikers, feedPipelineBylikersSql),
+    exact("feed_pipeline_feedinput", feedPipelineFeedinput, feedPipelineFeedinputSql))
 }

@@ -1,6 +1,7 @@
 package graft.queries
 
-import graft.{OracleMath, Tables}
+import graft.{Key, OracleMath, Tables}
+import graft.Key.exact
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -738,37 +739,20 @@ object GraphOps {
        |ORDER BY authority DESC, nodes.id""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "graph_hits" -> (graphHits(_, _)),
-    "graph_reciprocity" -> (graphReciprocity(_, _)),
-    "graph_assortativity" -> (graphAssortativity(_, _)),
-    "graph_kcore" -> (graphKcore(_, _)),
-    "graph_neighbor_jaccard" -> (graphNeighborJaccard(_, _)),
-    "graph_clustering_coeff" -> (graphClusteringCoeff(_, _)),
-    "graph_degree_distribution" -> (graphDegreeDistribution(_, _)),
-    "graph_following" -> (graphFollowing(_, _)),
-    "graph_2hop" -> (graph2hop(_, _)),
-    "graph_mutuals" -> (graphMutuals(_, _)),
-    "graph_top_moots" -> (graphTopMoots(_, _)),
-    "community_input" -> (communityInput(_, _)),
-    "page_rank" -> (pageRank(_, _)),
-    "triangle_count" -> (triangleCount(_, _)),
-    "admin_stats" -> (adminStats(_, _)))
-
-  val oracles: Map[String, String] = Map(
-    "graph_reciprocity" -> graphReciprocitySql,
-    "graph_assortativity" -> graphAssortativitySql,
-    "graph_kcore" -> graphKcoreSql,
-    "graph_neighbor_jaccard" -> graphNeighborJaccardSql,
-    "graph_clustering_coeff" -> graphClusteringCoeffSql,
-    "graph_degree_distribution" -> graphDegreeDistributionSql,
-    "graph_following" -> graphFollowingSql,
-    "graph_2hop" -> graph2hopSql,
-    "graph_mutuals" -> graphMutualsSql,
-    "graph_top_moots" -> graphTopMootsSql,
-    "community_input" -> communityInputSql,
-    "graph_hits" -> graphHitsSql,
-    "page_rank" -> pageRankSql,
-    "triangle_count" -> triangleCountSql,
-    "admin_stats" -> adminStatsSql)
+  val keys: Seq[Key] = Seq(
+    exact("graph_hits", graphHits, graphHitsSql),
+    exact("graph_reciprocity", graphReciprocity, graphReciprocitySql),
+    exact("graph_assortativity", graphAssortativity, graphAssortativitySql),
+    exact("graph_kcore", graphKcore, graphKcoreSql),
+    exact("graph_neighbor_jaccard", graphNeighborJaccard, graphNeighborJaccardSql),
+    exact("graph_clustering_coeff", graphClusteringCoeff, graphClusteringCoeffSql),
+    exact("graph_degree_distribution", graphDegreeDistribution, graphDegreeDistributionSql),
+    exact("graph_following", graphFollowing, graphFollowingSql),
+    exact("graph_2hop", graph2hop, graph2hopSql),
+    exact("graph_mutuals", graphMutuals, graphMutualsSql),
+    exact("graph_top_moots", graphTopMoots, graphTopMootsSql),
+    exact("community_input", communityInput, communityInputSql),
+    exact("page_rank", pageRank, pageRankSql),
+    exact("triangle_count", triangleCount, triangleCountSql),
+    exact("admin_stats", adminStats, adminStatsSql))
 }

@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{OracleMath, Tables}
+import graft.{Key, OracleMath, Tables}
+import graft.Key.{exact, rowsOnly}
 import graft.sources.Firehose
 
 /** Round-10 operators — growth/audience windows that need sliding
@@ -1076,7 +1077,7 @@ object Round10Ops {
     * cost, plus kilobytes.
     */
   def dedupSurvivorship(s: SparkSession, dir: String): DataFrame = {
-    val clusters = TextOps.queries("dedup_clusters")(s, dir)
+    val clusters = TextOps.dedupClusters(s, dir)
     val src = docs(s, dir).select(col("doc_id"), col("source"))
     val dropped = clusters.filter(col("doc_id") =!= col("cluster"))
       .join(src, Seq("doc_id"))
@@ -1173,7 +1174,7 @@ object Round10Ops {
     // hit probe) — cut it so embed_knn runs ONCE; it is k·|queries|
     // rows, so the cut is pennies and the probe side broadcasts
     val exact = graft.Lineage.cut(
-      TextOps.queries("embed_knn")(s, dir).select(col("query_id"), col("vec_id")))
+      TextOps.embedKnn(s, dir).select(col("query_id"), col("vec_id")))
     // each family's (query_id, vec_id) projection is k·|queries| rows:
     // cut them too, so the report aggregate consumes four materialized
     // micro-frames instead of carrying four full ANN pipelines (IVF and
@@ -1190,10 +1191,10 @@ object Round10Ops {
     def tagged(name: String, df: => DataFrame) = () => graft.Lineage.cut(
       df.select(lit(name).as("method"), col("query_id"), col("vec_id")))
     val families = Seq(
-      tagged("lsh_bucketed", TextOps.queries("embed_lsh_knn")(s, dir)),
-      tagged("ivf_trained", TextOps.queries("embed_ivf_knn")(s, dir)),
-      tagged("pq_sampled", Round6Ops.queries("embed_pq_knn")(s, dir)),
-      tagged("int8_quantized", TextOps.queries("embed_quantized_knn")(s, dir)))
+      tagged("lsh_bucketed", TextOps.embedLshKnn(s, dir)),
+      tagged("ivf_trained", TextOps.embedIvfKnn(s, dir)),
+      tagged("pq_sampled", Round6Ops.embedPqKnn(s, dir)),
+      tagged("int8_quantized", TextOps.embedQuantizedKnn(s, dir)))
     val approx = {
       import scala.concurrent.{Await, ExecutionContext, Future}
       import scala.concurrent.duration.Duration
@@ -1484,57 +1485,32 @@ object Round10Ops {
     (head +: stages).mkString(",\n") + "\n" + tail
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sliding_mau" -> (slidingMau(_, _)),
-    "mau_hll_sliding" -> (mauHllSliding(_, _)),
-    "dedup_by_link" -> (dedupByLink(_, _)),
-    "source_lang_entropy" -> (sourceLangEntropy(_, _)),
-    "cdc_apply" -> (cdcApply(_, _)),
-    "k_anonymity" -> (kAnonymity(_, _)),
-    "column_histograms" -> (columnHistograms(_, _)),
-    "ab_lift_report" -> (abLiftReport(_, _)),
-    "shard_skew_report" -> (shardSkewReport(_, _)),
-    "orders_backlog" -> (ordersBacklog(_, _)),
-    "repeat_purchase" -> (repeatPurchase(_, _)),
-    "audience_overlap_sketch" -> (audienceOverlapSketch(_, _)),
-    "word_bigrams" -> (wordBigrams(_, _)),
-    "tokenizer_fertility" -> (tokenizerFertility(_, _)),
-    "conversion_survival" -> (conversionSurvival(_, _)),
-    "winsorized_mean" -> (winsorizedMean(_, _)),
-    "revenue_concentration" -> (revenueConcentration(_, _)),
-    "events_burstiness" -> (eventsBurstiness(_, _)),
-    "rfm_migration" -> (rfmMigration(_, _)),
-    "truncation_coverage" -> (truncationCoverage(_, _)),
-    "fk_integrity_report" -> (fkIntegrityReport(_, _)),
-    "table_profile_sketch" -> (tableProfileSketch(_, _)),
-    "dedup_survivorship" -> (dedupSurvivorship(_, _)),
-    "user_feature_table" -> (userFeatureTable(_, _)),
-    "ann_recall_report" -> (annRecallReport(_, _)),
-    "bpe_train" -> (bpeTrain(_, _)),
-    "bpe_apply_report" -> (bpeApplyReport(_, _)))
-
-  val oracles: Map[String, String] = Map(
-    "sliding_mau" -> slidingMauSql,
-    "dedup_by_link" -> dedupByLinkSql,
-    "source_lang_entropy" -> sourceLangEntropySql,
-    "cdc_apply" -> cdcApplySql,
-    "k_anonymity" -> kAnonymitySql,
-    "column_histograms" -> columnHistogramsSql,
-    "ab_lift_report" -> abLiftReportSql,
-    "shard_skew_report" -> shardSkewReportSql,
-    "orders_backlog" -> ordersBacklogSql,
-    "repeat_purchase" -> repeatPurchaseSql,
-    "word_bigrams" -> wordBigramsSql,
-    "tokenizer_fertility" -> tokenizerFertilitySql,
-    "conversion_survival" -> conversionSurvivalSql,
-    "winsorized_mean" -> winsorizedMeanSql,
-    "revenue_concentration" -> revenueConcentrationSql,
-    "events_burstiness" -> eventsBurstinessSql,
-    "rfm_migration" -> rfmMigrationSql,
-    "truncation_coverage" -> truncationCoverageSql,
-    "fk_integrity_report" -> fkIntegrityReportSql,
-    "dedup_survivorship" -> dedupSurvivorshipSql,
-    "user_feature_table" -> userFeatureTableSql,
-    "bpe_train" -> bpeTrainSql,
-    "bpe_apply_report" -> bpeApplyReportSql)
+  val keys: Seq[Key] = Seq(
+    exact("sliding_mau", slidingMau, slidingMauSql),
+    rowsOnly("mau_hll_sliding", mauHllSliding),
+    exact("dedup_by_link", dedupByLink, dedupByLinkSql),
+    exact("source_lang_entropy", sourceLangEntropy, sourceLangEntropySql),
+    exact("cdc_apply", cdcApply, cdcApplySql),
+    exact("k_anonymity", kAnonymity, kAnonymitySql),
+    exact("column_histograms", columnHistograms, columnHistogramsSql),
+    exact("ab_lift_report", abLiftReport, abLiftReportSql),
+    exact("shard_skew_report", shardSkewReport, shardSkewReportSql),
+    exact("orders_backlog", ordersBacklog, ordersBacklogSql),
+    exact("repeat_purchase", repeatPurchase, repeatPurchaseSql),
+    rowsOnly("audience_overlap_sketch", audienceOverlapSketch),
+    exact("word_bigrams", wordBigrams, wordBigramsSql),
+    exact("tokenizer_fertility", tokenizerFertility, tokenizerFertilitySql),
+    exact("conversion_survival", conversionSurvival, conversionSurvivalSql),
+    exact("winsorized_mean", winsorizedMean, winsorizedMeanSql),
+    exact("revenue_concentration", revenueConcentration, revenueConcentrationSql),
+    exact("events_burstiness", eventsBurstiness, eventsBurstinessSql),
+    exact("rfm_migration", rfmMigration, rfmMigrationSql),
+    exact("truncation_coverage", truncationCoverage, truncationCoverageSql),
+    exact("fk_integrity_report", fkIntegrityReport, fkIntegrityReportSql),
+    rowsOnly("table_profile_sketch", tableProfileSketch),
+    exact("dedup_survivorship", dedupSurvivorship, dedupSurvivorshipSql),
+    exact("user_feature_table", userFeatureTable, userFeatureTableSql),
+    rowsOnly("ann_recall_report", annRecallReport),
+    exact("bpe_train", bpeTrain, bpeTrainSql),
+    exact("bpe_apply_report", bpeApplyReport, bpeApplyReportSql))
 }

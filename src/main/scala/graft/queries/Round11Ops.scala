@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{OracleMath, Tables}
+import graft.{Key, OracleMath, Tables}
+import graft.Key.{exact, rowsOnly}
 
 /** Round-11 operators — the monitoring/QA layer a production corpus
   * pipeline runs beside its nightly build: distribution-drift scoring
@@ -1321,7 +1322,7 @@ object Round11Ops {
         .withColumn("csim", Registry.cosine(col("qe"), col("ce")))
         .withColumn("rank", row_number().over(wProbe))
         .select(col("query_id"), col("qe"), col("cent_id"), col("rank")))
-    val exact3 = TextOps.queries("embed_knn")(s, dir)
+    val exact3 = TextOps.embedKnn(s, dir)
       .filter(col("rn") <= 3).select(col("query_id"), col("vec_id"))
     val nq = queries10.agg(countDistinct(col("query_id")).as("nq"))
     val nvec = emb.agg(count(lit(1)).as("nv"))
@@ -1399,51 +1400,28 @@ object Round11Ops {
       |WHERE p_size = grp_max AND (m_lt IS NULL OR p_size > m_lt)
       |ORDER BY p_retailprice, p_partkey""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "psi_drift" -> (psiDrift(_, _)),
-    "cusum_changepoint" -> (cusumChangepoint(_, _)),
-    "window_funnel" -> (windowFunnel(_, _)),
-    "seq_patterns" -> (seqPatterns(_, _)),
-    "seasonal_decompose" -> (seasonalDecompose(_, _)),
-    "compaction_plan" -> (compactionPlan(_, _)),
-    "corpus_mix_temperature" -> (corpusMixTemperature(_, _)),
-    "dedup_containment" -> (dedupContainment(_, _)),
-    "label_noise_report" -> (labelNoiseReport(_, _)),
-    "doc_perplexity_bigram" -> (docPerplexityBigram(_, _)),
-    "dedup_containment_fast" -> (dedupContainmentFast(_, _)),
-    "blocking_report" -> (blockingReport(_, _)),
-    "negative_sampling" -> (negativeSampling(_, _)),
-    "source_vocab_overlap" -> (sourceVocabOverlap(_, _)),
-    "join_cardinality_report" -> (joinCardinalityReport(_, _)),
-    "embed_covariance" -> (embedCovariance(_, _)),
-    "grouping_sets_report" -> (groupingSetsReport(_, _)),
-    "asof_join_nearest" -> (asofJoinNearest(_, _)),
-    "embed_covariance_incremental" -> (embedCovarianceIncremental(_, _)),
-    "label_propagation_eval" -> (labelPropagationEval(_, _)),
-    "theil_sen_trend" -> (theilSenTrend(_, _)),
-    "ann_probe_curve" -> (annProbeCurve(_, _)),
-    "skyline_parts" -> (skylineParts(_, _)))
-
-  val oracles: Map[String, String] = Map(
-    "psi_drift" -> psiDriftSql,
-    "cusum_changepoint" -> cusumChangepointSql,
-    "window_funnel" -> windowFunnelSql,
-    "seq_patterns" -> seqPatternsSql,
-    "seasonal_decompose" -> seasonalDecomposeSql,
-    "compaction_plan" -> compactionPlanSql,
-    "corpus_mix_temperature" -> corpusMixTemperatureSql,
-    "dedup_containment" -> dedupContainmentSql,
-    "label_noise_report" -> labelNoiseReportSql,
-    "doc_perplexity_bigram" -> docPerplexityBigramSql,
-    "blocking_report" -> blockingReportSql,
-    "negative_sampling" -> negativeSamplingSql,
-    "source_vocab_overlap" -> sourceVocabOverlapSql,
-    "join_cardinality_report" -> joinCardinalityReportSql,
-    "embed_covariance" -> embedCovarianceSql,
-    "grouping_sets_report" -> groupingSetsReportSql,
-    "asof_join_nearest" -> asofJoinNearestSql,
-    "embed_covariance_incremental" -> embedCovarianceSql,
-    "label_propagation_eval" -> labelPropagationEvalSql,
-    "theil_sen_trend" -> theilSenTrendSql,
-    "skyline_parts" -> skylinePartsSql)
+  val keys: Seq[Key] = Seq(
+    exact("psi_drift", psiDrift, psiDriftSql),
+    exact("cusum_changepoint", cusumChangepoint, cusumChangepointSql),
+    exact("window_funnel", windowFunnel, windowFunnelSql),
+    exact("seq_patterns", seqPatterns, seqPatternsSql),
+    exact("seasonal_decompose", seasonalDecompose, seasonalDecomposeSql),
+    exact("compaction_plan", compactionPlan, compactionPlanSql),
+    exact("corpus_mix_temperature", corpusMixTemperature, corpusMixTemperatureSql),
+    exact("dedup_containment", dedupContainment, dedupContainmentSql),
+    exact("label_noise_report", labelNoiseReport, labelNoiseReportSql),
+    exact("doc_perplexity_bigram", docPerplexityBigram, docPerplexityBigramSql),
+    rowsOnly("dedup_containment_fast", dedupContainmentFast),
+    exact("blocking_report", blockingReport, blockingReportSql),
+    exact("negative_sampling", negativeSampling, negativeSamplingSql),
+    exact("source_vocab_overlap", sourceVocabOverlap, sourceVocabOverlapSql),
+    exact("join_cardinality_report", joinCardinalityReport, joinCardinalityReportSql),
+    exact("embed_covariance", embedCovariance, embedCovarianceSql),
+    exact("grouping_sets_report", groupingSetsReport, groupingSetsReportSql),
+    exact("asof_join_nearest", asofJoinNearest, asofJoinNearestSql),
+    exact("embed_covariance_incremental", embedCovarianceIncremental, embedCovarianceSql),
+    exact("label_propagation_eval", labelPropagationEval, labelPropagationEvalSql),
+    exact("theil_sen_trend", theilSenTrend, theilSenTrendSql),
+    rowsOnly("ann_probe_curve", annProbeCurve),
+    exact("skyline_parts", skylineParts, skylinePartsSql))
 }

@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{OracleMath, Tables}
+import graft.{Key, OracleMath, Tables}
+import graft.Key.{exact, rowsOnly}
 
 /** Round-12 operators — the governance/compliance layer and the
   * statistically-careful reporting a production data platform runs on
@@ -1906,7 +1907,6 @@ object Round12Ops {
     * quotient touches floats. Exact oracle.
     */
   def ksDriftTest(s: SparkSession, dir: String): DataFrame = {
-    def dec0(c: Column): Column = c.cast("decimal(38,0)")
     val d0 = Tables.documents(s, dir).select(col("doc_id"), col("lang"), col("n_chars"))
     val span = d0.agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
     val hist = d0.crossJoin(broadcast(span))
@@ -2065,7 +2065,6 @@ object Round12Ops {
     * null by guard. Exact oracle.
     */
   def spearmanLenScore(s: SparkSession, dir: String): DataFrame = {
-    def dec0(c: Column): Column = c.cast("decimal(38,0)")
     val wp = org.apache.spark.sql.expressions.Window
     val scored = Round9Ops.docQualityClassifier(s, dir).select(col("doc_id"), col("score"))
       .join(Tables.documents(s, dir).select(col("doc_id"), col("source"), col("n_chars")),
@@ -2159,7 +2158,6 @@ object Round12Ops {
     * floats, mirrored. Exact oracle.
     */
   def gainCaptureCurve(s: SparkSession, dir: String): DataFrame = {
-    def dec0(c: Column): Column = c.cast("decimal(38,0)")
     val wp = org.apache.spark.sql.expressions.Window
     val scored = Round9Ops.docQualityClassifier(s, dir)
       .join(Tables.documents(s, dir).select(col("doc_id"), col("lang")), Seq("doc_id"))
@@ -2570,7 +2568,6 @@ object Round12Ops {
     * Exact oracle.
     */
   def neymanAllocation(s: SparkSession, dir: String): DataFrame = {
-    def dec0(c: Column): Column = c.cast("decimal(38,0)")
     val m = Tables.documents(s, dir)
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n"),
@@ -3275,7 +3272,6 @@ object Round12Ops {
     * frame (products ~N² in DECIMAL). Exact oracle.
     */
   def kappaAgreement(s: SparkSession, dir: String): DataFrame = {
-    def dec0(c: Column): Column = c.cast("decimal(38,0)")
     val tot = Tables.documents(s, dir)
       .agg(count(lit(1)).as("nn"), sum(col("n_chars")).as("schars"))
     val a = Round9Ops.docQualityClassifier(s, dir)
@@ -3968,112 +3964,58 @@ object Round12Ops {
       |  (CAST(round((-CAST(n_keys AS DOUBLE) * ln(fpr) / (ln(2.0) * ln(2.0))) / 8.0 / 1048576.0, 4) AS DOUBLE) + 0.0) AS mib
       |FROM edges CROSS JOIN fprs ORDER BY edge, fpr""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "user_erasure_audit" -> (userErasureAudit(_, _)),
-    "dp_noisy_counts" -> (dpNoisyCounts(_, _)),
-    "wilson_ci_report" -> (wilsonCiReport(_, _)),
-    "holt_forecast" -> (holtForecast(_, _)),
-    "personalized_pagerank" -> (personalizedPagerank(_, _)),
-    "kneser_ney_bigram" -> (kneserNeyBigram(_, _)),
-    "classifier_calibration" -> (classifierCalibration(_, _)),
-    "record_linkage" -> (recordLinkage(_, _)),
-    "burrows_delta" -> (burrowsDelta(_, _)),
-    "mmr_rerank" -> (mmrRerank(_, _)),
-    "watermark_advisor" -> (watermarkAdvisor(_, _)),
-    "bot_detection_report" -> (botDetectionReport(_, _)),
-    "embed_drift_report" -> (embedDriftReport(_, _)),
-    "l_diversity_report" -> (lDiversityReport(_, _)),
-    "holt_winters_forecast" -> (holtWintersForecast(_, _)),
-    "embed_jl_projection" -> (embedJlProjection(_, _)),
-    "markov_attribution" -> (markovAttribution(_, _)),
-    "ab_sequential_monitor" -> (abSequentialMonitor(_, _)),
-    "benford_audit" -> (benfordAudit(_, _)),
-    "corpus_budget_select" -> (corpusBudgetSelect(_, _)),
-    "t_closeness_report" -> (tClosenessReport(_, _)),
-    "rank_rbo_report" -> (rankRboReport(_, _)),
-    "classifier_auc" -> (classifierAuc(_, _)),
-    "ks_drift_test" -> (ksDriftTest(_, _)),
-    "token_label_mi" -> (tokenLabelMi(_, _)),
-    "spearman_len_score" -> (spearmanLenScore(_, _)),
-    "gain_capture_curve" -> (gainCaptureCurve(_, _)),
-    "cramers_v_matrix" -> (cramersVMatrix(_, _)),
-    "forecast_backtest" -> (forecastBacktest(_, _)),
-    "gini_report" -> (giniReport(_, _)),
-    "isotonic_calibration" -> (isotonicCalibration(_, _)),
-    "neyman_allocation" -> (neymanAllocation(_, _)),
-    "power_analysis" -> (powerAnalysis(_, _)),
-    "concentration_report" -> (concentrationReport(_, _)),
-    "ab_srm_check" -> (abSrmCheck(_, _)),
-    "did_lift" -> (didLift(_, _)),
-    "ndcg_report" -> (ndcgReport(_, _)),
-    "brier_decomposition" -> (brierDecomposition(_, _)),
-    "hill_tail_index" -> (hillTailIndex(_, _)),
-    "mann_kendall_trend" -> (mannKendallTrend(_, _)),
-    "heaps_law_fit" -> (heapsLawFit(_, _)),
-    "kappa_agreement" -> (kappaAgreement(_, _)),
-    "entropy_rate" -> (entropyRate(_, _)),
-    "cv_fold_manifest" -> (cvFoldManifest(_, _)),
-    "dedup_threshold_sweep" -> (dedupThresholdSweep(_, _)),
-    "seasonal_strength" -> (seasonalStrength(_, _)),
-    "embed_outlier_report" -> (embedOutlierReport(_, _)),
-    "graph_modularity" -> (graphModularity(_, _)),
-    "covariate_balance_smd" -> (covariateBalanceSmd(_, _)),
-    "cold_start_coverage" -> (coldStartCoverage(_, _)),
-    "durbin_watson" -> (durbinWatson(_, _)),
-    "char_entropy_report" -> (charEntropyReport(_, _)),
-    "bloom_sizing_advisor" -> (bloomSizingAdvisor(_, _)))
-
-  val oracles: Map[String, String] = Map(
-    "user_erasure_audit" -> userErasureAuditSql,
-    "dp_noisy_counts" -> dpNoisyCountsSql,
-    "wilson_ci_report" -> wilsonCiReportSql,
-    "holt_forecast" -> holtForecastSql,
-    "personalized_pagerank" -> personalizedPagerankSql,
-    "kneser_ney_bigram" -> kneserNeyBigramSql,
-    "classifier_calibration" -> classifierCalibrationSql,
-    "record_linkage" -> recordLinkageSql,
-    "burrows_delta" -> burrowsDeltaSql,
-    "watermark_advisor" -> watermarkAdvisorSql,
-    "bot_detection_report" -> botDetectionReportSql,
-    "embed_drift_report" -> embedDriftReportSql,
-    "l_diversity_report" -> lDiversityReportSql,
-    "holt_winters_forecast" -> holtWintersForecastSql,
-    "embed_jl_projection" -> embedJlProjectionSql,
-    "markov_attribution" -> markovAttributionSql,
-    "ab_sequential_monitor" -> abSequentialMonitorSql,
-    "benford_audit" -> benfordAuditSql,
-    "corpus_budget_select" -> corpusBudgetSelectSql,
-    "t_closeness_report" -> tClosenessReportSql,
-    "rank_rbo_report" -> rankRboReportSql,
-    "classifier_auc" -> classifierAucSql,
-    "ks_drift_test" -> ksDriftTestSql,
-    "token_label_mi" -> tokenLabelMiSql,
-    "spearman_len_score" -> spearmanLenScoreSql,
-    "gain_capture_curve" -> gainCaptureCurveSql,
-    "cramers_v_matrix" -> cramersVMatrixSql,
-    "forecast_backtest" -> forecastBacktestSql,
-    "gini_report" -> giniReportSql,
-    "isotonic_calibration" -> isotonicCalibrationSql,
-    "neyman_allocation" -> neymanAllocationSql,
-    "power_analysis" -> powerAnalysisSql,
-    "concentration_report" -> concentrationReportSql,
-    "ab_srm_check" -> abSrmCheckSql,
-    "did_lift" -> didLiftSql,
-    "ndcg_report" -> ndcgReportSql,
-    "brier_decomposition" -> brierDecompositionSql,
-    "hill_tail_index" -> hillTailIndexSql,
-    "mann_kendall_trend" -> mannKendallTrendSql,
-    "heaps_law_fit" -> heapsLawFitSql,
-    "kappa_agreement" -> kappaAgreementSql,
-    "entropy_rate" -> entropyRateSql,
-    "cv_fold_manifest" -> cvFoldManifestSql,
-    "dedup_threshold_sweep" -> dedupThresholdSweepSql,
-    "seasonal_strength" -> seasonalStrengthSql,
-    "embed_outlier_report" -> embedOutlierReportSql,
-    "graph_modularity" -> graphModularitySql,
-    "covariate_balance_smd" -> covariateBalanceSmdSql,
-    "cold_start_coverage" -> coldStartCoverageSql,
-    "durbin_watson" -> durbinWatsonSql,
-    "char_entropy_report" -> charEntropyReportSql,
-    "bloom_sizing_advisor" -> bloomSizingAdvisorSql)
+  val keys: Seq[Key] = Seq(
+    exact("user_erasure_audit", userErasureAudit, userErasureAuditSql),
+    exact("dp_noisy_counts", dpNoisyCounts, dpNoisyCountsSql),
+    exact("wilson_ci_report", wilsonCiReport, wilsonCiReportSql),
+    exact("holt_forecast", holtForecast, holtForecastSql),
+    exact("personalized_pagerank", personalizedPagerank, personalizedPagerankSql),
+    exact("kneser_ney_bigram", kneserNeyBigram, kneserNeyBigramSql),
+    exact("classifier_calibration", classifierCalibration, classifierCalibrationSql),
+    exact("record_linkage", recordLinkage, recordLinkageSql),
+    exact("burrows_delta", burrowsDelta, burrowsDeltaSql),
+    rowsOnly("mmr_rerank", mmrRerank),
+    exact("watermark_advisor", watermarkAdvisor, watermarkAdvisorSql),
+    exact("bot_detection_report", botDetectionReport, botDetectionReportSql),
+    exact("embed_drift_report", embedDriftReport, embedDriftReportSql),
+    exact("l_diversity_report", lDiversityReport, lDiversityReportSql),
+    exact("holt_winters_forecast", holtWintersForecast, holtWintersForecastSql),
+    exact("embed_jl_projection", embedJlProjection, embedJlProjectionSql),
+    exact("markov_attribution", markovAttribution, markovAttributionSql),
+    exact("ab_sequential_monitor", abSequentialMonitor, abSequentialMonitorSql),
+    exact("benford_audit", benfordAudit, benfordAuditSql),
+    exact("corpus_budget_select", corpusBudgetSelect, corpusBudgetSelectSql),
+    exact("t_closeness_report", tClosenessReport, tClosenessReportSql),
+    exact("rank_rbo_report", rankRboReport, rankRboReportSql),
+    exact("classifier_auc", classifierAuc, classifierAucSql),
+    exact("ks_drift_test", ksDriftTest, ksDriftTestSql),
+    exact("token_label_mi", tokenLabelMi, tokenLabelMiSql),
+    exact("spearman_len_score", spearmanLenScore, spearmanLenScoreSql),
+    exact("gain_capture_curve", gainCaptureCurve, gainCaptureCurveSql),
+    exact("cramers_v_matrix", cramersVMatrix, cramersVMatrixSql),
+    exact("forecast_backtest", forecastBacktest, forecastBacktestSql),
+    exact("gini_report", giniReport, giniReportSql),
+    exact("isotonic_calibration", isotonicCalibration, isotonicCalibrationSql),
+    exact("neyman_allocation", neymanAllocation, neymanAllocationSql),
+    exact("power_analysis", powerAnalysis, powerAnalysisSql),
+    exact("concentration_report", concentrationReport, concentrationReportSql),
+    exact("ab_srm_check", abSrmCheck, abSrmCheckSql),
+    exact("did_lift", didLift, didLiftSql),
+    exact("ndcg_report", ndcgReport, ndcgReportSql),
+    exact("brier_decomposition", brierDecomposition, brierDecompositionSql),
+    exact("hill_tail_index", hillTailIndex, hillTailIndexSql),
+    exact("mann_kendall_trend", mannKendallTrend, mannKendallTrendSql),
+    exact("heaps_law_fit", heapsLawFit, heapsLawFitSql),
+    exact("kappa_agreement", kappaAgreement, kappaAgreementSql),
+    exact("entropy_rate", entropyRate, entropyRateSql),
+    exact("cv_fold_manifest", cvFoldManifest, cvFoldManifestSql),
+    exact("dedup_threshold_sweep", dedupThresholdSweep, dedupThresholdSweepSql),
+    exact("seasonal_strength", seasonalStrength, seasonalStrengthSql),
+    exact("embed_outlier_report", embedOutlierReport, embedOutlierReportSql),
+    exact("graph_modularity", graphModularity, graphModularitySql),
+    exact("covariate_balance_smd", covariateBalanceSmd, covariateBalanceSmdSql),
+    exact("cold_start_coverage", coldStartCoverage, coldStartCoverageSql),
+    exact("durbin_watson", durbinWatson, durbinWatsonSql),
+    exact("char_entropy_report", charEntropyReport, charEntropyReportSql),
+    exact("bloom_sizing_advisor", bloomSizingAdvisor, bloomSizingAdvisorSql))
 }

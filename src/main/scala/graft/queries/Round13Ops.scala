@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{OracleMath, Tables}
+import graft.{Key, OracleMath, Tables}
+import graft.Key.exact
 
 /** Round-13 operators — continuing the platform-QA surface: streaming
   * loss budgeting, the position-based attribution variant, and
@@ -153,7 +154,6 @@ object Round13Ops {
     * mirrored float chain on the bounded group table. Exact oracle.
     */
   def jarqueBeraReport(s: SparkSession, dir: String): DataFrame = {
-    def dec0(c: Column): Column = c.cast("decimal(38,0)")
     val m = Tables.documents(s, dir)
       .groupBy(col("source").as("grp"))
       .agg(count(lit(1)).as("n"),
@@ -258,7 +258,6 @@ object Round13Ops {
     * tie-break) as TakeOrdered. Exact oracle.
     */
   def tokenBurstiness(s: SparkSession, dir: String): DataFrame = {
-    def dec0(c: Column): Column = c.cast("decimal(38,0)")
     val occ = Tables.documents(s, dir)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
       .filter(col("token") =!= "")
@@ -380,7 +379,6 @@ object Round13Ops {
     * dense frame against the broadcast 14-row lag axis. Exact oracle.
     */
   def acfTable(s: SparkSession, dir: String): DataFrame = {
-    def dec0(c: Column): Column = c.cast("decimal(38,0)")
     val daily = events(s, dir).groupBy(to_date(col("ts")).as("d")).agg(count(lit(1)).as("x"))
     val span = daily.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
     val dense = span.select(explode(expr("sequence(0, datediff(hi, lo))")).as("k"))
@@ -550,7 +548,6 @@ object Round13Ops {
     * oracle.
     */
   def emdDrift(s: SparkSession, dir: String): DataFrame = {
-    def dec0(c: Column): Column = c.cast("decimal(38,0)")
     val wp = org.apache.spark.sql.expressions.Window
     val d0 = Tables.documents(s, dir).select(col("doc_id"), col("lang"), col("n_chars"))
     val span = d0.agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
@@ -627,7 +624,6 @@ object Round13Ops {
     * ratio. Exact oracle.
     */
   def varianceRatioTest(s: SparkSession, dir: String): DataFrame = {
-    def dec0(c: Column): Column = c.cast("decimal(38,0)")
     val wp = org.apache.spark.sql.expressions.Window
     val daily = events(s, dir).groupBy(to_date(col("ts")).as("d")).agg(count(lit(1)).as("x"))
     val span = daily.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
@@ -918,7 +914,6 @@ object Round13Ops {
     * mirrored on the single-row frame. Exact oracle.
     */
   def weekendEffect(s: SparkSession, dir: String): DataFrame = {
-    def dec0(c: Column): Column = c.cast("decimal(38,0)")
     val daily = events(s, dir)
       .groupBy(floor(unix_timestamp(col("ts")) / 86400).as("ed"))
       .agg(count(lit(1)).as("x"))
@@ -1124,7 +1119,6 @@ object Round13Ops {
     * sums, the F chain mirrored. Exact oracle.
     */
   def anovaLength(s: SparkSession, dir: String): DataFrame = {
-    def dec0(c: Column): Column = c.cast("decimal(38,0)")
     val g = Tables.documents(s, dir).groupBy(col("lang"))
       .agg(count(lit(1)).as("n"), sum(dec0(col("n_chars"))).as("s1"),
         sum(dec0(col("n_chars")) * dec0(col("n_chars"))).as("s2"))
@@ -1440,7 +1434,6 @@ object Round13Ops {
     */
   def mannWhitneyTest(s: SparkSession, dir: String): DataFrame = {
     val wp = org.apache.spark.sql.expressions.Window
-    def dec0(c: Column): Column = c.cast("decimal(38,0)")
     val hist = Tables.documents(s, dir)
       .select(col("n_chars").as("v"),
         when(col("lang") === "en", 1L).otherwise(0L).as("en"))
@@ -1521,7 +1514,6 @@ object Round13Ops {
     */
   def kruskalWallis(s: SparkSession, dir: String): DataFrame = {
     val wp = org.apache.spark.sql.expressions.Window
-    def dec0(c: Column): Column = c.cast("decimal(38,0)")
     val docs = Tables.documents(s, dir).select(col("lang"), col("n_chars").as("v"))
     val byLangVal = docs.groupBy(col("lang"), col("v")).agg(count(lit(1)).as("n"))
     val byVal = byLangVal.groupBy(col("v")).agg(sum(col("n")).as("t"))
@@ -1599,53 +1591,28 @@ object Round13Ops {
       |        - CAST(nn AS DOUBLE))), 4) AS DOUBLE) > 9.488 AS significant
       |FROM sa""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "kruskal_wallis" -> (kruskalWallis(_, _)),
-    "mann_whitney_test" -> (mannWhitneyTest(_, _)),
-    "logrank_test" -> (logrankTest(_, _)),
-    "dedup_editdist" -> (dedupEditdist(_, _)),
-    "acf_table" -> (acfTable(_, _)),
-    "ess_report" -> (essReport(_, _)),
-    "attribution_window_sweep" -> (attributionWindowSweep(_, _)),
-    "pacf_table" -> (pacfTable(_, _)),
-    "ljung_box" -> (ljungBox(_, _)),
-    "anova_length" -> (anovaLength(_, _)),
-    "k_anonymity_sweep" -> (kAnonymitySweep(_, _)),
-    "emd_drift" -> (emdDrift(_, _)),
-    "variance_ratio_test" -> (varianceRatioTest(_, _)),
-    "churn_hazard" -> (churnHazard(_, _)),
-    "session_gap_sensitivity" -> (sessionGapSensitivity(_, _)),
-    "pii_density_report" -> (piiDensityReport(_, _)),
-    "weekend_effect" -> (weekendEffect(_, _)),
-    "cluster_size_dist" -> (clusterSizeDist(_, _)),
-    "token_burstiness" -> (tokenBurstiness(_, _)),
-    "log_odds_keyness" -> (logOddsKeyness(_, _)),
-    "watermark_loss_sweep" -> (watermarkLossSweep(_, _)),
-    "position_attribution" -> (positionAttribution(_, _)),
-    "jarque_bera_report" -> (jarqueBeraReport(_, _)))
-
-  val oracles: Map[String, String] = Map(
-    "kruskal_wallis" -> kruskalWallisSql,
-    "mann_whitney_test" -> mannWhitneyTestSql,
-    "logrank_test" -> logrankTestSql,
-    "dedup_editdist" -> dedupEditdistSql,
-    "acf_table" -> acfTableSql,
-    "ess_report" -> essReportSql,
-    "attribution_window_sweep" -> attributionWindowSweepSql,
-    "pacf_table" -> pacfTableSql,
-    "ljung_box" -> ljungBoxSql,
-    "anova_length" -> anovaLengthSql,
-    "k_anonymity_sweep" -> kAnonymitySweepSql,
-    "emd_drift" -> emdDriftSql,
-    "variance_ratio_test" -> varianceRatioTestSql,
-    "churn_hazard" -> churnHazardSql,
-    "session_gap_sensitivity" -> sessionGapSensitivitySql,
-    "pii_density_report" -> piiDensityReportSql,
-    "weekend_effect" -> weekendEffectSql,
-    "cluster_size_dist" -> clusterSizeDistSql,
-    "token_burstiness" -> tokenBurstinessSql,
-    "log_odds_keyness" -> logOddsKeynessSql,
-    "watermark_loss_sweep" -> watermarkLossSweepSql,
-    "position_attribution" -> positionAttributionSql,
-    "jarque_bera_report" -> jarqueBeraReportSql)
+  val keys: Seq[Key] = Seq(
+    exact("kruskal_wallis", kruskalWallis, kruskalWallisSql),
+    exact("mann_whitney_test", mannWhitneyTest, mannWhitneyTestSql),
+    exact("logrank_test", logrankTest, logrankTestSql),
+    exact("dedup_editdist", dedupEditdist, dedupEditdistSql),
+    exact("acf_table", acfTable, acfTableSql),
+    exact("ess_report", essReport, essReportSql),
+    exact("attribution_window_sweep", attributionWindowSweep, attributionWindowSweepSql),
+    exact("pacf_table", pacfTable, pacfTableSql),
+    exact("ljung_box", ljungBox, ljungBoxSql),
+    exact("anova_length", anovaLength, anovaLengthSql),
+    exact("k_anonymity_sweep", kAnonymitySweep, kAnonymitySweepSql),
+    exact("emd_drift", emdDrift, emdDriftSql),
+    exact("variance_ratio_test", varianceRatioTest, varianceRatioTestSql),
+    exact("churn_hazard", churnHazard, churnHazardSql),
+    exact("session_gap_sensitivity", sessionGapSensitivity, sessionGapSensitivitySql),
+    exact("pii_density_report", piiDensityReport, piiDensityReportSql),
+    exact("weekend_effect", weekendEffect, weekendEffectSql),
+    exact("cluster_size_dist", clusterSizeDist, clusterSizeDistSql),
+    exact("token_burstiness", tokenBurstiness, tokenBurstinessSql),
+    exact("log_odds_keyness", logOddsKeyness, logOddsKeynessSql),
+    exact("watermark_loss_sweep", watermarkLossSweep, watermarkLossSweepSql),
+    exact("position_attribution", positionAttribution, positionAttributionSql),
+    exact("jarque_bera_report", jarqueBeraReport, jarqueBeraReportSql))
 }

@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{OracleMath, Tables}
+import graft.{Key, OracleMath, Tables}
+import graft.Key.exact
 
 /** Round-14 operators (repo round 8) — four axes the catalog did not
   * yet cover: collocation mining (PMI over adjacent word pairs — the
@@ -512,17 +513,10 @@ object Round14Ops {
         |ORDER BY bg.n""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "contamination_gram_sweep" -> (contaminationGramSweep(_, _)),
-    "packing_budget_sweep" -> (packingBudgetSweep(_, _)),
-    "bigram_pmi" -> (bigramPmi(_, _)),
-    "granger_daily" -> (grangerDaily(_, _)),
-    "embed_pca_power" -> (embedPcaPower(_, _)))
-
-  val oracles: Map[String, String] = Map(
-    "contamination_gram_sweep" -> contaminationGramSweepSql,
-    "packing_budget_sweep" -> packingBudgetSweepSql,
-    "bigram_pmi" -> bigramPmiSql,
-    "granger_daily" -> grangerDailySql,
-    "embed_pca_power" -> embedPcaPowerSql)
+  val keys: Seq[Key] = Seq(
+    exact("contamination_gram_sweep", contaminationGramSweep, contaminationGramSweepSql),
+    exact("packing_budget_sweep", packingBudgetSweep, packingBudgetSweepSql),
+    exact("bigram_pmi", bigramPmi, bigramPmiSql),
+    exact("granger_daily", grangerDaily, grangerDailySql),
+    exact("embed_pca_power", embedPcaPower, embedPcaPowerSql))
 }

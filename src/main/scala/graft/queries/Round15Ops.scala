@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{OracleMath, Tables}
+import graft.{Key, OracleMath, Tables}
+import graft.Key.exact
 
 /** Round-15 operators (repo round 8, continued) — the inference
   * axes the statistics sweep still lacked: the pairwise two-sample
@@ -26,8 +27,6 @@ import graft.{OracleMath, Tables}
   */
 object Round15Ops {
   import OracleMath._
-
-  private def dec0(c: Column): Column = c.cast("decimal(38,0)")
 
   /** #382 welch_t_test — Welch's unequal-variance two-sample t-test
     * with Cohen's d over every language pair's document length
@@ -509,17 +508,10 @@ object Round15Ops {
       |WHERE (CAST(round(CAST(dot AS DOUBLE), 6) AS DOUBLE) + 0.0) >= 0.9
       |ORDER BY a, b""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "welch_t_test" -> (welchTTest(_, _)),
-    "ols_regression" -> (olsRegression(_, _)),
-    "qq_drift_table" -> (qqDriftTable(_, _)),
-    "retrieval_mrr_report" -> (retrievalMrrReport(_, _)),
-    "tfidf_cosine_join" -> (tfidfCosineJoin(_, _)))
-
-  val oracles: Map[String, String] = Map(
-    "welch_t_test" -> welchTTestSql,
-    "ols_regression" -> olsRegressionSql,
-    "qq_drift_table" -> qqDriftTableSql,
-    "retrieval_mrr_report" -> retrievalMrrReportSql,
-    "tfidf_cosine_join" -> tfidfCosineJoinSql)
+  val keys: Seq[Key] = Seq(
+    exact("welch_t_test", welchTTest, welchTTestSql),
+    exact("ols_regression", olsRegression, olsRegressionSql),
+    exact("qq_drift_table", qqDriftTable, qqDriftTableSql),
+    exact("retrieval_mrr_report", retrievalMrrReport, retrievalMrrReportSql),
+    exact("tfidf_cosine_join", tfidfCosineJoin, tfidfCosineJoinSql))
 }

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{OracleMath, Tables}
+import graft.{Key, OracleMath, Tables}
+import graft.Key.exact
 
 /** Round-16 operators (repo round 8, continued) — closing the
   * remaining experimentation / drift / corpus-diversity axes:
@@ -279,7 +280,6 @@ object Round16Ops {
     * oracle.
     */
   def cvmDriftTest(s: SparkSession, dir: String): DataFrame = {
-    def dec0(c: Column): Column = c.cast("decimal(38,0)")
     val d0 = Tables.documents(s, dir).select(col("doc_id"), col("lang"), col("n_chars"))
     val span = d0.agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
     val hist = d0.crossJoin(broadcast(span))
@@ -562,19 +562,11 @@ object Round16Ops {
        |    / CAST(count(*) AS DOUBLE), 6) AS DOUBLE) + 0.0) FROM ap) AS map
        |FROM ap ORDER BY query_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "cuped_lift_report" -> (cupedLiftReport(_, _)),
-    "mantel_haenszel" -> (mantelHaenszel(_, _)),
-    "cvm_drift_test" -> (cvmDriftTest(_, _)),
-    "distinct_ngram_report" -> (distinctNgramReport(_, _)),
-    "spectral_power" -> (spectralPower(_, _)),
-    "map_report" -> (mapReport(_, _)))
-
-  val oracles: Map[String, String] = Map(
-    "cuped_lift_report" -> cupedLiftReportSql,
-    "mantel_haenszel" -> mantelHaenszelSql,
-    "cvm_drift_test" -> cvmDriftTestSql,
-    "distinct_ngram_report" -> distinctNgramReportSql,
-    "spectral_power" -> spectralPowerSql,
-    "map_report" -> mapReportSql)
+  val keys: Seq[Key] = Seq(
+    exact("cuped_lift_report", cupedLiftReport, cupedLiftReportSql),
+    exact("mantel_haenszel", mantelHaenszel, mantelHaenszelSql),
+    exact("cvm_drift_test", cvmDriftTest, cvmDriftTestSql),
+    exact("distinct_ngram_report", distinctNgramReport, distinctNgramReportSql),
+    exact("spectral_power", spectralPower, spectralPowerSql),
+    exact("map_report", mapReport, mapReportSql))
 }

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{OracleMath, Tables}
+import graft.{Key, OracleMath, Tables}
+import graft.Key.exact
 
 /** Round-17 operators (repo round 8, continued) — the dose-response
   * trend test (Cochran–Armitage, the ordered-category complement to
@@ -540,19 +541,11 @@ object Round17Ops {
       |CROSS JOIN chx CROSS JOIN db
       |ORDER BY label""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "cochran_armitage" -> (cochranArmitage(_, _)),
-    "delta_method_ci" -> (deltaMethodCi(_, _)),
-    "ctfidf_terms" -> (ctfidfTerms(_, _)),
-    "krippendorff_alpha" -> (krippendorffAlpha(_, _)),
-    "page_hinkley" -> (pageHinkley(_, _)),
-    "label_separation" -> (labelSeparation(_, _)))
-
-  val oracles: Map[String, String] = Map(
-    "cochran_armitage" -> cochranArmitageSql,
-    "delta_method_ci" -> deltaMethodCiSql,
-    "ctfidf_terms" -> ctfidfTermsSql,
-    "krippendorff_alpha" -> krippendorffAlphaSql,
-    "page_hinkley" -> pageHinkleySql,
-    "label_separation" -> labelSeparationSql)
+  val keys: Seq[Key] = Seq(
+    exact("cochran_armitage", cochranArmitage, cochranArmitageSql),
+    exact("delta_method_ci", deltaMethodCi, deltaMethodCiSql),
+    exact("ctfidf_terms", ctfidfTerms, ctfidfTermsSql),
+    exact("krippendorff_alpha", krippendorffAlpha, krippendorffAlphaSql),
+    exact("page_hinkley", pageHinkley, pageHinkleySql),
+    exact("label_separation", labelSeparation, labelSeparationSql))
 }

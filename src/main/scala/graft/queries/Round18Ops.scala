@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{OracleMath, Tables}
+import graft.{Key, OracleMath, Tables}
+import graft.Key.exact
 
 /** Round-18 operators (repo round 8, continued) — the data-mixture
   * optimization step (DoReMi-style multiplicative reweighting, the
@@ -243,7 +244,6 @@ object Round18Ops {
     * algebra. Exact oracle.
     */
   def langDriftInteraction(s: SparkSession, dir: String): DataFrame = {
-    def dec0(c: Column): Column = c.cast("decimal(38,0)")
     val d0 = Tables.documents(s, dir).select(col("doc_id"), col("lang"), col("n_chars"))
     val span = d0.agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
     val cells = d0.crossJoin(broadcast(span))
@@ -559,17 +559,10 @@ object Round18Ops {
       |FROM md GROUP BY seed
       |ORDER BY seed""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mixture_reweight_step" -> (mixtureReweightStep(_, _)),
-    "hac_mean_se" -> (hacMeanSe(_, _)),
-    "lang_drift_interaction" -> (langDriftInteraction(_, _)),
-    "best_split_stump" -> (bestSplitStump(_, _)),
-    "graph_closeness" -> (graphCloseness(_, _)))
-
-  val oracles: Map[String, String] = Map(
-    "mixture_reweight_step" -> mixtureReweightStepSql,
-    "hac_mean_se" -> hacMeanSeSql,
-    "lang_drift_interaction" -> langDriftInteractionSql,
-    "best_split_stump" -> bestSplitStumpSql,
-    "graph_closeness" -> graphClosenessSql)
+  val keys: Seq[Key] = Seq(
+    exact("mixture_reweight_step", mixtureReweightStep, mixtureReweightStepSql),
+    exact("hac_mean_se", hacMeanSe, hacMeanSeSql),
+    exact("lang_drift_interaction", langDriftInteraction, langDriftInteractionSql),
+    exact("best_split_stump", bestSplitStump, bestSplitStumpSql),
+    exact("graph_closeness", graphCloseness, graphClosenessSql))
 }

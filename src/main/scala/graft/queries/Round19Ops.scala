@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{OracleMath, Tables}
+import graft.{Key, OracleMath, Tables}
+import graft.Key.exact
 
 /** Round-19 operators (repo round 8, continued) — the estimation-QA
   * axis: how much is MISSING and how far can a point estimate be
@@ -21,8 +22,6 @@ import graft.{OracleMath, Tables}
   */
 object Round19Ops {
   import OracleMath._
-
-  private def dec0(c: Column): Column = c.cast("decimal(38,0)")
 
   /** #407 good_turing_mass — the Good–Turing frequency-of-frequencies
     * table over word 3-GRAMS: V(m) = how many distinct grams occur
@@ -350,15 +349,9 @@ object Round19Ops {
       |FROM q JOIN cov ON q.flag = cov.flag
       |ORDER BY l_returnflag""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "good_turing_mass" -> (goodTuringMass(_, _)),
-    "capture_recapture" -> (captureRecapture(_, _)),
-    "james_stein_means" -> (jamesSteinMeans(_, _)),
-    "conformal_interval" -> (conformalInterval(_, _)))
-
-  val oracles: Map[String, String] = Map(
-    "good_turing_mass" -> goodTuringMassSql,
-    "capture_recapture" -> captureRecaptureSql,
-    "james_stein_means" -> jamesSteinMeansSql,
-    "conformal_interval" -> conformalIntervalSql)
+  val keys: Seq[Key] = Seq(
+    exact("good_turing_mass", goodTuringMass, goodTuringMassSql),
+    exact("capture_recapture", captureRecapture, captureRecaptureSql),
+    exact("james_stein_means", jamesSteinMeans, jamesSteinMeansSql),
+    exact("conformal_interval", conformalInterval, conformalIntervalSql))
 }

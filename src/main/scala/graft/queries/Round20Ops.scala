@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{OracleMath, Tables}
+import graft.{Key, OracleMath, Tables}
+import graft.Key.exact
 
 /** Round-20 operators (repo round 8, continued) — four axes the
   * statistics sweep still lacked: the ENERGY two-sample test (all
@@ -28,8 +29,6 @@ import graft.{OracleMath, Tables}
   */
 object Round20Ops {
   import OracleMath._
-
-  private def dec0(c: Column): Column = c.cast("decimal(38,0)")
 
   /** #411 energy_distance — Székely's energy two-sample statistic
     * between weekday and weekend order values: D² = 2·E|X−Y| −
@@ -427,15 +426,9 @@ object Round20Ops {
       |FROM agg
       |ORDER BY src_a, src_b""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "energy_distance" -> (energyDistance(_, _)),
-    "gumbel_return_levels" -> (gumbelReturnLevels(_, _)),
-    "yuen_trimmed_t" -> (yuenTrimmedT(_, _)),
-    "js_divergence_sources" -> (jsDivergenceSources(_, _)))
-
-  val oracles: Map[String, String] = Map(
-    "energy_distance" -> energyDistanceSql,
-    "gumbel_return_levels" -> gumbelReturnLevelsSql,
-    "yuen_trimmed_t" -> yuenTrimmedTSql,
-    "js_divergence_sources" -> jsDivergenceSourcesSql)
+  val keys: Seq[Key] = Seq(
+    exact("energy_distance", energyDistance, energyDistanceSql),
+    exact("gumbel_return_levels", gumbelReturnLevels, gumbelReturnLevelsSql),
+    exact("yuen_trimmed_t", yuenTrimmedT, yuenTrimmedTSql),
+    exact("js_divergence_sources", jsDivergenceSources, jsDivergenceSourcesSql))
 }

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{OracleMath, Tables}
+import graft.{Key, OracleMath, Tables}
+import graft.Key.exact
 
 /** Round-21 operators (repo round 8, continued) — three axes still
   * open: the survival EFFECT SIZE (restricted mean survival time —
@@ -25,8 +26,6 @@ import graft.{OracleMath, Tables}
   */
 object Round21Ops {
   import OracleMath._
-
-  private def dec0(c: Column): Column = c.cast("decimal(38,0)")
 
   /** #415 rmst_report — restricted mean survival time to τ = 30 days
     * for time-to-first-purchase, per A/B hash variant (the logrank
@@ -322,13 +321,8 @@ object Round21Ops {
       |FROM sums JOIN direct ON sums.seg = direct.seg
       |ORDER BY sums.seg""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "rmst_report" -> (rmstReport(_, _)),
-    "nb_overdispersion" -> (nbOverdispersion(_, _)),
-    "offpolicy_eval" -> (offpolicyEval(_, _)))
-
-  val oracles: Map[String, String] = Map(
-    "rmst_report" -> rmstReportSql,
-    "nb_overdispersion" -> nbOverdispersionSql,
-    "offpolicy_eval" -> offpolicyEvalSql)
+  val keys: Seq[Key] = Seq(
+    exact("rmst_report", rmstReport, rmstReportSql),
+    exact("nb_overdispersion", nbOverdispersion, nbOverdispersionSql),
+    exact("offpolicy_eval", offpolicyEval, offpolicyEvalSql))
 }

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{OracleMath, Tables}
+import graft.{Key, OracleMath, Tables}
+import graft.Key.exact
 
 /** Round-22 operators (repo round 8, continued) — the data-selection
   * triplet a mixture decision actually reads: the DIRECTIONAL
@@ -270,13 +271,8 @@ object Round22Ops {
       |GROUP BY budget, types, n
       |ORDER BY budget""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "source_transfer_entropy" -> (sourceTransferEntropy(_, _)),
-    "smoothing_sweep" -> (smoothingSweep(_, _)),
-    "vocab_budget_coverage" -> (vocabBudgetCoverage(_, _)))
-
-  val oracles: Map[String, String] = Map(
-    "source_transfer_entropy" -> sourceTransferEntropySql,
-    "smoothing_sweep" -> smoothingSweepSql,
-    "vocab_budget_coverage" -> vocabBudgetCoverageSql)
+  val keys: Seq[Key] = Seq(
+    exact("source_transfer_entropy", sourceTransferEntropy, sourceTransferEntropySql),
+    exact("smoothing_sweep", smoothingSweep, smoothingSweepSql),
+    exact("vocab_budget_coverage", vocabBudgetCoverage, vocabBudgetCoverageSql))
 }

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{OracleMath, Tables}
+import graft.{Key, OracleMath, Tables}
+import graft.Key.exact
 
 /** Round-23 operators (repo round 8, continued) — three axes: the
   * ABSORBING read of the session Markov chain (probability a journey
@@ -282,13 +283,8 @@ object Round23Ops {
       |FROM f
       |ORDER BY p_brand""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "absorption_probability" -> (absorptionProbability(_, _)),
-    "price_elasticity" -> (priceElasticity(_, _)),
-    "safety_stock_report" -> (safetyStockReport(_, _)))
-
-  val oracles: Map[String, String] = Map(
-    "absorption_probability" -> absorptionProbabilitySql,
-    "price_elasticity" -> priceElasticitySql,
-    "safety_stock_report" -> safetyStockReportSql)
+  val keys: Seq[Key] = Seq(
+    exact("absorption_probability", absorptionProbability, absorptionProbabilitySql),
+    exact("price_elasticity", priceElasticity, priceElasticitySql),
+    exact("safety_stock_report", safetyStockReport, safetyStockReportSql))
 }

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{OracleMath, Tables}
+import graft.{Key, OracleMath, Tables}
+import graft.Key.exact
 
 /** Round-24 operators (repo round 8, continued) — three axes: BINARY
   * SEGMENTATION of the daily series (cusum_changepoint #269 finds ONE
@@ -319,13 +320,8 @@ object Round24Ops {
       |  (CAST(round(CAST(r4 AS DECIMAL(28,14)), 6) AS DOUBLE) + 0.0) AS observed_week4
       |FROM f CROSS JOIN obs4""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "binary_segmentation" -> (binarySegmentation(_, _)),
-    "funnel_latency" -> (funnelLatency(_, _)),
-    "retention_decay_fit" -> (retentionDecayFit(_, _)))
-
-  val oracles: Map[String, String] = Map(
-    "binary_segmentation" -> binarySegmentationSql,
-    "funnel_latency" -> funnelLatencySql,
-    "retention_decay_fit" -> retentionDecayFitSql)
+  val keys: Seq[Key] = Seq(
+    exact("binary_segmentation", binarySegmentation, binarySegmentationSql),
+    exact("funnel_latency", funnelLatency, funnelLatencySql),
+    exact("retention_decay_fit", retentionDecayFit, retentionDecayFitSql))
 }

@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{OracleMath, Tables}
+import graft.{Key, OracleMath, Tables}
+import graft.Key.exact
 
 /** Round-25 operators (repo round 8, continued) — two axes: the
   * per-point cluster-validity read (simplified silhouette — how many
@@ -206,11 +207,7 @@ object Round25Ops {
       |FROM nk LEFT JOIN ek ON nk.k = ek.k
       |ORDER BY nk.k""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "silhouette_report" -> (silhouetteReport(_, _)),
-    "rich_club_coefficient" -> (richClubCoefficient(_, _)))
-
-  val oracles: Map[String, String] = Map(
-    "silhouette_report" -> silhouetteReportSql,
-    "rich_club_coefficient" -> richClubCoefficientSql)
+  val keys: Seq[Key] = Seq(
+    exact("silhouette_report", silhouetteReport, silhouetteReportSql),
+    exact("rich_club_coefficient", richClubCoefficient, richClubCoefficientSql))
 }

@@ -1,6 +1,7 @@
 package graft.queries
 
-import graft.{OracleMath, Tables}
+import graft.{Key, OracleMath, Tables}
+import graft.Key.exact
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -226,15 +227,9 @@ object Round2Ops {
        |UNION ALL SELECT 'b2_filter_value', COUNT(*) FROM b2
        |ORDER BY block""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "graph_communities" -> (graphCommunities(_, _)),
-    "percentiles_freq" -> (percentilesFreq(_, _)),
-    "update_labels" -> (updateLabels(_, _)),
-    "pipeline_debug" -> (pipelineDebug(_, _)))
-
-  val oracles: Map[String, String] = Map(
-    "graph_communities" -> graphCommunitiesSql,
-    "percentiles_freq" -> percentilesFreqSql,
-    "update_labels" -> updateLabelsSql,
-    "pipeline_debug" -> pipelineDebugSql(FeedBlocks.NowMs))
+  val keys: Seq[Key] = Seq(
+    exact("graph_communities", graphCommunities, graphCommunitiesSql),
+    exact("percentiles_freq", percentilesFreq, percentilesFreqSql),
+    exact("update_labels", updateLabels, updateLabelsSql),
+    exact("pipeline_debug", pipelineDebug, pipelineDebugSql(FeedBlocks.NowMs)))
 }

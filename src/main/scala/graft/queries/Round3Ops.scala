@@ -1,6 +1,7 @@
 package graft.queries
 
-import graft.{Lineage, OracleMath, Tables}
+import graft.{Key, Lineage, OracleMath, Tables}
+import graft.Key.exact
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -94,9 +95,6 @@ object Round3Ops {
     Seq("0.25", "0.5", "0.75", "0.95").map(one).mkString("", "\nUNION ALL\n", "\nORDER BY grp, p")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "percentiles_range" -> (percentilesRange(_, _)))
-
-  val oracles: Map[String, String] = Map(
-    "percentiles_range" -> percentilesRangeSql)
+  val keys: Seq[Key] = Seq(
+    exact("percentiles_range", percentilesRange, percentilesRangeSql))
 }

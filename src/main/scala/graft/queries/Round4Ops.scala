@@ -1,6 +1,7 @@
 package graft.queries
 
-import graft.{OracleMath, Tables}
+import graft.{Key, OracleMath, Tables}
+import graft.Key.{exact, rowsOnly}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -622,32 +623,18 @@ object Round4Ops {
       |       ELSE 'test' END AS split
       |FROM documents ORDER BY doc_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_winnow" -> (dedupWinnow(_, _)),
-    "dedup_winnow_fast" -> (dedupWinnowFast(_, _)),
-    "tid_codec" -> (tidCodec(_, _)),
-    "list_pipeline" -> (listPipeline(_, _)),
-    "decontaminate" -> (decontaminate(_, _)),
-    "corpus_sample" -> (corpusSample(_, _)),
-    "doc_repetition" -> (docRepetition(_, _)),
-    "corpus_vocab" -> (corpusVocab(_, _)),
-    "pii_scrub" -> (piiScrub(_, _)),
-    "doc_chunks" -> (docChunks(_, _)),
-    "doc_tfidf" -> (docTfidf(_, _)),
-    "doc_perplexity" -> (docPerplexity(_, _)),
-    "corpus_split" -> (corpusSplit(_, _)))
-
-  val oracles: Map[String, String] = Map(
-    "dedup_winnow" -> dedupWinnowSql,
-    "tid_codec" -> tidCodecSql,
-    "list_pipeline" -> listPipelineSql,
-    "decontaminate" -> decontaminateSql,
-    "corpus_sample" -> corpusSampleSql,
-    "doc_repetition" -> docRepetitionSql,
-    "corpus_vocab" -> corpusVocabSql,
-    "pii_scrub" -> piiScrubSql,
-    "doc_chunks" -> docChunksSql,
-    "doc_tfidf" -> docTfidfSql,
-    "doc_perplexity" -> docPerplexitySql,
-    "corpus_split" -> corpusSplitSql)
+  val keys: Seq[Key] = Seq(
+    exact("dedup_winnow", dedupWinnow, dedupWinnowSql),
+    rowsOnly("dedup_winnow_fast", dedupWinnowFast),
+    exact("tid_codec", tidCodec, tidCodecSql),
+    exact("list_pipeline", listPipeline, listPipelineSql),
+    exact("decontaminate", decontaminate, decontaminateSql),
+    exact("corpus_sample", corpusSample, corpusSampleSql),
+    exact("doc_repetition", docRepetition, docRepetitionSql),
+    exact("corpus_vocab", corpusVocab, corpusVocabSql),
+    exact("pii_scrub", piiScrub, piiScrubSql),
+    exact("doc_chunks", docChunks, docChunksSql),
+    exact("doc_tfidf", docTfidf, docTfidfSql),
+    exact("doc_perplexity", docPerplexity, docPerplexitySql),
+    exact("corpus_split", corpusSplit, corpusSplitSql))
 }

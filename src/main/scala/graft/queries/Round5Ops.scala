@@ -1,6 +1,7 @@
 package graft.queries
 
-import graft.{OracleMath, Tables}
+import graft.{Key, OracleMath, Tables}
+import graft.Key.{exact, rowsOnly}
 import graft.functions.Registry
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -707,28 +708,16 @@ object Round5Ops {
       |GROUP BY p.user_id, p.exact_n
       |ORDER BY exact_n DESC, user_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_normalized" -> (dedupNormalized(_, _)),
-    "corpus_overlap_report" -> (corpusOverlapReport(_, _)),
-    "bm25_search" -> (bm25Search(_, _)),
-    "doc_novelty" -> (docNovelty(_, _)),
-    "corpus_mix_weights" -> (corpusMixWeights(_, _)),
-    "event_anomalies" -> (eventAnomalies(_, _)),
-    "embed_kmeans_report" -> (embedKmeansReport(_, _)),
-    "corpus_recipe" -> (corpusRecipe(_, _)),
-    "doc_filter_audit" -> (docFilterAudit(_, _)),
-    "q18_topk_bigagg" -> (q18TopkBigAgg(_, _)),
-    "heavy_hitters_sketch" -> (heavyHittersSketch(_, _)))
-
-  val oracles: Map[String, String] = Map(
-    "dedup_normalized" -> dedupNormalizedSql,
-    "corpus_overlap_report" -> corpusOverlapReportSql,
-    "bm25_search" -> bm25SearchSql,
-    "doc_novelty" -> docNoveltySql,
-    "corpus_mix_weights" -> corpusMixWeightsSql,
-    "event_anomalies" -> eventAnomaliesSql,
-    "corpus_recipe" -> corpusRecipeSql,
-    "doc_filter_audit" -> docFilterAuditSql,
-    "q18_topk_bigagg" -> q18TopkBigAggSql,
-    "heavy_hitters_sketch" -> heavyHittersSketchSql)
+  val keys: Seq[Key] = Seq(
+    exact("dedup_normalized", dedupNormalized, dedupNormalizedSql),
+    exact("corpus_overlap_report", corpusOverlapReport, corpusOverlapReportSql),
+    exact("bm25_search", bm25Search, bm25SearchSql),
+    exact("doc_novelty", docNovelty, docNoveltySql),
+    exact("corpus_mix_weights", corpusMixWeights, corpusMixWeightsSql),
+    exact("event_anomalies", eventAnomalies, eventAnomaliesSql),
+    rowsOnly("embed_kmeans_report", embedKmeansReport),
+    exact("corpus_recipe", corpusRecipe, corpusRecipeSql),
+    exact("doc_filter_audit", docFilterAudit, docFilterAuditSql),
+    exact("q18_topk_bigagg", q18TopkBigAgg, q18TopkBigAggSql),
+    exact("heavy_hitters_sketch", heavyHittersSketch, heavyHittersSketchSql))
 }

@@ -1,6 +1,7 @@
 package graft.queries
 
-import graft.{OracleMath, Tables}
+import graft.{Key, OracleMath, Tables}
+import graft.Key.{exact, rowsOnly}
 import graft.functions.Registry
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -1564,63 +1565,34 @@ object Round6Ops {
       |)
       |ORDER BY column_name""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "table_profile" -> (tableProfile(_, _)),
-    "corpus_recipe_incremental" -> (corpusRecipeIncremental(_, _)),
-    "part_affinity" -> (partAffinity(_, _)),
-    "lang_confusion" -> (langConfusion(_, _)),
-    "corpus_length_report" -> (corpusLengthReport(_, _)),
-    "dedup_incremental" -> (dedupIncremental(_, _)),
-    "boilerplate_ngrams" -> (boilerplateNgrams(_, _)),
-    "label_centroid_sim" -> (labelCentroidSim(_, _)),
-    "corpus_recipe_neardup" -> (corpusRecipeNeardup(_, _)),
-    "q13_custdist" -> (q13Custdist(_, _)),
-    "q4_order_priority" -> (q4OrderPriority(_, _)),
-    "bpe_merge_step" -> (bpeMergeStep(_, _)),
-    "inter_event_gaps" -> (interEventGaps(_, _)),
-    "corpus_apply_mix" -> (corpusApplyMix(_, _)),
-    "limit_per_user_agg" -> (limitPerUserAgg(_, _)),
-    "sessionize_native" -> (sessionizeNative(_, _)),
-    "runtime_filtered_join" -> (runtimeFilteredJoin(_, _)),
-    "q21_waiting_suppliers" -> (q21WaitingSuppliers(_, _)),
-    "scd2_history" -> (scd2History(_, _)),
-    "corpus_weighted_sample" -> (corpusWeightedSample(_, _)),
-    "embed_pq_knn" -> (embedPqKnn(_, _)),
-    "embed_pq_knn_trained" -> (embedPqKnnTrained(_, _)),
-    "event_paths" -> (eventPaths(_, _)),
-    "rolling_window_range" -> (rollingWindowRange(_, _)),
-    "orders_rfm" -> (ordersRfm(_, _)),
-    "q22_missed_opportunity" -> (q22MissedOpportunity(_, _)),
-    "vocab_zipf_slope" -> (vocabZipfSlope(_, _)),
-    "q16_parts_suppliers" -> (q16PartsSuppliers(_, _)),
-    "event_mix_drift" -> (eventMixDrift(_, _)))
-
-  val oracles: Map[String, String] = Map(
-    "table_profile" -> tableProfileSql,
-    "corpus_recipe_incremental" -> corpusRecipeIncrementalSql,
-    "part_affinity" -> partAffinitySql,
-    "lang_confusion" -> langConfusionSql,
-    "corpus_length_report" -> corpusLengthReportSql,
-    "dedup_incremental" -> dedupIncrementalSql,
-    "boilerplate_ngrams" -> boilerplateNgramsSql,
-    "label_centroid_sim" -> labelCentroidSimSql,
-    "q13_custdist" -> q13CustdistSql,
-    "q4_order_priority" -> q4OrderPrioritySql,
-    "bpe_merge_step" -> bpeMergeStepSql,
-    "inter_event_gaps" -> interEventGapsSql,
-    "corpus_apply_mix" -> corpusApplyMixSql,
-    "limit_per_user_agg" -> limitPerUserAggSql,
-    "sessionize_native" -> sessionizeNativeSql,
-    "runtime_filtered_join" -> runtimeFilteredJoinSql,
-    "q21_waiting_suppliers" -> q21WaitingSuppliersSql,
-    "scd2_history" -> scd2HistorySql,
-    "corpus_weighted_sample" -> corpusWeightedSampleSql,
-    "embed_pq_knn" -> embedPqKnnSql,
-    "event_paths" -> eventPathsSql,
-    "rolling_window_range" -> rollingWindowRangeSql,
-    "orders_rfm" -> ordersRfmSql,
-    "q22_missed_opportunity" -> q22MissedOpportunitySql,
-    "vocab_zipf_slope" -> vocabZipfSlopeSql,
-    "q16_parts_suppliers" -> q16PartsSuppliersSql,
-    "event_mix_drift" -> eventMixDriftSql)
+  val keys: Seq[Key] = Seq(
+    exact("table_profile", tableProfile, tableProfileSql),
+    exact("corpus_recipe_incremental", corpusRecipeIncremental, corpusRecipeIncrementalSql),
+    exact("part_affinity", partAffinity, partAffinitySql),
+    exact("lang_confusion", langConfusion, langConfusionSql),
+    exact("corpus_length_report", corpusLengthReport, corpusLengthReportSql),
+    exact("dedup_incremental", dedupIncremental, dedupIncrementalSql),
+    exact("boilerplate_ngrams", boilerplateNgrams, boilerplateNgramsSql),
+    exact("label_centroid_sim", labelCentroidSim, labelCentroidSimSql),
+    rowsOnly("corpus_recipe_neardup", corpusRecipeNeardup),
+    exact("q13_custdist", q13Custdist, q13CustdistSql),
+    exact("q4_order_priority", q4OrderPriority, q4OrderPrioritySql),
+    exact("bpe_merge_step", bpeMergeStep, bpeMergeStepSql),
+    exact("inter_event_gaps", interEventGaps, interEventGapsSql),
+    exact("corpus_apply_mix", corpusApplyMix, corpusApplyMixSql),
+    exact("limit_per_user_agg", limitPerUserAgg, limitPerUserAggSql),
+    exact("sessionize_native", sessionizeNative, sessionizeNativeSql),
+    exact("runtime_filtered_join", runtimeFilteredJoin, runtimeFilteredJoinSql),
+    exact("q21_waiting_suppliers", q21WaitingSuppliers, q21WaitingSuppliersSql),
+    exact("scd2_history", scd2History, scd2HistorySql),
+    exact("corpus_weighted_sample", corpusWeightedSample, corpusWeightedSampleSql),
+    exact("embed_pq_knn", embedPqKnn, embedPqKnnSql),
+    rowsOnly("embed_pq_knn_trained", embedPqKnnTrained),
+    exact("event_paths", eventPaths, eventPathsSql),
+    exact("rolling_window_range", rollingWindowRange, rollingWindowRangeSql),
+    exact("orders_rfm", ordersRfm, ordersRfmSql),
+    exact("q22_missed_opportunity", q22MissedOpportunity, q22MissedOpportunitySql),
+    exact("vocab_zipf_slope", vocabZipfSlope, vocabZipfSlopeSql),
+    exact("q16_parts_suppliers", q16PartsSuppliers, q16PartsSuppliersSql),
+    exact("event_mix_drift", eventMixDrift, eventMixDriftSql))
 }

@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{OracleMath, Tables}
+import graft.{Key, OracleMath, Tables}
+import graft.Key.exact
 import graft.sources.Firehose
 
 /** Round-8 operators.
@@ -371,21 +372,12 @@ object Round8Ops {
     |WHERE regexp_extract(url, '^https?://([^/]+)', 1) <> ''
     |GROUP BY 1 ORDER BY n DESC, domain""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "parse_post_records" -> (parsePostRecords(_, _)),
-    "parse_profile_records" -> (parseProfileRecords(_, _)),
-    "zorder_pruned_scan" -> (zorderPrunedScan(_, _)),
-    "scorecard_incremental" -> (scorecardIncremental(_, _)),
-    "feed_from_firehose" -> (feedFromFirehose(_, _)),
-    "decontam_report" -> (decontamReport(_, _)),
-    "post_link_domains" -> (postLinkDomains(_, _)))
-
-  val oracles: Map[String, String] = Map(
-    "parse_post_records" -> parsePostRecordsSql,
-    "parse_profile_records" -> parseProfileRecordsSql,
-    "zorder_pruned_scan" -> zorderPrunedScanSql,
-    "scorecard_incremental" -> DssOps.supplierScorecardSql,
-    "feed_from_firehose" -> feedFromFirehoseSql,
-    "decontam_report" -> decontamReportSql,
-    "post_link_domains" -> postLinkDomainsSql)
+  val keys: Seq[Key] = Seq(
+    exact("parse_post_records", parsePostRecords, parsePostRecordsSql),
+    exact("parse_profile_records", parseProfileRecords, parseProfileRecordsSql),
+    exact("zorder_pruned_scan", zorderPrunedScan, zorderPrunedScanSql),
+    exact("scorecard_incremental", scorecardIncremental, DssOps.supplierScorecardSql),
+    exact("feed_from_firehose", feedFromFirehose, feedFromFirehoseSql),
+    exact("decontam_report", decontamReport, decontamReportSql),
+    exact("post_link_domains", postLinkDomains, postLinkDomainsSql))
 }

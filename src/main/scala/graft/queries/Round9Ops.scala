@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{OracleMath, Tables}
+import graft.{Key, OracleMath, Tables}
+import graft.Key.{exact, rowsOnly}
 
 /** Round-9 operators — the catalog past the r8 close: the one classic
   * decision-support shape still absent (Q12), and the corpus-pipeline
@@ -1103,45 +1104,25 @@ object Round9Ops {
     graft.sources.InvertedIndex.search(s, idx, Seq("vector", "hash", "stream"), k = 20)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q12_shipmode" -> (q12Shipmode(_, _)),
-    "corpus_diff" -> (corpusDiff(_, _)),
-    "passage_dedup" -> (passageDedup(_, _)),
-    "seq_pack" -> (seqPack(_, _)),
-    "bm25_indexed" -> (bm25Indexed(_, _)),
-    "graph_distances" -> (graphDistances(_, _)),
-    "corpus_sample_stratified" -> (corpusSampleStratified(_, _)),
-    "doc_quality_classifier" -> (docQualityClassifier(_, _)),
-    "neardup_incremental" -> (neardupIncremental(_, _)),
-    "interval_join" -> (intervalJoin(_, _)),
-    "embed_dim_stats" -> (embedDimStats(_, _)),
-    "multimodal_video" -> (multimodalVideo(_, _)),
-    "gap_fill_locf" -> (gapFillLocf(_, _)),
-    "dedup_semantic_incremental" -> (dedupSemanticIncremental(_, _)),
-    "set_similarity_join" -> (setSimilarityJoin(_, _)),
-    "seq_pack_manifest" -> (seqPackManifest(_, _)),
-    "funnel_sessions" -> (funnelSessions(_, _)),
-    "vocab_coverage" -> (vocabCoverage(_, _)),
-    "growth_accounting" -> (growthAccounting(_, _)),
-    "bm25_incremental" -> (bm25Incremental(_, _)))
-
-  val oracles: Map[String, String] = Map(
-    "q12_shipmode" -> q12ShipmodeSql,
-    "corpus_diff" -> corpusDiffSql,
-    "passage_dedup" -> passageDedupSql,
-    "seq_pack" -> seqPackSql,
-    "bm25_indexed" -> Round5Ops.bm25SearchSql,
-    "graph_distances" -> graphDistancesSql,
-    "corpus_sample_stratified" -> corpusSampleStratifiedSql,
-    "doc_quality_classifier" -> docQualityClassifierSql,
-    "interval_join" -> intervalJoinSql,
-    "embed_dim_stats" -> embedDimStatsSql,
-    "multimodal_video" -> multimodalVideoSql,
-    "gap_fill_locf" -> gapFillLocfSql,
-    "set_similarity_join" -> setSimilarityJoinSql,
-    "seq_pack_manifest" -> seqPackManifestSql,
-    "funnel_sessions" -> funnelSessionsSql,
-    "vocab_coverage" -> vocabCoverageSql,
-    "growth_accounting" -> growthAccountingSql,
-    "bm25_incremental" -> Round5Ops.bm25SearchSql)
+  val keys: Seq[Key] = Seq(
+    exact("q12_shipmode", q12Shipmode, q12ShipmodeSql),
+    exact("corpus_diff", corpusDiff, corpusDiffSql),
+    exact("passage_dedup", passageDedup, passageDedupSql),
+    exact("seq_pack", seqPack, seqPackSql),
+    exact("bm25_indexed", bm25Indexed, Round5Ops.bm25SearchSql),
+    exact("graph_distances", graphDistances, graphDistancesSql),
+    exact("corpus_sample_stratified", corpusSampleStratified, corpusSampleStratifiedSql),
+    exact("doc_quality_classifier", docQualityClassifier, docQualityClassifierSql),
+    rowsOnly("neardup_incremental", neardupIncremental),
+    exact("interval_join", intervalJoin, intervalJoinSql),
+    exact("embed_dim_stats", embedDimStats, embedDimStatsSql),
+    exact("multimodal_video", multimodalVideo, multimodalVideoSql),
+    exact("gap_fill_locf", gapFillLocf, gapFillLocfSql),
+    rowsOnly("dedup_semantic_incremental", dedupSemanticIncremental),
+    exact("set_similarity_join", setSimilarityJoin, setSimilarityJoinSql),
+    exact("seq_pack_manifest", seqPackManifest, seqPackManifestSql),
+    exact("funnel_sessions", funnelSessions, funnelSessionsSql),
+    exact("vocab_coverage", vocabCoverage, vocabCoverageSql),
+    exact("growth_accounting", growthAccounting, growthAccountingSql),
+    exact("bm25_incremental", bm25Incremental, Round5Ops.bm25SearchSql))
 }

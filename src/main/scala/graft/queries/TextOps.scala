@@ -1,6 +1,7 @@
 package graft.queries
 
-import graft.{OracleMath, Tables}
+import graft.{Key, OracleMath, Tables}
+import graft.Key.{exact, rowsOnly}
 import graft.functions.Registry
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -1898,57 +1899,31 @@ object TextOps {
        |  min(exact_j) AS min_exact, max(exact_j) AS max_exact
        |FROM scored GROUP BY 1 ORDER BY 1""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "minhash_calibration" -> (minhashCalibration(_, _)),
-    "dedup_exact_docs" -> (dedupExactDocs(_, _)),
-    "dedup_minhash" -> (dedupMinhash(_, _)),
-    "dedup_minhash_md5" -> (dedupMinhashMd5(_, _)),
-    "dedup_simhash" -> (dedupSimhash(_, _)),
-    "dedup_simhash_md5" -> (dedupSimhashMd5(_, _)),
-    "ngram_jaccard" -> (ngramJaccard(_, _)),
-    "dedup_clusters" -> (dedupClusters(_, _)),
-    "embed_knn" -> (embedKnn(_, _)),
-    "embed_pair_sim_oracle" -> (embedPairSim(_, _)),
-    "embed_pair_sim_bucketed" -> (embedPairSimBucketed(_, _)),
-    "embed_lsh_knn" -> (embedLshKnn(_, _)),
-    "embed_lsh_knn_md5" -> (embedLshKnnMd5(_, _)),
-    "dedup_semantic" -> (dedupSemantic(_, _)),
-    "dedup_semantic_ivf" -> (dedupSemanticIvf(_, _)),
-    "embed_quantized_knn" -> (embedQuantizedKnn(_, _)),
-    "embed_ivf_knn" -> (embedIvfKnn(_, _)),
-    "embed_ivf_knn_indexed" -> (embedIvfKnnIndexed(_, _)),
-    "lang_id" -> (langId(_, _)),
-    "corpus_pipeline" -> (corpusPipeline(_, _)),
-    "corpus_mix_report" -> (corpusMixReport(_, _)),
-    "text_quality" -> (textQuality(_, _)),
-    "token_count" -> (tokenCount(_, _)),
-    "doc_fingerprint" -> (docFingerprint(_, _)),
-    "multimodal_decode" -> (multimodalDecode(_, _)),
-    "multimodal_audio" -> (multimodalAudio(_, _)))
-
-  /** rows-only (no SQL-expressible oracle): dedup_minhash, dedup_simhash,
-    * embed_lsh_knn, embed_ivf_knn, embed_pair_sim_bucketed,
-    * dedup_semantic_ivf (the authoritative pinned set lives in
-    * QueryCatalogSpec "catalog and oracle keys line up").
-    */
-  val oracles: Map[String, String] = Map(
-    "minhash_calibration" -> minhashCalibrationSql,
-    "dedup_exact_docs" -> dedupExactDocsSql,
-    "lang_id" -> langIdSql,
-    "corpus_pipeline" -> corpusPipelineSql,
-    "corpus_mix_report" -> corpusMixReportSql,
-    "dedup_minhash_md5" -> dedupMinhashMd5Sql,
-    "dedup_simhash_md5" -> dedupSimhashMd5Sql,
-    "ngram_jaccard" -> ngramJaccardSql,
-    "dedup_clusters" -> dedupClustersSql,
-    "embed_knn" -> embedKnnSql,
-    "embed_pair_sim_oracle" -> embedPairSimSql,
-    "embed_lsh_knn_md5" -> embedLshKnnMd5Sql,
-    "dedup_semantic" -> dedupSemanticSql,
-    "embed_quantized_knn" -> embedQuantizedKnnSql,
-    "text_quality" -> textQualitySql,
-    "token_count" -> tokenCountSql,
-    "doc_fingerprint" -> docFingerprintSql,
-    "multimodal_decode" -> multimodalDecodeSql,
-    "multimodal_audio" -> multimodalAudioSql)
+  val keys: Seq[Key] = Seq(
+    exact("minhash_calibration", minhashCalibration, minhashCalibrationSql),
+    exact("dedup_exact_docs", dedupExactDocs, dedupExactDocsSql),
+    rowsOnly("dedup_minhash", dedupMinhash),
+    exact("dedup_minhash_md5", dedupMinhashMd5, dedupMinhashMd5Sql),
+    rowsOnly("dedup_simhash", dedupSimhash),
+    exact("dedup_simhash_md5", dedupSimhashMd5, dedupSimhashMd5Sql),
+    exact("ngram_jaccard", ngramJaccard, ngramJaccardSql),
+    exact("dedup_clusters", dedupClusters, dedupClustersSql),
+    exact("embed_knn", embedKnn, embedKnnSql),
+    exact("embed_pair_sim_oracle", embedPairSim, embedPairSimSql),
+    rowsOnly("embed_pair_sim_bucketed", embedPairSimBucketed),
+    rowsOnly("embed_lsh_knn", embedLshKnn),
+    exact("embed_lsh_knn_md5", embedLshKnnMd5, embedLshKnnMd5Sql),
+    exact("dedup_semantic", dedupSemantic, dedupSemanticSql),
+    rowsOnly("dedup_semantic_ivf", dedupSemanticIvf),
+    exact("embed_quantized_knn", embedQuantizedKnn, embedQuantizedKnnSql),
+    rowsOnly("embed_ivf_knn", embedIvfKnn),
+    rowsOnly("embed_ivf_knn_indexed", embedIvfKnnIndexed),
+    exact("lang_id", langId, langIdSql),
+    exact("corpus_pipeline", corpusPipeline, corpusPipelineSql),
+    exact("corpus_mix_report", corpusMixReport, corpusMixReportSql),
+    exact("text_quality", textQuality, textQualitySql),
+    exact("token_count", tokenCount, tokenCountSql),
+    exact("doc_fingerprint", docFingerprint, docFingerprintSql),
+    exact("multimodal_decode", multimodalDecode, multimodalDecodeSql),
+    exact("multimodal_audio", multimodalAudio, multimodalAudioSql))
 }

@@ -3,20 +3,26 @@ package graft.tools
 import graft.{GraftSession, SparkEntry}
 
 /** Write `.explain("formatted")` for one or more catalog queries to
-  * files (dev tool for the plans/r10/ before/after evidence).
+  * files: the plan-shape evidence for a perf change, and the
+  * neutrality proof for a refactor.
   *
-  *   sbt 'runMain graft.tools.PlanDump <outDir> <suffix> <q1,q2,...> [dir]'
+  *   sbt 'runMain graft.tools.PlanDump <outDir> <suffix> <q1,q2,...|all> [dir]'
   *
-  * Emits <outDir>/<query>_<suffix>.txt containing the formatted plan
+  * `all` dumps every `SparkEntry.queries` key, sorted. Emits
+  * <outDir>/<query>_<suffix>.txt containing the formatted plan
   * (pre-execution, AQE initial plan) plus the executed-plan summary
   * counts (exchanges, join strategies, codegen spans) after a noop
   * run, so plan-shape claims are checkable from the files alone.
+  * Run-specific numbers are masked (see `mask`), so `diff -r` of two
+  * checkouts' dumps shows only real plan changes.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = java.nio.file.Paths.get(args(0))
     val suffix = args(1)
-    val names = args(2).split(',').filter(_.nonEmpty)
+    val names =
+      if (args(2) == "all") SparkEntry.queries.keys.toSeq.sorted
+      else args(2).split(',').filter(_.nonEmpty).toSeq
     val dir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
     java.nio.file.Files.createDirectories(outDir)
     val spark = GraftSession.local()
@@ -37,9 +43,21 @@ object PlanDump {
           s"BroadcastNestedLoop=${n("BroadcastNestedLoop")} wscg=${n("*(")}\n"
       java.nio.file.Files.writeString(
         outDir.resolve(s"${name}_$suffix.txt"),
-        s"== $name @ $dir ==\n$summary\n$formatted")
+        mask(s"== $name @ $dir ==\n$summary\n$formatted"))
       println(s"[plandump] wrote ${outDir.resolve(s"${name}_$suffix.txt")}")
     }
     spark.stop()
   }
+
+  /** Blank what differs between two runs of the same plan: expression
+    * and subquery ids (`a#12L`, `[id=#34]`), exchange `plan_id`s, RDD
+    * ids, and the GraftSession.scala line that each `Lineage.cut` RDD
+    * names as its creation site.
+    */
+  def mask(plan: String): String =
+    plan
+      .replaceAll("#\\d+", "#_")
+      .replaceAll("plan_id=\\d+", "plan_id=_")
+      .replaceAll("RDD\\[\\d+\\]", "RDD[_]")
+      .replaceAll("GraftSession\\.scala:\\d+", "GraftSession.scala:_")
 }

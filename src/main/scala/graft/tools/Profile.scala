@@ -59,7 +59,7 @@ object Profile {
         .filter(col("inter") * 5 >= col("uni") * 4)
         .count()
     }
-    time("full-query")(graft.queries.Round9Ops.queries("set_similarity_join")(spark, dir).count())
+    time("full-query")(graft.queries.Round9Ops.setSimilarityJoin(spark, dir).count())
   }
 
   def main(args: Array[String]): Unit = {

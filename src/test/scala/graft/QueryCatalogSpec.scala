@@ -27,6 +27,15 @@ class QueryCatalogSpec extends AnyFunSuite {
     assert(q.diff(o) == rowsOnly, s"unexpected rows-only set: ${q.diff(o)}")
   }
 
+  test("a key name declared twice fails the registry and names the key") {
+    val run = (_: SparkSession, _: String) => spark.emptyDataFrame
+    val e = intercept[IllegalArgumentException](Key.byName(Seq(
+      Key.exact("dup_key", run, "SELECT 1"), Key.rowsOnly("lone_key", run),
+      Key.rowsOnly("dup_key", run))))
+    assert(e.getMessage.contains("dup_key") && !e.getMessage.contains("lone_key"), e.getMessage)
+    assert(Key.byName(Seq(Key.rowsOnly("lone_key", run))).keySet == Set("lone_key"))
+  }
+
   test("every query returns rows at sf0.001") {
     // graph_kcore is exempt BY DESIGN: at sf0.001 the projected graph
     // has mean degree ~3, so the empty 20-core is the true answer —
@@ -1220,6 +1229,28 @@ class QueryCatalogSpec extends AnyFunSuite {
     val oneShot = DssOps.scorecardPartials(li)
     assert(chained.exceptAll(oneShot).isEmpty && oneShot.exceptAll(chained).isEmpty,
       "chained folds must equal the single-shot partials exactly")
+  }
+
+  test("scorecard ratios round the way the DuckDB oracle rounds them") {
+    // DuckDB rounds a DOUBLE as round(x·1e6)/1e6 on the binary value.
+    // Supplier 1's four ratios and 333/640 sit within an ulp of a half
+    // at the 7th digit, where Spark's own round (shortest decimal
+    // string, HALF_UP) lands on the other side. Expected values are
+    // DuckDB's output for the oracle's expressions on these partials.
+    import graft.queries.DssOps
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val per = Seq(
+      (1L, 640L, 41L, 323L, BigDecimal(323), BigDecimal("1.40")),
+      (2L, 640L, 333L, 0L, BigDecimal(317), BigDecimal(0)))
+      .toDF("l_suppkey", "n_lines", "n_returned", "n_slow", "rev_d", "disc_d")
+      .withColumn("rev_d", col("rev_d").cast(OracleMath.Dec))
+      .withColumn("disc_d", col("disc_d").cast(OracleMath.Dec))
+    val got = DssOps.scorecardTail(spark, dir, per)
+      .select("s_suppkey", "return_rate", "slow_rate", "avg_discount", "rev_share")
+      .collect().map(r => r.getLong(0) -> (1 to 4).map(r.getDouble)).toMap
+    assert(got(1L) == Seq(0.064062, 0.504687, 0.002188, 0.504687))
+    assert(got(2L) == Seq(0.520312, 0.0, 0.0, 0.495313))
   }
 
   test("event path trigram counts conserve the per-user event totals") {
