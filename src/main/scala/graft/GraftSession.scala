@@ -157,6 +157,35 @@ object Lineage {
   }
 }
 
+/** The bounded-tail device: once the rest of a query runs over frames
+  * whose row count the schema bounds, not the data (a |types|²
+  * transition matrix, a d² covariance, one row per community), that
+  * tail needs no broadcast stage and no data-sized shuffle:
+  *   - [[leaf]] cuts such a frame as a ONE-PARTITION leaf: the plan
+  *     references the leaf instead of re-deriving its subtree at each
+  *     use, and whatever runs above it reads only the bounded rows;
+  *   - a join between bounded frames takes `.hint("merge")`: a
+  *     sort-merge join of one-partition inputs is a local sort, where
+  *     the planner's pick for a small side (a broadcast) is a whole
+  *     extra query stage;
+  *   - [[allRows]] attaches a bounded frame's scalar (a total, a norm)
+  *     to every row as a window over all rows, instead of a broadcast
+  *     cross join.
+  * A cut leaf does not tell the planner it is one partition: under AQE
+  * it reads as UnknownPartitioning(0), so exchanges are still planned
+  * above it, each moving only the bounded rows.
+  * The argument holds only as far as the bound does: one partition
+  * carries the whole frame, so a caller states at each [[leaf]] why
+  * that frame stays small at any data size.
+  */
+object BoundedTail {
+  def leaf(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    Lineage.cut(df.coalesce(1))
+
+  val allRows: org.apache.spark.sql.expressions.WindowSpec =
+    org.apache.spark.sql.expressions.Window.rowsBetween(Long.MinValue, Long.MaxValue)
+}
+
 /** Wide-payload attach for the exact similarity joins: a narrow
   * candidate-pair stream (a, b) picks up each endpoint's per-doc array
   * (sorted token list / (token, weight) vector) AFTER the pair dedup,
@@ -179,15 +208,13 @@ object Lineage {
   *   1. `spark.graft.attach.form` = broadcast | shuffle — explicit
   *      override (the cross-form identity spec uses it);
   *   2. optimizer row-count statistics when defined (CBO) vs
-  *      `spark.graft.attach.broadcastMaxRows` (default 1M: at ~30
-  *      tokens/doc a row is ~200-500 B of array payload, so 1M rows
-  *      is ~200-500 MB — the practical executor-memory ceiling for a
-  *      build side);
+  *      [[BroadcastMaxRows]] (1M: at ~30 tokens/doc a row is ~200-500 B
+  *      of array payload, so 1M rows is ~200-500 MB — the practical
+  *      executor-memory ceiling for a build side);
   *   3. the MATERIALIZED byte size of the Lineage.cut blocks (exact,
   *      from the block manager's storage info — this is why the
-  *      precondition below matters) vs
-  *      `spark.graft.attach.broadcastMaxBytes` (default 512 MiB of
-  *      in-memory block size);
+  *      precondition below matters) vs [[BroadcastMaxBytes]] (512 MiB
+  *      of in-memory block size);
   *   4. the optimizer sizeInBytes ESTIMATE vs the same byte cap —
   *      unknown sizes estimate huge, so an uncut, unstatted relation
   *      conservatively takes the shuffle form (never an OOM'd
@@ -206,6 +233,9 @@ object Lineage {
   * runs both and compares hashes).
   */
 object Attach {
+  val BroadcastMaxRows: Long = 1000000L
+  val BroadcastMaxBytes: Long = 512L * 1024 * 1024
+
   /** Materialized in-memory size of the plan's pinned leaf RDDs, from
     * driver-side storage info only (None when nothing is pinned).
     */
@@ -224,25 +254,19 @@ object Attach {
   def arrays(cand: org.apache.spark.sql.DataFrame,
       perDoc: org.apache.spark.sql.DataFrame,
       key: String, payload: Seq[String]): org.apache.spark.sql.DataFrame = {
-    val spark = cand.sparkSession
-    val conf = spark.conf
-    val maxRows =
-      conf.getOption("spark.graft.attach.broadcastMaxRows").map(_.toLong).getOrElse(1000000L)
-    val maxBytes = conf.getOption("spark.graft.attach.broadcastMaxBytes").map(_.toLong)
-      .getOrElse(512L * 1024 * 1024)
-    val small = conf.getOption("spark.graft.attach.form") match {
+    val small = cand.sparkSession.conf.getOption("spark.graft.attach.form") match {
       case Some("broadcast") => true
       case Some("shuffle")   => false
       case _ =>
         val stats = perDoc.queryExecution.optimizedPlan.stats
-        stats.rowCount.map(_ <= maxRows).getOrElse {
+        stats.rowCount.map(_ <= BroadcastMaxRows).getOrElse {
           pinnedBytes(perDoc) match {
-            case Some(bytes) => bytes <= maxBytes
+            case Some(bytes) => bytes <= BroadcastMaxBytes
             case None =>
               System.err.println(
                 "[attach] perDoc has no pinned leaf (did the caller skip Lineage.cut?); " +
                   s"gating on the optimizer estimate ${stats.sizeInBytes} B")
-              stats.sizeInBytes <= maxBytes
+              stats.sizeInBytes <= BroadcastMaxBytes
           }
         }
     }

@@ -23,8 +23,6 @@ object FeedBlocks {
     */
   val NowMs: Long = java.time.Instant.parse("2024-01-31T00:00:00Z").toEpochMilli
 
-  private def events(s: SparkSession, dir: String) = Tables.events(s, dir)
-
   /** Age in hours against the fixed anchor — the HN-score denominator
     * input, shared by every hand-built hn expression (the wire
     * front-end has its own Binding-resolved copy in PipelineJson).
@@ -38,7 +36,7 @@ object FeedBlocks {
   def inputWindow(s: SparkSession, dir: String): DataFrame =
     FeedPipeline
       .compile(
-        events(s, dir),
+        Tables.events(s, dir),
         Seq(InputWindow("ts", NowMs, 7L * 86400)))
       .select(col("event_id"), epochMs(col("ts")).as("ts_ms"), col("user_id"), col("event_type"))
       .orderBy(col("event_id"))
@@ -53,7 +51,7 @@ object FeedBlocks {
   def filterCompare(s: SparkSession, dir: String): DataFrame =
     FeedPipeline
       .compile(
-        events(s, dir),
+        Tables.events(s, dir),
         Seq(
           KeepCmp("value", ">=", lit(100.0)),
           KeepCmp("event_type", "!=", lit("error"))))
@@ -74,7 +72,7 @@ object FeedBlocks {
   def filterInSet(s: SparkSession, dir: String): DataFrame = {
     val members = Tables.customer(s, dir).filter(col("c_mktsegment") === "BUILDING")
     FeedPipeline
-      .compile(events(s, dir), Seq(KeepInSet("user_id", members, "c_custkey", keep = true)))
+      .compile(Tables.events(s, dir), Seq(KeepInSet("user_id", members, "c_custkey", keep = true)))
       .select(col("event_id"), col("user_id"), col("event_type"))
       .orderBy(col("event_id"))
   }
@@ -125,7 +123,7 @@ object FeedBlocks {
         "value" -> col("value"),
         "eventType" -> col("event_type"),
         "userId" -> col("user_id")))
-    events(s, dir)
+    Tables.events(s, dir)
       .filter(pred)
       .select(col("event_id"), col("user_id"), col("event_type"), emit(col("value")).as("value"))
       .orderBy(col("event_id"))
@@ -176,7 +174,7 @@ object FeedBlocks {
   def dedupExact(s: SparkSession, dir: String): DataFrame =
     FeedPipeline
       .compile(
-        events(s, dir),
+        Tables.events(s, dir),
         Seq(DedupByKey(Seq("user_id", "event_type"), Seq(col("ts"), col("event_id")))))
       .select(col("user_id"), col("event_type"), col("event_id"), epochMs(col("ts")).as("ts_ms"))
       .orderBy(col("user_id"), col("event_type"))
@@ -192,7 +190,7 @@ object FeedBlocks {
     * key already appeared — the complement of dedup (rank > 1 per key).
     */
   def dedupKeepDupes(s: SparkSession, dir: String): DataFrame =
-    events(s, dir)
+    Tables.events(s, dir)
       .withColumn(
         "rn",
         row_number().over(
@@ -218,7 +216,7 @@ object FeedBlocks {
     * the fixed anchor; pure arithmetic Columns → whole-stage codegen.
     */
   def scoreHn(s: SparkSession, dir: String): DataFrame = {
-    events(s, dir)
+    Tables.events(s, dir)
       .withColumn("score", col("value") / pow(ageHours + lit(2.0), lit(1.8)))
       .select(col("event_id"), emit(col("score"), 6).as("score"))
       .orderBy(col("score").desc, col("event_id"))
@@ -236,7 +234,7 @@ object FeedBlocks {
     * trip), summed into the running score.
     */
   def scoreNormalize(s: SparkSession, dir: String): DataFrame = {
-    val base = events(s, dir)
+    val base = Tables.events(s, dir)
     val recency = (epochMs(col("ts")) - lit(NowMs - 30L * 86400 * 1000)).cast("double")
     val scored = FeedPipeline.compile(
       base,
@@ -263,7 +261,7 @@ object FeedBlocks {
   def sortTopk(s: SparkSession, dir: String): DataFrame =
     FeedPipeline
       .compile(
-        events(s, dir),
+        Tables.events(s, dir),
         Seq(
           SortBy(Seq(col("value").desc, col("event_id"))),
           LimitN(50)))
@@ -277,7 +275,7 @@ object FeedBlocks {
   def limitPerUser(s: SparkSession, dir: String): DataFrame =
     FeedPipeline
       .compile(
-        events(s, dir),
+        Tables.events(s, dir),
         Seq(LimitPerKey("user_id", 3, Seq(col("value").desc, col("event_id")))))
       .select(col("user_id"), col("event_id"), emit(col("value")).as("value"))
       .orderBy(col("user_id"), col("value").desc, col("event_id"))
@@ -293,12 +291,12 @@ object FeedBlocks {
     * errored — left-anti join on the key.
     */
   def stashSubtract(s: SparkSession, dir: String): DataFrame = {
-    val errUsers = events(s, dir)
+    val errUsers = Tables.events(s, dir)
       .filter(col("event_type") === "error" && col("value") > 180.0)
       .select(col("user_id"))
     FeedPipeline
       .compile(
-        events(s, dir).filter(col("event_type") === "purchase"),
+        Tables.events(s, dir).filter(col("event_type") === "purchase"),
         Seq(SubtractSet(errUsers, "user_id")))
       .select(col("event_id"), col("user_id"))
       .orderBy(col("event_id"))
@@ -314,7 +312,7 @@ object FeedBlocks {
   /** #13 stash pop = union (main.rs:2319): top purchases ∪ top signups. */
   def stashPopUnion(s: SparkSession, dir: String): DataFrame = {
     def top(t: String) =
-      events(s, dir)
+      Tables.events(s, dir)
         .filter(col("event_type") === t)
         .orderBy(col("value").desc, col("event_id"))
         .limit(20)
@@ -410,7 +408,7 @@ object FeedBlocks {
     * reproducible by the oracle.
     */
   def sortRandom(s: SparkSession, dir: String): DataFrame =
-    events(s, dir)
+    Tables.events(s, dir)
       .filter(col("event_type") === "signup")
       .select(col("event_id"), md5(concat(col("event_id").cast("string"), lit("#42"))).as("shuffle_key"))
       .orderBy(col("shuffle_key"))
@@ -428,7 +426,7 @@ object FeedBlocks {
     */
   def inputTags(s: SparkSession, dir: String): DataFrame = {
     val words = split(col("text"), " ")
-    docsT(s, dir)
+    Tables.documents(s, dir)
       .filter(array_contains(words, "window") || array_contains(words, "stream"))
       .select(col("doc_id"), col("lang"), col("source"))
       .orderBy(col("doc_id"))
@@ -444,7 +442,7 @@ object FeedBlocks {
     * main.rs:1812,1929): presence of a JSON property as predicate.
     */
   def filterNullProps(s: SparkSession, dir: String): DataFrame =
-    events(s, dir)
+    Tables.events(s, dir)
       // scan-level filter first (event_type pushes to the parquet scan),
       // THEN one json_tuple parse per surviving row. The obvious
       // from_json-into-a-column form parses the document FIVE times per
@@ -469,8 +467,6 @@ object FeedBlocks {
       |  AND event_type = 'view'
       |  AND CAST(json_extract_string(props, '$.k') AS BIGINT) >= 90
       |ORDER BY event_id""".stripMargin
-
-  private def docsT(s: SparkSession, dir: String) = Tables.documents(s, dir)
 
   /** #15b all_replies inversion (main.rs:2470): members of the full
     * store whose ROOT (two hops up) is in the seed set — chain the
@@ -693,7 +689,7 @@ object FeedBlocks {
     * a scan.
     */
   def pointLookup(s: SparkSession, dir: String): DataFrame =
-    events(s, dir)
+    Tables.events(s, dir)
       .filter(col("event_id").isin(7L, 42L, 4242L))
       .select(col("event_id"), col("user_id"), col("event_type"), emit(col("value")).as("value"))
       .orderBy(col("event_id"))
@@ -715,7 +711,7 @@ object FeedBlocks {
       Map("value" -> col("value"), "eventType" -> col("event_type")))
     FeedPipeline
       .compile(
-        events(s, dir),
+        Tables.events(s, dir),
         Seq(
           InputWindow("ts", NowMs, 14L * 86400),
           KeepCmp("event_type", "!=", lit("click")),
@@ -776,7 +772,7 @@ object FeedBlocks {
       regexTargets = Map("text" -> Seq("event_type")),
       whereFields = Map("value" -> col("value"), "eventType" -> col("event_type")))
     FeedPipeline
-      .compile(events(s, dir), PipelineJson.parse(payload, binding))
+      .compile(Tables.events(s, dir), PipelineJson.parse(payload, binding))
       .select(col("event_id"), col("user_id"), col("score").cast("double").as("score"))
   }
 
@@ -808,7 +804,7 @@ object FeedBlocks {
       regexTargets = Map("text" -> Seq("event_type")),
       whereFields = Map("value" -> col("value"), "userId" -> col("user_id")))
     PipelineJson
-      .run(events(s, dir), payload, binding)
+      .run(Tables.events(s, dir), payload, binding)
       .select(
         col("event_id"),
         col("user_id"),
@@ -850,7 +846,7 @@ object FeedBlocks {
         |  {"type":"sort","sortType":"score","sortDirection":"desc"},
         |  {"type":"limit","count":50}
         |]}""".stripMargin
-    val skeleton = events(s, dir)
+    val skeleton = Tables.events(s, dir)
       .filter(col("event_type") === "purchase" && col("value") >= 80)
       .select(col("event_id"))
     val binding = Binding(
@@ -863,7 +859,7 @@ object FeedBlocks {
       whereFields = Map.empty,
       feeds = Map("at://did:plc:ext/app.bsky.feed.generator/hot" -> skeleton))
     PipelineJson
-      .run(events(s, dir), payload, binding)
+      .run(Tables.events(s, dir), payload, binding)
       .select(col("event_id"), col("user_id"), col("score").cast("double").as("score"))
   }
 
@@ -953,7 +949,7 @@ object FeedBlocks {
     * record_ref points 7 ids back on every 4th row.
     */
   private def eventsStore(s: SparkSession, dir: String): DataFrame =
-    events(s, dir)
+    Tables.events(s, dir)
       .withColumn(
         "parent_ref",
         when(col("event_id") % 3 === 1, floor(col("event_id") / 2).cast("long"))

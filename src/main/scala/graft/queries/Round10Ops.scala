@@ -16,8 +16,6 @@ import graft.sources.Firehose
 object Round10Ops {
   import OracleMath._
 
-  private def docs(s: SparkSession, dir: String) = Tables.documents(s, dir)
-
   /** #260 sliding_mau — trailing-7-day distinct active users per day
     * (the growth team's MAU curve at daily grain; #148 user_stickiness
     * reads one week, this reads every day's trailing window). The ONLY
@@ -568,7 +566,7 @@ object Round10Ops {
     * table reportable.
     */
   def wordBigrams(s: SparkSession, dir: String): DataFrame = {
-    val grams = docs(s, dir)
+    val grams = Tables.documents(s, dir)
       .select(split(col("text"), " ").as("w"))
       .select(explode(expr(
         "filter(zip_with(w, slice(w, 2, size(w)), (a, b) -> struct(a AS w1, b AS w2)), p -> p.w2 IS NOT NULL)"))
@@ -622,7 +620,7 @@ object Round10Ops {
     * divide exact longs once (q14 device).
     */
   def tokenizerFertility(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir)
+    Tables.documents(s, dir)
       .select(
         col("lang"),
         size(split(col("text"), " ")).cast("long").as("n_words"),
@@ -929,7 +927,7 @@ object Round10Ops {
     */
   def truncationCoverage(s: SparkSession, dir: String): DataFrame = {
     val caps = Seq(64, 128, 256, 512, 1024, 2048, 4096, 8192)
-    val per = docs(s, dir)
+    val per = Tables.documents(s, dir)
       .select(size(split(col("text"), " +")).cast("long").as("tok"))
     per
       .select(col("tok"), explode(lit(caps.toArray)).as("cap"))
@@ -1078,7 +1076,7 @@ object Round10Ops {
     */
   def dedupSurvivorship(s: SparkSession, dir: String): DataFrame = {
     val clusters = TextOps.dedupClusters(s, dir)
-    val src = docs(s, dir).select(col("doc_id"), col("source"))
+    val src = Tables.documents(s, dir).select(col("doc_id"), col("source"))
     val dropped = clusters.filter(col("doc_id") =!= col("cluster"))
       .join(src, Seq("doc_id"))
       .select(col("cluster"), col("source").as("dropped_source"))
@@ -1322,7 +1320,7 @@ object Round10Ops {
     */
   def bpeTrain(s: SparkSession, dir: String): DataFrame = {
     val rounds = 8
-    val w0 = docs(s, dir)
+    val w0 = Tables.documents(s, dir)
       .select(explode(split(col("text"), " ")).as("w"))
       .filter(col("w") =!= "")
       .groupBy(col("w"))
@@ -1404,7 +1402,7 @@ object Round10Ops {
     */
   def bpeApplyReport(s: SparkSession, dir: String): DataFrame = {
     val rounds = 8
-    val w0 = docs(s, dir)
+    val w0 = Tables.documents(s, dir)
       .select(col("source"), explode(split(col("text"), " ")).as("w"))
       .filter(col("w") =!= "")
       .groupBy(col("source"), col("w"))

@@ -19,8 +19,6 @@ import graft.Key.{exact, rowsOnly}
 object Round11Ops {
   import OracleMath._
 
-  private def events(s: SparkSession, dir: String) = Tables.events(s, dir)
-
   /** #280 psi_drift — Population Stability Index of the event-type mix
     * between the first and second half of the observed time span (the
     * standard model-monitoring drift score; each event type is one PSI
@@ -32,7 +30,7 @@ object Round11Ops {
     * the sourceLangEntropy-proven cross-engine pattern.
     */
   def psiDrift(s: SparkSession, dir: String): DataFrame = {
-    val ev = events(s, dir).select(to_date(col("ts")).as("d"), col("event_type"))
+    val ev = Tables.events(s, dir).select(to_date(col("ts")).as("d"), col("event_type"))
     val span = ev.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
     val halves = ev.crossJoin(broadcast(span))
       .select(
@@ -102,7 +100,7 @@ object Round11Ops {
     * rule psi_drift uses.
     */
   def psiBaseline(s: SparkSession, dir: String): DataFrame = {
-    val ev = events(s, dir).select(to_date(col("ts")).as("d"), col("event_type"))
+    val ev = Tables.events(s, dir).select(to_date(col("ts")).as("d"), col("event_type"))
     val span = ev.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
     ev.crossJoin(broadcast(span))
       .filter(datediff(col("d"), col("lo")) * 2 <= datediff(col("hi"), col("lo")))
@@ -123,7 +121,7 @@ object Round11Ops {
     * zero-count day still moves the statistic.
     */
   def cusumChangepoint(s: SparkSession, dir: String): DataFrame = {
-    val ev = events(s, dir).select(to_date(col("ts")).as("d"), col("event_type"))
+    val ev = Tables.events(s, dir).select(to_date(col("ts")).as("d"), col("event_type"))
     val span = ev.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
     val types = ev.select(col("event_type")).distinct()
     val calendar = types.crossJoin(broadcast(span))
@@ -201,7 +199,7 @@ object Round11Ops {
   val FunnelWindowHours = 72
 
   def windowFunnel(s: SparkSession, dir: String): DataFrame = {
-    val ev = events(s, dir).select(col("user_id"), col("event_type"), col("ts"))
+    val ev = Tables.events(s, dir).select(col("user_id"), col("event_type"), col("ts"))
     def step(t: String, tsName: String) =
       ev.filter(col("event_type") === t).select(col("user_id"), col("ts").as(tsName))
     val v = step("view", "vts")
@@ -267,7 +265,7 @@ object Round11Ops {
     */
   def seqPatterns(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    events(s, dir)
+    Tables.events(s, dir)
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
       .select(
         col("event_type").as("step1"),
@@ -304,7 +302,7 @@ object Round11Ops {
     * daily count — the window and weekday aggs never touch raw events.
     */
   def seasonalDecompose(s: SparkSession, dir: String): DataFrame = {
-    val daily = events(s, dir)
+    val daily = Tables.events(s, dir)
       .groupBy(to_date(col("ts")).as("d"))
       .agg(count(lit(1)).as("c"))
     val w7 = Window.orderBy(col("d")).rowsBetween(-3, 3)
@@ -472,13 +470,8 @@ object Round11Ops {
   val ContainmentThreshold = 0.8
 
   def dedupContainment(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    def ld(j: Int) = lead(col("w0"), j).over(w)
-    val grams = Tables.documents(s, dir)
-      .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos", "w0")))
-      .select(
-        col("doc_id"),
-        when(ld(2).isNotNull, concat_ws(" ", col("w0"), ld(1), ld(2))).as("g"))
+    val grams = TextOps.wordRows(Tables.documents(s, dir))
+      .select(col("doc_id"), TextOps.gram(3).as("g"))
       .filter(col("g").isNotNull)
       .distinct()
     // grams carries a per-doc window (the lead chain) and feeds FOUR
@@ -1151,7 +1144,7 @@ object Round11Ops {
     * precedent, gate-verified at two SFs).
     */
   def theilSenTrend(s: SparkSession, dir: String): DataFrame = {
-    val daily = events(s, dir)
+    val daily = Tables.events(s, dir)
       .groupBy(col("event_type"), to_date(col("ts")).as("d"))
       .agg(count(lit(1)).as("c"))
       .select(col("event_type"), datediff(col("d"), lit("2024-01-01").cast("date")).as("x"), col("c"))
@@ -1245,7 +1238,7 @@ object Round11Ops {
     * set; |Δt| is exact integer microsecond arithmetic.
     */
   def asofJoinNearest(s: SparkSession, dir: String): DataFrame = {
-    val ev = events(s, dir)
+    val ev = Tables.events(s, dir)
     val purchases = ev.filter(col("event_type") === "purchase")
       .select(col("event_id"), col("user_id"), col("ts"))
     val anchors = ev.filter(col("event_type") === "signup")

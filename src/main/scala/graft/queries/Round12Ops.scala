@@ -19,8 +19,6 @@ import graft.Key.{exact, rowsOnly}
 object Round12Ops {
   import OracleMath._
 
-  private def events(s: SparkSession, dir: String) = Tables.events(s, dir)
-
   /** #304 user_erasure_audit — the right-to-be-forgotten cascade
     * (GDPR Art. 17): given a batch of erasure requests (here the
     * deterministic `id % 13 = 0` slice of each id space), report per
@@ -61,7 +59,7 @@ object Round12Ops {
         sum(when(col("del_okey").isNotNull, 1L).otherwise(0L)).as("rows_delete"),
         sum(when(col("del_okey").isNull, 1L).otherwise(0L)).as("rows_keep"))
       .select(lit("lineitem").as("entity"), col("rows_delete"), col("rows_keep"))
-    val ev = events(s, dir)
+    val ev = Tables.events(s, dir)
       .agg(
         sum(when(col("user_id") % 13 === 0, 1L).otherwise(0L)).as("rows_delete"),
         sum(when(col("user_id") % 13 =!= 0, 1L).otherwise(0L)).as("rows_keep"))
@@ -120,7 +118,7 @@ object Round12Ops {
     val noise =
       when(u < 0.5, lit(b) * log(lit(2.0) * u))
         .otherwise(lit(-b) * log(lit(2.0) * (lit(1.0) - u)))
-    events(s, dir)
+    Tables.events(s, dir)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"))
       .select(
@@ -158,7 +156,7 @@ object Round12Ops {
     */
   def wilsonCiReport(s: SparkSession, dir: String): DataFrame = {
     val z = 1.96
-    val agg = events(s, dir)
+    val agg = Tables.events(s, dir)
       .groupBy(col("event_type"))
       .agg(
         count(lit(1)).as("n"),
@@ -218,7 +216,7 @@ object Round12Ops {
     */
   def holtForecast(s: SparkSession, dir: String): DataFrame =
     holtFromDaily(
-      events(s, dir)
+      Tables.events(s, dir)
         .groupBy(to_date(col("ts")).as("d"), col("event_type"))
         .agg(count(lit(1)).as("x")))
 
@@ -849,7 +847,7 @@ object Round12Ops {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("event_type")).orderBy(col("event_id"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    events(s, dir)
+    Tables.events(s, dir)
       .select(col("event_type"), col("event_id"), unix_micros(col("ts")).as("ts_us"))
       .withColumn("hwm", max(col("ts_us")).over(w))
       .filter(col("hwm").isNotNull)
@@ -905,7 +903,7 @@ object Round12Ops {
   def botDetectionReport(s: SparkSession, dir: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val gaps = events(s, dir)
+    val gaps = Tables.events(s, dir)
       .select(col("user_id"), col("event_id"), col("ts"), unix_micros(col("ts")).as("ts_us"))
       .withColumn("gap_s", ((col("ts_us") - lag(col("ts_us"), 1).over(w)) / lit(1000000L)).cast("long"))
     val gapStats = gaps.filter(col("gap_s").isNotNull)
@@ -914,11 +912,11 @@ object Round12Ops {
         count(lit(1)).as("n_gaps"),
         sum(col("gap_s")).as("sum_g"),
         sum(col("gap_s") * col("gap_s")).as("sum_g2"))
-    val hours = events(s, dir)
+    val hours = Tables.events(s, dir)
       .select(col("user_id"), (unix_micros(col("ts")) / lit(3600000000L)).cast("long").as("h"))
       .groupBy(col("user_id"))
       .agg(countDistinct(col("h")).as("active_hours"), count(lit(1)).as("n_events"))
-    val entropy = events(s, dir)
+    val entropy = Tables.events(s, dir)
       .groupBy(col("user_id"), col("event_type")).agg(count(lit(1)).as("c"))
       .withColumn("tot", sum(col("c")).over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("user_id"))))
@@ -1013,7 +1011,7 @@ object Round12Ops {
     */
   def holtWintersForecast(s: SparkSession, dir: String): DataFrame = {
     val m = 7
-    val daily = events(s, dir)
+    val daily = Tables.events(s, dir)
       .groupBy(to_date(col("ts")).as("d"), col("event_type"))
       .agg(count(lit(1)).as("x"))
     val folded = denseDaily(daily)
@@ -1319,21 +1317,19 @@ object Round12Ops {
     // distribution (r11, §2.4: r10 ran two events scans, two window
     // sorts and two cuts — lead and row_number share one window spec,
     // so one pass computes both; the dst-null groups are the per-user
-    // last events, filtered where trans is read). coalesce(1) before
-    // the cut pins the |types|²-bounded result as a SINGLE-PARTITION
-    // leaf: SinglePartition satisfies every ClusteredDistribution, so
-    // the entire bounded tail below — crossJoins, 4 unrolled
-    // multiplies, the conv rollup — plans with ZERO exchanges and zero
-    // broadcast stages (each multiply cost 2 broadcast builds + 1
-    // shuffle before: 37 stages, 1.9 s of driver gap at r10 close).
-    val agg = graft.Lineage.cut(events(s, dir)
+    // last events, filtered where trans is read). The (src, dst)
+    // counts are |types|²-bounded: a BoundedTail leaf, so the entire
+    // tail below — crossJoins, 4 unrolled multiplies, the conv rollup —
+    // runs on one partition with no broadcast stage (each multiply
+    // cost 2 broadcast builds + 1 shuffle before: 37 stages, 1.9 s of
+    // inter-stage gap at r10 close).
+    val agg = graft.BoundedTail.leaf(Tables.events(s, dir)
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
       .withColumn("next", lead(col("event_type"), 1).over(w))
       .withColumn("rn", row_number().over(w))
       .groupBy(col("event_type").as("src"), col("next").as("dst"))
       .agg(count(lit(1)).as("c"),
-        sum(when(col("rn") === 1, 1L).otherwise(0L)).as("n_start"))
-      .coalesce(1))
+        sum(when(col("rn") === 1, 1L).otherwise(0L)).as("n_start")))
     val trans = agg.filter(col("dst").isNotNull).select(col("src"), col("dst"), col("c"))
     // out-degree totals via a src-partitioned window over the bounded
     // leaf (same c/tot doubles as the old outTot join, no exchange)
@@ -1360,26 +1356,19 @@ object Round12Ops {
       .coalesce(1)
     val nUsers = starts.agg(sum(col("n")).as("nu"))
     // the three bounded cross products are consumed by every unrolled
-    // multiply: cut each as a SinglePartition leaf so (a) the loop plan
-    // references leaves, not re-derived subtrees (the r10 xchg=343
-    // lesson), and (b) the loop's joins/aggregates inherit
-    // SinglePartition and plan no exchange. nu rides sv as a column so
-    // the conv rollup needs no scalar cross join.
-    val pv = graft.Lineage.cut(variants.crossJoin(p.hint("shuffle_replicate_nl"))
+    // multiply: each is a leaf, so the loop plan references leaves,
+    // not re-derived subtrees (the r10 xchg=343 lesson). nu rides sv
+    // as a column so the conv rollup needs no scalar cross join.
+    val pv = graft.BoundedTail.leaf(variants.crossJoin(p.hint("shuffle_replicate_nl"))
       .filter(col("removed") === "none" ||
-        (col("src") =!= col("removed") && col("dst") =!= col("removed")))
-      .coalesce(1))
-    val sv = graft.Lineage.cut(variants
+        (col("src") =!= col("removed") && col("dst") =!= col("removed"))))
+    val sv = graft.BoundedTail.leaf(variants
       .crossJoin(starts.hint("shuffle_replicate_nl"))
       .crossJoin(nUsers.hint("shuffle_replicate_nl"))
-      .filter(col("removed") === "none" || col("src") =!= col("removed"))
-      .coalesce(1))
-    val vt = graft.Lineage.cut(
-      variants.crossJoin(types.hint("shuffle_replicate_nl")).coalesce(1))
-    // v0: P(reach purchase in 0 steps | state) = [state = purchase];
-    // merge-hinted joins keep the planner off broadcast (a broadcast
-    // exchange is a whole extra query stage per multiply — SMJ on
-    // SinglePartition children is a local sort, zero exchanges)
+      .filter(col("removed") === "none" || col("src") =!= col("removed")))
+    val vt = graft.BoundedTail.leaf(
+      variants.crossJoin(types.hint("shuffle_replicate_nl")))
+    // v0: P(reach purchase in 0 steps | state) = [state = purchase]
     var v = vt
       .select(col("removed"), col("src").as("state"),
         when(col("src") === "purchase", lit(1.0)).otherwise(lit(0.0)).as("pr"))
@@ -1397,20 +1386,17 @@ object Round12Ops {
             .otherwise(round(coalesce(col("inflow").cast("double"), lit(0.0)), 12)).as("pr"))
     }
     // conv is consumed TWICE (the 'none' scalar and the per-variant
-    // rows): cut so the 4-multiply chain runs once; the 'none' scalar
-    // attaches via an all-rows window over the ≤|types| leaf instead
-    // of a filtered broadcast cross join
-    val conv = graft.Lineage.cut(sv
+    // rows): a leaf so the 4-multiply chain runs once; the 'none'
+    // scalar attaches over the ≤|types| rows
+    val conv = graft.BoundedTail.leaf(sv
       .join(v.select(col("removed"), col("state").as("src"), col("pr")).hint("merge"),
         Seq("removed", "src"))
       .groupBy(col("removed"))
       .agg(sum(round(col("n").cast("double") / col("nu").cast("double") * col("pr"), 12)
-        .cast(Dec12)).as("conv"))
-      .coalesce(1))
-    val wAll = org.apache.spark.sql.expressions.Window
-      .rowsBetween(Long.MinValue, Long.MaxValue)
+        .cast(Dec12)).as("conv")))
     conv
-      .withColumn("conv_full", max(when(col("removed") === "none", col("conv"))).over(wAll))
+      .withColumn("conv_full",
+        max(when(col("removed") === "none", col("conv"))).over(graft.BoundedTail.allRows))
       .select(
         col("removed"),
         emit(col("conv").cast("double"), 6).as("conv_prob"),
@@ -1504,7 +1490,7 @@ object Round12Ops {
     * mirrored in both engines. Exact oracle.
     */
   def abSequentialMonitor(s: SparkSession, dir: String): DataFrame = {
-    val daily = events(s, dir)
+    val daily = Tables.events(s, dir)
       .select(to_date(col("ts")).as("d"), (col("user_id") % 2).as("arm"),
         when(col("value") >= 50.0, 1L).otherwise(0L).as("y"))
       .groupBy(col("d"), col("arm"))
@@ -2321,7 +2307,7 @@ object Round12Ops {
     * means via the mean6 device. Exact oracle.
     */
   def forecastBacktest(s: SparkSession, dir: String): DataFrame = {
-    val daily = events(s, dir)
+    val daily = Tables.events(s, dir)
       .groupBy(to_date(col("ts")).as("d"), col("event_type"))
       .agg(count(lit(1)).as("x"))
     val span = daily.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
@@ -2436,10 +2422,10 @@ object Round12Ops {
           emit(col("gn").cast("double") / (col("n").cast("double") * col("total").cast("double")), 6)
             .as("gini"))
     }
-    val rev = events(s, dir).filter(col("event_type") === "purchase")
+    val rev = Tables.events(s, dir).filter(col("event_type") === "purchase")
       .groupBy(col("user_id"))
       .agg(sum(round(col("value"), 6).cast(Dec)).as("v"))
-    val cnt = events(s, dir).groupBy(col("user_id"))
+    val cnt = Tables.events(s, dir).groupBy(col("user_id"))
       .agg(count(lit(1)).cast(Dec).as("v"))
     gini(rev, "purchase_revenue").unionByName(gini(cnt, "event_count"))
       .orderBy(col("measure"))
@@ -2620,9 +2606,9 @@ object Round12Ops {
     * oracle.
     */
   def powerAnalysis(s: SparkSession, dir: String): DataFrame = {
-    val byType = events(s, dir).groupBy(col("event_type"))
+    val byType = Tables.events(s, dir).groupBy(col("event_type"))
       .agg(count(lit(1)).as("u"))
-    val tot = events(s, dir).agg(count(lit(1)).as("ut"))
+    val tot = Tables.events(s, dir).agg(count(lit(1)).as("ut"))
     val lifts = s.range(0, 4).select(
       element_at(array(lit(0.01), lit(0.02), lit(0.05), lit(0.10)),
         (col("id") + 1).cast("int")).as("lift"))
@@ -2691,7 +2677,7 @@ object Round12Ops {
     }
     val docs = Tables.documents(s, dir).groupBy(col("source").as("g"))
       .agg(count(lit(1)).cast(Dec).as("x"))
-    val evts = events(s, dir).groupBy(col("event_type").as("g"))
+    val evts = Tables.events(s, dir).groupBy(col("event_type").as("g"))
       .agg(count(lit(1)).cast(Dec).as("x"))
     val rev = Tables.orders(s, dir)
       .join(broadcast(Tables.customer(s, dir).select(col("c_custkey"), col("c_nationkey"))),
@@ -2772,7 +2758,7 @@ object Round12Ops {
   }
 
   def abSrmCheck(s: SparkSession, dir: String): DataFrame =
-    srmServe(events(s, dir)
+    srmServe(Tables.events(s, dir)
       .select(to_date(col("ts")).cast("string").as("day"), col("user_id")))
 
   val abSrmCheckSql: String =
@@ -2810,7 +2796,7 @@ object Round12Ops {
     * mirrored float expression over the 4-cell row. Exact oracle.
     */
   def didLift(s: SparkSession, dir: String): DataFrame = {
-    val ev = events(s, dir).select(to_date(col("ts")).as("d"), col("user_id"), col("event_type"))
+    val ev = Tables.events(s, dir).select(to_date(col("ts")).as("d"), col("user_id"), col("event_type"))
     val span = ev.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
     val cells = ev.crossJoin(broadcast(span))
       .select(
@@ -3031,7 +3017,7 @@ object Round12Ops {
     */
   def hillTailIndex(s: SparkSession, dir: String): DataFrame = {
     val wp = org.apache.spark.sql.expressions.Window
-    val top = events(s, dir).groupBy(col("user_id")).agg(count(lit(1)).as("x"))
+    val top = Tables.events(s, dir).groupBy(col("user_id")).agg(count(lit(1)).as("x"))
       .orderBy(col("x").desc, col("user_id")).limit(101)
     val ranked = top // the window runs over the bounded ≤101-row frame
       .withColumn("rn", row_number().over(wp.orderBy(col("x").desc, col("user_id"))))
@@ -3084,7 +3070,7 @@ object Round12Ops {
     * oracle.
     */
   def mannKendallTrend(s: SparkSession, dir: String): DataFrame = {
-    val daily = events(s, dir)
+    val daily = Tables.events(s, dir)
       .groupBy(to_date(col("ts")).as("d"), col("event_type"))
       .agg(count(lit(1)).as("x"))
     val span = daily.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
@@ -3336,7 +3322,7 @@ object Round12Ops {
   def entropyRate(s: SparkSession, dir: String): DataFrame = {
     val wp = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val counts = events(s, dir)
+    val counts = Tables.events(s, dir)
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
       .withColumn("next_type", lead(col("event_type"), 1).over(wp))
       .filter(col("next_type").isNotNull)
@@ -3609,19 +3595,15 @@ object Round12Ops {
     val joined = sym // O(E) labeled edges, consumed once by perC
       .join(labels.select(col("node").as("src"), col("community").as("cs")), Seq("src"))
       .join(labels.select(col("node").as("dst"), col("community").as("cd")), Seq("dst"))
-    val perC = graft.Lineage.cut(joined.groupBy(col("cs").as("community"))
+    val perC = graft.BoundedTail.leaf(joined.groupBy(col("cs").as("community"))
       .agg(count(lit(1)).as("vol"),
-        sum(when(col("cs") === col("cd"), 1L).otherwise(0L)).as("intra2"))
-      .coalesce(1))
-    // m2 = Σ vol attaches via an all-rows window over the bounded
-    // SinglePartition leaf (no broadcast stage, no second pass);
-    // nodes coalesces to SinglePartition so the merge-hinted join and
-    // the total rollup below plan zero exchanges
-    val wAll = org.apache.spark.sql.expressions.Window
-      .rowsBetween(Long.MinValue, Long.MaxValue)
+        sum(when(col("cs") === col("cd"), 1L).otherwise(0L)).as("intra2")))
+    // m2 = Σ vol over the one-row-per-community leaf (no second pass);
+    // nodes, bounded the same way, coalesces to one partition for the
+    // join and the total rollup below
     val nodes = labels.groupBy(col("community")).agg(count(lit(1)).as("n_nodes"))
       .coalesce(1)
-    val rows = perC.withColumn("m2", sum(col("vol")).over(wAll))
+    val rows = perC.withColumn("m2", sum(col("vol")).over(graft.BoundedTail.allRows))
       .join(nodes.hint("merge"), Seq("community"))
       .select(col("community"), col("n_nodes"), col("vol"),
         (col("vol") - col("intra2")).as("cut_edges"),
@@ -3699,7 +3681,7 @@ object Round12Ops {
     * the bounded 4-row frame, mirrored. Exact oracle.
     */
   def covariateBalanceSmd(s: SparkSession, dir: String): DataFrame = {
-    val perUser = events(s, dir)
+    val perUser = Tables.events(s, dir)
       .groupBy(col("user_id"))
       .agg(
         count(lit(1)).cast("double").as("n_events"),
@@ -3789,7 +3771,7 @@ object Round12Ops {
     * 4-row axis; shares divide exact longs. Exact oracle.
     */
   def coldStartCoverage(s: SparkSession, dir: String): DataFrame = {
-    val perUser = events(s, dir).groupBy(col("user_id")).agg(count(lit(1)).as("n"))
+    val perUser = Tables.events(s, dir).groupBy(col("user_id")).agg(count(lit(1)).as("n"))
     val thrs = s.range(0, 4).select(
       element_at(array(lit(1L), lit(2L), lit(5L), lit(10L)), (col("id") + 1).cast("int"))
         .as("threshold"))

@@ -17,8 +17,6 @@ import graft.Key.exact
 object Round13Ops {
   import OracleMath._
 
-  private def events(s: SparkSession, dir: String) = Tables.events(s, dir)
-
   /** #357 watermark_loss_sweep — the event-loss budget per candidate
     * watermark delay: watermark_advisor recommends p99 lateness, THIS
     * prices every candidate on the menu ({1m, 10m, 1h, 6h, 1d}) in
@@ -34,7 +32,7 @@ object Round13Ops {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("event_type")).orderBy(col("event_id"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val late = events(s, dir)
+    val late = Tables.events(s, dir)
       .select(col("event_type"), col("event_id"), unix_micros(col("ts")).as("ts_us"))
       .withColumn("hwm", max(col("ts_us")).over(w))
       .filter(col("hwm").isNotNull)
@@ -87,7 +85,7 @@ object Round13Ops {
     */
   def positionAttribution(s: SparkSession, dir: String): DataFrame = {
     val wp = org.apache.spark.sql.expressions.Window
-    val ev = events(s, dir).select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
+    val ev = Tables.events(s, dir).select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
     val fp = ev.filter(col("event_type") === "purchase")
       .groupBy(col("user_id").as("fu")).agg(min(col("ts")).as("fp_ts"))
     val journey = ev.join(fp, col("user_id") === col("fu") && col("ts") < col("fp_ts"))
@@ -379,7 +377,7 @@ object Round13Ops {
     * dense frame against the broadcast 14-row lag axis. Exact oracle.
     */
   def acfTable(s: SparkSession, dir: String): DataFrame = {
-    val daily = events(s, dir).groupBy(to_date(col("ts")).as("d")).agg(count(lit(1)).as("x"))
+    val daily = Tables.events(s, dir).groupBy(to_date(col("ts")).as("d")).agg(count(lit(1)).as("x"))
     val span = daily.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
     val dense = span.select(explode(expr("sequence(0, datediff(hi, lo))")).as("k"))
       .join(
@@ -490,7 +488,7 @@ object Round13Ops {
     * order, shares divide exact longs. Exact oracle.
     */
   def attributionWindowSweep(s: SparkSession, dir: String): DataFrame = {
-    val ev = events(s, dir).select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
+    val ev = Tables.events(s, dir).select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
     val fp = ev.filter(col("event_type") === "purchase")
       .groupBy(col("user_id").as("fu")).agg(min(col("ts")).as("fp_ts"))
     val journey = ev.join(fp, col("user_id") === col("fu") && col("ts") < col("fp_ts"))
@@ -625,7 +623,7 @@ object Round13Ops {
     */
   def varianceRatioTest(s: SparkSession, dir: String): DataFrame = {
     val wp = org.apache.spark.sql.expressions.Window
-    val daily = events(s, dir).groupBy(to_date(col("ts")).as("d")).agg(count(lit(1)).as("x"))
+    val daily = Tables.events(s, dir).groupBy(to_date(col("ts")).as("d")).agg(count(lit(1)).as("x"))
     val span = daily.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
     val dense = span.select(explode(expr("sequence(0, datediff(hi, lo))")).as("k"))
       .join(
@@ -725,9 +723,9 @@ object Round13Ops {
     */
   def churnHazard(s: SparkSession, dir: String): DataFrame = {
     val wp = org.apache.spark.sql.expressions.Window
-    val perUser = events(s, dir).groupBy(col("user_id"))
+    val perUser = Tables.events(s, dir).groupBy(col("user_id"))
       .agg(min(to_date(col("ts"))).as("first_d"), max(to_date(col("ts"))).as("last_d"))
-    val horizon = events(s, dir).agg(max(to_date(col("ts"))).as("hz"))
+    val horizon = Tables.events(s, dir).agg(max(to_date(col("ts"))).as("hz"))
     val marked = perUser.crossJoin(broadcast(horizon))
       .select(
         floor(datediff(col("last_d"), col("first_d")) / 7).cast("long").as("w"),
@@ -805,7 +803,7 @@ object Round13Ops {
   def sessionGapSensitivity(s: SparkSession, dir: String): DataFrame = {
     val wp = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val gaps = events(s, dir)
+    val gaps = Tables.events(s, dir)
       .select(col("user_id"), col("ts"), col("event_id"))
       .withColumn("gap_us", unix_micros(col("ts")) - lag(unix_micros(col("ts")), 1).over(wp))
     val tot = gaps.agg(count(lit(1)).as("n_events"),
@@ -914,7 +912,7 @@ object Round13Ops {
     * mirrored on the single-row frame. Exact oracle.
     */
   def weekendEffect(s: SparkSession, dir: String): DataFrame = {
-    val daily = events(s, dir)
+    val daily = Tables.events(s, dir)
       .groupBy(floor(unix_timestamp(col("ts")) / 86400).as("ed"))
       .agg(count(lit(1)).as("x"))
       .select(col("x"),
@@ -1076,7 +1074,7 @@ object Round13Ops {
     */
   def ljungBox(s: SparkSession, dir: String): DataFrame = {
     val acf = acfTable(s, dir).select(col("lag"), col("acf"))
-    val n = events(s, dir)
+    val n = Tables.events(s, dir)
       .agg((datediff(max(to_date(col("ts"))), min(to_date(col("ts")))) + 1).as("n"))
     val term = round(col("acf") * col("acf")
       / (col("n") - col("lag")).cast("double"), 12)
@@ -1312,10 +1310,10 @@ object Round13Ops {
     */
   def logrankTest(s: SparkSession, dir: String): DataFrame = {
     val wp = org.apache.spark.sql.expressions.Window
-    val perUser = events(s, dir).groupBy(col("user_id"))
+    val perUser = Tables.events(s, dir).groupBy(col("user_id"))
       .agg(min(to_date(col("ts"))).as("first_d"),
         min(when(col("event_type") === "purchase", to_date(col("ts")))).as("purch_d"))
-    val horizon = events(s, dir).agg(max(to_date(col("ts"))).as("hz"))
+    val horizon = Tables.events(s, dir).agg(max(to_date(col("ts"))).as("hz"))
     val marked = perUser.crossJoin(broadcast(horizon))
       .select(
         when(md5(concat(lit("exp1:"), col("user_id").cast("string"))) < "8", "A")

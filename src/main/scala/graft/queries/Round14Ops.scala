@@ -23,9 +23,6 @@ import graft.Key.exact
 object Round14Ops {
   import OracleMath._
 
-  private def docs(s: SparkSession, dir: String) = Tables.documents(s, dir)
-  private def events(s: SparkSession, dir: String) = Tables.events(s, dir)
-
   /** #377 bigram_pmi — pointwise mutual information over adjacent
     * word pairs: PMI(a,b) = ln(N·c(ab) / (c(a·)·c(·b))) with position
     * marginals (c(a·) = count as FIRST element, c(·b) = as second), a
@@ -42,7 +39,7 @@ object Round14Ops {
     * both engines; ranking on the 6-dp round with (w1,w2) tie-break.
     */
   def bigramPmi(s: SparkSession, dir: String): DataFrame = {
-    val grams = docs(s, dir)
+    val grams = Tables.documents(s, dir)
       .select(split(col("text"), " ").as("w"))
       .select(explode(expr(
         "filter(zip_with(w, slice(w, 2, size(w)), (a, b) -> struct(a AS w1, b AS w2)), p -> p.w2 IS NOT NULL)"))
@@ -109,7 +106,7 @@ object Round14Ops {
     * Exact oracle.
     */
   def grangerDaily(s: SparkSession, dir: String): DataFrame = {
-    val daily = events(s, dir)
+    val daily = Tables.events(s, dir)
       .filter(col("event_type").isin("view", "purchase"))
       .groupBy(to_date(col("ts")).as("d"), col("event_type"))
       .agg(count(lit(1)).as("x"))
@@ -258,20 +255,16 @@ object Round14Ops {
     * multiply CTEs).
     */
   def embedPcaPower(s: SparkSession, dir: String): DataFrame = {
-    // r11 (the markov_attribution device, verdict item 3): everything
-    // past the one data-sized CovMomentsAgg pass is d²-bounded, so pin
-    // the cut covariance as a SINGLE-PARTITION leaf and the whole
-    // 4-multiply power iteration plans with zero exchanges and zero
-    // broadcast stages — the scalars (nd, per-step norm) attach via
-    // all-rows windows over the bounded frames instead of broadcast
-    // cross joins, and the multiplies are merge-hinted joins on
-    // SinglePartition children (34 stages / ~1.8 s driver gap before).
-    // Every arithmetic chain is unchanged: same rounded products, same
-    // order-free Dec12 sums, same doubles.
-    val covU = graft.Lineage.cut(
-      Round11Ops.covTail(Round11Ops.covMoments(Tables.embeddings(s, dir))).coalesce(1))
-    val wAll = org.apache.spark.sql.expressions.Window
-      .rowsBetween(Long.MinValue, Long.MaxValue)
+    // r11: everything past the one data-sized CovMomentsAgg pass is
+    // d²-bounded, so the cut covariance is a BoundedTail leaf and the
+    // whole 4-multiply power iteration runs on one partition with no
+    // broadcast stage; the scalars (nd, per-step norm) attach over all
+    // rows of the bounded frames (34 stages / ~1.8 s inter-stage gap
+    // before). Every arithmetic chain is unchanged: same rounded
+    // products, same order-free Dec12 sums, same doubles.
+    val covU = graft.BoundedTail.leaf(
+      Round11Ops.covTail(Round11Ops.covMoments(Tables.embeddings(s, dir))))
+    val wAll = graft.BoundedTail.allRows
     val m = covU.unionByName(
       covU.filter(col("i") =!= col("j"))
         .select(col("j").as("i"), col("i").as("j"), col("cov")))
@@ -376,7 +369,7 @@ object Round14Ops {
     * device). Exact oracle.
     */
   def packingBudgetSweep(s: SparkSession, dir: String): DataFrame = {
-    val toks = docs(s, dir)
+    val toks = Tables.documents(s, dir)
       .select(col("source"),
         size(filter(split(col("text"), " "), t => t =!= "")).cast("long").as("n"))
       .filter(col("n") > 0)
@@ -436,16 +429,7 @@ object Round14Ops {
     */
   def contaminationGramSweep(s: SparkSession, dir: String): DataFrame = {
     val ns = Seq(3, 4, 6, 8)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id")).orderBy(col("pos"))
-    val base0 = docs(s, dir)
-      .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos", "w0")))
-    val withLeads = (1 to 7).foldLeft(base0) { (df, j) =>
-      df.withColumn(s"w$j", lead(col("w0"), j).over(w))
-    }
-    def gram(n: Int) =
-      when(col(s"w${n - 1}").isNotNull,
-        concat_ws(" ", (0 until n).map(j => col(s"w$j")): _*))
+    val withLeads = TextOps.withWords(TextOps.wordRows(Tables.documents(s, dir)), 7)
     // NOTE (r11, measured — left alone on purpose): the dedup agg +
     // checkpoint pin of ~270k gram rows runs on 2 AQE-coalesced cores
     // (2.3 s of stage CPU). A width-pinned repartition on the dedup
@@ -458,7 +442,7 @@ object Round14Ops {
     // parallelize, so the simpler unpinned form stays.
     val stacked = withLeads
       .select(col("doc_id"), explode(array(ns.map(n =>
-        struct(lit(n).as("n"), gram(n).as("g"))): _*)).as("t"))
+        struct(lit(n).as("n"), TextOps.gram(n, TextOps.wordCol).as("g"))): _*)).as("t"))
       .select(col("doc_id"), col("t.n").as("n"), col("t.g").as("g"))
       .filter(col("g").isNotNull)
       .dropDuplicates("n", "doc_id", "g")
@@ -468,7 +452,7 @@ object Round14Ops {
       .join(bench, Seq("n", "g"), "left_semi")
       .select(col("n"), col("doc_id")).distinct()
       .groupBy(col("n")).agg(count(lit(1)).as("docs_flagged"))
-    val trainDocs = docs(s, dir).filter(col("doc_id") >= 5)
+    val trainDocs = Tables.documents(s, dir).filter(col("doc_id") >= 5)
       .agg(count(lit(1)).as("train_docs"))
     bench.groupBy(col("n")).agg(count(lit(1)).as("bench_grams"))
       .join(flagged, Seq("n"), "left")
@@ -482,17 +466,12 @@ object Round14Ops {
       .orderBy(col("n"))
   }
 
-  val contaminationGramSweepSql: String = {
-    def grams(n: Int) =
-      s"""SELECT $n AS n, doc_id,
-         |  unnest([array_to_string(ws[i:i+${n - 1}], ' ')
-         |          for i in range(1, greatest(len(ws) - ${n - 2}, 1))]) AS g
-         |FROM w""".stripMargin
+  val contaminationGramSweepSql: String =
     """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
       |g AS (
       |  SELECT DISTINCT n, doc_id, g FROM (
       |""".stripMargin +
-      Seq(3, 4, 6, 8).map(grams).mkString("\n  UNION ALL\n") +
+      Seq(3, 4, 6, 8).map(TextOps.gramsSql(_, "doc_id")).mkString("\n  UNION ALL\n") +
       """
         |  )
         |),
@@ -511,7 +490,6 @@ object Round14Ops {
         |    / CAST(train_docs AS DOUBLE), 6) AS DOUBLE) + 0.0) AS flagged_share
         |FROM bg LEFT JOIN flagged ON bg.n = flagged.n CROSS JOIN td
         |ORDER BY bg.n""".stripMargin
-  }
 
   val keys: Seq[Key] = Seq(
     exact("contamination_gram_sweep", contaminationGramSweep, contaminationGramSweepSql),

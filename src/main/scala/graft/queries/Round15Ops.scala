@@ -443,7 +443,7 @@ object Round15Ops {
     // O(pairs·|doc|) rows (~300M at sf0.1 — measured 125 s); packing
     // each doc's token-sorted (token, u) array once keeps the pair
     // table at one row per pair (graft.Attach: broadcast at bench SFs,
-    // co-partitioned beyond spark.graft.attach.broadcastMaxRows).
+    // co-partitioned beyond Attach.BroadcastMaxRows).
     // The dot itself is the native SortedTokenDot two-pointer
     // merge (compiled, O(|a|+|b|) per pair, DECIMAL(30,12)-exact, so
     // the emitted value matches the oracle's any-order decimal sum):

@@ -364,19 +364,12 @@ object Round16Ops {
     * Exact oracle (list-slice grams UNION ALL).
     */
   def distinctNgramReport(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val toks = Tables.documents(s, dir)
-      .select(col("doc_id"), col("source"),
-        posexplode(filter(split(col("text"), " "), t => t =!= "")).as(Seq("pos", "w0")))
-      .withColumn("w1", lead(col("w0"), 1).over(w))
-      .withColumn("w2", lead(col("w0"), 2).over(w))
+    val toks = TextOps.withWords(TextOps.wordRows(Tables.documents(s, dir), Seq(col("source")),
+      filter(split(col("text"), " "), t => t =!= "")), 2)
     val stacked = toks.select(col("source"), explode(array(
       struct(lit(1).as("n"), col("w0").as("g")),
-      struct(lit(2).as("n"),
-        when(col("w1").isNotNull, concat_ws(" ", col("w0"), col("w1"))).as("g")),
-      struct(lit(3).as("n"),
-        when(col("w2").isNotNull,
-          concat_ws(" ", col("w0"), col("w1"), col("w2"))).as("g")))).as("t"))
+      struct(lit(2).as("n"), TextOps.gram(2, TextOps.wordCol).as("g")),
+      struct(lit(3).as("n"), TextOps.gram(3, TextOps.wordCol).as("g")))).as("t"))
       .select(col("source"), col("t.n").as("n"), col("t.g").as("g"))
       .filter(col("g").isNotNull)
     stacked.groupBy(col("source"), col("n"))
@@ -389,13 +382,8 @@ object Round16Ops {
 
   val distinctNgramReportSql: String = {
     def grams(n: Int) =
-      if (n == 1)
-        """SELECT 1 AS n, source, unnest(ws) AS g FROM w"""
-      else
-        s"""SELECT $n AS n, source,
-           |  unnest([array_to_string(ws[i:i+${n - 1}], ' ')
-           |          for i in range(1, greatest(len(ws) - ${n - 2}, 1))]) AS g
-           |FROM w""".stripMargin
+      if (n == 1) """SELECT 1 AS n, source, unnest(ws) AS g FROM w"""
+      else TextOps.gramsSql(n, "source")
     """WITH w AS (
       |  SELECT doc_id, source, list_filter(string_split(text, ' '), x -> x <> '') AS ws
       |  FROM documents

@@ -16,8 +16,6 @@ import org.apache.spark.sql.functions._
 object Round4Ops {
   import OracleMath._
 
-  private def docs(s: SparkSession, dir: String) = Tables.documents(s, dir)
-
   /** #68 benchmark decontamination: remove every corpus document that
     * shares an n-gram with the evaluation set (the GPT-3/Pile-style
     * overlap rule — there 13-grams; on this small-vocabulary synthetic
@@ -30,14 +28,14 @@ object Round4Ops {
     * never an all-pairs comparison.
     */
   def decontaminate(s: SparkSession, dir: String): DataFrame = {
-    val grams = TextOps.gramRows(docs(s, dir), 4)
+    val grams = TextOps.gramRows(Tables.documents(s, dir), 4)
     val benchGrams = grams.filter(col("doc_id") < 5).select(col("g")).distinct()
     val contaminated = grams
       .filter(col("doc_id") >= 5)
       .join(benchGrams, Seq("g"), "left_semi")
       .select(col("doc_id"))
       .distinct()
-    docs(s, dir)
+    Tables.documents(s, dir)
       .filter(col("doc_id") >= 5)
       .join(contaminated, Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("source"))
@@ -71,7 +69,7 @@ object Round4Ops {
     * space on both engines.
     */
   def corpusSample(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir)
+    Tables.documents(s, dir)
       .withColumn("grp", substring(col("source"), 4, 10).cast("int") % 2)
       .withColumn("h", md5(concat(lit("mix1:"), col("doc_id").cast("string"))))
       .filter(col("h") < when(col("grp") === 0, lit("c")).otherwise(lit("4")))
@@ -96,7 +94,7 @@ object Round4Ops {
     */
   def docRepetition(s: SparkSession, dir: String): DataFrame =
     TextOps
-      .gramRows(docs(s, dir), 2, distinct = false)
+      .gramRows(Tables.documents(s, dir), 2, distinct = false)
       .groupBy(col("doc_id"), col("g"))
       .agg(count(lit(1)).as("c"))
       .groupBy(col("doc_id"))
@@ -275,7 +273,7 @@ object Round4Ops {
     * row-frame window minima are engine-portable.
     */
   def dedupWinnow(s: SparkSession, dir: String): DataFrame =
-    winnowPairs(docs(s, dir), g => substring(md5(concat_ws(" ", g)), 1, 16))
+    winnowPairs(Tables.documents(s, dir), g => substring(md5(concat_ws(" ", g)), 1, 16))
 
   /** The winnowing core over any (doc_id, text) frame, parameterized on
     * the gram hash — md5-prefix (oracle-portable strings) or xxhash64
@@ -352,7 +350,7 @@ object Round4Ops {
     */
   def dedupWinnowFast(s: SparkSession, dir: String): DataFrame =
     // hash the 8-word slice STRUCTURALLY — no gram-string concat at all
-    winnowPairs(docs(s, dir), g => xxhash64(g))
+    winnowPairs(Tables.documents(s, dir), g => xxhash64(g))
 
   val dedupWinnowSql: String = {
     val gram8 = (0 until 8).map(j => s"ws[i+$j]").mkString("||' '||")
@@ -388,7 +386,7 @@ object Round4Ops {
     * a TakeOrderedAndProject (no global sort).
     */
   def corpusVocab(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir)
+    Tables.documents(s, dir)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
       .filter(col("token") =!= "")
       .groupBy(col("token"))
@@ -417,7 +415,7 @@ object Round4Ops {
     * (the ORDER BY here exists only for the deterministic oracle).
     */
   def piiScrub(s: SparkSession, dir: String): DataFrame = {
-    val withPii = docs(s, dir).select(
+    val withPii = Tables.documents(s, dir).select(
       col("doc_id"),
       concat(
         col("text"),
@@ -459,7 +457,7 @@ object Round4Ops {
   def docChunks(s: SparkSession, dir: String): DataFrame = {
     val chunk = 32
     val stride = 24
-    docs(s, dir)
+    Tables.documents(s, dir)
       .select(col("doc_id"), split(col("text"), " ").as("ws"))
       .select(
         col("doc_id"),
@@ -503,13 +501,13 @@ object Round4Ops {
     */
   def docTfidf(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val toks = docs(s, dir)
+    val toks = Tables.documents(s, dir)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
       .filter(col("token") =!= "")
     val tf = toks.groupBy(col("doc_id"), col("token")).agg(count(lit(1)).as("tf"))
     val dfreq = toks.select(col("doc_id"), col("token")).distinct()
       .groupBy(col("token")).agg(count(lit(1)).as("df"))
-    val n = docs(s, dir).agg(count(lit(1)).as("n_docs"))
+    val n = Tables.documents(s, dir).agg(count(lit(1)).as("n_docs"))
     val w = Window.partitionBy(col("doc_id")).orderBy(col("tfidf").desc, col("token"))
     tf.join(dfreq, Seq("token"))
       .crossJoin(broadcast(n)) // single-row corpus size
@@ -555,7 +553,7 @@ object Round4Ops {
     * broadcasts it when small), one gram pass, one (doc) aggregate.
     */
   def docPerplexity(s: SparkSession, dir: String): DataFrame = {
-    val toks = docs(s, dir)
+    val toks = Tables.documents(s, dir)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
       .filter(col("token") =!= "")
     val model = toks.groupBy(col("token")).agg(count(lit(1)).as("tf"))
@@ -606,7 +604,7 @@ object Round4Ops {
     * dedup family upstream).
     */
   def corpusSplit(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir)
+    Tables.documents(s, dir)
       .withColumn("h", md5(concat(lit("split1:"), col("doc_id").cast("string"))))
       .select(
         col("doc_id"),

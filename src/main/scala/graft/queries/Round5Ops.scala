@@ -17,8 +17,6 @@ import org.apache.spark.sql.functions._
   */
 object Round5Ops {
 
-  private def docs(s: SparkSession, dir: String) = Tables.documents(s, dir)
-
   /** The CCNet-style pre-hash normalization: lowercase, strip
     * non-alphanumerics, collapse whitespace. A codegen'd per-row map —
     * composes with scan pushdown, shuffles nothing by itself. Mirrored
@@ -38,7 +36,7 @@ object Round5Ops {
     * variants fold into one survivor while distinct docs survive.
     */
   def dedupNormalized(s: SparkSession, dir: String): DataFrame =
-    dedupNormalizedOver(docs(s, dir))
+    dedupNormalizedOver(Tables.documents(s, dir))
 
   /** The core over any (doc_id, text) frame — test entry point. */
   private[graft] def dedupNormalizedOver(d: DataFrame): DataFrame =
@@ -64,7 +62,7 @@ object Round5Ops {
     * shuffle on source; both keys are the natural ones at 100 TB.
     */
   def corpusOverlapReport(s: SparkSession, dir: String): DataFrame =
-    corpusOverlapReportOver(docs(s, dir))
+    corpusOverlapReportOver(Tables.documents(s, dir))
 
   private[graft] def corpusOverlapReportOver(d: DataFrame): DataFrame = {
     val n = d.select(col("doc_id"), col("source"), md5(normText(col("text"))).as("h"))
@@ -115,7 +113,7 @@ object Round5Ops {
     */
   def bm25SearchFor(s: SparkSession, dir: String, terms: Seq[String], k: Int): DataFrame = {
     require(terms.nonEmpty, "bm25 needs at least one query term")
-    val d = docs(s, dir)
+    val d = Tables.documents(s, dir)
     // doc length is a PER-ROW map computed in the scan — no explode, no
     // (doc) shuffle; the r5 form exploded every token (~8× the text
     // volume) to count what size(filter(split)) reads off the row.
@@ -188,7 +186,7 @@ object Round5Ops {
     * anyway).
     */
   def docNovelty(s: SparkSession, dir: String): DataFrame =
-    docNoveltyOver(docs(s, dir))
+    docNoveltyOver(Tables.documents(s, dir))
 
   /** The core over any (doc_id, text) frame — test entry point. */
   private[graft] def docNoveltyOver(d: DataFrame): DataFrame = {
@@ -439,7 +437,7 @@ object Round5Ops {
     * end to end, each on a natural key.
     */
   def corpusRecipe(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir)
+    val d = Tables.documents(s, dir)
     val gated = recipeGate(d)
     val w = Window.partitionBy(col("nh")).orderBy(col("doc_id"))
     val deduped = gated
@@ -545,7 +543,7 @@ object Round5Ops {
     */
   def docFilterAudit(s: SparkSession, dir: String): DataFrame = {
     val words = split(col("text"), " ")
-    val base = docs(s, dir).select(
+    val base = Tables.documents(s, dir).select(
       col("doc_id"),
       (TextOps.bestLang.getField("lang") === "en").cast("int").as("lang_ok"),
       (size(words) >= 30).cast("int").as("len_ok"),

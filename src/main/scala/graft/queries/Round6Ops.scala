@@ -18,8 +18,6 @@ import org.apache.spark.sql.functions._
 object Round6Ops {
   import OracleMath._
 
-  private def docs(s: SparkSession, dir: String) = Tables.documents(s, dir)
-
   /** #92 corpus_recipe_neardup — corpus_recipe with the dedup stage
     * swapped for MinHash NEAR-dedup over the gated survivors: every
     * candidate pair (est. jaccard ≥ 0.5) drops its higher doc_id, the
@@ -35,7 +33,7 @@ object Round6Ops {
     * plans.
     */
   def corpusRecipeNeardup(s: SparkSession, dir: String): DataFrame =
-    corpusRecipeNeardupOver(docs(s, dir))
+    corpusRecipeNeardupOver(Tables.documents(s, dir))
 
   private[graft] def corpusRecipeNeardupOver(d: DataFrame): DataFrame =
     Round5Ops.recipeTail(d, nearDedupDocs(Round5Ops.recipeGate(d)))
@@ -139,7 +137,7 @@ object Round6Ops {
     * two-agg shape.
     */
   def bpeMergeStep(s: SparkSession, dir: String): DataFrame = {
-    val words = docs(s, dir)
+    val words = Tables.documents(s, dir)
       .select(explode(split(col("text"), " ")).as("w"))
       .filter(col("w") =!= "")
       .groupBy(col("w"))
@@ -235,7 +233,7 @@ object Round6Ops {
     // from a full gated scan that must not re-run per downstream use
     val w = graft.Lineage.cut(
       Round5Ops.corpusMixWeights(s, dir).select(col("source"), col("weight")))
-    val gated = Round5Ops.recipeGate(docs(s, dir))
+    val gated = Round5Ops.recipeGate(Tables.documents(s, dir))
       .select(col("doc_id"), col("source"), col("n_words"))
     val u = conv(substring(md5(concat(lit("mix:"), col("doc_id").cast("string"))), 1, 6), 16, 10)
       .cast("long").cast("double") / lit(16777216.0)
@@ -517,7 +515,7 @@ object Round6Ops {
   def corpusWeightedSample(s: SparkSession, dir: String): DataFrame = {
     val u = (conv(substring(md5(concat(lit("ws:"), col("doc_id").cast("string"))), 1, 6), 16, 10)
       .cast("long").cast("double") + lit(0.5)) / lit(16777216.0)
-    docs(s, dir)
+    Tables.documents(s, dir)
       .filter(col("n_chars") > 0)
       .select(
         col("doc_id"), col("source"), col("n_chars"),
@@ -656,7 +654,6 @@ object Round6Ops {
 
   private[graft] def pqTrainCodebook(
       subs: DataFrame, seed: DataFrame, iters: Int): DataFrame = {
-    val exactAvg = org.apache.spark.sql.types.DecimalType(38, 18)
     var cents = seed
     for (_ <- 1 to iters) {
       val assigned = subs
@@ -665,18 +662,7 @@ object Round6Ops {
         .groupBy(col("vec_id"), col("s"))
         .agg(min_by(struct(col("j"), col("v")), struct(col("d2"), col("j"))).as("_b"))
         .select(col("s"), col("_b.j").as("j"), col("_b.v").as("v"))
-      // coalesce(1) between the aggregates (r11, same device as
-      // ivfCentroids): the (s, j, pos) mean frame is m·k·dim-bounded,
-      // so the array-collect re-group needs no second exchange
-      cents = graft.Lineage.cut(
-        assigned
-          .select(col("s"), col("j"), posexplode(col("v")).as(Seq("pos", "x")))
-          .groupBy(col("s"), col("j"), col("pos"))
-          .agg(avg(col("x").cast(exactAvg)).cast("double").as("m"))
-          .coalesce(1)
-          .groupBy(col("s"), col("j"))
-          .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-          .select(col("s"), col("j"), transform(col("pm"), x => x.getField("m")).as("c")))
+      cents = TextOps.centroidMeans(assigned, Seq("s", "j"), "v", "x", "c")
     }
     cents
   }
@@ -923,7 +909,7 @@ object Round6Ops {
     * 1000-row frame only, moments reduce to a single row.
     */
   def vocabZipfSlope(s: SparkSession, dir: String): DataFrame = {
-    val top = docs(s, dir)
+    val top = Tables.documents(s, dir)
       .select(explode(split(col("text"), " ")).as("w"))
       .filter(col("w") =!= "")
       .groupBy(col("w"))
@@ -1217,7 +1203,7 @@ object Round6Ops {
     * order. Never all-pairs, never a global window.
     */
   def boilerplateNgrams(s: SparkSession, dir: String): DataFrame =
-    boilerplateNgramsOver(docs(s, dir), minDf = 3, topK = 50)
+    boilerplateNgramsOver(Tables.documents(s, dir), minDf = 3, topK = 50)
 
   /** The report over any (doc_id, text) frame — test entry. */
   private[graft] def boilerplateNgramsOver(d: DataFrame, minDf: Int, topK: Int): DataFrame = {
@@ -1269,7 +1255,7 @@ object Round6Ops {
     * carry the fold behavior) — same situation as dedup_exact_docs.
     */
   def dedupIncremental(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir)
+    val d = Tables.documents(s, dir)
     val indexDir = graft.sources.Sources.cachedIndexDir(dir, "documents", "hash-index-v1")(
       p => graft.sources.Sources.buildHashIndex(d.filter(col("doc_id") < 100), p))
     graft.sources.Sources
@@ -1350,7 +1336,7 @@ object Round6Ops {
     * hint-free (|langs| rows); rate = true division of exact longs.
     */
   def langConfusion(s: SparkSession, dir: String): DataFrame = {
-    val p = docs(s, dir)
+    val p = Tables.documents(s, dir)
       .select(col("lang").as("labeled"), TextOps.bestLang.getField("lang").as("predicted"))
     val counts = p.groupBy(col("labeled"), col("predicted")).agg(count(lit(1)).as("n"))
     val totals = counts.groupBy(col("labeled").as("t_lab")).agg(sum(col("n")).as("total"))
@@ -1385,7 +1371,7 @@ object Round6Ops {
     * boilerplate floods before they skew a mixture.
     */
   def corpusLengthReport(s: SparkSession, dir: String): DataFrame = {
-    val b = docs(s, dir)
+    val b = Tables.documents(s, dir)
       .groupBy(col("source"), length(bin(col("n_chars"))).as("bucket"))
       .agg(
         count(lit(1)).as("n_docs"),
@@ -1427,7 +1413,7 @@ object Round6Ops {
     * self-dedup + anti join, tail keeps #88's audited plans.
     */
   def corpusRecipeIncremental(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir)
+    val d = Tables.documents(s, dir)
     val indexDir = graft.sources.Sources.cachedIndexDir(dir, "documents", "recipe-hidx-v1")(
       p =>
         graft.sources.Sources

@@ -15,8 +15,6 @@ import graft.Key.{exact, rowsOnly}
 object Round9Ops {
   import OracleMath._
 
-  private def docs(s: SparkSession, dir: String) = Tables.documents(s, dir)
-
   /** #229 q12_shipmode — TPC-H Q12 (late-shipment counts by ship mode;
     * the only classic 1-22 shape the catalog lacked). The testdata has
     * no l_shipmode/l_commitdate, so — like q4's 30-day lateness rule —
@@ -68,7 +66,7 @@ object Round9Ops {
     * text — then a tiny status×source aggregate.
     */
   def corpusDiff(s: SparkSession, dir: String): DataFrame = {
-    val base = docs(s, dir).select(col("doc_id"), col("source"), col("text"))
+    val base = Tables.documents(s, dir).select(col("doc_id"), col("source"), col("text"))
     val v1 = base.filter(col("doc_id") % 11 =!= 3)
       .select(col("doc_id"), col("source"), md5(col("text")).as("h1"))
     val v2 = base.filter(col("doc_id") % 13 =!= 5)
@@ -118,7 +116,7 @@ object Round9Ops {
     */
   def passageDedup(s: SparkSession, dir: String): DataFrame = {
     val pw = 16
-    val pas = docs(s, dir)
+    val pas = Tables.documents(s, dir)
       .select(col("doc_id"), split(col("text"), " ").as("ws"))
       .select(
         col("doc_id"),
@@ -194,7 +192,7 @@ object Round9Ops {
   private def packSpans(s: SparkSession, dir: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("source"), col("shard")).orderBy(col("doc_id"))
-    docs(s, dir)
+    Tables.documents(s, dir)
       .select(
         col("doc_id"), col("source"), (col("doc_id") % 4).as("shard"),
         size(filter(split(col("text"), " "), t => t =!= "")).cast("long").as("n"))
@@ -298,7 +296,7 @@ object Round9Ops {
     */
   def bm25Indexed(s: SparkSession, dir: String): DataFrame = {
     val idx = graft.sources.Sources.cachedIndexDir(dir, "documents", "bm25-inverted-v1") { p =>
-      graft.sources.InvertedIndex.build(docs(s, dir), p)
+      graft.sources.InvertedIndex.build(Tables.documents(s, dir), p)
     }
     graft.sources.InvertedIndex.search(s, idx, Seq("vector", "hash", "stream"), k = 20)
   }
@@ -371,7 +369,7 @@ object Round9Ops {
   def corpusSampleStratified(s: SparkSession, dir: String): DataFrame = {
     val u = (conv(substring(md5(concat(lit("ws:"), col("doc_id").cast("string"))), 1, 6), 16, 10)
       .cast("long").cast("double") + lit(0.5)) / lit(16777216.0)
-    docs(s, dir)
+    Tables.documents(s, dir)
       .filter(col("n_chars") > 0)
       .select(
         col("doc_id"), col("source"),
@@ -410,7 +408,7 @@ object Round9Ops {
     * column. Exact oracle.
     */
   def docQualityClassifier(s: SparkSession, dir: String): DataFrame = {
-    val toks = docs(s, dir)
+    val toks = Tables.documents(s, dir)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
       .filter(col("token") =!= "")
     val bucket = pmod(
@@ -457,7 +455,7 @@ object Round9Ops {
     * near-dup rejection, novel admission, and re-ingest idempotence.
     */
   def neardupIncremental(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir)
+    val d = Tables.documents(s, dir)
     val indexDir = graft.sources.Sources.cachedIndexDir(dir, "documents", "neardup-bands-v1")(
       p => graft.sources.NeardupIndex.build(d.filter(col("doc_id") < 100), p))
     graft.sources.NeardupIndex
@@ -579,7 +577,7 @@ object Round9Ops {
     * test-pinned multimodalStub. Exact oracle.
     */
   def multimodalVideo(s: SparkSession, dir: String): DataFrame =
-    decodeVideoMeta(synthVideoPayloads(docs(s, dir)))
+    decodeVideoMeta(synthVideoPayloads(Tables.documents(s, dir)))
       .orderBy(col("doc_id"))
 
   /** ftyp(isom) + moov(mvhd v0) with timescale/duration derived from
@@ -743,7 +741,7 @@ object Round9Ops {
     * live in the rows-only production variants).
     */
   def setSimilarityJoin(s: SparkSession, dir: String): DataFrame = {
-    val toks = docs(s, dir)
+    val toks = Tables.documents(s, dir)
       .select(col("doc_id"), explode(array_distinct(split(col("text"), " "))).as("token"))
       .filter(col("token") =!= "")
     val dfr = toks.groupBy(col("token")).agg(count(lit(1)).as("df"))
@@ -836,7 +834,7 @@ object Round9Ops {
       .dropDuplicates("a", "b")
     // token arrays attach AFTER the pair dedup ([[graft.Attach]]):
     // broadcast at bench SFs, co-partitioned shuffle join beyond
-    // spark.graft.attach.broadcastMaxRows — the candidate stream stays
+    // Attach.BroadcastMaxRows — the candidate stream stays
     // narrow through its one dedup shuffle and the wide arrays never
     // shuffle per pair. The intersect is the native SortedIntersectCount
     // two-pointer merge over the lex-sorted arrays (array_intersect
@@ -972,7 +970,7 @@ object Round9Ops {
     * frontier), covered share emitted from exact longs. Exact oracle.
     */
   def vocabCoverage(s: SparkSession, dir: String): DataFrame = {
-    val counts = docs(s, dir)
+    val counts = Tables.documents(s, dir)
       .select(explode(split(col("text"), " ")).as("token"))
       .filter(col("token") =!= "")
       .groupBy(col("token")).agg(count(lit(1)).as("c"))
@@ -1096,7 +1094,7 @@ object Round9Ops {
     * writes the day's postings, never touching history.
     */
   def bm25Incremental(s: SparkSession, dir: String): DataFrame = {
-    val d = docs(s, dir)
+    val d = Tables.documents(s, dir)
     val idx = graft.sources.Sources.cachedIndexDir(dir, "documents", "bm25-incr-v1") { p =>
       graft.sources.InvertedIndex.build(d.filter(col("doc_id") < 250), p)
       graft.sources.InvertedIndex.append(d.filter(col("doc_id") >= 250), p)

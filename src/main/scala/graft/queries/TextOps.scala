@@ -23,8 +23,6 @@ case class MediaFeature(
 object TextOps {
   import OracleMath._
 
-  private def docs(s: SparkSession, dir: String) = Tables.documents(s, dir)
-
   // ---------------------------------------------------------------- dedup
 
   /** Default bucket-size cap for candidate-pair self-joins. Mirrored
@@ -104,7 +102,7 @@ object TextOps {
     */
   def dedupExactDocs(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("h")).orderBy(col("doc_id"))
-    docs(s, dir)
+    Tables.documents(s, dir)
       .select(col("doc_id"), md5(col("text")).as("h"), col("source"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
@@ -119,7 +117,12 @@ object TextOps {
       |  FROM documents
       |) WHERE rn = 1 ORDER BY doc_id""".stripMargin
 
-  /** Distinct word n-grams as rows (doc_id, g).
+  // --------------------------------------------------------- word n-grams
+
+  /** The word n-gram kernel every gram key builds on: `text` split on
+    * single spaces and posexploded to one row per word, (doc_id,
+    * [keep...], pos, w0); word j of the gram that starts at w0 is
+    * [[word]](j), a lead over ONE per-doc window ordered by pos.
     *
     * Deliberately NOT an array-typed higher-order-function pipeline:
     * exploding a transform/sequence-built array re-evaluates the
@@ -128,9 +131,43 @@ object TextOps {
     * codegen, and the (doc_id) exchange introduced by the window is
     * reused by every downstream groupBy(doc_id).
     */
+  private[queries] def wordRows(
+      docsDf: DataFrame, keep: Seq[Column] = Nil,
+      words: Column = split(col("text"), " ")): DataFrame =
+    docsDf.select(col("doc_id") +: keep :+ posexplode(words).as(Seq("pos", "w0")): _*)
+
+  private val byPos = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
+
+  /** Word j (0-based) of the gram that starts at this row's word. */
+  private[queries] def word(j: Int): Column =
+    if (j == 0) col("w0") else lead(col("w0"), j).over(byPos)
+
+  /** [[wordRows]] with words 1..`upTo` as columns w1..w`upTo`: one
+    * window feeds every gram size a key stacks in-row (no per-n rescan).
+    */
+  private[queries] def withWords(rows: DataFrame, upTo: Int): DataFrame =
+    (1 to upTo).foldLeft(rows)((df, j) => df.withColumn(s"w$j", word(j)))
+
+  /** The n-word gram that starts at this row's word, null where the doc
+    * runs out of words first. `w` gives word j: the window lead, or
+    * `wordCol` over [[withWords]].
+    */
+  private[queries] def gram(n: Int, w: Int => Column = word): Column =
+    when(w(n - 1).isNotNull, concat_ws(" ", (0 until n).map(w): _*))
+
+  private[queries] val wordCol: Int => Column = j => col(s"w$j")
+
+  /** Oracle side of the kernel: the n-word grams (n ≥ 2) of CTE `w`'s
+    * word list `ws`, one row per (n, `key`, g).
+    */
+  private[queries] def gramsSql(n: Int, key: String): String =
+    s"""SELECT $n AS n, $key,
+       |  unnest([array_to_string(ws[i:i+${n - 1}], ' ')
+       |          for i in range(1, greatest(len(ws) - ${n - 2}, 1))]) AS g
+       |FROM w""".stripMargin
+
+  /** Word n-grams as rows (doc_id, g), distinct per doc by default. */
   private[queries] def gramRows(docsDf: DataFrame, n: Int, distinct: Boolean = true): DataFrame = {
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val parts = col("w0") +: (1 until n).map(j => lead(col("w0"), j).over(w))
     // NOTE (r10, measured): pinning the window's (doc_id) exchange at
     // shuffle.partitions width (so AQE can't coalesce the post-window
     // hash stage to 2-3 tasks) read as a clear win on paper and LOST on
@@ -138,10 +175,9 @@ object TextOps {
     // 4.9 → 6.9 s, corpus_recipe_neardup 3.3 → 4.9 s in a same-session
     // A/B. At these per-partition sizes the extra task/exchange
     // overhead beats the parallelism; left coalesced on purpose.
-    val raw = docsDf
-      .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos", "w0")))
-      .withColumn("g", concat_ws(" ", parts: _*))
-      .withColumn("last", lead(col("w0"), n - 1).over(w))
+    val raw = wordRows(docsDf)
+      .withColumn("g", concat_ws(" ", (0 until n).map(word): _*))
+      .withColumn("last", word(n - 1))
       .filter(col("last").isNotNull)
       .select(col("doc_id"), col("g"))
     if (distinct) raw.dropDuplicates("doc_id", "g") else raw
@@ -153,21 +189,14 @@ object TextOps {
     * fingerprint come out of a single scan + single shuffle (the naive
     * form runs the explode/window/distinct chain once per gram width).
     */
-  private def gramSummaries(docsDf: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    def ld(j: Int) = lead(col("w0"), j).over(w)
-    docsDf
-      .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos", "w0")))
-      .select(
-        col("doc_id"),
-        when(ld(2).isNotNull, concat_ws(" ", col("w0"), ld(1), ld(2))).as("g3"),
-        when(ld(4).isNotNull, concat_ws(" ", col("w0"), ld(1), ld(2), ld(3), ld(4))).as("g5"))
+  private def gramSummaries(docsDf: DataFrame): DataFrame =
+    wordRows(docsDf)
+      .select(col("doc_id"), gram(3).as("g3"), gram(5).as("g5"))
       .groupBy(col("doc_id"))
       .agg(
         collect_set(col("g3")).as("gs"), // distinct 3-grams (order-free consumers only)
         min(md5(col("g5"))).as("fp")) // min over dupes == min over distinct
       .select(col("doc_id"), col("gs"), size(col("gs")).as("n"), col("fp"))
-  }
 
   /** #34 MinHash + LSH near-dup candidates (rows-only oracle).
     * 16 permutations, 4 bands × 4 rows: docs sharing any band hash are
@@ -177,7 +206,7 @@ object TextOps {
     * O(n²) and never m² inside one boilerplate bucket.
     */
   def dedupMinhash(s: SparkSession, dir: String): DataFrame =
-    minhashPairs(docs(s, dir))
+    minhashPairs(Tables.documents(s, dir))
 
   /** The MinHash-LSH core over any (doc_id, text) frame — test entry
     * point for the planted hot-bucket corpus.
@@ -260,7 +289,7 @@ object TextOps {
     // exchange inside gramRows, paying a wide shuffle of raw
     // posexploded words for every consumer; this moves only the final
     // gram rows, only for the md5 twins.
-    val withHashes = gramRows(docs(s, dir), 3, distinct = false)
+    val withHashes = gramRows(Tables.documents(s, dir), 3, distinct = false)
       .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt, col("doc_id"))
       .select(
         col("doc_id") +:
@@ -382,7 +411,7 @@ object TextOps {
   }
 
   def dedupSimhash(s: SparkSession, dir: String): DataFrame =
-    simhashPairs(docs(s, dir))
+    simhashPairs(Tables.documents(s, dir))
 
   /** The SimHash blocking core over any (doc_id, text) frame — test
     * entry point for the planted hot-bucket corpus.
@@ -439,7 +468,7 @@ object TextOps {
     // cores); repartition the narrow distinct words by doc_id so the
     // hash/decode stage runs at shuffle width, co-partitioned with the
     // groupBy below (no extra agg exchange)
-    val words = docs(s, dir)
+    val words = Tables.documents(s, dir)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
       .dropDuplicates("doc_id", "w")
       .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt, col("doc_id"))
@@ -542,7 +571,7 @@ object TextOps {
     * gram-key shuffle, no array crossproducts.
     */
   def ngramJaccard(s: SparkSession, dir: String): DataFrame =
-    jaccardPairs(jaccardSets(docs(s, dir)))
+    jaccardPairs(jaccardSets(Tables.documents(s, dir)))
       .select(col("a"), col("b"), emit(col("jacc"), 4).as("jaccard"))
       .orderBy(col("a"))
 
@@ -551,19 +580,13 @@ object TextOps {
     * the aggregate (set semantics dedup for free; every consumer is
     * order-insensitive: size + array_intersect).
     */
-  private def jaccardSets(docsDf: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    def ld(j: Int) = lead(col("w0"), j).over(w)
-    docsDf
-      .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos", "w0")))
-      .select(
-        col("doc_id"),
-        when(ld(2).isNotNull, concat_ws(" ", col("w0"), ld(1), ld(2))).as("g"))
+  private def jaccardSets(docsDf: DataFrame): DataFrame =
+    wordRows(docsDf)
+      .select(col("doc_id"), gram(3).as("g"))
       .groupBy(col("doc_id"))
       .agg(collect_set(col("g")).as("gs"))
       .select(col("doc_id"), col("gs"), size(col("gs")).as("n"))
       .filter(col("n") > 0)
-  }
 
   /** Consecutive-pair Jaccard from per-doc sets: equi self-join of the
     * 1-row-per-doc summaries on doc_id — the 500k-row gram-key shuffle
@@ -619,7 +642,7 @@ object TextOps {
     // ONE exploded gram pass yields both edge families (the naive form
     // runs the explode/window/distinct chain once for the 5-gram
     // fingerprints and again for the 3-gram jaccard sets)
-    val summaries = graft.Lineage.cut(gramSummaries(docs(s, dir)))
+    val summaries = graft.Lineage.cut(gramSummaries(Tables.documents(s, dir)))
     val fp = summaries.filter(col("fp").isNotNull).select(col("doc_id"), col("fp"))
     val roots = fp.groupBy(col("fp")).agg(min(col("doc_id")).as("root"))
     val star = fp
@@ -636,7 +659,7 @@ object TextOps {
     val sym = graft.Lineage.cut(
       edges.unionByName(edges.select(col("b").as("a"), col("a").as("b"))))
 
-    val labels0 = docs(s, dir).select(col("doc_id"), col("doc_id").as("label"))
+    val labels0 = Tables.documents(s, dir).select(col("doc_id"), col("doc_id").as("label"))
     val labels = (1 to 3).foldLeft(labels0) { (labels, _) =>
       val nbrMin = sym
         .join(labels.select(col("doc_id").as("b"), col("label").as("nl")), "b")
@@ -1076,7 +1099,6 @@ object TextOps {
     * re-deriving all prior rounds.
     */
   def ivfCentroids(emb: DataFrame, k: Int, iters: Int): DataFrame = {
-    val exactAvg = org.apache.spark.sql.types.DecimalType(38, 18)
     var cents = seedCentroids(emb, k)
     for (_ <- 1 to iters) {
       // argmax as a max_by AGGREGATE, not a row_number window: the
@@ -1094,22 +1116,35 @@ object TextOps {
           struct(Registry.cosine(col("e"), col("ce")).as("csim"), negate(col("cent_id")).as("nid")))
           .as("_best"))
         .select(col("_best.cent_id").as("cent_id"), col("_best.e").as("e"))
-      // coalesce(1) between the two aggregates (r11): the (cent, pos)
-      // mean frame is k·dim-bounded, so the array-collect re-group
-      // runs on a SinglePartition child with NO second exchange — one
-      // stage fewer per Lloyd round, and the cut leaf pins
-      // SinglePartition for the next round's broadcast build
-      cents = graft.Lineage.cut(
-        assigned
-          .select(col("cent_id"), posexplode(col("e")).as(Seq("pos", "v")))
-          .groupBy(col("cent_id"), col("pos"))
-          .agg(avg(col("v").cast(exactAvg)).cast("double").as("m"))
-          .coalesce(1)
-          .groupBy(col("cent_id"))
-          .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-          .select(col("cent_id"), transform(col("pm"), x => x.getField("m")).as("ce")))
+      cents = centroidMeans(assigned, Seq("cent_id"), "e", "v", "ce")
     }
     cents
+  }
+
+  /** One Lloyd's centroid update, shared by the IVF and PQ trainers:
+    * each centroid (`keys`) becomes the element-wise mean of its
+    * members' vectors `vec` (posexplode as `elem` → per-(keys, pos)
+    * average through DECIMAL(38,18), order-independent so Lloyd's
+    * cannot diverge by partitioning → re-assemble in pos order as
+    * `out`). coalesce(1) between the two aggregates (r11): the
+    * (keys, pos) mean frame is centroids·dim-bounded, so the
+    * array-collect re-group runs on a SinglePartition child with NO
+    * second exchange — one stage fewer per round — and the next
+    * round broadcasts a one-partition leaf.
+    */
+  private[graft] def centroidMeans(
+      assigned: DataFrame, keys: Seq[String], vec: String, elem: String,
+      out: String): DataFrame = {
+    val exactAvg = org.apache.spark.sql.types.DecimalType(38, 18)
+    graft.Lineage.cut(
+      assigned
+        .select(keys.map(col) :+ posexplode(col(vec)).as(Seq("pos", elem)): _*)
+        .groupBy(keys.map(col) :+ col("pos"): _*)
+        .agg(avg(col(elem).cast(exactAvg)).cast("double").as("m"))
+        .coalesce(1)
+        .groupBy(keys.map(col): _*)
+        .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
+        .select(keys.map(col) :+ transform(col("pm"), x => x.getField("m")).as(out): _*))
   }
 
   /** Per-row top-`keep` centroid assignment (broadcast of k·dim).
@@ -1304,7 +1339,7 @@ object TextOps {
   }
 
   def langId(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir)
+    Tables.documents(s, dir)
       .withColumn("best", bestLang)
       .select(
         col("doc_id"),
@@ -1340,7 +1375,7 @@ object TextOps {
   def corpusPipeline(s: SparkSession, dir: String): DataFrame = {
     val words = split(col("text"), " ")
     val w = Window.partitionBy(col("h")).orderBy(col("doc_id"))
-    docs(s, dir)
+    Tables.documents(s, dir)
       .withColumn("predicted", bestLang.getField("lang"))
       .withColumn("n_words", size(words))
       .filter(
@@ -1386,7 +1421,7 @@ object TextOps {
     */
   def corpusMixReport(s: SparkSession, dir: String): DataFrame = {
     val words = split(col("text"), " ")
-    val per = docs(s, dir)
+    val per = Tables.documents(s, dir)
       .withColumn("n_words", size(words))
       .withColumn(
         "kept",
@@ -1440,7 +1475,7 @@ object TextOps {
     */
   def textQuality(s: SparkSession, dir: String): DataFrame = {
     val words = split(col("text"), " ")
-    docs(s, dir)
+    Tables.documents(s, dir)
       .select(
         col("doc_id"),
         size(words).as("n_words"),
@@ -1467,7 +1502,7 @@ object TextOps {
     * (≤4-char alpha chunks, digits, punctuation singletons).
     */
   def tokenCount(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir)
+    Tables.documents(s, dir)
       .select(
         col("doc_id"),
         col("source"),
@@ -1494,7 +1529,7 @@ object TextOps {
     // distinct folded into the aggregate (count_distinct): the groupBy
     // reuses the gram window's (doc_id) exchange, so the separate
     // (doc_id, g) dedup shuffle of the naive form disappears
-    gramRows(docs(s, dir), 5, distinct = false)
+    gramRows(Tables.documents(s, dir), 5, distinct = false)
       .groupBy(col("doc_id"))
       .agg(min(md5(col("g"))).as("fingerprint"), count_distinct(col("g")).as("n_grams"))
       .orderBy(col("doc_id"))
@@ -1526,7 +1561,7 @@ object TextOps {
     */
   def multimodalStub(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val withPayload = docs(s, dir)
+    val withPayload = Tables.documents(s, dir)
       .select(
         col("doc_id"),
         encode(col("text"), "UTF-8").as("payload"),
@@ -1575,7 +1610,7 @@ object TextOps {
     * decoder must touch.
     */
   def multimodalDecode(s: SparkSession, dir: String): DataFrame =
-    decodeImageMeta(synthImagePayloads(docs(s, dir)))
+    decodeImageMeta(synthImagePayloads(Tables.documents(s, dir)))
       .select(col("doc_id"), col("format"), col("width"), col("height"), col("n_bytes"))
       .orderBy(col("doc_id"))
 
@@ -1700,7 +1735,7 @@ object TextOps {
     * decoder would slot into the test-pinned mapPartitions path.
     */
   def multimodalAudio(s: SparkSession, dir: String): DataFrame =
-    decodeAudioMeta(synthAudioPayloads(docs(s, dir)))
+    decodeAudioMeta(synthAudioPayloads(Tables.documents(s, dir)))
       .select(
         col("doc_id"), col("format"), col("channels"), col("sample_rate"),
         col("bits"), col("data_bytes"), col("duration_ms"))
@@ -1844,7 +1879,7 @@ object TextOps {
     // the distinct gram pass are cheaper than pinning it (4.2 s with
     // re-derivation vs 4.8 s cut at sf0.1); the expensive subtree here
     // is the md5 signature pipeline, already cut above
-    val gd = gramRows(docs(s, dir), 3, distinct = true)
+    val gd = gramRows(Tables.documents(s, dir), 3, distinct = true)
       .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt,
         col("doc_id"), col("g"))
     val sizes = gd.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))

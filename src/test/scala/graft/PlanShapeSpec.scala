@@ -184,6 +184,26 @@ class PlanShapeSpec extends AnyFunSuite {
     }
   }
 
+  test("bounded tails: one-partition cut leaves, no broadcast stage above them") {
+    import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
+    def leafParts(p: SparkPlan) = Plans.collect(p) { case r: RDDScanExec => r.rdd.getNumPartitions }
+    // whatever its input's partitioning, a BoundedTail leaf is one partition
+    val leaf = BoundedTail.leaf(spark.range(0, 64, 1, 8).toDF())
+    assert(leafParts(leaf.queryExecution.executedPlan) == Seq(1))
+    // merge-hinted joins and all-rows windows put no broadcast above a
+    // leaf; embed_pca_power's two output cross joins broadcast their
+    // one-row scalars (the Rayleigh quotient and the trace) on purpose
+    for ((q, scalars) <- Seq("markov_attribution" -> 0, "graph_modularity" -> 0, "embed_pca_power" -> 2)) {
+      val df = SparkEntry.queries(q)(spark, dir)
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      assert(leafParts(plan).contains(1), s"$q has no one-partition cut leaf:\n$plan")
+      val broadcasts = Plans.collect(plan) { case b: BroadcastExchangeLike if leafParts(b).contains(1) => b }
+      assert(broadcasts.size == scalars, s"$q broadcasts ${broadcasts.size} bounded frames:\n$plan")
+    }
+  }
+
   test("each like-graph input scores the graph once: the max reuses the post shuffle") {
     import org.apache.spark.sql.catalyst.plans.Inner
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
