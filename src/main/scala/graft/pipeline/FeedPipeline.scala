@@ -201,16 +201,20 @@ case class UseRelation(relation: DataFrame) extends Block {
   * still a lazy DataFrame → DataFrame function, so the composed plan
   * stays one Catalyst tree.
   */
-case class Compute(f: DataFrame => DataFrame, streamSafe: Boolean = false) extends Block {
+case class Compute(f: DataFrame => DataFrame) extends Block {
   def apply(df: DataFrame): DataFrame = f(df)
 }
 
-object Compute {
-  /** A Compute that is a pure per-row map/filter (no aggregates, joins
-    * or ordering) and therefore runs unchanged on an unbounded stream —
-    * the flag PipelineJson.runStreaming trusts.
-    */
-  def streamSafe(f: DataFrame => DataFrame): Compute = Compute(f, streamSafe = true)
+/** The reference's HN score (main.rs:4338): likes / (age_h + 2)^gravity,
+  * the age in hours against a fixed anchor. The one definition behind
+  * the wire front-end's hn score and sort and the hand-built hn
+  * expressions.
+  */
+object Hn {
+  def apply(likes: Column, ts: Column, nowEpochMs: Long, gravity: Double = 1.8): Column = {
+    val ageH = (lit(nowEpochMs) - unix_millis(ts)).cast("double") / lit(3600000.0)
+    likes / pow(ageH + lit(2.0), lit(gravity))
+  }
 }
 
 /** The reference's user-score function family f0..f5 (main.rs:1548):
@@ -300,6 +304,8 @@ case class ReplaceWith(store: DataFrame, storeIdCol: String, refCol: String, kee
   * evidently intended semantics above rather than bug-compatible
   * emptiness. Parity audits must NOT treat the reference's empty
   * result as the target.
+  * The result carries the store's columns only; PipelineJson.run gives
+  * it score 0.0 once the program has scored.
   */
 case class ReplaceInversion(store: DataFrame, refCol: String, idCol: String) extends Block {
   def apply(df: DataFrame): DataFrame = {

@@ -87,27 +87,57 @@ case class Binding(
 object PipelineJson {
   private val mapper = new ObjectMapper
 
-  def parse(payload: String, b: Binding): Seq[Block] = {
-    val root = mapper.readTree(payload)
-    val blocks = root.path("blocks")
-    require(blocks.isArray, "payload must carry a blocks array")
-    // track whether a score block has run: blocks downstream of scoring
-    // rank by score; before any scoring they rank by recency (the
-    // reference's "current order" is its insertion order — newest-first
-    // recency is the deterministic distributed equivalent). The score
-    // column SURVIVES replace blocks (kept originals retain their
-    // earned score; replaced rows restart at 0 — the reference's
-    // global-map semantics), so the flag never resets.
-    var scored = false
-    blocks.elements().asScala.flatMap { node =>
-      val out = compileBlock(node, b, scored)
-      str(node, "type", "") match {
-        case "score" => scored = true
-        case "input" if str(node, "inputType", "").startsWith("custom_") => scored = true
-        case _ => ()
-      }
-      out
-    }.toSeq
+  /** One block node of a payload, compiled once by [[program]]: `kind`
+    * is the node's type, `op` what the runners need to know about it,
+    * `blocks` its working-set transforms, and `scored` whether a score
+    * block or a custom_* input ran before it. Blocks downstream of
+    * scoring rank by score; before any scoring they rank by recency
+    * (the reference's "current order" is its insertion order —
+    * newest-first recency is the deterministic distributed equivalent).
+    */
+  private final case class Step(kind: String, op: Op, blocks: Seq[Block], scored: Boolean) {
+    def through(df: DataFrame): DataFrame = blocks.foldLeft(df)((d, blk) => blk(d))
+  }
+
+  private sealed trait Op { def scores: Boolean = false }
+
+  private object Op {
+    /** An input: a fresh pull of the base, appended to the working set. */
+    final case class Pull(inputType: String) extends Op
+    /** A custom_* like-graph input: it REPLACES the working set
+      * (posts.clear(), main.rs:1504/1586); likedbylikers is seeded by
+      * the current set, likedweighted reads the base.
+      */
+    final case class Seed(inputType: String) extends Op {
+      override def scores = true
+      def seeded: Boolean = inputType == "custom_likedbylikers"
+    }
+    final case class Stash(key: String) extends Op
+    final case class Pop(key: String) extends Op
+    final case class Subtract(key: String) extends Op
+    /** A per-row filter or map: runs unchanged on a stream. */
+    case object Row extends Op
+    case object Dedup extends Op
+    final case class Score(normalize: Boolean) extends Op { override def scores = true }
+    final case class Sort(sortType: String, desc: Boolean, gravity: Double) extends Op
+    final case class Limit(count: Int) extends Op
+    /** A block over the whole working set (replace, non_duplicates). */
+    case object Whole extends Op
+  }
+
+  /** The one reader of the wire format: each node of the payload's
+    * `blocks` array becomes a Step, compiled by `compile` with the
+    * program's scored flag at that node. A score block and a custom_*
+    * input set the flag, and nothing resets it.
+    */
+  private def program(payload: String)(compile: (JsonNode, Boolean) => (Op, Seq[Block])): Vector[Step] = {
+    val nodes = mapper.readTree(payload).path("blocks")
+    require(nodes.isArray, "payload must carry a blocks array")
+    nodes.elements().asScala.foldLeft(Vector.empty[Step]) { (steps, n) =>
+      val scored = steps.lastOption.exists(s => s.scored || s.op.scores)
+      val (op, blocks) = compile(n, scored)
+      steps :+ Step(str(n, "type", ""), op, blocks, scored)
+    }
   }
 
   /** Full program semantics over a base relation — the reference's
@@ -126,74 +156,53 @@ object PipelineJson {
     * express the cap as an explicit trailing sort + limit block (every
     * real SkyFeed payload ends with one anyway).
     */
-  def run(base: DataFrame, payload: String, b: Binding): DataFrame = {
-    val root = mapper.readTree(payload)
-    val blockNodes = root.path("blocks")
-    require(blockNodes.isArray, "payload must carry a blocks array")
-    var working: Option[DataFrame] = None
-    val stash = scala.collection.mutable.Map[String, DataFrame]()
-    var scored = false
+  def run(base: DataFrame, payload: String, b: Binding): DataFrame =
+    walk(base, program(payload)(compileBlock(_, b, _)), b.idCol)
 
-    // frames on either side of a union may or may not have picked up a
-    // score column yet — align on score=0.0 (the reference's side-map
-    // default) before unioning
-    def aligned(x: DataFrame, y: DataFrame) = {
-      def ensure(df: DataFrame) =
-        if (df.columns.contains("score")) df
-        else df.withColumn("score", lit(0.0))
-      if (x.columns.contains("score") || y.columns.contains("score"))
-        ensure(x).unionByName(ensure(y))
-      else x.unionByName(y)
-    }
-
-    blockNodes.elements().asScala.foreach { node =>
-      str(node, "type", "") match {
-        case "input" if str(node, "inputType", "").startsWith("custom_") =>
-          // the custom like-graph inputs REPLACE the working set
-          // (posts.clear(), main.rs:1504/1586): likedweighted builds it
-          // from the store, likedbylikers is seeded by the current set
+  /** Folds a program over `base`. Once the program has scored, every
+    * frame that enters the working set — a pulled input, a popped
+    * stash, the set emptied by a stash, a replace inversion's store
+    * rows — carries `score`, 0.0 where it has none: the reference's
+    * score map default, and the same approximation ReplaceWith makes
+    * for replaced rows.
+    */
+  private def walk(base: DataFrame, steps: Seq[Step], idCol: String): DataFrame = {
+    val slots = scala.collection.mutable.Map[String, DataFrame]()
+    def slot(key: String) = slots.getOrElse(key, throw new IllegalArgumentException(s"no stash '$key'"))
+    steps.foldLeft(Option.empty[DataFrame]) { (working, s) =>
+      def enter(df: DataFrame) =
+        if (s.scored && !df.columns.contains("score")) df.withColumn("score", lit(0.0)) else df
+      def append(df: DataFrame) = Some(working.fold(enter(df))(_.unionByName(enter(df))))
+      s.op match {
+        case Op.Pull(_) => append(s.through(base))
+        case seed: Op.Seed =>
           val src =
-            if (str(node, "inputType", "") == "custom_likedbylikers")
-              working.getOrElse(throw new IllegalArgumentException(
-                "custom_likedbylikers needs a seeded working set (add an input block before it)"))
-            else base
-          working = Some(compileBlock(node, b, scored).foldLeft(src)((df, blk) => blk(df)))
-          scored = true
-        case "input" =>
-          val pulled = compileBlock(node, b, scored).foldLeft(base)((df, blk) => blk(df))
-          working = Some(working.fold(pulled)(aligned(_, pulled)))
-        case "stash" =>
-          val key = reqStr(node, "key", "stash")
-          str(node, "action", "stash") match {
-            case "stash" =>
-              stash(key) = working.getOrElse(base.limit(0))
-              working = Some(base.limit(0))
-            case "pop" =>
-              val stashed = stash.getOrElse(key, throw new IllegalArgumentException(s"no stash '$key'"))
-              working = Some(working.fold(stashed)(aligned(_, stashed)))
-            case "subtract" =>
-              val stashed = stash.getOrElse(key, throw new IllegalArgumentException(s"no stash '$key'"))
-              working = working.map(SubtractSet(stashed, b.idCol)(_))
-            case other => throw new IllegalArgumentException(s"unknown stash action '$other'")
-          }
-        case t =>
+            if (!seed.seeded) base
+            else working.getOrElse(throw new IllegalArgumentException(
+              s"${seed.inputType} needs a seeded working set (add an input block before it)"))
+          Some(s.through(src))
+        case Op.Stash(key) =>
+          slots(key) = working.getOrElse(base.limit(0))
+          Some(enter(base.limit(0)))
+        case Op.Pop(key) => append(slot(key))
+        case Op.Subtract(key) => working.map(SubtractSet(slot(key), idCol)(_))
+        case _ =>
           val w = working.getOrElse(
             throw new IllegalArgumentException("pipeline must start with an input block"))
-          working = Some(compileBlock(node, b, scored).foldLeft(w)((df, blk) => blk(df)))
-          if (t == "score") scored = true
+          Some(enter(s.through(w)))
       }
-    }
-    working.getOrElse(base.limit(0))
+    }.getOrElse(base.limit(0))
   }
 
   /** Run a wire payload as a CONTINUOUS query — the reference's actual
     * operating mode (it recomputes every feed as the firehose arrives;
-    * main.rs:3143's poll loop IS a streaming pipeline). The stateless
-    * block subset compiles onto an unbounded stream unchanged:
+    * main.rs:3143's poll loop IS a streaming pipeline). The per-row
+    * steps compile onto an unbounded stream unchanged:
     * comparison/regex/where filters, list membership (stream-static
-    * join), un-normalized score adds; the duplicates filter becomes
-    * watermark-bounded ingest dedup (dropDuplicatesWithinWatermark —
-    * the reference's at-ingest duplicates check, main.rs:1916).
+    * join), un-normalized score adds; the duplicates filter (keep or
+    * remove) becomes watermark-bounded ingest dedup
+    * (dropDuplicatesWithinWatermark — the reference's at-ingest
+    * duplicates check, main.rs:1916).
     *
     * The firehose input IS the stream: the payload's time window is
     * enforced by the watermark + downstream state TTL instead of a
@@ -207,65 +216,39 @@ object PipelineJson {
     * function's output.
     */
   def runStreaming(
-      stream: DataFrame, payload: String, b: Binding, lateness: String = "1 hour"): DataFrame = {
-    val root = mapper.readTree(payload)
-    val blockNodes = root.path("blocks")
-    require(blockNodes.isArray, "payload must carry a blocks array")
-    var working: Option[DataFrame] = None
-    var scored = false
+      stream: DataFrame, payload: String, b: Binding, lateness: String = "1 hour"): DataFrame =
+    streamed(stream, program(payload)(compileBlock(_, b, _)), b, lateness)
 
+  private def streamed(stream: DataFrame, steps: Seq[Step], b: Binding, lateness: String): DataFrame = {
     def reject(what: String, hint: String): Nothing =
       throw new IllegalArgumentException(
         s"streaming pipeline cannot run $what — $hint")
-
-    blockNodes.elements().asScala.foreach { node =>
-      str(node, "type", "") match {
-        case "input" =>
-          val it = str(node, "inputType", "firehose")
-          if (it != "firehose")
-            reject(s"input '$it'",
-              "a continuous pipeline takes its one input FROM the stream; " +
-                "other inputs are batch recomputation (PipelineJson.run)")
-          if (working.nonEmpty)
-            reject("a second input block", "a stream has exactly one firehose")
-          working = Some(stream.withWatermark(b.tsCol, lateness))
-        case "remove" if str(node, "subject", "") == "duplicates" =>
-          // the wire duplicates filter compiles to an opaque Compute in
-          // the batch path (score-carrying survivor choice); on a stream
-          // it is first-arrival-wins ingest dedup over the id key
-          val w = working.getOrElse(
-            throw new IllegalArgumentException("pipeline must start with an input block"))
-          working = Some(w.dropDuplicatesWithinWatermark(b.idCol))
-        case t =>
-          val w = working.getOrElse(
-            throw new IllegalArgumentException("pipeline must start with an input block"))
-          val next = compileBlock(node, b, scored).foldLeft(w) { (df, blk) =>
-            blk match {
-              case _: KeepCmp | _: KeepRegex | _: WhereFilter | _: RoundCol => blk(df)
-              case _: KeepInSet => blk(df) // stream-static join
-              case c: Compute if c.streamSafe => c(df) // pure per-row map/filter
-              case s: ScoreAdd =>
-                if (s.normalize)
-                  reject("a normalized score block",
-                    "the global max is unbounded on a stream; normalize at serve " +
-                      "time (Streams.streamingFeed ranks within its bounded state)")
-                blk(df)
-              case d: DedupByKey =>
-                // first-arrival-wins ingest dedup (the streaming form of
-                // the duplicates filter); survivor order is arrival order
-                df.dropDuplicatesWithinWatermark(d.keys.head, d.keys.tail: _*)
-              case other =>
-                reject(s"block ${other.getClass.getSimpleName}",
-                  "sort/limit/stash/replace need a bounded working set — run them " +
-                    "in the batch runner or serve via Streams.streamingFeed state")
-            }
-          }
-          working = Some(next)
-          if (t == "score") scored = true
+    steps.foldLeft(Option.empty[DataFrame]) { (working, s) =>
+      (s.op, working) match {
+        case (Op.Pull("firehose"), None) => Some(stream.withWatermark(b.tsCol, lateness))
+        case (Op.Pull("firehose"), Some(_)) =>
+          reject("a second input block", "a stream has exactly one firehose")
+        case (Op.Pull(it), _) => reject(s"input '$it'", batchInput)
+        case (Op.Seed(it), _) => reject(s"input '$it'", batchInput)
+        case (_, None) => throw new IllegalArgumentException("pipeline must start with an input block")
+        case (Op.Row | Op.Score(false), Some(w)) => Some(s.through(w))
+        // first-arrival-wins ingest dedup over the id key
+        case (Op.Dedup, Some(w)) => Some(w.dropDuplicatesWithinWatermark(b.idCol))
+        case (Op.Score(true), _) =>
+          reject("a normalized score block",
+            "the global max is unbounded on a stream; normalize at serve " +
+              "time (Streams.streamingFeed ranks within its bounded state)")
+        case _ =>
+          reject(s"a ${s.kind} block",
+            "sort/limit/stash/replace need a bounded working set — run them " +
+              "in the batch runner or serve via Streams.streamingFeed state")
       }
-    }
-    working.getOrElse(reject("an empty payload", "add an input block"))
+    }.getOrElse(reject("an empty payload", "add an input block"))
   }
+
+  private val batchInput =
+    "a continuous pipeline takes its one input FROM the stream; " +
+      "other inputs are batch recomputation (PipelineJson.run)"
 
   /** The reference's WHOLE production loop (poll → pipeline → serve,
     * main.rs:3143 + generate_feed_skeleton main.rs:1229) as ONE
@@ -296,45 +279,34 @@ object PipelineJson {
       anchorMs: Long,
       lateness: String = "1 hour"): org.apache.spark.sql.Dataset[graft.streaming.Streams.FeedRow] = {
     import graft.streaming.{Ev, Streams}
-    val root = mapper.readTree(payload)
-    val blockNodes = root.path("blocks")
-    require(blockNodes.isArray, "payload must carry a blocks array")
-    val nodes = blockNodes.elements().asScala.toVector
+    val steps = program(payload)(compileBlock(_, b, _))
     // the serving suffix is the longest trailing run of sort/limit
-    // blocks; everything before it must be streaming-safe (enforced by
-    // runStreaming)
-    val servingTypes = Set("sort", "limit")
-    var cut = nodes.length
-    while (cut > 0 && servingTypes(str(nodes(cut - 1), "type", ""))) cut -= 1
-    val (prefix, suffix) = nodes.splitAt(cut)
+    // steps; everything before it must be streaming-safe (enforced by
+    // the streaming runner)
+    val (prefix, suffix) = steps.splitAt(steps.lastIndexWhere(s => s.kind != "sort" && s.kind != "limit") + 1)
+    val sorts = suffix.filter(_.kind == "sort")
+    val limits = suffix.collect { case Step(_, l: Op.Limit, _, _) => l.count }
     require(
-      suffix.exists(n => str(n, "type", "") == "sort"),
+      sorts.nonEmpty,
       "a serving feed needs a trailing sort block (hn) — for an unranked " +
         "continuous filter use runStreaming directly")
-    val sorts = suffix.filter(n => str(n, "type", "") == "sort")
-    val limits = suffix.filter(n => str(n, "type", "") == "limit")
     require(sorts.size == 1 && limits.size <= 1, "serving suffix allows one sort and one limit")
     // the reference executes blocks SEQUENTIALLY (main.rs:1398): a
     // limit before the sort truncates THEN ranks; compiling it as the
     // top-k state would silently turn that into rank-then-truncate —
     // refuse rather than reorder semantics
     require(
-      limits.isEmpty ||
-        suffix.indexWhere(n => str(n, "type", "") == "sort") <
-        suffix.indexWhere(n => str(n, "type", "") == "limit"),
+      limits.isEmpty || suffix.head.kind == "sort",
       "serving suffix must sort BEFORE limit (the reference's sequential " +
         "block semantics make limit-then-sort truncate-then-rank — run that " +
         "shape in the batch runner)")
-    val sortNode = sorts.head
-    val sortType = str(sortNode, "sortType", "hn")
-    val desc = str(sortNode, "sortDirection", "desc") == "desc"
+    val Op.Sort(sortType, desc, gravity) = sorts.head.op
     // every serveable ranking is per-event-static (Streams.FeedRanking);
     // sort-by-score before any score block degrades to recency, exactly
     // like the batch compiler's `case "score" if !scored`
-    val prefixScored = prefix.exists(n => str(n, "type", "") == "score")
     val ranking = sortType match {
-      case "hn" => Streams.FeedRanking.Hn(anchorMs, sortNode.path("gravity").asText("1.8").toDouble)
-      case "score" if prefixScored => Streams.FeedRanking.ByValue
+      case "hn" => Streams.FeedRanking.Hn(anchorMs, gravity)
+      case "score" if sorts.head.scored => Streams.FeedRanking.ByValue
       case "score" => Streams.FeedRanking.ByRecency(newestFirst = true)
       case "created_at" => Streams.FeedRanking.ByRecency(newestFirst = desc)
       case other =>
@@ -342,13 +314,7 @@ object PipelineJson {
           s"continuous serving ranks by a per-event-static key (hn, score, created_at); " +
             s"sort '$other' reads mutable per-post state or is one-shot — run it in the batch runner")
     }
-    val k = limits.headOption
-      .map(n => if (n.hasNonNull("count")) n.get("count").asInt() else 100)
-      .getOrElse(100)
-    val prefixRoot = mapper.createObjectNode()
-    val arr = prefixRoot.putArray("blocks")
-    prefix.foreach(arr.add)
-    val filtered = runStreaming(stream, mapper.writeValueAsString(prefixRoot), b, lateness)
+    val filtered = streamed(stream, prefix, b, lateness)
     // ByValue serves the accumulated score column the prefix computed;
     // the other rankings derive from ts/value inside the state machine
     val valueCol =
@@ -362,14 +328,15 @@ object PipelineJson {
         col(b.authorCol).cast("long").as("user_id"),
         lit("wire").as("event_type"),
         valueCol.as("value")).as[Ev],
-      k = k, ranking = ranking, lateness = lateness)
+      k = limits.headOption.getOrElse(DefaultLimit), ranking = ranking, lateness = lateness)
   }
 
   /** The reference's SECOND pipeline endpoint: the LIST BUILDER
     * (generate_list_skeleton, main.rs:2678) — the same block wire
-    * format over the PROFILE dimension instead of posts. Inputs
-    * `network` (the whole profile store) and `list` (membership) APPEND
-    * to the working set like post inputs; filters are remove subjects
+    * format over the PROFILE dimension instead of posts, read and
+    * walked like run() with its own block compiler. Inputs `network`
+    * (the whole profile store) and `list` (membership) APPEND to the
+    * working set like post inputs; filters are remove subjects
     * `profile` (avatar/banner flags, main.rs:2758), `list`,
     * `duplicates`, and the regex block over name / handle / description
     * and their unions (main.rs:2778). `sort` is a declared no-op in the
@@ -377,50 +344,38 @@ object PipelineJson {
     * truncates. Same documented divergence as run(): a distributed
     * frame has no insertion order, so deterministic truncation needs an
     * upstream order — the reference's own sort being a no-op means real
-    * payloads never relied on one.
+    * payloads never relied on one. No list block scores, so the walk
+    * never touches a score column.
     */
-  def runListBuilder(profiles: DataFrame, payload: String, b: Binding): DataFrame = {
-    val root = mapper.readTree(payload)
-    val blockNodes = root.path("blocks")
-    require(blockNodes.isArray, "payload must carry a blocks array")
-    var working: Option[DataFrame] = None
-    blockNodes.elements().asScala.foreach { node =>
-      str(node, "type", "") match {
-        case "input" =>
-          val pulled = str(node, "inputType", "network") match {
-            case "network" => profiles
-            case "list" =>
-              val members = boundList(node, b, "list-builder input")
-              KeepInSet(b.idCol, members, members.columns.head, keep = true)(profiles)
-            case other =>
-              throw new IllegalArgumentException(s"unsupported list-builder inputType '$other'")
-          }
-          working = Some(working.fold(pulled)(_.unionByName(pulled)))
-        case _ =>
-          val w = working.getOrElse(
-            throw new IllegalArgumentException("list builder must start with an input block"))
-          working = Some(compileListBlock(node, b).foldLeft(w)((df, blk) => blk(df)))
-      }
-    }
-    working.getOrElse(profiles.limit(0))
-  }
+  def runListBuilder(profiles: DataFrame, payload: String, b: Binding): DataFrame =
+    walk(profiles, program(payload)((n, _) => compileListBlock(n, b)), b.idCol)
 
   /** Regex block compilation shared by BOTH pipeline endpoints (posts
     * and the profile list builder) — only the default target differs.
     */
-  private def compileRegexBlock(n: JsonNode, b: Binding, defaultTarget: String): Seq[Block] = {
+  private def compileRegexBlock(n: JsonNode, b: Binding, defaultTarget: String): (Op, Seq[Block]) = {
     val targets = b.regexTargets.getOrElse(
       str(n, "target", defaultTarget),
       throw new IllegalArgumentException(s"unbound regex target ${str(n, "target", defaultTarget)}"))
-    Seq(KeepRegex(
+    Op.Row -> Seq(KeepRegex(
       targets,
       reqStr(n, "value", "regex"),
       caseSensitive = n.path("caseSensitive").asBoolean(false),
       invert = n.path("invert").asBoolean(false)))
   }
 
-  private def compileListBlock(n: JsonNode, b: Binding): Seq[Block] =
+  private def compileListBlock(n: JsonNode, b: Binding): (Op, Seq[Block]) =
     str(n, "type", "") match {
+      case "input" =>
+        val inputType = str(n, "inputType", "network")
+        Op.Pull(inputType) -> (inputType match {
+          case "network" => Nil
+          case "list" =>
+            val members = boundList(n, b, "list-builder input")
+            Seq(KeepInSet(b.idCol, members, members.columns.head, keep = true))
+          case other =>
+            throw new IllegalArgumentException(s"unsupported list-builder inputType '$other'")
+        })
       case "remove" =>
         str(n, "subject", "profile") match {
           case "profile" =>
@@ -434,12 +389,12 @@ object PipelineJson {
                 throw new IllegalArgumentException(s"unknown profile filter value '$other'")
             }
             val c = resolveField(b, field)
-            Seq(WhereFilter(if (keepWhenTrue) c else !c))
+            Op.Row -> Seq(WhereFilter(if (keepWhenTrue) c else !c))
           case "list" =>
             val members = boundList(n, b, "remove")
-            Seq(KeepInSet(b.idCol, members, members.columns.head, keep = false))
+            Op.Row -> Seq(KeepInSet(b.idCol, members, members.columns.head, keep = false))
           case "duplicates" =>
-            Seq(DedupByKey(Seq(b.idCol), Seq(col(b.idCol))))
+            Op.Dedup -> Seq(DedupByKey(Seq(b.idCol), Seq(col(b.idCol))))
           case other =>
             throw new IllegalArgumentException(s"unsupported list-builder remove subject '$other'")
         }
@@ -448,10 +403,21 @@ object PipelineJson {
         // target to "name" (main.rs:2793)
         compileRegexBlock(n, b, defaultTarget = "name")
       case "limit" =>
-        Seq(LimitN(if (n.hasNonNull("count")) n.get("count").asInt() else 100))
-      case "sort" => Nil // the reference's list-builder sort is a TODO no-op (main.rs:2864)
+        val count = limitCount(n)
+        Op.Limit(count) -> Seq(LimitN(count))
+      case "sort" => Op.Row -> Nil // the reference's list-builder sort is a TODO no-op (main.rs:2864)
       case other => throw new IllegalArgumentException(s"unsupported list-builder block '$other'")
     }
+
+  private val DefaultLimit = 100
+
+  /** A limit block's count; absent, 5 per user for posts_per_user and
+    * 100 otherwise, the same in every runner.
+    */
+  private def limitCount(n: JsonNode): Int =
+    if (n.hasNonNull("count")) n.get("count").asInt()
+    else if (str(n, "limitType", "default") == "posts_per_user") 5
+    else DefaultLimit
 
   private def str(n: JsonNode, field: String, dflt: String): String =
     if (n.hasNonNull(field)) n.get(field).asText() else dflt
@@ -485,28 +451,24 @@ object PipelineJson {
   private def resolveField(b: Binding, name: String): Column =
     b.fieldCols.getOrElse(name, if (name == "like_count") col(b.valueCol) else col(name))
 
-  /** The reference's HN score (main.rs:4338): likes / (age_h + 2)^gravity
-    * against the deterministic anchor. Reads like_count through the
-    * same field resolution as the count filters, so a Binding that maps
-    * like_count explicitly gets consistent semantics everywhere.
+  /** The reference's HN score against the binding's anchor, reading
+    * like_count through the same field resolution as the count
+    * filters, so a Binding that maps like_count explicitly gets
+    * consistent semantics everywhere.
     */
-  private def hnExpr(b: Binding, gravity: Double): Column = {
-    val ageH = (lit(b.nowEpochMs) - unix_millis(col(b.tsCol))).cast("double") / lit(3600000.0)
-    resolveField(b, "like_count") / pow(ageH + lit(2.0), lit(gravity))
-  }
+  private def hnExpr(b: Binding, gravity: Double): Column =
+    Hn(resolveField(b, "like_count"), col(b.tsCol), b.nowEpochMs, gravity)
 
   /** `where` script filter. The reference pushes the RUNNING SCORE into
     * the script scope as a constant (main.rs:1969), defaulting to 0 for
-    * unscored posts — so `score` resolves to the score column when the
-    * working frame has one and to literal 0.0 before any score block.
-    * Resolved lazily (Compute) because only the frame itself knows.
+    * unscored posts — so `score` resolves to the score column once the
+    * program has scored and to literal 0.0 before any score block.
     * A user-bound `score` field in whereFields wins over the built-in.
     */
-  private def whereBlock(script: String, b: Binding, invert: Boolean): Block = Compute.streamSafe { df =>
-    val scoreCol = if (df.columns.contains("score")) col("score") else lit(0.0)
-    val fields = Map("score" -> scoreCol) ++ b.whereFields
+  private def whereBlock(script: String, b: Binding, scored: Boolean, invert: Boolean): Block = {
+    val fields = Map("score" -> (if (scored) col("score") else lit(0.0))) ++ b.whereFields
     val pred = WhereDsl.compile(script, fields, b.whereArrayFields)
-    df.filter(if (invert) !pred else pred)
+    WhereFilter(if (invert) !pred else pred)
   }
 
   /** Case-insensitive membership over a bound array column: the
@@ -591,10 +553,11 @@ object PipelineJson {
       target,
       throw new IllegalArgumentException(s"unbound replace ref '$target' (add it to Binding.refCols)"))
 
-  private def compileBlock(n: JsonNode, b: Binding, scored: Boolean = true): Seq[Block] = {
+  private def compileBlock(n: JsonNode, b: Binding, scored: Boolean): (Op, Seq[Block]) = {
     str(n, "type", "") match {
       case "input" =>
-        str(n, "inputType", "firehose") match {
+        val inputType = str(n, "inputType", "firehose")
+        (if (inputType.startsWith("custom_")) Op.Seed(inputType) else Op.Pull(inputType)) -> (inputType match {
           case "firehose" =>
             val secs = if (n.hasNonNull("firehoseSeconds")) n.get("firehoseSeconds").asLong() else 86400L
             Seq(InputWindow(b.tsCol, b.nowEpochMs, secs))
@@ -638,7 +601,7 @@ object PipelineJson {
             Seq(WhereFilter(col(b.idCol).isin(ids: _*)))
           case "archived" =>
             // archive store pull (main.rs:1792): swap in the bound
-            // archive relation; run() unions it with the other branches
+            // archive relation; the walk unions it with the other branches
             UseRelation(b.archive.getOrElse(
               throw new IllegalArgumentException("archived input needs Binding.archive"))) +:
               histWindow(n, b)
@@ -719,11 +682,16 @@ object PipelineJson {
                   "concern; resolve it to a post-id relation in Binding.feeds"))
             Seq(KeepInSet(b.idCol, skeleton, skeleton.columns.head, keep = true))
           case other => throw new IllegalArgumentException(s"unsupported inputType $other")
-        }
+        })
 
       case t @ ("keep" | "remove") =>
-        str(n, "subject", "") match {
-          case subject @ ("like_count" | "reply_count" | "repost_count") =>
+        val subject = str(n, "subject", "")
+        (subject match {
+          case "duplicates" => Op.Dedup
+          case "non_duplicates" => Op.Whole
+          case _ => Op.Row
+        }) -> (subject match {
+          case "like_count" | "reply_count" | "repost_count" =>
             // reference semantics (main.rs:1831-1884): the operator
             // names the rows to REMOVE — `<  v` retains count >= v —
             // and keep/remove dispatch identically for count subjects
@@ -767,20 +735,17 @@ object PipelineJson {
             Seq(KeepInSet(b.authorCol, members, members.columns.head, keep = t == "keep"))
 
           case "duplicates" =>
-            // one row per key survives (main.rs:1916). In the reference
-            // the survivor's identity is irrelevant (scores live in a
-            // global map keyed by id); here the score rides on the row,
-            // and same-id rows from different input branches can differ
-            // in it (aligned() zero-fills unscored branches) — keep the
+            // one row per key survives (main.rs:1916), for keep and
+            // remove alike. In the reference the survivor's identity is
+            // irrelevant (scores live in a global map keyed by id); here
+            // the score rides on the row, and same-id rows from
+            // different input branches can differ in it (a branch
+            // pulled after scoring enters at 0.0) — keep the
             // highest-scored variant, deterministically, so the score a
             // later sort reads matches the map's accumulated value
-            Seq(Compute { df =>
-              val order =
-                if (df.columns.contains("score"))
-                  Seq(col("score").desc_nulls_last, col(b.idCol))
-                else Seq(col(b.idCol))
-              DedupByKey(Seq(b.idCol), order)(df)
-            })
+            val order =
+              if (scored) Seq(col("score").desc_nulls_last, col(b.idCol)) else Seq(col(b.idCol))
+            Seq(DedupByKey(Seq(b.idCol), order))
 
           case "non_duplicates" =>
             Seq(KeepDupes(Seq(b.idCol), Seq(col(b.idCol))))
@@ -830,9 +795,9 @@ object PipelineJson {
           case "where" =>
             // Rhai `where` as a keep/remove subject (main.rs:1952):
             // remove inverts the compiled predicate
-            Seq(whereBlock(reqStr(n, "value", t), b, invert = t == "remove"))
+            Seq(whereBlock(reqStr(n, "value", t), b, scored, invert = t == "remove"))
 
-          case subject =>
+          case _ =>
             // engine extension: generic column compare for subjects the
             // reference doesn't name — keep retains matches, remove the
             // complement (our DSL semantics, not reference-specified)
@@ -851,14 +816,14 @@ object PipelineJson {
               case other => throw new IllegalArgumentException(s"unknown operator '$other' in $t block")
             }
             Seq(KeepCmp(subject, effOp, value))
-        }
+        })
 
       case "where" =>
         // standalone where block (alias of the keep/subject=where form)
-        Seq(whereBlock(reqStr(n, "value", "where"), b, invert = false))
+        Op.Row -> Seq(whereBlock(reqStr(n, "value", "where"), b, scored, invert = false))
 
       case "remember_posts" =>
-        Nil // a declared no-op in the reference (main.rs:2384)
+        Op.Row -> Nil // a declared no-op in the reference (main.rs:2384)
 
       case "regex" =>
         compileRegexBlock(n, b, defaultTarget = "text")
@@ -883,12 +848,13 @@ object PipelineJson {
         val multiplier = str(n, "scoreNormalizationMultiplier", "1.0").toDouble
         // rounding after each score block keeps later rankings bit-stable
         // across engines (same policy as the hand-built pipelines)
-        Seq(ScoreAdd(expr, normalize, multiplier), RoundCol("score", b.scoreRoundScale))
+        Op.Score(normalize) -> Seq(ScoreAdd(expr, normalize, multiplier), RoundCol("score", b.scoreRoundScale))
 
       case "sort" =>
-        val desc = str(n, "sortDirection", "desc") == "desc"
-        def dir(c: Column) = if (desc) c.desc else c.asc
-        val keys = str(n, "sortType", "score") match {
+        val sort = Op.Sort(
+          str(n, "sortType", "score"), str(n, "sortDirection", "desc") == "desc", str(n, "gravity", "1.8").toDouble)
+        def dir(c: Column) = if (sort.desc) c.desc else c.asc
+        val keys = sort.sortType match {
           // sort-by-score before any score block: every score is an
           // implicit 0 in the reference — order degrades to recency
           case "score" if !scored => Seq(col(b.tsCol).desc, col(b.idCol))
@@ -900,7 +866,7 @@ object PipelineJson {
             // sort-time HN score (main.rs:2246): ranked on the rounded
             // value so double `pow` ulp drift can't flip ranks vs the
             // oracle; id tie-break for determinism
-            Seq(dir(round(hnExpr(b, str(n, "gravity", "1.8").toDouble), b.scoreRoundScale)), col(b.idCol))
+            Seq(dir(round(hnExpr(b, sort.gravity), b.scoreRoundScale)), col(b.idCol))
           case "random" =>
             // the reference shuffles with a thread RNG (main.rs:2283);
             // the reproducible distributed equivalent orders by a keyed
@@ -908,21 +874,21 @@ object PipelineJson {
             Seq(md5(concat(col(b.idCol).cast("string"), lit("#" + str(n, "seed", "42")))).asc, col(b.idCol))
           case other => throw new IllegalArgumentException(s"unsupported sortType $other")
         }
-        Seq(SortBy(keys))
+        sort -> Seq(SortBy(keys))
 
       case "limit" =>
-        if (str(n, "limitType", "default") == "posts_per_user") {
-          val cnt = if (n.hasNonNull("count")) n.get("count").asInt() else 5
+        val count = limitCount(n)
+        Op.Limit(count) -> (if (str(n, "limitType", "default") == "posts_per_user") {
           // rank by score once scoring has happened; before that, by
           // recency (no score column exists yet — referencing it would
           // fail on a valid program)
           val order =
             if (scored) Seq(col("score").desc, col(b.idCol))
             else Seq(col(b.tsCol).desc, col(b.idCol))
-          Seq(LimitPerKey(b.authorCol, cnt, order))
+          Seq(LimitPerKey(b.authorCol, count, order))
         } else {
-          Seq(LimitN(if (n.hasNonNull("count")) n.get("count").asInt() else 100))
-        }
+          Seq(LimitN(count))
+        })
 
       case "replace" =>
         // (main.rs:2386-2508): lookups swap each row for the store row
@@ -930,7 +896,7 @@ object PipelineJson {
         // store rows pointing INTO it
         val target = str(n, "with", "parent")
         val keepMissing = n.path("keepItemsWithMissingTarget").asBoolean(true)
-        target match {
+        Op.Whole -> (target match {
           case "parent" | "root" | "record" =>
             Seq(ReplaceWith(boundStore(b), b.idCol, boundRef(b, target), keepMissing))
           case "direct_replies" =>
@@ -940,7 +906,16 @@ object PipelineJson {
           case "quote_posts" =>
             Seq(ReplaceInversion(boundStore(b), boundRef(b, "record"), b.idCol))
           case other => throw new IllegalArgumentException(s"unknown replace target '$other'")
-        }
+        })
+
+      case "stash" =>
+        val key = reqStr(n, "key", "stash")
+        (str(n, "action", "stash") match {
+          case "stash" => Op.Stash(key)
+          case "pop" => Op.Pop(key)
+          case "subtract" => Op.Subtract(key)
+          case other => throw new IllegalArgumentException(s"unknown stash action '$other'")
+        }) -> Nil
 
       case other => throw new IllegalArgumentException(s"unsupported block type $other")
     }

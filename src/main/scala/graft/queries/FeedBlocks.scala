@@ -23,12 +23,6 @@ object FeedBlocks {
     */
   val NowMs: Long = java.time.Instant.parse("2024-01-31T00:00:00Z").toEpochMilli
 
-  /** Age in hours against the fixed anchor — the HN-score denominator
-    * input, shared by every hand-built hn expression (the wire
-    * front-end has its own Binding-resolved copy in PipelineJson).
-    */
-  private def ageHours: Column = (lit(NowMs) - epochMs(col("ts"))).cast("double") / lit(3600000.0)
-
   /** #1 firehose window: last 7 days before the anchor. The predicate
     * lands in PushedFilters; on a date-partitioned lake it prunes
     * partitions instead of scanning.
@@ -217,7 +211,7 @@ object FeedBlocks {
     */
   def scoreHn(s: SparkSession, dir: String): DataFrame = {
     Tables.events(s, dir)
-      .withColumn("score", col("value") / pow(ageHours + lit(2.0), lit(1.8)))
+      .withColumn("score", Hn(col("value"), col("ts"), NowMs))
       .select(col("event_id"), emit(col("score"), 6).as("score"))
       .orderBy(col("score").desc, col("event_id"))
       .limit(100)
@@ -705,7 +699,6 @@ object FeedBlocks {
     * three filters into the scan.
     */
   def feedPipeline(s: SparkSession, dir: String): DataFrame = {
-    val ageH = ageHours
     val wherePred = WhereDsl.compile(
       """value > 20 && eventType != "error"""",
       Map("value" -> col("value"), "eventType" -> col("event_type")))
@@ -716,7 +709,7 @@ object FeedBlocks {
           InputWindow("ts", NowMs, 14L * 86400),
           KeepCmp("event_type", "!=", lit("click")),
           WhereFilter(wherePred),
-          ScoreAdd(col("value") / pow(ageH + lit(2.0), lit(1.8)), normalize = true),
+          ScoreAdd(Hn(col("value"), col("ts"), NowMs), normalize = true),
           // rank on the rounded score: double `pow` may differ by 1 ulp
           // across engines — 6-dp rounding + id tie-break keeps ranking
           // bit-stable between Spark and the oracle
@@ -749,8 +742,8 @@ object FeedBlocks {
        |ORDER BY score DESC, event_id LIMIT 100""".stripMargin
 
   /** #20b the SAME pipeline as #20, but arriving as the reference's JSON
-    * wire payload (PipelineJson). Shares #20's oracle: the JSON front-end
-    * must compile to a semantically identical plan.
+    * wire payload (PipelineJson.run). Shares #20's oracle: the JSON
+    * front-end must compile to a semantically identical plan.
     */
   def feedPipelineJson(s: SparkSession, dir: String): DataFrame = {
     val payload =
@@ -771,8 +764,8 @@ object FeedBlocks {
       nowEpochMs = NowMs,
       regexTargets = Map("text" -> Seq("event_type")),
       whereFields = Map("value" -> col("value"), "eventType" -> col("event_type")))
-    FeedPipeline
-      .compile(Tables.events(s, dir), PipelineJson.parse(payload, binding))
+    PipelineJson
+      .run(Tables.events(s, dir), payload, binding)
       .select(col("event_id"), col("user_id"), col("score").cast("double").as("score"))
   }
 
@@ -1008,13 +1001,12 @@ object FeedBlocks {
         |  {"type":"sort","sortType":"hn","gravity":"1.8","sortDirection":"desc"},
         |  {"type":"limit","count":100}
         |]}""".stripMargin
-    val ageH = ageHours
     PipelineJson
       .run(eventsStore(s, dir), payload, wireBinding(s, dir))
       .select(
         col("event_id"),
         col("user_id"),
-        round(col("value") / pow(ageH + lit(2.0), lit(1.8)), 6).cast("double").as("hn_score"))
+        round(Hn(col("value"), col("ts"), NowMs), 6).cast("double").as("hn_score"))
   }
 
   val feedPipelineWireSql: String =

@@ -932,12 +932,12 @@ class QueryCatalogSpec extends AnyFunSuite {
     import graft.pipeline.{Binding, PipelineJson}
     import org.apache.spark.sql.functions.col
     val b = Binding("id", "author", "ts", "value", 0L, Map.empty, Map.empty)
-    intercept[IllegalArgumentException](PipelineJson.parse(
-      """{"blocks":[{"type":"keep","subject":"x","operator":"=="}]}""", b))
-    intercept[IllegalArgumentException](PipelineJson.parse(
-      """{"blocks":[{"type":"remove","subject":"x","operator":"~","value":1}]}""", b))
-    intercept[IllegalArgumentException](PipelineJson.parse(
-      """{"blocks":[{"type":"warp"}]}""", b))
+    // each payload starts with an input, so the error is the bad block's
+    def run(block: String) = PipelineJson.run(
+      Tables.events(spark, dir), s"""{"blocks":[{"type":"input","inputType":"firehose"},$block]}""", b)
+    intercept[IllegalArgumentException](run("""{"type":"keep","subject":"x","operator":"=="}"""))
+    intercept[IllegalArgumentException](run("""{"type":"remove","subject":"x","operator":"~","value":1}"""))
+    intercept[IllegalArgumentException](run("""{"type":"warp"}"""))
     intercept[IllegalArgumentException](PipelineJson.run(
       Tables.events(spark, dir),
       """{"blocks":[{"type":"stash","action":"pop","key":"never_stashed"}]}""",

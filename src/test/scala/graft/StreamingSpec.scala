@@ -431,6 +431,26 @@ class StreamingSpec extends AnyFunSuite {
     assert(err.getMessage.contains("streamingFeed"))
   }
 
+  test("streaming duplicates: keep and remove both dedup on the stream, like the batch runner") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import graft.pipeline.{Binding, PipelineJson}
+    val b = Binding("event_id", "user_id", "ts", "value", 0L, Map.empty, Map.empty)
+    for (verb <- Seq("keep", "remove")) {
+      val in = MemoryStream[Ev]
+      val q = PipelineJson
+        .runStreaming(
+          in.toDF(),
+          s"""{"blocks":[{"type":"input","inputType":"firehose"},{"type":"$verb","subject":"duplicates"}]}""",
+          b)
+        .writeStream.format("memory").queryName(s"wiredup_$verb").start()
+      in.addData(ev(1, 0, 1, "view", 5.0), ev(1, 0, 1, "view", 5.0), ev(2, 1, 1, "view", 1.0))
+      q.processAllAvailable(); q.stop()
+      val ids = spark.table(s"wiredup_$verb").collect().map(_.getAs[Long]("event_id")).sorted.toSeq
+      assert(ids == Seq(1L, 2L), s"$verb duplicates: $ids")
+    }
+  }
+
   test("likes-graph upsert feed emits each (post, liker) edge exactly once") {
     // the liker SET lives in this deduped edge stream (append it to a
     // sink keyed by (post, user) and you have the distributed bitmap),
@@ -775,6 +795,32 @@ class StreamingSpec extends AnyFunSuite {
         |]}""".stripMargin,
       b, anchor))
     assert(e.getMessage.contains("sort BEFORE limit"), e.getMessage)
+  }
+
+  test("wire serving: a posts_per_user limit without a count keeps 5 per user, as in batch") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import graft.pipeline.{Binding, PipelineJson}
+    val anchor = java.sql.Timestamp.valueOf("2024-01-01 12:00:00").getTime
+    val b = Binding("event_id", "user_id", "ts", "value", 0L, Map.empty, Map.empty)
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_serve_per_user").toString
+    val in = MemoryStream[Ev]
+    val q = PipelineJson
+      .runServingFeed(
+        in.toDF(),
+        """{"blocks":[
+          |  {"type":"input","inputType":"firehose"},
+          |  {"type":"sort","sortType":"created_at","sortDirection":"desc"},
+          |  {"type":"limit","limitType":"posts_per_user"}
+          |]}""".stripMargin,
+        b, anchorMs = anchor)
+      .writeStream.outputMode(org.apache.spark.sql.streaming.OutputMode.Update)
+      .option("checkpointLocation", ckpt)
+      .format("memory").queryName("serve_per_user").start()
+    in.addData((1 to 7).map(i => ev(i, i, 5, "view", 1.0)): _*)
+    q.processAllAvailable(); q.stop()
+    val served = Streams.readFeedState(spark, ckpt).collect().filter(_.user_id == 5L).sortBy(_.rank)
+    assert(served.map(_.event_id).toSeq == Seq(7L, 6L, 5L, 4L, 3L), s"served feed wrong: ${served.toSeq}")
   }
 
   test("stream-static enrichment joins the profile dimension per batch") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.pipeline.{Binding, FeedPipeline, PipelineJson}
+import graft.pipeline.{Binding, PipelineJson}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -82,12 +82,21 @@ class WireSurfaceSpec extends AnyFunSuite {
     archive = Some(store.filter(col("id") === 5L)),
     lists = Map("at://lists/team" -> memberList))
 
-  private def runWire(blocksJson: String): Seq[Long] = {
-    val df = FeedPipeline.compile(
-      store,
-      PipelineJson.parse(s"""{"blocks":[$blocksJson]}""", binding))
-    df.select(col("id")).collect().map(_.getLong(0)).toSeq
-  }
+  /** The ids a payload of `blocksJson` yields over `base`, in order. */
+  private def runPayload(blocksJson: String, base: DataFrame = store): Seq[Long] =
+    PipelineJson.run(base, s"""{"blocks":[$blocksJson]}""", binding)
+      .select(col("id")).collect().map(_.getLong(0)).toSeq
+
+  /** `blocksJson` run over all of `base`: a firehose input first (every
+    * fixture post is younger than its one-day window).
+    */
+  private def runWire(blocksJson: String, base: DataFrame = store): Seq[Long] =
+    runPayload(s"""{"type":"input","inputType":"firehose"},$blocksJson""", base)
+
+  private def runScores(blocksJson: String): Seq[(Long, Double)] =
+    PipelineJson.run(store, s"""{"blocks":[$blocksJson]}""", binding)
+      .select(col("id"), col("score")).collect()
+      .map(r => (r.getLong(0), r.getDouble(1))).toSeq
 
   test("count filters use reference remove-complement semantics for keep AND remove") {
     // remove like_count < 30 → retain likes >= 30 (main.rs:1867-1884)
@@ -145,13 +154,13 @@ class WireSurfaceSpec extends AnyFunSuite {
   }
 
   test("did input narrows to one author; post input is a point lookup") {
-    assert(runWire("""{"type":"input","inputType":"did","did":11}""").sorted == Seq(3L, 4L))
-    assert(runWire("""{"type":"input","inputType":"post","postUri":[2,5]}""").sorted == Seq(2L, 5L))
+    assert(runPayload("""{"type":"input","inputType":"did","did":11}""").sorted == Seq(3L, 4L))
+    assert(runPayload("""{"type":"input","inputType":"post","postUri":[2,5]}""").sorted == Seq(2L, 5L))
   }
 
   test("tags input matches any tag, case-folded both sides like the reference index") {
     // post 2's tag is stored as "Scala" — the fold must hit it anyway
-    assert(runWire("""{"type":"input","inputType":"tags","tags":["SQL","scala"]}""").sorted
+    assert(runPayload("""{"type":"input","inputType":"tags","tags":["SQL","scala"]}""").sorted
       == Seq(2L, 4L))
   }
 
@@ -204,15 +213,15 @@ class WireSurfaceSpec extends AnyFunSuite {
     // empty vec by `posts = new_posts;` (main.rs:2490) — a documented
     // deliberate divergence (see ReplaceInversion's scaladoc)
     // working set {1} → children whose parent=1: {3}
-    assert(runWire(
+    assert(runPayload(
       """{"type":"input","inputType":"post","postUri":[1]},
         |{"type":"replace","with":"direct_replies"}""".stripMargin).sorted == Seq(3L))
     // all_replies walks the root ref: {3, 4}
-    assert(runWire(
+    assert(runPayload(
       """{"type":"input","inputType":"post","postUri":[1]},
         |{"type":"replace","with":"all_replies"}""".stripMargin).sorted == Seq(3L, 4L))
     // quote_posts: who quoted 1 → {5}
-    assert(runWire(
+    assert(runPayload(
       """{"type":"input","inputType":"post","postUri":[1]},
         |{"type":"replace","with":"quote_posts"}""".stripMargin).sorted == Seq(5L))
   }
@@ -244,6 +253,29 @@ class WireSurfaceSpec extends AnyFunSuite {
     assert(rows.map(_._1).sorted == Seq(1L, 1L, 3L))
   }
 
+  test("a replace inversion after scoring enters the working set at score 0") {
+    // direct replies of posts 1-5 are 3 (parent 1) and 4 (parent 3):
+    // store rows that never earned score in this program
+    assert(runScores(
+      """{"type":"input","inputType":"firehose"},
+        |{"type":"score","scoreType":"add","from":"like_count","normalize":false},
+        |{"type":"replace","with":"direct_replies"},
+        |{"type":"sort","sortType":"score","sortDirection":"desc"}""".stripMargin)
+      == Seq(3L -> 0.0, 4L -> 0.0))
+  }
+
+  test("a stash after scoring leaves a working set that still carries score") {
+    // the scored posts move to slot a; the posts pulled after it are
+    // unscored, so they rank at 0 with the id tie-break
+    assert(runScores(
+      """{"type":"input","inputType":"firehose"},
+        |{"type":"score","scoreType":"add","from":"like_count","normalize":false},
+        |{"type":"stash","action":"stash","key":"a"},
+        |{"type":"input","inputType":"post","postUri":[5,2]},
+        |{"type":"sort","sortType":"score","sortDirection":"desc"}""".stripMargin)
+      == Seq(2L -> 0.0, 5L -> 0.0))
+  }
+
   test("duplicates filter keeps the highest-scored variant deterministically") {
     val out = PipelineJson.run(
       store,
@@ -265,9 +297,7 @@ class WireSurfaceSpec extends AnyFunSuite {
     val nulled = store.withColumn(
       "labels",
       when(col("id") === 1L, lit(null).cast("array<string>")).otherwise(col("labels")))
-    def run(blocks: String): Seq[Long] =
-      FeedPipeline.compile(nulled, PipelineJson.parse(s"""{"blocks":[$blocks]}""", binding))
-        .select(col("id")).collect().map(_.getLong(0)).toSeq.sorted
+    def run(blocks: String): Seq[Long] = runWire(blocks, nulled).sorted
     // unlabeled post 1 must survive a labels-remove...
     assert(run("""{"type":"remove","subject":"labels","labels":["nsfw","spoiler"]}""")
       == Seq(1L, 3L, 5L))
@@ -277,14 +307,8 @@ class WireSurfaceSpec extends AnyFunSuite {
   }
 
   test("non_duplicates keeps only re-seen keys") {
-    val s = spark
-    import s.implicits._
     val doubled = store.unionByName(store.filter(col("id") === 2L))
-    val ids = FeedPipeline
-      .compile(doubled, PipelineJson.parse(
-        """{"blocks":[{"type":"remove","subject":"non_duplicates"}]}""", binding))
-      .select(col("id")).as[Long].collect().toSeq
-    assert(ids == Seq(2L))
+    assert(runWire("""{"type":"remove","subject":"non_duplicates"}""", doubled) == Seq(2L))
   }
 
   test("where scripts: Rhai string methods compile to native predicates") {
