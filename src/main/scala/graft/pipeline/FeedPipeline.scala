@@ -273,7 +273,7 @@ case class ReplaceWith(store: DataFrame, storeIdCol: String, refCol: String, kee
     // alias every store column: the working frame carries the same
     // column names (it IS store-shaped), so the join output would
     // otherwise be ambiguous
-    val s2 = store.select(store.columns.map(c => col(c).as(s"__s_$c")): _*)
+    val s2 = store.select(store.columns.toSeq.map(c => col(c).as(s"__s_$c")): _*)
     val sid = col(s"__s_$storeIdCol")
     val joined = df.join(s2, col(refCol) === sid, "left")
     val kept =

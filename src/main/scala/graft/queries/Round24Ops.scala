@@ -42,7 +42,7 @@ object Round24Ops {
   def binarySegmentation(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir).select(to_date(col("ts")).as("d"))
     val span = ev.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
-    val calendar = broadcast(span)
+    val calendar = span
       .select(explode(expr("sequence(lo, hi)")).as("d"))
     val daily = ev.groupBy(col("d")).agg(count(lit(1)).as("c"))
     val dense = graft.Lineage.cut(calendar.join(daily, Seq("d"), "left")

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persisted inverted index for BM25 retrieval: the build-once /
@@ -53,11 +53,7 @@ object InvertedIndex {
   /** One pass over (doc_id, text): per-doc token counts joined with
     * the per-row doc length, hashed into bucket partitions.
     */
-  def build(docs: DataFrame, outDir: String): Unit = {
-    Postings.conform(postingRows(docs)).repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"$outDir/postings")
-    Stats.conform(statsRow(docs)).write.mode("overwrite").parquet(s"$outDir/stats")
-  }
+  def build(docs: DataFrame, outDir: String): Unit = write(docs, outDir, SaveMode.Overwrite)
 
   /** Fold a NEW batch of docs into an existing index: postings rows
     * append into their bucket partitions, corpus stats append as a
@@ -69,10 +65,12 @@ object InvertedIndex {
     * guarantee). Caller contract: a batch is appended once (pair with
     * the hash-index intake for exactly-once ingestion).
     */
-  def append(docs: DataFrame, indexDir: String): Unit = {
+  def append(docs: DataFrame, indexDir: String): Unit = write(docs, indexDir, SaveMode.Append)
+
+  private def write(docs: DataFrame, indexDir: String, mode: SaveMode): Unit = {
     Postings.conform(postingRows(docs)).repartition(col("bucket"))
-      .write.mode("append").partitionBy("bucket").parquet(s"$indexDir/postings")
-    Stats.conform(statsRow(docs)).write.mode("append").parquet(s"$indexDir/stats")
+      .write.mode(mode).partitionBy("bucket").parquet(s"$indexDir/postings")
+    Stats.conform(statsRow(docs)).write.mode(mode).parquet(s"$indexDir/stats")
   }
 
   def postings(s: SparkSession, indexDir: String): DataFrame =

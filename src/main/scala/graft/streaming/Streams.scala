@@ -1,6 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -98,11 +100,73 @@ object Streams {
     * posts (and their likes/index entries) older than 7 days
     * (clean_up_old_posts, main.rs:4008; clean_memory, main.rs:1101);
     * the streaming analogue is an event-time timeout on every keyed
-    * state: a key with no activity for this long is dropped, so state
-    * cardinality is bounded by the active-key set, not the all-time
-    * key space.
+    * state machine ([[keyed]]): a key times out at the newest event
+    * time seen for it plus 7 days, never below watermark + 1, and is
+    * dropped once the watermark passes that. State cardinality is
+    * bounded by the active-key set, not the all-time key space.
     */
   val RetentionMs: Long = 7L * 24 * 60 * 60 * 1000
+
+  /** A keyed machine's own state and the newest event time ever seen
+    * for its key. Retention counts from `last_ms`, so a late event
+    * (older than one an earlier batch brought) cannot pull the
+    * timeout back.
+    */
+  private[streaming] case class Kept[S](state: S, last_ms: Long)
+
+  /** The one keyed state machine every retention-bound stream runs on.
+    * It watermarks `tsCol` unless an upstream already did (a
+    * payload-compiled prefix or a dedup stage; Spark disallows
+    * redefining it), groups by `key`, and owns the [[RetentionMs]]
+    * policy: a key reaching its timeout leaves state through `expire`.
+    *
+    * `step` folds one micro-batch of a key's rows into its state and
+    * returns the new state with the rows to emit. It must use all the
+    * rows before it returns: the device reads each row's event time as
+    * it passes. The rows stay an iterator, so a hot key (100k likers)
+    * folds in O(1) memory.
+    */
+  private def keyed[T, K: Encoder, S: TypeTag, U: Encoder](
+      ds: Dataset[T], tsCol: String, lateness: String, mode: OutputMode)(
+      key: T => K, ts: T => Long)(
+      step: (K, Iterator[T], Option[S]) => (Option[S], Iterator[U]),
+      expire: (K, S) => Iterator[U] = (_: K, _: S) => Iterator.empty): Dataset[U] = {
+    implicit val kept: Encoder[Kept[S]] = Encoders.product[Kept[S]]
+    val watermarked =
+      if (ds.schema(tsCol).metadata.contains("spark.watermarkDelayMs")) ds
+      else ds.withWatermark(tsCol, lateness)
+    watermarked
+      .groupByKey(key)
+      .flatMapGroupsWithState[Kept[S], U](mode, GroupStateTimeout.EventTimeTimeout) {
+        (k: K, rows: Iterator[T], state: GroupState[Kept[S]]) =>
+          if (state.hasTimedOut) {
+            val out = expire(k, state.get.state)
+            state.remove(); out
+          } else {
+            val prev = state.getOption
+            var last = prev.fold(Long.MinValue)(_.last_ms)
+            val seen = rows.map { r => last = math.max(last, ts(r)); r }
+            val (next, out) = step(k, seen, prev.map(_.state))
+            next.foreach { s =>
+              state.update(Kept(s, last))
+              // the timestamp must sit above the current watermark
+              state.setTimeoutTimestamp(
+                math.max(last + RetentionMs, state.getCurrentWatermarkMs() + 1))
+            }
+            out
+          }
+      }
+  }
+
+  /** One row per key of a [[keyed]] machine's state in a checkpoint:
+    * `key` and the machine's own `state` struct. The reader opens
+    * stateful operator 0, the topmost in the physical plan.
+    */
+  private def readKept(s: SparkSession, checkpointDir: String, batchId: Option[Long]): DataFrame = {
+    val reader = s.read.format("statestore").option("path", checkpointDir)
+    batchId.foreach(b => reader.option("batchId", b))
+    reader.load().select(col("key.value").as("key"), col("value.groupState.state").as("state"))
+  }
 
   /** The same horizon as a watermark-delay string, for the stages whose
     * DEDUP horizon must cover the whole retention window (the
@@ -130,40 +194,19 @@ object Streams {
     * (run_update_counts_query as a keyed state machine). Update-mode
     * output: one refreshed row per user per micro-batch.
     */
-  def incrementalCounts(
-      events: Dataset[Ev],
-      lateness: String = "1 hour",
-      retentionMs: Long = RetentionMs): Dataset[UserCounts] = {
+  def incrementalCounts(events: Dataset[Ev], lateness: String = "1 hour"): Dataset[UserCounts] = {
     import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", lateness)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[UserCounts, UserCounts](
-        OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, rows: Iterator[Ev], state: GroupState[UserCounts]) =>
-          if (state.hasTimedOut) {
-            // user idle past the retention horizon: drop the counter
-            // (the reference's clean_memory sweep for this key)
-            state.remove(); Iterator.empty
-          } else {
-            val prev = state.getOption.getOrElse(UserCounts(uid, 0L, 0.0, -1L))
-            var maxTs = Long.MinValue
-            val next = rows.foldLeft(prev) { (acc, e) =>
-              maxTs = math.max(maxTs, e.ts.getTime)
-              UserCounts(
-                uid,
-                acc.n_events + 1,
-                acc.total_value + e.value,
-                math.max(acc.last_event_id, e.event_id))
-            }
-            state.update(next)
-            // evict once the watermark passes <last activity + retention>
-            // (the timestamp must sit above the current watermark)
-            state.setTimeoutTimestamp(
-              math.max(maxTs + retentionMs, state.getCurrentWatermarkMs() + 1))
-            Iterator.single(next)
-          }
-      }
+    keyed(events, "ts", lateness, OutputMode.Update)(_.user_id, _.ts.getTime) {
+      (uid: Long, rows: Iterator[Ev], prev: Option[UserCounts]) =>
+        val next = rows.foldLeft(prev.getOrElse(UserCounts(uid, 0L, 0.0, -1L))) { (acc, e) =>
+          UserCounts(
+            uid,
+            acc.n_events + 1,
+            acc.total_value + e.value,
+            math.max(acc.last_event_id, e.event_id))
+        }
+        (Some(next), Iterator.single(next))
+    }
   }
 
   /** #44b streaming anomaly flags: the continuous twin of the batch
@@ -230,49 +273,32 @@ object Streams {
     * update stream (the JSON tier extraction is a stateless column map
     * upstream, identical to the batch op's).
     */
-  def scd2Stream(
-      updates: Dataset[TierUpdate],
-      lateness: String = "1 hour",
-      retentionMs: Long = RetentionMs): Dataset[TierInterval] = {
+  def scd2Stream(updates: Dataset[TierUpdate], lateness: String = "1 hour"): Dataset[TierInterval] = {
     import updates.sparkSession.implicits._
-    updates
-      .withWatermark("ts", lateness)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[TierState, TierInterval](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, rows: Iterator[TierUpdate], state: GroupState[TierState]) =>
-          if (state.hasTimedOut) {
-            // idle past retention: the open interval leaves state as the
-            // key's final current row (the batch op's is_current = true)
-            val out = state.getOption.map(st =>
-              TierInterval(uid, st.tier, st.since_ms, None, is_current = true))
-            state.remove(); out.iterator
-          } else {
-            // micro-batch iterators carry no order guarantee: apply the
-            // batch op's (ts, event_id) order within the batch
-            val sorted = rows.toArray.sortBy(u => (u.ts.getTime, u.event_id))
-            var st = state.getOption
-            val closed = Seq.newBuilder[TierInterval]
-            var maxTs = Long.MinValue
-            for (u <- sorted) {
-              val ms = u.ts.getTime
-              maxTs = math.max(maxTs, ms)
-              st match {
-                case Some(cur) if cur.tier == u.tier => () // same tier: interval extends
-                case Some(cur) =>
-                  closed += TierInterval(uid, cur.tier, cur.since_ms, Some(ms), is_current = false)
-                  st = Some(TierState(u.tier, ms))
-                case None =>
-                  st = Some(TierState(u.tier, ms))
-              }
-            }
-            st.foreach(state.update)
-            if (maxTs != Long.MinValue)
-              state.setTimeoutTimestamp(
-                math.max(maxTs + retentionMs, state.getCurrentWatermarkMs() + 1))
-            closed.result().iterator
+    keyed(updates, "ts", lateness, OutputMode.Append)(_.user_id, _.ts.getTime)(
+      (uid: Long, rows: Iterator[TierUpdate], prev: Option[TierState]) => {
+        // micro-batch iterators carry no order guarantee: apply the
+        // batch op's (ts, event_id) order within the batch
+        val sorted = rows.toArray.sortBy(u => (u.ts.getTime, u.event_id))
+        var st = prev
+        val closed = Seq.newBuilder[TierInterval]
+        for (u <- sorted) {
+          val ms = u.ts.getTime
+          st match {
+            case Some(cur) if cur.tier == u.tier => () // same tier: interval extends
+            case Some(cur) =>
+              closed += TierInterval(uid, cur.tier, cur.since_ms, Some(ms), is_current = false)
+              st = Some(TierState(u.tier, ms))
+            case None =>
+              st = Some(TierState(u.tier, ms))
           }
-      }
+        }
+        (st, closed.result().iterator)
+      },
+      // idle past retention: the open interval leaves state as the
+      // key's final current row (the batch op's is_current = true)
+      expire = (uid: Long, st: TierState) =>
+        Iterator.single(TierInterval(uid, st.tier, st.since_ms, None, is_current = true)))
   }
 
   /** #49j streaming Markov transitions — the continuous twin of
@@ -285,36 +311,20 @@ object Streams {
     * watermark lateness). State evicts on event-time retention
     * timeout, so cardinality tracks the ACTIVE user set.
     */
-  def markovStream(
-      events: Dataset[Ev],
-      lateness: String = "1 hour",
-      retentionMs: Long = RetentionMs): Dataset[UserStep] = {
+  def markovStream(events: Dataset[Ev], lateness: String = "1 hour"): Dataset[UserStep] = {
     import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", lateness)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[LastEvent, UserStep](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, rows: Iterator[Ev], state: GroupState[LastEvent]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val sorted = rows.toArray.sortBy(e => (e.ts.getTime, e.event_id))
-            var st = state.getOption
-            val out = Seq.newBuilder[UserStep]
-            var maxTs = Long.MinValue
-            for (e <- sorted) {
-              val ms = e.ts.getTime
-              maxTs = math.max(maxTs, ms)
-              st.foreach(prev => out += UserStep(uid, prev.event_type, e.event_type, ms))
-              st = Some(LastEvent(ms, e.event_id, e.event_type))
-            }
-            st.foreach(state.update)
-            if (maxTs != Long.MinValue)
-              state.setTimeoutTimestamp(
-                math.max(maxTs + retentionMs, state.getCurrentWatermarkMs() + 1))
-            out.result().iterator
-          }
-      }
+    keyed(events, "ts", lateness, OutputMode.Append)(_.user_id, _.ts.getTime) {
+      (uid: Long, rows: Iterator[Ev], prev: Option[LastEvent]) =>
+        val sorted = rows.toArray.sortBy(e => (e.ts.getTime, e.event_id))
+        var st = prev
+        val out = Seq.newBuilder[UserStep]
+        for (e <- sorted) {
+          val ms = e.ts.getTime
+          st.foreach(p => out += UserStep(uid, p.event_type, e.event_type, ms))
+          st = Some(LastEvent(ms, e.event_id, e.event_type))
+        }
+        (st, out.result().iterator)
+    }
   }
 
   /** #49i streaming weighted reservoir — the A-Res rule
@@ -334,38 +344,22 @@ object Streams {
   def weightedReservoir(
       docs: Dataset[DocArrival],
       k: Int = 32,
-      lateness: String = "1 hour",
-      retentionMs: Long = RetentionMs): Dataset[ReservoirRow] = {
+      lateness: String = "1 hour"): Dataset[ReservoirRow] = {
     import docs.sparkSession.implicits._
-    docs
-      .withWatermark("ts", lateness)
-      .groupByKey(_.source)
-      .flatMapGroupsWithState[RsvState, ReservoirRow](
-        OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
-        (src: String, rows: Iterator[DocArrival], state: GroupState[RsvState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val prev = state.getOption.map(_.entries).getOrElse(Nil)
-            var maxTs = Long.MinValue
-            val arrivals = rows.map { d =>
-              maxTs = math.max(maxTs, d.ts.getTime)
-              ReservoirEntry(aresKey(d.doc_id, d.weight), d.doc_id)
-            }.toList
-            // idempotent merge: same doc_id → same deterministic key
-            val merged = (prev ++ arrivals)
-              .groupBy(_.doc_id).map(_._2.head).toList
-              .sortBy(e => (-e.es_key, e.doc_id))
-              .take(k)
-            if (maxTs != Long.MinValue)
-              state.setTimeoutTimestamp(
-                math.max(maxTs + retentionMs, state.getCurrentWatermarkMs() + 1))
-            if (merged == prev) Iterator.empty
-            else {
-              state.update(RsvState(merged))
-              merged.iterator.map(e => ReservoirRow(src, e.doc_id, e.es_key))
-            }
-          }
-      }
+    keyed(docs, "ts", lateness, OutputMode.Update)(_.source, _.ts.getTime) {
+      (src: String, rows: Iterator[DocArrival], prev: Option[RsvState]) =>
+        val old = prev.map(_.entries).getOrElse(Nil)
+        val arrivals = rows.map(d => ReservoirEntry(aresKey(d.doc_id, d.weight), d.doc_id)).toList
+        // idempotent merge: same doc_id → same deterministic key
+        val merged = (old ++ arrivals)
+          .groupBy(_.doc_id).map(_._2.head).toList
+          .sortBy(e => (-e.es_key, e.doc_id))
+          .take(k)
+        val out =
+          if (merged == old) Iterator.empty
+          else merged.iterator.map(e => ReservoirRow(src, e.doc_id, e.es_key))
+        (Some(RsvState(merged)), out)
+    }
   }
 
   /** #49n sessionizeNativeStream — the #25e batch operator dropped
@@ -556,8 +550,9 @@ object Streams {
     * replays). That sizes the dedup state at the live like graph
     * itself — the same bytes the reference's bitmaps hold in RAM, here
     * as many small KVs in RocksDB. The per-post retention eviction
-    * happens downstream; its timeout fires once the watermark passes
-    * it, i.e. effectively retention + lateness after the last like.
+    * happens downstream ([[likesGraphStream]]): the post's state is
+    * dropped once the watermark passes its newest like + 7 days, the
+    * [[RetentionMs]] policy.
     */
   def likesGraphUpserts(likes: Dataset[Like], lateness: String = RetentionWindow): Dataset[Like] =
     likes
@@ -613,8 +608,9 @@ object Streams {
     *   2. per-post state is a COUNT — O(1) bytes per key, folded from
     *      the batch iterator without materializing any set;
     *   3. every post state carries an event-time timeout at
-    *      <last like + retention>: once the watermark passes it the
-    *      state is dropped — the streaming analogue of the reference's
+    *      <newest like + retention> ([[keyed]]; a late like never pulls
+    *      it back): once the watermark passes it the state is dropped
+    *      — the streaming analogue of the reference's
     *      7-day clean_up_old_posts (main.rs:4008). A like arriving
     *      after eviction restarts the count, exactly as the reference
     *      recreates a re-seen post after retention dropped it.
@@ -623,29 +619,14 @@ object Streams {
     * batch (update mode). At scale the state lives in RocksDB
     * (test-pinned provider parity), sharded by post key.
     */
-  def likesGraphStream(
-      likes: Dataset[Like],
-      lateness: String = RetentionWindow,
-      retentionMs: Long = RetentionMs): Dataset[PostLikes] = {
+  def likesGraphStream(likes: Dataset[Like], lateness: String = RetentionWindow): Dataset[PostLikes] = {
     import likes.sparkSession.implicits._
-    likesGraphUpserts(likes, lateness)
-      .groupByKey(_.post_id)
-      .flatMapGroupsWithState[LikeCount, PostLikes](
-        OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
-        (pid: Long, rows: Iterator[Like], state: GroupState[LikeCount]) =>
-          if (state.hasTimedOut) {
-            state.remove(); Iterator.empty
-          } else {
-            var added = 0L
-            var maxTs = Long.MinValue
-            rows.foreach { l => added += 1; maxTs = math.max(maxTs, l.ts.getTime) }
-            val next = state.getOption.map(_.n).getOrElse(0L) + added
-            state.update(LikeCount(next))
-            state.setTimeoutTimestamp(
-              math.max(maxTs + retentionMs, state.getCurrentWatermarkMs() + 1))
-            Iterator.single(PostLikes(pid, next))
-          }
-      }
+    keyed(likesGraphUpserts(likes, lateness), "ts", lateness, OutputMode.Update)(
+      _.post_id, _.ts.getTime) {
+      (pid: Long, rows: Iterator[Like], prev: Option[LikeCount]) =>
+        val next = prev.fold(0L)(_.n) + rows.size
+        (Some(LikeCount(next)), Iterator.single(PostLikes(pid, next)))
+    }
   }
 
   /** Serve the likes graph's per-post counts from the state store
@@ -658,18 +639,12 @@ object Streams {
       checkpointDir: String,
       batchId: Option[Long] = None): Dataset[PostLikes] = {
     import s.implicits._
-    val reader = s.read.format("statestore").option("path", checkpointDir)
-    batchId.foreach(b => reader.option("batchId", b))
-    reader
-      // the likes query has TWO stateful operators; ids are assigned
-      // top-down in the physical plan, so the per-post count state
-      // (the downstream flatMapGroupsWithState) is operator 0 and the
-      // (user, post) pair dedup below it is operator 1 — read the counts
-      .option("operatorId", 0)
-      .load()
-      .select(
-        col("key.value").as("post_id"),
-        col("value.groupState").getField("n").as("n_likes"))
+    // the likes query has TWO stateful operators; ids are assigned
+    // top-down in the physical plan, so the per-post count state (the
+    // downstream keyed machine) is operator 0, the one readKept opens,
+    // and the (user, post) pair dedup below it is operator 1
+    readKept(s, checkpointDir, batchId)
+      .select(col("key").as("post_id"), col("state.n").as("n_likes"))
       .as[PostLikes]
   }
 
@@ -710,9 +685,8 @@ object Streams {
       k: Int,
       anchorMs: Long,
       lateness: String = "1 hour",
-      retentionMs: Long = RetentionMs,
       gravity: Double = 1.8): Dataset[FeedRow] =
-    streamingFeedRanked(events, k, FeedRanking.Hn(anchorMs, gravity), lateness, retentionMs)
+    streamingFeedRanked(events, k, FeedRanking.Hn(anchorMs, gravity), lateness)
 
   /** The same bounded per-user top-k state under any per-event-static
     * [[FeedRanking]] — the generalization that lets a wire payload's
@@ -723,8 +697,7 @@ object Streams {
       events: Dataset[Ev],
       k: Int,
       ranking: FeedRanking,
-      lateness: String = "1 hour",
-      retentionMs: Long = RetentionMs): Dataset[FeedRow] = {
+      lateness: String = "1 hour"): Dataset[FeedRow] = {
     import events.sparkSession.implicits._
     def score(e: Ev): Double = ranking match {
       case FeedRanking.Hn(anchorMs, gravity) =>
@@ -737,42 +710,23 @@ object Streams {
       case FeedRanking.ByRecency(newestFirst) =>
         if (newestFirst) e.ts.getTime.toDouble else -e.ts.getTime.toDouble
     }
-    // idempotent watermarking: a payload-compiled upstream
-    // (PipelineJson.runServingFeed) already watermarked the firehose,
-    // and Spark disallows redefining it
-    val watermarked =
-      if (events.schema("ts").metadata.contains("spark.watermarkDelayMs")) events
-      else events.withWatermark("ts", lateness)
-    watermarked
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[FeedState, FeedRow](
-        OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, rows: Iterator[Ev], state: GroupState[FeedState]) =>
-          if (state.hasTimedOut) {
-            // user idle past retention: their cached feed is dropped;
-            // the next event rebuilds it from scratch
-            state.remove(); Iterator.empty
-          } else {
-            val prev = state.getOption.getOrElse(FeedState(Nil))
-            var maxTs = Long.MinValue
-            // dedup by event_id before the cut: an at-least-once source
-            // may redeliver an event, which must not occupy two feed slots
-            val merged = (prev.entries ++ rows.map { e =>
-              maxTs = math.max(maxTs, e.ts.getTime)
-              (score(e), e.event_id)
-            })
-              .groupBy(_._2)
-              .valuesIterator
-              .map(_.maxBy(_._1))
-              .toList
-              .sortBy { case (s, id) => (-s, id) }
-              .take(k)
-            state.update(FeedState(merged))
-            state.setTimeoutTimestamp(
-              math.max(maxTs + retentionMs, state.getCurrentWatermarkMs() + 1))
-            merged.iterator.zipWithIndex.map { case ((s, id), i) => FeedRow(uid, i + 1, id, s) }
-          }
-      }
+    // a user idle past retention loses their cached feed; the next
+    // event rebuilds it from scratch
+    keyed(events, "ts", lateness, OutputMode.Update)(_.user_id, _.ts.getTime) {
+      (uid: Long, rows: Iterator[Ev], prev: Option[FeedState]) =>
+        // dedup by event_id before the cut: an at-least-once source
+        // may redeliver an event, which must not occupy two feed slots
+        val merged = (prev.fold(List.empty[(Double, Long)])(_.entries) ++
+          rows.map(e => (score(e), e.event_id)))
+          .groupBy(_._2)
+          .valuesIterator
+          .map(_.maxBy(_._1))
+          .toList
+          .sortBy { case (s, id) => (-s, id) }
+          .take(k)
+        (Some(FeedState(merged)),
+          merged.iterator.zipWithIndex.map { case ((s, id), i) => FeedRow(uid, i + 1, id, s) })
+    }
   }
 
   /** #49d serve feeds from the STATE STORE, no recompute: the payoff of
@@ -791,11 +745,8 @@ object Streams {
       checkpointDir: String,
       batchId: Option[Long] = None): Dataset[FeedRow] = {
     import s.implicits._
-    val reader = s.read.format("statestore").option("path", checkpointDir)
-    batchId.foreach(b => reader.option("batchId", b))
-    reader
-      .load()
-      .select(col("key.value").as("user_id"), posexplode(col("value.groupState.entries")))
+    readKept(s, checkpointDir, batchId)
+      .select(col("key").as("user_id"), posexplode(col("state.entries")))
       .select(
         col("user_id"),
         (col("pos") + 1).cast("int").as("rank"),
@@ -859,40 +810,22 @@ object Streams {
     * evicted after the retention horizon like every keyed state here.
     */
   def profilesUpsertStream(
-      profiles: Dataset[ProfileRow],
-      lateness: String = "1 hour",
-      retentionMs: Long = RetentionMs): Dataset[ProfileRow] = {
+      profiles: Dataset[ProfileRow], lateness: String = "1 hour"): Dataset[ProfileRow] = {
     import profiles.sparkSession.implicits._
-    profiles
-      .withWatermark("fetched_at", lateness)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[ProfileRow, ProfileRow](
-        OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, rows: Iterator[ProfileRow], state: GroupState[ProfileRow]) =>
-          if (state.hasTimedOut) {
-            state.remove(); Iterator.empty
-          } else {
-            val prev = state.getOption
-            // strictly-newer wins; a redelivered or stale snapshot is a
-            // no-op. Equal-timestamp conflicts tie-break on content
-            // (handle, display_name) — the group iterator has no
-            // deterministic order, and a first-seen-wins rule would let
-            // the surviving snapshot differ run to run
-            def rank(p: ProfileRow) = (p.fetched_at.getTime, p.handle, p.display_name)
-            val ord = Ordering[(Long, String, String)]
-            val latest = rows.foldLeft(prev) { (acc, r) =>
-              if (acc.forall(a => ord.gt(rank(r), rank(a)))) Some(r) else acc
-            }
-            latest match {
-              case Some(p) =>
-                state.update(p)
-                state.setTimeoutTimestamp(
-                  math.max(p.fetched_at.getTime + retentionMs, state.getCurrentWatermarkMs() + 1))
-                if (prev.contains(p)) Iterator.empty else Iterator.single(p)
-              case None => Iterator.empty
-            }
-          }
-      }
+    keyed(profiles, "fetched_at", lateness, OutputMode.Update)(_.user_id, _.fetched_at.getTime) {
+      (_: Long, rows: Iterator[ProfileRow], prev: Option[ProfileRow]) =>
+        // strictly-newer wins; a redelivered or stale snapshot is a
+        // no-op. Equal-timestamp conflicts tie-break on content
+        // (handle, display_name) — the group iterator has no
+        // deterministic order, and a first-seen-wins rule would let
+        // the surviving snapshot differ run to run
+        def rank(p: ProfileRow) = (p.fetched_at.getTime, p.handle, p.display_name)
+        val ord = Ordering[(Long, String, String)]
+        val latest = rows.foldLeft(prev) { (acc, r) =>
+          if (acc.forall(a => ord.gt(rank(r), rank(a)))) Some(r) else acc
+        }
+        (latest, if (latest == prev) Iterator.empty else latest.iterator)
+    }
   }
 
   /** #48s stream-static enrichment: the reference resolves author
@@ -1005,46 +938,32 @@ object Streams {
     * key's latest emission and filtering visible yields EXACTLY batch
     * cdc_apply's snapshot once drained (spec-pinned, mid-stream split).
     */
-  def cdcStateStream(
-      events: Dataset[Ev], lateness: String = "1 hour",
-      retentionMs: Long = RetentionMs): Dataset[CdcRow] = {
+  def cdcStateStream(events: Dataset[Ev], lateness: String = "1 hour"): Dataset[CdcRow] = {
     import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", lateness)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[CdcState, CdcRow](
-        OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, rows: Iterator[Ev], state: GroupState[CdcState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val prev = state.getOption
-            val last = rows.foldLeft(prev) { (acc, e) =>
-              val cand = CdcState(
-                e.ts.getTime, e.event_id, e.value, e.event_id % 10 == 0,
-                acc.map(_.n_ops).getOrElse(0L) + 1)
-              acc match {
-                case Some(a)
-                    if a.ts_ms > cand.ts_ms ||
-                      (a.ts_ms == cand.ts_ms && a.event_id > cand.event_id) =>
-                  Some(a.copy(n_ops = cand.n_ops))
-                case _ => Some(cand)
-              }
-            }
-            last.foreach { st =>
-              state.update(st)
-              state.setTimeoutTimestamp(
-                math.max(st.ts_ms + retentionMs, state.getCurrentWatermarkMs() + 1))
-            }
-            // emit EVERY state change, tombstones included (visible=false
-            // is the delete marker a real sink applies) — hiding deletes
-            // would leave stale rows live downstream
-            last match {
-              case Some(st) if prev != last =>
-                Iterator.single(CdcRow(uid, st.value, st.ts_ms, st.n_ops, !st.deleted))
-              case _ => Iterator.empty
-            }
+    keyed(events, "ts", lateness, OutputMode.Update)(_.user_id, _.ts.getTime) {
+      (uid: Long, rows: Iterator[Ev], prev: Option[CdcState]) =>
+        val next = rows.foldLeft(prev) { (acc, e) =>
+          val cand = CdcState(
+            e.ts.getTime, e.event_id, e.value, e.event_id % 10 == 0,
+            acc.map(_.n_ops).getOrElse(0L) + 1)
+          acc match {
+            case Some(a)
+                if a.ts_ms > cand.ts_ms ||
+                  (a.ts_ms == cand.ts_ms && a.event_id > cand.event_id) =>
+              Some(a.copy(n_ops = cand.n_ops))
+            case _ => Some(cand)
           }
-      }
+        }
+        // emit EVERY state change, tombstones included (visible=false
+        // is the delete marker a real sink applies) — hiding deletes
+        // would leave stale rows live downstream
+        val out = next match {
+          case Some(st) if prev != next =>
+            Iterator.single(CdcRow(uid, st.value, st.ts_ms, st.n_ops, !st.deleted))
+          case _ => Iterator.empty
+        }
+        (next, out)
+    }
   }
 
   def mauSketchStream(events: DataFrame, lateness: String = "1 day"): DataFrame =
@@ -1177,61 +1096,46 @@ object Streams {
     */
   val FunnelMaxOpenWindows = 64
 
-  def funnelStream(
-      events: Dataset[Ev], lateness: String = "1 hour",
-      retentionMs: Long = RetentionMs): Dataset[FunnelLevel] = {
+  def funnelStream(events: Dataset[Ev], lateness: String = "1 hour"): Dataset[FunnelLevel] = {
     import events.sparkSession.implicits._
     val windowMs = graft.queries.Round11Ops.FunnelWindowHours * 3600L * 1000L
-    events
-      .withWatermark("ts", lateness)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[FunnelState, FunnelLevel](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, rows: Iterator[Ev], state: GroupState[FunnelState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val sorted = rows.toArray.sortBy(e => (e.ts.getTime, e.event_id))
-            var st = state.getOption.getOrElse(FunnelState(Nil, 0))
-            val out = Seq.newBuilder[FunnelLevel]
-            var maxTs = Long.MinValue
-            def raise(level: Int, ms: Long): Unit =
-              if (level > st.level) {
-                st = st.copy(level = level)
-                out += FunnelLevel(uid, level, ms)
-              }
-            for (e <- sorted) {
-              val ms = e.ts.getTime
-              maxTs = math.max(maxTs, ms)
-              // expired windows can never chain further: prune first
-              val live = st.windows.filter(w => w.vts_ms + windowMs >= ms)
-              st = st.copy(windows = live)
-              e.event_type match {
-                case "view" if st.level < 3 =>
-                  raise(1, ms)
-                  if (st.windows.size < FunnelMaxOpenWindows)
-                    st = st.copy(windows = st.windows :+ FunnelWindow(ms, None))
-                case "click" if st.level < 3 =>
-                  val (hit, updated) = st.windows.foldLeft((false, List.empty[FunnelWindow])) {
-                    case ((h, acc), w) =>
-                      if (w.c1_ms.isEmpty && ms > w.vts_ms && ms <= w.vts_ms + windowMs)
-                        (true, acc :+ w.copy(c1_ms = Some(ms)))
-                      else (h, acc :+ w)
-                  }
-                  st = st.copy(windows = updated)
-                  if (hit) raise(2, ms)
-                case "purchase" if st.level < 3 =>
-                  val done = st.windows.exists(w =>
-                    w.c1_ms.exists(c1 => ms > c1 && ms <= w.vts_ms + windowMs))
-                  if (done) { raise(3, ms); st = st.copy(windows = Nil) }
-                case _ => ()
-              }
-            }
-            state.update(st)
-            if (maxTs != Long.MinValue)
-              state.setTimeoutTimestamp(
-                math.max(maxTs + retentionMs, state.getCurrentWatermarkMs() + 1))
-            out.result().iterator
+    keyed(events, "ts", lateness, OutputMode.Append)(_.user_id, _.ts.getTime) {
+      (uid: Long, rows: Iterator[Ev], prev: Option[FunnelState]) =>
+        val sorted = rows.toArray.sortBy(e => (e.ts.getTime, e.event_id))
+        var st = prev.getOrElse(FunnelState(Nil, 0))
+        val out = Seq.newBuilder[FunnelLevel]
+        def raise(level: Int, ms: Long): Unit =
+          if (level > st.level) {
+            st = st.copy(level = level)
+            out += FunnelLevel(uid, level, ms)
           }
-      }
+        for (e <- sorted) {
+          val ms = e.ts.getTime
+          // expired windows can never chain further: prune first
+          val live = st.windows.filter(w => w.vts_ms + windowMs >= ms)
+          st = st.copy(windows = live)
+          e.event_type match {
+            case "view" if st.level < 3 =>
+              raise(1, ms)
+              if (st.windows.size < FunnelMaxOpenWindows)
+                st = st.copy(windows = st.windows :+ FunnelWindow(ms, None))
+            case "click" if st.level < 3 =>
+              val (hit, updated) = st.windows.foldLeft((false, List.empty[FunnelWindow])) {
+                case ((h, acc), w) =>
+                  if (w.c1_ms.isEmpty && ms > w.vts_ms && ms <= w.vts_ms + windowMs)
+                    (true, acc :+ w.copy(c1_ms = Some(ms)))
+                  else (h, acc :+ w)
+              }
+              st = st.copy(windows = updated)
+              if (hit) raise(2, ms)
+            case "purchase" if st.level < 3 =>
+              val done = st.windows.exists(w =>
+                w.c1_ms.exists(c1 => ms > c1 && ms <= w.vts_ms + windowMs))
+              if (done) { raise(3, ms); st = st.copy(windows = Nil) }
+            case _ => ()
+          }
+        }
+        (Some(st), out.result().iterator)
+    }
   }
 }

@@ -102,7 +102,7 @@ object Serve {
     // the feed state: one streaming run over the events table (file
     // source), checkpoint kept as the serving layout — rebuilt only
     // when the input fingerprint changes, exactly like the indexes
-    val feedDir = Sources.cachedIndexDir(sfDir, "events", "serve-feed-v1") { p =>
+    val feedDir = Sources.cachedIndexDir(sfDir, "events", "serve-feed-v2") { p =>
       val batch = Tables.events(spark, sfDir)
       val anchorMs = batch.agg(max(unix_millis(col("ts")))).head().getLong(0)
       val stage = s"$p/stage"

@@ -64,6 +64,32 @@ class StreamingSpec extends AnyFunSuite {
       "intervals must chain through the sorted within-batch fold")
   }
 
+  test("scd2 stream emits the open interval as a current row when the key idles past retention") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import graft.streaming.TierUpdate
+    def upd(uid: Long, ts: String, id: Long, tier: Long) =
+      TierUpdate(uid, java.sql.Timestamp.valueOf(ts), id, tier)
+    val in = MemoryStream[TierUpdate]
+    val q = Streams.scd2Stream(in.toDS())
+      .writeStream.outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
+      .format("memory").queryName("scd2_idle").start()
+    in.addData(upd(7, "2024-01-01 10:00:00", 1, 0), upd(7, "2024-01-01 10:05:00", 2, 1))
+    q.processAllAvailable()
+    // user 8's traffic moves the watermark past user 7's newest update
+    // + 7 days; a second batch runs with that watermark
+    in.addData(upd(8, "2024-01-09 12:00:00", 3, 5))
+    q.processAllAvailable()
+    in.addData(upd(8, "2024-01-09 12:01:00", 4, 5))
+    q.processAllAvailable(); q.stop()
+    val current = spark.table("scd2_idle").collect().filter(_.getAs[Boolean]("is_current"))
+      .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("tier"), r.getAs[Long]("valid_from_ms"),
+        r.isNullAt(r.fieldIndex("valid_to_ms")))).toSeq
+    val since = java.sql.Timestamp.valueOf("2024-01-01 10:05:00").getTime
+    assert(current == Seq((7L, 1L, since, true)),
+      s"expected user 7's open tier-1 interval as its final current row, got $current")
+  }
+
   test("markov stream chains steps exactly like the batch lead rule") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -164,6 +190,34 @@ class StreamingSpec extends AnyFunSuite {
     assert(last.getAs[Long]("n_events") == 3)
     assert(math.abs(last.getAs[Double]("total_value") - 10.0) < 1e-9)
     assert(last.getAs[Long]("last_event_id") == 3)
+  }
+
+  test("incremental counters: a late event does not shorten a user's retention") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    def at(id: Long, ts: String, uid: Long) =
+      Ev(id, java.sql.Timestamp.valueOf(ts), uid, "view", 1.0)
+    val in = MemoryStream[Ev]
+    val q = Streams
+      .incrementalCounts(in.toDS())
+      .writeStream.outputMode(org.apache.spark.sql.streaming.OutputMode.Update)
+      .format("memory").queryName("ic_late").start()
+    in.addData(at(1, "2024-01-08 10:00:00", 7))
+    q.processAllAvailable()
+    in.addData(at(2, "2024-01-08 09:30:00", 7)) // late, inside the 1-hour lateness
+    q.processAllAvailable()
+    // user 9's traffic moves the watermark to Jan 15 09:45: past the late
+    // event + 7 days, not past the newest event + 7 days (Jan 15 10:00)
+    in.addData(at(3, "2024-01-15 10:45:00", 9))
+    q.processAllAvailable()
+    in.addData(at(4, "2024-01-15 10:46:00", 9))
+    q.processAllAvailable()
+    in.addData(at(5, "2024-01-15 09:50:00", 7)) // still inside user 7's window
+    q.processAllAvailable(); q.stop()
+    val last = spark.table("ic_late").collect()
+      .filter(r => r.getAs[Long]("user_id") == 7L && r.getAs[Long]("last_event_id") == 5L)
+      .map(_.getAs[Long]("n_events")).toSeq
+    assert(last == Seq(3L), s"user 7's counter was evicted early: $last")
   }
 
   test("keyed state survives a stop and restart from the checkpoint") {
@@ -294,6 +348,33 @@ class StreamingSpec extends AnyFunSuite {
     // would make it 2) was evicted, matching the reference's re-seen-post
     // behavior after cleanup
     assert(p100.last == 1L, s"expected restart at 1 after eviction, got ${p100.toSeq}")
+  }
+
+  test("likes-graph: a late like at the default 7-day lateness does not shorten a post's retention") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    def at(ts: String, uid: Long, pid: Long) =
+      Streams.Like(java.sql.Timestamp.valueOf(ts), uid, pid)
+    val in = MemoryStream[Streams.Like]
+    val q = Streams
+      .likesGraphStream(in.toDS())
+      .writeStream.outputMode(org.apache.spark.sql.streaming.OutputMode.Update)
+      .format("memory").queryName("lg_late").start()
+    in.addData(at("2024-01-08 10:00:00", 1, 100))
+    q.processAllAvailable()
+    in.addData(at("2024-01-02 10:00:00", 2, 100)) // six days late, inside the lateness
+    q.processAllAvailable()
+    // post 900's likes move the watermark to Jan 10: past the late like
+    // + 7 days, not past post 100's newest like + 7 days (Jan 15)
+    in.addData(at("2024-01-17 10:00:00", 5, 900))
+    q.processAllAvailable()
+    in.addData(at("2024-01-17 10:01:00", 6, 900))
+    q.processAllAvailable()
+    in.addData(at("2024-01-11 10:00:00", 3, 100))
+    q.processAllAvailable(); q.stop()
+    val p100 = spark.table("lg_late").collect()
+      .filter(_.getAs[Long]("post_id") == 100L).map(_.getAs[Long]("n_likes"))
+    assert(p100.max == 3L, s"post 100's count was evicted early: ${p100.toSeq}")
   }
 
   test("likes-graph handles a hot post (100k likers in one key) with O(1) state") {
@@ -635,6 +716,34 @@ class StreamingSpec extends AnyFunSuite {
       .filter(_.getAs[Long]("user_id") == 5)
       .groupBy(_.getAs[Int]("rank")).map { case (r, rows) => r -> rows.last.getAs[Long]("event_id") }
     assert(last(1) == 3L && last(2) == 2L, s"expected [3,2], got $last")
+  }
+
+  test("streaming feed: a late event does not shorten a user's retention") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    def at(id: Long, ts: String, uid: Long, v: Double) =
+      Ev(id, java.sql.Timestamp.valueOf(ts), uid, "view", v)
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_feed_late").toString
+    val anchor = java.sql.Timestamp.valueOf("2024-01-16 00:00:00").getTime
+    val in = MemoryStream[Ev]
+    val q = Streams
+      .streamingFeed(in.toDS(), k = 3, anchorMs = anchor)
+      .writeStream.outputMode(org.apache.spark.sql.streaming.OutputMode.Update)
+      .option("checkpointLocation", ckpt)
+      .format("memory").queryName("sf_late").start()
+    in.addData(at(1, "2024-01-08 10:00:00", 5, 10.0))
+    q.processAllAvailable()
+    in.addData(at(2, "2024-01-08 09:30:00", 5, 20.0)) // late, inside the 1-hour lateness
+    q.processAllAvailable()
+    in.addData(at(3, "2024-01-15 10:45:00", 9, 1.0))
+    q.processAllAvailable()
+    in.addData(at(4, "2024-01-15 10:46:00", 9, 1.0))
+    q.processAllAvailable()
+    in.addData(at(5, "2024-01-15 09:50:00", 5, 30.0)) // still inside user 5's window
+    q.processAllAvailable(); q.stop()
+    val served = Streams.readFeedState(spark, ckpt).collect().filter(_.user_id == 5L)
+    assert(served.map(_.event_id).toSet == Set(1L, 2L, 5L),
+      s"user 5's feed was evicted early: ${served.toSeq}")
   }
 
   test("feeds serve from a state-store read, including time travel") {
