@@ -312,89 +312,6 @@ object Round12Ops {
       |FROM fin, (SELECT unnest(generate_series(1, 7)) AS h)
       |ORDER BY event_type, h""".stripMargin
 
-  /** #308 personalized_pagerank — PageRank with teleport restricted to
-    * a SEED set (Haveliwala 2002): the "how relevant is every node to
-    * THESE accounts" primitive behind recommendation and
-    * trust-propagation reads of the follow graph (graph_distances
-    * answers hop-distance from seeds; this answers stationary
-    * visit probability). Same engine discipline as #57 page_rank —
-    * 3 synchronous rounds, d=0.85, per-edge contributions rounded
-    * 12 dp and summed through DECIMAL (order-free), rank re-rounded
-    * 12 dp per round, Lineage.cut between rounds, dangling mass not
-    * redistributed — with the teleport term 0.15·[id ∈ S]/|S| replacing
-    * 0.15/n. Seeds here: node id < 5 (the graphFollowing seed rule).
-    * Scale: O(E) edge-keyed join + fine agg per round; the seed
-    * indicator is a broadcast-joined tiny relation. Exact oracle:
-    * the same three rounds unrolled as CTEs.
-    */
-  def personalizedPagerank(s: SparkSession, dir: String): DataFrame = {
-    // consumed by nodes/deg AND every round's inflow join: cut once
-    val e = graft.Lineage.cut(GraphOps.edges(s, dir).distinct())
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-    val seedN = nodes.filter(col("id") < 5).agg(count(lit(1)).as("ns"))
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    var r = nodes
-      .crossJoin(broadcast(seedN))
-      .select(
-        col("id"),
-        when(col("id") < 5, lit(1.0) / col("ns").cast("double")).otherwise(lit(0.0)).as("rank"),
-        col("ns"))
-    for (_ <- 1 to 3) {
-      val inflow = e
-        .join(r.select(col("id").as("src"), col("rank")), Seq("src"))
-        .join(deg, Seq("src"))
-        .select(col("dst").as("id"), round(col("rank") / col("deg"), 12).cast(Dec12).as("c"))
-        .groupBy(col("id"))
-        .agg(sum(col("c")).as("inflow"))
-      r = graft.Lineage.cut(
-        nodes
-          .crossJoin(broadcast(seedN))
-          .join(inflow, Seq("id"), "left")
-          .select(
-            col("id"),
-            round(
-              when(col("id") < 5, lit(0.15) / col("ns").cast("double")).otherwise(lit(0.0)) +
-                lit(0.85) * coalesce(col("inflow").cast("double"), lit(0.0)),
-              12).as("rank"),
-            col("ns")))
-    }
-    r.select(col("id"), emit(col("rank"), 6).as("ppr"))
-      .filter(col("ppr") > 0.0)
-      .orderBy(col("ppr").desc, col("id"))
-  }
-
-  val personalizedPagerankSql: String = {
-    def iter(prev: String, k: Int): String =
-      s"""c$k AS (
-         |  SELECT e.dst AS id, CAST(round($prev.rank / deg.deg, 12) AS DECIMAL(38,12)) AS c
-         |  FROM e JOIN $prev ON e.src = $prev.id JOIN deg ON e.src = deg.src
-         |),
-         |i$k AS (
-         |  SELECT nodes.id,
-         |    round(CASE WHEN nodes.id < 5 THEN 0.15 / ns.ns ELSE 0.0 END
-         |      + 0.85 * coalesce(CAST(t.s AS DOUBLE), 0), 12) AS rank
-         |  FROM nodes CROSS JOIN ns
-         |  LEFT JOIN (SELECT id, sum(c) AS s FROM c$k GROUP BY id) t ON nodes.id = t.id
-         |)""".stripMargin
-    s"""WITH edges_raw AS (${GraphOps.edgesSql}),
-       |e AS (SELECT DISTINCT src, dst FROM edges_raw),
-       |nodes AS (
-       |  SELECT DISTINCT id FROM (SELECT src AS id FROM e UNION SELECT dst AS id FROM e)
-       |),
-       |ns AS (SELECT CAST(count(*) AS DOUBLE) AS ns FROM nodes WHERE id < 5),
-       |deg AS (SELECT src, count(*) AS deg FROM e GROUP BY src),
-       |i0 AS (
-       |  SELECT id, CASE WHEN id < 5 THEN 1.0 / ns.ns ELSE 0.0 END AS rank
-       |  FROM nodes CROSS JOIN ns
-       |),
-       |${iter("i0", 1)},
-       |${iter("i1", 2)},
-       |${iter("i2", 3)}
-       |SELECT id, (CAST(round(rank, 6) AS DOUBLE) + 0.0) AS ppr
-       |FROM i3 WHERE round(rank, 6) > 0.0 ORDER BY ppr DESC, id""".stripMargin
-  }
-
   /** #309 kneser_ney_bigram — the interpolated Kneser–Ney smoothed
     * bigram table (Kneser & Ney 1995; Chen & Goodman 1999's
     * interpolated form, single discount d=0.75): word_bigrams ships
@@ -3568,107 +3485,6 @@ object Round12Ops {
       |SELECT vec_id, (CAST(round(CAST(sc AS DOUBLE), 6) AS DOUBLE) + 0.0) AS score
       |FROM terms ORDER BY score DESC, vec_id LIMIT 20""".stripMargin
 
-  /** #351 graph_modularity — Newman modularity Q and per-community
-    * conductance for the label-propagation communities: #59 ships the
-    * PARTITION, this ships its QUALITY — the number that says whether
-    * those communities are structure or noise (Q≈0 ⇒ no better than
-    * random for the degree sequence) plus the per-community cut
-    * quality a partitioner/sharding decision reads. Per community
-    * vol, intra-edge and cut counts come from two label joins over
-    * the O(E) symmetric edge list; Q terms and conductance run on the
-    * bounded per-community table, 12-dp rounded into order-free
-    * DECIMAL sums; the TOTAL row (community = −1) carries Q. Exact
-    * oracle over the communities chain's own verified CTEs.
-    */
-  def graphModularity(s: SparkSession, dir: String): DataFrame = {
-    // r11 (§2.4, verdict item 3 — plan breadth): reuse the communities
-    // chain's OWN sym and labels cuts instead of re-deriving a second
-    // sym (dedges scan + union + distinct + cut) and re-cutting the
-    // already-cut labels through an extra global sort; and read the
-    // O(E) labeled-edge join ONCE — perC is the |communities|-bounded
-    // frame, so cut THAT, and m2 (= Σ vol, exactly count(*) of joined:
-    // every joined row carries a cs) comes from perC, not a second
-    // full pass over E. Plan: 42 stages → ~28, two O(E)
-    // materializations and one full-agg pass removed.
-    val (sym, labelsRaw) = Round2Ops.communityParts(s, dir)
-    val labels = labelsRaw.select(col("node"), col("label").as("community"))
-    val joined = sym // O(E) labeled edges, consumed once by perC
-      .join(labels.select(col("node").as("src"), col("community").as("cs")), Seq("src"))
-      .join(labels.select(col("node").as("dst"), col("community").as("cd")), Seq("dst"))
-    val perC = graft.BoundedTail.leaf(joined.groupBy(col("cs").as("community"))
-      .agg(count(lit(1)).as("vol"),
-        sum(when(col("cs") === col("cd"), 1L).otherwise(0L)).as("intra2")))
-    // m2 = Σ vol over the one-row-per-community leaf (no second pass);
-    // nodes, bounded the same way, coalesces to one partition for the
-    // join and the total rollup below
-    val nodes = labels.groupBy(col("community")).agg(count(lit(1)).as("n_nodes"))
-      .coalesce(1)
-    val rows = perC.withColumn("m2", sum(col("vol")).over(graft.BoundedTail.allRows))
-      .join(nodes.hint("merge"), Seq("community"))
-      .select(col("community"), col("n_nodes"), col("vol"),
-        (col("vol") - col("intra2")).as("cut_edges"),
-        emit(when(least(col("vol"), col("m2") - col("vol")) > 0,
-          (col("vol") - col("intra2")).cast("double")
-            / least(col("vol"), col("m2") - col("vol")).cast("double"))
-          .otherwise(lit(0.0)), 6).as("conductance"),
-        round(col("intra2").cast("double") / col("m2").cast("double")
-          - (col("vol").cast("double") / col("m2").cast("double"))
-            * (col("vol").cast("double") / col("m2").cast("double")), 12).as("qt"))
-    val total = rows.agg(sum(col("qt").cast(Dec12)).as("q"),
-      sum(col("n_nodes")).as("nn"), sum(col("vol")).as("tv"),
-      sum(col("cut_edges")).as("tc"))
-      .select(lit(-1L).as("community"), col("nn").as("n_nodes"), col("tv").as("vol"),
-        col("tc").as("cut_edges"), lit(null).cast("double").as("conductance"),
-        emit(col("q").cast("double"), 6).as("q_term"))
-    rows.select(col("community"), col("n_nodes"), col("vol"), col("cut_edges"),
-      col("conductance"), emit(col("qt"), 6).as("q_term"))
-      .unionByName(total)
-      .orderBy(col("community"))
-  }
-
-  val graphModularitySql: String =
-    s"""WITH comm AS (${Round2Ops.graphCommunitiesSql.replace("ORDER BY node", "")}),
-       |e0 AS (${Round2Ops.edgesSql}),
-       |dedges AS (SELECT DISTINCT src, dst FROM e0),
-       |sym AS (
-       |  SELECT src, dst FROM dedges
-       |  UNION
-       |  SELECT dst AS src, src AS dst FROM dedges
-       |),
-       |joined AS (
-       |  SELECT ls.community AS cs, ld.community AS cd
-       |  FROM sym
-       |  JOIN comm ls ON sym.src = ls.node
-       |  JOIN comm ld ON sym.dst = ld.node
-       |),
-       |m2 AS (SELECT count(*) AS m2 FROM joined),
-       |perc AS (
-       |  SELECT cs AS community, count(*) AS vol,
-       |    CAST(sum(CASE WHEN cs = cd THEN 1 ELSE 0 END) AS BIGINT) AS intra2
-       |  FROM joined GROUP BY 1
-       |),
-       |nodes AS (SELECT community, count(*) AS n_nodes FROM comm GROUP BY 1),
-       |rows0 AS (
-       |  SELECT perc.community, n_nodes, vol, vol - intra2 AS cut_edges,
-       |    (CAST(round(CASE WHEN least(vol, m2 - vol) > 0
-       |      THEN CAST(vol - intra2 AS DOUBLE) / CAST(least(vol, m2 - vol) AS DOUBLE)
-       |      ELSE 0.0 END, 6) AS DOUBLE) + 0.0) AS conductance,
-       |    round(CAST(intra2 AS DOUBLE) / CAST(m2 AS DOUBLE)
-       |      - (CAST(vol AS DOUBLE) / CAST(m2 AS DOUBLE)) * (CAST(vol AS DOUBLE) / CAST(m2 AS DOUBLE)),
-       |      12) AS qt
-       |  FROM perc JOIN nodes ON perc.community = nodes.community CROSS JOIN m2
-       |)
-       |SELECT community, n_nodes, vol, cut_edges, conductance,
-       |  (CAST(round(qt, 6) AS DOUBLE) + 0.0) AS q_term
-       |FROM rows0
-       |UNION ALL
-       |SELECT -1 AS community, CAST(sum(n_nodes) AS BIGINT) AS n_nodes,
-       |  CAST(sum(vol) AS BIGINT) AS vol, CAST(sum(cut_edges) AS BIGINT) AS cut_edges,
-       |  NULL AS conductance,
-       |  (CAST(round(CAST(sum(CAST(qt AS DECIMAL(38,12))) AS DOUBLE), 6) AS DOUBLE) + 0.0) AS q_term
-       |FROM rows0
-       |ORDER BY community""".stripMargin
-
   /** #352 covariate_balance_smd — standardized mean differences of
     * pre-treatment covariates between the md5 experiment arms
     * (Austin 2009's balance table): the check did_lift and
@@ -3951,7 +3767,6 @@ object Round12Ops {
     exact("dp_noisy_counts", dpNoisyCounts, dpNoisyCountsSql),
     exact("wilson_ci_report", wilsonCiReport, wilsonCiReportSql),
     exact("holt_forecast", holtForecast, holtForecastSql),
-    exact("personalized_pagerank", personalizedPagerank, personalizedPagerankSql),
     exact("kneser_ney_bigram", kneserNeyBigram, kneserNeyBigramSql),
     exact("classifier_calibration", classifierCalibration, classifierCalibrationSql),
     exact("record_linkage", recordLinkage, recordLinkageSql),
@@ -3994,7 +3809,6 @@ object Round12Ops {
     exact("dedup_threshold_sweep", dedupThresholdSweep, dedupThresholdSweepSql),
     exact("seasonal_strength", seasonalStrength, seasonalStrengthSql),
     exact("embed_outlier_report", embedOutlierReport, embedOutlierReportSql),
-    exact("graph_modularity", graphModularity, graphModularitySql),
     exact("covariate_balance_smd", covariateBalanceSmd, covariateBalanceSmdSql),
     exact("cold_start_coverage", coldStartCoverage, coldStartCoverageSql),
     exact("durbin_watson", durbinWatson, durbinWatsonSql),

@@ -17,8 +17,7 @@ import graft.Key.exact
   * the factorial question one-way tests can't pose), the
   * information-gain decision stump (the single most predictive
   * threshold, the root of every tree a feature-usefulness probe
-  * needs), and per-seed closeness centrality (the reach-efficiency
-  * read over the same BFS the distance map runs).
+  * needs). graph_closeness lives in [[GraphOps]].
   *
   * House rules as Round15-17: exact integer/decimal moments, double
   * chains mirrored token for token, 12-dp-rounded libm-adjacent
@@ -489,80 +488,9 @@ object Round18Ops {
       |FROM e
       |QUALIFY row_number() OVER (ORDER BY gain DESC, threshold) = 1""".stripMargin
 
-  /** #403 graph_closeness — per-seed closeness centrality over the
-    * 4-hop BFS ball: (reached−1)/Σdist (the reach-efficiency read —
-    * how CHEAPLY a seed touches its neighborhood), with the reach
-    * count and 4-hop eccentricity, for the same seeds and synthetic
-    * edge set graph_distances (#236) walks. The Spark side is the
-    * proper frontier BFS (per-seed frontier, anti-join against the
-    * visited set, Lineage.cut per hop — O(E) per hop, never path
-    * enumeration); the oracle's recursive CTE dedups by UNION and
-    * takes min(dist), the graph_distances device with the seed
-    * carried through. Exact oracle.
-    */
-  def graphCloseness(s: SparkSession, dir: String): DataFrame = {
-    val maxHops = 4
-    val e = Tables.orders(s, dir)
-      .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
-      .select(
-        (col("o_custkey") % 150).as("src"),
-        ((col("l_suppkey") * 17 + col("l_partkey")) % 150).as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
-    val eCut = graft.Lineage.cut(e)
-    val seeds = eCut.filter(col("src") < 3)
-      .select(col("src").as("seed"), col("src").as("id")).distinct()
-    var dist = graft.Lineage.cut(seeds.withColumn("dist", lit(0L)))
-    var frontier = graft.Lineage.cut(seeds)
-    var hop = 1
-    var drained = false
-    while (hop <= maxHops && !drained) {
-      val next = graft.Lineage.cut(
-        frontier
-          .join(eCut, col("id") === col("src"))
-          .select(col("seed"), col("dst").as("id"))
-          .distinct()
-          .join(dist, Seq("seed", "id"), "left_anti"))
-      drained = next.isEmpty
-      if (!drained) {
-        dist = graft.Lineage.cut(
-          dist.unionByName(next.withColumn("dist", lit(hop.toLong))))
-        frontier = next
-      }
-      hop += 1
-    }
-    dist.groupBy(col("seed"))
-      .agg(count(lit(1)).as("reached"), sum(col("dist")).as("sumd"),
-        max(col("dist")).as("eccentricity"))
-      .select(col("seed"), (col("reached") - 1).as("reached"),
-        col("eccentricity"),
-        emit((col("reached") - 1).cast("double") / col("sumd").cast("double"), 6)
-          .as("closeness"))
-      .orderBy(col("seed"))
-  }
-
-  val graphClosenessSql: String =
-    """WITH RECURSIVE e AS (
-      |  SELECT DISTINCT o_custkey % 150 AS src, (l_suppkey * 17 + l_partkey) % 150 AS dst
-      |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-      |  WHERE o_custkey % 150 <> (l_suppkey * 17 + l_partkey) % 150
-      |), walk(seed, id, d) AS (
-      |  SELECT DISTINCT src AS seed, src AS id, 0 AS d FROM e WHERE src < 3
-      |  UNION
-      |  SELECT w.seed, e.dst, w.d + 1 FROM walk w JOIN e ON e.src = w.id WHERE w.d < 4
-      |), md AS (
-      |  SELECT seed, id, min(d) AS dist FROM walk GROUP BY 1, 2
-      |)
-      |SELECT seed, CAST(count(*) - 1 AS BIGINT) AS reached,
-      |  CAST(max(dist) AS BIGINT) AS eccentricity,
-      |  (CAST(round(CAST(count(*) - 1 AS DOUBLE) / CAST(sum(dist) AS DOUBLE), 6) AS DOUBLE) + 0.0) AS closeness
-      |FROM md GROUP BY seed
-      |ORDER BY seed""".stripMargin
-
   val keys: Seq[Key] = Seq(
     exact("mixture_reweight_step", mixtureReweightStep, mixtureReweightStepSql),
     exact("hac_mean_se", hacMeanSe, hacMeanSeSql),
     exact("lang_drift_interaction", langDriftInteraction, langDriftInteractionSql),
-    exact("best_split_stump", bestSplitStump, bestSplitStumpSql),
-    exact("graph_closeness", graphCloseness, graphClosenessSql))
+    exact("best_split_stump", bestSplitStump, bestSplitStumpSql))
 }

@@ -6,15 +6,11 @@ import org.apache.spark.sql.functions._
 import graft.{Key, OracleMath, Tables}
 import graft.Key.exact
 
-/** Round-25 operators (repo round 8, continued) — two axes: the
-  * per-point cluster-validity read (simplified silhouette — how many
-  * vectors actually sit closer to a FOREIGN label's centroid;
+/** Round-25 operators (repo round 8, continued): the per-point
+  * cluster-validity read (simplified silhouette — how many vectors
+  * actually sit closer to a FOREIGN label's centroid;
   * label_separation #398 scores labels in aggregate, the silhouette
-  * localizes the blame), and the rich-club coefficient of the
-  * interaction graph (do the hubs wire to each other — the
-  * centralization read assortativity #? summarizes by correlation
-  * and k-core by pruning; the rich club measures hub-to-hub density
-  * directly per degree threshold).
+  * localizes the blame). rich_club_coefficient lives in [[GraphOps]].
   *
   * House rules as Round15–24: exact integer/decimal moments, mirrored
   * double chains, 12-dp-rounded libm terms into order-free
@@ -128,86 +124,6 @@ object Round25Ops {
       |GROUP BY label
       |ORDER BY label""".stripMargin
 
-  /** #428 rich_club_coefficient — do the hubs wire to each other:
-    * over the undirected interaction graph (the graph-family
-    * synthetic edge set), for each degree threshold k ∈ {2, 5, 10}
-    * the node count with degree > k, the edge count among them, and
-    * φ(k) = 2·E/(n(n−1)) — the hub-to-hub density
-    * (graph_assortativity summarizes degree mixing by ONE
-    * correlation; k-core prunes; the rich club reads centralization
-    * directly, threshold by threshold). Degrees and edge subsets are
-    * exact integer set algebra: undirected edges dedup as (lo, hi)
-    * pairs, degrees count distinct neighbors, the per-k membership
-    * joins broadcast the bounded degree table. Exact oracle.
-    */
-  def richClubCoefficient(s: SparkSession, dir: String): DataFrame = {
-    val e0 = Tables.orders(s, dir)
-      .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
-      .select(
-        (col("o_custkey") % 150).as("src"),
-        ((col("l_suppkey") * 17 + col("l_partkey")) % 150).as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-    val edges = graft.Lineage.cut(e0)
-    val deg = edges.select(col("a").as("node"))
-      .unionByName(edges.select(col("b").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-    val degCut = graft.Lineage.cut(deg)
-    val ks = Seq(2L, 5L, 10L)
-    val grid = degCut.select(col("node"), col("deg"),
-      explode(array(ks.map(lit): _*)).as("k"))
-      .filter(col("deg") > col("k"))
-    val members = graft.Lineage.cut(grid.select(col("k"), col("node")))
-    val nk = members.groupBy(col("k")).agg(count(lit(1)).as("n_nodes"))
-    val ek = edges
-      .join(members.select(col("k"), col("node").as("a")), Seq("a"))
-      .join(members.select(col("k").as("k2"), col("node").as("b")), Seq("b"))
-      .filter(col("k") === col("k2"))
-      .groupBy(col("k")).agg(count(lit(1)).as("n_edges"))
-    def d(c: String) = col(c).cast("double")
-    nk.join(ek, Seq("k"), "left")
-      .select(col("k"), col("n_nodes"),
-        coalesce(col("n_edges"), lit(0L)).as("n_edges"))
-      .select(col("k"), col("n_nodes"), col("n_edges"),
-        emit(when(col("n_nodes") > 1,
-          lit(2.0) * d("n_edges") / (d("n_nodes") * (d("n_nodes") - 1.0))), 6)
-          .as("phi"))
-      .orderBy(col("k"))
-  }
-
-  val richClubCoefficientSql: String =
-    """WITH e0 AS (
-      |  SELECT DISTINCT least(o_custkey % 150, (l_suppkey * 17 + l_partkey) % 150) AS a,
-      |    greatest(o_custkey % 150, (l_suppkey * 17 + l_partkey) % 150) AS b
-      |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-      |  WHERE o_custkey % 150 <> (l_suppkey * 17 + l_partkey) % 150
-      |), deg AS (
-      |  SELECT node, count(*) AS deg FROM (
-      |    SELECT a AS node FROM e0 UNION ALL SELECT b FROM e0
-      |  ) GROUP BY 1
-      |), members AS (
-      |  SELECT k, node FROM deg
-      |  CROSS JOIN (SELECT CAST(unnest([2, 5, 10]) AS BIGINT) AS k)
-      |  WHERE deg > k
-      |), nk AS (SELECT k, count(*) AS n_nodes FROM members GROUP BY 1),
-      |ek AS (
-      |  SELECT ma.k, count(*) AS n_edges
-      |  FROM e0
-      |  JOIN members ma ON e0.a = ma.node
-      |  JOIN members mb ON e0.b = mb.node AND mb.k = ma.k
-      |  GROUP BY 1
-      |)
-      |SELECT nk.k, n_nodes, CAST(coalesce(n_edges, 0) AS BIGINT) AS n_edges,
-      |  CASE WHEN n_nodes > 1 THEN
-      |    (CAST(round(CAST(2.0 * CAST(coalesce(n_edges, 0) AS DOUBLE)
-      |      / (CAST(n_nodes AS DOUBLE) * (CAST(n_nodes AS DOUBLE) - 1.0)) AS DECIMAL(28,14)), 6) AS DOUBLE) + 0.0)
-      |  END AS phi
-      |FROM nk LEFT JOIN ek ON nk.k = ek.k
-      |ORDER BY nk.k""".stripMargin
-
   val keys: Seq[Key] = Seq(
-    exact("silhouette_report", silhouetteReport, silhouetteReportSql),
-    exact("rich_club_coefficient", richClubCoefficient, richClubCoefficientSql))
+    exact("silhouette_report", silhouetteReport, silhouetteReportSql))
 }

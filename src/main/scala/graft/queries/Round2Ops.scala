@@ -6,11 +6,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Round-2 operators: label-propagation communities, frequency-table
-  * exact percentiles (the 100 TB exact path), label-set refresh
-  * (run_update_labels_query, main.rs:3927), and per-block pipeline
-  * debug counts (the reference's block timing/count debug surface,
-  * main.rs:2546).
+/** Round-2 operators: frequency-table exact percentiles (the 100 TB
+  * exact path), label-set refresh (run_update_labels_query,
+  * main.rs:3927), and per-block pipeline debug counts (the
+  * reference's block timing/count debug surface, main.rs:2546).
+  * graph_communities lives in [[GraphOps]].
   */
 object Round2Ops {
   import OracleMath._
@@ -33,79 +33,6 @@ object Round2Ops {
     """SELECT o_custkey % 150 AS src, (l_suppkey * 17 + l_partkey) % 150 AS dst
       |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
       |WHERE o_custkey % 150 <> (l_suppkey * 17 + l_partkey) % 150""".stripMargin
-
-  /** #59 label-propagation communities (the classic synchronous mode
-    * update): every node adopts its neighbors' most frequent label,
-    * ties to the smallest label, two fixed rounds — fully deterministic,
-    * so the SQL oracle reproduces it exactly. Each round is one O(E)
-    * shuffle (join on the neighbor key + two-phase count) — the shape
-    * that scales to billion-edge graphs; no driver-side state.
-    */
-  def graphCommunities(s: SparkSession, dir: String): DataFrame =
-    communityParts(s, dir)._2
-      .select(col("node"), col("label").as("community")).orderBy(col("node"))
-
-  /** The label-propagation internals as reusable CUT frames —
-    * (symmetric deduped edges, final labels). graph_modularity (r11)
-    * consumes these directly instead of re-deriving its own sym cut
-    * and re-cutting the already-cut labels through an extra sort: one
-    * sym materialization and one labels materialization serve both.
-    */
-  private[queries] def communityParts(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val dedges = edgesDf(s, dir).distinct()
-    // three propagation reads of the same edge set: materialize once
-    // (Lineage.cut: localCheckpoint locally, reliable checkpoint when
-    // spark.graft.checkpoint.reliable=true)
-    val sym = graft.Lineage.cut(
-      dedges
-        .unionByName(dedges.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct())
-    val labels0 = sym.select(col("src").as("node")).distinct().withColumn("label", col("node"))
-    val labels = (1 to 2).foldLeft(labels0) { (labels, _) =>
-      val counted = sym
-        .join(labels.select(col("node").as("dst"), col("label").as("nl")), "dst")
-        .groupBy(col("src"), col("nl"))
-        .agg(count(lit(1)).as("c"))
-      val w = Window.partitionBy(col("src")).orderBy(col("c").desc, col("nl"))
-      val mode = counted
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("src").as("node"), col("nl").as("new_label"))
-      graft.Lineage.cut( // labels feeds two subtrees next round
-        labels
-          .join(mode, Seq("node"), "left")
-          .select(col("node"), coalesce(col("new_label"), col("label")).as("label")))
-    }
-    (sym, labels)
-  }
-
-  val graphCommunitiesSql: String =
-    s"""WITH edges AS ($edgesSql),
-       |dedges AS (SELECT DISTINCT src, dst FROM edges),
-       |sym AS (SELECT src, dst FROM dedges UNION SELECT dst AS src, src AS dst FROM dedges),
-       |l0 AS (SELECT DISTINCT src AS node, src AS label FROM sym),
-       |c1 AS (
-       |  SELECT s.src, l.label AS nl, COUNT(*) AS c
-       |  FROM sym s JOIN l0 l ON l.node = s.dst GROUP BY 1, 2
-       |), m1 AS (
-       |  SELECT src AS node, nl AS new_label FROM (
-       |    SELECT src, nl, row_number() OVER (PARTITION BY src ORDER BY c DESC, nl) AS rn FROM c1
-       |  ) WHERE rn = 1
-       |), l1 AS (
-       |  SELECT l.node, coalesce(m.new_label, l.label) AS label
-       |  FROM l0 l LEFT JOIN m1 m USING (node)
-       |), c2 AS (
-       |  SELECT s.src, l.label AS nl, COUNT(*) AS c
-       |  FROM sym s JOIN l1 l ON l.node = s.dst GROUP BY 1, 2
-       |), m2 AS (
-       |  SELECT src AS node, nl AS new_label FROM (
-       |    SELECT src, nl, row_number() OVER (PARTITION BY src ORDER BY c DESC, nl) AS rn FROM c2
-       |  ) WHERE rn = 1
-       |), l2 AS (
-       |  SELECT l.node, coalesce(m.new_label, l.label) AS label
-       |  FROM l1 l LEFT JOIN m2 m USING (node)
-       |)
-       |SELECT node, label AS community FROM l2 ORDER BY node""".stripMargin
 
   // ------------------------------------- frequency-table percentiles
 
@@ -228,7 +155,6 @@ object Round2Ops {
        |ORDER BY block""".stripMargin
 
   val keys: Seq[Key] = Seq(
-    exact("graph_communities", graphCommunities, graphCommunitiesSql),
     exact("percentiles_freq", percentilesFreq, percentilesFreqSql),
     exact("update_labels", updateLabels, updateLabelsSql),
     exact("pipeline_debug", pipelineDebug, pipelineDebugSql(FeedBlocks.NowMs)))

@@ -10,7 +10,7 @@ import graft.Key.{exact, rowsOnly}
   * decision-support shape still absent (Q12), and the corpus-pipeline
   * maintenance ops a 100 TB training-data lake runs between full
   * rebuilds (snapshot diff, passage-level dedup, sequence packing,
-  * indexed BM25 retrieval, bounded-hop graph distances).
+  * indexed BM25 retrieval).
   */
 object Round9Ops {
   import OracleMath._
@@ -300,61 +300,6 @@ object Round9Ops {
     }
     graft.sources.InvertedIndex.search(s, idx, Seq("vector", "hash", "stream"), k = 20)
   }
-
-  /** #234 graph_distances — bounded-hop BFS shortest distances from a
-    * seed set (the "how far is this account from known-bad seeds"
-    * trust query; the reference's graph surface stops at 2 hops,
-    * main.rs:3040 — this generalizes to min-distance ≤ 4). Frontier
-    * iteration: each round joins the frontier to the edge list
-    * (shuffle on the hop key), anti-joins already-settled nodes, and
-    * lineage-cuts both relations so round N's plan never re-derives
-    * round N-1; early-exits when the frontier drains. State is
-    * O(nodes), per-round work O(frontier-adjacent edges) — the BSP
-    * shape Pregel runs at 100 TB. Exact oracle: DuckDB recursive CTE
-    * (UNION-dedup walk ≤ 4 hops, then min(d) per node).
-    */
-  def graphDistances(s: SparkSession, dir: String): DataFrame = {
-    val maxHops = 4
-    val e = Tables.orders(s, dir)
-      .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
-      .select(
-        (col("o_custkey") % 150).as("src"),
-        ((col("l_suppkey") * 17 + col("l_partkey")) % 150).as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
-    val seeds = e.filter(col("src") < 3).select(col("src").as("id")).distinct()
-    var dist = graft.Lineage.cut(seeds.withColumn("dist", lit(0L)))
-    var frontier = graft.Lineage.cut(seeds)
-    var hop = 1
-    var drained = false
-    while (hop <= maxHops && !drained) {
-      val next = graft.Lineage.cut(
-        frontier
-          .join(e, col("id") === col("src"))
-          .select(col("dst").as("id"))
-          .distinct()
-          .join(dist, Seq("id"), "left_anti"))
-      drained = next.isEmpty
-      if (!drained) {
-        dist = graft.Lineage.cut(dist.unionByName(next.withColumn("dist", lit(hop.toLong))))
-        frontier = next
-      }
-      hop += 1
-    }
-    dist.orderBy(col("id"))
-  }
-
-  val graphDistancesSql: String =
-    """WITH RECURSIVE e AS (
-      |  SELECT DISTINCT o_custkey % 150 AS src, (l_suppkey * 17 + l_partkey) % 150 AS dst
-      |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-      |  WHERE o_custkey % 150 <> (l_suppkey * 17 + l_partkey) % 150
-      |), walk(id, d) AS (
-      |  SELECT DISTINCT src AS id, 0 AS d FROM e WHERE src < 3
-      |  UNION
-      |  SELECT e.dst, w.d + 1 FROM walk w JOIN e ON e.src = w.id WHERE w.d < 4
-      |)
-      |SELECT id, CAST(min(d) AS BIGINT) AS dist FROM walk GROUP BY id ORDER BY id""".stripMargin
 
   /** #235 corpus_sample_stratified — per-source weighted sampling:
     * corpus_weighted_sample's Efraimidis-Spirakis key (deterministic
@@ -1108,7 +1053,6 @@ object Round9Ops {
     exact("passage_dedup", passageDedup, passageDedupSql),
     exact("seq_pack", seqPack, seqPackSql),
     exact("bm25_indexed", bm25Indexed, Round5Ops.bm25SearchSql),
-    exact("graph_distances", graphDistances, graphDistancesSql),
     exact("corpus_sample_stratified", corpusSampleStratified, corpusSampleStratifiedSql),
     exact("doc_quality_classifier", docQualityClassifier, docQualityClassifierSql),
     rowsOnly("neardup_incremental", neardupIncremental),
