@@ -6,16 +6,21 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Social-graph list expansions (§2 #48-#53): the reference's
-  * `fetch_list` sources — following / following-of-following / mutuals
-  * (SurrealDB graph traversals, main.rs:3037-3043), skygraph topMoots
-  * (weighted edges, main.rs:3077) and community membership
-  * (main.rs:3059) — re-expressed as joins over an edge relation.
+/** Every graph key. The reference's `fetch_list` sources (§2 #48-#53)
+  * — following / following-of-following / mutuals (SurrealDB graph
+  * traversals, main.rs:3037-3043), skygraph topMoots (weighted edges,
+  * main.rs:3077) and community membership (main.rs:3059) —
+  * re-expressed as joins over an edge relation, and the graph
+  * analytics over the same relations: ranking, communities,
+  * distances, cores and degree structure.
   *
-  * The edge list is derived deterministically from the testdata
+  * The edge lists are derived deterministically from the testdata
   * (purchases projected into one user-id space) so both engines build
-  * the identical graph. Every traversal is an equi-join + distinct:
-  * the shape that shuffles on the edge key and scales linearly.
+  * the identical graph. Each device is defined once here, with its
+  * oracle twin: the follows graph ([[edges]]), the interaction graph
+  * ([[interactions]]), the undirected view ([[undirected]]), the
+  * PageRank rounds ([[pageRankRounds]]), the frontier BFS
+  * ([[frontierBfs]]) and the k-core peel ([[kcoreOver]]).
   */
 object GraphOps {
   import OracleMath._
@@ -36,6 +41,41 @@ object GraphOps {
     """SELECT o_custkey % 150 AS src, (l_suppkey * 17 + l_partkey) % 150 AS dst
       |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
       |WHERE o_custkey % 150 <> (l_suppkey * 17 + l_partkey) % 150""".stripMargin
+
+  /** Interaction graph: the SAME order→supplier purchases projected
+    * into a 4000-id space. The %150 follows graph is near-complete
+    * (every node would survive any small k-core, and degree
+    * correlation is pinned near a constant by density); here degrees
+    * spread 1..90 at sf0.01.
+    */
+  private def interactions(s: SparkSession, dir: String): DataFrame =
+    Tables
+      .orders(s, dir)
+      .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
+      .select(
+        ((col("o_custkey") * 31 + col("l_linenumber")) % 4000).as("src"),
+        ((col("l_suppkey") * 17 + col("l_partkey")) % 4000).as("dst"))
+      .filter(col("src") =!= col("dst"))
+
+  /** [[interactions]]' oracle, as the `e0` CTE. */
+  private val interactionsSql: String =
+    """e0 AS (
+      |  SELECT (o_custkey*31 + l_linenumber) % 4000 AS src,
+      |         (l_suppkey*17 + l_partkey) % 4000 AS dst
+      |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+      |  WHERE (o_custkey*31 + l_linenumber) % 4000 <> (l_suppkey*17 + l_partkey) % 4000
+      |)""".stripMargin
+
+  /** The undirected view of a (src, dst) edge frame: each edge once, as
+    * the (a, b) pair with a < b.
+    */
+  private def undirected(e: DataFrame): DataFrame =
+    e.select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
+      .distinct()
+
+  /** Every node of a (src, dst) edge frame, as `id`. */
+  private def nodesOf(e: DataFrame): DataFrame =
+    e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct()
 
   /** #48 following: 1-hop out-neighbors of the seed users. */
   def graphFollowing(s: SparkSession, dir: String): DataFrame =
@@ -192,23 +232,54 @@ object GraphOps {
     * re-rounds to 12 dp, so both engines walk bit-identical values and
     * the DuckDB oracle is the same three iterations unrolled as CTEs.
     * Dangling mass is not redistributed (simplified PageRank) —
-    * identical on both sides, documented here. Scale shape: each
-    * iteration is one edge-key join + one (dst) aggregate — O(E)
-    * shuffle per round, the node vector never leaves the cluster, and
-    * Lineage.cut stops plan re-derivation across rounds (2^iters
-    * blow-up otherwise). Final ranking sorts ROUNDED doubles with an
-    * id tie-break (the engine-portable rank rule).
+    * identical on both sides, documented here. The rounds are
+    * [[pageRankRounds]]: O(E) shuffle per round, the node vector never
+    * leaves the cluster, and Lineage.cut stops plan re-derivation
+    * across rounds (2^iters blow-up otherwise). Final ranking sorts
+    * ROUNDED doubles with an id tie-break (the engine-portable rank
+    * rule).
     */
-  def pageRank(s: SparkSession, dir: String): DataFrame = {
+  def pageRank(s: SparkSession, dir: String): DataFrame =
     // consumed by nodes/deg AND every round's inflow join: cut once
-    val e = graft.Lineage.cut(edges(s, dir).distinct())
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
+    uniformRanks(graft.Lineage.cut(edges(s, dir).distinct()))
+      .select(col("id"), emit(col("rank"), 6).as("rank"))
+      .orderBy(col("rank").desc, col("id"))
+
+  /** page_rank's rounds over a deduped (src, dst) edge frame: start at
+    * 1/n, teleport 0.15/n.
+    */
+  private[graft] def uniformRanks(e: DataFrame): DataFrame = {
+    val nodes = nodesOf(e)
     val nRow = nodes.agg(count(lit(1)).as("n")) // single-row broadcast
+    pageRankRounds(e, nodes, nRow, lit(1.0) / col("n"), lit(0.15) / col("n"))
+  }
+
+  /** personalized_pagerank's rounds: start at 1/|S| and teleport
+    * 0.15/|S| on the seed set S, 0 elsewhere.
+    */
+  private[graft] def seededRanks(e: DataFrame, seed: Column): DataFrame = {
+    val nodes = nodesOf(e)
+    val seedN = nodes.filter(seed).agg(count(lit(1)).as("ns"))
+    pageRankRounds(e, nodes, seedN,
+      when(seed, lit(1.0) / col("ns").cast("double")).otherwise(lit(0.0)),
+      when(seed, lit(0.15) / col("ns").cast("double")).otherwise(lit(0.0)))
+  }
+
+  /** Three synchronous PageRank rounds (d = 0.85) over the deduped edge
+    * frame `e`: each round is one edge-key join + one (dst) aggregate,
+    * contributions rounded to 12 dp and summed through DECIMAL, and the
+    * round's rank re-rounded to 12 dp and cut. `scalar` is the one-row
+    * frame whose column `init` and `teleport` read; it rides along in
+    * every round's rows.
+    */
+  private def pageRankRounds(
+      e: DataFrame, nodes: DataFrame, scalar: DataFrame,
+      init: Column, teleport: Column): DataFrame = {
+    val carried = col(scalar.columns.head)
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     var r = nodes
-      .crossJoin(broadcast(nRow))
-      .select(col("id"), (lit(1.0) / col("n")).as("rank"), col("n"))
+      .crossJoin(broadcast(scalar))
+      .select(col("id"), init.as("rank"), carried)
     for (_ <- 1 to 3) {
       val inflow = e
         .join(r.select(col("id").as("src"), col("rank")), Seq("src"))
@@ -218,46 +289,86 @@ object GraphOps {
         .agg(sum(col("c")).as("inflow"))
       r = graft.Lineage.cut(
         nodes
-          .crossJoin(broadcast(nRow))
+          .crossJoin(broadcast(scalar))
           .join(inflow, Seq("id"), "left")
           .select(
             col("id"),
             round(
-              lit(0.15) / col("n") +
+              teleport +
                 lit(0.85) * coalesce(col("inflow").cast("double"), lit(0.0)),
               12).as("rank"),
-            col("n")))
+            carried))
     }
-    r.select(col("id"), emit(col("rank"), 6).as("rank"))
-      .orderBy(col("rank").desc, col("id"))
+    r
   }
 
-  val pageRankSql: String = {
-    def iter(prev: String, k: Int): String =
+  /** The oracle's deduped follows graph `e` and its `nodes`: the CTEs
+    * every ranking oracle starts from.
+    */
+  private val nodesSql: String =
+    s"""WITH edges_raw AS ($edgesSql),
+       |e AS (SELECT DISTINCT src, dst FROM edges_raw),
+       |nodes AS (
+       |  SELECT DISTINCT id FROM (SELECT src AS id FROM e UNION SELECT dst AS id FROM e)
+       |),""".stripMargin
+
+  /** [[pageRankRounds]]' oracle: rounds i1..i3 from i0. `teleport` is the
+    * SQL term ahead of the inflow, with the whitespace that follows it;
+    * `scalar` is the one-row CTE it reads.
+    */
+  private def pageRankRoundsSql(teleport: String, scalar: String): String =
+    (1 to 3).map { k =>
+      val prev = s"i${k - 1}"
       s"""c$k AS (
          |  SELECT e.dst AS id, CAST(round($prev.rank / deg.deg, 12) AS DECIMAL(38,12)) AS c
          |  FROM e JOIN $prev ON e.src = $prev.id JOIN deg ON e.src = deg.src
          |),
          |i$k AS (
          |  SELECT nodes.id,
-         |    round(0.15 / n.n + 0.85 * coalesce(CAST(t.s AS DOUBLE), 0), 12) AS rank
-         |  FROM nodes CROSS JOIN n
+         |    round(${teleport}+ 0.85 * coalesce(CAST(t.s AS DOUBLE), 0), 12) AS rank
+         |  FROM nodes CROSS JOIN $scalar
          |  LEFT JOIN (SELECT id, sum(c) AS s FROM c$k GROUP BY id) t ON nodes.id = t.id
          |)""".stripMargin
-    s"""WITH edges_raw AS ($edgesSql),
-       |e AS (SELECT DISTINCT src, dst FROM edges_raw),
-       |nodes AS (
-       |  SELECT DISTINCT id FROM (SELECT src AS id FROM e UNION SELECT dst AS id FROM e)
-       |),
+    }.mkString(",\n")
+
+  val pageRankSql: String =
+    s"""$nodesSql
        |n AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes),
        |deg AS (SELECT src, count(*) AS deg FROM e GROUP BY src),
        |i0 AS (SELECT id, 1.0 / n.n AS rank FROM nodes CROSS JOIN n),
-       |${iter("i0", 1)},
-       |${iter("i1", 2)},
-       |${iter("i2", 3)}
+       |${pageRankRoundsSql("0.15 / n.n ", "n")}
        |SELECT id, (CAST(round(rank, 6) AS DOUBLE) + 0.0) AS rank
        |FROM i3 ORDER BY rank DESC, id""".stripMargin
-  }
+
+  /** #308 personalized_pagerank — PageRank with teleport restricted to
+    * a SEED set (Haveliwala 2002): the "how relevant is every node to
+    * THESE accounts" primitive behind recommendation and
+    * trust-propagation reads of the follow graph (graph_distances
+    * answers hop-distance from seeds; this answers stationary
+    * visit probability). The same [[pageRankRounds]] as #57
+    * page_rank, with the teleport term 0.15·[id ∈ S]/|S| replacing
+    * 0.15/n. Seeds here: node id < 5 (the graphFollowing seed rule);
+    * the seed count is a broadcast-joined one-row relation. Exact
+    * oracle: the same three rounds unrolled as CTEs.
+    */
+  def personalizedPagerank(s: SparkSession, dir: String): DataFrame =
+    // consumed by nodes/deg AND every round's inflow join: cut once
+    seededRanks(graft.Lineage.cut(edges(s, dir).distinct()), col("id") < 5)
+      .select(col("id"), emit(col("rank"), 6).as("ppr"))
+      .filter(col("ppr") > 0.0)
+      .orderBy(col("ppr").desc, col("id"))
+
+  val personalizedPagerankSql: String =
+    s"""$nodesSql
+       |ns AS (SELECT CAST(count(*) AS DOUBLE) AS ns FROM nodes WHERE id < 5),
+       |deg AS (SELECT src, count(*) AS deg FROM e GROUP BY src),
+       |i0 AS (
+       |  SELECT id, CASE WHEN id < 5 THEN 1.0 / ns.ns ELSE 0.0 END AS rank
+       |  FROM nodes CROSS JOIN ns
+       |),
+       |${pageRankRoundsSql("CASE WHEN nodes.id < 5 THEN 0.15 / ns.ns ELSE 0.0 END\n      ", "ns")}
+       |SELECT id, (CAST(round(rank, 6) AS DOUBLE) + 0.0) AS ppr
+       |FROM i3 WHERE round(rank, 6) > 0.0 ORDER BY ppr DESC, id""".stripMargin
 
   /** #58 triangle count: the clustering metric over the undirected
     * follow graph. Canonical ordered-wedge form — undirect edges to
@@ -269,9 +380,7 @@ object GraphOps {
     * shuffle near O(E^1.5) instead of Σdeg²).
     */
   def triangleCount(s: SparkSession, dir: String): DataFrame = {
-    val und = edges(s, dir)
-      .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
-      .distinct()
+    val und = undirected(edges(s, dir))
     val wedges = und
       .join(und.select(col("a").as("b"), col("b").as("c")), Seq("b"))
       .filter(col("b") < col("c"))
@@ -302,9 +411,7 @@ object GraphOps {
     * bounded aggregate and the two single-row sides meet by broadcast.
     */
   def graphClusteringCoeff(s: SparkSession, dir: String): DataFrame = {
-    val und = edges(s, dir)
-      .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
-      .distinct()
+    val und = undirected(edges(s, dir))
     val wedges = und.select(col("a").as("v"))
       .unionAll(und.select(col("b").as("v")))
       .groupBy(col("v"))
@@ -434,11 +541,8 @@ object GraphOps {
     * stronger than a raw degree threshold because peripheral
     * followers don't prop each other up). Computed by the textbook
     * peel: drop nodes under degree k, recompute induced degrees,
-    * repeat. The %150 projection the other graph queries share is
-    * near-complete (every node would survive any small k), so this
-    * one projects the SAME order→supplier interactions into a 4000-id
-    * space where degrees spread 1..90 — the 20-core peels away a
-    * third of the graph over 7 rounds at sf0.01.
+    * repeat, over the undirected [[interactions]] graph — the 20-core
+    * peels away a third of it over 7 rounds at sf0.01.
     *
     * Both engines run a FIXED 8 peel rounds — one past convergence on
     * the oracle data, so the output is the true fixpoint there, and
@@ -453,17 +557,8 @@ object GraphOps {
     * cross-engine hash gate.
     */
   def graphKcore(s: SparkSession, dir: String): DataFrame = {
-    val und = Tables
-      .orders(s, dir)
-      .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
-      .select(
-        ((col("o_custkey") * 31 + col("l_linenumber")) % 4000).as("src"),
-        ((col("l_suppkey") * 17 + col("l_partkey")) % 4000).as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
-      .distinct()
     // induced() re-reads und every peel round: cut once
-    kcoreOver(graft.Lineage.cut(und), k = 20, rounds = 8)
+    kcoreOver(graft.Lineage.cut(undirected(interactions(s, dir))), k = 20, rounds = 8)
   }
 
   /** The peel over any undirected (a, b) edge frame — test entry.
@@ -517,12 +612,7 @@ object GraphOps {
          |  ) GROUP BY id HAVING count(*) >= 20
          |)""".stripMargin
     val rounds = (1 to 8).map(i => round(s"a${i - 1}", s"a$i")).mkString(",\n")
-    """WITH e0 AS (
-      |  SELECT (o_custkey*31 + l_linenumber) % 4000 AS src,
-      |         (l_suppkey*17 + l_partkey) % 4000 AS dst
-      |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-      |  WHERE (o_custkey*31 + l_linenumber) % 4000 <> (l_suppkey*17 + l_partkey) % 4000
-      |),
+    s"""WITH $interactionsSql,
       |und AS MATERIALIZED (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b FROM e0),
       |a0 AS (SELECT DISTINCT id FROM (SELECT a AS id FROM und UNION ALL SELECT b AS id FROM und)),
       |""".stripMargin + rounds +
@@ -538,9 +628,8 @@ object GraphOps {
     * the undirected edge set (Newman's assortativity; social graphs
     * run positive — hubs befriend hubs — bot farms and star spam run
     * strongly negative, which is why it's an integrity dashboard
-    * number). Uses the SAME 4000-id projection as graph_kcore (the
-    * %150 graph is near-complete, where r is pinned near a constant
-    * by density). Shape: one degree agg, two fine-keyed joins to tag
+    * number), over the undirected [[interactions]] graph like
+    * graph_kcore. Shape: one degree agg, two fine-keyed joins to tag
     * both endpoints, then a single-row moment aggregate — every
     * moment (n, Σx, Σy, Σxy, Σx², Σy²) is an exact integer sum, and r
     * is ONE double expression over exact ints (identical IEEE both
@@ -548,15 +637,7 @@ object GraphOps {
     * the oracle preserves naturally by unioning both orientations.
     */
   def graphAssortativity(s: SparkSession, dir: String): DataFrame = {
-    val und = Tables
-      .orders(s, dir)
-      .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
-      .select(
-        ((col("o_custkey") * 31 + col("l_linenumber")) % 4000).as("src"),
-        ((col("l_suppkey") * 17 + col("l_partkey")) % 4000).as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
-      .distinct()
+    val und = undirected(interactions(s, dir))
     val dirEdges = und.unionAll(und.select(col("b").as("a"), col("a").as("b")))
     val deg = dirEdges.groupBy(col("a").as("id")).agg(count(lit(1)).as("d"))
     val pairs = dirEdges
@@ -583,12 +664,7 @@ object GraphOps {
   }
 
   val graphAssortativitySql: String =
-    """WITH e0 AS (
-      |  SELECT (o_custkey*31 + l_linenumber) % 4000 AS src,
-      |         (l_suppkey*17 + l_partkey) % 4000 AS dst
-      |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-      |  WHERE (o_custkey*31 + l_linenumber) % 4000 <> (l_suppkey*17 + l_partkey) % 4000
-      |),
+    s"""WITH $interactionsSql,
       |und AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b FROM e0),
       |de AS (SELECT a, b FROM und UNION ALL SELECT b AS a, a AS b FROM und),
       |deg AS (SELECT a AS id, count(*) AS d FROM de GROUP BY 1),
@@ -663,27 +739,23 @@ object GraphOps {
     // consumer re-runs the orders⋈lineitem derivation (r9: 6.3 s → the
     // per-round work is then joins over the ≤22k-row pinned edge set)
     val e = graft.Lineage.cut(edges(s, dir).distinct())
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
+    val nodes = nodesOf(e)
     val nRow = nodes.agg(count(lit(1)).as("n"))
-    var h = nodes.crossJoin(broadcast(nRow))
+    // one L1-normalized half-step: score flows from `from` to `to`
+    def flow(score: DataFrame, from: String, to: String): DataFrame = {
+      val raw = e.join(score.select(col("id").as(from), col("score")), Seq(from))
+        .select(col(to).as("id"), round(col("score"), 12).cast(Dec12).as("c"))
+        .groupBy(col("id")).agg(sum(col("c")).as("raw"))
+      val tot = raw.agg(sum(col("raw")).as("tot"))
+      graft.Lineage.cut(raw.crossJoin(broadcast(tot))
+        .select(col("id"),
+          round(col("raw").cast("double") / col("tot").cast("double"), 12).as("score")))
+    }
+    val h0 = nodes.crossJoin(broadcast(nRow))
       .select(col("id"), (lit(1.0) / col("n")).as("score"))
-    var a: DataFrame = null
-    for (_ <- 1 to 3) {
-      val aRaw = e.join(h.select(col("id").as("src"), col("score")), Seq("src"))
-        .select(col("dst").as("id"), round(col("score"), 12).cast(Dec12).as("c"))
-        .groupBy(col("id")).agg(sum(col("c")).as("raw"))
-      val aTot = aRaw.agg(sum(col("raw")).as("tot"))
-      a = graft.Lineage.cut(aRaw.crossJoin(broadcast(aTot))
-        .select(col("id"),
-          round(col("raw").cast("double") / col("tot").cast("double"), 12).as("score")))
-      val hRaw = e.join(a.select(col("id").as("dst"), col("score")), Seq("dst"))
-        .select(col("src").as("id"), round(col("score"), 12).cast(Dec12).as("c"))
-        .groupBy(col("id")).agg(sum(col("c")).as("raw"))
-      val hTot = hRaw.agg(sum(col("raw")).as("tot"))
-      h = graft.Lineage.cut(hRaw.crossJoin(broadcast(hTot))
-        .select(col("id"),
-          round(col("raw").cast("double") / col("tot").cast("double"), 12).as("score")))
+    val (a, h) = (1 to 3).foldLeft((h0, h0)) { case ((_, h), _) =>
+      val a = flow(h, "src", "dst")
+      (a, flow(a, "dst", "src"))
     }
     nodes
       .join(a.select(col("id"), col("score").as("authority")), Seq("id"), "left")
@@ -720,11 +792,7 @@ object GraphOps {
     val (s1, h1) = iter(1, "h0")
     val (s2, h2) = iter(2, h1)
     val (s3, _) = iter(3, h2)
-    s"""WITH edges_raw AS ($edgesSql),
-       |e AS (SELECT DISTINCT src, dst FROM edges_raw),
-       |nodes AS (
-       |  SELECT DISTINCT id FROM (SELECT src AS id FROM e UNION SELECT dst AS id FROM e)
-       |),
+    s"""$nodesSql
        |n AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes),
        |h0 AS (SELECT id, 1.0 / n.n AS score FROM nodes CROSS JOIN n),
        |$s1,
@@ -757,7 +825,7 @@ object GraphOps {
     * sym materialization and one labels materialization serve both.
     */
   private[queries] def communityParts(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val dedges = Round2Ops.edgesDf(s, dir).distinct()
+    val dedges = edges(s, dir).distinct()
     // three propagation reads of the same edge set: materialize once
     // (Lineage.cut: localCheckpoint locally, reliable checkpoint when
     // spark.graft.checkpoint.reliable=true)
@@ -785,7 +853,7 @@ object GraphOps {
   }
 
   val graphCommunitiesSql: String =
-    s"""WITH edges AS (${Round2Ops.edgesSql}),
+    s"""WITH edges AS ($edgesSql),
        |dedges AS (SELECT DISTINCT src, dst FROM edges),
        |sym AS (SELECT src, dst FROM dedges UNION SELECT dst AS src, src AS dst FROM dedges),
        |l0 AS (SELECT DISTINCT src AS node, src AS label FROM sym),
@@ -872,7 +940,7 @@ object GraphOps {
 
   val graphModularitySql: String =
     s"""WITH comm AS (${graphCommunitiesSql.replace("ORDER BY node", "")}),
-       |e0 AS (${Round2Ops.edgesSql}),
+       |e0 AS ($edgesSql),
        |dedges AS (SELECT DISTINCT src, dst FROM e0),
        |sym AS (
        |  SELECT src, dst FROM dedges
@@ -913,111 +981,34 @@ object GraphOps {
        |FROM rows0
        |ORDER BY community""".stripMargin
 
-  /** #308 personalized_pagerank — PageRank with teleport restricted to
-    * a SEED set (Haveliwala 2002): the "how relevant is every node to
-    * THESE accounts" primitive behind recommendation and
-    * trust-propagation reads of the follow graph (graph_distances
-    * answers hop-distance from seeds; this answers stationary
-    * visit probability). Same engine discipline as #57 page_rank —
-    * 3 synchronous rounds, d=0.85, per-edge contributions rounded
-    * 12 dp and summed through DECIMAL (order-free), rank re-rounded
-    * 12 dp per round, Lineage.cut between rounds, dangling mass not
-    * redistributed — with the teleport term 0.15·[id ∈ S]/|S| replacing
-    * 0.15/n. Seeds here: node id < 5 (the graphFollowing seed rule).
-    * Scale: O(E) edge-keyed join + fine agg per round; the seed
-    * indicator is a broadcast-joined tiny relation. Exact oracle:
-    * the same three rounds unrolled as CTEs.
-    */
-  def personalizedPagerank(s: SparkSession, dir: String): DataFrame = {
-    // consumed by nodes/deg AND every round's inflow join: cut once
-    val e = graft.Lineage.cut(edges(s, dir).distinct())
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-    val seedN = nodes.filter(col("id") < 5).agg(count(lit(1)).as("ns"))
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    var r = nodes
-      .crossJoin(broadcast(seedN))
-      .select(
-        col("id"),
-        when(col("id") < 5, lit(1.0) / col("ns").cast("double")).otherwise(lit(0.0)).as("rank"),
-        col("ns"))
-    for (_ <- 1 to 3) {
-      val inflow = e
-        .join(r.select(col("id").as("src"), col("rank")), Seq("src"))
-        .join(deg, Seq("src"))
-        .select(col("dst").as("id"), round(col("rank") / col("deg"), 12).cast(Dec12).as("c"))
-        .groupBy(col("id"))
-        .agg(sum(col("c")).as("inflow"))
-      r = graft.Lineage.cut(
-        nodes
-          .crossJoin(broadcast(seedN))
-          .join(inflow, Seq("id"), "left")
-          .select(
-            col("id"),
-            round(
-              when(col("id") < 5, lit(0.15) / col("ns").cast("double")).otherwise(lit(0.0)) +
-                lit(0.85) * coalesce(col("inflow").cast("double"), lit(0.0)),
-              12).as("rank"),
-            col("ns")))
-    }
-    r.select(col("id"), emit(col("rank"), 6).as("ppr"))
-      .filter(col("ppr") > 0.0)
-      .orderBy(col("ppr").desc, col("id"))
-  }
-
-  val personalizedPagerankSql: String = {
-    def iter(prev: String, k: Int): String =
-      s"""c$k AS (
-         |  SELECT e.dst AS id, CAST(round($prev.rank / deg.deg, 12) AS DECIMAL(38,12)) AS c
-         |  FROM e JOIN $prev ON e.src = $prev.id JOIN deg ON e.src = deg.src
-         |),
-         |i$k AS (
-         |  SELECT nodes.id,
-         |    round(CASE WHEN nodes.id < 5 THEN 0.15 / ns.ns ELSE 0.0 END
-         |      + 0.85 * coalesce(CAST(t.s AS DOUBLE), 0), 12) AS rank
-         |  FROM nodes CROSS JOIN ns
-         |  LEFT JOIN (SELECT id, sum(c) AS s FROM c$k GROUP BY id) t ON nodes.id = t.id
-         |)""".stripMargin
-    s"""WITH edges_raw AS ($edgesSql),
-       |e AS (SELECT DISTINCT src, dst FROM edges_raw),
-       |nodes AS (
-       |  SELECT DISTINCT id FROM (SELECT src AS id FROM e UNION SELECT dst AS id FROM e)
-       |),
-       |ns AS (SELECT CAST(count(*) AS DOUBLE) AS ns FROM nodes WHERE id < 5),
-       |deg AS (SELECT src, count(*) AS deg FROM e GROUP BY src),
-       |i0 AS (
-       |  SELECT id, CASE WHEN id < 5 THEN 1.0 / ns.ns ELSE 0.0 END AS rank
-       |  FROM nodes CROSS JOIN ns
-       |),
-       |${iter("i0", 1)},
-       |${iter("i1", 2)},
-       |${iter("i2", 3)}
-       |SELECT id, (CAST(round(rank, 6) AS DOUBLE) + 0.0) AS ppr
-       |FROM i3 WHERE round(rank, 6) > 0.0 ORDER BY ppr DESC, id""".stripMargin
-  }
-
   /** #234 graph_distances — bounded-hop BFS shortest distances from a
     * seed set (the "how far is this account from known-bad seeds"
     * trust query; the reference's graph surface stops at 2 hops,
-    * main.rs:3040 — this generalizes to min-distance ≤ 4). Frontier
-    * iteration: each round joins the frontier to the edge list
-    * (shuffle on the hop key), anti-joins already-settled nodes, and
-    * lineage-cuts both relations so round N's plan never re-derives
-    * round N-1; early-exits when the frontier drains. State is
-    * O(nodes), per-round work O(frontier-adjacent edges) — the BSP
-    * shape Pregel runs at 100 TB. Exact oracle: DuckDB recursive CTE
-    * (UNION-dedup walk ≤ 4 hops, then min(d) per node).
+    * main.rs:3040 — this generalizes to min-distance ≤ 4), by
+    * [[frontierBfs]]. State is O(nodes), per-round work
+    * O(frontier-adjacent edges) — the BSP shape Pregel runs at 100 TB.
+    * Exact oracle: DuckDB recursive CTE (UNION-dedup walk ≤ 4 hops,
+    * then min(d) per node).
     */
   def graphDistances(s: SparkSession, dir: String): DataFrame = {
-    val maxHops = 4
-    val e = Tables.orders(s, dir)
-      .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
-      .select(
-        (col("o_custkey") % 150).as("src"),
-        ((col("l_suppkey") * 17 + col("l_partkey")) % 150).as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
+    val e = edges(s, dir).distinct()
     val seeds = e.filter(col("src") < 3).select(col("src").as("id")).distinct()
+    frontierBfs(e, seeds, maxHops = 4).orderBy(col("id"))
+  }
+
+  /** Frontier BFS over the (src, dst) edge frame `e`, at most `maxHops`
+    * hops out from `seeds`. The seeds' last column is `id`; the columns
+    * before it (graph_closeness' `seed`) ride along, so each of their
+    * values walks on its own. Each hop joins the frontier to `e`
+    * (shuffle on the hop key), anti-joins what `dist` already holds
+    * and cuts both, so hop N's plan never re-derives hop N-1; the walk
+    * stops once the frontier drains. Returns the seeds' columns plus
+    * `dist`: each reached node once, at its hop count, and no row for
+    * a node left unreached. Whether to cut `e` is the caller's choice.
+    */
+  private[graft] def frontierBfs(e: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
+    val keys = seeds.columns.toSeq
+    val carried = keys.init.map(col)
     var dist = graft.Lineage.cut(seeds.withColumn("dist", lit(0L)))
     var frontier = graft.Lineage.cut(seeds)
     var hop = 1
@@ -1026,9 +1017,9 @@ object GraphOps {
       val next = graft.Lineage.cut(
         frontier
           .join(e, col("id") === col("src"))
-          .select(col("dst").as("id"))
+          .select(carried :+ col("dst").as("id"): _*)
           .distinct()
-          .join(dist, Seq("id"), "left_anti"))
+          .join(dist, keys, "left_anti"))
       drained = next.isEmpty
       if (!drained) {
         dist = graft.Lineage.cut(dist.unionByName(next.withColumn("dist", lit(hop.toLong))))
@@ -1036,64 +1027,46 @@ object GraphOps {
       }
       hop += 1
     }
-    dist.orderBy(col("id"))
+    dist
+  }
+
+  /** [[frontierBfs]]' oracle: the recursive UNION walk of at most 4 hops
+    * from the nodes src < 3 of the deduped follows graph, carrying
+    * `seed` when `bySeed`.
+    */
+  private def bfsWalkSql(bySeed: Boolean): String = {
+    val (cols, seed, carry) =
+      if (bySeed) ("seed, id, d", "src AS seed, ", "w.seed, ") else ("id, d", "", "")
+    s"""WITH RECURSIVE e AS (
+       |  SELECT DISTINCT o_custkey % 150 AS src, (l_suppkey * 17 + l_partkey) % 150 AS dst
+       |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+       |  WHERE o_custkey % 150 <> (l_suppkey * 17 + l_partkey) % 150
+       |), walk($cols) AS (
+       |  SELECT DISTINCT ${seed}src AS id, 0 AS d FROM e WHERE src < 3
+       |  UNION
+       |  SELECT ${carry}e.dst, w.d + 1 FROM walk w JOIN e ON e.src = w.id WHERE w.d < 4
+       |)""".stripMargin
   }
 
   val graphDistancesSql: String =
-    """WITH RECURSIVE e AS (
-      |  SELECT DISTINCT o_custkey % 150 AS src, (l_suppkey * 17 + l_partkey) % 150 AS dst
-      |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-      |  WHERE o_custkey % 150 <> (l_suppkey * 17 + l_partkey) % 150
-      |), walk(id, d) AS (
-      |  SELECT DISTINCT src AS id, 0 AS d FROM e WHERE src < 3
-      |  UNION
-      |  SELECT e.dst, w.d + 1 FROM walk w JOIN e ON e.src = w.id WHERE w.d < 4
-      |)
-      |SELECT id, CAST(min(d) AS BIGINT) AS dist FROM walk GROUP BY id ORDER BY id""".stripMargin
+    s"""${bfsWalkSql(bySeed = false)}
+       |SELECT id, CAST(min(d) AS BIGINT) AS dist FROM walk GROUP BY id ORDER BY id""".stripMargin
 
   /** #403 graph_closeness — per-seed closeness centrality over the
     * 4-hop BFS ball: (reached−1)/Σdist (the reach-efficiency read —
     * how CHEAPLY a seed touches its neighborhood), with the reach
-    * count and 4-hop eccentricity, for the same seeds and synthetic
-    * edge set graph_distances (#236) walks. The Spark side is the
-    * proper frontier BFS (per-seed frontier, anti-join against the
-    * visited set, Lineage.cut per hop — O(E) per hop, never path
-    * enumeration); the oracle's recursive CTE dedups by UNION and
-    * takes min(dist), the graph_distances device with the seed
-    * carried through. Exact oracle.
+    * count and 4-hop eccentricity, for the same seeds and edge set
+    * graph_distances (#234) walks: [[frontierBfs]] with the seed
+    * carried through (O(E) per hop, never path enumeration). The
+    * oracle's recursive CTE dedups by UNION and takes min(dist).
+    * Exact oracle.
     */
   def graphCloseness(s: SparkSession, dir: String): DataFrame = {
-    val maxHops = 4
-    val e = Tables.orders(s, dir)
-      .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
-      .select(
-        (col("o_custkey") % 150).as("src"),
-        ((col("l_suppkey") * 17 + col("l_partkey")) % 150).as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .distinct()
-    val eCut = graft.Lineage.cut(e)
-    val seeds = eCut.filter(col("src") < 3)
+    // the seeds and every hop read e: cut once
+    val e = graft.Lineage.cut(edges(s, dir).distinct())
+    val seeds = e.filter(col("src") < 3)
       .select(col("src").as("seed"), col("src").as("id")).distinct()
-    var dist = graft.Lineage.cut(seeds.withColumn("dist", lit(0L)))
-    var frontier = graft.Lineage.cut(seeds)
-    var hop = 1
-    var drained = false
-    while (hop <= maxHops && !drained) {
-      val next = graft.Lineage.cut(
-        frontier
-          .join(eCut, col("id") === col("src"))
-          .select(col("seed"), col("dst").as("id"))
-          .distinct()
-          .join(dist, Seq("seed", "id"), "left_anti"))
-      drained = next.isEmpty
-      if (!drained) {
-        dist = graft.Lineage.cut(
-          dist.unionByName(next.withColumn("dist", lit(hop.toLong))))
-        frontier = next
-      }
-      hop += 1
-    }
-    dist.groupBy(col("seed"))
+    frontierBfs(e, seeds, maxHops = 4).groupBy(col("seed"))
       .agg(count(lit(1)).as("reached"), sum(col("dist")).as("sumd"),
         max(col("dist")).as("eccentricity"))
       .select(col("seed"), (col("reached") - 1).as("reached"),
@@ -1104,15 +1077,7 @@ object GraphOps {
   }
 
   val graphClosenessSql: String =
-    """WITH RECURSIVE e AS (
-      |  SELECT DISTINCT o_custkey % 150 AS src, (l_suppkey * 17 + l_partkey) % 150 AS dst
-      |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-      |  WHERE o_custkey % 150 <> (l_suppkey * 17 + l_partkey) % 150
-      |), walk(seed, id, d) AS (
-      |  SELECT DISTINCT src AS seed, src AS id, 0 AS d FROM e WHERE src < 3
-      |  UNION
-      |  SELECT w.seed, e.dst, w.d + 1 FROM walk w JOIN e ON e.src = w.id WHERE w.d < 4
-      |), md AS (
+    s"""${bfsWalkSql(bySeed = true)}, md AS (
       |  SELECT seed, id, min(d) AS dist FROM walk GROUP BY 1, 2
       |)
       |SELECT seed, CAST(count(*) - 1 AS BIGINT) AS reached,
@@ -1122,10 +1087,9 @@ object GraphOps {
       |ORDER BY seed""".stripMargin
 
   /** #428 rich_club_coefficient — do the hubs wire to each other:
-    * over the undirected interaction graph (the graph-family
-    * synthetic edge set), for each degree threshold k ∈ {2, 5, 10}
-    * the node count with degree > k, the edge count among them, and
-    * φ(k) = 2·E/(n(n−1)) — the hub-to-hub density
+    * over the undirected follows graph, for each degree threshold
+    * k ∈ {2, 5, 10} the node count with degree > k, the edge count
+    * among them, and φ(k) = 2·E/(n(n−1)) — the hub-to-hub density
     * (graph_assortativity summarizes degree mixing by ONE
     * correlation; k-core prunes; the rich club reads centralization
     * directly, threshold by threshold). Degrees and edge subsets are
@@ -1134,18 +1098,9 @@ object GraphOps {
     * joins broadcast the bounded degree table. Exact oracle.
     */
   def richClubCoefficient(s: SparkSession, dir: String): DataFrame = {
-    val e0 = Tables.orders(s, dir)
-      .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
-      .select(
-        (col("o_custkey") % 150).as("src"),
-        ((col("l_suppkey") * 17 + col("l_partkey")) % 150).as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-    val edges = graft.Lineage.cut(e0)
-    val deg = edges.select(col("a").as("node"))
-      .unionByName(edges.select(col("b").as("node")))
+    val und = graft.Lineage.cut(undirected(edges(s, dir)))
+    val deg = und.select(col("a").as("node"))
+      .unionByName(und.select(col("b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
     val degCut = graft.Lineage.cut(deg)
     val ks = Seq(2L, 5L, 10L)
@@ -1154,7 +1109,7 @@ object GraphOps {
       .filter(col("deg") > col("k"))
     val members = graft.Lineage.cut(grid.select(col("k"), col("node")))
     val nk = members.groupBy(col("k")).agg(count(lit(1)).as("n_nodes"))
-    val ek = edges
+    val ek = und
       .join(members.select(col("k"), col("node").as("a")), Seq("a"))
       .join(members.select(col("k").as("k2"), col("node").as("b")), Seq("b"))
       .filter(col("k") === col("k2"))

@@ -15,25 +15,6 @@ import org.apache.spark.sql.functions._
 object Round2Ops {
   import OracleMath._
 
-  // ------------------------------------------------- communities
-
-  /** Deterministic follows graph shared with GraphOps (same projection
-    * of purchases into the 0..149 user space).
-    */
-  private[graft] def edgesDf(s: SparkSession, dir: String): DataFrame =
-    Tables
-      .orders(s, dir)
-      .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
-      .select(
-        (col("o_custkey") % 150).as("src"),
-        ((col("l_suppkey") * 17 + col("l_partkey")) % 150).as("dst"))
-      .filter(col("src") =!= col("dst"))
-
-  private[graft] val edgesSql: String =
-    """SELECT o_custkey % 150 AS src, (l_suppkey * 17 + l_partkey) % 150 AS dst
-      |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-      |WHERE o_custkey % 150 <> (l_suppkey * 17 + l_partkey) % 150""".stripMargin
-
   // ------------------------------------- frequency-table percentiles
 
   /** #60 exact percentiles from a value-frequency table: when value
