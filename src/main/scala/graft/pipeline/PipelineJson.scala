@@ -58,7 +58,6 @@ case class Binding(
       * containment (both are Rhai `in` meanings).
       */
     whereArrayFields: Set[String] = Set.empty,
-    scoreRoundScale: Int = 6,
     fieldCols: Map[String, Column] = Map.empty,
     lists: Map[String, DataFrame] = Map.empty,
     tagsCol: Option[Column] = None,
@@ -411,6 +410,9 @@ object PipelineJson {
 
   private val DefaultLimit = 100
 
+  /** Decimal places every score and sort-time HN score rounds to. */
+  private val ScoreScale = 6
+
   /** A limit block's count; absent, 5 per user for posts_per_user and
     * 100 otherwise, the same in every runner.
     */
@@ -541,7 +543,7 @@ object PipelineJson {
         round(
           when(col("__mx") =!= 0, col("__raw").cast("double") / col("__mx").cast("double") * mult)
             .otherwise(lit(0.0)),
-          b.scoreRoundScale).as("score"))
+          ScoreScale).as("score"))
     val store = win.foldLeft(boundStore(b))((df, blk) => blk(df))
     store.join(scored, col(b.idCol) === col("__post")).drop("__post")
   }
@@ -848,7 +850,7 @@ object PipelineJson {
         val multiplier = str(n, "scoreNormalizationMultiplier", "1.0").toDouble
         // rounding after each score block keeps later rankings bit-stable
         // across engines (same policy as the hand-built pipelines)
-        Op.Score(normalize) -> Seq(ScoreAdd(expr, normalize, multiplier), RoundCol("score", b.scoreRoundScale))
+        Op.Score(normalize) -> Seq(ScoreAdd(expr, normalize, multiplier), RoundCol("score", ScoreScale))
 
       case "sort" =>
         val sort = Op.Sort(
@@ -866,7 +868,7 @@ object PipelineJson {
             // sort-time HN score (main.rs:2246): ranked on the rounded
             // value so double `pow` ulp drift can't flip ranks vs the
             // oracle; id tie-break for determinism
-            Seq(dir(round(hnExpr(b, sort.gravity), b.scoreRoundScale)), col(b.idCol))
+            Seq(dir(round(hnExpr(b, sort.gravity), ScoreScale)), col(b.idCol))
           case "random" =>
             // the reference shuffles with a thread RNG (main.rs:2283);
             // the reproducible distributed equivalent orders by a keyed

@@ -14,7 +14,7 @@ class AtProtoSpec extends AnyFunSuite {
 
   private def one(c: org.apache.spark.sql.Column): String = {
     import spark.implicits._
-    Seq(1).toDF("x").select(c.cast("string")).head.getString(0)
+    Seq(1).toDF("x").select(c.cast("string")).head().getString(0)
   }
 
   test("TID encoding matches independently derived ground truth") {

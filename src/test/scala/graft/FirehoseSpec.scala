@@ -35,12 +35,12 @@ class FirehoseSpec extends AnyFunSuite {
       .select(col("langs")).as[Seq[String]].collect()
     assert(langs.nonEmpty && langs.forall(_ == Seq("en", "es")))
     // e%4==2 planted ["common","common"] → dedups to one
-    val tags = parsed.filter(col("id").startsWith("rk2_")).select(col("tags")).as[Seq[String]].head
+    val tags = parsed.filter(col("id").startsWith("rk2_")).select(col("tags")).as[Seq[String]].head()
     assert(tags == Seq("common"))
     // links stay a Vec in wire order (a,b not resorted), [] and absent both empty
     val links = parsed
       .filter(pmod(expr("CAST(substring(split(id, '_')[0], 3) AS LONG)"), lit(3)) === 0)
-      .select(col("links")).as[Seq[String]].head
+      .select(col("links")).as[Seq[String]].head()
     assert(links.head == "https://example.com/a" &&
       links(1).startsWith("https://news.example.org/x"), s"wire order lost: $links")
   }

@@ -671,7 +671,7 @@ class QueryCatalogSpec extends AnyFunSuite {
       emb.crossJoin(broadcast(cents))
         .withColumn("csim", functions.Registry.cosine(col("e"), col("ce")))
         .groupBy(col("vec_id")).agg(max(col("csim")).as("best"))
-        .agg(avg(col("best"))).head.getDouble(0)
+        .agg(avg(col("best"))).head().getDouble(0)
     val seeded = meanHomeSim(queries.TextOps.seedCentroids(emb, 16))
     val trained = meanHomeSim(queries.TextOps.ivfCentroids(emb, 16, 2))
     assert(trained > seeded, s"trained objective $trained not above seeded $seeded")
@@ -1200,7 +1200,7 @@ class QueryCatalogSpec extends AnyFunSuite {
           - lit(2.0) * graft.functions.Registry.dot(col("v"), col("c"))
           + graft.functions.Registry.dot(col("c"), col("c")))
       .groupBy(col("vec_id"), col("s")).agg(min(col("d2")).as("d2"))
-      .agg(avg(col("d2"))).head.getDouble(0)
+      .agg(avg(col("d2"))).head().getDouble(0)
     val seed = Round6Ops.pqSampledCodebook(e)
     val (mt, ms) = (mse(Round6Ops.pqTrainCodebook(subs, seed, 3)), mse(seed))
     assert(mt < ms, f"trained codebook MSE $mt%.6f not below sampled $ms%.6f")
@@ -1531,6 +1531,37 @@ class QueryCatalogSpec extends AnyFunSuite {
     assert(core.forall(_.getAs[Long]("core_deg") == 5L), "clique members keep all 5 edges")
   }
 
+  test("frontier BFS stops at maxHops and gives an unreachable node no row") {
+    import spark.implicits._
+    // path 0→1→2→3→4→5 with a back edge 3→1 (already settled when
+    // reached again), and 9→8 that no seed reaches: from seed 0, node 5
+    // sits 5 hops out, one past maxHops = 4
+    val e = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (3L, 1L), (9L, 8L))
+      .toDF("src", "dst")
+    def walk(seeds: org.apache.spark.sql.DataFrame): Seq[Seq[Long]] =
+      graft.queries.GraphOps.frontierBfs(e, seeds, maxHops = 4).collect()
+        .map(r => (0 until r.length).map(r.getLong)).toSeq.sortBy(_.mkString(","))
+    assert(walk(Seq(0L).toDF("id")) ==
+      Seq(Seq(0L, 0L), Seq(1L, 1L), Seq(2L, 2L), Seq(3L, 3L), Seq(4L, 4L)))
+    // a carried seed column walks each seed on its own: seed 4 reaches 5
+    // at one hop, while seed 0 still stops at 4
+    val bySeed = walk(Seq((0L, 0L), (4L, 4L)).toDF("seed", "id"))
+    assert(bySeed.filter(_.head == 4L) == Seq(Seq(4L, 4L, 0L), Seq(4L, 5L, 1L)), s"$bySeed")
+    assert(bySeed.filter(_.head == 0L).map(_(1)) == Seq(0L, 1L, 2L, 3L, 4L), s"$bySeed")
+  }
+
+  test("personalized PageRank with every node a seed equals PageRank") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.lit
+    val e = Seq((0L, 1L), (1L, 2L), (2L, 0L), (2L, 3L), (3L, 0L), (4L, 2L), (0L, 4L))
+      .toDF("src", "dst")
+    def ranks(r: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
+      r.select("id", "rank").as[(Long, Double)].collect().toSeq.sortBy(_._1)
+    val uniform = ranks(graft.queries.GraphOps.uniformRanks(e))
+    assert(uniform.map(_._1) == (0L to 4L) && uniform.map(_._2).distinct.length > 1, s"$uniform")
+    assert(ranks(graft.queries.GraphOps.seededRanks(e, lit(true))) == uniform)
+  }
+
   test("graph_kcore at sf0.01 is a nonempty strict subset with induced degrees >= k") {
     val core = SparkEntry.queries("graph_kcore")(spark, "/root/testdata/sf0.01").collect()
     assert(core.nonEmpty, "20-core must be nonempty at sf0.01")
@@ -1583,7 +1614,7 @@ class QueryCatalogSpec extends AnyFunSuite {
     val statuses = df.select("status").distinct().collect().map(_.getString(0)).toSet
     assert(statuses.subsetOf(Set("added", "removed", "changed", "same")))
     assert(statuses.contains("changed") && statuses.contains("same"))
-    val total = df.agg(sum("n_docs")).head.getLong(0)
+    val total = df.agg(sum("n_docs")).head().getLong(0)
     val docs = Tables.documents(spark, dir)
     val union = docs
       .filter(col("doc_id") % 11 =!= 3 || col("doc_id") % 13 =!= 5)
@@ -1597,7 +1628,7 @@ class QueryCatalogSpec extends AnyFunSuite {
     assert(df.filter(col("n_kept") > col("n_passages")).count() == 0)
     // global invariant: total kept passages == distinct passages in
     // the corpus (first-occurrence-wins keeps each exactly once)
-    val kept = df.agg(sum("n_kept")).head.getLong(0)
+    val kept = df.agg(sum("n_kept")).head().getLong(0)
     val distinctPassages = Tables.documents(spark, dir)
       .select(col("doc_id"), split(col("text"), " ").as("ws"))
       .select(explode(expr(
@@ -1622,10 +1653,10 @@ class QueryCatalogSpec extends AnyFunSuite {
       assert(nonFinal.filter(col("n_tokens") =!= 512).count() == 0,
         "every non-final sequence must be exactly full")
       // packing conserves tokens: sum over sequences == corpus token count
-      val packed = df.agg(sum("n_tokens")).head.getLong(0)
+      val packed = df.agg(sum("n_tokens")).head().getLong(0)
       val corpus = Tables.documents(spark, dir)
         .select(size(filter(split(col("text"), " "), t => t =!= "")).cast("long").as("n"))
-        .agg(sum("n")).head.getLong(0)
+        .agg(sum("n")).head().getLong(0)
       assert(packed == corpus, s"packed $packed tokens vs corpus $corpus")
     } finally { df.unpersist(); () }
   }
@@ -1907,7 +1938,7 @@ class QueryCatalogSpec extends AnyFunSuite {
   test("k_anonymity histogram conserves the customer table") {
     import org.apache.spark.sql.functions._
     val df = SparkEntry.queries("k_anonymity")(spark, dir)
-    val total = df.agg(sum("n_rows")).head.getLong(0)
+    val total = df.agg(sum("n_rows")).head().getLong(0)
     assert(total == Tables.customer(spark, dir).count())
     assert(df.filter(col("n_rows") =!= col("group_size") * col("n_groups")).count() == 0)
   }
@@ -1924,7 +1955,7 @@ class QueryCatalogSpec extends AnyFunSuite {
 
   test("ab_lift_report covers every user exactly once") {
     import org.apache.spark.sql.functions._
-    val r = SparkEntry.queries("ab_lift_report")(spark, dir).head
+    val r = SparkEntry.queries("ab_lift_report")(spark, dir).head()
     val users = Tables.events(spark, dir).select("user_id").distinct().count()
     assert(r.getAs[Long]("n_a") + r.getAs[Long]("n_b") == users)
     assert(r.getAs[Long]("conv_a") <= r.getAs[Long]("n_a"))
@@ -1961,9 +1992,9 @@ class QueryCatalogSpec extends AnyFunSuite {
   test("tokenizer fertility stays consistent with token_count totals") {
     import org.apache.spark.sql.functions._
     val df = SparkEntry.queries("tokenizer_fertility")(spark, dir)
-    val tokTotal = df.agg(sum("tokens")).head.getLong(0)
+    val tokTotal = df.agg(sum("tokens")).head().getLong(0)
     val tc = SparkEntry.queries("token_count")(spark, dir)
-      .agg(sum("total_bpe_tokens")).head.getLong(0)
+      .agg(sum("total_bpe_tokens")).head().getLong(0)
     assert(tokTotal == tc, "the lang rollup and the source rollup count the same tokens")
     assert(df.filter(col("fertility") <= 0).count() == 0)
   }
@@ -1999,7 +2030,7 @@ class QueryCatalogSpec extends AnyFunSuite {
 
   test("revenue concentration shares are nested and bounded") {
     import org.apache.spark.sql.functions._
-    val r = SparkEntry.queries("revenue_concentration")(spark, dir).head
+    val r = SparkEntry.queries("revenue_concentration")(spark, dir).head()
     val (t1, t10, t50) = (r.getAs[Double]("top1_share"),
       r.getAs[Double]("top10_share"), r.getAs[Double]("top50_share"))
     assert(t1 <= t10 + 1e-9 && t10 <= t50 + 1e-9, "a wider tier can only carry more")
@@ -2029,7 +2060,7 @@ class QueryCatalogSpec extends AnyFunSuite {
       .select(col("o_custkey"),
         (year(col("o_orderdate")) * 4 + quarter(col("o_orderdate")) - 1).as("q"))
       .distinct().count()
-    assert(df.agg(sum("n")).head.getLong(0) == cqs,
+    assert(df.agg(sum("n")).head().getLong(0) == cqs,
       "every customer-quarter transitions exactly once")
   }
 
@@ -2077,7 +2108,7 @@ class QueryCatalogSpec extends AnyFunSuite {
     val rep = SparkEntry.queries("dedup_survivorship")(spark, dir)
     val clusters = SparkEntry.queries("dedup_clusters")(spark, dir)
     val droppedTotal = clusters.filter(col("doc_id") =!= col("cluster")).count()
-    assert(rep.agg(sum("n_dropped")).head.getLong(0) == droppedTotal,
+    assert(rep.agg(sum("n_dropped")).head().getLong(0) == droppedTotal,
       "every dropped doc lands in exactly one matrix cell")
     assert(rep.filter(col("n_dropped") <= 0).count() == 0)
   }
@@ -2099,7 +2130,7 @@ class QueryCatalogSpec extends AnyFunSuite {
     assert(df.count() == 4, "four index families reported")
     assert(df.filter(col("hit_rate") < 0 || col("hit_rate") > 1).count() == 0)
     def rate(m: String) =
-      df.filter(col("method") === m).head.getAs[Double]("hit_rate")
+      df.filter(col("method") === m).head().getAs[Double]("hit_rate")
     // int8 is a near-lossless rescore; IVF probes the true cell half the
     // time at this SF; PQ's sampled codebook is coarse but non-random
     assert(rate("int8_quantized") >= 0.9, "int8 rescoring is near-exact")
@@ -2130,7 +2161,7 @@ class QueryCatalogSpec extends AnyFunSuite {
       "eight merges must compress at least one source")
     val words = Tables.documents(spark, dir)
       .select(explode(split(col("text"), " ")).as("w")).filter(col("w") =!= "").count()
-    assert(df.agg(sum("n_words")).head.getLong(0) == words,
+    assert(df.agg(sum("n_words")).head().getLong(0) == words,
       "the per-source histogram conserves the corpus word count")
   }
 
@@ -2138,7 +2169,7 @@ class QueryCatalogSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val df = SparkEntry.queries("shard_skew_report")(spark, dir)
     assert(df.count() == 64, "all 64 shards occupied under a uniform hash")
-    assert(df.agg(sum("n_docs")).head.getLong(0) == Tables.documents(spark, dir).count())
+    assert(df.agg(sum("n_docs")).head().getLong(0) == Tables.documents(spark, dir).count())
     assert(df.filter(col("doc_load_factor") > 2.0).count() == 0,
       "a uniform hash must not produce a 2x-overloaded shard")
   }
@@ -2147,7 +2178,7 @@ class QueryCatalogSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val df = SparkEntry.queries("orders_backlog")(spark, dir)
     assert(df.filter(col("open_orders") < 0).count() == 0)
-    val last = df.orderBy(col("day").desc).head
+    val last = df.orderBy(col("day").desc).head()
     assert(last.getAs[Long]("open_orders") == 0L,
       "after the last ship date every order has closed")
   }
@@ -2155,7 +2186,7 @@ class QueryCatalogSpec extends AnyFunSuite {
   test("repeat purchase bands partition the customer base") {
     import org.apache.spark.sql.functions._
     val df = SparkEntry.queries("repeat_purchase")(spark, dir)
-    val total = df.agg(sum("n_customers")).head.getLong(0)
+    val total = df.agg(sum("n_customers")).head().getLong(0)
     val buyers = Tables.orders(spark, dir).select("o_custkey").distinct().count()
     assert(total == buyers, "every ordering customer lands in exactly one band")
   }
@@ -2165,7 +2196,7 @@ class QueryCatalogSpec extends AnyFunSuite {
     val df = SparkEntry.queries("psi_drift")(spark, dir)
     val t = df.agg(
       sum("n_first").as("t1"), sum("n_second").as("t2"),
-      min("psi_term").as("minterm")).head
+      min("psi_term").as("minterm")).head()
     val ev = Tables.events(spark, dir).count()
     assert(t.getLong(0) + t.getLong(1) == ev, "the two halves partition the event stream")
     // each PSI term (p2-p1)ln(p2/p1) has matching factor signs
@@ -2186,7 +2217,7 @@ class QueryCatalogSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val df = SparkEntry.queries("window_funnel")(spark, dir).cache()
     val users = Tables.events(spark, dir).select("user_id").distinct().count()
-    assert(df.agg(sum("n_users")).head.getLong(0) == users,
+    assert(df.agg(sum("n_users")).head().getLong(0) == users,
       "every active user lands in exactly one funnel level")
     assert(df.filter(col("funnel_level") < 0 || col("funnel_level") > 3).count() == 0)
   }
@@ -2198,8 +2229,8 @@ class QueryCatalogSpec extends AnyFunSuite {
     // total trigrams = sum over users of max(events_u - 2, 0); top-20 of
     // 5^3 possible patterns can't exceed it
     val perUser = Tables.events(spark, dir).groupBy("user_id").count()
-      .agg(sum(greatest(col("count") - 2, lit(0)))).head.getLong(0)
-    assert(df.agg(sum("n")).head.getLong(0) <= perUser)
+      .agg(sum(greatest(col("count") - 2, lit(0)))).head().getLong(0)
+    assert(df.agg(sum("n")).head().getLong(0) <= perUser)
   }
 
   test("seasonal decompose reassembles the series and seasonal terms cancel") {
@@ -2215,9 +2246,9 @@ class QueryCatalogSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val df = SparkEntry.queries("compaction_plan")(spark, dir).cache()
     val docs = Tables.documents(spark, dir)
-    assert(df.agg(sum("n_docs")).head.getLong(0) == docs.count())
-    assert(df.agg(sum("bin_bytes")).head.getLong(0) ==
-      docs.agg(sum("n_chars")).head.getLong(0))
+    assert(df.agg(sum("n_docs")).head().getLong(0) == docs.count())
+    assert(df.agg(sum("bin_bytes")).head().getLong(0) ==
+      docs.agg(sum("n_chars")).head().getLong(0))
     // sequential fill: every bin except possibly the last reaches target
     // (overfill bounded by one shard, underfill only on the tail bin)
     assert(df.filter(col("fill_ratio") <= 0).count() == 0)
@@ -2228,10 +2259,10 @@ class QueryCatalogSpec extends AnyFunSuite {
     val df = SparkEntry.queries("corpus_mix_temperature")(spark, dir).cache()
     // alpha < 1 compresses: small sources upsample (>1), the largest
     // source downsamples (<1); shares renormalize to ~1
-    val tot = df.agg(sum("temp_share")).head.getDouble(0)
+    val tot = df.agg(sum("temp_share")).head().getDouble(0)
     assert(math.abs(tot - 1.0) < 1e-3, s"temp shares sum to 1, got $tot")
-    val top = df.orderBy(col("byte_share").desc).head
-    val bottom = df.orderBy(col("byte_share").asc).head
+    val top = df.orderBy(col("byte_share").desc).head()
+    val bottom = df.orderBy(col("byte_share").asc).head()
     assert(top.getAs[Double]("upsample") <= 1.0 + 1e-9,
       "the biggest source never upsamples under alpha<1")
     assert(bottom.getAs[Double]("upsample") >= 1.0 - 1e-9,
@@ -2279,7 +2310,7 @@ class QueryCatalogSpec extends AnyFunSuite {
     val exact = SparkEntry.queries("dedup_containment")(spark, dir)
       .select(col("a"), col("b"), col("containment"))
     val joint = fast.join(exact, Seq("a", "b"))
-    val drift = joint.agg(max(abs(col("est_containment") - col("containment")))).head
+    val drift = joint.agg(max(abs(col("est_containment") - col("containment")))).head()
     if (!drift.isNullAt(0))
       assert(drift.getDouble(0) <= 0.45, s"containment estimate drifted: $drift")
   }
@@ -2288,9 +2319,9 @@ class QueryCatalogSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val df = SparkEntry.queries("blocking_report")(spark, dir).cache()
     val docs = Tables.documents(spark, dir).count()
-    assert(df.agg(sum("n_docs")).head.getLong(0) == docs)
+    assert(df.agg(sum("n_docs")).head().getLong(0) == docs)
     assert(df.filter(col("n_pairs") =!= col("n_docs") * (col("n_docs") - 1) / 2).count() == 0)
-    val share = df.agg(sum("pair_share")).head.getDouble(0)
+    val share = df.agg(sum("pair_share")).head().getDouble(0)
     assert(share < 0.5, s"a working blocking key must cut the pair space, got $share")
   }
 
@@ -2355,10 +2386,10 @@ class QueryCatalogSpec extends AnyFunSuite {
     val df = SparkEntry.queries("grouping_sets_report")(spark, dir).cache()
     val grand = df.filter(col("g_n") === 1 && col("g_r") === 1)
     assert(grand.count() == 1, "exactly one grand-total row")
-    val total = grand.head.getAs[Long]("n_lines")
-    val byNation = df.filter(col("g_n") === 0).agg(sum("n_lines")).head.getLong(0)
+    val total = grand.head().getAs[Long]("n_lines")
+    val byNation = df.filter(col("g_n") === 0).agg(sum("n_lines")).head().getLong(0)
     val byRegion = df.filter(col("g_r") === 0 && col("g_n") === 1)
-      .agg(sum("n_lines")).head.getLong(0)
+      .agg(sum("n_lines")).head().getLong(0)
     assert(byNation == total && byRegion == total,
       "each grouping-set level partitions the fact rows")
   }
@@ -2392,7 +2423,7 @@ class QueryCatalogSpec extends AnyFunSuite {
     val df = SparkEntry.queries("label_propagation_eval")(spark, dir).cache()
     val masked = Tables.embeddings(spark, dir)
       .filter(pmod(col("vec_id"), lit(5)) === 4).count()
-    assert(df.agg(sum("n_masked")).head.getLong(0) == masked)
+    assert(df.agg(sum("n_masked")).head().getLong(0) == masked)
     assert(df.filter(col("recovery_rate") < 0 || col("recovery_rate") > 1).count() == 0)
   }
 
@@ -2425,7 +2456,7 @@ class QueryCatalogSpec extends AnyFunSuite {
   test("hits scores are L1-normalized distributions over the node set") {
     import org.apache.spark.sql.functions._
     val df = SparkEntry.queries("graph_hits")(spark, dir).cache()
-    val sums = df.agg(sum("authority"), sum("hub")).head
+    val sums = df.agg(sum("authority"), sum("hub")).head()
     assert(math.abs(sums.getDouble(0) - 1.0) < 1e-3, s"authority mass ~1: $sums")
     assert(math.abs(sums.getDouble(1) - 1.0) < 1e-3, s"hub mass ~1: $sums")
     assert(df.filter(col("authority") < 0 || col("hub") < 0).count() == 0)
@@ -2457,7 +2488,7 @@ class QueryCatalogSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val df = SparkEntry.queries("label_noise_report")(spark, dir).cache()
     val vecs = Tables.embeddings(spark, dir).count()
-    assert(df.agg(sum("n_vecs")).head.getLong(0) == vecs)
+    assert(df.agg(sum("n_vecs")).head().getLong(0) == vecs)
     assert(df.filter(col("noise_rate") < 0 || col("noise_rate") > 1).count() == 0)
     assert(df.filter(col("n_disagree") > col("n_vecs")).count() == 0)
   }
@@ -2479,7 +2510,7 @@ class QueryCatalogSpec extends AnyFunSuite {
       .filter(col("o_custkey") % 13 === 0).select(col("o_orderkey"))
     val cascade = Tables.lineitem(spark, dir)
       .join(delOrders, col("l_orderkey") === col("o_orderkey"), "left_semi").count()
-    val reported = df.filter(col("entity") === "lineitem").head.getLong(1)
+    val reported = df.filter(col("entity") === "lineitem").head().getLong(1)
     assert(reported == cascade, "lineitem cascade must match the FK walk")
   }
 
@@ -2533,7 +2564,7 @@ class QueryCatalogSpec extends AnyFunSuite {
     val df = SparkEntry.queries("personalized_pagerank")(spark, dir).cache()
     assert(df.filter(col("ppr") < 0).count() == 0)
     // dangling mass leaks, never appears: total ≤ 1 (+ rounding slack)
-    val mass = df.agg(sum(col("ppr"))).head.getDouble(0)
+    val mass = df.agg(sum(col("ppr"))).head().getDouble(0)
     assert(mass <= 1.0 + 1e-4, s"mass $mass must not exceed 1")
     // every seed keeps at least its own teleport share
     val seeds = df.filter(col("id") < 5).count()
@@ -2566,7 +2597,7 @@ class QueryCatalogSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val df = SparkEntry.queries("classifier_calibration")(spark, dir).cache()
     val docs = Tables.documents(spark, dir).count()
-    assert(df.agg(sum("n")).head.getLong(0) == docs, "every doc lands in a bin")
+    assert(df.agg(sum("n")).head().getLong(0) == docs, "every doc lands in a bin")
     assert(df.filter(col("bin") < 0 || col("bin") > 9).count() == 0)
     assert(df.filter(col("frac_pos") < 0 || col("frac_pos") > 1).count() == 0)
     val badGap = df.filter(
@@ -2632,7 +2663,7 @@ class QueryCatalogSpec extends AnyFunSuite {
         col("e").as("eb"), col("nrm").as("nb"))
       a.join(b, Seq("query_id")).filter(col("va") < col("vb"))
         .select((Registry.dot(col("ea"), col("eb")) / (col("na") * col("nb"))).as("sim"))
-        .agg(avg("sim")).head.getDouble(0)
+        .agg(avg("sim")).head().getDouble(0)
     }
     val plain5 = rel.withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
       .select("query_id", "vec_id")
@@ -2683,7 +2714,7 @@ class QueryCatalogSpec extends AnyFunSuite {
     // the weekly shape is bounded by the observed daily peak
     val peak = Tables.events(spark, dir)
       .groupBy(to_date(col("ts")), col("event_type")).count()
-      .agg(max("count")).head.getLong(0).toDouble
+      .agg(max("count")).head().getLong(0).toDouble
     assert(df.filter(abs(col("seasonal")) > peak).count() == 0)
   }
 
@@ -2694,7 +2725,7 @@ class QueryCatalogSpec extends AnyFunSuite {
     assert(df.filter(col("d2_orig") <= 0 || col("d2_proj") < 0).count() == 0)
     // pointwise sanity band + unbiasedness of the mean ratio
     assert(df.filter(col("ratio") < 0.1 || col("ratio") > 3.0).count() == 0)
-    val meanRatio = df.agg(avg("ratio")).head.getDouble(0)
+    val meanRatio = df.agg(avg("ratio")).head().getDouble(0)
     assert(meanRatio > 0.7 && meanRatio < 1.3,
       s"E[ratio] must be near 1 (unbiased projection): $meanRatio")
   }
@@ -2702,7 +2733,7 @@ class QueryCatalogSpec extends AnyFunSuite {
   test("markov attribution removal effects are proper and none is the identity") {
     import org.apache.spark.sql.functions._
     val df = SparkEntry.queries("markov_attribution")(spark, dir).cache()
-    val none = df.filter(col("removed") === "none").head
+    val none = df.filter(col("removed") === "none").head()
     assert(none.getAs[Double]("removal_effect") == 0.0, "removing nothing removes nothing")
     assert(df.filter(col("conv_prob") < 0 || col("conv_prob") > 1).count() == 0)
     // removing a channel can only LOSE conversion mass (no renormalize)
@@ -2710,7 +2741,7 @@ class QueryCatalogSpec extends AnyFunSuite {
     assert(df.filter(col("conv_prob") > full + 1e-9).count() == 0)
     assert(df.filter(col("removed") =!= "none" && col("removal_effect") < 0).count() == 0)
     // removing 'view' must hurt: journeys that start there are lost
-    assert(df.filter(col("removed") === "view").head.getAs[Double]("removal_effect") > 0)
+    assert(df.filter(col("removed") === "view").head().getAs[Double]("removal_effect") > 0)
   }
 
   test("markov attribution's states are transition ends: a sole-event type adds no variant") {
@@ -2746,7 +2777,7 @@ class QueryCatalogSpec extends AnyFunSuite {
       .count()
     assert(broken == 0, "boundary must decay and counts must accumulate")
     // the final boundary is the fixed-horizon 1.96
-    val last = df.orderBy(col("t").desc).head
+    val last = df.orderBy(col("t").desc).head()
     assert(math.abs(last.getAs[Double]("boundary") - 1.96) < 1e-9)
     assert(df.filter(col("k0") > col("n0") || col("k1") > col("n1")).count() == 0)
   }
@@ -2755,10 +2786,10 @@ class QueryCatalogSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val df = SparkEntry.queries("benford_audit")(spark, dir).cache()
     assert(df.count() == 9)
-    assert(math.abs(df.agg(sum("share")).head.getDouble(0) - 1.0) < 1e-4)
-    assert(math.abs(df.agg(sum("p_benford")).head.getDouble(0) - 1.0) < 1e-4)
+    assert(math.abs(df.agg(sum("share")).head().getDouble(0) - 1.0) < 1e-4)
+    assert(math.abs(df.agg(sum("p_benford")).head().getDouble(0) - 1.0) < 1e-4)
     assert(df.filter(col("chi2_term") < 0).count() == 0)
-    val obs = df.agg(sum("obs")).head.getLong(0)
+    val obs = df.agg(sum("obs")).head().getLong(0)
     val priced = Tables.lineitem(spark, dir).filter(col("l_extendedprice") >= 1.0).count()
     assert(obs == priced, "every priced line contributes one digit")
   }
@@ -2801,7 +2832,7 @@ class QueryCatalogSpec extends AnyFunSuite {
     assert(df.filter(col("rbo") > 0.999999 && col("overlap10") =!= 10).count() == 0)
     // int8 keeps the top-10 SET but reshuffles ranks — RBO reads 0.63
     // here where set recall reads 1.0, which is the metric's point
-    assert(df.agg(avg("rbo")).head.getDouble(0) > 0.4,
+    assert(df.agg(avg("rbo")).head().getDouble(0) > 0.4,
       "int8 ranking should retain substantial rank agreement")
     assert(df.filter(col("rbo") <= 0).count() == 0,
       "full set overlap forces every query's RBO positive")
@@ -2821,7 +2852,7 @@ class QueryCatalogSpec extends AnyFunSuite {
   test("classifier auc matches a direct pairwise estimate") {
     import org.apache.spark.sql.functions._
     val df = SparkEntry.queries("classifier_auc")(spark, dir).cache()
-    val row = df.head
+    val row = df.head()
     val auc = row.getAs[Double]("auc")
     assert(auc >= 0 && auc <= 1)
     assert(math.abs(row.getAs[Double]("gini") - (2 * auc - 1)) < 3e-6)
@@ -2833,7 +2864,7 @@ class QueryCatalogSpec extends AnyFunSuite {
     val neg = scored.filter(!col("pos")).select(col("score").as("sn"))
     val u2 = pos.crossJoin(neg)
       .agg(sum(when(col("sp") > col("sn"), 2L)
-        .when(col("sp") === col("sn"), 1L).otherwise(0L))).head.getLong(0)
+        .when(col("sp") === col("sn"), 1L).otherwise(0L))).head().getLong(0)
     val expected = u2.toDouble / (2.0 * row.getAs[Long]("n_pos") * row.getAs[Long]("n_neg"))
     assert(math.abs(auc - expected) < 1e-6, s"histogram AUC $auc vs pairwise $expected")
   }
@@ -2861,7 +2892,7 @@ class QueryCatalogSpec extends AnyFunSuite {
       math.abs(first.count(_ <= v).toDouble / first.length
         - second.count(_ <= v).toDouble / second.length)
     }.max
-    val got = df.filter(col("lang") === "en").head.getAs[Double]("ks_d")
+    val got = df.filter(col("lang") === "en").head().getAs[Double]("ks_d")
     assert(math.abs(got - dMax) < 1e-5, s"engine D $got vs driver ECDF sup $dMax")
   }
 
@@ -2883,7 +2914,7 @@ class QueryCatalogSpec extends AnyFunSuite {
     val df = SparkEntry.queries("spearman_len_score")(spark, dir).cache()
     assert(df.count() == Tables.documents(spark, dir).select("source").distinct().count())
     assert(df.filter(col("rho") < -1 || col("rho") > 1).count() == 0)
-    val src = df.head.getAs[String]("source")
+    val src = df.head().getAs[String]("source")
     val pairs = graft.queries.Round9Ops.docQualityClassifier(spark, dir)
       .select(col("doc_id"), col("score"))
       .join(Tables.documents(spark, dir).filter(col("source") === src)
@@ -2909,7 +2940,7 @@ class QueryCatalogSpec extends AnyFunSuite {
     val sxy = rx.zip(ry).map { case (a, b) => a * b }.sum
     val sxx = rx.map(a => a * a).sum; val syy = ry.map(a => a * a).sum
     val expected = (n * sxy - sx * sy) / math.sqrt((n * sxx - sx * sx) * (n * syy - sy * sy))
-    val got = df.filter(col("source") === src).head.getAs[Double]("rho")
+    val got = df.filter(col("source") === src).head().getAs[Double]("rho")
     assert(math.abs(got - expected) < 1e-5, s"engine rho $got vs driver midrank rho $expected")
   }
 
@@ -2921,7 +2952,7 @@ class QueryCatalogSpec extends AnyFunSuite {
     val rows = df.orderBy("decile").collect().map(_.getAs[Double]("capture"))
     assert(rows.zip(rows.tail).forall { case (a, b) => b >= a - 1e-9 },
       "cumulative capture must be non-decreasing")
-    val last = df.filter(col("decile") === 10).head
+    val last = df.filter(col("decile") === 10).head()
     assert(math.abs(last.getAs[Double]("capture") - 1.0) < 1e-6)
     assert(math.abs(last.getAs[Double]("lift") - 1.0) < 1e-6)
     assert(df.filter(col("lift") <= 0).count() == 0)
@@ -2934,9 +2965,9 @@ class QueryCatalogSpec extends AnyFunSuite {
     assert(df.filter(col("cramers_v") < 0 || col("cramers_v") > 1.000001).count() == 0)
     assert(df.filter(col("chi2") < 0 || col("dof") < 1).count() == 0)
     val nDocs = Tables.documents(spark, dir).count()
-    assert(df.filter(col("pair") === "doc_lang_x_source").head.getAs[Long]("n") == nDocs)
+    assert(df.filter(col("pair") === "doc_lang_x_source").head().getAs[Long]("n") == nDocs)
     val nEv = Tables.events(spark, dir).count()
-    assert(df.filter(col("pair") === "event_type_x_dow").head.getAs[Long]("n") == nEv)
+    assert(df.filter(col("pair") === "event_type_x_dow").head().getAs[Long]("n") == nEv)
   }
 
   test("forecast backtest scores a full holdout fortnight per type") {
@@ -2963,7 +2994,7 @@ class QueryCatalogSpec extends AnyFunSuite {
     val n = counts.length
     val num = counts.zipWithIndex.map { case (x, i) => (2 * (i + 1) - n - 1) * x }.sum
     val expected = num / (n * counts.sum)
-    val got = df.filter(col("measure") === "event_count").head.getAs[Double]("gini")
+    val got = df.filter(col("measure") === "event_count").head().getAs[Double]("gini")
     assert(math.abs(got - expected) < 1e-5, s"engine gini $got vs driver $expected")
   }
 
@@ -3011,7 +3042,7 @@ class QueryCatalogSpec extends AnyFunSuite {
     val df = SparkEntry.queries("neyman_allocation")(spark, dir).cache()
     assert(df.count() == Tables.documents(spark, dir).select("source").distinct().count())
     assert(df.filter(col("sigma") < 0 || col("alloc_share") < 0).count() == 0)
-    val total = df.agg(sum("alloc_share")).head.getDouble(0)
+    val total = df.agg(sum("alloc_share")).head().getDouble(0)
     assert(math.abs(total - 1.0) < 1e-4, s"shares sum to $total")
     val chk = df.filter(
       abs(col("alloc_10k") - col("alloc_share") * 10000) > 1.0).count()
@@ -3050,7 +3081,7 @@ class QueryCatalogSpec extends AnyFunSuite {
     assert(df.filter(col("day") === "ALL").count() == 1)
     assert(df.filter(col("srm_flag") =!= (abs(col("z_ratio")) > 3.0)).count() == 0)
     // the seeded-md5 device IS a fair coin: the overall split must not SRM
-    val all = df.filter(col("day") === "ALL").head
+    val all = df.filter(col("day") === "ALL").head()
     assert(!all.getAs[Boolean]("srm_flag"),
       s"md5 50/50 split flagged SRM: ${all.getAs[Double]("z_ratio")}")
     // daily exposures cover every event day plus the rollup row
@@ -3061,7 +3092,7 @@ class QueryCatalogSpec extends AnyFunSuite {
   test("did lift reconciles with its four cell rates") {
     import org.apache.spark.sql.functions._
     val df = SparkEntry.queries("did_lift")(spark, dir).cache()
-    val r = df.head
+    val r = df.head()
     val did = (r.getAs[Double]("rate_b_post") - r.getAs[Double]("rate_b_pre")) -
       (r.getAs[Double]("rate_a_post") - r.getAs[Double]("rate_a_pre"))
     assert(math.abs(r.getAs[Double]("did") - did) < 5e-6)
@@ -3087,7 +3118,7 @@ class QueryCatalogSpec extends AnyFunSuite {
         round((lit(11L) - col("rn")).cast("double") /
           (log(col("rn").cast("double") + 1.0) / log(lit(2.0))), 12).as("t"))
       .groupBy("query_id").agg(sum("t").as("dcg"))
-    val idcg = selfDcg.agg(max("dcg")).head.getDouble(0)
+    val idcg = selfDcg.agg(max("dcg")).head().getDouble(0)
     assert(selfDcg.filter(abs(col("dcg") - idcg) > 1e-9).count() == 0,
       "every query's self-DCG equals the ideal DCG")
   }
@@ -3095,7 +3126,7 @@ class QueryCatalogSpec extends AnyFunSuite {
   test("brier decomposition components reconcile") {
     import org.apache.spark.sql.functions._
     val df = SparkEntry.queries("brier_decomposition")(spark, dir).cache()
-    val r = df.head
+    val r = df.head()
     val (brier, rel, res, unc) = (r.getAs[Double]("brier"), r.getAs[Double]("reliability"),
       r.getAs[Double]("resolution"), r.getAs[Double]("uncertainty"))
     assert(brier >= 0 && brier <= 1 && rel >= 0 && res >= 0 && unc >= 0 && unc <= 0.25)
@@ -3112,7 +3143,7 @@ class QueryCatalogSpec extends AnyFunSuite {
   test("hill estimator matches a driver-side order-statistic computation") {
     import org.apache.spark.sql.functions._
     val df = SparkEntry.queries("hill_tail_index")(spark, dir).cache()
-    val r = df.head
+    val r = df.head()
     val k = r.getAs[Number]("k").longValue
     assert(k >= 1 && k <= 100)
     val gamma = r.getAs[Double]("gamma")
@@ -3136,18 +3167,18 @@ class QueryCatalogSpec extends AnyFunSuite {
         || (col("trend") === "falling" && (col("z") >= -1.96 || col("s") >= 0))).count()
     assert(flagged == 0, "trend label must agree with z and the sign of S")
     // brute-force S for one type over the dense calendar
-    val t = df.head.getAs[String]("event_type")
+    val t = df.head().getAs[String]("event_type")
     val daily = Tables.events(spark, dir).filter(col("event_type") === t)
       .groupBy(to_date(col("ts")).as("d")).count()
       .collect().map(r => (r.getDate(0).toLocalDate.toEpochDay, r.getLong(1))).toMap
     val days = Tables.events(spark, dir)
-      .agg(min(to_date(col("ts"))), max(to_date(col("ts")))).head
+      .agg(min(to_date(col("ts"))), max(to_date(col("ts")))).head()
     val (lo, hi) = (days.getDate(0).toLocalDate.toEpochDay, days.getDate(1).toLocalDate.toEpochDay)
     val xs = (lo to hi).map(k => daily.getOrElse(k, 0L)).toArray
     var sPair = 0L
     for (i <- xs.indices; j <- i + 1 until xs.length)
       sPair += java.lang.Long.signum(xs(j) - xs(i))
-    val got = df.filter(col("event_type") === t).head.getAs[Long]("s")
+    val got = df.filter(col("event_type") === t).head().getAs[Long]("s")
     assert(got == sPair, s"engine S $got vs driver pair count $sPair")
   }
 
@@ -3172,7 +3203,7 @@ class QueryCatalogSpec extends AnyFunSuite {
   test("kappa reconciles with its cells and never exceeds one") {
     import org.apache.spark.sql.functions._
     val df = SparkEntry.queries("kappa_agreement")(spark, dir).cache()
-    val r = df.head
+    val r = df.head()
     val (n11, n10, n01, n00) = (r.getAs[Long]("n11"), r.getAs[Long]("n10"),
       r.getAs[Long]("n01"), r.getAs[Long]("n00"))
     val n = n11 + n10 + n01 + n00
@@ -3189,7 +3220,7 @@ class QueryCatalogSpec extends AnyFunSuite {
   test("entropy rate is bounded by the max entropy and matches a driver replay") {
     import org.apache.spark.sql.functions._
     val df = SparkEntry.queries("entropy_rate")(spark, dir).cache()
-    val r = df.head
+    val r = df.head()
     val h = r.getAs[Double]("entropy_rate_bits")
     val hmax = r.getAs[Double]("max_entropy_bits")
     assert(h >= 0 && h <= hmax + 1e-6, s"H $h must lie in [0, $hmax]")
@@ -3211,15 +3242,15 @@ class QueryCatalogSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val df = SparkEntry.queries("cv_fold_manifest")(spark, dir).cache()
     assert(df.count() == 5)
-    assert(df.agg(sum("n_docs")).head.getLong(0) == Tables.documents(spark, dir).count())
-    assert(math.abs(df.agg(sum("size_share")).head.getDouble(0) - 1.0) < 1e-4)
+    assert(df.agg(sum("n_docs")).head().getLong(0) == Tables.documents(spark, dir).count())
+    assert(math.abs(df.agg(sum("size_share")).head().getDouble(0) - 1.0) < 1e-4)
     // the md5 device spreads both size and label evenly
     assert(df.filter(abs(col("size_share") - 0.2) > 0.05).count() == 0,
       "each fold holds roughly a fifth of the corpus")
     // statistical bound: a random fold's rate is within ~4σ of the
     // corpus rate, σ = √(p(1−p)/n_fold)
-    val p = df.agg(sum("n_en")).head.getLong(0).toDouble /
-      df.agg(sum("n_docs")).head.getLong(0)
+    val p = df.agg(sum("n_en")).head().getLong(0).toDouble /
+      df.agg(sum("n_docs")).head().getLong(0)
     val offenders = df.collect().count { r =>
       val nf = r.getAs[Long]("n_docs").toDouble
       math.abs(r.getAs[Double]("en_share_dev")) > 4 * math.sqrt(p * (1 - p) / nf)
@@ -3245,7 +3276,7 @@ class QueryCatalogSpec extends AnyFunSuite {
   test("seasonal strength stays in [0,1] and reconciles with the components") {
     import org.apache.spark.sql.functions._
     val df = SparkEntry.queries("seasonal_strength")(spark, dir).cache()
-    val r = df.head
+    val r = df.head()
     val (fs, ft) = (r.getAs[Double]("f_seasonal"), r.getAs[Double]("f_trend"))
     assert(fs >= 0 && fs <= 1 && ft >= 0 && ft <= 1)
     assert(r.getAs[Double]("var_resid") >= 0)
@@ -3280,14 +3311,14 @@ class QueryCatalogSpec extends AnyFunSuite {
   test("modularity totals conserve and Q stays in its theoretical band") {
     import org.apache.spark.sql.functions._
     val df = SparkEntry.queries("graph_modularity")(spark, dir).cache()
-    val total = df.filter(col("community") === -1).head
+    val total = df.filter(col("community") === -1).head()
     val q = total.getAs[Double]("q_term")
     assert(q >= -0.5 && q <= 1.0, s"modularity $q outside [-1/2, 1]")
     val parts = df.filter(col("community") =!= -1).cache()
-    assert(parts.agg(sum("n_nodes")).head.getLong(0) == total.getAs[Long]("n_nodes"))
-    assert(parts.agg(sum("vol")).head.getLong(0) == total.getAs[Long]("vol"))
+    assert(parts.agg(sum("n_nodes")).head().getLong(0) == total.getAs[Long]("n_nodes"))
+    assert(parts.agg(sum("vol")).head().getLong(0) == total.getAs[Long]("vol"))
     // per-community q terms sum to the total (up to 6-dp emits)
-    val sumQ = parts.agg(sum("q_term")).head.getDouble(0)
+    val sumQ = parts.agg(sum("q_term")).head().getDouble(0)
     assert(math.abs(sumQ - q) < 1e-4 * math.max(1, parts.count()))
     assert(parts.filter(col("conductance") < 0 || col("conductance") > 1.000001).count() == 0)
     assert(parts.filter(col("cut_edges") < 0 || col("cut_edges") > col("vol")).count() == 0)
@@ -3316,7 +3347,7 @@ class QueryCatalogSpec extends AnyFunSuite {
     val (ma, va) = stats(pu.filter(_._1 == "A").map(_._2))
     val (mb, vb) = stats(pu.filter(_._1 == "B").map(_._2))
     val expected = (ma - mb) / math.sqrt((va + vb) / 2)
-    val got = df.filter(col("cov") === "n_events").head.getAs[Double]("smd")
+    val got = df.filter(col("cov") === "n_events").head().getAs[Double]("smd")
     assert(math.abs(got - expected) < 1e-4, s"engine SMD $got vs replay $expected")
   }
 
@@ -3340,7 +3371,7 @@ class QueryCatalogSpec extends AnyFunSuite {
   test("durbin-watson sits in [0,4] and ties to rho") {
     import org.apache.spark.sql.functions._
     val df = SparkEntry.queries("durbin_watson")(spark, dir).cache()
-    val r = df.head
+    val r = df.head()
     val dw = r.getAs[Double]("dw")
     assert(dw >= 0 && dw <= 4, s"DW $dw outside [0,4]")
     assert(math.abs(r.getAs[Double]("rho1") - (1 - dw / 2)) < 1e-5)
@@ -3365,8 +3396,8 @@ class QueryCatalogSpec extends AnyFunSuite {
     assert(bad == 0, "0 <= H <= log2(distinct chars)")
     // character mass reconciles with the documents' total text length
     val totalChars = Tables.documents(spark, dir)
-      .agg(sum(length(col("text")))).head.getLong(0)
-    assert(df.agg(sum("n_chars")).head.getLong(0) == totalChars)
+      .agg(sum(length(col("text")))).head().getLong(0)
+    assert(df.agg(sum("n_chars")).head().getLong(0) == totalChars)
   }
 
   test("bloom advisor sizing follows the closed form") {
@@ -3403,7 +3434,7 @@ class QueryCatalogSpec extends AnyFunSuite {
   test("position attribution conserves one credit per journey") {
     import org.apache.spark.sql.functions._
     val df = SparkEntry.queries("position_attribution")(spark, dir).cache()
-    val totalCredit = df.agg(sum("credit")).head.getDouble(0)
+    val totalCredit = df.agg(sum("credit")).head().getDouble(0)
     val journeys = Tables.events(spark, dir)
       .filter(col("event_type") === "purchase")
       .groupBy("user_id").agg(min("ts").as("fp_ts"))
@@ -3413,7 +3444,7 @@ class QueryCatalogSpec extends AnyFunSuite {
     assert(math.abs(totalCredit - journeys) < 1e-3 * journeys + 0.01,
       s"credits $totalCredit must sum to one per journey ($journeys)")
     assert(df.filter(col("credit") < 0).count() == 0)
-    assert(math.abs(df.agg(sum("credit_share")).head.getDouble(0) - 1.0) < 1e-4)
+    assert(math.abs(df.agg(sum("credit_share")).head().getDouble(0) - 1.0) < 1e-4)
   }
 
   test("jarque-bera moments match a driver-side computation") {
@@ -3422,7 +3453,7 @@ class QueryCatalogSpec extends AnyFunSuite {
     assert(df.count() == Tables.documents(spark, dir).select("source").distinct().count())
     assert(df.filter(col("non_normal") =!= (col("jarque_bera") > 5.99)).count() == 0)
     assert(df.filter(col("jarque_bera") < 0).count() == 0)
-    val src = df.head.getAs[String]("source")
+    val src = df.head().getAs[String]("source")
     val xs = Tables.documents(spark, dir).filter(col("source") === src)
       .select("n_chars").collect().map(_.getLong(0).toDouble)
     val n = xs.length.toDouble
@@ -3432,7 +3463,7 @@ class QueryCatalogSpec extends AnyFunSuite {
     val m4 = xs.map(v => math.pow(v - mu, 4)).sum / n
     val skew = m3 / math.pow(m2, 1.5)
     val kurt = m4 / (m2 * m2) - 3
-    val r = df.filter(col("source") === src).head
+    val r = df.filter(col("source") === src).head()
     assert(math.abs(r.getAs[Double]("skewness") - skew) < 1e-4)
     assert(math.abs(r.getAs[Double]("excess_kurtosis") - kurt) < 1e-4)
     assert(math.abs(r.getAs[Double]("jarque_bera") - n / 6 * (skew * skew + kurt * kurt / 4)) < 0.01)
@@ -3441,11 +3472,11 @@ class QueryCatalogSpec extends AnyFunSuite {
   test("cluster size distribution conserves docs and clusters") {
     import org.apache.spark.sql.functions._
     val df = SparkEntry.queries("cluster_size_dist")(spark, dir).cache()
-    val docsTotal = df.agg(sum("docs_in_size")).head.getLong(0)
+    val docsTotal = df.agg(sum("docs_in_size")).head().getLong(0)
     assert(docsTotal == Tables.documents(spark, dir).count(),
       "every doc sits in exactly one cluster")
-    assert(math.abs(df.agg(sum("doc_share")).head.getDouble(0) - 1.0) < 1e-4)
-    assert(math.abs(df.agg(sum("cluster_share")).head.getDouble(0) - 1.0) < 1e-4)
+    assert(math.abs(df.agg(sum("doc_share")).head().getDouble(0) - 1.0) < 1e-4)
+    assert(math.abs(df.agg(sum("cluster_share")).head().getDouble(0) - 1.0) < 1e-4)
     assert(df.filter(col("cluster_size") < 1).count() == 0)
     // sizes reconcile with the clusters op itself
     val direct = SparkEntry.queries("dedup_clusters")(spark, dir)
@@ -3496,7 +3527,7 @@ class QueryCatalogSpec extends AnyFunSuite {
     val den = xs.map(v => (v - mu) * (v - mu)).sum
     def acf(l: Int) = (l until xs.length).map(t => (xs(t) - mu) * (xs(t - l) - mu)).sum / den
     Seq(1, 7).foreach { l =>
-      val got = df.filter(col("lag") === l).head.getAs[Double]("acf")
+      val got = df.filter(col("lag") === l).head().getAs[Double]("acf")
       assert(math.abs(got - acf(l)) < 1e-5, s"lag $l: engine $got vs replay ${acf(l)}")
     }
   }
@@ -3504,7 +3535,7 @@ class QueryCatalogSpec extends AnyFunSuite {
   test("ess efficiency is bounded by one and hit only at uniform weights") {
     import org.apache.spark.sql.functions._
     val df = SparkEntry.queries("ess_report")(spark, dir).cache()
-    val r = df.head
+    val r = df.head()
     val eff = r.getAs[Double]("efficiency")
     assert(eff > 0 && eff <= 1.000001, s"Kish efficiency $eff must lie in (0,1]")
     assert(r.getAs[Double]("ess_tokens") <= r.getAs[Long]("total_tokens") + 1)
@@ -3556,7 +3587,7 @@ class QueryCatalogSpec extends AnyFunSuite {
       math.abs(first.count(_ <= v).toDouble / first.length
         - second.count(_ <= v).toDouble / second.length) * (vn - v)
     }.sum
-    val got = df.filter(col("lang") === "en").head.getAs[Double]("emd_chars")
+    val got = df.filter(col("lang") === "en").head().getAs[Double]("emd_chars")
     assert(math.abs(got - emd) < 1e-5, s"engine EMD $got vs driver $emd")
   }
 
@@ -3579,7 +3610,7 @@ class QueryCatalogSpec extends AnyFunSuite {
     }
     val sums2 = xs.sliding(2).map(_.sum).toArray
     val expected = variance(sums2) / (2 * variance(xs))
-    val got = df.filter(col("q") === 2).head.getAs[Double]("vr")
+    val got = df.filter(col("q") === 2).head().getAs[Double]("vr")
     assert(math.abs(got - expected) < 1e-5, s"engine VR(2) $got vs driver $expected")
   }
 
@@ -3587,9 +3618,9 @@ class QueryCatalogSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val df = SparkEntry.queries("churn_hazard")(spark, dir).cache()
     val users = Tables.events(spark, dir).select("user_id").distinct().count()
-    assert(df.agg(sum(col("churned") + col("censored"))).head.getLong(0) == users,
+    assert(df.agg(sum(col("churned") + col("censored"))).head().getLong(0) == users,
       "every user is either churned or censored exactly once")
-    val first = df.orderBy("tenure_week").head
+    val first = df.orderBy("tenure_week").head()
     assert(first.getAs[Long]("at_risk") == users,
       "the earliest week's risk set is the whole population")
     assert(df.filter(col("hazard") < 0 || col("hazard") > 1).count() == 0)
@@ -3598,7 +3629,7 @@ class QueryCatalogSpec extends AnyFunSuite {
       "survival can only decline")
     // on this synthetic data everyone is active near the horizon: the
     // censoring logic must NOT read that as churn
-    val censoredShare = df.agg(sum("censored")).head.getLong(0).toDouble / users
+    val censoredShare = df.agg(sum("censored")).head().getLong(0).toDouble / users
     assert(censoredShare > 0.9, "still-active users are censored, not churned")
   }
 
@@ -3632,16 +3663,16 @@ class QueryCatalogSpec extends AnyFunSuite {
     assert(df.filter(col("emails_per_1k") < 1000 || col("phones_per_1k") < 1000).count() == 0)
     assert(df.filter(abs(col("pii_doc_share") - 1.0) > 1e-9).count() == 0,
       "the planting rule touches every document")
-    val totalEmails = df.agg(sum("n_emails")).head.getLong(0)
+    val totalEmails = df.agg(sum("n_emails")).head().getLong(0)
     val scrub = SparkEntry.queries("pii_scrub")(spark, dir)
-      .agg(sum("n_emails")).head.getLong(0)
+      .agg(sum("n_emails")).head().getLong(0)
     assert(totalEmails == scrub, "report totals must match the scrub op")
   }
 
   test("weekend effect matches a driver-side welch z") {
     import org.apache.spark.sql.functions._
     val df = SparkEntry.queries("weekend_effect")(spark, dir).cache()
-    val r = df.head
+    val r = df.head()
     assert(r.getAs[Boolean]("significant") == (math.abs(r.getAs[Double]("welch_z")) > 1.96))
     val daily = Tables.events(spark, dir)
       .groupBy(floor(unix_timestamp(col("ts")) / 86400).as("ed")).count()
@@ -3688,7 +3719,7 @@ class QueryCatalogSpec extends AnyFunSuite {
   test("ljung-box reconciles with the acf terms") {
     import org.apache.spark.sql.functions._
     val df = SparkEntry.queries("ljung_box")(spark, dir).cache()
-    val r = df.head
+    val r = df.head()
     assert(r.getAs[Boolean]("reject_whiteness")
       == (r.getAs[Double]("q_stat") > r.getAs[Double]("chi2_cut_5pct")))
     assert(r.getAs[Double]("q_stat") >= 0)
@@ -3707,7 +3738,7 @@ class QueryCatalogSpec extends AnyFunSuite {
   test("anova reconciles with per-group moments") {
     import org.apache.spark.sql.functions._
     val df = SparkEntry.queries("anova_length")(spark, dir).cache()
-    val r = df.head
+    val r = df.head()
     assert(r.getAs[Long]("n_groups") == 5)
     val eta = r.getAs[Double]("eta_sq")
     assert(eta >= 0 && eta <= 1)
@@ -3771,7 +3802,7 @@ class QueryCatalogSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val df = SparkEntry.queries("logrank_test")(spark, dir).cache()
     assert(df.count() == 1)
-    val r = df.head
+    val r = df.head()
     val users = Tables.events(spark, dir).select("user_id").distinct().count()
     val buyers = Tables.events(spark, dir)
       .filter(col("event_type") === "purchase").select("user_id").distinct().count()
@@ -3790,7 +3821,7 @@ class QueryCatalogSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val df = SparkEntry.queries("mann_whitney_test")(spark, dir).cache()
     assert(df.count() == 1)
-    val r = df.head
+    val r = df.head()
     val na = r.getAs[Long]("n_en"); val nb = r.getAs[Long]("n_other")
     val u2 = r.getAs[Long]("u2")
     assert(u2 >= 0 && u2 <= 2 * na * nb, "2U bounded by the pair space")
@@ -3801,7 +3832,7 @@ class QueryCatalogSpec extends AnyFunSuite {
     val ot = docs.filter(col("lang") =!= "en").select(col("n_chars").as("vo"))
     val u2Direct = en.crossJoin(ot)
       .agg(sum(when(col("ve") > col("vo"), 2L)
-        .when(col("ve") === col("vo"), 1L).otherwise(0L))).head.getLong(0)
+        .when(col("ve") === col("vo"), 1L).otherwise(0L))).head().getLong(0)
     assert(u2 == u2Direct, s"histogram 2U $u2 vs pairwise $u2Direct")
   }
 
@@ -3809,7 +3840,7 @@ class QueryCatalogSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val df = SparkEntry.queries("kruskal_wallis")(spark, dir).cache()
     assert(df.count() == 1)
-    val r = df.head
+    val r = df.head()
     val n = r.getAs[Long]("n_docs")
     assert(n == Tables.documents(spark, dir).count())
     // sum of doubled midrank sums over all groups = N(N+1) exactly
@@ -3826,7 +3857,7 @@ class QueryCatalogSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val df = SparkEntry.queries("l_diversity_report")(spark, dir).cache()
     val total = Tables.customer(spark, dir).count()
-    assert(df.agg(sum("class_size")).head.getLong(0) == total)
+    assert(df.agg(sum("class_size")).head().getLong(0) == total)
     assert(df.filter(col("l_distinct") > col("class_size") || col("l_distinct") < 1).count() == 0)
     assert(df.filter(col("l_distinct") > 5).count() == 0, "only five segments exist")
     assert(df.filter(col("below_l3") =!= (col("l_distinct") < 3)).count() == 0)
@@ -3944,7 +3975,7 @@ class QueryCatalogSpec extends AnyFunSuite {
     val sxx = raw.map(p => (p._1 - mx) * (p._1 - mx)).sum
     val sxy = raw.map(p => (p._1 - mx) * (p._2 - my)).sum
     val want = sxy / sxx
-    val got = df.filter(col("l_returnflag") === "A").head.getAs[Double]("slope")
+    val got = df.filter(col("l_returnflag") === "A").head().getAs[Double]("slope")
     assert(math.abs(got - want) < 1e-3, s"slope $got vs recomputed $want")
     df.collect().foreach { r =>
       val r2 = r.getAs[Double]("r2")
@@ -4276,7 +4307,7 @@ class QueryCatalogSpec extends AnyFunSuite {
 
   test("CUPED lift: one row, bounded variance reduction, adjusted means recompute") {
     import org.apache.spark.sql.functions._
-    val r = SparkEntry.queries("cuped_lift_report")(spark, dir).head
+    val r = SparkEntry.queries("cuped_lift_report")(spark, dir).head()
     val vr = r.getAs[Double]("var_reduction")
     assert(vr >= 0 && vr <= 1.0 + 1e-9, s"var_reduction=$vr must be rho-squared in [0,1]")
     val na = r.getAs[Long]("n_a").toDouble; val nb = r.getAs[Long]("n_b").toDouble
@@ -4452,7 +4483,7 @@ class QueryCatalogSpec extends AnyFunSuite {
 
   test("Krippendorff alpha: value marginals count every code, alpha bounded above by 1") {
     import org.apache.spark.sql.functions._
-    val r = SparkEntry.queries("krippendorff_alpha")(spark, dir).head
+    val r = SparkEntry.queries("krippendorff_alpha")(spark, dir).head()
     val n = Tables.documents(spark, dir).count()
     assert(r.getAs[Long]("codes_keep") + r.getAs[Long]("codes_drop") == 2 * n,
       "two coders assign 2n codes")
@@ -4744,7 +4775,7 @@ class QueryCatalogSpec extends AnyFunSuite {
     assert(hB == nB - 2 * (nB / 5))
     // trimmed mean lies inside the group's observed value range
     val en = Tables.documents(spark, dir).filter(col("lang") === "en")
-      .agg(min(col("n_chars")), max(col("n_chars"))).head
+      .agg(min(col("n_chars")), max(col("n_chars"))).head()
     val tm = r.getAs[Double]("trimmed_mean_en")
     assert(tm >= en.getLong(0) && tm <= en.getLong(1))
     val dfY = r.getAs[Double]("df_yuen")
@@ -4786,7 +4817,7 @@ class QueryCatalogSpec extends AnyFunSuite {
       (if (p > 0) p * math.log(p / m) else 0.0) + (if (q > 0) q * math.log(q / m) else 0.0)
     }.sum / 2
     val got = df.filter(col("src_a") === sa && col("src_b") === sb)
-      .head.getAs[Double]("js_divergence")
+      .head().getAs[Double]("js_divergence")
     assert(math.abs(got - want) < 1e-3, s"JS($sa,$sb)=$got vs recomputed $want")
   }
 
@@ -4804,7 +4835,7 @@ class QueryCatalogSpec extends AnyFunSuite {
     val perUser = Tables.events(spark, dir).groupBy(col("user_id"))
       .agg(min(to_date(col("ts"))).as("fd"),
         min(when(col("event_type") === "purchase", to_date(col("ts")))).as("pd"))
-    val hz = Tables.events(spark, dir).agg(max(to_date(col("ts")))).head.getDate(0)
+    val hz = Tables.events(spark, dir).agg(max(to_date(col("ts")))).head().getDate(0)
     val durs = perUser
       .select(col("user_id"), col("fd"), col("pd"))
       .withColumn("va", md5(concat(lit("exp1:"), col("user_id").cast("string"))) < "8")
@@ -4854,7 +4885,7 @@ class QueryCatalogSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val df = SparkEntry.queries("offpolicy_eval")(spark, dir).cache()
     assert(df.count() == 4, "one row per user segment")
-    val hull = Tables.events(spark, dir).agg(min(col("value")), max(col("value"))).head
+    val hull = Tables.events(spark, dir).agg(min(col("value")), max(col("value"))).head()
     val (rMin, rMax) = (hull.getDouble(0), hull.getDouble(1))
     df.collect().foreach { r =>
       // SNIPS is a weighted mean of observed rewards: inside the hull
@@ -4930,7 +4961,7 @@ class QueryCatalogSpec extends AnyFunSuite {
     val df = SparkEntry.queries("absorption_probability")(spark, dir).cache()
     val types = Tables.events(spark, dir).select("event_type").distinct().count()
     assert(df.count() == types, "one row per state")
-    val purch = df.filter(col("start_state") === "purchase").head
+    val purch = df.filter(col("start_state") === "purchase").head()
     assert(purch.getAs[Double]("p_absorb_2") == 1.0, "absorbing state stays absorbed")
     assert(purch.getAs[Double]("p_absorb_8") == 1.0)
     df.collect().foreach { r =>
@@ -4957,7 +4988,7 @@ class QueryCatalogSpec extends AnyFunSuite {
       assert(r.getAs[Long]("n") > 0)
     }
     // recompute the slope for one brand from raw rows
-    val b = df.orderBy(col("p_brand")).head.getAs[String]("p_brand")
+    val b = df.orderBy(col("p_brand")).head().getAs[String]("p_brand")
     val raw = Tables.lineitem(spark, dir)
       .join(Tables.part(spark, dir).filter(col("p_brand") === b),
         col("l_partkey") === col("p_partkey"))
@@ -4968,7 +4999,7 @@ class QueryCatalogSpec extends AnyFunSuite {
     val mx = raw.map(_._1).sum / n; val my = raw.map(_._2).sum / n
     val want = raw.map(p => (p._1 - mx) * (p._2 - my)).sum /
       raw.map(p => (p._1 - mx) * (p._1 - mx)).sum
-    val got = df.filter(col("p_brand") === b).head.getAs[Double]("elasticity")
+    val got = df.filter(col("p_brand") === b).head().getAs[Double]("elasticity")
     assert(math.abs(got - want) < 1e-3, s"slope $got vs recomputed $want")
   }
 
@@ -5083,7 +5114,7 @@ class QueryCatalogSpec extends AnyFunSuite {
       "native RoundedDistSq diverged from the relational chain")
     // length mismatch yields null, like the DotProduct contract
     val mm = spark.sql(
-      "SELECT graft_dist2_dec(array(1.0D, 2.0D), array(1.0D)) AS d").head
+      "SELECT graft_dist2_dec(array(1.0D, 2.0D), array(1.0D)) AS d").head()
     assert(mm.isNullAt(0), "length mismatch must yield null")
   }
 
@@ -5092,7 +5123,7 @@ class QueryCatalogSpec extends AnyFunSuite {
     val df = SparkEntry.queries("silhouette_report")(spark, dir).cache()
     val labels = Tables.embeddings(spark, dir).select("label").distinct().count()
     assert(df.count() == labels, "one row per label")
-    val total = df.agg(sum(col("n_vecs"))).head.getLong(0)
+    val total = df.agg(sum(col("n_vecs"))).head().getLong(0)
     assert(total == Tables.embeddings(spark, dir).count(), "labels partition the vectors")
     df.collect().foreach { r =>
       val m = r.getAs[Double]("mean_silhouette")

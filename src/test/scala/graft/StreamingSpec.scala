@@ -1267,7 +1267,7 @@ class StreamingSpec extends AnyFunSuite {
     val evDf = Tables.events(spark, dir)
     val span = evDf.agg(
       org.apache.spark.sql.functions.min(to_date(col("ts"))).as("lo"),
-      org.apache.spark.sql.functions.max(to_date(col("ts"))).as("hi")).head
+      org.apache.spark.sql.functions.max(to_date(col("ts"))).as("hi")).head()
     val (lo, hi) = (span.getDate(0), span.getDate(1))
     val half = evDf
       .withColumn("dd", datediff(to_date(col("ts")), lit(lo)))
