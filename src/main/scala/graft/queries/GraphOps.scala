@@ -28,7 +28,7 @@ object GraphOps {
   /** Deterministic follows-graph: src buys-from dst, both mapped into
     * the 0..149 user space. ~one edge per order line, deduped.
     */
-  private[queries] def edges(s: SparkSession, dir: String): DataFrame =
+  private def edges(s: SparkSession, dir: String): DataFrame =
     Tables
       .orders(s, dir)
       .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
@@ -37,7 +37,7 @@ object GraphOps {
         ((col("l_suppkey") * 17 + col("l_partkey")) % 150).as("dst"))
       .filter(col("src") =!= col("dst"))
 
-  private[queries] val edgesSql: String =
+  private val edgesSql: String =
     """SELECT o_custkey % 150 AS src, (l_suppkey * 17 + l_partkey) % 150 AS dst
       |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
       |WHERE o_custkey % 150 <> (l_suppkey * 17 + l_partkey) % 150""".stripMargin
@@ -824,7 +824,7 @@ object GraphOps {
     * and re-cutting the already-cut labels through an extra sort: one
     * sym materialization and one labels materialization serve both.
     */
-  private[queries] def communityParts(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+  private def communityParts(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val dedges = edges(s, dir).distinct()
     // three propagation reads of the same edge set: materialize once
     // (Lineage.cut: localCheckpoint locally, reliable checkpoint when
