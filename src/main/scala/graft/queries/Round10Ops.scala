@@ -11,7 +11,8 @@ import graft.sources.Firehose
   * distinct counts (exact + mergeable-sketch twins), link-level feed
   * dedup from the firehose surface, and the governance/profiling
   * passes (k-anonymity, histograms) a data-platform team runs beside
-  * the corpus pipeline.
+  * the corpus pipeline. Its A/B readout (ab_lift_report) lives in
+  * [[ExperimentOps]].
   */
 object Round10Ops {
   import OracleMath._
@@ -300,77 +301,6 @@ object Round10Ops {
       |  (CAST(round(any_value(lo) + (bin + 1) * (any_value(hi) - any_value(lo)) / 10, 6) AS DOUBLE) + 0.0) AS bin_hi,
       |  count(*) AS n
       |FROM stacked GROUP BY col, bin ORDER BY "column", bin""".stripMargin
-
-  /** #256 ab_lift_report — experiment readout: users hash into A/B by
-    * the seeded-md5 device (deterministic, coordination-free — the
-    * corpus_split rule on the user axis), conversion = any purchase
-    * event; the report is per-variant exposure/conversion counts, the
-    * rate lift, and the two-proportion z statistic. Per-user
-    * exposure/conversion collapses in ONE fine-keyed aggregate; the
-    * variant rollup is a 2-row agg; every derived stat is a single
-    * double expression over exact longs (the assortativity device) so
-    * both engines evaluate the identical IEEE formula, rounded once
-    * at emit. The z-score's null-pool denominator guards zero with a
-    * 1e-12 floor (one-variant edge).
-    */
-  def abLiftReport(s: SparkSession, dir: String): DataFrame = {
-    val perUser = Tables.events(s, dir)
-      .groupBy(col("user_id"))
-      .agg(max(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("conv"))
-      .select(
-        when(md5(concat(lit("exp1:"), col("user_id").cast("string"))) < "8", "A")
-          .otherwise("B").as("variant"),
-        col("conv"))
-    val m = perUser.groupBy(col("variant"))
-      .agg(count(lit(1)).as("n_users"), sum(col("conv")).as("n_conv"))
-    val wide = m.agg(
-      sum(when(col("variant") === "A", col("n_users"))).as("na"),
-      sum(when(col("variant") === "A", col("n_conv"))).as("ca"),
-      sum(when(col("variant") === "B", col("n_users"))).as("nb"),
-      sum(when(col("variant") === "B", col("n_conv"))).as("cb"))
-    val pa = col("ca").cast("double") / col("na").cast("double")
-    val pb = col("cb").cast("double") / col("nb").cast("double")
-    val pool = (col("ca") + col("cb")).cast("double") / (col("na") + col("nb")).cast("double")
-    val se = sqrt(greatest(
-      pool * (lit(1.0) - pool) *
-        (lit(1.0) / col("na").cast("double") + lit(1.0) / col("nb").cast("double")),
-      lit(1e-12)))
-    wide.select(
-      col("na").as("n_a"), col("ca").as("conv_a"), emit(pa, 6).as("rate_a"),
-      col("nb").as("n_b"), col("cb").as("conv_b"), emit(pb, 6).as("rate_b"),
-      emit(pb - pa, 6).as("abs_lift"),
-      emit((pb - pa) / se, 4).as("z_score"))
-  }
-
-  val abLiftReportSql: String =
-    """WITH pu AS (
-      |  SELECT user_id,
-      |    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS conv
-      |  FROM events GROUP BY user_id
-      |), v AS (
-      |  SELECT CASE WHEN md5('exp1:' || CAST(user_id AS VARCHAR)) < '8' THEN 'A' ELSE 'B' END AS variant, conv
-      |  FROM pu
-      |), m AS (
-      |  SELECT variant, count(*) AS n_users, sum(conv) AS n_conv FROM v GROUP BY variant
-      |), w AS (
-      |  SELECT
-      |    sum(CASE WHEN variant='A' THEN n_users END) AS na,
-      |    sum(CASE WHEN variant='A' THEN n_conv END) AS ca,
-      |    sum(CASE WHEN variant='B' THEN n_users END) AS nb,
-      |    sum(CASE WHEN variant='B' THEN n_conv END) AS cb
-      |  FROM m
-      |)
-      |SELECT CAST(na AS BIGINT) AS n_a, CAST(ca AS BIGINT) AS conv_a,
-      |  (CAST(round(CAST(ca AS DOUBLE)/CAST(na AS DOUBLE), 6) AS DOUBLE) + 0.0) AS rate_a,
-      |  CAST(nb AS BIGINT) AS n_b, CAST(cb AS BIGINT) AS conv_b,
-      |  (CAST(round(CAST(cb AS DOUBLE)/CAST(nb AS DOUBLE), 6) AS DOUBLE) + 0.0) AS rate_b,
-      |  (CAST(round(CAST(cb AS DOUBLE)/CAST(nb AS DOUBLE) - CAST(ca AS DOUBLE)/CAST(na AS DOUBLE), 6) AS DOUBLE) + 0.0) AS abs_lift,
-      |  (CAST(round((CAST(cb AS DOUBLE)/CAST(nb AS DOUBLE) - CAST(ca AS DOUBLE)/CAST(na AS DOUBLE))
-      |    / sqrt(greatest(
-      |        (CAST(ca+cb AS DOUBLE)/CAST(na+nb AS DOUBLE)) * (1 - CAST(ca+cb AS DOUBLE)/CAST(na+nb AS DOUBLE))
-      |          * (1.0/CAST(na AS DOUBLE) + 1.0/CAST(nb AS DOUBLE)),
-      |        1e-12)), 4) AS DOUBLE) + 0.0) AS z_score
-      |FROM w""".stripMargin
 
   /** #257 shard_skew_report — the pre-write layout audit: docs hash
     * into 64 shards by the portable seeded-md5 device and the report
@@ -1491,7 +1421,6 @@ object Round10Ops {
     exact("cdc_apply", cdcApply, cdcApplySql),
     exact("k_anonymity", kAnonymity, kAnonymitySql),
     exact("column_histograms", columnHistograms, columnHistogramsSql),
-    exact("ab_lift_report", abLiftReport, abLiftReportSql),
     exact("shard_skew_report", shardSkewReport, shardSkewReportSql),
     exact("orders_backlog", ordersBacklog, ordersBacklogSql),
     exact("repeat_purchase", repeatPurchase, repeatPurchaseSql),

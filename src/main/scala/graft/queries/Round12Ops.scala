@@ -15,6 +15,9 @@ import graft.Key.{exact, rowsOnly}
   * Every cross-row float total follows the house order-free rule
   * (DECIMAL sums or exact integers), and per-row float chains mirror
   * the oracle's operation ORDER exactly so 6-dp emits are identical.
+  * Its experimentation keys (ab_sequential_monitor, power_analysis,
+  * ab_srm_check, did_lift, covariate_balance_smd) live in
+  * [[ExperimentOps]].
   */
 object Round12Ops {
   import OracleMath._
@@ -1393,96 +1396,6 @@ object Round12Ops {
        |FROM conv CROSS JOIN fullc ORDER BY removed""".stripMargin
   }
 
-  /** #321 ab_sequential_monitor — the sequential-testing readout over
-    * a running experiment (Pocock/O'Brien–Fleming style alpha
-    * spending, the "when could we have stopped" audit beside
-    * ab_lift_report's fixed-horizon z-test — peeking at a fixed-α
-    * boundary inflates false positives, THIS is the boundary you may
-    * peek at): arms by user-id parity, per-day CUMULATIVE successes
-    * (value ≥ 50) and trials per arm (exact ints off one (day, arm)
-    * count), the pooled two-proportion z per day, and the
-    * OBF-approximate boundary z_b(t) = 1.96/√(t/T); crossed = |z| ≥
-    * boundary. Scale: one (day, arm)-keyed count, cumulative windows
-    * over the CALENDAR-bounded day table, closed-form arithmetic
-    * mirrored in both engines. Exact oracle.
-    */
-  def abSequentialMonitor(s: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.events(s, dir)
-      .select(to_date(col("ts")).as("d"), (col("user_id") % 2).as("arm"),
-        when(col("value") >= 50.0, 1L).otherwise(0L).as("y"))
-      .groupBy(col("d"), col("arm"))
-      .agg(count(lit(1)).as("n"), sum(col("y")).as("k"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("arm")).orderBy(col("d"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    val cum = daily
-      .withColumn("cn", sum(col("n")).over(w))
-      .withColumn("ck", sum(col("k")).over(w))
-    val a0 = cum.filter(col("arm") === 0)
-      .select(col("d"), col("cn").as("n0"), col("ck").as("k0"))
-    val a1 = cum.filter(col("arm") === 1)
-      .select(col("d"), col("cn").as("n1"), col("ck").as("k1"))
-    val days = a0.join(a1, Seq("d"))
-    val maxD = days.agg(count(lit(1)).as("nd"))
-    val joined = days.crossJoin(broadcast(maxD))
-      .withColumn("t", row_number().over(
-        org.apache.spark.sql.expressions.Window.orderBy(col("d"))))
-    val p0 = col("k0").cast("double") / col("n0").cast("double")
-    val p1 = col("k1").cast("double") / col("n1").cast("double")
-    val pp = (col("k0") + col("k1")).cast("double") / (col("n0") + col("n1")).cast("double")
-    val se = sqrt(pp * (lit(1.0) - pp)
-      * (lit(1.0) / col("n0").cast("double") + lit(1.0) / col("n1").cast("double")))
-    val z = (p1 - p0) / se
-    val bound = lit(1.96) / sqrt(col("t").cast("double") / col("nd").cast("double"))
-    joined.select(
-      // house rule: dates emit FORMATTED (DuckDB DATE surfaces as a
-      // midnight timestamp in the driver's pandas frame, a raw date
-      // column can never hash-match)
-      date_format(col("d"), "yyyy-MM-dd").as("d"),
-      col("t"), col("n0"), col("k0"), col("n1"), col("k1"),
-      emit(z, 6).as("z"),
-      emit(bound, 6).as("boundary"),
-      (abs(round(z, 6).cast("double")) >= round(bound, 6).cast("double")).as("crossed"))
-      .orderBy(col("d"))
-  }
-
-  val abSequentialMonitorSql: String =
-    """WITH daily AS (
-      |  SELECT CAST(ts AS DATE) AS d, user_id % 2 AS arm, count(*) AS n,
-      |    CAST(sum(CASE WHEN value >= 50.0 THEN 1 ELSE 0 END) AS BIGINT) AS k
-      |  FROM events GROUP BY 1, 2
-      |),
-      |cum AS (
-      |  SELECT d, arm,
-      |    CAST(sum(n) OVER (PARTITION BY arm ORDER BY d) AS BIGINT) AS cn,
-      |    CAST(sum(k) OVER (PARTITION BY arm ORDER BY d) AS BIGINT) AS ck
-      |  FROM daily
-      |),
-      |days AS (
-      |  SELECT a.d, a.cn AS n0, a.ck AS k0, b.cn AS n1, b.ck AS k1
-      |  FROM (SELECT * FROM cum WHERE arm = 0) a
-      |  JOIN (SELECT * FROM cum WHERE arm = 1) b ON a.d = b.d
-      |),
-      |nd AS (SELECT count(*) AS nd FROM days),
-      |t AS (
-      |  SELECT days.*, nd.nd, row_number() OVER (ORDER BY d) AS t
-      |  FROM days CROSS JOIN nd
-      |),
-      |f AS (
-      |  SELECT d, t, n0, k0, n1, k1,
-      |    (CAST(k1 AS DOUBLE) / CAST(n1 AS DOUBLE) - CAST(k0 AS DOUBLE) / CAST(n0 AS DOUBLE))
-      |      / sqrt((CAST(k0 + k1 AS DOUBLE) / CAST(n0 + n1 AS DOUBLE))
-      |        * (1.0 - CAST(k0 + k1 AS DOUBLE) / CAST(n0 + n1 AS DOUBLE))
-      |        * (1.0 / CAST(n0 AS DOUBLE) + 1.0 / CAST(n1 AS DOUBLE))) AS z,
-      |    CAST(1.96 AS DOUBLE) / sqrt(CAST(t AS DOUBLE) / CAST(nd AS DOUBLE)) AS boundary
-      |  FROM t
-      |)
-      |SELECT strftime(d, '%Y-%m-%d') AS d, t, n0, k0, n1, k1,
-      |  (CAST(round(z, 6) AS DOUBLE) + 0.0) AS z,
-      |  (CAST(round(boundary, 6) AS DOUBLE) + 0.0) AS boundary,
-      |  abs(CAST(round(z, 6) AS DOUBLE)) >= (CAST(round(boundary, 6) AS DOUBLE) + 0.0) AS crossed
-      |FROM f ORDER BY d""".stripMargin
-
   /** #322 benford_audit — Benford's-law first-digit audit over the
     * lineitem prices (the classic fabricated-numbers screen an
     * accounting/data-quality review runs: organically-grown magnitudes
@@ -2508,63 +2421,6 @@ object Round12Ops {
       |  (CAST(round(w / CAST(tw AS DOUBLE) * 10000.0, 2) AS DOUBLE) + 0.0) AS alloc_10k
       |FROM wts CROSS JOIN tot ORDER BY source""".stripMargin
 
-  /** #336 power_analysis — the sample-size design table for a
-    * two-proportion test at the observed baselines: per event type,
-    * p0 = the measured share of users who fire it; for each relative
-    * lift in {1,2,5,10}%, the per-arm n the standard formula
-    * (z_{α/2}√(2p̄q̄) + z_β√(p0q0+p1q1))²/(p1−p0)² demands at α=0.05,
-    * power 0.8 — the "how long must this experiment run" readout that
-    * closes the A/B family (#266 measures a finished test, #321
-    * monitors a running one, THIS sizes the next one). Baselines are
-    * exact longs (the type's event count vs total events — its
-    * traffic share, a real multinomial proportion; per-user reach is
-    * degenerate here since every user fires every type); the formula
-    * is a bounded |types|×4 per-row float chain, mirrored. Exact
-    * oracle.
-    */
-  def powerAnalysis(s: SparkSession, dir: String): DataFrame = {
-    val byType = Tables.events(s, dir).groupBy(col("event_type"))
-      .agg(count(lit(1)).as("u"))
-    val tot = Tables.events(s, dir).agg(count(lit(1)).as("ut"))
-    val lifts = s.range(0, 4).select(
-      element_at(array(lit(0.01), lit(0.02), lit(0.05), lit(0.10)),
-        (col("id") + 1).cast("int")).as("lift"))
-    val p0 = col("u").cast("double") / col("ut").cast("double")
-    val p1 = p0 * (lit(1.0) + col("lift"))
-    val pbar = (p0 + p1) / lit(2.0)
-    val num = lit(1.959964) * sqrt(lit(2.0) * pbar * (lit(1.0) - pbar)) +
-      lit(0.841621) * sqrt(p0 * (lit(1.0) - p0) + p1 * (lit(1.0) - p1))
-    byType.crossJoin(broadcast(tot)).crossJoin(broadcast(lifts))
-      .filter(p1 < 1.0)
-      .select(col("event_type"), col("lift"),
-        emit(p0, 6).as("p0"), emit(p1, 6).as("p1"),
-        emit(num * num / ((p1 - p0) * (p1 - p0)), 2).as("n_per_arm"))
-      .orderBy(col("event_type"), col("lift"))
-  }
-
-  val powerAnalysisSql: String =
-    """WITH bt AS (
-      |  SELECT event_type, count(*) AS u FROM events GROUP BY 1
-      |),
-      |tot AS (SELECT count(*) AS ut FROM events),
-      |lifts AS (SELECT unnest([0.01, 0.02, 0.05, 0.10]) AS lift),
-      |g AS (
-      |  SELECT event_type, lift,
-      |    CAST(u AS DOUBLE) / CAST(ut AS DOUBLE) AS p0,
-      |    CAST(u AS DOUBLE) / CAST(ut AS DOUBLE) * (1.0 + lift) AS p1
-      |  FROM bt CROSS JOIN tot CROSS JOIN lifts
-      |)
-      |SELECT event_type, lift,
-      |  (CAST(round(p0, 6) AS DOUBLE) + 0.0) AS p0,
-      |  (CAST(round(p1, 6) AS DOUBLE) + 0.0) AS p1,
-      |  (CAST(round(
-      |    (1.959964 * sqrt(2.0 * ((p0 + p1) / 2.0) * (1.0 - (p0 + p1) / 2.0))
-      |     + 0.841621 * sqrt(p0 * (1.0 - p0) + p1 * (1.0 - p1)))
-      |    * (1.959964 * sqrt(2.0 * ((p0 + p1) / 2.0) * (1.0 - (p0 + p1) / 2.0))
-      |     + 0.841621 * sqrt(p0 * (1.0 - p0) + p1 * (1.0 - p1)))
-      |    / ((p1 - p0) * (p1 - p0)), 2) AS DOUBLE) + 0.0) AS n_per_arm
-      |FROM g WHERE p1 < 1.0 ORDER BY event_type, lift""".stripMargin
-
   /** #337 concentration_report — Herfindahl–Hirschman concentration
     * across the platform's load-bearing mixes (docs by source, events
     * by type, revenue by customer nation): HHI = Σ share², effective
@@ -2636,153 +2492,6 @@ object Round12Ops {
           "FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey GROUP BY 1") +
       "\nORDER BY dimension"
   }
-
-  /** #338 ab_srm_check — sample-ratio-mismatch screen for the running
-    * experiment, per exposure day plus the overall rollup: SRM (a
-    * 50/50 split that isn't) is the most common way a real A/B test
-    * silently lies — a day of broken assignment logging biases every
-    * downstream readout, and the fix is detection, not statistics.
-    * Arms use ab_lift_report's seeded-md5 device verbatim (md5 hex
-    * first char < '8' IS exactly half the hash space, so 50/50 is the
-    * true null); per-day exposure = distinct users seen that day per
-    * arm (one fine agg), z = (nA−nB)/√(nA+nB) over exact longs,
-    * |z| > 3 flags. Exact oracle.
-    */
-  /** The SRM arithmetic over any (day, user_id) exposure-pair frame —
-    * shared by the batch op and the streaming twin
-    * (streaming.srmFromPairs serves THIS over drained stream state,
-    * so stream ≡ batch is an identity, the psiFinish pattern). The
-    * caller may pass duplicate pairs; both roll-ups distinct first.
-    */
-  private[graft] def srmServe(pairs: DataFrame): DataFrame = {
-    val isA = when(md5(concat(lit("exp1:"), col("user_id").cast("string"))) < "8", 1L)
-      .otherwise(0L)
-    val perDay = pairs.select(col("day"), col("user_id")).distinct()
-      .select(col("day"), isA.as("isA"))
-      .groupBy(col("day"))
-      .agg(sum(col("isA")).as("n_a"), sum(lit(1L) - col("isA")).as("n_b"))
-    val overall = pairs.select(col("user_id")).distinct()
-      .select(isA.as("isA"))
-      .agg(sum(col("isA")).as("n_a"), sum(lit(1L) - col("isA")).as("n_b"))
-      .select(lit("ALL").as("day"), col("n_a"), col("n_b"))
-    val z = (col("n_a") - col("n_b")).cast("double") /
-      sqrt((col("n_a") + col("n_b")).cast("double"))
-    perDay.unionByName(overall)
-      .select(col("day"), col("n_a"), col("n_b"),
-        emit(z, 4).as("z_ratio"))
-      .withColumn("srm_flag", abs(col("z_ratio")) > 3.0)
-      .orderBy(col("day"))
-  }
-
-  def abSrmCheck(s: SparkSession, dir: String): DataFrame =
-    srmServe(Tables.events(s, dir)
-      .select(to_date(col("ts")).cast("string").as("day"), col("user_id")))
-
-  val abSrmCheckSql: String =
-    """WITH exposed AS (
-      |  SELECT DISTINCT CAST(CAST(ts AS DATE) AS VARCHAR) AS day, user_id FROM events
-      |),
-      |perday AS (
-      |  SELECT day,
-      |    CAST(sum(CASE WHEN md5('exp1:' || CAST(user_id AS VARCHAR)) < '8' THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-      |    CAST(sum(CASE WHEN md5('exp1:' || CAST(user_id AS VARCHAR)) < '8' THEN 0 ELSE 1 END) AS BIGINT) AS n_b
-      |  FROM exposed GROUP BY 1
-      |),
-      |overall AS (
-      |  SELECT 'ALL' AS day,
-      |    CAST(sum(CASE WHEN md5('exp1:' || CAST(user_id AS VARCHAR)) < '8' THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-      |    CAST(sum(CASE WHEN md5('exp1:' || CAST(user_id AS VARCHAR)) < '8' THEN 0 ELSE 1 END) AS BIGINT) AS n_b
-      |  FROM (SELECT DISTINCT user_id FROM events)
-      |),
-      |u AS (SELECT * FROM perday UNION ALL SELECT * FROM overall)
-      |SELECT day, n_a, n_b,
-      |  (CAST(round(CAST(n_a - n_b AS DOUBLE) / sqrt(CAST(n_a + n_b AS DOUBLE)), 4) AS DOUBLE) + 0.0) AS z_ratio,
-      |  abs(CAST(round(CAST(n_a - n_b AS DOUBLE) / sqrt(CAST(n_a + n_b AS DOUBLE)), 4) AS DOUBLE)) > 3.0 AS srm_flag
-      |FROM u ORDER BY day""".stripMargin
-
-  /** #339 did_lift — difference-in-differences over the experiment's
-    * calendar: (post−pre) change in per-user purchase rate for arm B
-    * minus the same change for arm A — the causal-inference readout
-    * that survives a platform-wide level shift mid-experiment, which
-    * ab_lift_report's single post-only comparison would misattribute
-    * (parallel-trends is the stated assumption, not magic). Arms are
-    * the seeded-md5 device; periods split the event calendar at its
-    * midpoint (the psi_drift half rule); each of the four cells is an
-    * exposure/purchase pair of exact longs off ONE (arm, period,
-    * user) distinct + conditional agg; the DiD chain is a single
-    * mirrored float expression over the 4-cell row. Exact oracle.
-    */
-  def didLift(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(s, dir).select(to_date(col("ts")).as("d"), col("user_id"), col("event_type"))
-    val span = ev.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
-    val cells = ev.crossJoin(broadcast(span))
-      .select(
-        when(md5(concat(lit("exp1:"), col("user_id").cast("string"))) < "8", "A")
-          .otherwise("B").as("arm"),
-        when(datediff(col("d"), col("lo")) * 2 <= datediff(col("hi"), col("lo")), "pre")
-          .otherwise("post").as("period"),
-        col("user_id"),
-        when(col("event_type") === "purchase", 1L).otherwise(0L).as("pur"))
-      .groupBy(col("arm"), col("period"), col("user_id"))
-      .agg(max(col("pur")).as("conv"))
-      .groupBy(col("arm"), col("period"))
-      .agg(count(lit(1)).as("n_users"), sum(col("conv")).as("n_conv"))
-    val wide = cells.agg(
-      sum(when(col("arm") === "A" && col("period") === "pre", col("n_conv"))).as("ca_pre"),
-      sum(when(col("arm") === "A" && col("period") === "pre", col("n_users"))).as("na_pre"),
-      sum(when(col("arm") === "A" && col("period") === "post", col("n_conv"))).as("ca_post"),
-      sum(when(col("arm") === "A" && col("period") === "post", col("n_users"))).as("na_post"),
-      sum(when(col("arm") === "B" && col("period") === "pre", col("n_conv"))).as("cb_pre"),
-      sum(when(col("arm") === "B" && col("period") === "pre", col("n_users"))).as("nb_pre"),
-      sum(when(col("arm") === "B" && col("period") === "post", col("n_conv"))).as("cb_post"),
-      sum(when(col("arm") === "B" && col("period") === "post", col("n_users"))).as("nb_post"))
-    def rate(c: String, n: String): Column = col(c).cast("double") / col(n).cast("double")
-    wide.select(
-      emit(rate("ca_pre", "na_pre"), 6).as("rate_a_pre"),
-      emit(rate("ca_post", "na_post"), 6).as("rate_a_post"),
-      emit(rate("cb_pre", "nb_pre"), 6).as("rate_b_pre"),
-      emit(rate("cb_post", "nb_post"), 6).as("rate_b_post"),
-      emit((rate("cb_post", "nb_post") - rate("cb_pre", "nb_pre"))
-        - (rate("ca_post", "na_post") - rate("ca_pre", "na_pre")), 6).as("did"))
-  }
-
-  val didLiftSql: String =
-    """WITH ev AS (SELECT CAST(ts AS DATE) AS d, user_id, event_type FROM events),
-      |span AS (SELECT min(d) AS lo, max(d) AS hi FROM ev),
-      |pu AS (
-      |  SELECT
-      |    CASE WHEN md5('exp1:' || CAST(user_id AS VARCHAR)) < '8' THEN 'A' ELSE 'B' END AS arm,
-      |    CASE WHEN datediff('day', lo, d) * 2 <= datediff('day', lo, hi) THEN 'pre' ELSE 'post' END AS period,
-      |    user_id,
-      |    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS conv
-      |  FROM ev CROSS JOIN span GROUP BY 1, 2, 3
-      |),
-      |cells AS (
-      |  SELECT arm, period, count(*) AS n_users, CAST(sum(conv) AS BIGINT) AS n_conv
-      |  FROM pu GROUP BY 1, 2
-      |),
-      |w AS (
-      |  SELECT
-      |    CAST(sum(CASE WHEN arm='A' AND period='pre' THEN n_conv END) AS BIGINT) AS ca_pre,
-      |    CAST(sum(CASE WHEN arm='A' AND period='pre' THEN n_users END) AS BIGINT) AS na_pre,
-      |    CAST(sum(CASE WHEN arm='A' AND period='post' THEN n_conv END) AS BIGINT) AS ca_post,
-      |    CAST(sum(CASE WHEN arm='A' AND period='post' THEN n_users END) AS BIGINT) AS na_post,
-      |    CAST(sum(CASE WHEN arm='B' AND period='pre' THEN n_conv END) AS BIGINT) AS cb_pre,
-      |    CAST(sum(CASE WHEN arm='B' AND period='pre' THEN n_users END) AS BIGINT) AS nb_pre,
-      |    CAST(sum(CASE WHEN arm='B' AND period='post' THEN n_conv END) AS BIGINT) AS cb_post,
-      |    CAST(sum(CASE WHEN arm='B' AND period='post' THEN n_users END) AS BIGINT) AS nb_post
-      |  FROM cells
-      |)
-      |SELECT
-      |  (CAST(round(CAST(ca_pre AS DOUBLE)/CAST(na_pre AS DOUBLE), 6) AS DOUBLE) + 0.0) AS rate_a_pre,
-      |  (CAST(round(CAST(ca_post AS DOUBLE)/CAST(na_post AS DOUBLE), 6) AS DOUBLE) + 0.0) AS rate_a_post,
-      |  (CAST(round(CAST(cb_pre AS DOUBLE)/CAST(nb_pre AS DOUBLE), 6) AS DOUBLE) + 0.0) AS rate_b_pre,
-      |  (CAST(round(CAST(cb_post AS DOUBLE)/CAST(nb_post AS DOUBLE), 6) AS DOUBLE) + 0.0) AS rate_b_post,
-      |  (CAST(round(
-      |    (CAST(cb_post AS DOUBLE)/CAST(nb_post AS DOUBLE) - CAST(cb_pre AS DOUBLE)/CAST(nb_pre AS DOUBLE))
-      |    - (CAST(ca_post AS DOUBLE)/CAST(na_post AS DOUBLE) - CAST(ca_pre AS DOUBLE)/CAST(na_pre AS DOUBLE)),
-      |    6) AS DOUBLE) + 0.0) AS did
-      |FROM w""".stripMargin
 
   /** #340 ndcg_report — nDCG@10 of the int8-quantized ranking against
     * the exact float ranking, graded relevance rel = 11 − exact_rank:
@@ -3485,99 +3194,6 @@ object Round12Ops {
       |SELECT vec_id, (CAST(round(CAST(sc AS DOUBLE), 6) AS DOUBLE) + 0.0) AS score
       |FROM terms ORDER BY score DESC, vec_id LIMIT 20""".stripMargin
 
-  /** #352 covariate_balance_smd — standardized mean differences of
-    * pre-treatment covariates between the md5 experiment arms
-    * (Austin 2009's balance table): the check did_lift and
-    * ab_lift_report silently assume — randomization that failed on a
-    * covariate (|SMD| > 0.1) biases every downstream readout, and no
-    * outcome statistic will say so. Per-user covariates (event count,
-    * purchase count, purchase value, active days) collapse in ONE
-    * fine-keyed agg; per-(covariate, arm) moments are 6/12-dp rounded
-    * DECIMAL sums (order-free); SMD = (μA−μB)/√((s²A+s²B)/2) runs on
-    * the bounded 4-row frame, mirrored. Exact oracle.
-    */
-  def covariateBalanceSmd(s: SparkSession, dir: String): DataFrame = {
-    val perUser = Tables.events(s, dir)
-      .groupBy(col("user_id"))
-      .agg(
-        count(lit(1)).cast("double").as("n_events"),
-        sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).cast("double")
-          .as("n_purchases"),
-        emit(dsum(when(col("event_type") === "purchase", round(col("value"), 6))
-          .otherwise(lit(0.0))), 6).as("purchase_value"),
-        countDistinct(to_date(col("ts"))).cast("double").as("active_days"))
-      .select(
-        when(md5(concat(lit("exp1:"), col("user_id").cast("string"))) < "8", "A")
-          .otherwise("B").as("arm"),
-        explode(array(
-          struct(lit("n_events").as("cov"), col("n_events").as("x")),
-          struct(lit("n_purchases").as("cov"), col("n_purchases").as("x")),
-          struct(lit("purchase_value").as("cov"), col("purchase_value").as("x")),
-          struct(lit("active_days").as("cov"), col("active_days").as("x")))).as("c"))
-      .select(col("arm"), col("c.cov").as("cov"), col("c.x").as("x"))
-    val m = perUser.groupBy(col("cov"), col("arm"))
-      .agg(count(lit(1)).as("n"),
-        sum(round(col("x"), 6).cast(Dec12)).as("s1"),
-        sum(round(col("x") * col("x"), 12).cast(Dec12)).as("s2"))
-      .select(col("cov"), col("arm"), col("n"),
-        (col("s1").cast("double") / col("n").cast("double")).as("mu"),
-        (col("s2").cast("double") / col("n").cast("double")
-          - (col("s1").cast("double") / col("n").cast("double"))
-            * (col("s1").cast("double") / col("n").cast("double"))).as("vr"))
-    val wide = m.groupBy(col("cov"))
-      .agg(
-        sum(when(col("arm") === "A", col("mu"))).as("mu_a"),
-        sum(when(col("arm") === "B", col("mu"))).as("mu_b"),
-        sum(when(col("arm") === "A", col("vr"))).as("vr_a"),
-        sum(when(col("arm") === "B", col("vr"))).as("vr_b"))
-    wide.select(col("cov"),
-      emit(col("mu_a"), 6).as("mean_a"), emit(col("mu_b"), 6).as("mean_b"),
-      emit((col("mu_a") - col("mu_b"))
-        / sqrt((col("vr_a") + col("vr_b")) / lit(2.0)), 6).as("smd"))
-      .withColumn("imbalanced", abs(col("smd")) > 0.1)
-      .orderBy(col("cov"))
-  }
-
-  val covariateBalanceSmdSql: String =
-    """WITH pu AS (
-      |  SELECT user_id,
-      |    CAST(count(*) AS DOUBLE) AS n_events,
-      |    CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS DOUBLE) AS n_purchases,
-      |    (CAST(round(CAST(sum(CAST(CASE WHEN event_type = 'purchase'
-      |      THEN round(value, 6) ELSE 0.0 END AS DECIMAL(38,6))) AS DOUBLE), 6) AS DOUBLE) + 0.0) AS purchase_value,
-      |    CAST(count(DISTINCT CAST(ts AS DATE)) AS DOUBLE) AS active_days
-      |  FROM events GROUP BY 1
-      |),
-      |long AS (
-      |  SELECT CASE WHEN md5('exp1:' || CAST(user_id AS VARCHAR)) < '8' THEN 'A' ELSE 'B' END AS arm,
-      |    cov, x
-      |  FROM pu, LATERAL (VALUES
-      |    ('n_events', n_events), ('n_purchases', n_purchases),
-      |    ('purchase_value', purchase_value), ('active_days', active_days)) AS t(cov, x)
-      |),
-      |m AS (
-      |  SELECT cov, arm, count(*) AS n,
-      |    CAST(sum(CAST(round(x, 6) AS DECIMAL(38,12))) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS mu,
-      |    CAST(sum(CAST(round(x * x, 12) AS DECIMAL(38,12))) AS DOUBLE) / CAST(count(*) AS DOUBLE)
-      |      - (CAST(sum(CAST(round(x, 6) AS DECIMAL(38,12))) AS DOUBLE) / CAST(count(*) AS DOUBLE))
-      |        * (CAST(sum(CAST(round(x, 6) AS DECIMAL(38,12))) AS DOUBLE) / CAST(count(*) AS DOUBLE)) AS vr
-      |  FROM long GROUP BY 1, 2
-      |),
-      |wide AS (
-      |  SELECT cov,
-      |    sum(CASE WHEN arm = 'A' THEN mu END) AS mu_a,
-      |    sum(CASE WHEN arm = 'B' THEN mu END) AS mu_b,
-      |    sum(CASE WHEN arm = 'A' THEN vr END) AS vr_a,
-      |    sum(CASE WHEN arm = 'B' THEN vr END) AS vr_b
-      |  FROM m GROUP BY 1
-      |)
-      |SELECT cov,
-      |  (CAST(round(mu_a, 6) AS DOUBLE) + 0.0) AS mean_a,
-      |  (CAST(round(mu_b, 6) AS DOUBLE) + 0.0) AS mean_b,
-      |  (CAST(round((mu_a - mu_b) / sqrt((vr_a + vr_b) / 2.0), 6) AS DOUBLE) + 0.0) AS smd,
-      |  abs(CAST(round((mu_a - mu_b) / sqrt((vr_a + vr_b) / 2.0), 6) AS DOUBLE)) > 0.1 AS imbalanced
-      |FROM wide ORDER BY cov""".stripMargin
-
   /** #353 cold_start_coverage — the recommender cold-start table: per
     * interaction threshold {1,2,5,10}, the share of users below it
     * and the share of total events those users carry — the two
@@ -3779,7 +3395,6 @@ object Round12Ops {
     exact("holt_winters_forecast", holtWintersForecast, holtWintersForecastSql),
     exact("embed_jl_projection", embedJlProjection, embedJlProjectionSql),
     exact("markov_attribution", markovAttribution, markovAttributionSql),
-    exact("ab_sequential_monitor", abSequentialMonitor, abSequentialMonitorSql),
     exact("benford_audit", benfordAudit, benfordAuditSql),
     exact("corpus_budget_select", corpusBudgetSelect, corpusBudgetSelectSql),
     exact("t_closeness_report", tClosenessReport, tClosenessReportSql),
@@ -3794,10 +3409,7 @@ object Round12Ops {
     exact("gini_report", giniReport, giniReportSql),
     exact("isotonic_calibration", isotonicCalibration, isotonicCalibrationSql),
     exact("neyman_allocation", neymanAllocation, neymanAllocationSql),
-    exact("power_analysis", powerAnalysis, powerAnalysisSql),
     exact("concentration_report", concentrationReport, concentrationReportSql),
-    exact("ab_srm_check", abSrmCheck, abSrmCheckSql),
-    exact("did_lift", didLift, didLiftSql),
     exact("ndcg_report", ndcgReport, ndcgReportSql),
     exact("brier_decomposition", brierDecomposition, brierDecompositionSql),
     exact("hill_tail_index", hillTailIndex, hillTailIndexSql),
@@ -3809,7 +3421,6 @@ object Round12Ops {
     exact("dedup_threshold_sweep", dedupThresholdSweep, dedupThresholdSweepSql),
     exact("seasonal_strength", seasonalStrength, seasonalStrengthSql),
     exact("embed_outlier_report", embedOutlierReport, embedOutlierReportSql),
-    exact("covariate_balance_smd", covariateBalanceSmd, covariateBalanceSmdSql),
     exact("cold_start_coverage", coldStartCoverage, coldStartCoverageSql),
     exact("durbin_watson", durbinWatson, durbinWatsonSql),
     exact("char_entropy_report", charEntropyReport, charEntropyReportSql),

@@ -12,7 +12,8 @@ import graft.Key.exact
   * cross-row float totals go through 6/12-dp rounds into order-free
   * DECIMAL sums (or stay exact integers), per-row float chains mirror
   * the oracle's operation ORDER exactly, global sorts never touch
-  * data-volume-sized relations.
+  * data-volume-sized relations. Its survival test (logrank_test)
+  * lives in [[ExperimentOps]].
   */
 object Round13Ops {
   import OracleMath._
@@ -1291,131 +1292,6 @@ object Round13Ops {
        |FROM pairs WHERE dist <= 6
        |ORDER BY a, b""".stripMargin
 
-  /** #404 logrank_test — the log-rank (Mantel–Cox) two-sample
-    * survival comparison over time-to-first-purchase between the A/B
-    * hash split, completing the survival family: conversion_survival
-    * draws ONE Kaplan–Meier curve, churn_hazard one life table — THIS
-    * is the test that says whether two curves DIFFER (the censoring-
-    * aware comparison a naive conversion-rate z gets wrong when
-    * observation windows differ per user). Users split by the
-    * ab_lift_report seeded-md5 device; duration = days from first
-    * event to first purchase, right-censored at the data horizon (no
-    * wall clock in the plan). At each event day: observed A-events vs
-    * expected d_j·N_A/N under H0, hypergeometric variance — all
-    * at-risk counts exact longs from ONE reverse-cumulative window
-    * over the bounded duration-day axis (the churn_hazard rule; never
-    * over raw events), per-day E/V terms 12-dp rounds into order-free
-    * DECIMAL sums, chi2 one double expression at the end. Exact
-    * oracle.
-    */
-  def logrankTest(s: SparkSession, dir: String): DataFrame = {
-    val wp = org.apache.spark.sql.expressions.Window
-    val perUser = Tables.events(s, dir).groupBy(col("user_id"))
-      .agg(min(to_date(col("ts"))).as("first_d"),
-        min(when(col("event_type") === "purchase", to_date(col("ts")))).as("purch_d"))
-    val horizon = Tables.events(s, dir).agg(max(to_date(col("ts"))).as("hz"))
-    val marked = perUser.crossJoin(broadcast(horizon))
-      .select(
-        when(md5(concat(lit("exp1:"), col("user_id").cast("string"))) < "8", "A")
-          .otherwise("B").as("variant"),
-        when(col("purch_d").isNotNull, datediff(col("purch_d"), col("first_d")))
-          .otherwise(datediff(col("hz"), col("first_d"))).cast("long").as("d"),
-        col("purch_d").isNotNull.as("event"))
-    val daily = marked.groupBy(col("d"))
-      .agg(
-        sum(when(col("variant") === "A" && col("event"), 1L).otherwise(0L)).as("da"),
-        sum(when(col("variant") === "B" && col("event"), 1L).otherwise(0L)).as("db"),
-        sum(when(col("variant") === "A", 1L).otherwise(0L)).as("ta"),
-        sum(when(col("variant") === "B", 1L).otherwise(0L)).as("tb"))
-    val wrisk = wp.orderBy(col("d").desc).rowsBetween(wp.unboundedPreceding, 0)
-    // the window runs over the bounded duration-day axis, never raw rows
-    val risky = daily
-      .withColumn("na", sum(col("ta")).over(wrisk))
-      .withColumn("nb", sum(col("tb")).over(wrisk))
-    val dj = col("da") + col("db")
-    val n = col("na") + col("nb")
-    val terms = risky.filter(dj > 0)
-      .select(col("da"), col("db"),
-        round(dj.cast("double") * col("na").cast("double") / n.cast("double"), 12)
-          .cast(Dec12).as("e1t"),
-        when(n > 1,
-          round(dj.cast("double") * col("na").cast("double") / n.cast("double")
-            * col("nb").cast("double") / n.cast("double")
-            * (n - dj).cast("double") / (n - lit(1L)).cast("double"), 12))
-          .otherwise(lit(0.0)).cast(Dec12).as("vt"))
-      .agg(sum(col("da")).as("o1"), sum(col("db")).as("o2"),
-        sum(col("e1t")).as("e1"), sum(col("vt")).as("v"))
-    val sizes = marked.agg(
-      sum(when(col("variant") === "A", 1L).otherwise(0L)).as("n_a"),
-      sum(when(col("variant") === "B", 1L).otherwise(0L)).as("n_b"))
-    val e1d = col("e1").cast("double")
-    val chi2 = (col("o1").cast("double") - e1d) * (col("o1").cast("double") - e1d) /
-      greatest(col("v").cast("double"), lit(1e-12))
-    sizes.crossJoin(broadcast(terms))
-      .select(col("n_a"), col("n_b"), col("o1").as("conv_a"), col("o2").as("conv_b"),
-        emit(e1d, 6).as("expected_a"), emit(chi2, 4).as("chi2"),
-        lit(3.841).as("chi2_cut_5pct_df1"))
-      .withColumn("significant", col("chi2") > col("chi2_cut_5pct_df1"))
-  }
-
-  val logrankTestSql: String =
-    """WITH pu AS (
-      |  SELECT user_id, min(CAST(ts AS DATE)) AS first_d,
-      |    min(CASE WHEN event_type = 'purchase' THEN CAST(ts AS DATE) END) AS purch_d
-      |  FROM events GROUP BY 1
-      |),
-      |hz AS (SELECT max(CAST(ts AS DATE)) AS hz FROM events),
-      |marked AS (
-      |  SELECT
-      |    CASE WHEN md5('exp1:' || CAST(user_id AS VARCHAR)) < '8' THEN 'A' ELSE 'B' END AS variant,
-      |    CAST(CASE WHEN purch_d IS NOT NULL THEN datediff('day', first_d, purch_d)
-      |         ELSE datediff('day', first_d, hz) END AS BIGINT) AS d,
-      |    purch_d IS NOT NULL AS event
-      |  FROM pu CROSS JOIN hz
-      |),
-      |daily AS (
-      |  SELECT d,
-      |    CAST(sum(CASE WHEN variant = 'A' AND event THEN 1 ELSE 0 END) AS BIGINT) AS da,
-      |    CAST(sum(CASE WHEN variant = 'B' AND event THEN 1 ELSE 0 END) AS BIGINT) AS db,
-      |    CAST(sum(CASE WHEN variant = 'A' THEN 1 ELSE 0 END) AS BIGINT) AS ta,
-      |    CAST(sum(CASE WHEN variant = 'B' THEN 1 ELSE 0 END) AS BIGINT) AS tb
-      |  FROM marked GROUP BY 1
-      |),
-      |risky AS (
-      |  SELECT d, da, db,
-      |    CAST(sum(ta) OVER (ORDER BY d DESC
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS na,
-      |    CAST(sum(tb) OVER (ORDER BY d DESC
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS nb
-      |  FROM daily
-      |),
-      |terms AS (
-      |  SELECT
-      |    CAST(sum(da) AS BIGINT) AS o1, CAST(sum(db) AS BIGINT) AS o2,
-      |    CAST(sum(CAST(round(CAST(da + db AS DOUBLE) * CAST(na AS DOUBLE)
-      |      / CAST(na + nb AS DOUBLE), 12) AS DECIMAL(38,12))) AS DOUBLE) AS e1,
-      |    CAST(sum(CAST(CASE WHEN na + nb > 1 THEN
-      |      round(CAST(da + db AS DOUBLE) * CAST(na AS DOUBLE) / CAST(na + nb AS DOUBLE)
-      |        * CAST(nb AS DOUBLE) / CAST(na + nb AS DOUBLE)
-      |        * CAST(na + nb - (da + db) AS DOUBLE) / CAST(na + nb - 1 AS DOUBLE), 12)
-      |      ELSE 0.0 END AS DECIMAL(38,12))) AS DOUBLE) AS v
-      |  FROM risky WHERE da + db > 0
-      |),
-      |sizes AS (
-      |  SELECT
-      |    CAST(sum(CASE WHEN variant = 'A' THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-      |    CAST(sum(CASE WHEN variant = 'B' THEN 1 ELSE 0 END) AS BIGINT) AS n_b
-      |  FROM marked
-      |)
-      |SELECT n_a, n_b, o1 AS conv_a, o2 AS conv_b,
-      |  (CAST(round(e1, 6) AS DOUBLE) + 0.0) AS expected_a,
-      |  (CAST(round((CAST(o1 AS DOUBLE) - e1) * (CAST(o1 AS DOUBLE) - e1)
-      |    / greatest(v, 1e-12), 4) AS DOUBLE) + 0.0) AS chi2,
-      |  3.841 AS chi2_cut_5pct_df1,
-      |  CAST(round((CAST(o1 AS DOUBLE) - e1) * (CAST(o1 AS DOUBLE) - e1)
-      |    / greatest(v, 1e-12), 4) AS DOUBLE) > 3.841 AS significant
-      |FROM sizes CROSS JOIN terms""".stripMargin
-
   /** #405 mann_whitney_test — the Mann–Whitney/Wilcoxon rank-sum test
     * of doc length, EN vs non-EN: the NONPARAMETRIC two-sample
     * location test beside weekend_effect's Welch z (Welch trusts
@@ -1592,7 +1468,6 @@ object Round13Ops {
   val keys: Seq[Key] = Seq(
     exact("kruskal_wallis", kruskalWallis, kruskalWallisSql),
     exact("mann_whitney_test", mannWhitneyTest, mannWhitneyTestSql),
-    exact("logrank_test", logrankTest, logrankTestSql),
     exact("dedup_editdist", dedupEditdist, dedupEditdistSql),
     exact("acf_table", acfTable, acfTableSql),
     exact("ess_report", essReport, essReportSql),

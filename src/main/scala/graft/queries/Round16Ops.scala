@@ -26,243 +26,11 @@ import graft.Key.exact
   * chains mirrored token for token, libm-adjacent factors rounded to
   * 12 dp before order-free DECIMAL(38,12) sums (the markov device),
   * emits via OracleMath.emit, bounded outputs, unique sort keys.
+  * Its experimentation keys (cuped_lift_report, mantel_haenszel) live
+  * in [[ExperimentOps]].
   */
 object Round16Ops {
   import OracleMath._
-
-  /** #387 cuped_lift_report — CUPED (Controlled-experiment Using
-    * Pre-Experiment Data, Deng et al. WSDM'13): the variance-reduced
-    * A/B readout. Users hash into A/B by the seeded-md5 device; the
-    * event span splits into pre/post halves by the integer-microsecond
-    * midpoint (the ks halves device — `2·t ≤ lo+hi`, no division);
-    * per-user X = pre-period value sum, Y = post-period value sum
-    * (both DECIMAL(38,6)-exact). θ = cov(X,Y)/var(X) is pooled across
-    * variants — computed from five exact moments (Σx, Σy decimal;
-    * Σxy, Σx², Σy² as 12-dp-rounded products in DECIMAL(38,12) sums),
-    * so both engines derive the identical doubles. The adjusted mean
-    * per variant is mean(Y) − θ·(mean(X) − mean(X)_pool); the report
-    * carries raw and CUPED lift plus the realized variance-reduction
-    * share ρ² (the fraction of metric variance the covariate
-    * explains). Scale: one per-user aggregate (map-side combined, the
-    * only data-sized shuffle), then a 2-row variant rollup folded to
-    * one row. Exact oracle.
-    */
-  def cupedLiftReport(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(s, dir)
-    val span = ev.agg(
-      min(unix_micros(col("ts"))).as("lo"), max(unix_micros(col("ts"))).as("hi"))
-    val perUser = ev.crossJoin(broadcast(span))
-      .groupBy(col("user_id"))
-      .agg(
-        dsum(when(unix_micros(col("ts")) * 2 <= col("lo") + col("hi"), col("value"))
-          .otherwise(lit(0.0))).as("x"),
-        dsum(when(unix_micros(col("ts")) * 2 <= col("lo") + col("hi"), lit(0.0))
-          .otherwise(col("value"))).as("y"))
-      .select(
-        when(md5(concat(lit("exp1:"), col("user_id").cast("string"))) < "8", "A")
-          .otherwise("B").as("variant"),
-        col("x"), col("y"))
-    val xd = col("x").cast("double")
-    val yd = col("y").cast("double")
-    val m = perUser.groupBy(col("variant"))
-      .agg(
-        count(lit(1)).as("n"),
-        sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-        sum(round(xd * yd, 12).cast(Dec12)).as("sxy"),
-        sum(round(xd * xd, 12).cast(Dec12)).as("sxx"),
-        sum(round(yd * yd, 12).cast(Dec12)).as("syy"))
-    val wide = m.agg(
-      sum(when(col("variant") === "A", col("n"))).as("na"),
-      sum(when(col("variant") === "B", col("n"))).as("nb"),
-      sum(when(col("variant") === "A", col("sx"))).as("sxa"),
-      sum(when(col("variant") === "B", col("sx"))).as("sxb"),
-      sum(when(col("variant") === "A", col("sy"))).as("sya"),
-      sum(when(col("variant") === "B", col("sy"))).as("syb"),
-      sum(col("sxy")).as("sxy"), sum(col("sxx")).as("sxx"), sum(col("syy")).as("syy"))
-    def d(c: String) = col(c).cast("double")
-    val n = (col("na") + col("nb")).cast("double")
-    val sx = d("sxa") + d("sxb")
-    val sy = d("sya") + d("syb")
-    val cxy = d("sxy") - sx * sy / n
-    val cxx = d("sxx") - sx * sx / n
-    val cyy = d("syy") - sy * sy / n
-    val theta = cxy / cxx
-    val mxp = sx / n
-    val mxa = d("sxa") / d("na"); val mxb = d("sxb") / d("nb")
-    val mya = d("sya") / d("na"); val myb = d("syb") / d("nb")
-    val adjA = mya - theta * (mxa - mxp)
-    val adjB = myb - theta * (mxb - mxp)
-    wide.select(
-      col("na").as("n_a"), col("nb").as("n_b"),
-      emit(mxa, 6).as("pre_mean_a"), emit(mxb, 6).as("pre_mean_b"),
-      emit(mya, 6).as("mean_a"), emit(myb, 6).as("mean_b"),
-      emit(theta, 6).as("theta"),
-      emit(adjA, 6).as("cuped_mean_a"), emit(adjB, 6).as("cuped_mean_b"),
-      emit(myb - mya, 6).as("raw_lift"),
-      emit(adjB - adjA, 6).as("cuped_lift"),
-      emit(cxy * cxy / (cxx * cyy), 6).as("var_reduction"))
-  }
-
-  val cupedLiftReportSql: String =
-    """WITH span AS (
-      |  SELECT CAST(min(epoch_us(ts)) AS BIGINT) AS lo,
-      |         CAST(max(epoch_us(ts)) AS BIGINT) AS hi
-      |  FROM events
-      |), pu AS (
-      |  SELECT user_id,
-      |    sum(CAST(CASE WHEN epoch_us(ts) * 2 <= lo + hi THEN value ELSE 0.0 END AS DECIMAL(38,6))) AS x,
-      |    sum(CAST(CASE WHEN epoch_us(ts) * 2 <= lo + hi THEN 0.0 ELSE value END AS DECIMAL(38,6))) AS y
-      |  FROM events CROSS JOIN span GROUP BY user_id
-      |), v AS (
-      |  SELECT CASE WHEN md5('exp1:' || CAST(user_id AS VARCHAR)) < '8' THEN 'A' ELSE 'B' END AS variant,
-      |    x, y, CAST(x AS DOUBLE) AS xd, CAST(y AS DOUBLE) AS yd
-      |  FROM pu
-      |), m AS (
-      |  SELECT variant, count(*) AS n, sum(x) AS sx, sum(y) AS sy,
-      |    sum(CAST(round(xd * yd, 12) AS DECIMAL(38,12))) AS sxy,
-      |    sum(CAST(round(xd * xd, 12) AS DECIMAL(38,12))) AS sxx,
-      |    sum(CAST(round(yd * yd, 12) AS DECIMAL(38,12))) AS syy
-      |  FROM v GROUP BY variant
-      |), w AS (
-      |  SELECT
-      |    CAST(sum(CASE WHEN variant='A' THEN n END) AS BIGINT) AS na,
-      |    CAST(sum(CASE WHEN variant='B' THEN n END) AS BIGINT) AS nb,
-      |    sum(CASE WHEN variant='A' THEN sx END) AS sxa,
-      |    sum(CASE WHEN variant='B' THEN sx END) AS sxb,
-      |    sum(CASE WHEN variant='A' THEN sy END) AS sya,
-      |    sum(CASE WHEN variant='B' THEN sy END) AS syb,
-      |    sum(sxy) AS sxy, sum(sxx) AS sxx, sum(syy) AS syy
-      |  FROM m
-      |), f AS (
-      |  SELECT na, nb,
-      |    CAST(na + nb AS DOUBLE) AS n,
-      |    CAST(sxa AS DOUBLE) + CAST(sxb AS DOUBLE) AS sx,
-      |    CAST(sya AS DOUBLE) + CAST(syb AS DOUBLE) AS sy,
-      |    CAST(sxa AS DOUBLE) / CAST(na AS DOUBLE) AS mxa,
-      |    CAST(sxb AS DOUBLE) / CAST(nb AS DOUBLE) AS mxb,
-      |    CAST(sya AS DOUBLE) / CAST(na AS DOUBLE) AS mya,
-      |    CAST(syb AS DOUBLE) / CAST(nb AS DOUBLE) AS myb,
-      |    CAST(sxy AS DOUBLE) AS sxyd, CAST(sxx AS DOUBLE) AS sxxd,
-      |    CAST(syy AS DOUBLE) AS syyd
-      |  FROM w
-      |), g AS (
-      |  SELECT na, nb, mxa, mxb, mya, myb,
-      |    sxyd - sx * sy / n AS cxy,
-      |    sxxd - sx * sx / n AS cxx,
-      |    syyd - sy * sy / n AS cyy,
-      |    (sxyd - sx * sy / n) / (sxxd - sx * sx / n) AS theta,
-      |    sx / n AS mxp
-      |  FROM f
-      |)
-      |SELECT na AS n_a, nb AS n_b,
-      |  (CAST(round(mxa, 6) AS DOUBLE) + 0.0) AS pre_mean_a,
-      |  (CAST(round(mxb, 6) AS DOUBLE) + 0.0) AS pre_mean_b,
-      |  (CAST(round(mya, 6) AS DOUBLE) + 0.0) AS mean_a,
-      |  (CAST(round(myb, 6) AS DOUBLE) + 0.0) AS mean_b,
-      |  (CAST(round(theta, 6) AS DOUBLE) + 0.0) AS theta,
-      |  (CAST(round(mya - theta * (mxa - mxp), 6) AS DOUBLE) + 0.0) AS cuped_mean_a,
-      |  (CAST(round(myb - theta * (mxb - mxp), 6) AS DOUBLE) + 0.0) AS cuped_mean_b,
-      |  (CAST(round(myb - mya, 6) AS DOUBLE) + 0.0) AS raw_lift,
-      |  (CAST(round((myb - theta * (mxb - mxp)) - (mya - theta * (mxa - mxp)), 6) AS DOUBLE) + 0.0) AS cuped_lift,
-      |  (CAST(round(cxy * cxy / (cxx * cyy), 6) AS DOUBLE) + 0.0) AS var_reduction
-      |FROM g""".stripMargin
-
-  /** #388 mantel_haenszel — the stratified odds ratio: heavy-purchaser
-    * outcome (≥14 purchases — the per-user purchase median, so the
-    * 2×2 actually splits; EVERY user here has ≥1 purchase, which is
-    * why the naive any-purchase outcome degenerates) by variant within
-    * user-activity strata (event-count tiers <60 / <75 / ≥75 around
-    * the observed ~66 median): the per-stratum OR, the crude
-    * (collapsed) OR, and the Mantel–Haenszel pooled OR
-    * Σ(aᵢdᵢ/nᵢ)/Σ(bᵢcᵢ/nᵢ). The crude-vs-MH gap IS the Simpson's
-    * paradox check: activity correlates with both the outcome and any
-    * assignment imbalance, and the MH estimate is the
-    * confounder-adjusted effect a flat 2×2 misstates. Scale: one
-    * per-user aggregate, a |strata|-row cell rollup, broadcast summary
-    * join. The per-stratum a·d/n terms round to 12 dp into
-    * DECIMAL(38,12) sums (order-free); every OR division is
-    * zero-guarded to NULL in BOTH engines (ANSI Spark raises on ÷0 —
-    * sparse strata at small SF make zero cross-products reachable).
-    * Exact oracle.
-    */
-  def mantelHaenszel(s: SparkSession, dir: String): DataFrame = {
-    val perUser = Tables.events(s, dir)
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_ev"),
-        sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("np"))
-      .select(
-        when(md5(concat(lit("exp1:"), col("user_id").cast("string"))) < "8", "A")
-          .otherwise("B").as("variant"),
-        when(col("n_ev") < 60, "1_low").when(col("n_ev") < 75, "2_mid")
-          .otherwise("3_high").as("stratum"),
-        when(col("np") >= 14, 1L).otherwise(0L).as("conv"))
-    def cell(v: String, cv: Long) =
-      sum(when(col("variant") === v && col("conv") === cv, 1L).otherwise(0L))
-    val cells = perUser.groupBy(col("stratum"))
-      .agg(cell("B", 1L).as("a"), cell("B", 0L).as("b"),
-        cell("A", 1L).as("c"), cell("A", 0L).as("d"))
-    def d(c: String) = col(c).cast("double")
-    val n = (col("a") + col("b") + col("c") + col("d")).cast("double")
-    val pooled = cells.agg(
-      sum(col("a")).as("sa"), sum(col("b")).as("sb"),
-      sum(col("c")).as("sc"), sum(col("d")).as("sd"),
-      sum(round(d("a") * d("d") / n, 12).cast(Dec12)).as("num"),
-      sum(round(d("b") * d("c") / n, 12).cast(Dec12)).as("den"))
-    cells
-      .crossJoin(broadcast(pooled))
-      .select(
-        col("stratum"),
-        col("a").as("conv_b"), col("b").as("nonconv_b"),
-        col("c").as("conv_a"), col("d").as("nonconv_a"),
-        when(col("b") * col("c") === 0, lit(null).cast("double"))
-          .otherwise(emit(d("a") * d("d") / (d("b") * d("c")), 6)).as("or_stratum"),
-        when(col("sb") * col("sc") === 0, lit(null).cast("double"))
-          .otherwise(emit(d("sa") * d("sd") / (d("sb") * d("sc")), 6)).as("or_crude"),
-        when(col("den") === 0, lit(null).cast("double"))
-          .otherwise(emit(col("num").cast("double") / col("den").cast("double"), 6))
-          .as("or_mh"))
-      .orderBy(col("stratum"))
-  }
-
-  val mantelHaenszelSql: String =
-    """WITH pu AS (
-      |  SELECT user_id, count(*) AS n_ev,
-      |    sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS np
-      |  FROM events GROUP BY user_id
-      |), v AS (
-      |  SELECT
-      |    CASE WHEN md5('exp1:' || CAST(user_id AS VARCHAR)) < '8' THEN 'A' ELSE 'B' END AS variant,
-      |    CASE WHEN n_ev < 60 THEN '1_low' WHEN n_ev < 75 THEN '2_mid' ELSE '3_high' END AS stratum,
-      |    CASE WHEN np >= 14 THEN 1 ELSE 0 END AS conv
-      |  FROM pu
-      |), cells AS (
-      |  SELECT stratum,
-      |    CAST(sum(CASE WHEN variant='B' AND conv=1 THEN 1 ELSE 0 END) AS BIGINT) AS a,
-      |    CAST(sum(CASE WHEN variant='B' AND conv=0 THEN 1 ELSE 0 END) AS BIGINT) AS b,
-      |    CAST(sum(CASE WHEN variant='A' AND conv=1 THEN 1 ELSE 0 END) AS BIGINT) AS c,
-      |    CAST(sum(CASE WHEN variant='A' AND conv=0 THEN 1 ELSE 0 END) AS BIGINT) AS d
-      |  FROM v GROUP BY stratum
-      |), pooled AS (
-      |  SELECT
-      |    CAST(sum(a) AS BIGINT) AS sa, CAST(sum(b) AS BIGINT) AS sb,
-      |    CAST(sum(c) AS BIGINT) AS sc, CAST(sum(d) AS BIGINT) AS sd,
-      |    sum(CAST(round(CAST(a AS DOUBLE) * CAST(d AS DOUBLE) / CAST(a + b + c + d AS DOUBLE), 12) AS DECIMAL(38,12))) AS num,
-      |    sum(CAST(round(CAST(b AS DOUBLE) * CAST(c AS DOUBLE) / CAST(a + b + c + d AS DOUBLE), 12) AS DECIMAL(38,12))) AS den
-      |  FROM cells
-      |)
-      |SELECT stratum,
-      |  a AS conv_b, b AS nonconv_b, c AS conv_a, d AS nonconv_a,
-      |  CASE WHEN b * c = 0 THEN NULL
-      |    ELSE (CAST(round(CAST(a AS DOUBLE) * CAST(d AS DOUBLE) / (CAST(b AS DOUBLE) * CAST(c AS DOUBLE)), 6) AS DOUBLE) + 0.0)
-      |  END AS or_stratum,
-      |  CASE WHEN sb * sc = 0 THEN NULL
-      |    ELSE (CAST(round(CAST(sa AS DOUBLE) * CAST(sd AS DOUBLE) / (CAST(sb AS DOUBLE) * CAST(sc AS DOUBLE)), 6) AS DOUBLE) + 0.0)
-      |  END AS or_crude,
-      |  CASE WHEN den = 0 THEN NULL
-      |    ELSE (CAST(round(CAST(num AS DOUBLE) / CAST(den AS DOUBLE), 6) AS DOUBLE) + 0.0)
-      |  END AS or_mh
-      |FROM cells CROSS JOIN pooled
-      |ORDER BY stratum""".stripMargin
 
   /** #389 cvm_drift_test — the Cramér–von Mises two-sample statistic
     * per language, first half vs second half of the corpus by doc_id
@@ -551,8 +319,6 @@ object Round16Ops {
        |FROM ap ORDER BY query_id""".stripMargin
 
   val keys: Seq[Key] = Seq(
-    exact("cuped_lift_report", cupedLiftReport, cupedLiftReportSql),
-    exact("mantel_haenszel", mantelHaenszel, mantelHaenszelSql),
     exact("cvm_drift_test", cvmDriftTest, cvmDriftTestSql),
     exact("distinct_ngram_report", distinctNgramReport, distinctNgramReportSql),
     exact("spectral_power", spectralPower, spectralPowerSql),

@@ -23,7 +23,8 @@ import graft.Key.exact
   * House rules as Round15/16: exact integer/decimal moments, double
   * chains mirrored token for token, 12-dp-rounded terms into
   * order-free DECIMAL(38,12) sums, emits via OracleMath.emit,
-  * bounded outputs, unique sort keys.
+  * bounded outputs, unique sort keys. Its ratio-metric readout
+  * (delta_method_ci) lives in [[ExperimentOps]].
   */
 object Round17Ops {
   import OracleMath._
@@ -103,120 +104,6 @@ object Round17Ops {
       |    * (CAST(sns2 AS DOUBLE) - CAST(sns AS DOUBLE) * CAST(sns AS DOUBLE) / CAST(nn AS DOUBLE))), 4) AS DOUBLE) + 0.0)) > 1.96 AS significant_trend
       |FROM tiers CROSS JOIN f
       |ORDER BY score""".stripMargin
-
-  /** #394 delta_method_ci — the ratio-metric readout: revenue per
-    * purchase R = ΣY/ΣK per variant with the delta-method standard
-    * error Var(R) ≈ (σ²_y − 2Rσ_yk + R²σ²_k)/(n·k̄²) — per-user
-    * totals are NOT i.i.d. revenue draws, so the naive per-event
-    * variance understates the CI (the classic ratio-metric trap;
-    * ab_lift #256 reads a proportion, CUPED #387 a mean — this is
-    * the third metric family, ratios). Per-user Y (purchase value,
-    * DECIMAL-exact) and K (purchase count) fold in the CUPED moment
-    * device (Σy decimal, Σk long, Σy²/Σyk/Σk² 12-dp→Dec12); the
-    * two-variant z for the ratio DIFFERENCE broadcasts back onto
-    * both rows. Scale: one per-user pass, 2-row rollup. Exact
-    * oracle.
-    */
-  def deltaMethodCi(s: SparkSession, dir: String): DataFrame = {
-    val perUser = Tables.events(s, dir)
-      .groupBy(col("user_id"))
-      .agg(
-        dsum(when(col("event_type") === "purchase", col("value")).otherwise(lit(0.0)))
-          .as("y"),
-        sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("k"))
-      .select(
-        when(md5(concat(lit("exp1:"), col("user_id").cast("string"))) < "8", "A")
-          .otherwise("B").as("variant"),
-        col("y"), col("k"))
-    val yd = col("y").cast("double")
-    val kd = col("k").cast("double")
-    val m = perUser.groupBy(col("variant"))
-      .agg(
-        count(lit(1)).as("n"),
-        sum(col("y")).as("sy"), sum(col("k")).as("sk"),
-        sum(round(yd * yd, 12).cast(Dec12)).as("syy"),
-        sum(round(yd * kd, 12).cast(Dec12)).as("syk"),
-        sum(round(kd * kd, 12).cast(Dec12)).as("skk"))
-    def d(c: String) = col(c).cast("double")
-    val nn = d("n")
-    val my = d("sy") / nn
-    val mk = d("sk") / nn
-    val r = my / mk
-    val vy = d("syy") / nn - my * my
-    val vk = d("skk") / nn - mk * mk
-    val cyk = d("syk") / nn - my * mk
-    val varR = (vy - lit(2.0) * r * cyk + r * r * vk) / (nn * mk * mk)
-    val se = sqrt(varR)
-    val rows = m.select(
-      col("variant"), col("n").as("n_users"),
-      emit(r, 6).as("ratio"),
-      emit(se, 6).as("se"),
-      emit(r - lit(1.96) * se, 6).as("ci_lo"),
-      emit(r + lit(1.96) * se, 6).as("ci_hi"),
-      round(varR, 12).as("var_r"))
-    val diff = rows.agg(
-      sum(when(col("variant") === "A", col("ratio"))).as("ra"),
-      sum(when(col("variant") === "B", col("ratio"))).as("rb"),
-      sum(when(col("variant") === "A", col("var_r"))).as("va"),
-      sum(when(col("variant") === "B", col("var_r"))).as("vb"))
-      .select(emit((col("rb") - col("ra")) / sqrt(col("va") + col("vb")), 4).as("z_diff"))
-    rows.drop("var_r").crossJoin(broadcast(diff)).orderBy(col("variant"))
-  }
-
-  val deltaMethodCiSql: String =
-    """WITH pu AS (
-      |  SELECT user_id,
-      |    sum(CAST(CASE WHEN event_type = 'purchase' THEN value ELSE 0.0 END AS DECIMAL(38,6))) AS y,
-      |    CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS k
-      |  FROM events GROUP BY user_id
-      |), v AS (
-      |  SELECT CASE WHEN md5('exp1:' || CAST(user_id AS VARCHAR)) < '8' THEN 'A' ELSE 'B' END AS variant,
-      |    y, k, CAST(y AS DOUBLE) AS yd, CAST(k AS DOUBLE) AS kd
-      |  FROM pu
-      |), m AS (
-      |  SELECT variant, count(*) AS n, sum(y) AS sy, CAST(sum(k) AS BIGINT) AS sk,
-      |    sum(CAST(round(yd * yd, 12) AS DECIMAL(38,12))) AS syy,
-      |    sum(CAST(round(yd * kd, 12) AS DECIMAL(38,12))) AS syk,
-      |    sum(CAST(round(kd * kd, 12) AS DECIMAL(38,12))) AS skk
-      |  FROM v GROUP BY variant
-      |), f AS (
-      |  SELECT variant, n,
-      |    CAST(n AS DOUBLE) AS nn,
-      |    CAST(sy AS DOUBLE) / CAST(n AS DOUBLE) AS my,
-      |    CAST(sk AS DOUBLE) / CAST(n AS DOUBLE) AS mk,
-      |    CAST(syy AS DOUBLE) / CAST(n AS DOUBLE) AS myy,
-      |    CAST(syk AS DOUBLE) / CAST(n AS DOUBLE) AS myk,
-      |    CAST(skk AS DOUBLE) / CAST(n AS DOUBLE) AS mkk
-      |  FROM m
-      |), g AS (
-      |  SELECT variant, n, nn, my, mk,
-      |    my / mk AS r,
-      |    myy - my * my AS vy,
-      |    mkk - mk * mk AS vk,
-      |    myk - my * mk AS cyk
-      |  FROM f
-      |), h AS (
-      |  SELECT variant, n, r,
-      |    sqrt((vy - 2.0 * r * cyk + r * r * vk) / (nn * mk * mk)) AS se,
-      |    round((vy - 2.0 * r * cyk + r * r * vk) / (nn * mk * mk), 12) AS var_r
-      |  FROM g
-      |), rows_out AS (
-      |  SELECT variant, n AS n_users,
-      |    (CAST(round(r, 6) AS DOUBLE) + 0.0) AS ratio,
-      |    (CAST(round(se, 6) AS DOUBLE) + 0.0) AS se,
-      |    (CAST(round(r - 1.96 * se, 6) AS DOUBLE) + 0.0) AS ci_lo,
-      |    (CAST(round(r + 1.96 * se, 6) AS DOUBLE) + 0.0) AS ci_hi,
-      |    var_r
-      |  FROM h
-      |), diff AS (
-      |  SELECT (CAST(round(
-      |    (sum(CASE WHEN variant='B' THEN ratio END) - sum(CASE WHEN variant='A' THEN ratio END))
-      |    / sqrt(sum(CASE WHEN variant='A' THEN var_r END) + sum(CASE WHEN variant='B' THEN var_r END)), 4) AS DOUBLE) + 0.0) AS z_diff
-      |  FROM rows_out
-      |)
-      |SELECT variant, n_users, ratio, se, ci_lo, ci_hi, z_diff
-      |FROM rows_out CROSS JOIN diff
-      |ORDER BY variant""".stripMargin
 
   /** #395 ctfidf_terms — class-based tf-idf (the BERTopic device,
     * Grootendorst 2022, reduced to its exact-arithmetic core): per
@@ -543,7 +430,6 @@ object Round17Ops {
 
   val keys: Seq[Key] = Seq(
     exact("cochran_armitage", cochranArmitage, cochranArmitageSql),
-    exact("delta_method_ci", deltaMethodCi, deltaMethodCiSql),
     exact("ctfidf_terms", ctfidfTerms, ctfidfTermsSql),
     exact("krippendorff_alpha", krippendorffAlpha, krippendorffAlphaSql),
     exact("page_hinkley", pageHinkley, pageHinkleySql),

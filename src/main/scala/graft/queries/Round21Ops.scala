@@ -22,138 +22,11 @@ import graft.Key.exact
   * chains mirrored token for token, 12-dp-rounded libm terms into
   * order-free DECIMAL(38,12) sums, emits via OracleMath.emit with §6
   * #5 recovery on oracle ratio emits, bounded outputs, unique sort
-  * keys.
+  * keys. Its survival effect size (rmst_report) lives in
+  * [[ExperimentOps]].
   */
 object Round21Ops {
   import OracleMath._
-
-  /** #415 rmst_report — restricted mean survival time to τ = 30 days
-    * for time-to-first-purchase, per A/B hash variant (the logrank
-    * #404 frame VERBATIM: seeded-md5 split, duration = days from
-    * first event to first purchase, right-censored at the horizon):
-    * RMST(τ) = ∫₀^τ S(t)dt, the average purchase-free days within a
-    * 30-day window — the EFFECT SIZE behind logrank's yes/no (two
-    * curves can differ significantly by a medically/commercially
-    * irrelevant margin; RMST is the difference in days a decision
-    * actually weighs). The KM product Π(1−d/n) walks as
-    * exp(Σ ln(1−d/n)) with 12-dp rounds into an ordered cumsum (the
-    * markov device), at-risk counts from ONE reverse-cumulative
-    * window over the bounded duration-day axis (the churn_hazard
-    * rule), and the integral is a Σ S(tᵢ)·Δt of 12-dp-rounded terms
-    * in a DECIMAL(38,12) sum. Exact oracle.
-    */
-  def rmstReport(s: SparkSession, dir: String): DataFrame = {
-    val tau = 30L
-    val perUser = Tables.events(s, dir).groupBy(col("user_id"))
-      .agg(min(to_date(col("ts"))).as("first_d"),
-        min(when(col("event_type") === "purchase", to_date(col("ts")))).as("purch_d"))
-    val horizon = Tables.events(s, dir).agg(max(to_date(col("ts"))).as("hz"))
-    val marked = perUser.crossJoin(broadcast(horizon))
-      .select(
-        when(md5(concat(lit("exp1:"), col("user_id").cast("string"))) < "8", "A")
-          .otherwise("B").as("variant"),
-        when(col("purch_d").isNotNull, datediff(col("purch_d"), col("first_d")))
-          .otherwise(datediff(col("hz"), col("first_d"))).cast("long").as("d"),
-        col("purch_d").isNotNull.as("event"))
-    val daily = graft.Lineage.cut(marked.groupBy(col("variant"), col("d"))
-      .agg(sum(when(col("event"), 1L).otherwise(0L)).as("dv"),
-        count(lit(1)).as("tv")))
-    val wrisk = Window.partitionBy(col("variant")).orderBy(col("d").desc)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val wkm = Window.partitionBy(col("variant")).orderBy(col("d"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val wlead = Window.partitionBy(col("variant")).orderBy(col("d"))
-    // at-risk via the reverse cumsum; KM via the ordered ln-cumsum. A
-    // day where EVERYONE at risk purchases (dv = n) sends the product
-    // to exactly 0 — ln is undefined there (DuckDB errors, Spark nulls
-    // silently), so that day raises a cumulative "extinct" flag and
-    // survival reads 0.0 from it onward on both engines.
-    val km = daily
-      .withColumn("n", sum(col("tv")).over(wrisk))
-      .withColumn("lnterm",
-        when(col("dv") > 0 && col("dv") < col("n"),
-          round(log(lit(1.0) - col("dv").cast("double") / col("n").cast("double")), 12)
-            .cast(Dec12))
-          .otherwise(lit(0).cast(Dec12)))
-      .withColumn("extinct", max(when(col("dv") === col("n"), 1L).otherwise(0L)).over(wkm))
-      .withColumn("lncum", sum(col("lnterm")).over(wkm))
-      .withColumn("surv",
-        when(col("extinct") === 1L, lit(0.0))
-          .otherwise(round(exp(col("lncum").cast("double")), 12)))
-    // integral: S is right-continuous — on [t_i, t_{i+1}) the curve
-    // reads S(t_i); the first segment [0, t_min) reads S = 1
-    val seg = km
-      .withColumn("t_next", coalesce(lead(col("d"), 1).over(wlead), lit(tau)))
-      .withColumn("lo", least(col("d"), lit(tau)))
-      .withColumn("hi", least(col("t_next"), lit(tau)))
-      .withColumn("contrib",
-        when(col("hi") > col("lo"),
-          round(col("surv") * (col("hi") - col("lo")).cast("double"), 12).cast(Dec12))
-          .otherwise(lit(0).cast(Dec12)))
-    val head = km
-      .groupBy(col("variant"))
-      .agg(min(col("d")).as("dmin"), sum(col("dv")).as("n_events"),
-        sum(col("tv")).as("n_users"))
-      .select(col("variant"), col("n_events"), col("n_users"),
-        least(col("dmin"), lit(tau)).cast("double").as("head_area"))
-    seg.groupBy(col("variant"))
-      .agg(sum(col("contrib")).as("tail_area"))
-      .join(broadcast(head), Seq("variant"))
-      .select(
-        col("variant"), col("n_users"), col("n_events"),
-        emit(col("head_area") + col("tail_area").cast("double"), 4).as("rmst_30d"))
-      .orderBy(col("variant"))
-  }
-
-  val rmstReportSql: String =
-    """WITH per_user AS (
-      |  SELECT user_id, min(CAST(ts AS DATE)) AS first_d,
-      |    min(CASE WHEN event_type = 'purchase' THEN CAST(ts AS DATE) END) AS purch_d
-      |  FROM events GROUP BY 1
-      |), horizon AS (SELECT max(CAST(ts AS DATE)) AS hz FROM events),
-      |marked AS (
-      |  SELECT CASE WHEN md5('exp1:' || CAST(user_id AS VARCHAR)) < '8' THEN 'A' ELSE 'B' END AS variant,
-      |    CAST(CASE WHEN purch_d IS NOT NULL THEN purch_d - first_d ELSE hz - first_d END AS BIGINT) AS d,
-      |    purch_d IS NOT NULL AS event
-      |  FROM per_user CROSS JOIN horizon
-      |), daily AS (
-      |  SELECT variant, d,
-      |    CAST(sum(CASE WHEN event THEN 1 ELSE 0 END) AS BIGINT) AS dv,
-      |    count(*) AS tv
-      |  FROM marked GROUP BY 1, 2
-      |), km AS (
-      |  SELECT variant, d, dv, tv,
-      |    CAST(sum(tv) OVER (PARTITION BY variant ORDER BY d DESC) AS BIGINT) AS n
-      |  FROM daily
-      |), km2 AS (
-      |  SELECT variant, d, dv, tv, n,
-      |    CASE WHEN dv > 0 AND dv < n THEN CAST(round(ln(1.0 - CAST(dv AS DOUBLE) / CAST(n AS DOUBLE)), 12) AS DECIMAL(38,12))
-      |      ELSE CAST(0 AS DECIMAL(38,12)) END AS lnterm,
-      |    CASE WHEN dv = n THEN 1 ELSE 0 END AS ext0
-      |  FROM km
-      |), km3 AS (
-      |  SELECT variant, d, dv, tv,
-      |    CASE WHEN max(ext0) OVER (PARTITION BY variant ORDER BY d) = 1 THEN 0.0
-      |      ELSE round(exp(CAST(sum(lnterm) OVER (PARTITION BY variant ORDER BY d) AS DOUBLE)), 12) END AS surv,
-      |    coalesce(lead(d, 1) OVER (PARTITION BY variant ORDER BY d), 30) AS t_next
-      |  FROM km2
-      |), seg AS (
-      |  SELECT variant,
-      |    CASE WHEN least(t_next, 30) > least(d, 30)
-      |      THEN CAST(round(surv * CAST(least(t_next, 30) - least(d, 30) AS DOUBLE), 12) AS DECIMAL(38,12))
-      |      ELSE CAST(0 AS DECIMAL(38,12)) END AS contrib,
-      |    dv, tv, d
-      |  FROM km3
-      |), head AS (
-      |  SELECT variant, CAST(sum(dv) AS BIGINT) AS n_events, CAST(sum(tv) AS BIGINT) AS n_users,
-      |    CAST(least(min(d), 30) AS DOUBLE) AS head_area
-      |  FROM seg GROUP BY 1
-      |)
-      |SELECT seg.variant, n_users, n_events,
-      |  (CAST(round(CAST(head_area + CAST(sum(contrib) AS DOUBLE) AS DECIMAL(28,14)), 4) AS DOUBLE) + 0.0) AS rmst_30d
-      |FROM seg JOIN head ON seg.variant = head.variant
-      |GROUP BY seg.variant, n_users, n_events, head_area
-      |ORDER BY seg.variant""".stripMargin
 
   /** #416 nb_overdispersion — is per-user event traffic Poisson? Per
     * event type, the per-user count distribution's mean m and
@@ -322,7 +195,6 @@ object Round21Ops {
       |ORDER BY sums.seg""".stripMargin
 
   val keys: Seq[Key] = Seq(
-    exact("rmst_report", rmstReport, rmstReportSql),
     exact("nb_overdispersion", nbOverdispersion, nbOverdispersionSql),
     exact("offpolicy_eval", offpolicyEval, offpolicyEvalSql))
 }

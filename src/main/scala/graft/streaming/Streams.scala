@@ -1046,7 +1046,7 @@ object Streams {
     * (day, user_id) — exposure pairs, map-side combined; the SRM
     * table (per-day arm split z plus the ALL rollup) is SERVED from
     * the drained pair state through the batch op's own arithmetic
-    * ([[graft.queries.Round12Ops.srmServe]] — the psiFinish
+    * ([[graft.queries.ExperimentOps.srmServe]] — the psiFinish
     * serve-from-state pattern), so stream ≡ batch is an identity,
     * spec-pinned. At scale the state is distinct (day, user) pairs;
     * a long-running deployment bounds it with an event-time watermark
@@ -1065,7 +1065,7 @@ object Streams {
     * break reference dedup (the holtFromCounts rule).
     */
   def srmFromPairs(pairs: DataFrame): DataFrame =
-    graft.queries.Round12Ops.srmServe(graft.Lineage.cut(pairs))
+    graft.queries.ExperimentOps.srmServe(graft.Lineage.cut(pairs))
 
   /** Serve the PSI table from a drained live-counts state + baseline. */
   def psiFromCounts(baseline: DataFrame, live: DataFrame): DataFrame =
