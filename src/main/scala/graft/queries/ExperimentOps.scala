@@ -7,51 +7,83 @@ import org.apache.spark.sql.functions._
 import graft.{Key, OracleMath, Tables}
 import graft.Key.exact
 
-/** Every experimentation key: the A/B readouts over the `events`
-  * table — the fixed-horizon lift and its sample-ratio screen, the
-  * sequential monitor, the design-time power table, the
-  * difference-in-differences, CUPED, ratio-metric and stratified
-  * (Mantel–Haenszel) readouts, the covariate balance check, and the
-  * survival pair (the log-rank test and the restricted mean survival
-  * time). Users split into arms by the seeded-md5 device; the
-  * sequential monitor alone splits by user-id parity.
+/** Every experimentation key: the A/B readouts over `events` (lift,
+  * sample-ratio screen, sequential monitor, power table, DiD, CUPED,
+  * ratio-metric and Mantel–Haenszel readouts, covariate balance) and
+  * the survival pair (log-rank test, RMST). Each device is defined
+  * once, with its oracle twin where the emitted SQL allows: the
+  * seeded-md5 arm ([[inA]], [[variant]]), the two-arm pivot
+  * ([[armSum]]) and the time-to-first-purchase frame
+  * ([[firstPurchase]]). The sequential monitor alone splits its arms
+  * by user-id parity.
   */
 object ExperimentOps {
   import OracleMath._
 
-  /** #256 ab_lift_report — experiment readout: users hash into A/B by
-    * the seeded-md5 device (deterministic, coordination-free — the
-    * corpus_split rule on the user axis), conversion = any purchase
-    * event; the report is per-variant exposure/conversion counts, the
-    * rate lift, and the two-proportion z statistic. Per-user
-    * exposure/conversion collapses in ONE fine-keyed aggregate; the
-    * variant rollup is a 2-row agg; every derived stat is a single
-    * double expression over exact longs (the assortativity device) so
-    * both engines evaluate the identical IEEE formula, rounded once
-    * at emit. The z-score's null-pool denominator guards zero with a
-    * 1e-12 floor (one-variant edge).
+  /** The seeded-md5 arm: a user is in arm A when the md5 hex of
+    * `exp1:<user_id>` starts below '8', exactly half the hash space
+    * (the corpus_split rule on the user axis). Callers alias [[variant]].
+    */
+  private[graft] val inA: Column =
+    md5(concat(lit("exp1:"), col("user_id").cast("string"))) < "8"
+  private[graft] val variant: Column = when(inA, "A").otherwise("B")
+
+  /** Column `c` read as a double. */
+  private def d(c: String): Column = col(c).cast("double")
+
+  /** The two-arm pivot: `x` summed over the rows of arm `arm`. */
+  private def armSum(arm: String, x: String, by: String = "variant"): Column =
+    sum(when(col(by) === arm, col(x)))
+
+  /** [[inA]] and [[variant]] in the oracle's SQL. */
+  private val inASql = "md5('exp1:' || CAST(user_id AS VARCHAR)) < '8'"
+  private val variantSql = s"CASE WHEN $inASql THEN 'A' ELSE 'B' END"
+
+  /** The time-to-first-purchase frame of the survival pair: per user
+    * its arm (`variant`), the days `d` from its first event to its
+    * first purchase, and whether it purchased (`event`). A non-buyer
+    * is right-censored at the last event day of `events`, which needs
+    * `user_id`, `ts` and `event_type`.
+    */
+  private[graft] def firstPurchase(events: DataFrame): DataFrame = {
+    val perUser = events.groupBy(col("user_id"))
+      .agg(min(to_date(col("ts"))).as("first_d"),
+        min(when(col("event_type") === "purchase", to_date(col("ts")))).as("purch_d"))
+    val horizon = events.agg(max(to_date(col("ts"))).as("hz"))
+    perUser.crossJoin(broadcast(horizon))
+      .select(
+        variant.as("variant"),
+        when(col("purch_d").isNotNull, datediff(col("purch_d"), col("first_d")))
+          .otherwise(datediff(col("hz"), col("first_d"))).cast("long").as("d"),
+        col("purch_d").isNotNull.as("event"))
+  }
+
+  /** #256 ab_lift_report — experiment readout: users split into A/B
+    * by [[variant]], conversion = any purchase event; the report is
+    * per-variant exposure/conversion counts, the rate lift, and the
+    * two-proportion z statistic. Per-user exposure/conversion
+    * collapses in ONE fine-keyed aggregate; the variant rollup is a
+    * 2-row agg; every derived stat is a single double expression over
+    * exact longs (the assortativity device) so both engines evaluate
+    * the identical IEEE formula, rounded once at emit. The z-score's
+    * null-pool denominator guards zero with a 1e-12 floor
+    * (one-variant edge).
     */
   def abLiftReport(s: SparkSession, dir: String): DataFrame = {
     val perUser = Tables.events(s, dir)
       .groupBy(col("user_id"))
       .agg(max(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("conv"))
-      .select(
-        when(md5(concat(lit("exp1:"), col("user_id").cast("string"))) < "8", "A")
-          .otherwise("B").as("variant"),
-        col("conv"))
+      .select(variant.as("variant"), col("conv"))
     val m = perUser.groupBy(col("variant"))
       .agg(count(lit(1)).as("n_users"), sum(col("conv")).as("n_conv"))
     val wide = m.agg(
-      sum(when(col("variant") === "A", col("n_users"))).as("na"),
-      sum(when(col("variant") === "A", col("n_conv"))).as("ca"),
-      sum(when(col("variant") === "B", col("n_users"))).as("nb"),
-      sum(when(col("variant") === "B", col("n_conv"))).as("cb"))
-    val pa = col("ca").cast("double") / col("na").cast("double")
-    val pb = col("cb").cast("double") / col("nb").cast("double")
+      armSum("A", "n_users").as("na"), armSum("A", "n_conv").as("ca"),
+      armSum("B", "n_users").as("nb"), armSum("B", "n_conv").as("cb"))
+    val pa = d("ca") / d("na")
+    val pb = d("cb") / d("nb")
     val pool = (col("ca") + col("cb")).cast("double") / (col("na") + col("nb")).cast("double")
     val se = sqrt(greatest(
-      pool * (lit(1.0) - pool) *
-        (lit(1.0) / col("na").cast("double") + lit(1.0) / col("nb").cast("double")),
+      pool * (lit(1.0) - pool) * (lit(1.0) / d("na") + lit(1.0) / d("nb")),
       lit(1e-12)))
     wide.select(
       col("na").as("n_a"), col("ca").as("conv_a"), emit(pa, 6).as("rate_a"),
@@ -61,12 +93,12 @@ object ExperimentOps {
   }
 
   val abLiftReportSql: String =
-    """WITH pu AS (
+    s"""WITH pu AS (
       |  SELECT user_id,
       |    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS conv
       |  FROM events GROUP BY user_id
       |), v AS (
-      |  SELECT CASE WHEN md5('exp1:' || CAST(user_id AS VARCHAR)) < '8' THEN 'A' ELSE 'B' END AS variant, conv
+      |  SELECT $variantSql AS variant, conv
       |  FROM pu
       |), m AS (
       |  SELECT variant, count(*) AS n_users, sum(conv) AS n_conv FROM v GROUP BY variant
@@ -109,28 +141,23 @@ object ExperimentOps {
         when(col("value") >= 50.0, 1L).otherwise(0L).as("y"))
       .groupBy(col("d"), col("arm"))
       .agg(count(lit(1)).as("n"), sum(col("y")).as("k"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("arm")).orderBy(col("d"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
+    val w = Window.partitionBy(col("arm")).orderBy(col("d"))
+      .rowsBetween(Window.unboundedPreceding, 0)
     val cum = daily
       .withColumn("cn", sum(col("n")).over(w))
       .withColumn("ck", sum(col("k")).over(w))
-    val a0 = cum.filter(col("arm") === 0)
-      .select(col("d"), col("cn").as("n0"), col("ck").as("k0"))
-    val a1 = cum.filter(col("arm") === 1)
-      .select(col("d"), col("cn").as("n1"), col("ck").as("k1"))
-    val days = a0.join(a1, Seq("d"))
+    def arm(a: Int) = cum.filter(col("arm") === a)
+      .select(col("d"), col("cn").as(s"n$a"), col("ck").as(s"k$a"))
+    val days = arm(0).join(arm(1), Seq("d"))
     val maxD = days.agg(count(lit(1)).as("nd"))
     val joined = days.crossJoin(broadcast(maxD))
-      .withColumn("t", row_number().over(
-        org.apache.spark.sql.expressions.Window.orderBy(col("d"))))
-    val p0 = col("k0").cast("double") / col("n0").cast("double")
-    val p1 = col("k1").cast("double") / col("n1").cast("double")
+      .withColumn("t", row_number().over(Window.orderBy(col("d"))))
+    val p0 = d("k0") / d("n0")
+    val p1 = d("k1") / d("n1")
     val pp = (col("k0") + col("k1")).cast("double") / (col("n0") + col("n1")).cast("double")
-    val se = sqrt(pp * (lit(1.0) - pp)
-      * (lit(1.0) / col("n0").cast("double") + lit(1.0) / col("n1").cast("double")))
+    val se = sqrt(pp * (lit(1.0) - pp) * (lit(1.0) / d("n0") + lit(1.0) / d("n1")))
     val z = (p1 - p0) / se
-    val bound = lit(1.96) / sqrt(col("t").cast("double") / col("nd").cast("double"))
+    val bound = lit(1.96) / sqrt(d("t") / d("nd"))
     joined.select(
       // house rule: dates emit FORMATTED (DuckDB DATE surfaces as a
       // midnight timestamp in the driver's pandas frame, a raw date
@@ -201,7 +228,7 @@ object ExperimentOps {
     val lifts = s.range(0, 4).select(
       element_at(array(lit(0.01), lit(0.02), lit(0.05), lit(0.10)),
         (col("id") + 1).cast("int")).as("lift"))
-    val p0 = col("u").cast("double") / col("ut").cast("double")
+    val p0 = d("u") / d("ut")
     val p1 = p0 * (lit(1.0) + col("lift"))
     val pbar = (p0 + p1) / lit(2.0)
     val num = lit(1.959964) * sqrt(lit(2.0) * pbar * (lit(1.0) - pbar)) +
@@ -242,8 +269,7 @@ object ExperimentOps {
     * 50/50 split that isn't) is the most common way a real A/B test
     * silently lies — a day of broken assignment logging biases every
     * downstream readout, and the fix is detection, not statistics.
-    * Arms use ab_lift_report's seeded-md5 device verbatim (md5 hex
-    * first char < '8' IS exactly half the hash space, so 50/50 is the
+    * Arms are [[inA]] (exactly half the hash space, so 50/50 is the
     * true null); per-day exposure = distinct users seen that day per
     * arm (one fine agg), z = (nA−nB)/√(nA+nB) over exact longs,
     * |z| > 3 flags. Exact oracle.
@@ -255,8 +281,7 @@ object ExperimentOps {
     * caller may pass duplicate pairs; both roll-ups distinct first.
     */
   private[graft] def srmServe(pairs: DataFrame): DataFrame = {
-    val isA = when(md5(concat(lit("exp1:"), col("user_id").cast("string"))) < "8", 1L)
-      .otherwise(0L)
+    val isA = when(inA, 1L).otherwise(0L)
     val perDay = pairs.select(col("day"), col("user_id")).distinct()
       .select(col("day"), isA.as("isA"))
       .groupBy(col("day"))
@@ -279,19 +304,19 @@ object ExperimentOps {
       .select(to_date(col("ts")).cast("string").as("day"), col("user_id")))
 
   val abSrmCheckSql: String =
-    """WITH exposed AS (
+    s"""WITH exposed AS (
       |  SELECT DISTINCT CAST(CAST(ts AS DATE) AS VARCHAR) AS day, user_id FROM events
       |),
       |perday AS (
       |  SELECT day,
-      |    CAST(sum(CASE WHEN md5('exp1:' || CAST(user_id AS VARCHAR)) < '8' THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-      |    CAST(sum(CASE WHEN md5('exp1:' || CAST(user_id AS VARCHAR)) < '8' THEN 0 ELSE 1 END) AS BIGINT) AS n_b
+      |    CAST(sum(CASE WHEN $inASql THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
+      |    CAST(sum(CASE WHEN $inASql THEN 0 ELSE 1 END) AS BIGINT) AS n_b
       |  FROM exposed GROUP BY 1
       |),
       |overall AS (
       |  SELECT 'ALL' AS day,
-      |    CAST(sum(CASE WHEN md5('exp1:' || CAST(user_id AS VARCHAR)) < '8' THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-      |    CAST(sum(CASE WHEN md5('exp1:' || CAST(user_id AS VARCHAR)) < '8' THEN 0 ELSE 1 END) AS BIGINT) AS n_b
+      |    CAST(sum(CASE WHEN $inASql THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
+      |    CAST(sum(CASE WHEN $inASql THEN 0 ELSE 1 END) AS BIGINT) AS n_b
       |  FROM (SELECT DISTINCT user_id FROM events)
       |),
       |u AS (SELECT * FROM perday UNION ALL SELECT * FROM overall)
@@ -317,8 +342,7 @@ object ExperimentOps {
     val span = ev.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
     val cells = ev.crossJoin(broadcast(span))
       .select(
-        when(md5(concat(lit("exp1:"), col("user_id").cast("string"))) < "8", "A")
-          .otherwise("B").as("arm"),
+        variant.as("arm"),
         when(datediff(col("d"), col("lo")) * 2 <= datediff(col("hi"), col("lo")), "pre")
           .otherwise("post").as("period"),
         col("user_id"),
@@ -336,7 +360,7 @@ object ExperimentOps {
       sum(when(col("arm") === "B" && col("period") === "pre", col("n_users"))).as("nb_pre"),
       sum(when(col("arm") === "B" && col("period") === "post", col("n_conv"))).as("cb_post"),
       sum(when(col("arm") === "B" && col("period") === "post", col("n_users"))).as("nb_post"))
-    def rate(c: String, n: String): Column = col(c).cast("double") / col(n).cast("double")
+    def rate(c: String, n: String): Column = d(c) / d(n)
     wide.select(
       emit(rate("ca_pre", "na_pre"), 6).as("rate_a_pre"),
       emit(rate("ca_post", "na_post"), 6).as("rate_a_post"),
@@ -347,11 +371,11 @@ object ExperimentOps {
   }
 
   val didLiftSql: String =
-    """WITH ev AS (SELECT CAST(ts AS DATE) AS d, user_id, event_type FROM events),
+    s"""WITH ev AS (SELECT CAST(ts AS DATE) AS d, user_id, event_type FROM events),
       |span AS (SELECT min(d) AS lo, max(d) AS hi FROM ev),
       |pu AS (
       |  SELECT
-      |    CASE WHEN md5('exp1:' || CAST(user_id AS VARCHAR)) < '8' THEN 'A' ELSE 'B' END AS arm,
+      |    $variantSql AS arm,
       |    CASE WHEN datediff('day', lo, d) * 2 <= datediff('day', lo, hi) THEN 'pre' ELSE 'post' END AS period,
       |    user_id,
       |    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS conv
@@ -405,30 +429,24 @@ object ExperimentOps {
         emit(dsum(when(col("event_type") === "purchase", round(col("value"), 6))
           .otherwise(lit(0.0))), 6).as("purchase_value"),
         countDistinct(to_date(col("ts"))).cast("double").as("active_days"))
-      .select(
-        when(md5(concat(lit("exp1:"), col("user_id").cast("string"))) < "8", "A")
-          .otherwise("B").as("arm"),
+      .select(variant.as("arm"),
         explode(array(
           struct(lit("n_events").as("cov"), col("n_events").as("x")),
           struct(lit("n_purchases").as("cov"), col("n_purchases").as("x")),
           struct(lit("purchase_value").as("cov"), col("purchase_value").as("x")),
           struct(lit("active_days").as("cov"), col("active_days").as("x")))).as("c"))
       .select(col("arm"), col("c.cov").as("cov"), col("c.x").as("x"))
+    val mu = d("s1") / d("n")
     val m = perUser.groupBy(col("cov"), col("arm"))
       .agg(count(lit(1)).as("n"),
         sum(round(col("x"), 6).cast(Dec12)).as("s1"),
         sum(round(col("x") * col("x"), 12).cast(Dec12)).as("s2"))
       .select(col("cov"), col("arm"), col("n"),
-        (col("s1").cast("double") / col("n").cast("double")).as("mu"),
-        (col("s2").cast("double") / col("n").cast("double")
-          - (col("s1").cast("double") / col("n").cast("double"))
-            * (col("s1").cast("double") / col("n").cast("double"))).as("vr"))
+        mu.as("mu"), (d("s2") / d("n") - mu * mu).as("vr"))
     val wide = m.groupBy(col("cov"))
       .agg(
-        sum(when(col("arm") === "A", col("mu"))).as("mu_a"),
-        sum(when(col("arm") === "B", col("mu"))).as("mu_b"),
-        sum(when(col("arm") === "A", col("vr"))).as("vr_a"),
-        sum(when(col("arm") === "B", col("vr"))).as("vr_b"))
+        armSum("A", "mu", by = "arm").as("mu_a"), armSum("B", "mu", by = "arm").as("mu_b"),
+        armSum("A", "vr", by = "arm").as("vr_a"), armSum("B", "vr", by = "arm").as("vr_b"))
     wide.select(col("cov"),
       emit(col("mu_a"), 6).as("mean_a"), emit(col("mu_b"), 6).as("mean_b"),
       emit((col("mu_a") - col("mu_b"))
@@ -438,7 +456,7 @@ object ExperimentOps {
   }
 
   val covariateBalanceSmdSql: String =
-    """WITH pu AS (
+    s"""WITH pu AS (
       |  SELECT user_id,
       |    CAST(count(*) AS DOUBLE) AS n_events,
       |    CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS DOUBLE) AS n_purchases,
@@ -448,7 +466,7 @@ object ExperimentOps {
       |  FROM events GROUP BY 1
       |),
       |long AS (
-      |  SELECT CASE WHEN md5('exp1:' || CAST(user_id AS VARCHAR)) < '8' THEN 'A' ELSE 'B' END AS arm,
+      |  SELECT $variantSql AS arm,
       |    cov, x
       |  FROM pu, LATERAL (VALUES
       |    ('n_events', n_events), ('n_purchases', n_purchases),
@@ -483,37 +501,24 @@ object ExperimentOps {
     * draws ONE Kaplan–Meier curve, churn_hazard one life table — THIS
     * is the test that says whether two curves DIFFER (the censoring-
     * aware comparison a naive conversion-rate z gets wrong when
-    * observation windows differ per user). Users split by the
-    * ab_lift_report seeded-md5 device; duration = days from first
-    * event to first purchase, right-censored at the data horizon (no
-    * wall clock in the plan). At each event day: observed A-events vs
-    * expected d_j·N_A/N under H0, hypergeometric variance — all
-    * at-risk counts exact longs from ONE reverse-cumulative window
-    * over the bounded duration-day axis (the churn_hazard rule; never
-    * over raw events), per-day E/V terms 12-dp rounds into order-free
-    * DECIMAL sums, chi2 one double expression at the end. Exact
-    * oracle.
+    * observation windows differ per user). Arms, durations and
+    * censoring come from [[firstPurchase]]. At each event day:
+    * observed A-events vs expected d_j·N_A/N under H0, hypergeometric
+    * variance — all at-risk counts exact longs from ONE
+    * reverse-cumulative window over the bounded duration-day axis (the
+    * churn_hazard rule; never over raw events), per-day E/V terms
+    * 12-dp rounds into order-free DECIMAL sums, chi2 one double
+    * expression at the end. Exact oracle.
     */
   def logrankTest(s: SparkSession, dir: String): DataFrame = {
-    val wp = org.apache.spark.sql.expressions.Window
-    val perUser = Tables.events(s, dir).groupBy(col("user_id"))
-      .agg(min(to_date(col("ts"))).as("first_d"),
-        min(when(col("event_type") === "purchase", to_date(col("ts")))).as("purch_d"))
-    val horizon = Tables.events(s, dir).agg(max(to_date(col("ts"))).as("hz"))
-    val marked = perUser.crossJoin(broadcast(horizon))
-      .select(
-        when(md5(concat(lit("exp1:"), col("user_id").cast("string"))) < "8", "A")
-          .otherwise("B").as("variant"),
-        when(col("purch_d").isNotNull, datediff(col("purch_d"), col("first_d")))
-          .otherwise(datediff(col("hz"), col("first_d"))).cast("long").as("d"),
-        col("purch_d").isNotNull.as("event"))
+    val marked = firstPurchase(Tables.events(s, dir))
     val daily = marked.groupBy(col("d"))
       .agg(
         sum(when(col("variant") === "A" && col("event"), 1L).otherwise(0L)).as("da"),
         sum(when(col("variant") === "B" && col("event"), 1L).otherwise(0L)).as("db"),
         sum(when(col("variant") === "A", 1L).otherwise(0L)).as("ta"),
         sum(when(col("variant") === "B", 1L).otherwise(0L)).as("tb"))
-    val wrisk = wp.orderBy(col("d").desc).rowsBetween(wp.unboundedPreceding, 0)
+    val wrisk = Window.orderBy(col("d").desc).rowsBetween(Window.unboundedPreceding, 0)
     // the window runs over the bounded duration-day axis, never raw rows
     val risky = daily
       .withColumn("na", sum(col("ta")).over(wrisk))
@@ -522,11 +527,10 @@ object ExperimentOps {
     val n = col("na") + col("nb")
     val terms = risky.filter(dj > 0)
       .select(col("da"), col("db"),
-        round(dj.cast("double") * col("na").cast("double") / n.cast("double"), 12)
-          .cast(Dec12).as("e1t"),
+        round(dj.cast("double") * d("na") / n.cast("double"), 12).cast(Dec12).as("e1t"),
         when(n > 1,
-          round(dj.cast("double") * col("na").cast("double") / n.cast("double")
-            * col("nb").cast("double") / n.cast("double")
+          round(dj.cast("double") * d("na") / n.cast("double")
+            * d("nb") / n.cast("double")
             * (n - dj).cast("double") / (n - lit(1L)).cast("double"), 12))
           .otherwise(lit(0.0)).cast(Dec12).as("vt"))
       .agg(sum(col("da")).as("o1"), sum(col("db")).as("o2"),
@@ -534,9 +538,8 @@ object ExperimentOps {
     val sizes = marked.agg(
       sum(when(col("variant") === "A", 1L).otherwise(0L)).as("n_a"),
       sum(when(col("variant") === "B", 1L).otherwise(0L)).as("n_b"))
-    val e1d = col("e1").cast("double")
-    val chi2 = (col("o1").cast("double") - e1d) * (col("o1").cast("double") - e1d) /
-      greatest(col("v").cast("double"), lit(1e-12))
+    val e1d = d("e1")
+    val chi2 = (d("o1") - e1d) * (d("o1") - e1d) / greatest(d("v"), lit(1e-12))
     sizes.crossJoin(broadcast(terms))
       .select(col("n_a"), col("n_b"), col("o1").as("conv_a"), col("o2").as("conv_b"),
         emit(e1d, 6).as("expected_a"), emit(chi2, 4).as("chi2"),
@@ -545,7 +548,7 @@ object ExperimentOps {
   }
 
   val logrankTestSql: String =
-    """WITH pu AS (
+    s"""WITH pu AS (
       |  SELECT user_id, min(CAST(ts AS DATE)) AS first_d,
       |    min(CASE WHEN event_type = 'purchase' THEN CAST(ts AS DATE) END) AS purch_d
       |  FROM events GROUP BY 1
@@ -553,7 +556,7 @@ object ExperimentOps {
       |hz AS (SELECT max(CAST(ts AS DATE)) AS hz FROM events),
       |marked AS (
       |  SELECT
-      |    CASE WHEN md5('exp1:' || CAST(user_id AS VARCHAR)) < '8' THEN 'A' ELSE 'B' END AS variant,
+      |    $variantSql AS variant,
       |    CAST(CASE WHEN purch_d IS NOT NULL THEN datediff('day', first_d, purch_d)
       |         ELSE datediff('day', first_d, hz) END AS BIGINT) AS d,
       |    purch_d IS NOT NULL AS event
@@ -623,19 +626,15 @@ object ExperimentOps {
     val ev = Tables.events(s, dir)
     val span = ev.agg(
       min(unix_micros(col("ts"))).as("lo"), max(unix_micros(col("ts"))).as("hi"))
+    val pre = unix_micros(col("ts")) * 2 <= col("lo") + col("hi")
     val perUser = ev.crossJoin(broadcast(span))
       .groupBy(col("user_id"))
       .agg(
-        dsum(when(unix_micros(col("ts")) * 2 <= col("lo") + col("hi"), col("value"))
-          .otherwise(lit(0.0))).as("x"),
-        dsum(when(unix_micros(col("ts")) * 2 <= col("lo") + col("hi"), lit(0.0))
-          .otherwise(col("value"))).as("y"))
-      .select(
-        when(md5(concat(lit("exp1:"), col("user_id").cast("string"))) < "8", "A")
-          .otherwise("B").as("variant"),
-        col("x"), col("y"))
-    val xd = col("x").cast("double")
-    val yd = col("y").cast("double")
+        dsum(when(pre, col("value")).otherwise(lit(0.0))).as("x"),
+        dsum(when(pre, lit(0.0)).otherwise(col("value"))).as("y"))
+      .select(variant.as("variant"), col("x"), col("y"))
+    val xd = d("x")
+    val yd = d("y")
     val m = perUser.groupBy(col("variant"))
       .agg(
         count(lit(1)).as("n"),
@@ -644,14 +643,10 @@ object ExperimentOps {
         sum(round(xd * xd, 12).cast(Dec12)).as("sxx"),
         sum(round(yd * yd, 12).cast(Dec12)).as("syy"))
     val wide = m.agg(
-      sum(when(col("variant") === "A", col("n"))).as("na"),
-      sum(when(col("variant") === "B", col("n"))).as("nb"),
-      sum(when(col("variant") === "A", col("sx"))).as("sxa"),
-      sum(when(col("variant") === "B", col("sx"))).as("sxb"),
-      sum(when(col("variant") === "A", col("sy"))).as("sya"),
-      sum(when(col("variant") === "B", col("sy"))).as("syb"),
+      armSum("A", "n").as("na"), armSum("B", "n").as("nb"),
+      armSum("A", "sx").as("sxa"), armSum("B", "sx").as("sxb"),
+      armSum("A", "sy").as("sya"), armSum("B", "sy").as("syb"),
       sum(col("sxy")).as("sxy"), sum(col("sxx")).as("sxx"), sum(col("syy")).as("syy"))
-    def d(c: String) = col(c).cast("double")
     val n = (col("na") + col("nb")).cast("double")
     val sx = d("sxa") + d("sxb")
     val sy = d("sya") + d("syb")
@@ -676,7 +671,7 @@ object ExperimentOps {
   }
 
   val cupedLiftReportSql: String =
-    """WITH span AS (
+    s"""WITH span AS (
       |  SELECT CAST(min(epoch_us(ts)) AS BIGINT) AS lo,
       |         CAST(max(epoch_us(ts)) AS BIGINT) AS hi
       |  FROM events
@@ -686,7 +681,7 @@ object ExperimentOps {
       |    sum(CAST(CASE WHEN epoch_us(ts) * 2 <= lo + hi THEN 0.0 ELSE value END AS DECIMAL(38,6))) AS y
       |  FROM events CROSS JOIN span GROUP BY user_id
       |), v AS (
-      |  SELECT CASE WHEN md5('exp1:' || CAST(user_id AS VARCHAR)) < '8' THEN 'A' ELSE 'B' END AS variant,
+      |  SELECT $variantSql AS variant,
       |    x, y, CAST(x AS DOUBLE) AS xd, CAST(y AS DOUBLE) AS yd
       |  FROM pu
       |), m AS (
@@ -763,8 +758,7 @@ object ExperimentOps {
       .agg(count(lit(1)).as("n_ev"),
         sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("np"))
       .select(
-        when(md5(concat(lit("exp1:"), col("user_id").cast("string"))) < "8", "A")
-          .otherwise("B").as("variant"),
+        variant.as("variant"),
         when(col("n_ev") < 60, "1_low").when(col("n_ev") < 75, "2_mid")
           .otherwise("3_high").as("stratum"),
         when(col("np") >= 14, 1L).otherwise(0L).as("conv"))
@@ -773,7 +767,6 @@ object ExperimentOps {
     val cells = perUser.groupBy(col("stratum"))
       .agg(cell("B", 1L).as("a"), cell("B", 0L).as("b"),
         cell("A", 1L).as("c"), cell("A", 0L).as("d"))
-    def d(c: String) = col(c).cast("double")
     val n = (col("a") + col("b") + col("c") + col("d")).cast("double")
     val pooled = cells.agg(
       sum(col("a")).as("sa"), sum(col("b")).as("sb"),
@@ -791,19 +784,18 @@ object ExperimentOps {
         when(col("sb") * col("sc") === 0, lit(null).cast("double"))
           .otherwise(emit(d("sa") * d("sd") / (d("sb") * d("sc")), 6)).as("or_crude"),
         when(col("den") === 0, lit(null).cast("double"))
-          .otherwise(emit(col("num").cast("double") / col("den").cast("double"), 6))
-          .as("or_mh"))
+          .otherwise(emit(d("num") / d("den"), 6)).as("or_mh"))
       .orderBy(col("stratum"))
   }
 
   val mantelHaenszelSql: String =
-    """WITH pu AS (
+    s"""WITH pu AS (
       |  SELECT user_id, count(*) AS n_ev,
       |    sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS np
       |  FROM events GROUP BY user_id
       |), v AS (
       |  SELECT
-      |    CASE WHEN md5('exp1:' || CAST(user_id AS VARCHAR)) < '8' THEN 'A' ELSE 'B' END AS variant,
+      |    $variantSql AS variant,
       |    CASE WHEN n_ev < 60 THEN '1_low' WHEN n_ev < 75 THEN '2_mid' ELSE '3_high' END AS stratum,
       |    CASE WHEN np >= 14 THEN 1 ELSE 0 END AS conv
       |  FROM pu
@@ -856,12 +848,9 @@ object ExperimentOps {
         dsum(when(col("event_type") === "purchase", col("value")).otherwise(lit(0.0)))
           .as("y"),
         sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("k"))
-      .select(
-        when(md5(concat(lit("exp1:"), col("user_id").cast("string"))) < "8", "A")
-          .otherwise("B").as("variant"),
-        col("y"), col("k"))
-    val yd = col("y").cast("double")
-    val kd = col("k").cast("double")
+      .select(variant.as("variant"), col("y"), col("k"))
+    val yd = d("y")
+    val kd = d("k")
     val m = perUser.groupBy(col("variant"))
       .agg(
         count(lit(1)).as("n"),
@@ -869,7 +858,6 @@ object ExperimentOps {
         sum(round(yd * yd, 12).cast(Dec12)).as("syy"),
         sum(round(yd * kd, 12).cast(Dec12)).as("syk"),
         sum(round(kd * kd, 12).cast(Dec12)).as("skk"))
-    def d(c: String) = col(c).cast("double")
     val nn = d("n")
     val my = d("sy") / nn
     val mk = d("sk") / nn
@@ -887,22 +875,20 @@ object ExperimentOps {
       emit(r + lit(1.96) * se, 6).as("ci_hi"),
       round(varR, 12).as("var_r"))
     val diff = rows.agg(
-      sum(when(col("variant") === "A", col("ratio"))).as("ra"),
-      sum(when(col("variant") === "B", col("ratio"))).as("rb"),
-      sum(when(col("variant") === "A", col("var_r"))).as("va"),
-      sum(when(col("variant") === "B", col("var_r"))).as("vb"))
+      armSum("A", "ratio").as("ra"), armSum("B", "ratio").as("rb"),
+      armSum("A", "var_r").as("va"), armSum("B", "var_r").as("vb"))
       .select(emit((col("rb") - col("ra")) / sqrt(col("va") + col("vb")), 4).as("z_diff"))
     rows.drop("var_r").crossJoin(broadcast(diff)).orderBy(col("variant"))
   }
 
   val deltaMethodCiSql: String =
-    """WITH pu AS (
+    s"""WITH pu AS (
       |  SELECT user_id,
       |    sum(CAST(CASE WHEN event_type = 'purchase' THEN value ELSE 0.0 END AS DECIMAL(38,6))) AS y,
       |    CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS k
       |  FROM events GROUP BY user_id
       |), v AS (
-      |  SELECT CASE WHEN md5('exp1:' || CAST(user_id AS VARCHAR)) < '8' THEN 'A' ELSE 'B' END AS variant,
+      |  SELECT $variantSql AS variant,
       |    y, k, CAST(y AS DOUBLE) AS yd, CAST(k AS DOUBLE) AS kd
       |  FROM pu
       |), m AS (
@@ -951,34 +937,22 @@ object ExperimentOps {
       |ORDER BY variant""".stripMargin
 
   /** #415 rmst_report — restricted mean survival time to τ = 30 days
-    * for time-to-first-purchase, per A/B hash variant (the logrank
-    * #404 frame VERBATIM: seeded-md5 split, duration = days from
-    * first event to first purchase, right-censored at the horizon):
-    * RMST(τ) = ∫₀^τ S(t)dt, the average purchase-free days within a
-    * 30-day window — the EFFECT SIZE behind logrank's yes/no (two
-    * curves can differ significantly by a medically/commercially
-    * irrelevant margin; RMST is the difference in days a decision
-    * actually weighs). The KM product Π(1−d/n) walks as
-    * exp(Σ ln(1−d/n)) with 12-dp rounds into an ordered cumsum (the
-    * markov device), at-risk counts from ONE reverse-cumulative
-    * window over the bounded duration-day axis (the churn_hazard
-    * rule), and the integral is a Σ S(tᵢ)·Δt of 12-dp-rounded terms
-    * in a DECIMAL(38,12) sum. Exact oracle.
+    * for time-to-first-purchase, per A/B hash variant (logrank
+    * #404's [[firstPurchase]] frame): RMST(τ) = ∫₀^τ S(t)dt, the
+    * average purchase-free days within a 30-day window — the EFFECT
+    * SIZE behind logrank's yes/no (two curves can differ
+    * significantly by a medically/commercially irrelevant margin;
+    * RMST is the difference in days a decision actually weighs). The
+    * KM product Π(1−d/n) walks as exp(Σ ln(1−d/n)) with 12-dp rounds
+    * into an ordered cumsum (the markov device), at-risk counts from
+    * ONE reverse-cumulative window over the bounded duration-day axis
+    * (the churn_hazard rule), and the integral is a Σ S(tᵢ)·Δt of
+    * 12-dp-rounded terms in a DECIMAL(38,12) sum. Exact oracle.
     */
   def rmstReport(s: SparkSession, dir: String): DataFrame = {
     val tau = 30L
-    val perUser = Tables.events(s, dir).groupBy(col("user_id"))
-      .agg(min(to_date(col("ts"))).as("first_d"),
-        min(when(col("event_type") === "purchase", to_date(col("ts")))).as("purch_d"))
-    val horizon = Tables.events(s, dir).agg(max(to_date(col("ts"))).as("hz"))
-    val marked = perUser.crossJoin(broadcast(horizon))
-      .select(
-        when(md5(concat(lit("exp1:"), col("user_id").cast("string"))) < "8", "A")
-          .otherwise("B").as("variant"),
-        when(col("purch_d").isNotNull, datediff(col("purch_d"), col("first_d")))
-          .otherwise(datediff(col("hz"), col("first_d"))).cast("long").as("d"),
-        col("purch_d").isNotNull.as("event"))
-    val daily = graft.Lineage.cut(marked.groupBy(col("variant"), col("d"))
+    val daily = graft.Lineage.cut(firstPurchase(Tables.events(s, dir))
+      .groupBy(col("variant"), col("d"))
       .agg(sum(when(col("event"), 1L).otherwise(0L)).as("dv"),
         count(lit(1)).as("tv")))
     val wrisk = Window.partitionBy(col("variant")).orderBy(col("d").desc)
@@ -995,14 +969,14 @@ object ExperimentOps {
       .withColumn("n", sum(col("tv")).over(wrisk))
       .withColumn("lnterm",
         when(col("dv") > 0 && col("dv") < col("n"),
-          round(log(lit(1.0) - col("dv").cast("double") / col("n").cast("double")), 12)
+          round(log(lit(1.0) - d("dv") / d("n")), 12)
             .cast(Dec12))
           .otherwise(lit(0).cast(Dec12)))
       .withColumn("extinct", max(when(col("dv") === col("n"), 1L).otherwise(0L)).over(wkm))
       .withColumn("lncum", sum(col("lnterm")).over(wkm))
       .withColumn("surv",
         when(col("extinct") === 1L, lit(0.0))
-          .otherwise(round(exp(col("lncum").cast("double")), 12)))
+          .otherwise(round(exp(d("lncum")), 12)))
     // integral: S is right-continuous — on [t_i, t_{i+1}) the curve
     // reads S(t_i); the first segment [0, t_min) reads S = 1
     val seg = km
@@ -1024,18 +998,18 @@ object ExperimentOps {
       .join(broadcast(head), Seq("variant"))
       .select(
         col("variant"), col("n_users"), col("n_events"),
-        emit(col("head_area") + col("tail_area").cast("double"), 4).as("rmst_30d"))
+        emit(col("head_area") + d("tail_area"), 4).as("rmst_30d"))
       .orderBy(col("variant"))
   }
 
   val rmstReportSql: String =
-    """WITH per_user AS (
+    s"""WITH per_user AS (
       |  SELECT user_id, min(CAST(ts AS DATE)) AS first_d,
       |    min(CASE WHEN event_type = 'purchase' THEN CAST(ts AS DATE) END) AS purch_d
       |  FROM events GROUP BY 1
       |), horizon AS (SELECT max(CAST(ts AS DATE)) AS hz FROM events),
       |marked AS (
-      |  SELECT CASE WHEN md5('exp1:' || CAST(user_id AS VARCHAR)) < '8' THEN 'A' ELSE 'B' END AS variant,
+      |  SELECT $variantSql AS variant,
       |    CAST(CASE WHEN purch_d IS NOT NULL THEN purch_d - first_d ELSE hz - first_d END AS BIGINT) AS d,
       |    purch_d IS NOT NULL AS event
       |  FROM per_user CROSS JOIN horizon

@@ -11,8 +11,7 @@ import graft.sources.Firehose
   * distinct counts (exact + mergeable-sketch twins), link-level feed
   * dedup from the firehose surface, and the governance/profiling
   * passes (k-anonymity, histograms) a data-platform team runs beside
-  * the corpus pipeline. Its A/B readout (ab_lift_report) lives in
-  * [[ExperimentOps]].
+  * the corpus pipeline. The A/B lift readout lives in [[ExperimentOps]].
   */
 object Round10Ops {
   import OracleMath._

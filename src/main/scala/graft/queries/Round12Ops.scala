@@ -15,9 +15,7 @@ import graft.Key.{exact, rowsOnly}
   * Every cross-row float total follows the house order-free rule
   * (DECIMAL sums or exact integers), and per-row float chains mirror
   * the oracle's operation ORDER exactly so 6-dp emits are identical.
-  * Its experimentation keys (ab_sequential_monitor, power_analysis,
-  * ab_srm_check, did_lift, covariate_balance_smd) live in
-  * [[ExperimentOps]].
+  * Its A/B keys live in [[ExperimentOps]].
   */
 object Round12Ops {
   import OracleMath._

@@ -12,8 +12,8 @@ import graft.Key.exact
   * cross-row float totals go through 6/12-dp rounds into order-free
   * DECIMAL sums (or stay exact integers), per-row float chains mirror
   * the oracle's operation ORDER exactly, global sorts never touch
-  * data-volume-sized relations. Its survival test (logrank_test)
-  * lives in [[ExperimentOps]].
+  * data-volume-sized relations. The log-rank test lives in
+  * [[ExperimentOps]].
   */
 object Round13Ops {
   import OracleMath._

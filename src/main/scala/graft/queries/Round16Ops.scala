@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -8,13 +8,9 @@ import graft.{Key, OracleMath, Tables}
 import graft.Key.exact
 
 /** Round-16 operators (repo round 8, continued) — closing the
-  * remaining experimentation / drift / corpus-diversity axes:
-  * CUPED variance reduction (the industry-standard pre-period
-  * covariate adjustment every mature A/B platform applies before
-  * reading a lift), the Mantel–Haenszel stratified odds ratio (the
-  * Simpson's-paradox guard a raw two-by-two cannot give), the
-  * Cramér–von Mises two-sample statistic (the integrated-gap
-  * complement to KS's single worst point), lexical-diversity
+  * remaining drift / corpus-diversity axes: the Cramér–von Mises
+  * two-sample statistic (the integrated-gap complement to KS's
+  * single worst point), lexical-diversity
   * distinct-n-gram ratios (the repetition fingerprint of generated
   * or boilerplate text), a fixed-period periodogram (IS the weekly
   * cycle the dominant rhythm, not just present — seasonal_strength
@@ -26,8 +22,7 @@ import graft.Key.exact
   * chains mirrored token for token, libm-adjacent factors rounded to
   * 12 dp before order-free DECIMAL(38,12) sums (the markov device),
   * emits via OracleMath.emit, bounded outputs, unique sort keys.
-  * Its experimentation keys (cuped_lift_report, mantel_haenszel) live
-  * in [[ExperimentOps]].
+  * CUPED and Mantel–Haenszel live in [[ExperimentOps]].
   */
 object Round16Ops {
   import OracleMath._

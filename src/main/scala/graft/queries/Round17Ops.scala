@@ -9,11 +9,10 @@ import graft.Key.exact
 
 /** Round-17 operators (repo round 8, continued) — the dose-response
   * trend test (Cochran–Armitage, the ordered-category complement to
-  * Mantel–Haenszel's stratified 2×2), the delta-method ratio-metric
-  * CI (the revenue-per-action readout CUPED's mean metric cannot
-  * give), class-based tf-idf characteristic terms (what VOCABULARY
-  * distinguishes each source), Krippendorff's alpha (the
-  * chance-corrected agreement that generalizes kappa's assumptions),
+  * Mantel–Haenszel's stratified 2×2), class-based tf-idf
+  * characteristic terms (what VOCABULARY distinguishes each source),
+  * Krippendorff's alpha (the chance-corrected agreement that
+  * generalizes kappa's assumptions),
   * the Page–Hinkley sequential drift detector (the online
   * changepoint alarm beside the retrospective CUSUM), and embedding
   * label-separation validity (Calinski–Harabasz + Davies–Bouldin —
@@ -23,8 +22,8 @@ import graft.Key.exact
   * House rules as Round15/16: exact integer/decimal moments, double
   * chains mirrored token for token, 12-dp-rounded terms into
   * order-free DECIMAL(38,12) sums, emits via OracleMath.emit,
-  * bounded outputs, unique sort keys. Its ratio-metric readout
-  * (delta_method_ci) lives in [[ExperimentOps]].
+  * bounded outputs, unique sort keys. The delta-method ratio-metric
+  * CI lives in [[ExperimentOps]].
   */
 object Round17Ops {
   import OracleMath._

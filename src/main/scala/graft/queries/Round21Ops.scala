@@ -1,18 +1,15 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Key, OracleMath, Tables}
 import graft.Key.exact
 
-/** Round-21 operators (repo round 8, continued) — three axes still
-  * open: the survival EFFECT SIZE (restricted mean survival time —
-  * logrank #404 says the curves differ, RMST says by how many days,
-  * the number a decision reads), count-model QA (negative-binomial
-  * overdispersion — is per-user traffic Poisson, and if not how far;
-  * the variance assumption every count-based CI upstream leans on),
+/** Round-21 operators (repo round 8, continued) — two axes still
+  * open: count-model QA (negative-binomial overdispersion — is
+  * per-user traffic Poisson, and if not how far; the variance
+  * assumption every count-based CI upstream leans on),
   * and off-policy evaluation (IPS / self-normalized / clipped /
   * doubly-robust value estimates of a target policy from logged
   * events — the counterfactual read a ranking or mixture change is
@@ -22,7 +19,7 @@ import graft.Key.exact
   * chains mirrored token for token, 12-dp-rounded libm terms into
   * order-free DECIMAL(38,12) sums, emits via OracleMath.emit with §6
   * #5 recovery on oracle ratio emits, bounded outputs, unique sort
-  * keys. Its survival effect size (rmst_report) lives in
+  * keys. The survival effect size (rmst_report) lives in
   * [[ExperimentOps]].
   */
 object Round21Ops {
