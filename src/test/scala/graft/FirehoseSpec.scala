@@ -12,7 +12,7 @@ import graft.sources.Firehose
   * catalog's string-serialized oracle can't see, plus streaming/batch
   * parity of the intake form.
   */
-class FirehoseSpec extends AnyFunSuite {
+class FirehoseSpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = GraftSession.local(cores = 4, shufflePartitions = 4)
   private val dir = "/root/testdata/sf0.001"
 
@@ -115,7 +115,7 @@ class FirehoseSpec extends AnyFunSuite {
 
   test("file-based ingestion: raw lines on disk parse identically to the in-plan fixtures") {
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft_rawposts").toString
+    val out = tempDir("graft_rawposts").toString
     val synth = Firehose.synthPostRecords(Tables.events(spark, dir))
     synth.select(col("raw")).write.mode("overwrite").text(out)
     val fromFiles = Firehose.parsePostRecords(

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * correctness gate is the driver's DuckDB compare (tools/check.py
   * locally); these tests pin structural invariants cheaply.
   */
-class QueryCatalogSpec extends AnyFunSuite {
+class QueryCatalogSpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = GraftSession.local(cores = 4, shufflePartitions = 4)
   val dir = "/root/testdata/sf0.001"
 
@@ -741,7 +741,7 @@ class QueryCatalogSpec extends AnyFunSuite {
       .embeddings(spark, dir)
       .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("e"))
     val cents = queries.TextOps.ivfCentroids(emb, 16, 2)
-    val outDir = java.nio.file.Files.createTempDirectory("graft_cents")
+    val outDir = tempDir("graft_cents")
     try {
       cents.write.mode("overwrite").parquet(outDir.toString)
       val back = spark.read.parquet(outDir.toString)
@@ -1962,6 +1962,36 @@ class QueryCatalogSpec extends AnyFunSuite {
     assert(r.getAs[Long]("conv_b") <= r.getAs[Long]("n_b"))
   }
 
+  test("the seeded-md5 arm puts hand-picked users where md5(exp1:<id>) does") {
+    import spark.implicits._
+    // the first hex digit of md5("exp1:<id>"), from Python's hashlib:
+    // 2→7, 4→6, 7→1 and 10→0 sit below '8'; 1→d, 3→d, 5→f and 6→8 do not
+    val arms = Seq(1L, 2L, 3L, 4L, 5L, 6L, 7L, 10L).toDF("user_id")
+      .select($"user_id", graft.queries.ExperimentOps.variant.as("arm"))
+      .as[(Long, String)].collect().toMap
+    assert(arms == Map(2L -> "A", 4L -> "A", 7L -> "A", 10L -> "A",
+      1L -> "B", 3L -> "B", 5L -> "B", 6L -> "B"), s"$arms")
+  }
+
+  test("the first-purchase frame counts a same-day purchase as day 0 and censors a non-buyer") {
+    import spark.implicits._
+    def at(day: Int) = java.sql.Timestamp.valueOf(f"2024-03-$day%02d 12:00:00")
+    // the data horizon is 03-09. User 2 (arm A) buys on its first day,
+    // user 4 (A) three days after its first event (its second purchase
+    // changes nothing), user 1 (B) four days after; users 7 (A) and
+    // 3 (B) never buy and are censored at the horizon
+    val ev = Seq(
+      (2L, "view", at(1)), (2L, "purchase", at(1)), (2L, "view", at(5)),
+      (4L, "view", at(2)), (4L, "purchase", at(5)), (4L, "purchase", at(9)),
+      (1L, "view", at(4)), (1L, "purchase", at(8)),
+      (7L, "view", at(3)), (7L, "click", at(6)),
+      (3L, "view", at(9))).toDF("user_id", "event_type", "ts")
+    val frame = graft.queries.ExperimentOps.firstPurchase(ev)
+      .as[(String, Long, Boolean)].collect().toSeq.sortBy(r => (r._1, r._2))
+    assert(frame == Seq(("A", 0L, true), ("A", 3L, true), ("A", 6L, false),
+      ("B", 0L, false), ("B", 4L, true)), s"$frame")
+  }
+
   test("theta-sketch audience overlap tracks the exact matrix within 2%") {
     import org.apache.spark.sql.functions._
     val approx = SparkEntry.queries("audience_overlap_sketch")(spark, dir)
@@ -2753,7 +2783,7 @@ class QueryCatalogSpec extends AnyFunSuite {
       Row(id, new java.sql.Timestamp(1700000000000L + id * 1000L), user, typ, 1.0, null)
     val rows = Seq(ev(1, 1, "view"), ev(2, 1, "purchase"), ev(3, 3, "click"), ev(4, 3, "view"),
       ev(5, 2, "ghost"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_markov").toString
+    val tmp = tempDir("graft_markov").toString
     spark.createDataFrame(spark.sparkContext.parallelize(rows), StructType.fromDDL(Tables.Ddl("events")))
       .write.parquet(s"$tmp/events.parquet")
     val out = SparkEntry.queries("markov_attribution")(spark, tmp).collect()

@@ -5,12 +5,12 @@ import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-class SourcesSpec extends AnyFunSuite {
+class SourcesSpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = GraftSession.local(cores = 4, shufflePartitions = 4)
   val dir = "/root/testdata/sf0.001"
 
   test("daily archive round-trips and prunes partitions at read") {
-    val out = Files.createTempDirectory("graft_archive").toString
+    val out = tempDir("graft_archive").toString
     val events = Tables.events(spark, dir)
     Sources.writeDailyArchive(events, out)
 
@@ -26,7 +26,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("archive retention drops expired day partitions; reads and pruning stay intact") {
-    val out = Files.createTempDirectory("graft_archive_ttl").toString
+    val out = tempDir("graft_archive_ttl").toString
     val events = Tables.events(spark, dir)
     Sources.writeDailyArchive(events, out)
     import org.apache.spark.sql.functions.col
@@ -60,7 +60,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("served-links audit: written links equal the served frame, per-feed reads prune") {
     import org.apache.spark.sql.functions.col
-    val out = Files.createTempDirectory("graft_links").toString
+    val out = tempDir("graft_links").toString
     val servedAt = 1700000000000L // 2023-11-14
     val feedA = SparkEntry.queries("sort_topk")(spark, dir)
     Sources.appendServedLinks(feedA, "event_id", "feed/hot", servedAt, out)
@@ -89,7 +89,7 @@ class SourcesSpec extends AnyFunSuite {
   test("archive survives schema evolution: a new nullable column appears mid-stream") {
     import org.apache.spark.sql.functions.{col, lit}
     import spark.implicits._
-    val out = Files.createTempDirectory("graft_evolve").toString
+    val out = tempDir("graft_evolve").toString
     // day 1 written before the producer added the `lang` column
     Seq((1L, "a"), (2L, "b")).toDF("event_id", "text")
       .write.parquet(s"$out/day=2024-01-01")
@@ -112,7 +112,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("compaction collapses an append-heavy partition without changing its rows") {
     import org.apache.spark.sql.functions.col
-    val out = Files.createTempDirectory("graft_compact").toString
+    val out = tempDir("graft_compact").toString
     val servedAt = 1700000000000L // 2023-11-14
     val feed = SparkEntry.queries("sort_topk")(spark, dir)
     // five appends → at least five files in the one (day, feed) partition
@@ -133,7 +133,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("csv round-trip preserves rows including quoted text") {
-    val out = Files.createTempDirectory("graft_csv").toString
+    val out = tempDir("graft_csv").toString
     val docs = Tables.documents(spark, dir)
     Sources.writeCsv(docs, out)
     val back = Sources.readCsv(spark, out, docs.schema)
@@ -143,7 +143,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("csv round-trip keeps newlines, empty strings and nulls distinct") {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft_csv_edge").toString
+    val out = tempDir("graft_csv_edge").toString
     val tricky = Seq(
       (1L, "line1\nline2"),
       (2L, ""),
@@ -158,7 +158,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("jsonl round-trip preserves rows under explicit schema") {
-    val out = Files.createTempDirectory("graft_jsonl").toString
+    val out = tempDir("graft_jsonl").toString
     val docs = Tables.documents(spark, dir)
     Sources.writeJsonl(docs, out)
     val back = Sources.readJsonl(spark, out, docs.schema)
@@ -173,8 +173,8 @@ class SourcesSpec extends AnyFunSuite {
       walk(new java.io.File(p))
     }
     val docs = Tables.documents(spark, dir).coalesce(1)
-    val snappyOut = Files.createTempDirectory("graft_snappy").toString
-    val zstdOut = Files.createTempDirectory("graft_zstd").toString
+    val snappyOut = tempDir("graft_snappy").toString
+    val zstdOut = tempDir("graft_zstd").toString
     docs.write.mode("overwrite").option("compression", "snappy").parquet(snappyOut)
     // sort by the similarity-ish key (source) so near-identical docs sit
     // adjacent for the dictionary/prefix encoders
@@ -189,7 +189,7 @@ class SourcesSpec extends AnyFunSuite {
   test("feed resolver populates Binding.feeds from the served-links archive") {
     import org.apache.spark.sql.functions._
     import graft.pipeline.{Binding, PipelineJson}
-    val sink = Files.createTempDirectory("graft_feed_resolver").toString
+    val sink = tempDir("graft_feed_resolver").toString
     val store = spark.range(0, 100).select(
       col("id").as("event_id"),
       (col("id") % 7).as("user_id"),
@@ -227,8 +227,8 @@ class SourcesSpec extends AnyFunSuite {
     // this is the files → payload-column bridge the r5 verdict called
     // the multimodal story's missing first mile
     val docs = Tables.documents(spark, dir).filter(col("doc_id") < 9)
-    val imgDir = Files.createTempDirectory("graft_bin_img")
-    val wavDir = Files.createTempDirectory("graft_bin_wav")
+    val imgDir = tempDir("graft_bin_img")
+    val wavDir = tempDir("graft_bin_wav")
     val imgExt = Map(0L -> "png", 1L -> "gif", 2L -> "bmp")
     queries.TextOps.synthImagePayloads(docs).collect().foreach { r =>
       val id = r.getLong(0)
@@ -292,7 +292,7 @@ class SourcesSpec extends AnyFunSuite {
     // every FILE's extent must stay well under the full range in BOTH
     // dimensions (a 1-D sort would span the entire other dimension,
     // defeating min/max pruning for predicates on it)
-    val out = Files.createTempDirectory("graft_zorder").toString
+    val out = tempDir("graft_zorder").toString
     val grid = spark.range(64 * 64)
       .select((col("id") % 64 * 1000).as("a"), (col("id") / 64 * 1000).cast("long").as("b"))
     Sources.writeZordered(grid.toDF(), "a", "b", out, partitions = 8)
@@ -323,7 +323,7 @@ class SourcesSpec extends AnyFunSuite {
     // the comparison that justifies the operator: the same data range-
     // sorted on `a` alone leaves EVERY file spanning all of `b`, so a
     // selective predicate on b prunes nothing
-    val out1d = Files.createTempDirectory("graft_asorted").toString
+    val out1d = tempDir("graft_asorted").toString
     grid.repartitionByRange(8, col("a")).sortWithinPartitions(col("a"))
       .write.mode("overwrite").parquet(out1d)
     val aExt = extents(out1d)
@@ -334,7 +334,7 @@ class SourcesSpec extends AnyFunSuite {
   test("hash index dedups new batches incrementally and re-ingest is idempotent") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val idx = Files.createTempDirectory("graft_hidx").toString
+    val idx = tempDir("graft_hidx").toString
     // day 0: two unique docs (one of them with punctuation the
     // normalization strips)
     val day0 = Seq(
@@ -366,7 +366,7 @@ class SourcesSpec extends AnyFunSuite {
   test("near-dup band index rejects planted near-copies, admits novel docs, re-ingests to zero") {
     import spark.implicits._
     import graft.sources.NeardupIndex
-    val idx = Files.createTempDirectory("graft_ndidx").toString
+    val idx = tempDir("graft_ndidx").toString
     val base = (0 until 30).map(i => s"w$i").mkString(" ")
     val other = (100 until 130).map(i => s"x$i").mkString(" ")
     NeardupIndex.build(
@@ -399,7 +399,7 @@ class SourcesSpec extends AnyFunSuite {
   test("semantic index drops planted embedding copies, admits orthogonal vectors, idempotent") {
     import spark.implicits._
     import graft.sources.SemanticIndex
-    val idx = Files.createTempDirectory("graft_semidx").toString
+    val idx = tempDir("graft_semidx").toString
     def oneHot(d: Int): Seq[Double] = Seq.tabulate(8)(i => if (i == d) 1.0 else 0.0)
     val hist = (0 until 16).map(i => (i.toLong, oneHot(i % 8))).toDF("vec_id", "e")
     SemanticIndex.build(hist, idx, k = 4, iters = 1)
@@ -424,8 +424,8 @@ class SourcesSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     import graft.sources.InvertedIndex
     val d = Tables.documents(spark, dir)
-    val incr = Files.createTempDirectory("graft_bmincr").toString
-    val full = Files.createTempDirectory("graft_bmfull").toString
+    val incr = tempDir("graft_bmincr").toString
+    val full = tempDir("graft_bmfull").toString
     InvertedIndex.build(d.filter(col("doc_id") < 250), incr)
     InvertedIndex.append(d.filter(col("doc_id") >= 250), incr)
     InvertedIndex.build(d, full)
@@ -450,7 +450,7 @@ class SourcesSpec extends AnyFunSuite {
     }.sum
     // bm25: scanned postings files ≤ files inside the buckets the terms hash into
     val d = Tables.documents(spark, dir)
-    val bmDir = Files.createTempDirectory("graft_bmserve").toString
+    val bmDir = tempDir("graft_bmserve").toString
     InvertedIndex.build(d, bmDir)
     val terms = Seq("vector", "hash")
     val sdf = InvertedIndex.search(spark, bmDir, terms, 10)
@@ -472,7 +472,7 @@ class SourcesSpec extends AnyFunSuite {
     // IVF: scanned list files ≤ files inside the probes·|queries| probed lists
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("e"))
-    val ivfDir = Files.createTempDirectory("graft_ivfserve").toString
+    val ivfDir = tempDir("graft_ivfserve").toString
     IvfIndex.build(e, ivfDir)
     val q = e.filter(col("vec_id") < 2).select(col("vec_id").as("query_id"), col("e").as("qe"))
     val adf = IvfIndex.search(spark, ivfDir, q)
@@ -489,7 +489,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("cachedIndexDir keys the cache by input identity and config, and rejects bad markers") {
-    val dataDir = Files.createTempDirectory("graft_cachekey").toString
+    val dataDir = tempDir("graft_cachekey").toString
     val f = new java.io.File(dataDir, "documents.parquet")
     java.nio.file.Files.write(f.toPath, "v1".getBytes)
     var builds = 0
@@ -529,7 +529,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("bucketed tables join with no exchange and no sort on either side") {
     import org.apache.spark.sql.functions._
-    val base = Files.createTempDirectory("graft_buckets").toString
+    val base = tempDir("graft_buckets").toString
     val orders = Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey"))
     val lines = Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_quantity"))
     Sources.writeBucketed(orders, "b_orders", "o_orderkey", s"$base/o", buckets = 8)
@@ -602,9 +602,9 @@ class SourcesSpec extends AnyFunSuite {
 
   test("erasure tombstones hide users at read and the sweep is physical and idempotent") {
     import org.apache.spark.sql.functions._
-    val tomb = Files.createTempDirectory("graft_tomb").toString
-    val out1 = Files.createTempDirectory("graft_swept1").toString
-    val out2 = Files.createTempDirectory("graft_swept2").toString
+    val tomb = tempDir("graft_tomb").toString
+    val out1 = tempDir("graft_swept1").toString
+    val out2 = tempDir("graft_swept2").toString
     val ev = Tables.events(spark, dir)
     val reqs = ev.select(col("user_id")).distinct().filter(col("user_id") % 7 === 0)
     Sources.appendTombstones(reqs, tomb)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = GraftSession.local(cores = 4, shufflePartitions = 4)
 
   private def ev(id: Long, minute: Int, uid: Long, t: String, v: Double) =
@@ -223,7 +223,7 @@ class StreamingSpec extends AnyFunSuite {
   test("keyed state survives a stop and restart from the checkpoint") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_restart").toString
+    val ckpt = tempDir("graft_restart").toString
     val in = MemoryStream[Ev]
     // the memory sink refuses checkpoint recovery; foreachBatch is the
     // recoverable sink shape (same as the profile-upsert merge path)
@@ -405,7 +405,7 @@ class StreamingSpec extends AnyFunSuite {
   test("likes counts serve from a state-store read") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_likes_state").toString
+    val ckpt = tempDir("graft_likes_state").toString
     val in = MemoryStream[Streams.Like]
     val q = Streams
       .likesGraphStream(in.toDS())
@@ -638,8 +638,8 @@ class StreamingSpec extends AnyFunSuite {
   test("stateful counters survive a checkpointed stop/restart") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val src = java.nio.file.Files.createTempDirectory("graft_ckpt_src").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val src = tempDir("graft_ckpt_src").toString
+    val ckpt = tempDir("graft_ckpt").toString
     val results = scala.collection.mutable.ArrayBuffer[(Long, Long, Double)]()
 
     def startQuery() = {
@@ -723,7 +723,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     def at(id: Long, ts: String, uid: Long, v: Double) =
       Ev(id, java.sql.Timestamp.valueOf(ts), uid, "view", v)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_feed_late").toString
+    val ckpt = tempDir("graft_feed_late").toString
     val anchor = java.sql.Timestamp.valueOf("2024-01-16 00:00:00").getTime
     val in = MemoryStream[Ev]
     val q = Streams
@@ -749,7 +749,7 @@ class StreamingSpec extends AnyFunSuite {
   test("feeds serve from a state-store read, including time travel") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_feed_state").toString
+    val ckpt = tempDir("graft_feed_state").toString
     val anchor = java.sql.Timestamp.valueOf("2024-01-01 12:00:00").getTime
     val in = MemoryStream[Ev]
     val q = Streams
@@ -786,7 +786,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     import graft.pipeline.{Binding, PipelineJson}
     import org.apache.spark.sql.functions.col
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_serving_feed").toString
+    val ckpt = tempDir("graft_serving_feed").toString
     val anchor = java.sql.Timestamp.valueOf("2024-01-01 12:00:00").getTime
     val b = Binding(
       "event_id", "user_id", "ts", "value", 0L,
@@ -851,7 +851,7 @@ class StreamingSpec extends AnyFunSuite {
       ev(3, 20, 5, "view", 100.0), ev(4, 30, 5, "view", 20.0))
 
     def serve(name: String, payload: String): Seq[Streams.FeedRow] = {
-      val ckpt = java.nio.file.Files.createTempDirectory(s"graft_serve_$name").toString
+      val ckpt = tempDir(s"graft_serve_$name").toString
       val in = MemoryStream[Ev]
       val q = PipelineJson.runServingFeed(in.toDF(), payload, b, anchorMs = anchor)
         .writeStream.outputMode(org.apache.spark.sql.streaming.OutputMode.Update)
@@ -912,7 +912,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.pipeline.{Binding, PipelineJson}
     val anchor = java.sql.Timestamp.valueOf("2024-01-01 12:00:00").getTime
     val b = Binding("event_id", "user_id", "ts", "value", 0L, Map.empty, Map.empty)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_serve_per_user").toString
+    val ckpt = tempDir("graft_serve_per_user").toString
     val in = MemoryStream[Ev]
     val q = PipelineJson
       .runServingFeed(
@@ -1112,7 +1112,7 @@ class StreamingSpec extends AnyFunSuite {
   test("indexed intake stream dedups each micro-batch against the one persisted history") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val idx = java.nio.file.Files.createTempDirectory("graft_sidx").toString
+    val idx = tempDir("graft_sidx").toString
     graft.sources.Sources.buildHashIndex(
       Seq((1L, "seed history document", "web")).toDF("doc_id", "text", "source"), idx)
     val admitted = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -1316,7 +1316,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val dir = "/root/testdata/sf0.001"
-    val tomb = java.nio.file.Files.createTempDirectory("graft_tomb_s").toString
+    val tomb = tempDir("graft_tomb_s").toString
     val ev = Tables.events(spark, dir)
     val in = MemoryStream[Long]
     val q = Streams.erasureStream(in.toDF().withColumnRenamed("value", "user_id"), tomb)

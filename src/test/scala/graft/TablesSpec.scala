@@ -1,7 +1,6 @@
 package graft
 
 import graft.sources.{InvertedIndex, IvfIndex, Layout, NeardupIndex, SemanticIndex}
-import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -14,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * so these checks are what fails loudly when data and declaration
   * drift apart.
   */
-class TablesSpec extends AnyFunSuite {
+class TablesSpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = GraftSession.local(cores = 4, shufflePartitions = 4)
   val sfs = Seq("sf0.001", "sf0.01", "sf0.1").map("/root/testdata/" + _)
   val dir = sfs.head
@@ -59,7 +58,7 @@ class TablesSpec extends AnyFunSuite {
   }
 
   test("the inverted index's postings and stats match their declared layouts after build and append") {
-    val idx = Files.createTempDirectory("graft_bm_layout").toString
+    val idx = tempDir("graft_bm_layout").toString
     val d = Tables.documents(spark, dir)
     InvertedIndex.build(d.filter(col("doc_id") < 250), idx)
     assertLayout(InvertedIndex.Postings, s"$idx/postings")
@@ -70,7 +69,7 @@ class TablesSpec extends AnyFunSuite {
   }
 
   test("the IVF index's centroids and lists match their declared layouts after build and append") {
-    val idx = Files.createTempDirectory("graft_ivf_layout").toString
+    val idx = tempDir("graft_ivf_layout").toString
     val v = vectors(dir)
     IvfIndex.build(v.filter(col("vec_id") < 200), idx)
     assertLayout(IvfIndex.Centroids, s"$idx/centroids")
@@ -80,7 +79,7 @@ class TablesSpec extends AnyFunSuite {
   }
 
   test("the near-dup index's bands match their declared layout after build and append") {
-    val idx = Files.createTempDirectory("graft_nd_layout").toString
+    val idx = tempDir("graft_nd_layout").toString
     val d = Tables.documents(spark, dir)
     NeardupIndex.build(d.filter(col("doc_id") < 100), idx)
     assertLayout(NeardupIndex.Bands, s"$idx/bands")
@@ -89,9 +88,9 @@ class TablesSpec extends AnyFunSuite {
   }
 
   test("building a table read, a BM25 search or an ANN search launches no Spark job") {
-    val bm = Files.createTempDirectory("graft_bm_jobs").toString
-    val ivf = Files.createTempDirectory("graft_ivf_jobs").toString
-    val nd = Files.createTempDirectory("graft_nd_jobs").toString
+    val bm = tempDir("graft_bm_jobs").toString
+    val ivf = tempDir("graft_ivf_jobs").toString
+    val nd = tempDir("graft_nd_jobs").toString
     InvertedIndex.build(Tables.documents(spark, dir), bm)
     IvfIndex.build(vectors(dir), ivf)
     NeardupIndex.build(Tables.documents(spark, dir).filter(col("doc_id") < 100), nd)
