@@ -65,9 +65,10 @@ object ExperimentOps {
     * collapses in ONE fine-keyed aggregate; the variant rollup is a
     * 2-row agg; every derived stat is a single double expression over
     * exact longs (the assortativity device) so both engines evaluate
-    * the identical IEEE formula, rounded once at emit. The z-score's
-    * null-pool denominator guards zero with a 1e-12 floor
-    * (one-variant edge).
+    * the identical IEEE formula, rounded once at emit (the two rates,
+    * ratios of counts, the DuckDB way: `roundDouble`). The z-score's
+    * null-pool denominator guards zero with a 1e-12 floor (one-variant
+    * edge).
     */
   def abLiftReport(s: SparkSession, dir: String): DataFrame = {
     val perUser = Tables.events(s, dir)
@@ -86,8 +87,10 @@ object ExperimentOps {
       pool * (lit(1.0) - pool) * (lit(1.0) / d("na") + lit(1.0) / d("nb")),
       lit(1e-12)))
     wide.select(
-      col("na").as("n_a"), col("ca").as("conv_a"), emit(pa, 6).as("rate_a"),
-      col("nb").as("n_b"), col("cb").as("conv_b"), emit(pb, 6).as("rate_b"),
+      col("na").as("n_a"), col("ca").as("conv_a"),
+      (roundDouble(pa, 6) + lit(0.0)).as("rate_a"),
+      col("nb").as("n_b"), col("cb").as("conv_b"),
+      (roundDouble(pb, 6) + lit(0.0)).as("rate_b"),
       emit(pb - pa, 6).as("abs_lift"),
       emit((pb - pa) / se, 4).as("z_score"))
   }
@@ -334,8 +337,9 @@ object ExperimentOps {
     * the seeded-md5 device; periods split the event calendar at its
     * midpoint (the psi_drift half rule); each of the four cells is an
     * exposure/purchase pair of exact longs off ONE (arm, period,
-    * user) distinct + conditional agg; the DiD chain is a single
-    * mirrored float expression over the 4-cell row. Exact oracle.
+    * user) distinct + conditional agg; the four rates round the
+    * DuckDB way (`roundDouble`); the DiD chain is a single mirrored
+    * float expression over the 4-cell row. Exact oracle.
     */
   def didLift(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir).select(to_date(col("ts")).as("d"), col("user_id"), col("event_type"))
@@ -362,10 +366,10 @@ object ExperimentOps {
       sum(when(col("arm") === "B" && col("period") === "post", col("n_users"))).as("nb_post"))
     def rate(c: String, n: String): Column = d(c) / d(n)
     wide.select(
-      emit(rate("ca_pre", "na_pre"), 6).as("rate_a_pre"),
-      emit(rate("ca_post", "na_post"), 6).as("rate_a_post"),
-      emit(rate("cb_pre", "nb_pre"), 6).as("rate_b_pre"),
-      emit(rate("cb_post", "nb_post"), 6).as("rate_b_post"),
+      (roundDouble(rate("ca_pre", "na_pre"), 6) + lit(0.0)).as("rate_a_pre"),
+      (roundDouble(rate("ca_post", "na_post"), 6) + lit(0.0)).as("rate_a_post"),
+      (roundDouble(rate("cb_pre", "nb_pre"), 6) + lit(0.0)).as("rate_b_pre"),
+      (roundDouble(rate("cb_post", "nb_post"), 6) + lit(0.0)).as("rate_b_post"),
       emit((rate("cb_post", "nb_post") - rate("cb_pre", "nb_pre"))
         - (rate("ca_post", "na_post") - rate("ca_pre", "na_pre")), 6).as("did"))
   }

@@ -1992,6 +1992,26 @@ class QueryCatalogSpec extends AnyFunSuite with TempDirs {
       ("B", 0L, false), ("B", 4L, true)), s"$frame")
   }
 
+  test("ab_lift_report rounds a count ratio as DuckDB does: 323/640 reads 0.504687") {
+    import spark.implicits._
+    // 323/640 is 0.5046875 in decimal, but the double times 1e6 is
+    // 504687.49999999994: DuckDB's round gives 0.504687, while Spark's
+    // round of the shortest decimal string gives 0.504688
+    def md5Hex(s: String) = java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString
+    val (a, b) = (1L to 1400L).partition(id => md5Hex(s"exp1:$id") < "8")
+    val users = a.take(640).zipWithIndex.map { case (id, i) => (id, i < 323) } ++
+      b.take(10).map(id => (id, id % 2 == 0))
+    val ts = java.sql.Timestamp.valueOf("2024-03-01 12:00:00")
+    val dir = tempDir("graft_ab_rate").toString
+    users.map { case (id, buys) => (id, ts, id, if (buys) "purchase" else "view", 1.0, "") }
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .write.parquet(s"$dir/events.parquet")
+    val r = SparkEntry.queries("ab_lift_report")(spark, dir).head()
+    assert(r.getAs[Long]("n_a") == 640L && r.getAs[Long]("conv_a") == 323L, s"$r")
+    assert(r.getAs[Double]("rate_a") == 0.504687, s"$r")
+  }
+
   test("theta-sketch audience overlap tracks the exact matrix within 2%") {
     import org.apache.spark.sql.functions._
     val approx = SparkEntry.queries("audience_overlap_sketch")(spark, dir)
