@@ -267,16 +267,6 @@ object ExperimentOps {
       |    / ((p1 - p0) * (p1 - p0)), 2) AS DOUBLE) + 0.0) AS n_per_arm
       |FROM g WHERE p1 < 1.0 ORDER BY event_type, lift""".stripMargin
 
-  /** #338 ab_srm_check — sample-ratio-mismatch screen for the running
-    * experiment, per exposure day plus the overall rollup: SRM (a
-    * 50/50 split that isn't) is the most common way a real A/B test
-    * silently lies — a day of broken assignment logging biases every
-    * downstream readout, and the fix is detection, not statistics.
-    * Arms are [[inA]] (exactly half the hash space, so 50/50 is the
-    * true null); per-day exposure = distinct users seen that day per
-    * arm (one fine agg), z = (nA−nB)/√(nA+nB) over exact longs,
-    * |z| > 3 flags. Exact oracle.
-    */
   /** The SRM arithmetic over any (day, user_id) exposure-pair frame —
     * shared by the batch op and the streaming twin
     * (streaming.srmFromPairs serves THIS over drained stream state,
@@ -302,6 +292,16 @@ object ExperimentOps {
       .orderBy(col("day"))
   }
 
+  /** #338 ab_srm_check — sample-ratio-mismatch screen for the running
+    * experiment, per exposure day plus the overall rollup: SRM (a
+    * 50/50 split that isn't) is the most common way a real A/B test
+    * silently lies — a day of broken assignment logging biases every
+    * downstream readout, and the fix is detection, not statistics.
+    * Arms are [[inA]] (exactly half the hash space, so 50/50 is the
+    * true null); per-day exposure = distinct users seen that day per
+    * arm (one fine agg), z = (nA−nB)/√(nA+nB) over exact longs,
+    * |z| > 3 flags. Exact oracle.
+    */
   def abSrmCheck(s: SparkSession, dir: String): DataFrame =
     srmServe(Tables.events(s, dir)
       .select(to_date(col("ts")).cast("string").as("day"), col("user_id")))
