@@ -163,7 +163,7 @@ object ExperimentOps {
     val bound = lit(1.96) / sqrt(d("t") / d("nd"))
     joined.select(
       // house rule: dates emit FORMATTED (DuckDB DATE surfaces as a
-      // midnight timestamp in the driver's pandas frame, a raw date
+      // midnight timestamp in the oracle check's pandas frame, a raw date
       // column can never hash-match)
       date_format(col("d"), "yyyy-MM-dd").as("d"),
       col("t"), col("n0"), col("k0"), col("n1"), col("k1"),
