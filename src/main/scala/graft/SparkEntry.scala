@@ -24,7 +24,7 @@ object SparkEntry {
     Round15Ops.keys, Round16Ops.keys, Round17Ops.keys, Round18Ops.keys,
     Round19Ops.keys, Round20Ops.keys, Round21Ops.keys, Round22Ops.keys,
     Round23Ops.keys, Round24Ops.keys, Round25Ops.keys, DssOps.keys,
-    BehaviorOps.keys, ExperimentOps.keys).flatten)
+    BehaviorOps.keys, ExperimentOps.keys, MonitorOps.keys).flatten)
 
   /** One entry per implemented operator from SURVEY.md §2. */
   val queries: Map[String, (SparkSession, String) => DataFrame] =

@@ -15,170 +15,11 @@ import graft.Key.{exact, rowsOnly}
   * goes through the order-free DECIMAL rule or stays in scaled
   * integers end-to-end (the mean6/events_autocorr discipline), so the
   * DuckDB oracle hashes match bit-for-bit at any partitioning.
+  * Its time-series and drift keys (psi_drift, cusum_changepoint,
+  * seasonal_decompose and theil_sen_trend) live in [[MonitorOps]].
   */
 object Round11Ops {
   import OracleMath._
-
-  /** #280 psi_drift — Population Stability Index of the event-type mix
-    * between the first and second half of the observed time span (the
-    * standard model-monitoring drift score; each event type is one PSI
-    * bucket). The heavy work is ONE map-side-combinable count over
-    * (half, event_type) — 2×|types| rows out of the scan, so the whole
-    * op is a single fine-keyed agg plus broadcast arithmetic at any
-    * volume; the split point derives from the data (no wall clock).
-    * Shares are exact double divisions of exact longs; the log term is
-    * the sourceLangEntropy-proven cross-engine pattern.
-    */
-  def psiDrift(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(s, dir).select(to_date(col("ts")).as("d"), col("event_type"))
-    val span = ev.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
-    val halves = ev.crossJoin(broadcast(span))
-      .select(
-        col("event_type"),
-        when(datediff(col("d"), col("lo")) * 2 <= datediff(col("hi"), col("lo")), lit(1))
-          .otherwise(lit(2)).as("half"))
-      .groupBy(col("event_type"), col("half"))
-      .agg(count(lit(1)).as("n"))
-    val wide = halves.groupBy(col("event_type"))
-      .agg(
-        sum(when(col("half") === 1, col("n")).otherwise(lit(0L))).as("n_first"),
-        sum(when(col("half") === 2, col("n")).otherwise(lit(0L))).as("n_second"))
-    psiFinish(wide)
-  }
-
-  /** The PSI arithmetic over any (event_type, n_first, n_second) count
-    * frame — shared by the batch op and the streaming drift monitor
-    * (streaming.psiStream serves THIS over its live state, so drained
-    * stream ≡ batch is an identity, not a coincidence).
-    */
-  private[graft] def psiFinish(wide: DataFrame): DataFrame = {
-    val tot = wide.agg(sum(col("n_first")).as("t1"), sum(col("n_second")).as("t2"))
-    wide.crossJoin(broadcast(tot))
-      .withColumn("s1", col("n_first").cast("double") / col("t1").cast("double"))
-      .withColumn("s2", col("n_second").cast("double") / col("t2").cast("double"))
-      .select(
-        col("event_type"), col("n_first"), col("n_second"),
-        emit(col("s1"), 6).as("share_first"),
-        emit(col("s2"), 6).as("share_second"),
-        when(col("n_first") === 0 || col("n_second") === 0, lit(null).cast("double"))
-          .otherwise(emit((col("s2") - col("s1")) * log(col("s2") / col("s1")), 6))
-          .as("psi_term"))
-      .orderBy(col("event_type"))
-  }
-
-  val psiDriftSql: String =
-    """WITH ev AS (SELECT CAST(ts AS DATE) AS d, event_type FROM events),
-      |span AS (SELECT min(d) AS lo, max(d) AS hi FROM ev),
-      |halves AS (
-      |  SELECT event_type,
-      |    CASE WHEN datediff('day', lo, d) * 2 <= datediff('day', lo, hi) THEN 1 ELSE 2 END AS half,
-      |    count(*) AS n
-      |  FROM ev, span GROUP BY 1, 2
-      |),
-      |wide AS (
-      |  SELECT event_type,
-      |    sum(CASE WHEN half = 1 THEN n ELSE 0 END) AS n_first,
-      |    sum(CASE WHEN half = 2 THEN n ELSE 0 END) AS n_second
-      |  FROM halves GROUP BY 1
-      |),
-      |tot AS (SELECT sum(n_first) AS t1, sum(n_second) AS t2 FROM wide),
-      |sh AS (
-      |  SELECT event_type, n_first, n_second,
-      |    CAST(n_first AS DOUBLE) / CAST(t1 AS DOUBLE) AS s1,
-      |    CAST(n_second AS DOUBLE) / CAST(t2 AS DOUBLE) AS s2
-      |  FROM wide, tot
-      |)
-      |SELECT event_type, CAST(n_first AS BIGINT) AS n_first, CAST(n_second AS BIGINT) AS n_second,
-      |  (CAST(round(s1, 6) AS DOUBLE) + 0.0) AS share_first,
-      |  (CAST(round(s2, 6) AS DOUBLE) + 0.0) AS share_second,
-      |  CASE WHEN n_first = 0 OR n_second = 0 THEN NULL
-      |       ELSE (CAST(round((s2 - s1) * ln(s2 / s1), 6) AS DOUBLE) + 0.0) END AS psi_term
-      |FROM sh ORDER BY event_type""".stripMargin
-
-  /** The batch first-half baseline for the streaming drift monitor:
-    * (event_type, n_first) counts under the same data-derived split
-    * rule psi_drift uses.
-    */
-  def psiBaseline(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(s, dir).select(to_date(col("ts")).as("d"), col("event_type"))
-    val span = ev.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
-    ev.crossJoin(broadcast(span))
-      .filter(datediff(col("d"), col("lo")) * 2 <= datediff(col("hi"), col("lo")))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_first"))
-  }
-
-  /** #281 cusum_changepoint — CUSUM change-point location per event
-    * type over the dense daily-count series. The statistic stays in
-    * SCALED INTEGERS end-to-end: with n observed days and per-type
-    * total T, S_k = Σ_{d≤k} (n·c_d − T) = n·k·(mean_before_k − mean),
-    * a pure BIGINT running sum whose argmax is the classic CUSUM
-    * change-point estimate — no float accumulation order to diverge
-    * between engines (the events_autocorr discipline). The only
-    * full-data shuffle is the (day, type) count; the cumulative window
-    * runs over the bounded day×type matrix (calendar-sized, never
-    * data-sized), densified by the gap_fill span-broadcast device so a
-    * zero-count day still moves the statistic.
-    */
-  def cusumChangepoint(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(s, dir).select(to_date(col("ts")).as("d"), col("event_type"))
-    val span = ev.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
-    val types = ev.select(col("event_type")).distinct()
-    val calendar = types.crossJoin(broadcast(span))
-      .select(col("event_type"), explode(expr("sequence(lo, hi)")).as("d"))
-    val daily = ev.groupBy(col("event_type"), col("d")).agg(count(lit(1)).as("c"))
-    val dense = calendar.join(daily, Seq("event_type", "d"), "left")
-      .select(col("event_type"), col("d"), coalesce(col("c"), lit(0L)).as("c"))
-    val stats = dense.groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_days"), sum(col("c")).as("total"))
-    val wCum = Window.partitionBy(col("event_type")).orderBy(col("d"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cusum = dense.join(stats, Seq("event_type"))
-      .withColumn("dev", col("n_days") * col("c") - col("total"))
-      .withColumn("s", sum(col("dev")).over(wCum))
-    val wPick = Window.partitionBy(col("event_type"))
-      .orderBy(abs(col("s")).desc, col("d"))
-    cusum
-      .withColumn("rn", row_number().over(wPick))
-      .filter(col("rn") === 1)
-      .select(
-        col("event_type"),
-        date_format(col("d"), "yyyy-MM-dd").as("cp_day"),
-        abs(col("s")).as("max_abs_cusum"),
-        signum(col("s").cast("double")).cast("int").as("direction"),
-        col("n_days"), col("total"))
-      .orderBy(col("event_type"))
-  }
-
-  val cusumChangepointSql: String =
-    """WITH ev AS (SELECT CAST(ts AS DATE) AS d, event_type FROM events),
-      |span AS (SELECT min(d) AS lo, max(d) AS hi FROM ev),
-      |types AS (SELECT DISTINCT event_type FROM ev),
-      |calendar AS (
-      |  SELECT event_type, unnest(generate_series(lo, hi, INTERVAL 1 DAY))::DATE AS d
-      |  FROM types, span
-      |),
-      |daily AS (SELECT event_type, d, count(*) AS c FROM ev GROUP BY 1, 2),
-      |dense AS (
-      |  SELECT cal.event_type, cal.d, coalesce(daily.c, 0) AS c
-      |  FROM calendar cal LEFT JOIN daily USING (event_type, d)
-      |),
-      |stats AS (SELECT event_type, count(*) AS n_days, sum(c) AS total FROM dense GROUP BY 1),
-      |cusum AS (
-      |  SELECT dense.event_type, d, n_days, total,
-      |    sum(n_days * c - total) OVER (PARTITION BY dense.event_type ORDER BY d
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS s
-      |  FROM dense JOIN stats USING (event_type)
-      |),
-      |pick AS (
-      |  SELECT *, row_number() OVER (PARTITION BY event_type ORDER BY abs(s) DESC, d) AS rn
-      |  FROM cusum
-      |)
-      |SELECT event_type, strftime(d, '%Y-%m-%d') AS cp_day,
-      |  CAST(abs(s) AS BIGINT) AS max_abs_cusum,
-      |  CAST(sign(s) AS INT) AS direction,
-      |  CAST(n_days AS BIGINT) AS n_days, CAST(total AS BIGINT) AS total
-      |FROM pick WHERE rn = 1 ORDER BY event_type""".stripMargin
 
   /** #282 window_funnel — ordered-funnel completion within a sliding
     * time window (the ClickHouse `windowFunnel` shape): per user, the
@@ -289,63 +130,6 @@ object Round11Ops {
       |FROM seq WHERE step3 IS NOT NULL
       |GROUP BY 1, 2, 3
       |ORDER BY n DESC, step1, step2, step3 LIMIT 20""".stripMargin
-
-  /** #284 seasonal_decompose — classical additive decomposition of the
-    * daily event-volume series: trend = centered 7-day moving average,
-    * seasonal = per-weekday mean deviation, residual = the rest. All
-    * intermediate totals are ×7-SCALED BIGINTs (sum7, dev7 = 7·c −
-    * sum7, per-weekday Σdev7), so every cross-row accumulation is
-    * integer-exact and order-free; the only doubles are final exact-
-    * integer divisions, correctly rounded identically in both engines.
-    * Interior days only (full 7-day window), so no null-edge
-    * semantics. The series is calendar-sized after ONE fine-keyed
-    * daily count — the window and weekday aggs never touch raw events.
-    */
-  def seasonalDecompose(s: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.events(s, dir)
-      .groupBy(to_date(col("ts")).as("d"))
-      .agg(count(lit(1)).as("c"))
-    val w7 = Window.orderBy(col("d")).rowsBetween(-3, 3)
-    val interior = daily
-      .withColumn("sum7", sum(col("c")).over(w7))
-      .withColumn("n7", count(lit(1)).over(w7))
-      .filter(col("n7") === 7)
-      .withColumn("dev7", lit(7) * col("c") - col("sum7"))
-      .withColumn("wd", weekday(col("d")))
-    val seas = interior.groupBy(col("wd"))
-      .agg(sum(col("dev7")).as("s_num"), count(lit(1)).as("s_den"))
-    interior.join(broadcast(seas), Seq("wd"))
-      .select(
-        date_format(col("d"), "yyyy-MM-dd").as("day"),
-        col("c").as("n_events"),
-        emit(col("sum7").cast("double") / 7.0, 6).as("trend"),
-        emit(col("s_num").cast("double") / (col("s_den").cast("double") * 7.0), 6)
-          .as("seasonal"),
-        emit(
-          (col("dev7").cast("double")
-            - col("s_num").cast("double") / col("s_den").cast("double")) / 7.0,
-          6).as("residual"))
-      .orderBy(col("day"))
-  }
-
-  val seasonalDecomposeSql: String =
-    """WITH daily AS (SELECT CAST(ts AS DATE) AS d, count(*) AS c FROM events GROUP BY 1),
-      |win AS (
-      |  SELECT d, c,
-      |    sum(c) OVER (ORDER BY d ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS sum7,
-      |    count(*) OVER (ORDER BY d ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS n7
-      |  FROM daily
-      |),
-      |interior AS (
-      |  SELECT d, c, sum7, 7 * c - sum7 AS dev7, isodow(d) - 1 AS wd
-      |  FROM win WHERE n7 = 7
-      |),
-      |seas AS (SELECT wd, sum(dev7) AS s_num, count(*) AS s_den FROM interior GROUP BY 1)
-      |SELECT strftime(d, '%Y-%m-%d') AS day, CAST(c AS BIGINT) AS n_events,
-      |  (CAST(round(CAST(sum7 AS DOUBLE) / 7.0, 6) AS DOUBLE) + 0.0) AS trend,
-      |  (CAST(round(CAST(s_num AS DOUBLE) / (CAST(s_den AS DOUBLE) * 7.0), 6) AS DOUBLE) + 0.0) AS seasonal,
-      |  (CAST(round((CAST(dev7 AS DOUBLE) - CAST(s_num AS DOUBLE) / CAST(s_den AS DOUBLE)) / 7.0, 6) AS DOUBLE) + 0.0) AS residual
-      |FROM interior JOIN seas USING (wd) ORDER BY day""".stripMargin
 
   /** #285 compaction_plan — the small-files compaction planner: the
     * 64-shard manifest (same portable md5 shard key as
@@ -1132,50 +916,6 @@ object Round11Ops {
       |  (CAST(round(sum(CASE WHEN lb = true_label THEN 1 ELSE 0 END) * 1.0 / count(*), 6) AS DOUBLE) + 0.0) AS recovery_rate
       |FROM verdicts GROUP BY 1 ORDER BY label""".stripMargin
 
-  /** #300 theil_sen_trend — the robust daily-volume trend per event
-    * type: the Theil–Sen estimator (median of all pairwise slopes) is
-    * the monitor-grade alternative to OLS (#161's zipf fit) because a
-    * single anomalous day cannot move it. The pair space is the
-    * CALENDAR², not the data² — after the one (day, type) count the
-    * O(days²/2) slope pairs are a few hundred rows per type at any
-    * volume. Slopes are exact integer-over-integer double divisions;
-    * the median is the standard p·(n−1) interpolation both engines
-    * evaluate identically on exact inputs (the quantile_drift
-    * precedent, gate-verified at two SFs).
-    */
-  def theilSenTrend(s: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.events(s, dir)
-      .groupBy(col("event_type"), to_date(col("ts")).as("d"))
-      .agg(count(lit(1)).as("c"))
-      .select(col("event_type"), datediff(col("d"), lit("2024-01-01").cast("date")).as("x"), col("c"))
-    val slopes = daily.as("l")
-      .join(daily.as("r"),
-        col("l.event_type") === col("r.event_type") && col("l.x") < col("r.x"))
-      .select(
-        col("l.event_type").as("event_type"),
-        ((col("r.c") - col("l.c")).cast("double")
-          / (col("r.x") - col("l.x")).cast("double")).as("slope"))
-    slopes.groupBy(col("event_type"))
-      .agg(
-        count(lit(1)).as("n_pairs"),
-        emit(expr("percentile(slope, 0.5)"), 6).as("trend_per_day"))
-      .orderBy(col("event_type"))
-  }
-
-  val theilSenTrendSql: String =
-    """WITH daily AS (
-      |  SELECT event_type, datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS x, count(*) AS c
-      |  FROM events GROUP BY 1, 2
-      |),
-      |slopes AS (
-      |  SELECT l.event_type,
-      |    CAST(r.c - l.c AS DOUBLE) / CAST(r.x - l.x AS DOUBLE) AS slope
-      |  FROM daily l JOIN daily r ON l.event_type = r.event_type AND l.x < r.x
-      |)
-      |SELECT event_type, count(*) AS n_pairs,
-      |  (CAST(round(quantile_cont(slope, 0.5), 6) AS DOUBLE) + 0.0) AS trend_per_day
-      |FROM slopes GROUP BY 1 ORDER BY event_type""".stripMargin
-
   /** #296 grouping_sets_report — the third member of the multi-level
     * aggregation family (#22 cube, #24 rollup): EXPLICIT grouping sets
     * ((nation), (region), ()) over the revenue fact join — the form a
@@ -1394,11 +1134,8 @@ object Round11Ops {
       |ORDER BY p_retailprice, p_partkey""".stripMargin
 
   val keys: Seq[Key] = Seq(
-    exact("psi_drift", psiDrift, psiDriftSql),
-    exact("cusum_changepoint", cusumChangepoint, cusumChangepointSql),
     exact("window_funnel", windowFunnel, windowFunnelSql),
     exact("seq_patterns", seqPatterns, seqPatternsSql),
-    exact("seasonal_decompose", seasonalDecompose, seasonalDecomposeSql),
     exact("compaction_plan", compactionPlan, compactionPlanSql),
     exact("corpus_mix_temperature", corpusMixTemperature, corpusMixTemperatureSql),
     exact("dedup_containment", dedupContainment, dedupContainmentSql),
@@ -1414,7 +1151,6 @@ object Round11Ops {
     exact("asof_join_nearest", asofJoinNearest, asofJoinNearestSql),
     exact("embed_covariance_incremental", embedCovarianceIncremental, embedCovarianceSql),
     exact("label_propagation_eval", labelPropagationEval, labelPropagationEvalSql),
-    exact("theil_sen_trend", theilSenTrend, theilSenTrendSql),
     rowsOnly("ann_probe_curve", annProbeCurve),
     exact("skyline_parts", skylineParts, skylinePartsSql))
 }

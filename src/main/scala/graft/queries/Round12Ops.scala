@@ -16,6 +16,10 @@ import graft.Key.{exact, rowsOnly}
   * (DECIMAL sums or exact integers), and per-row float chains mirror
   * the oracle's operation ORDER exactly so 6-dp emits are identical.
   * Its A/B keys live in [[ExperimentOps]].
+  * Its time-series and drift keys (holt_forecast,
+  * holt_winters_forecast, forecast_backtest, mann_kendall_trend,
+  * seasonal_strength, durbin_watson and ks_drift_test) live in
+  * [[MonitorOps]].
   */
 object Round12Ops {
   import OracleMath._
@@ -198,120 +202,6 @@ object Round12Ops {
       |        + CAST(1.96 AS DOUBLE) * sqrt((p * (1.0 - p) + z2 / (4.0 * nd)) / nd))
       |      / (1.0 + z2 / nd), 6) AS DOUBLE) + 0.0) AS ci_hi
       |FROM f ORDER BY event_type""".stripMargin
-
-  /** #307 holt_forecast — Holt's linear-trend exponential smoothing
-    * (Holt 1957) over each type's dense daily count series, emitting
-    * the 1..7-day-ahead forecast l_n + h·t_n — the capacity-planning
-    * readout beside the diagnostic monitors (ewma_hourly smooths,
-    * seasonal_decompose explains, THIS extrapolates). α=0.5 and β=0.25
-    * are exactly-representable doubles; init l₀=x₀, t₀=x₁−x₀
-    * (textbook), then l_k = α·x_k + (1−α)(l+t),
-    * t_k = β(l_k−l) + (1−β)t. Scale shape: the only full-data work is
-    * ONE (type, day) count with map-side combine; the recurrence is
-    * inherently sequential, so it folds over a CALENDAR-bounded sorted
-    * array per type (30 entries here; a year is 365) via the aggregate
-    * higher-order function — never a driver loop, never a window over
-    * raw events. Exact oracle: DuckDB replays the identical recurrence
-    * as a recursive CTE — same IEEE ops in the same sequential order
-    * produce the same bits (the deterministic-chain rule), 6-dp emit.
-    */
-  def holtForecast(s: SparkSession, dir: String): DataFrame =
-    holtFromDaily(
-      Tables.events(s, dir)
-        .groupBy(to_date(col("ts")).as("d"), col("event_type"))
-        .agg(count(lit(1)).as("x")))
-
-  /** Dense calendar per type (missing days are true zeros) over any
-    * (event_type, d, x) daily-count frame — shared by the Holt family.
-    */
-  private[graft] def denseDaily(daily: DataFrame): DataFrame = {
-    val span = daily.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
-    val types = daily.select(col("event_type")).distinct()
-    types.crossJoin(broadcast(span))
-      .select(col("event_type"), explode(expr("sequence(0, datediff(hi, lo))")).as("k"))
-      .join(
-        daily.crossJoin(broadcast(span))
-          .groupBy(col("event_type"), datediff(col("d"), col("lo")).as("k"))
-          .agg(sum(col("x")).as("x")),
-        Seq("event_type", "k"), "left")
-      .select(col("event_type"), col("k"), coalesce(col("x"), lit(0L)).cast("double").as("x"))
-  }
-
-  /** The Holt fold over any (event_type, d, x) daily-count frame —
-    * shared by the batch op and the streaming twin
-    * (streaming.holtFromCounts serves THIS over drained live counts,
-    * so stream ≡ batch is an identity, the psiFinish pattern).
-    */
-  private[graft] def holtFromDaily(daily: DataFrame): DataFrame = {
-    val folded = denseDaily(daily)
-      .groupBy(col("event_type"))
-      .agg(sort_array(collect_list(struct(col("k"), col("x")))).as("arr"))
-      // Holt's init needs two observations (l₀ = x₁, t₀ = x₂ − x₁); on
-      // a degenerate single-day calendar the oracle's recursive CTE
-      // returns zero rows while element_at(arr, 2) here would emit
-      // null trend/forecast — both engines must agree: no rows
-      .filter(size(col("arr")) >= 2)
-      .select(
-        col("event_type"),
-        aggregate(
-          expr("slice(arr, 2, size(arr) - 1)"),
-          struct(
-            expr("element_at(arr, 1).x").as("l"),
-            (expr("element_at(arr, 2).x") - expr("element_at(arr, 1).x")).as("t")),
-          (acc, e) => {
-            val lNew = lit(0.5) * e.getField("x") + lit(0.5) * (acc.getField("l") + acc.getField("t"))
-            struct(
-              lNew.as("l"),
-              (lit(0.25) * (lNew - acc.getField("l")) + lit(0.75) * acc.getField("t")).as("t"))
-          }).as("st"))
-    folded
-      .select(col("event_type"), col("st.l").as("l"), col("st.t").as("t"),
-        explode(expr("sequence(1, 7)")).as("h"))
-      .select(
-        col("event_type"), col("h"),
-        emit(col("l"), 6).as("level"),
-        emit(col("t"), 6).as("trend"),
-        emit(col("l") + col("h").cast("double") * col("t"), 6).as("forecast"))
-      .orderBy(col("event_type"), col("h"))
-  }
-
-  val holtForecastSql: String =
-    """WITH RECURSIVE ev AS (SELECT CAST(ts AS DATE) AS d, event_type FROM events),
-      |span AS (SELECT min(d) AS lo, max(d) AS hi FROM ev),
-      |types AS (SELECT DISTINCT event_type FROM ev),
-      |cal AS (
-      |  SELECT event_type, unnest(generate_series(0, datediff('day', lo, hi))) AS k
-      |  FROM types, span
-      |),
-      |cnt AS (
-      |  SELECT event_type, datediff('day', lo, d) AS k, count(*) AS x
-      |  FROM ev, span GROUP BY 1, 2
-      |),
-      |dense AS (
-      |  SELECT cal.event_type, cal.k,
-      |    CAST(coalesce(cnt.x, 0) AS DOUBLE) AS x
-      |  FROM cal LEFT JOIN cnt ON cal.event_type = cnt.event_type AND cal.k = cnt.k
-      |),
-      |init AS (
-      |  SELECT a.event_type, a.x AS l, b.x - a.x AS t
-      |  FROM dense a JOIN dense b ON a.event_type = b.event_type AND a.k = 0 AND b.k = 1
-      |),
-      |rec AS (
-      |  SELECT event_type, 0 AS k, l, t FROM init
-      |  UNION ALL
-      |  SELECT r.event_type, r.k + 1,
-      |    0.5 * d.x + 0.5 * (r.l + r.t) AS l,
-      |    0.25 * ((0.5 * d.x + 0.5 * (r.l + r.t)) - r.l) + 0.75 * r.t AS t
-      |  FROM rec r JOIN dense d ON d.event_type = r.event_type AND d.k = r.k + 1
-      |),
-      |last AS (SELECT max(k) AS kmax FROM rec),
-      |fin AS (SELECT event_type, l, t FROM rec, last WHERE k = kmax)
-      |SELECT event_type, h,
-      |  (CAST(round(l, 6) AS DOUBLE) + 0.0) AS level,
-      |  (CAST(round(t, 6) AS DOUBLE) + 0.0) AS trend,
-      |  (CAST(round(l + CAST(h AS DOUBLE) * t, 6) AS DOUBLE) + 0.0) AS forecast
-      |FROM fin, (SELECT unnest(generate_series(1, 7)) AS h)
-      |ORDER BY event_type, h""".stripMargin
 
   /** #309 kneser_ney_bigram — the interpolated Kneser–Ney smoothed
     * bigram table (Kneser & Ney 1995; Chen & Goodman 1999's
@@ -908,121 +798,6 @@ object Round12Ops {
       |SELECT user_id, n_events, active_hours, events_per_hour, gap_cv, type_entropy,
       |  ((gap_cv < 0.5) OR (type_entropy < 0.7)) AND (n_events >= 20) AS flagged
       |FROM r ORDER BY user_id""".stripMargin
-
-  /** #318 holt_winters_forecast — additive Holt–Winters triple
-    * exponential smoothing (Winters 1960) with weekly seasonality
-    * (m=7) per event type: #307 holt_forecast extrapolates the trend,
-    * THIS also carries the day-of-week shape — the forecast a
-    * capacity planner actually wants for traffic with a weekend dip.
-    * α=0.5, β=0.25, γ=0.5 (all exactly-representable doubles);
-    * textbook init (l₀ = first-week mean, t₀ = week-over-week mean
-    * slope / 7, s_i = x_i − l₀); recurrence l' = α(x−s₋₇)+(1−α)(l+t),
-    * t' = β(l'−l)+(1−β)t, s' = γ(x−l')+(1−γ)s₋₇, carried as a
-    * ROTATING 7-element seasonal list in the fold state (head = the
-    * season about to recur), so the inherently-sequential pass stays
-    * one aggregate-HOF fold over the calendar-bounded array — the
-    * #307 scale shape with richer state, never a driver loop.
-    * Forecast_h = l + h·t + s[h]. Init sums are integral doubles
-    * (exact in any order); the recurrence is the identical IEEE chain
-    * in the oracle's recursive CTE, which carries the seasonal list
-    * as a rotating LIST column (exact oracle, 6-dp emit).
-    */
-  def holtWintersForecast(s: SparkSession, dir: String): DataFrame = {
-    val m = 7
-    val daily = Tables.events(s, dir)
-      .groupBy(to_date(col("ts")).as("d"), col("event_type"))
-      .agg(count(lit(1)).as("x"))
-    val folded = denseDaily(daily)
-      .groupBy(col("event_type"))
-      .agg(sort_array(collect_list(struct(col("k"), col("x")))).as("arr"))
-      // the two-week init (l₀, t₀, s₀) needs 14 observed days; the
-      // oracle's recursive CTE starts at k = 14 and returns zero rows
-      // on a shorter calendar, so both engines must agree: no rows
-      .filter(size(col("arr")) >= 2 * m)
-      // init over the first two weeks: exact integral-double sums
-      .withColumn("sum1", expr("aggregate(slice(arr, 1, 7), cast(0.0 as double), (a, e) -> a + e.x)"))
-      .withColumn("sum2", expr("aggregate(slice(arr, 8, 7), cast(0.0 as double), (a, e) -> a + e.x)"))
-      .withColumn("l0", col("sum1") / lit(7.0))
-      .withColumn("t0", (col("sum2") / lit(7.0) - col("sum1") / lit(7.0)) / lit(7.0))
-      .withColumn("s0", expr("transform(slice(arr, 1, 7), e -> e.x - l0)"))
-      .withColumn("st",
-        aggregate(
-          expr("slice(arr, 8, size(arr) - 7)"),
-          struct(col("l0").as("l"), col("t0").as("t"), col("s0").as("s")),
-          (acc, e) => {
-            val sOld = element_at(acc.getField("s"), 1)
-            val lNew = lit(0.5) * (e.getField("x") - sOld) +
-              lit(0.5) * (acc.getField("l") + acc.getField("t"))
-            val tNew = lit(0.25) * (lNew - acc.getField("l")) + lit(0.75) * acc.getField("t")
-            val sNew = lit(0.5) * (e.getField("x") - lNew) + lit(0.5) * sOld
-            struct(
-              lNew.as("l"), tNew.as("t"),
-              concat(slice(acc.getField("s"), 2, m - 1), array(sNew)).as("s"))
-          }))
-    folded
-      .select(col("event_type"), col("st.l").as("l"), col("st.t").as("t"), col("st.s").as("s"),
-        explode(expr("sequence(1, 7)")).as("h"))
-      .select(
-        col("event_type"), col("h"),
-        emit(col("l"), 6).as("level"),
-        emit(col("t"), 6).as("trend"),
-        emit(element_at(col("s"), col("h")), 6).as("seasonal"),
-        emit(col("l") + col("h").cast("double") * col("t")
-          + element_at(col("s"), col("h")), 6).as("forecast"))
-      .orderBy(col("event_type"), col("h"))
-  }
-
-  val holtWintersForecastSql: String =
-    """WITH RECURSIVE ev AS (SELECT CAST(ts AS DATE) AS d, event_type FROM events),
-      |span AS (SELECT min(d) AS lo, max(d) AS hi FROM ev),
-      |types AS (SELECT DISTINCT event_type FROM ev),
-      |cal AS (
-      |  SELECT event_type, unnest(generate_series(0, datediff('day', lo, hi))) AS k
-      |  FROM types, span
-      |),
-      |cnt AS (
-      |  SELECT event_type, datediff('day', lo, d) AS k, count(*) AS x
-      |  FROM ev, span GROUP BY 1, 2
-      |),
-      |dense AS (
-      |  SELECT cal.event_type, cal.k, CAST(coalesce(cnt.x, 0) AS DOUBLE) AS x
-      |  FROM cal LEFT JOIN cnt ON cal.event_type = cnt.event_type AND cal.k = cnt.k
-      |),
-      |sums AS (
-      |  SELECT event_type,
-      |    sum(x) FILTER (WHERE k < 7) AS sum1,
-      |    sum(x) FILTER (WHERE k >= 7 AND k < 14) AS sum2
-      |  FROM dense GROUP BY 1
-      |),
-      |wk1 AS (
-      |  SELECT event_type, list(x ORDER BY k) AS xs FROM dense WHERE k < 7 GROUP BY 1
-      |),
-      |init AS (
-      |  SELECT s.event_type, 6 AS k,
-      |    s.sum1 / 7.0 AS l,
-      |    (s.sum2 / 7.0 - s.sum1 / 7.0) / 7.0 AS t,
-      |    list_transform(w.xs, v -> v - s.sum1 / 7.0) AS sl
-      |  FROM sums s JOIN wk1 w ON s.event_type = w.event_type
-      |),
-      |rec AS (
-      |  SELECT event_type, k, l, t, sl FROM init
-      |  UNION ALL
-      |  SELECT r.event_type, r.k + 1,
-      |    0.5 * (d.x - r.sl[1]) + 0.5 * (r.l + r.t) AS l,
-      |    0.25 * ((0.5 * (d.x - r.sl[1]) + 0.5 * (r.l + r.t)) - r.l) + 0.75 * r.t AS t,
-      |    r.sl[2:7] ||
-      |      [0.5 * (d.x - (0.5 * (d.x - r.sl[1]) + 0.5 * (r.l + r.t))) + 0.5 * r.sl[1]] AS sl
-      |  FROM rec r JOIN dense d ON d.event_type = r.event_type AND d.k = r.k + 1
-      |),
-      |last AS (SELECT max(k) AS kmax FROM rec),
-      |fin AS (SELECT event_type, l, t, sl FROM rec, last WHERE k = kmax)
-      |SELECT event_type, h,
-      |  (CAST(round(l, 6) AS DOUBLE) + 0.0) AS level,
-      |  (CAST(round(t, 6) AS DOUBLE) + 0.0) AS trend,
-      |  (CAST(round(sl[h], 6) AS DOUBLE) + 0.0) AS seasonal,
-      |  (CAST(round(l + CAST(h AS DOUBLE) * t + sl[h], 6) AS DOUBLE) + 0.0) AS forecast
-      |FROM fin, (SELECT unnest(generate_series(1, 7)) AS h)
-      |ORDER BY event_type, h""".stripMargin
 
   /** #316 embed_drift_report — per-dimension embedding drift between
     * the first and second half of the vector ids (the ingestion-order
@@ -1706,84 +1481,6 @@ object Round12Ops {
        |  (CAST(round(CAST(u2 AS DOUBLE) / (CAST(p AS DOUBLE) * CAST(n AS DOUBLE)) - 1.0, 6) AS DOUBLE) + 0.0) AS gini
        |FROM agg""".stripMargin
 
-  /** #327 ks_drift_test — two-sample Kolmogorov–Smirnov test of the
-    * doc-length distribution between the first and second half of the
-    * doc-id space, per language: psi_drift reads a BINNED divergence
-    * and quantile_drift a few fixed quantiles; KS is the binless
-    * sup-norm over the WHOLE distribution with a significance
-    * boundary (D_crit = 1.358·√((n1+n2)/(n1·n2)), α=0.05). The sup is
-    * exact rational arithmetic end to end: per (lang, n_chars) counts
-    * collapse the corpus to the distinct-value histogram in ONE
-    * map-side-combinable agg; the cumulative ECDFs run over that
-    * value-domain-bounded relation (window partitioned by lang, never
-    * raw docs); D's numerator |F1·n2 − F2·n1| stays in DECIMAL(38,0)
-    * (the graph_assortativity overflow rule) and only the final
-    * quotient touches floats. Exact oracle.
-    */
-  def ksDriftTest(s: SparkSession, dir: String): DataFrame = {
-    val d0 = Tables.documents(s, dir).select(col("doc_id"), col("lang"), col("n_chars"))
-    val span = d0.agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
-    val hist = d0.crossJoin(broadcast(span))
-      .select(col("lang"), col("n_chars"),
-        when((col("doc_id") - col("lo")) * 2 <= (col("hi") - col("lo")), 1)
-          .otherwise(2).as("half"))
-      .groupBy(col("lang"), col("n_chars"))
-      .agg(
-        sum(when(col("half") === 1, 1L).otherwise(0L)).as("c1"),
-        sum(when(col("half") === 2, 1L).otherwise(0L)).as("c2"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("lang")).orderBy(col("n_chars"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    val tot = hist.groupBy(col("lang"))
-      .agg(sum(col("c1")).as("n1"), sum(col("c2")).as("n2"))
-    hist
-      .withColumn("f1", sum(col("c1")).over(w))
-      .withColumn("f2", sum(col("c2")).over(w))
-      .join(broadcast(tot), Seq("lang"))
-      .select(col("lang"), col("n1"), col("n2"),
-        abs(dec0(col("f1")) * dec0(col("n2")) - dec0(col("f2")) * dec0(col("n1"))).as("num"))
-      .groupBy(col("lang"), col("n1"), col("n2"))
-      .agg(max(col("num")).as("mnum"))
-      .select(col("lang"), col("n1"), col("n2"),
-        emit(col("mnum").cast("double") / (col("n1").cast("double") * col("n2").cast("double")), 6)
-          .as("ks_d"),
-        emit(lit(1.358) * sqrt((col("n1") + col("n2")).cast("double")
-          / (col("n1").cast("double") * col("n2").cast("double"))), 6).as("d_crit"))
-      .withColumn("drifted", col("ks_d") > col("d_crit"))
-      .orderBy(col("lang"))
-  }
-
-  val ksDriftTestSql: String =
-    """WITH span AS (SELECT min(doc_id) AS lo, max(doc_id) AS hi FROM documents),
-      |hist AS (
-      |  SELECT lang, n_chars,
-      |    CAST(sum(CASE WHEN (doc_id - lo) * 2 <= (hi - lo) THEN 1 ELSE 0 END) AS BIGINT) AS c1,
-      |    CAST(sum(CASE WHEN (doc_id - lo) * 2 <= (hi - lo) THEN 0 ELSE 1 END) AS BIGINT) AS c2
-      |  FROM documents CROSS JOIN span GROUP BY 1, 2
-      |),
-      |cum AS (
-      |  SELECT lang, n_chars, c1, c2,
-      |    CAST(sum(c1) OVER (PARTITION BY lang ORDER BY n_chars
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS f1,
-      |    CAST(sum(c2) OVER (PARTITION BY lang ORDER BY n_chars
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS f2
-      |  FROM hist
-      |),
-      |tot AS (SELECT lang, CAST(sum(c1) AS BIGINT) AS n1, CAST(sum(c2) AS BIGINT) AS n2
-      |        FROM hist GROUP BY 1),
-      |sup AS (
-      |  SELECT cum.lang, tot.n1, tot.n2,
-      |    max(abs(CAST(f1 AS DECIMAL(38,0)) * CAST(n2 AS DECIMAL(38,0))
-      |          - CAST(f2 AS DECIMAL(38,0)) * CAST(n1 AS DECIMAL(38,0)))) AS mnum
-      |  FROM cum JOIN tot ON cum.lang = tot.lang GROUP BY 1, 2, 3
-      |)
-      |SELECT lang, n1, n2,
-      |  (CAST(round(CAST(mnum AS DOUBLE) / (CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE)), 6) AS DOUBLE) + 0.0) AS ks_d,
-      |  (CAST(round(1.358 * sqrt(CAST(n1 + n2 AS DOUBLE) / (CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE))), 6) AS DOUBLE) + 0.0) AS d_crit,
-      |  CAST(round(CAST(mnum AS DOUBLE) / (CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE)), 6) AS DOUBLE)
-      |    > (CAST(round(1.358 * sqrt(CAST(n1 + n2 AS DOUBLE) / (CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE))), 6) AS DOUBLE) + 0.0) AS drifted
-      |FROM sup ORDER BY lang""".stripMargin
-
   /** #328 token_label_mi — mutual information between token PRESENCE
     * and the lang='en' label over the 50 highest-document-frequency
     * tokens: the feature-selection table a classifier pipeline ranks
@@ -2121,101 +1818,6 @@ object Round12Ops {
       block("order_priority_x_status",
         "SELECT o_orderpriority AS a, o_orderstatus AS b FROM orders") +
       "\nORDER BY pair"
-  }
-
-  /** #332 forecast_backtest — one-step-ahead backtest of the two
-    * structural baselines every forecast must beat (Hyndman's
-    * forecasting-101 rule): naive (tomorrow = today) vs seasonal
-    * naive (tomorrow = same weekday last week), MAE per event type
-    * over the last 14 days of the dense calendar. The models the
-    * catalog ships (#307/#318) are only trustworthy relative to THESE
-    * floors — a Holt fit that loses to seasonal-naive is a bug
-    * report. Predictions are equi-joins on the day index (k−1, k−7)
-    * over the calendar-bounded dense frame; errors are exact longs,
-    * means via the mean6 device. Exact oracle.
-    */
-  def forecastBacktest(s: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.events(s, dir)
-      .groupBy(to_date(col("ts")).as("d"), col("event_type"))
-      .agg(count(lit(1)).as("x"))
-    val span = daily.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
-    val types = daily.select(col("event_type")).distinct()
-    val dense = types.crossJoin(broadcast(span))
-      .select(col("event_type"), col("lo"), col("hi"),
-        explode(expr("sequence(0, datediff(hi, lo))")).as("k"))
-      .join(
-        daily.crossJoin(broadcast(span))
-          .groupBy(col("event_type"), datediff(col("d"), col("lo")).as("k"))
-          .agg(sum(col("x")).as("x0")),
-        Seq("event_type", "k"), "left")
-      .select(col("event_type"), col("k"),
-        datediff(col("hi"), col("lo")).as("kmax"),
-        coalesce(col("x0"), lit(0L)).as("x"))
-    val denseCut = graft.Lineage.cut(dense) // calendar-bounded, read 3x
-    val base = denseCut.select(col("event_type"), col("k"), col("x"))
-    val lag1 = base.select(col("event_type"), (col("k") + 1).as("k"), col("x").as("p1"))
-    val lag7 = base.select(col("event_type"), (col("k") + 7).as("k"), col("x").as("p7"))
-    denseCut
-      .join(lag1, Seq("event_type", "k"))
-      .join(lag7, Seq("event_type", "k"))
-      .filter(col("k") > col("kmax") - 14)
-      .groupBy(col("event_type"))
-      .agg(
-        count(lit(1)).as("n_days"),
-        sum(abs(col("x") - col("p1"))).as("s1"),
-        sum(abs(col("x") - col("p7"))).as("s7"))
-      .select(col("event_type"), col("n_days"),
-        Round6Ops.mean6(col("s1").cast(Dec), col("n_days")).as("mae_naive"),
-        Round6Ops.mean6(col("s7").cast(Dec), col("n_days")).as("mae_seasonal"))
-      .withColumn("winner",
-        when(col("mae_seasonal") < col("mae_naive"), "seasonal")
-          .when(col("mae_seasonal") > col("mae_naive"), "naive")
-          .otherwise("tie"))
-      .orderBy(col("event_type"))
-  }
-
-  val forecastBacktestSql: String = {
-    val m1 = Round6Ops.mean6Sql("s1", "n_days")
-    val m7 = Round6Ops.mean6Sql("s7", "n_days")
-    s"""WITH ev AS (SELECT CAST(ts AS DATE) AS d, event_type FROM events),
-       |span AS (SELECT min(d) AS lo, max(d) AS hi FROM ev),
-       |types AS (SELECT DISTINCT event_type FROM ev),
-       |ks AS (
-       |  SELECT unnest(generate_series(0, datediff('day', lo, hi))) AS k FROM span
-       |),
-       |cal AS (
-       |  SELECT t.event_type, ks.k, s.kmax
-       |  FROM types t
-       |  CROSS JOIN ks
-       |  CROSS JOIN (SELECT datediff('day', lo, hi) AS kmax FROM span) s
-       |),
-       |cnt AS (
-       |  SELECT event_type, datediff('day', lo, d) AS k, count(*) AS x
-       |  FROM ev, span GROUP BY 1, 2
-       |),
-       |dense AS (
-       |  SELECT cal.event_type, cal.k, cal.kmax, CAST(coalesce(cnt.x, 0) AS BIGINT) AS x
-       |  FROM cal LEFT JOIN cnt ON cal.event_type = cnt.event_type AND cal.k = cnt.k
-       |),
-       |j AS (
-       |  SELECT d.event_type, d.x, a.x AS p1, b.x AS p7
-       |  FROM dense d
-       |  JOIN dense a ON a.event_type = d.event_type AND a.k = d.k - 1
-       |  JOIN dense b ON b.event_type = d.event_type AND b.k = d.k - 7
-       |  WHERE d.k > d.kmax - 14
-       |),
-       |agg AS (
-       |  SELECT event_type, count(*) AS n_days,
-       |    CAST(sum(abs(x - p1)) AS DECIMAL(38,6)) AS s1,
-       |    CAST(sum(abs(x - p7)) AS DECIMAL(38,6)) AS s7
-       |  FROM j GROUP BY 1
-       |)
-       |SELECT event_type, n_days,
-       |  $m1 AS mae_naive,
-       |  $m7 AS mae_seasonal,
-       |  CASE WHEN $m7 < $m1 THEN 'seasonal'
-       |       WHEN $m7 > $m1 THEN 'naive' ELSE 'tie' END AS winner
-       |FROM agg ORDER BY event_type""".stripMargin
   }
 
   /** #333 gini_report — the Gini coefficient of per-user purchase
@@ -2681,98 +2283,6 @@ object Round12Ops {
       |  (CAST(round(CAST(k AS DOUBLE) / CAST(st AS DOUBLE), 6) AS DOUBLE) + 0.0) AS alpha
       |FROM terms""".stripMargin
 
-  /** #343 mann_kendall_trend — the Mann–Kendall monotone-trend test
-    * per event type over the dense daily calendar: theil_sen gives
-    * the robust SLOPE, this gives the SIGNIFICANCE (S = Σ_{i<j}
-    * sign(x_j − x_i), tie-corrected variance, continuity-corrected
-    * z) — the standard pair for "is volume actually trending or am I
-    * reading noise". All pair work runs on the CALENDAR-bounded dense
-    * frame (a |days|²/2 self-join per type — ~1.8k pairs at 60 days,
-    * never data-volume-sized); S and both variance terms are exact
-    * integers (the tie term reads off the per-type value histogram),
-    * z is one mirrored float chain with the S∓1 correction. Exact
-    * oracle.
-    */
-  def mannKendallTrend(s: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.events(s, dir)
-      .groupBy(to_date(col("ts")).as("d"), col("event_type"))
-      .agg(count(lit(1)).as("x"))
-    val span = daily.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
-    val types = daily.select(col("event_type")).distinct()
-    val dense = types.crossJoin(broadcast(span))
-      .select(col("event_type"), explode(expr("sequence(0, datediff(hi, lo))")).as("k"))
-      .join(
-        daily.crossJoin(broadcast(span))
-          .groupBy(col("event_type"), datediff(col("d"), col("lo")).as("k"))
-          .agg(sum(col("x")).as("x0")),
-        Seq("event_type", "k"), "left")
-      .select(col("event_type"), col("k"), coalesce(col("x0"), lit(0L)).as("x"))
-    val denseCut = graft.Lineage.cut(dense) // calendar-bounded, read 3x
-    val a = denseCut.select(col("event_type"), col("k").as("ki"), col("x").as("xi"))
-    val b = denseCut.select(col("event_type"), col("k").as("kj"), col("x").as("xj"))
-    val sStat = a.join(b, Seq("event_type")).filter(col("ki") < col("kj"))
-      .groupBy(col("event_type"))
-      .agg(sum(signum(col("xj") - col("xi")).cast("long")).as("s"),
-        (max(col("kj")) + 1).as("n"))
-    val ties = denseCut.groupBy(col("event_type"), col("x")).agg(count(lit(1)).as("t"))
-      .groupBy(col("event_type"))
-      .agg(sum(col("t") * (col("t") - 1) * (lit(2) * col("t") + 5)).as("tie_term"))
-    val varNum = (col("n") * (col("n") - 1) * (lit(2) * col("n") + 5) - col("tie_term"))
-    val varS = varNum.cast("double") / lit(18.0)
-    val z = when(col("s") > 0, (col("s") - 1).cast("double") / sqrt(varS))
-      .when(col("s") < 0, (col("s") + 1).cast("double") / sqrt(varS))
-      .otherwise(lit(0.0))
-    sStat.join(ties, Seq("event_type"))
-      .select(col("event_type"), col("n").as("n_days"), col("s"),
-        emit(varS, 4).as("var_s"),
-        emit(z, 4).as("z"),
-        when(abs(emit(z, 4)) > 1.96,
-          when(col("s") > 0, "rising").otherwise("falling")).otherwise("flat").as("trend"))
-      .orderBy(col("event_type"))
-  }
-
-  val mannKendallTrendSql: String =
-    """WITH ev AS (SELECT CAST(ts AS DATE) AS d, event_type FROM events),
-      |span AS (SELECT min(d) AS lo, max(d) AS hi FROM ev),
-      |types AS (SELECT DISTINCT event_type FROM ev),
-      |ks AS (SELECT unnest(generate_series(0, datediff('day', lo, hi))) AS k FROM span),
-      |cal AS (SELECT t.event_type, ks.k FROM types t CROSS JOIN ks),
-      |cnt AS (
-      |  SELECT event_type, datediff('day', lo, d) AS k, count(*) AS x
-      |  FROM ev, span GROUP BY 1, 2
-      |),
-      |dense AS (
-      |  SELECT cal.event_type, cal.k, CAST(coalesce(cnt.x, 0) AS BIGINT) AS x
-      |  FROM cal LEFT JOIN cnt ON cal.event_type = cnt.event_type AND cal.k = cnt.k
-      |),
-      |sstat AS (
-      |  SELECT a.event_type,
-      |    CAST(sum(CAST(sign(b.x - a.x) AS BIGINT)) AS BIGINT) AS s,
-      |    CAST(max(b.k) + 1 AS BIGINT) AS n
-      |  FROM dense a JOIN dense b ON a.event_type = b.event_type AND a.k < b.k
-      |  GROUP BY 1
-      |),
-      |ties AS (
-      |  SELECT event_type,
-      |    CAST(sum(t * (t - 1) * (2 * t + 5)) AS BIGINT) AS tie_term
-      |  FROM (SELECT event_type, x, count(*) AS t FROM dense GROUP BY 1, 2)
-      |  GROUP BY 1
-      |)
-      |SELECT sstat.event_type, n AS n_days, s,
-      |  (CAST(round(CAST(n * (n - 1) * (2 * n + 5) - tie_term AS DOUBLE) / 18.0, 4) AS DOUBLE) + 0.0) AS var_s,
-      |  (CAST(round(CASE
-      |    WHEN s > 0 THEN CAST(s - 1 AS DOUBLE) / sqrt(CAST(n * (n - 1) * (2 * n + 5) - tie_term AS DOUBLE) / 18.0)
-      |    WHEN s < 0 THEN CAST(s + 1 AS DOUBLE) / sqrt(CAST(n * (n - 1) * (2 * n + 5) - tie_term AS DOUBLE) / 18.0)
-      |    ELSE 0.0 END, 4) AS DOUBLE) + 0.0) AS z,
-      |  CASE WHEN abs(CAST(round(CASE
-      |    WHEN s > 0 THEN CAST(s - 1 AS DOUBLE) / sqrt(CAST(n * (n - 1) * (2 * n + 5) - tie_term AS DOUBLE) / 18.0)
-      |    WHEN s < 0 THEN CAST(s + 1 AS DOUBLE) / sqrt(CAST(n * (n - 1) * (2 * n + 5) - tie_term AS DOUBLE) / 18.0)
-      |    ELSE 0.0 END, 4) AS DOUBLE)) > 1.96
-      |    THEN CASE WHEN s > 0 THEN 'rising' ELSE 'falling' END
-      |    ELSE 'flat' END AS trend
-      |FROM sstat JOIN ties ON sstat.event_type = ties.event_type
-      |ORDER BY sstat.event_type""".stripMargin
-
   /** #344 heaps_law_fit — Heaps'-law exponent of the corpus: vocab
     * growth V(N) = K·N^β measured at 10 cumulative doc-id prefixes,
     * then log-log least squares for (β, K) — the number that projects
@@ -3080,63 +2590,6 @@ object Round12Ops {
        |  n_docs - n_merged AS survivors_if_merged
        |FROM agg CROSS JOIN nd ORDER BY threshold""".stripMargin
 
-  /** #349 seasonal_strength — Hyndman's trend/seasonal strength of the
-    * daily volume series, F = max(0, 1 − Var(R)/Var(component + R)),
-    * computed over seasonal_decompose's own oracle-verified 6-dp
-    * component columns (both engines emit those columns bit-equal, so
-    * chaining float arithmetic on them stays mirrored — the
-    * rank_rbo_report rule): one number per component answering "is
-    * the weekly shape real enough that a seasonal model (#318) earns
-    * its keep over plain Holt (#307)", the decision forecast_backtest
-    * measures after the fact. Variance moments are 12-dp rounded into
-    * order-free DECIMAL sums over the calendar-bounded series. Exact
-    * oracle.
-    */
-  def seasonalStrength(s: SparkSession, dir: String): DataFrame = {
-    val comp = Round11Ops.seasonalDecompose(s, dir)
-      .select(col("n_events").cast("double").as("x"),
-        col("trend").as("t"), col("seasonal").as("sc"), col("residual").as("r"))
-    def varOf(c: Column, tag: String): Seq[Column] = Seq(
-      sum(round(c * c, 12).cast(Dec12)).as(s"s2_$tag"),
-      sum(round(c, 6).cast(Dec12)).as(s"s1_$tag"))
-    val m = comp.agg(
-      count(lit(1)).as("n"),
-      (varOf(col("r"), "r") ++ varOf(col("sc") + col("r"), "sr")
-        ++ varOf(col("t") + col("r"), "tr")): _*)
-    def variance(tag: String): Column = {
-      val mean = col(s"s1_$tag").cast("double") / col("n").cast("double")
-      col(s"s2_$tag").cast("double") / col("n").cast("double") - mean * mean
-    }
-    m.select(col("n").as("n_days"),
-      emit(variance("r"), 6).as("var_resid"),
-      emit(greatest(lit(0.0), lit(1.0) - variance("r") / variance("sr")), 6)
-        .as("f_seasonal"),
-      emit(greatest(lit(0.0), lit(1.0) - variance("r") / variance("tr")), 6)
-        .as("f_trend"))
-  }
-
-  val seasonalStrengthSql: String = {
-    def v(tag: String): String =
-      s"CAST(s2_$tag AS DOUBLE) / CAST(n AS DOUBLE) " +
-        s"- (CAST(s1_$tag AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(s1_$tag AS DOUBLE) / CAST(n AS DOUBLE))"
-    s"""WITH comp AS (${Round11Ops.seasonalDecomposeSql.replace("ORDER BY day", "")}),
-       |m AS (
-       |  SELECT count(*) AS n,
-       |    sum(CAST(round(residual * residual, 12) AS DECIMAL(38,12))) AS s2_r,
-       |    sum(CAST(round(residual, 6) AS DECIMAL(38,12))) AS s1_r,
-       |    sum(CAST(round((seasonal + residual) * (seasonal + residual), 12) AS DECIMAL(38,12))) AS s2_sr,
-       |    sum(CAST(round(seasonal + residual, 6) AS DECIMAL(38,12))) AS s1_sr,
-       |    sum(CAST(round((trend + residual) * (trend + residual), 12) AS DECIMAL(38,12))) AS s2_tr,
-       |    sum(CAST(round(trend + residual, 6) AS DECIMAL(38,12))) AS s1_tr
-       |  FROM comp
-       |)
-       |SELECT n AS n_days,
-       |  (CAST(round(${v("r")}, 6) AS DOUBLE) + 0.0) AS var_resid,
-       |  (CAST(round(greatest(0.0, 1.0 - (${v("r")}) / (${v("sr")})), 6) AS DOUBLE) + 0.0) AS f_seasonal,
-       |  (CAST(round(greatest(0.0, 1.0 - (${v("r")}) / (${v("tr")})), 6) AS DOUBLE) + 0.0) AS f_trend
-       |FROM m""".stripMargin
-  }
-
   /** #350 embed_outlier_report — per-vector standardized anomaly score
     * (diagonal Mahalanobis: Σ_d ((v_d−μ_d)/σ_d)²) with the top-20
     * outliers: the index-hygiene screen upstream of every ANN family —
@@ -3231,49 +2684,6 @@ object Round12Ops {
       |  (CAST(round(CAST(sum(CASE WHEN n < threshold THEN n ELSE 0 END) AS DOUBLE)
       |    / CAST(sum(n) AS DOUBLE), 6) AS DOUBLE) + 0.0) AS cold_event_share
       |FROM pu CROSS JOIN thrs GROUP BY threshold ORDER BY threshold""".stripMargin
-
-  /** #354 durbin_watson — the Durbin–Watson serial-correlation test on
-    * seasonal_decompose's residuals (DW = Σ(Δr)²/Σr², ρ₁ ≈ 1 − DW/2):
-    * the "are the leftovers actually white" closure of the
-    * decomposition family — a DW far from 2 means trend+seasonal
-    * missed structure and every downstream anomaly threshold on those
-    * residuals is mis-calibrated. Chains on the oracle-verified 6-dp
-    * residual column (the rank_rbo rule); the lag runs over the
-    * CALENDAR-bounded series, both quadratic-form sums 12-dp rounded
-    * into order-free DECIMALs. Exact oracle.
-    */
-  def durbinWatson(s: SparkSession, dir: String): DataFrame = {
-    val wp = org.apache.spark.sql.expressions.Window.orderBy(col("day"))
-    val r = Round11Ops.seasonalDecompose(s, dir).select(col("day"), col("residual"))
-      .withColumn("rp", lag(col("residual"), 1).over(wp))
-    val m = r.agg(
-      count(lit(1)).as("n"),
-      sum(round(col("residual") * col("residual"), 12).cast(Dec12)).as("ss"),
-      sum(when(col("rp").isNotNull,
-        round((col("residual") - col("rp")) * (col("residual") - col("rp")), 12))
-        .otherwise(lit(0.0)).cast(Dec12)).as("sd"))
-    m.select(col("n").as("n_days"),
-      emit(col("sd").cast("double") / col("ss").cast("double"), 6).as("dw"),
-      emit(lit(1.0) - (col("sd").cast("double") / col("ss").cast("double")) / lit(2.0), 6)
-        .as("rho1"))
-  }
-
-  val durbinWatsonSql: String =
-    s"""WITH comp AS (${Round11Ops.seasonalDecomposeSql.replace("ORDER BY day", "")}),
-       |lagged AS (
-       |  SELECT residual, lag(residual) OVER (ORDER BY day) AS rp FROM comp
-       |),
-       |m AS (
-       |  SELECT count(*) AS n,
-       |    sum(CAST(round(residual * residual, 12) AS DECIMAL(38,12))) AS ss,
-       |    sum(CAST(CASE WHEN rp IS NOT NULL
-       |      THEN round((residual - rp) * (residual - rp), 12) ELSE 0.0 END AS DECIMAL(38,12))) AS sd
-       |  FROM lagged
-       |)
-       |SELECT n AS n_days,
-       |  (CAST(round(CAST(sd AS DOUBLE) / CAST(ss AS DOUBLE), 6) AS DOUBLE) + 0.0) AS dw,
-       |  (CAST(round(1.0 - (CAST(sd AS DOUBLE) / CAST(ss AS DOUBLE)) / 2.0, 6) AS DOUBLE) + 0.0) AS rho1
-       |FROM m""".stripMargin
 
   /** #355 char_entropy_report — per-source character-level Shannon
     * entropy (bits/char) with the character inventory: the
@@ -3380,7 +2790,6 @@ object Round12Ops {
     exact("user_erasure_audit", userErasureAudit, userErasureAuditSql),
     exact("dp_noisy_counts", dpNoisyCounts, dpNoisyCountsSql),
     exact("wilson_ci_report", wilsonCiReport, wilsonCiReportSql),
-    exact("holt_forecast", holtForecast, holtForecastSql),
     exact("kneser_ney_bigram", kneserNeyBigram, kneserNeyBigramSql),
     exact("classifier_calibration", classifierCalibration, classifierCalibrationSql),
     exact("record_linkage", recordLinkage, recordLinkageSql),
@@ -3390,7 +2799,6 @@ object Round12Ops {
     exact("bot_detection_report", botDetectionReport, botDetectionReportSql),
     exact("embed_drift_report", embedDriftReport, embedDriftReportSql),
     exact("l_diversity_report", lDiversityReport, lDiversityReportSql),
-    exact("holt_winters_forecast", holtWintersForecast, holtWintersForecastSql),
     exact("embed_jl_projection", embedJlProjection, embedJlProjectionSql),
     exact("markov_attribution", markovAttribution, markovAttributionSql),
     exact("benford_audit", benfordAudit, benfordAuditSql),
@@ -3398,12 +2806,10 @@ object Round12Ops {
     exact("t_closeness_report", tClosenessReport, tClosenessReportSql),
     exact("rank_rbo_report", rankRboReport, rankRboReportSql),
     exact("classifier_auc", classifierAuc, classifierAucSql),
-    exact("ks_drift_test", ksDriftTest, ksDriftTestSql),
     exact("token_label_mi", tokenLabelMi, tokenLabelMiSql),
     exact("spearman_len_score", spearmanLenScore, spearmanLenScoreSql),
     exact("gain_capture_curve", gainCaptureCurve, gainCaptureCurveSql),
     exact("cramers_v_matrix", cramersVMatrix, cramersVMatrixSql),
-    exact("forecast_backtest", forecastBacktest, forecastBacktestSql),
     exact("gini_report", giniReport, giniReportSql),
     exact("isotonic_calibration", isotonicCalibration, isotonicCalibrationSql),
     exact("neyman_allocation", neymanAllocation, neymanAllocationSql),
@@ -3411,16 +2817,13 @@ object Round12Ops {
     exact("ndcg_report", ndcgReport, ndcgReportSql),
     exact("brier_decomposition", brierDecomposition, brierDecompositionSql),
     exact("hill_tail_index", hillTailIndex, hillTailIndexSql),
-    exact("mann_kendall_trend", mannKendallTrend, mannKendallTrendSql),
     exact("heaps_law_fit", heapsLawFit, heapsLawFitSql),
     exact("kappa_agreement", kappaAgreement, kappaAgreementSql),
     exact("entropy_rate", entropyRate, entropyRateSql),
     exact("cv_fold_manifest", cvFoldManifest, cvFoldManifestSql),
     exact("dedup_threshold_sweep", dedupThresholdSweep, dedupThresholdSweepSql),
-    exact("seasonal_strength", seasonalStrength, seasonalStrengthSql),
     exact("embed_outlier_report", embedOutlierReport, embedOutlierReportSql),
     exact("cold_start_coverage", coldStartCoverage, coldStartCoverageSql),
-    exact("durbin_watson", durbinWatson, durbinWatsonSql),
     exact("char_entropy_report", charEntropyReport, charEntropyReportSql),
     exact("bloom_sizing_advisor", bloomSizingAdvisor, bloomSizingAdvisorSql))
 }

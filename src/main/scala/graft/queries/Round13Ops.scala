@@ -14,6 +14,8 @@ import graft.Key.exact
   * the oracle's operation ORDER exactly, global sorts never touch
   * data-volume-sized relations. The log-rank test lives in
   * [[ExperimentOps]].
+  * Its time-series and drift keys (acf_table, pacf_table, ljung_box,
+  * variance_ratio_test and emd_drift) live in [[MonitorOps]].
   */
 object Round13Ops {
   import OracleMath._
@@ -366,77 +368,6 @@ object Round13Ops {
       |FROM counts CROSS JOIN tot
       |ORDER BY abs(z) DESC, token LIMIT 20""".stripMargin
 
-  /** #363 acf_table — the full autocorrelation function of the global
-    * daily volume series at lags 1…14: events_autocorr probes ONE
-    * hourly lag (24), THIS is the table that picks AR model order and
-    * confirms the weekly cycle (a spike at 7/14 and decay elsewhere),
-    * with the ±1.96/√n white-noise band the reading rule. ALL-INTEGER
-    * inner algebra: with scaled deviations d_t = n·x_t − S the ACF is
-    * r_L = Σ d_t·d_{t−L} / Σ d_t² — every product exact in
-    * DECIMAL(38,0) (n·x ~ N·volume overflows long), no float until
-    * the final quotient; the lag joins run on the CALENDAR-bounded
-    * dense frame against the broadcast 14-row lag axis. Exact oracle.
-    */
-  def acfTable(s: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.events(s, dir).groupBy(to_date(col("ts")).as("d")).agg(count(lit(1)).as("x"))
-    val span = daily.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
-    val dense = span.select(explode(expr("sequence(0, datediff(hi, lo))")).as("k"))
-      .join(
-        daily.crossJoin(broadcast(span))
-          .groupBy(datediff(col("d"), col("lo")).as("k")).agg(sum(col("x")).as("x0")),
-        Seq("k"), "left")
-      .select(col("k"), coalesce(col("x0"), lit(0L)).as("x"))
-    val tot = dense.agg(count(lit(1)).as("n"), sum(col("x")).as("sx"))
-    val dev = graft.Lineage.cut( // calendar-bounded, read 3x (denom + both join sides)
-      dense.crossJoin(broadcast(tot))
-        .select(col("k"), (dec0(col("n")) * dec0(col("x")) - dec0(col("sx"))).as("dv"), col("n")))
-    val denom = dev.agg(sum(col("dv") * col("dv")).as("ss"), max(col("n")).as("n"))
-    val lags = s.range(1, 15).select(col("id").cast("int").as("lag"))
-    val shifted = dev.select(col("k").as("kb"), col("dv").as("dvp"))
-    dev.crossJoin(broadcast(lags))
-      .join(shifted, col("kb") === col("k") - col("lag"))
-      .groupBy(col("lag"))
-      .agg(sum(col("dv") * col("dvp")).as("num"))
-      .crossJoin(broadcast(denom))
-      .select(col("lag"),
-        emit(col("num").cast("double") / col("ss").cast("double"), 6).as("acf"),
-        emit(lit(1.96) / sqrt(col("n").cast("double")), 6).as("white_band"))
-      .withColumn("significant", abs(col("acf")) > col("white_band"))
-      .orderBy(col("lag"))
-  }
-
-  val acfTableSql: String =
-    """WITH daily AS (SELECT CAST(ts AS DATE) AS d, count(*) AS x FROM events GROUP BY 1),
-      |span AS (SELECT min(d) AS lo, max(d) AS hi FROM daily),
-      |ks AS (SELECT unnest(generate_series(0, datediff('day', lo, hi))) AS k FROM span),
-      |cnt AS (
-      |  SELECT datediff('day', lo, d) AS k, CAST(sum(x) AS BIGINT) AS x0
-      |  FROM daily, span GROUP BY 1
-      |),
-      |dense AS (
-      |  SELECT ks.k, CAST(coalesce(cnt.x0, 0) AS BIGINT) AS x
-      |  FROM ks LEFT JOIN cnt ON ks.k = cnt.k
-      |),
-      |tot AS (SELECT count(*) AS n, CAST(sum(x) AS BIGINT) AS sx FROM dense),
-      |dev AS (
-      |  SELECT k, CAST(n AS DECIMAL(38,0)) * CAST(x AS DECIMAL(38,0))
-      |    - CAST(sx AS DECIMAL(38,0)) AS dv, n
-      |  FROM dense CROSS JOIN tot
-      |),
-      |denom AS (SELECT sum(dv * dv) AS ss, max(n) AS n FROM dev),
-      |lags AS (SELECT unnest(generate_series(1, 14)) AS lag),
-      |num AS (
-      |  SELECT lag, sum(a.dv * b.dv) AS num
-      |  FROM dev a CROSS JOIN lags JOIN dev b ON b.k = a.k - lag
-      |  GROUP BY 1
-      |)
-      |SELECT lag,
-      |  (CAST(round(CAST(num AS DOUBLE) / CAST(ss AS DOUBLE), 6) AS DOUBLE) + 0.0) AS acf,
-      |  (CAST(round(1.96 / sqrt(CAST(n AS DOUBLE)), 6) AS DOUBLE) + 0.0) AS white_band,
-      |  abs(CAST(round(CAST(num AS DOUBLE) / CAST(ss AS DOUBLE), 6) AS DOUBLE))
-      |    > (CAST(round(1.96 / sqrt(CAST(n AS DOUBLE)), 6) AS DOUBLE) + 0.0) AS significant
-      |FROM num CROSS JOIN denom ORDER BY lag""".stripMargin
-
   /** #364 ess_report — Kish effective sample size of the re-weighted
     * corpus mix: corpus_mix_weights prescribes per-source weights,
     * THIS prices what the weighting costs in statistical efficiency —
@@ -534,181 +465,6 @@ object Round13Ops {
       |  (CAST(round(CAST(count(*) AS DOUBLE) / CAST(any_value(n_users_w) AS DOUBLE), 6) AS DOUBLE) + 0.0) AS share
       |FROM lastt JOIN tot ON lastt.window_days = tot.w2
       |GROUP BY 1, 2 ORDER BY window_days, channel""".stripMargin
-
-  /** #366 emd_drift — the 1-D Wasserstein (earth-mover) distance
-    * between the first/second doc-id halves of the length
-    * distribution, per language: ks_drift_test reads the SUP norm
-    * (one bad value region), THIS reads the INTEGRAL ∫|F1−F2| dv —
-    * the metric that notices a small shift spread across the whole
-    * distribution, which KS under-weighs. Exact rational end to end:
-    * over consecutive distinct values, |F1·n2 − F2·n1|·Δv accumulates
-    * in DECIMAL(38,0) (the KS histogram + a lead over the
-    * value-domain-bounded relation), one division at the end. Exact
-    * oracle.
-    */
-  def emdDrift(s: SparkSession, dir: String): DataFrame = {
-    val wp = org.apache.spark.sql.expressions.Window
-    val d0 = Tables.documents(s, dir).select(col("doc_id"), col("lang"), col("n_chars"))
-    val span = d0.agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
-    val hist = d0.crossJoin(broadcast(span))
-      .select(col("lang"), col("n_chars"),
-        when((col("doc_id") - col("lo")) * 2 <= (col("hi") - col("lo")), 1)
-          .otherwise(2).as("half"))
-      .groupBy(col("lang"), col("n_chars"))
-      .agg(
-        sum(when(col("half") === 1, 1L).otherwise(0L)).as("c1"),
-        sum(when(col("half") === 2, 1L).otherwise(0L)).as("c2"))
-    val wcum = wp.partitionBy(col("lang")).orderBy(col("n_chars"))
-      .rowsBetween(wp.unboundedPreceding, 0)
-    val wlead = wp.partitionBy(col("lang")).orderBy(col("n_chars"))
-    val tot = hist.groupBy(col("lang"))
-      .agg(sum(col("c1")).as("n1"), sum(col("c2")).as("n2"))
-    hist
-      .withColumn("f1", sum(col("c1")).over(wcum))
-      .withColumn("f2", sum(col("c2")).over(wcum))
-      .withColumn("dv", lead(col("n_chars"), 1).over(wlead) - col("n_chars"))
-      .filter(col("dv").isNotNull)
-      .join(broadcast(tot), Seq("lang"))
-      .select(col("lang"), col("n1"), col("n2"),
-        (abs(dec0(col("f1")) * dec0(col("n2")) - dec0(col("f2")) * dec0(col("n1")))
-          * dec0(col("dv"))).as("seg"))
-      .groupBy(col("lang"), col("n1"), col("n2"))
-      .agg(sum(col("seg")).as("num"))
-      .select(col("lang"), col("n1"), col("n2"),
-        emit(col("num").cast("double")
-          / (col("n1").cast("double") * col("n2").cast("double")), 6).as("emd_chars"))
-      .orderBy(col("lang"))
-  }
-
-  val emdDriftSql: String =
-    """WITH span AS (SELECT min(doc_id) AS lo, max(doc_id) AS hi FROM documents),
-      |hist AS (
-      |  SELECT lang, n_chars,
-      |    CAST(sum(CASE WHEN (doc_id - lo) * 2 <= (hi - lo) THEN 1 ELSE 0 END) AS BIGINT) AS c1,
-      |    CAST(sum(CASE WHEN (doc_id - lo) * 2 <= (hi - lo) THEN 0 ELSE 1 END) AS BIGINT) AS c2
-      |  FROM documents CROSS JOIN span GROUP BY 1, 2
-      |),
-      |cum AS (
-      |  SELECT lang, n_chars, c1, c2,
-      |    CAST(sum(c1) OVER (PARTITION BY lang ORDER BY n_chars
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS f1,
-      |    CAST(sum(c2) OVER (PARTITION BY lang ORDER BY n_chars
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS f2,
-      |    lead(n_chars) OVER (PARTITION BY lang ORDER BY n_chars) - n_chars AS dv
-      |  FROM hist
-      |),
-      |tot AS (SELECT lang, CAST(sum(c1) AS BIGINT) AS n1, CAST(sum(c2) AS BIGINT) AS n2
-      |        FROM hist GROUP BY 1),
-      |seg AS (
-      |  SELECT cum.lang, n1, n2,
-      |    sum(abs(CAST(f1 AS DECIMAL(38,0)) * CAST(n2 AS DECIMAL(38,0))
-      |          - CAST(f2 AS DECIMAL(38,0)) * CAST(n1 AS DECIMAL(38,0)))
-      |        * CAST(dv AS DECIMAL(38,0))) AS num
-      |  FROM cum JOIN tot ON cum.lang = tot.lang
-      |  WHERE dv IS NOT NULL GROUP BY 1, 2, 3
-      |)
-      |SELECT lang, n1, n2,
-      |  (CAST(round(CAST(num AS DOUBLE) / (CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE)), 6) AS DOUBLE) + 0.0) AS emd_chars
-      |FROM seg ORDER BY lang""".stripMargin
-
-  /** #367 variance_ratio_test — Lo–MacKinlay variance ratios of the
-    * daily volume series at horizons q ∈ {2, 4, 8}: VR(q) =
-    * Var(q-day sums)/(q·Var(daily)) reads ≈1 for uncorrelated
-    * increments, >1 for trending/persistent series, <1 for
-    * mean-reverting — the aggregation-horizon diagnostic that says
-    * whether a weekly rollup hides or reveals the structure the daily
-    * monitors watch. The q-day overlapping sums are window sums over
-    * the CALENDAR-bounded dense frame; both variances accumulate from
-    * integer Σy/Σy² in DECIMAL(38,0), floats only in the final
-    * ratio. Exact oracle.
-    */
-  def varianceRatioTest(s: SparkSession, dir: String): DataFrame = {
-    val wp = org.apache.spark.sql.expressions.Window
-    val daily = Tables.events(s, dir).groupBy(to_date(col("ts")).as("d")).agg(count(lit(1)).as("x"))
-    val span = daily.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
-    val dense = span.select(explode(expr("sequence(0, datediff(hi, lo))")).as("k"))
-      .join(
-        daily.crossJoin(broadcast(span))
-          .groupBy(datediff(col("d"), col("lo")).as("k")).agg(sum(col("x")).as("x0")),
-        Seq("k"), "left")
-      .select(col("k"), coalesce(col("x0"), lit(0L)).as("x"))
-    val denseCut = graft.Lineage.cut(dense) // calendar-bounded, read 3x
-    val base = denseCut.agg(count(lit(1)).as("n"),
-      sum(dec0(col("x"))).as("s1"), sum(dec0(col("x")) * dec0(col("x"))).as("s2"))
-    def varD(n: Column, s1: Column, s2: Column): Column = {
-      val mean = s1.cast("double") / n.cast("double")
-      s2.cast("double") / n.cast("double") - mean * mean
-    }
-    val qs = s.range(0, 3).select(
-      element_at(array(lit(2), lit(4), lit(8)), (col("id") + 1).cast("int")).as("q"))
-    // rowsBetween(0, q-1) would need a per-row frame bound: express the
-    // q-sum as a self-join range instead (k ≤ k2 < k+q, bounded frame)
-    val qsums = denseCut.crossJoin(broadcast(qs))
-      .join(denseCut.select(col("k").as("k2"), col("x").as("x2")),
-        col("k2") >= col("k") && col("k2") < col("k") + col("q"))
-      .groupBy(col("q"), col("k"))
-      .agg(sum(col("x2")).as("y"), count(lit(1)).as("m"))
-      .filter(col("m") === col("q"))
-    val qm = qsums.groupBy(col("q"))
-      .agg(count(lit(1)).as("nq"),
-        sum(dec0(col("y"))).as("t1"), sum(dec0(col("y")) * dec0(col("y"))).as("t2"))
-    qm.crossJoin(broadcast(base))
-      .select(col("q"), col("nq"),
-        emit(varD(col("nq"), col("t1"), col("t2"))
-          / (col("q").cast("double") * varD(col("n"), col("s1"), col("s2"))), 6).as("vr"))
-      .withColumn("reading",
-        when(col("vr") > 1.2, "trending")
-          .when(col("vr") < 0.8, "mean_reverting").otherwise("random_walk_band"))
-      .orderBy(col("q"))
-  }
-
-  val varianceRatioTestSql: String =
-    """WITH daily AS (SELECT CAST(ts AS DATE) AS d, count(*) AS x FROM events GROUP BY 1),
-      |span AS (SELECT min(d) AS lo, max(d) AS hi FROM daily),
-      |ks AS (SELECT unnest(generate_series(0, datediff('day', lo, hi))) AS k FROM span),
-      |cnt AS (SELECT datediff('day', lo, d) AS k, CAST(sum(x) AS BIGINT) AS x0
-      |        FROM daily, span GROUP BY 1),
-      |dense AS (
-      |  SELECT ks.k, CAST(coalesce(cnt.x0, 0) AS BIGINT) AS x
-      |  FROM ks LEFT JOIN cnt ON ks.k = cnt.k
-      |),
-      |base AS (
-      |  SELECT count(*) AS n, sum(CAST(x AS DECIMAL(38,0))) AS s1,
-      |    sum(CAST(x AS DECIMAL(38,0)) * CAST(x AS DECIMAL(38,0))) AS s2
-      |  FROM dense
-      |),
-      |qs AS (SELECT unnest([2, 4, 8]) AS q),
-      |qsums AS (
-      |  SELECT q, a.k, CAST(sum(b.x) AS BIGINT) AS y, count(*) AS m
-      |  FROM dense a CROSS JOIN qs JOIN dense b ON b.k >= a.k AND b.k < a.k + q
-      |  GROUP BY 1, 2 HAVING count(*) = q
-      |),
-      |qm AS (
-      |  SELECT q, count(*) AS nq, sum(CAST(y AS DECIMAL(38,0))) AS t1,
-      |    sum(CAST(y AS DECIMAL(38,0)) * CAST(y AS DECIMAL(38,0))) AS t2
-      |  FROM qsums GROUP BY 1
-      |)
-      |SELECT q, nq,
-      |  (CAST(round(
-      |    (CAST(t2 AS DOUBLE) / CAST(nq AS DOUBLE)
-      |      - (CAST(t1 AS DOUBLE) / CAST(nq AS DOUBLE)) * (CAST(t1 AS DOUBLE) / CAST(nq AS DOUBLE)))
-      |    / (CAST(q AS DOUBLE) * (CAST(s2 AS DOUBLE) / CAST(n AS DOUBLE)
-      |      - (CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE)))),
-      |    6) AS DOUBLE) + 0.0) AS vr,
-      |  CASE WHEN CAST(round(
-      |    (CAST(t2 AS DOUBLE) / CAST(nq AS DOUBLE)
-      |      - (CAST(t1 AS DOUBLE) / CAST(nq AS DOUBLE)) * (CAST(t1 AS DOUBLE) / CAST(nq AS DOUBLE)))
-      |    / (CAST(q AS DOUBLE) * (CAST(s2 AS DOUBLE) / CAST(n AS DOUBLE)
-      |      - (CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE)))),
-      |    6) AS DOUBLE) > 1.2 THEN 'trending'
-      |    WHEN CAST(round(
-      |    (CAST(t2 AS DOUBLE) / CAST(nq AS DOUBLE)
-      |      - (CAST(t1 AS DOUBLE) / CAST(nq AS DOUBLE)) * (CAST(t1 AS DOUBLE) / CAST(nq AS DOUBLE)))
-      |    / (CAST(q AS DOUBLE) * (CAST(s2 AS DOUBLE) / CAST(n AS DOUBLE)
-      |      - (CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE)))),
-      |    6) AS DOUBLE) < 0.8 THEN 'mean_reverting'
-      |    ELSE 'random_walk_band' END AS reading
-      |FROM qm CROSS JOIN base ORDER BY q""".stripMargin
 
   /** #368 churn_hazard — the discrete-time life table of user churn
     * by tenure week: per week w the risk set, observed churns (last
@@ -978,133 +734,6 @@ object Round13Ops {
        |  abs(CAST(round($z, 4) AS DOUBLE)) > 1.96 AS significant
        |FROM wide""".stripMargin
   }
-
-  /** #372 pacf_table — the partial autocorrelation function at lags
-    * 1…14 via the Durbin–Levinson recursion, completing Box–Jenkins
-    * identification beside #363 (ACF tails ⇒ MA signature, PACF cuts
-    * off ⇒ AR order — the pair is how a forecaster picks the model
-    * the catalog's Holt family then has to beat). The inherently
-    * sequential recursion runs as a BOUNDED fold: the 14
-    * oracle-verified ACF emits collect to one array and the DL state
-    * (φ vector, innovation variance v) folds over 13 steps inside
-    * ONE aggregate HOF — no iteration state, no driver math, nothing
-    * data-sized past the ACF chain itself. Each step's φ_kk and v are
-    * 12-dp rounded so both engines' fold chains stay bit-identical
-    * (the EWMA/Holt discipline); the oracle replays the identical
-    * recursion as a recursive CTE carrying the φ LIST. Exact oracle.
-    */
-  def pacfTable(s: SparkSession, dir: String): DataFrame = {
-    val r = acfTable(s, dir)
-      .agg(sort_array(collect_list(struct(col("lag"), col("acf"), col("white_band")))).as("a"))
-      .select(expr("transform(a, x -> x.acf)").as("r"),
-        expr("element_at(transform(a, x -> x.white_band), 1)").as("wb"))
-    val folded = r.select(col("wb"), col("r"),
-      aggregate(
-        expr("sequence(2, 14)"),
-        expr("""named_struct(
-          'phis', array(element_at(r, 1)),
-          'v', round(1.0D - element_at(r, 1) * element_at(r, 1), 12),
-          'pacf', array(element_at(r, 1)))"""),
-        (acc, k) => {
-          val phis = acc.getField("phis")
-          val dot = aggregate(
-            zip_with(phis, reverse(slice(col("r"), lit(1), (k - 1).cast("int"))),
-              (a, b) => a * b),
-            lit(0.0), (a, b) => a + b)
-          val pkk = round(
-            (element_at(col("r"), k.cast("int")) - dot) / acc.getField("v"), 12)
-          val newPhis = concat(
-            zip_with(phis, reverse(phis), (p, q) => p - pkk * q),
-            array(pkk))
-          struct(
-            newPhis.as("phis"),
-            round(acc.getField("v") * (lit(1.0) - pkk * pkk), 12).as("v"),
-            concat(acc.getField("pacf"), array(pkk)).as("pacf"))
-        }).getField("pacf").as("pacf"))
-    folded
-      .select(col("wb"), posexplode(col("pacf")).as(Seq("pos", "p")))
-      .select((col("pos") + 1).as("lag"), emit(col("p"), 6).as("pacf"),
-        emit(col("wb"), 6).as("white_band"))
-      .withColumn("significant", abs(col("pacf")) > col("white_band"))
-      .orderBy(col("lag"))
-  }
-
-  val pacfTableSql: String =
-    s"""WITH RECURSIVE acf0 AS (${acfTableSql.replace("ORDER BY lag", "")}),
-       |rl AS (
-       |  SELECT list(acf ORDER BY lag) AS r, any_value(white_band) AS wb FROM acf0
-       |),
-       |dl AS (
-       |  SELECT 1 AS k, [r[1]] AS phis,
-       |    round(1.0 - r[1] * r[1], 12) AS v, [r[1]] AS pacf, r, wb
-       |  FROM rl
-       |  UNION ALL
-       |  SELECT k + 1,
-       |    list_append(
-       |      list_transform(list_zip(phis, list_reverse(phis)),
-       |        x -> x[1] - round((r[k + 1] - list_dot_product(phis,
-       |          list_reverse(r[1:k]))) / v, 12) * x[2]),
-       |      round((r[k + 1] - list_dot_product(phis, list_reverse(r[1:k]))) / v, 12)),
-       |    round(v * (1.0 - round((r[k + 1] - list_dot_product(phis,
-       |      list_reverse(r[1:k]))) / v, 12)
-       |      * round((r[k + 1] - list_dot_product(phis, list_reverse(r[1:k]))) / v, 12)), 12),
-       |    list_append(pacf,
-       |      round((r[k + 1] - list_dot_product(phis, list_reverse(r[1:k]))) / v, 12)),
-       |    r, wb
-       |  FROM dl WHERE k < 14
-       |),
-       |fin AS (SELECT pacf, wb FROM dl WHERE k = 14)
-       |SELECT u.i AS lag,
-       |  (CAST(round(u.p, 6) AS DOUBLE) + 0.0) AS pacf,
-       |  (CAST(round(wb, 6) AS DOUBLE) + 0.0) AS white_band,
-       |  abs(CAST(round(u.p, 6) AS DOUBLE)) > (CAST(round(wb, 6) AS DOUBLE) + 0.0) AS significant
-       |FROM fin, LATERAL (
-       |  SELECT unnest(pacf) AS p, unnest(generate_series(1, len(pacf))) AS i
-       |) u
-       |ORDER BY lag""".stripMargin
-
-  /** #373 ljung_box — the Ljung–Box portmanteau test over the first
-    * 14 autocorrelations: Q = n(n+2)·Σ r_k²/(n−k) against the χ²₁₄
-    * 5% cut — durbin_watson asks "is lag-1 clean", THIS asks "are ALL
-    * the lags jointly clean", the standard residual-whiteness gate a
-    * forecasting pipeline runs before trusting any model comparison.
-    * Chains on the oracle-verified ACF emits (the rank_rbo rule); the
-    * Q terms are 12-dp rounded into an order-free DECIMAL sum over
-    * the bounded 14-row table; n re-derives in-plan from the dense
-    * calendar (never decoded from a rounded column). Exact oracle.
-    */
-  def ljungBox(s: SparkSession, dir: String): DataFrame = {
-    val acf = acfTable(s, dir).select(col("lag"), col("acf"))
-    val n = Tables.events(s, dir)
-      .agg((datediff(max(to_date(col("ts"))), min(to_date(col("ts")))) + 1).as("n"))
-    val term = round(col("acf") * col("acf")
-      / (col("n") - col("lag")).cast("double"), 12)
-    acf.crossJoin(broadcast(n))
-      .select(col("n"), term.cast(Dec12).as("t"))
-      .groupBy(col("n")).agg(sum(col("t")).as("st"))
-      .select(col("n").as("n_days"),
-        emit(col("n").cast("double") * (col("n").cast("double") + lit(2.0))
-          * col("st").cast("double"), 4).as("q_stat"),
-        lit(23.685).as("chi2_cut_5pct"))
-      .withColumn("reject_whiteness", col("q_stat") > col("chi2_cut_5pct"))
-  }
-
-  val ljungBoxSql: String =
-    s"""WITH acf0 AS (${acfTableSql.replace("ORDER BY lag", "")}),
-       |nn AS (
-       |  SELECT datediff('day', min(CAST(ts AS DATE)), max(CAST(ts AS DATE))) + 1 AS n
-       |  FROM events
-       |),
-       |terms AS (
-       |  SELECT n,
-       |    sum(CAST(round(acf * acf / CAST(n - lag AS DOUBLE), 12) AS DECIMAL(38,12))) AS st
-       |  FROM acf0 CROSS JOIN nn GROUP BY 1
-       |)
-       |SELECT n AS n_days,
-       |  (CAST(round(CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) + 2.0) * CAST(st AS DOUBLE), 4) AS DOUBLE) + 0.0) AS q_stat,
-       |  23.685 AS chi2_cut_5pct,
-       |  CAST(round(CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) + 2.0) * CAST(st AS DOUBLE), 4) AS DOUBLE) > 23.685 AS reject_whiteness
-       |FROM terms""".stripMargin
 
   /** #374 anova_length — one-way ANOVA of document length across the
     * five languages (F, η², with the df1=4 large-N 5% cut 2.372
@@ -1469,15 +1098,10 @@ object Round13Ops {
     exact("kruskal_wallis", kruskalWallis, kruskalWallisSql),
     exact("mann_whitney_test", mannWhitneyTest, mannWhitneyTestSql),
     exact("dedup_editdist", dedupEditdist, dedupEditdistSql),
-    exact("acf_table", acfTable, acfTableSql),
     exact("ess_report", essReport, essReportSql),
     exact("attribution_window_sweep", attributionWindowSweep, attributionWindowSweepSql),
-    exact("pacf_table", pacfTable, pacfTableSql),
-    exact("ljung_box", ljungBox, ljungBoxSql),
     exact("anova_length", anovaLength, anovaLengthSql),
     exact("k_anonymity_sweep", kAnonymitySweep, kAnonymitySweepSql),
-    exact("emd_drift", emdDrift, emdDriftSql),
-    exact("variance_ratio_test", varianceRatioTest, varianceRatioTestSql),
     exact("churn_hazard", churnHazard, churnHazardSql),
     exact("session_gap_sensitivity", sessionGapSensitivity, sessionGapSensitivitySql),
     exact("pii_density_report", piiDensityReport, piiDensityReportSql),

@@ -19,6 +19,8 @@ import graft.Key.exact
   * DECIMAL(38,0) cross-products), per-row float chains mirror the
   * oracle's operation order, rankings sort on ROUNDED measures with
   * unique tie-breaks, bounded outputs.
+  * Its time-series and drift keys (granger_daily) live in
+  * [[MonitorOps]].
   */
 object Round14Ops {
   import OracleMath._
@@ -89,155 +91,6 @@ object Round14Ops {
       |CROSS JOIN n
       |WHERE c >= 5
       |ORDER BY pmi DESC, counts.w1, counts.w2 LIMIT 50""".stripMargin
-
-  /** #378 granger_daily — one-lag Granger-causality screen between
-    * the view and purchase daily-count series, BOTH directions: does
-    * yesterday's x improve today's y beyond y's own yesterday? F =
-    * (SSR_restricted − SSR_unrestricted)·(n−3) / SSR_unrestricted for
-    * the nested OLS pair y_t ~ y_{t−1} [+ x_{t−1}], solved in CLOSED
-    * FORM from the centered moment matrix (2×2 normal equations by
-    * determinant) — no iteration, no solver. Every moment is an exact
-    * integer (daily counts and their cross-products, DECIMAL(38,0)
-    * sums over the zero-filled day grid), so both engines derive the
-    * identical doubles. Scale: the only data-sized work is the daily
-    * count; everything after lives on the |days|-bounded grid. The
-    * cutoff column is the 5% F(1, 60) point — honest at these day
-    * counts (n−3 ≈ 27–360); readers with other horizons read f_stat.
-    * Exact oracle.
-    */
-  def grangerDaily(s: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.events(s, dir)
-      .filter(col("event_type").isin("view", "purchase"))
-      .groupBy(to_date(col("ts")).as("d"), col("event_type"))
-      .agg(count(lit(1)).as("x"))
-    val span = daily.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
-    val grid = span.select(explode(expr("sequence(0, datediff(hi, lo))")).as("k"))
-      .crossJoin(broadcast(span))
-    def series(t: String) = grid
-      .join(
-        daily.filter(col("event_type") === t)
-          .crossJoin(broadcast(span))
-          .select(datediff(col("d"), col("lo")).as("k"), col("x")),
-        Seq("k"), "left")
-      .select(col("k"), coalesce(col("x"), lit(0L)).as(t))
-    val aligned = series("view").join(series("purchase"), Seq("k"))
-    val w = org.apache.spark.sql.expressions.Window.orderBy(col("k"))
-    // the |days|-bounded lagged grid feeds both direction aggregates:
-    // cut it so the daily count and calendar join run once
-    val lagged = graft.Lineage.cut(aligned
-      .withColumn("vl", lag(col("view"), 1).over(w))
-      .withColumn("pl", lag(col("purchase"), 1).over(w))
-      .filter(col("vl").isNotNull))
-    def dir0(name: String, y: String, yl: String, xl: String) = {
-      def d0(c: org.apache.spark.sql.Column) = sum(c.cast("decimal(38,0)"))
-      lagged.agg(
-        count(lit(1)).as("n"),
-        d0(col(y)).as("sy"), d0(col(yl)).as("syl"), d0(col(xl)).as("sxl"),
-        d0(col(y) * col(y)).as("syy"),
-        d0(col(y) * col(yl)).as("syyl"),
-        d0(col(y) * col(xl)).as("syxl"),
-        d0(col(yl) * col(yl)).as("sylyl"),
-        d0(col(yl) * col(xl)).as("sylxl"),
-        d0(col(xl) * col(xl)).as("sxlxl"))
-        .select(lit(name).as("direction"), col("n"),
-          col("sy").cast("double").as("sy"), col("syl").cast("double").as("syl"),
-          col("sxl").cast("double").as("sxl"), col("syy").cast("double").as("syy"),
-          col("syyl").cast("double").as("syyl"), col("syxl").cast("double").as("syxl"),
-          col("sylyl").cast("double").as("sylyl"), col("sylxl").cast("double").as("sylxl"),
-          col("sxlxl").cast("double").as("sxlxl"))
-    }
-    val m = dir0("view_to_purchase", "purchase", "pl", "vl")
-      .unionByName(dir0("purchase_to_view", "view", "vl", "pl"))
-    val nD = col("n").cast("double")
-    val cyy = col("syy") - col("sy") * col("sy") / nD
-    val cyyl = col("syyl") - col("sy") * col("syl") / nD
-    val cyxl = col("syxl") - col("sy") * col("sxl") / nD
-    val cylyl = col("sylyl") - col("syl") * col("syl") / nD
-    val cylxl = col("sylxl") - col("syl") * col("sxl") / nD
-    val cxlxl = col("sxlxl") - col("sxl") * col("sxl") / nD
-    val ssrR = cyy - cyyl * cyyl / cylyl
-    val det = cylyl * cxlxl - cylxl * cylxl
-    val b = (cyyl * cxlxl - cyxl * cylxl) / det
-    val c = (cyxl * cylyl - cyyl * cylxl) / det
-    val ssrU = cyy - b * cyyl - c * cyxl
-    val f = (ssrR - ssrU) * (nD - lit(3.0)) / ssrU
-    m.select(
-      col("direction"), col("n"),
-      emit(ssrR, 6).as("ssr_restricted"),
-      emit(ssrU, 6).as("ssr_unrestricted"),
-      emit(f, 4).as("f_stat"),
-      lit(4.0).as("f_cut_5pct_df1_60"),
-      (round(f, 4).cast("double") > 4.0).as("lagged_signal"))
-      .orderBy(col("direction"))
-  }
-
-  val grangerDailySql: String = {
-    def side(name: String, y: String, yl: String, xl: String) =
-      s"""SELECT '$name' AS direction, count(*) AS n,
-         |  CAST(sum(CAST($y AS DECIMAL(38,0))) AS DOUBLE) AS sy,
-         |  CAST(sum(CAST($yl AS DECIMAL(38,0))) AS DOUBLE) AS syl,
-         |  CAST(sum(CAST($xl AS DECIMAL(38,0))) AS DOUBLE) AS sxl,
-         |  CAST(sum(CAST($y * $y AS DECIMAL(38,0))) AS DOUBLE) AS syy,
-         |  CAST(sum(CAST($y * $yl AS DECIMAL(38,0))) AS DOUBLE) AS syyl,
-         |  CAST(sum(CAST($y * $xl AS DECIMAL(38,0))) AS DOUBLE) AS syxl,
-         |  CAST(sum(CAST($yl * $yl AS DECIMAL(38,0))) AS DOUBLE) AS sylyl,
-         |  CAST(sum(CAST($yl * $xl AS DECIMAL(38,0))) AS DOUBLE) AS sylxl,
-         |  CAST(sum(CAST($xl * $xl AS DECIMAL(38,0))) AS DOUBLE) AS sxlxl
-         |FROM lagged""".stripMargin
-    """WITH ev AS (
-      |  SELECT CAST(ts AS DATE) AS d, event_type FROM events
-      |  WHERE event_type IN ('view', 'purchase')
-      |), span AS (SELECT min(d) AS lo, max(d) AS hi FROM ev),
-      |grid AS (
-      |  SELECT unnest(generate_series(0, datediff('day', lo, hi))) AS k FROM span
-      |), daily AS (
-      |  SELECT datediff('day', lo, d) AS k, event_type, count(*) AS x
-      |  FROM ev, span GROUP BY 1, 2
-      |), aligned AS (
-      |  SELECT g.k,
-      |    coalesce(v.x, 0) AS view, coalesce(p.x, 0) AS purchase
-      |  FROM grid g
-      |  LEFT JOIN daily v ON v.k = g.k AND v.event_type = 'view'
-      |  LEFT JOIN daily p ON p.k = g.k AND p.event_type = 'purchase'
-      |), lagged AS (
-      |  SELECT view, purchase,
-      |    lag(view) OVER (ORDER BY k) AS vl,
-      |    lag(purchase) OVER (ORDER BY k) AS pl
-      |  FROM aligned QUALIFY vl IS NOT NULL
-      |), m AS (
-      |""".stripMargin +
-      side("view_to_purchase", "purchase", "pl", "vl") +
-      "\n  UNION ALL\n" +
-      side("purchase_to_view", "view", "vl", "pl") +
-      """
-        |), f AS (
-        |  SELECT direction, n,
-        |    syy - sy * sy / n AS cyy,
-        |    syyl - sy * syl / n AS cyyl,
-        |    syxl - sy * sxl / n AS cyxl,
-        |    sylyl - syl * syl / n AS cylyl,
-        |    sylxl - syl * sxl / n AS cylxl,
-        |    sxlxl - sxl * sxl / n AS cxlxl
-        |  FROM m
-        |), sol AS (
-        |  SELECT direction, n, cyy, cyyl, cyxl, cylyl,
-        |    cyy - cyyl * cyyl / cylyl AS ssr_r,
-        |    (cyyl * cxlxl - cyxl * cylxl) / (cylyl * cxlxl - cylxl * cylxl) AS b,
-        |    (cyxl * cylyl - cyyl * cylxl) / (cylyl * cxlxl - cylxl * cylxl) AS c
-        |  FROM f
-        |), ssr AS (
-        |  SELECT direction, n, ssr_r,
-        |    cyy - b * cyyl - c * cyxl AS ssr_u
-        |  FROM sol
-        |)
-        |SELECT direction, n,
-        |  (CAST(round(ssr_r, 6) AS DOUBLE) + 0.0) AS ssr_restricted,
-        |  (CAST(round(ssr_u, 6) AS DOUBLE) + 0.0) AS ssr_unrestricted,
-        |  (CAST(round((ssr_r - ssr_u) * (n - 3.0) / ssr_u, 4) AS DOUBLE) + 0.0) AS f_stat,
-        |  CAST(4.0 AS DOUBLE) AS f_cut_5pct_df1_60,
-        |  CAST(round((ssr_r - ssr_u) * (n - 3.0) / ssr_u, 4) AS DOUBLE) > 4.0 AS lagged_signal
-        |FROM ssr ORDER BY direction""".stripMargin
-  }
 
   /** #379 embed_pca_power — the leading principal component of the
     * embedding covariance (the DIRECTION behind embed_drift_report's
@@ -495,6 +348,5 @@ object Round14Ops {
     exact("contamination_gram_sweep", contaminationGramSweep, contaminationGramSweepSql),
     exact("packing_budget_sweep", packingBudgetSweep, packingBudgetSweepSql),
     exact("bigram_pmi", bigramPmi, bigramPmiSql),
-    exact("granger_daily", grangerDaily, grangerDailySql),
     exact("embed_pca_power", embedPcaPower, embedPcaPowerSql))
 }

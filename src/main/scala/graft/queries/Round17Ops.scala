@@ -24,6 +24,8 @@ import graft.Key.exact
   * order-free DECIMAL(38,12) sums, emits via OracleMath.emit,
   * bounded outputs, unique sort keys. The delta-method ratio-metric
   * CI lives in [[ExperimentOps]].
+  * Its time-series and drift keys (page_hinkley) live in
+  * [[MonitorOps]].
   */
 object Round17Ops {
   import OracleMath._
@@ -221,79 +223,6 @@ object Round17Ops {
        |  kappa
        |FROM g""".stripMargin
 
-  /** #397 page_hinkley — the sequential drift alarm over the daily
-    * event count: relative deviation dev_t = c_t/m_t − 1 against the
-    * RUNNING mean m_t (exact cum/count division — the sequential
-    * element CUSUM's fixed global mean lacks; cusum_changepoint #269
-    * is the retrospective twin), accumulated as U_t with the
-    * classical alarm PH_t = U_t − min_{j≤t}U_j > λ (λ=5: five
-    * cumulative relative units of sustained upward drift). Every
-    * U_t is a cumsum of 12-dp-rounded terms in DECIMAL(38,12) — the
-    * running min and the alarm compare EXACT decimals, so the alarm
-    * day set is bit-identical across engines. Scale: one daily
-    * rollup; the unpartitioned window runs over the bounded
-    * calendar grid (the documented bounded-frame pattern). Exact
-    * oracle.
-    */
-  def pageHinkley(s: SparkSession, dir: String): DataFrame =
-    pageHinkleyFromDaily(Tables.events(s, dir)
-      .groupBy(to_date(col("ts")).as("d"))
-      .agg(count(lit(1)).as("c")))
-
-  /** The Page–Hinkley arithmetic over an already-aggregated (d, c)
-    * daily-count relation — shared verbatim by the streaming twin
-    * (graft.streaming.Streams.phFromCounts serves the drained live
-    * state through THIS function, so stream ≡ batch is an identity).
-    */
-  def pageHinkleyFromDaily(daily: DataFrame): DataFrame = {
-    val wOrd = Window.orderBy(col("d"))
-    val wCum = wOrd.rowsBetween(Window.unboundedPreceding, 0)
-    val withMean = daily
-      .withColumn("t", row_number().over(wOrd))
-      .withColumn("cum", sum(col("c")).over(wCum))
-      .withColumn("m", col("cum").cast("double") / col("t").cast("double"))
-      .withColumn("dev",
-        round(col("c").cast("double") / col("m") - lit(1.0), 12).cast(Dec12))
-    withMean
-      .withColumn("u", sum(col("dev")).over(wCum))
-      .withColumn("minu", min(col("u")).over(wCum))
-      .select(
-        date_format(col("d"), "yyyy-MM-dd").as("day"),
-        col("c").as("n_events"),
-        emit(col("m"), 4).as("mean_so_far"),
-        emit((col("u") - col("minu")).cast("double"), 6).as("ph"),
-        ((col("u") - col("minu")).cast("double") > lit(5.0)).as("alarm"))
-      .orderBy(col("day"))
-  }
-
-  val pageHinkleySql: String =
-    """WITH daily AS (
-      |  SELECT CAST(ts AS DATE) AS d, count(*) AS c FROM events GROUP BY 1
-      |), wm AS (
-      |  SELECT d, c,
-      |    row_number() OVER (ORDER BY d) AS t,
-      |    CAST(sum(c) OVER (ORDER BY d ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
-      |  FROM daily
-      |), dv AS (
-      |  SELECT d, c, cum,
-      |    CAST(cum AS DOUBLE) / CAST(t AS DOUBLE) AS m,
-      |    CAST(round(CAST(c AS DOUBLE) / (CAST(cum AS DOUBLE) / CAST(t AS DOUBLE)) - 1.0, 12) AS DECIMAL(38,12)) AS dev
-      |  FROM wm
-      |), u AS (
-      |  SELECT d, c, m,
-      |    sum(dev) OVER (ORDER BY d ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS uu
-      |  FROM dv
-      |), ph AS (
-      |  SELECT d, c, m, uu,
-      |    min(uu) OVER (ORDER BY d ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS minu
-      |  FROM u
-      |)
-      |SELECT strftime(d, '%Y-%m-%d') AS day, c AS n_events,
-      |  (CAST(round(m, 4) AS DOUBLE) + 0.0) AS mean_so_far,
-      |  (CAST(round(CAST(uu - minu AS DOUBLE), 6) AS DOUBLE) + 0.0) AS ph,
-      |  CAST(uu - minu AS DOUBLE) > 5.0 AS alarm
-      |FROM ph ORDER BY day""".stripMargin
-
   /** #398 label_separation — cluster-validity indexes of the GIVEN
     * labels against the embedding geometry: Calinski–Harabasz
     * (B/(k−1))/(W/(N−k)) and Davies–Bouldin mean-of-worst
@@ -431,6 +360,5 @@ object Round17Ops {
     exact("cochran_armitage", cochranArmitage, cochranArmitageSql),
     exact("ctfidf_terms", ctfidfTerms, ctfidfTermsSql),
     exact("krippendorff_alpha", krippendorffAlpha, krippendorffAlphaSql),
-    exact("page_hinkley", pageHinkley, pageHinkleySql),
     exact("label_separation", labelSeparation, labelSeparationSql))
 }

@@ -26,6 +26,8 @@ import graft.Key.exact
   * mirrored token for token, emits via OracleMath.emit with the §6 #5
   * decimal recovery on every oracle ratio emit, bounded outputs,
   * unique sort keys.
+  * Its time-series and drift keys (gumbel_return_levels) live in
+  * [[MonitorOps]].
   */
 object Round20Ops {
   import OracleMath._
@@ -145,85 +147,6 @@ object Round20Ops {
       |  (CAST(round(CAST(CAST(TX AS DOUBLE) * CAST(TY AS DOUBLE) / (CAST(TX AS DOUBLE) + CAST(TY AS DOUBLE))
       |    * (2.0 * a - b - c0) AS DECIMAL(28,14)), 4) AS DOUBLE) + 0.0) AS stat
       |FROM f""".stripMargin
-
-  /** #412 gumbel_return_levels — extreme-value capacity planning:
-    * weekly block maxima of the daily event count, the Gumbel
-    * method-of-moments fit (β̂ = s√6/π, μ̂ = m̄ − γβ̂), and the
-    * T-week return levels μ − β·ln(−ln(1−1/T)) for T ∈ {4, 13, 52}
-    * — the peak a capacity plan should size for per month / quarter /
-    * year. concurrency_peak (#23) reports the OBSERVED maximum; this
-    * extrapolates the distribution of maxima (Fisher–Tippett: block
-    * maxima are Gumbel-ish for light-tailed dailies). Block moments
-    * are exact integers (maxima of counts); the fit and levels are
-    * one IEEE chain mirrored token for token. Scale: one daily
-    * aggregate, one weekly max, a |weeks|-row moment reduce, 3
-    * output rows. Exact oracle.
-    */
-  def gumbelReturnLevels(s: SparkSession, dir: String): DataFrame =
-    gumbelFromDaily(Tables.events(s, dir)
-      .groupBy(to_date(col("ts")).as("d"))
-      .agg(count(lit(1)).as("c")))
-
-  /** The Gumbel fit over an already-aggregated (d, c) daily-count
-    * relation — shared verbatim by the streaming twin
-    * (graft.streaming.Streams.gumbelFromCounts serves the drained
-    * live state through THIS function: stream ≡ batch by identity).
-    */
-  def gumbelFromDaily(daily: DataFrame): DataFrame = {
-    val weekly = daily
-      .groupBy(date_format(date_trunc("week", col("d")), "yyyy-MM-dd").as("wk"))
-      .agg(max(col("c")).as("mx"))
-    val mom = weekly.agg(
-      count(lit(1)).as("k"),
-      sum(dec0(col("mx"))).as("s1"),
-      sum(dec0(col("mx")) * dec0(col("mx"))).as("s2"))
-    def d(c: String) = col(c).cast("double")
-    val mean = d("s1") / d("k")
-    val vr = (d("s2") - d("s1") * (d("s1") / d("k"))) / (d("k") - 1.0)
-    val beta = sqrt(vr) * sqrt(lit(6.0)) / lit(math.Pi)
-    val mu = mean - lit(0.5772156649015329) * beta
-    val fitted = mom.select(col("k"), mean.as("m"), beta.as("beta"), mu.as("mu"))
-    fitted
-      .select(col("k"), col("m"), col("beta"), col("mu"),
-        explode(array(lit(4), lit(13), lit(52))).as("t_weeks"))
-      .select(
-        col("t_weeks"), col("k").as("n_weeks"),
-        emit(col("m"), 4).as("mean_weekly_max"),
-        emit(col("beta"), 4).as("beta"),
-        emit(col("mu"), 4).as("mu"),
-        emit(col("mu") - col("beta") *
-          log(-log(lit(1.0) - lit(1.0) / col("t_weeks").cast("double"))), 4)
-          .as("return_level"))
-      .orderBy(col("t_weeks"))
-  }
-
-  val gumbelReturnLevelsSql: String =
-    """WITH daily AS (
-      |  SELECT CAST(ts AS DATE) AS d, count(*) AS c FROM events GROUP BY 1
-      |), weekly AS (
-      |  SELECT strftime(date_trunc('week', d), '%Y-%m-%d') AS wk, max(c) AS mx
-      |  FROM daily GROUP BY 1
-      |), mom AS (
-      |  SELECT count(*) AS k,
-      |    sum(CAST(mx AS DECIMAL(38,0))) AS s1,
-      |    sum(CAST(mx AS DECIMAL(38,0)) * CAST(mx AS DECIMAL(38,0))) AS s2
-      |  FROM weekly
-      |), fit AS (
-      |  SELECT k,
-      |    CAST(s1 AS DOUBLE) / CAST(k AS DOUBLE) AS m,
-      |    sqrt((CAST(s2 AS DOUBLE) - CAST(s1 AS DOUBLE) * (CAST(s1 AS DOUBLE) / CAST(k AS DOUBLE)))
-      |      / (CAST(k AS DOUBLE) - 1.0)) * sqrt(6.0) / pi() AS beta
-      |  FROM mom
-      |), f2 AS (
-      |  SELECT k, m, beta, m - 0.5772156649015329 * beta AS mu FROM fit
-      |)
-      |SELECT t_weeks, k AS n_weeks,
-      |  (CAST(round(CAST(m AS DECIMAL(28,14)), 4) AS DOUBLE) + 0.0) AS mean_weekly_max,
-      |  (CAST(round(CAST(beta AS DECIMAL(28,14)), 4) AS DOUBLE) + 0.0) AS beta,
-      |  (CAST(round(CAST(mu AS DECIMAL(28,14)), 4) AS DOUBLE) + 0.0) AS mu,
-      |  (CAST(round(CAST(mu - beta * ln(-ln(1.0 - 1.0 / CAST(t_weeks AS DOUBLE))) AS DECIMAL(28,14)), 4) AS DOUBLE) + 0.0) AS return_level
-      |FROM f2 CROSS JOIN (SELECT unnest([4, 13, 52]) AS t_weeks)
-      |ORDER BY t_weeks""".stripMargin
 
   /** #413 yuen_trimmed_t — Yuen's 20%-trimmed-mean two-sample t (EN vs
     * non-EN document length): trimmed means compared with winsorized
@@ -428,7 +351,6 @@ object Round20Ops {
 
   val keys: Seq[Key] = Seq(
     exact("energy_distance", energyDistance, energyDistanceSql),
-    exact("gumbel_return_levels", gumbelReturnLevels, gumbelReturnLevelsSql),
     exact("yuen_trimmed_t", yuenTrimmedT, yuenTrimmedTSql),
     exact("js_divergence_sources", jsDivergenceSources, jsDivergenceSourcesSql))
 }

@@ -23,117 +23,11 @@ import graft.Key.exact
   * DECIMAL(38,12) sums otherwise, mirrored double chains, emits via
   * OracleMath.emit with §6 #5 recovery on oracle ratio emits, bounded
   * outputs, unique sort keys.
+  * Its time-series and drift keys (binary_segmentation) live in
+  * [[MonitorOps]].
   */
 object Round24Ops {
   import OracleMath._
-
-  /** #424 binary_segmentation — two-level changepoint detection on
-    * the densified global daily event count: the root changepoint is
-    * the deterministic argmax of the SCALED integer cusum
-    * |n·Σ_{≤d}c − d_rank·total| (the #269 device — exact longs, no
-    * float frontier), then the same statistic re-runs INSIDE each
-    * half, yielding up to three breaks with each segment's mean
-    * level. Binary segmentation is the classical multi-changepoint
-    * baseline (Scott & Knott); one break is rarely the whole story
-    * and the second-level scan costs one more bounded-calendar
-    * window. All cusums exact integers; means exact ratios. Exact
-    * oracle (the recursion unrolled as two mirrored CTE levels).
-    */
-  def binarySegmentation(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(s, dir).select(to_date(col("ts")).as("d"))
-    val span = ev.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
-    val calendar = span
-      .select(explode(expr("sequence(lo, hi)")).as("d"))
-    val daily = ev.groupBy(col("d")).agg(count(lit(1)).as("c"))
-    val dense = graft.Lineage.cut(calendar.join(daily, Seq("d"), "left")
-      .select(col("d"), coalesce(col("c"), lit(0L)).as("c")))
-    // one scan level: scaled cusum + argmax day inside a segment
-    def level(df: DataFrame, segCol: Column): DataFrame = {
-      val seg = df.withColumn("seg", segCol)
-      val stats = seg.groupBy(col("seg"))
-        .agg(count(lit(1)).as("n"), sum(col("c")).as("tot"))
-      val wCum = Window.partitionBy(col("seg")).orderBy(col("d"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-      val wPick = Window.partitionBy(col("seg"))
-        .orderBy(abs(col("s")).desc, col("d"))
-      seg.join(broadcast(stats), Seq("seg"))
-        .withColumn("cum", sum(col("c")).over(wCum))
-        .withColumn("k", count(lit(1)).over(wCum))
-        .withColumn("s", col("n") * col("cum") - col("k") * col("tot"))
-        .withColumn("rn", row_number().over(wPick))
-    }
-    val root = level(dense, lit("root"))
-    val cp1 = root.filter(col("rn") === 1)
-      .select(col("d").as("cp1"), abs(col("s")).as("stat1"),
-        col("n").as("n1"), col("cum").as("cumL"), col("k").as("kL"),
-        col("tot").as("totAll"))
-    val second = level(
-      dense.crossJoin(broadcast(cp1.select(col("cp1")))),
-      when(col("d") <= col("cp1"), "1_left").otherwise("2_right"))
-    val picks = second.filter(col("rn") === 1)
-      .select(col("seg").as("segment"), col("d").as("cp_day0"),
-        abs(col("s")).as("stat"), col("n").as("n_days"),
-        col("cum").as("cum"), col("k").as("k"), col("tot").as("tot"))
-      .unionByName(cp1.select(lit("0_root").as("segment"), col("cp1").as("cp_day0"),
-        col("stat1").as("stat"), col("n1").as("n_days"),
-        col("cumL").as("cum"), col("kL").as("k"), col("totAll").as("tot")))
-    picks.select(
-      col("segment"),
-      date_format(col("cp_day0"), "yyyy-MM-dd").as("cp_day"),
-      col("stat").as("max_abs_cusum"), col("n_days"),
-      emit(col("cum").cast("double") / col("k").cast("double"), 4).as("mean_before"),
-      emit((col("tot") - col("cum")).cast("double") /
-        (col("n_days") - col("k")).cast("double"), 4).as("mean_after"))
-      .orderBy(col("segment"))
-  }
-
-  val binarySegmentationSql: String =
-    """WITH span AS (SELECT min(CAST(ts AS DATE)) AS lo, max(CAST(ts AS DATE)) AS hi FROM events),
-      |calendar AS (SELECT unnest(generate_series(lo, hi, INTERVAL 1 DAY))::DATE AS d FROM span),
-      |daily AS (SELECT CAST(ts AS DATE) AS d, count(*) AS c FROM events GROUP BY 1),
-      |dense AS (
-      |  SELECT calendar.d, coalesce(c, 0) AS c
-      |  FROM calendar LEFT JOIN daily ON calendar.d = daily.d
-      |), root0 AS (
-      |  SELECT d, c,
-      |    CAST(sum(c) OVER (ORDER BY d) AS BIGINT) AS cum,
-      |    CAST(count(*) OVER (ORDER BY d) AS BIGINT) AS k,
-      |    (SELECT count(*) FROM dense) AS n,
-      |    (SELECT CAST(sum(c) AS BIGINT) FROM dense) AS tot
-      |  FROM dense
-      |), root1 AS (
-      |  SELECT d, cum, k, n, tot, n * cum - k * tot AS s,
-      |    row_number() OVER (ORDER BY abs(n * cum - k * tot) DESC, d) AS rn
-      |  FROM root0
-      |), cp1 AS (SELECT d AS cp1, abs(s) AS stat1, n AS n1, cum AS cuml, k AS kl, tot AS totall
-      |  FROM root1 WHERE rn = 1),
-      |seg0 AS (
-      |  SELECT dense.d, c, CASE WHEN dense.d <= cp1 THEN '1_left' ELSE '2_right' END AS seg
-      |  FROM dense CROSS JOIN cp1
-      |), segstats AS (
-      |  SELECT seg, count(*) AS n, CAST(sum(c) AS BIGINT) AS tot FROM seg0 GROUP BY 1
-      |), seg1 AS (
-      |  SELECT seg0.seg, d,
-      |    CAST(sum(c) OVER (PARTITION BY seg0.seg ORDER BY d) AS BIGINT) AS cum,
-      |    CAST(count(*) OVER (PARTITION BY seg0.seg ORDER BY d) AS BIGINT) AS k,
-      |    n, tot
-      |  FROM seg0 JOIN segstats ON seg0.seg = segstats.seg
-      |), seg2 AS (
-      |  SELECT seg, d, cum, k, n, tot, n * cum - k * tot AS s,
-      |    row_number() OVER (PARTITION BY seg ORDER BY abs(n * cum - k * tot) DESC, d) AS rn
-      |  FROM seg1
-      |), picks AS (
-      |  SELECT seg AS segment, d AS cp_day0, abs(s) AS stat, n AS n_days, cum, k, tot
-      |  FROM seg2 WHERE rn = 1
-      |  UNION ALL
-      |  SELECT '0_root', cp1, stat1, n1, cuml, kl, totall FROM cp1
-      |)
-      |SELECT segment, strftime(cp_day0, '%Y-%m-%d') AS cp_day,
-      |  CAST(stat AS BIGINT) AS max_abs_cusum, n_days,
-      |  (CAST(round(CAST(CAST(cum AS DOUBLE) / CAST(k AS DOUBLE) AS DECIMAL(28,14)), 4) AS DOUBLE) + 0.0) AS mean_before,
-      |  (CAST(round(CAST(CAST(tot - cum AS DOUBLE) / CAST(n_days - k AS DOUBLE) AS DECIMAL(28,14)), 4) AS DOUBLE) + 0.0) AS mean_after
-      |FROM picks
-      |ORDER BY segment""".stripMargin
 
   /** #425 funnel_latency — HOW LONG each funnel transition takes: the
     * funnel_sessions (#245) sessionize-and-conditional-min chain
@@ -321,7 +215,6 @@ object Round24Ops {
       |FROM f CROSS JOIN obs4""".stripMargin
 
   val keys: Seq[Key] = Seq(
-    exact("binary_segmentation", binarySegmentation, binarySegmentationSql),
     exact("funnel_latency", funnelLatency, funnelLatencySql),
     exact("retention_decay_fit", retentionDecayFit, retentionDecayFitSql))
 }

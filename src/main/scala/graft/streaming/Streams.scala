@@ -1019,7 +1019,7 @@ object Streams {
   /** Serve the Page–Hinkley table from drained live daily counts
     * (bounded state snapshot first — the holtFromCounts rule). */
   def phFromCounts(live: DataFrame): DataFrame =
-    graft.queries.Round17Ops.pageHinkleyFromDaily(graft.Lineage.cut(live))
+    graft.queries.MonitorOps.pageHinkleyFromDaily(graft.Lineage.cut(live))
 
   /** #49aa streaming Gumbel capacity fit — §2 #412 as a continuous
     * query over the SAME daily-count state shape as the drift alarm
@@ -1031,7 +1031,7 @@ object Streams {
     * identity, spec-pinned.
     */
   def gumbelFromCounts(live: DataFrame): DataFrame =
-    graft.queries.Round20Ops.gumbelFromDaily(graft.Lineage.cut(live))
+    graft.queries.MonitorOps.gumbelFromDaily(graft.Lineage.cut(live))
 
   /** Serve the Holt forecast table from drained live daily counts.
     * The fold references the counts relation on both sides of its
@@ -1039,7 +1039,7 @@ object Streams {
     * so snapshot the (bounded, |days|·|types|-row) state first.
     */
   def holtFromCounts(live: DataFrame): DataFrame =
-    graft.queries.Round12Ops.holtFromDaily(graft.Lineage.cut(live))
+    graft.queries.MonitorOps.holtFromDaily(graft.Lineage.cut(live))
 
   /** #49y streaming SRM screen — §2 #338 ab_srm_check as a continuous
     * query: the live side is ONE update-mode count keyed by
@@ -1069,7 +1069,7 @@ object Streams {
 
   /** Serve the PSI table from a drained live-counts state + baseline. */
   def psiFromCounts(baseline: DataFrame, live: DataFrame): DataFrame =
-    graft.queries.Round11Ops.psiFinish(
+    graft.queries.MonitorOps.psiFinish(
       baseline.join(live, Seq("event_type"), "full_outer")
         .select(
           col("event_type"),

@@ -1283,7 +1283,7 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     in.addData(a: _*); q.processAllAvailable()
     in.addData(b: _*); q.processAllAvailable(); q.stop()
     val served = Streams.psiFromCounts(
-      graft.queries.Round11Ops.psiBaseline(spark, dir), spark.table("psict"))
+      graft.queries.MonitorOps.psiBaseline(spark, dir), spark.table("psict"))
       .collect().map(_.toSeq).toSeq
     val batch = SparkEntry.queries("psi_drift")(spark, dir)
       .collect().map(_.toSeq).toSeq
