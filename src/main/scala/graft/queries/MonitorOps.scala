@@ -11,9 +11,121 @@ import graft.Key.exact
   * forecasts, trend and change-point tests, autocorrelation and
   * spectral diagnostics, and the drift scores between the two halves
   * of the corpus (event-type mix by time, document length by doc id).
+  * Each device is defined once: the daily count ([[dailyCount]]), the
+  * dense calendars by day offset ([[typeCalendar]], whose Holt-family
+  * oracle twin is [[holtCalendarSql]], and [[seriesCalendar]]) and by
+  * date ([[dateCalendar]]), and the doc-id-halves length ECDF
+  * ([[halvesEcdf]], with its oracle twin [[halvesEcdfSql]]).
   */
 object MonitorOps {
   import OracleMath._
+
+  /** Column `c` read as a double. */
+  private def d(c: String): Column = col(c).cast("double")
+
+  /** The daily event count: per day `d` of `events` with an event (and
+    * per `by` column), its number of events, named `as`.
+    */
+  private[graft] def dailyCount(events: DataFrame, as: String, by: String*): DataFrame =
+    events.groupBy(to_date(col("ts")).as("d") +: by.map(col): _*).agg(count(lit(1)).as(as))
+
+  /** The day offsets `k` = 0 … datediff(hi, lo) of a span row. */
+  private def offsets: Column = explode(expr("sequence(0, datediff(hi, lo))")).as("k")
+
+  /** The per-type dense calendar of an (event_type, d, x) daily-count
+    * frame: every type gets a row for each day offset `k` of the
+    * global span lo … hi, even before its own first event, with the
+    * day's count `x` (0 on a day without events). The summed count is
+    * named `sumAs` before the zero fill; `carry` keeps span columns.
+    */
+  private[graft] def typeCalendar(daily: DataFrame, sumAs: String, carry: String*): DataFrame = {
+    val span = daily.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
+    val types = daily.select(col("event_type")).distinct()
+    types.crossJoin(broadcast(span))
+      .select((col("event_type") +: carry.map(col)) :+ offsets: _*)
+      .join(
+        daily.crossJoin(broadcast(span))
+          .groupBy(col("event_type"), datediff(col("d"), col("lo")).as("k"))
+          .agg(sum(col("x")).as(sumAs)),
+        Seq("event_type", "k"), "left")
+      .select((Seq(col("event_type"), col("k")) ++ carry.map(col)) :+
+        coalesce(col(sumAs), lit(0L)).as("x"): _*)
+  }
+
+  /** The single-series dense calendar of a (d, x) daily-count frame:
+    * one row per day offset `k` of its span with the day's count `x`
+    * (0 on a day without events).
+    */
+  private[graft] def seriesCalendar(daily: DataFrame): DataFrame = {
+    val span = daily.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
+    span.select(offsets)
+      .join(
+        daily.crossJoin(broadcast(span))
+          .groupBy(datediff(col("d"), col("lo")).as("k")).agg(sum(col("x")).as("x0")),
+        Seq("k"), "left")
+      .select(col("k"), coalesce(col("x0"), lit(0L)).as("x"))
+  }
+
+  /** The dense calendar by date: each row of `grid` (its `by` columns
+    * and a span lo … hi) becomes one row per date `d` of the span,
+    * left-joined on (`by`, d) to `daily`'s count `c` (0 on a day
+    * without events).
+    */
+  private[graft] def dateCalendar(grid: DataFrame, daily: DataFrame, by: String*): DataFrame =
+    grid.select(by.map(col) :+ explode(expr("sequence(lo, hi)")).as("d"): _*)
+      .join(daily, by :+ "d", "left")
+      .select(by.map(col) ++ Seq(col("d"), coalesce(col("c"), lit(0L)).as("c")): _*)
+
+  /** The doc-id-halves length ECDF of the drift tests: a document is in
+    * half 1 when its doc id lies at or below the midpoint of the id
+    * span ((doc_id − lo)·2 ≤ hi − lo), else in half 2. Returns the
+    * per-(lang, n_chars) counts `c1`/`c2` with their running totals
+    * `f1`/`f2` in n_chars order, and each lang's half sizes `n1`/`n2`,
+    * which the running totals end at. `docs` needs doc_id, lang and
+    * n_chars.
+    */
+  private[graft] def halvesEcdf(docs: DataFrame): (DataFrame, DataFrame) = {
+    val d0 = docs.select(col("doc_id"), col("lang"), col("n_chars"))
+    val span = d0.agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
+    val hist = d0.crossJoin(broadcast(span))
+      .select(col("lang"), col("n_chars"),
+        when((col("doc_id") - col("lo")) * 2 <= (col("hi") - col("lo")), 1)
+          .otherwise(2).as("half"))
+      .groupBy(col("lang"), col("n_chars"))
+      .agg(
+        sum(when(col("half") === 1, 1L).otherwise(0L)).as("c1"),
+        sum(when(col("half") === 2, 1L).otherwise(0L)).as("c2"))
+    val w = Window.partitionBy(col("lang")).orderBy(col("n_chars"))
+      .rowsBetween(Window.unboundedPreceding, 0)
+    val tot = hist.groupBy(col("lang"))
+      .agg(sum(col("c1")).as("n1"), sum(col("c2")).as("n2"))
+    (hist
+      .withColumn("f1", sum(col("c1")).over(w))
+      .withColumn("f2", sum(col("c2")).over(w)), tot)
+  }
+
+  /** [[halvesEcdf]] in the oracle's SQL: the `span`, `hist`, `cum` and
+    * `tot` CTEs, ending in a comma. `cumExtra` adds columns to `cum`.
+    */
+  private def halvesEcdfSql(cumExtra: String = ""): String =
+    s"""WITH span AS (SELECT min(doc_id) AS lo, max(doc_id) AS hi FROM documents),
+       |hist AS (
+       |  SELECT lang, n_chars,
+       |    CAST(sum(CASE WHEN (doc_id - lo) * 2 <= (hi - lo) THEN 1 ELSE 0 END) AS BIGINT) AS c1,
+       |    CAST(sum(CASE WHEN (doc_id - lo) * 2 <= (hi - lo) THEN 0 ELSE 1 END) AS BIGINT) AS c2
+       |  FROM documents CROSS JOIN span GROUP BY 1, 2
+       |),
+       |cum AS (
+       |  SELECT lang, n_chars, c1, c2,
+       |    CAST(sum(c1) OVER (PARTITION BY lang ORDER BY n_chars
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS f1,
+       |    CAST(sum(c2) OVER (PARTITION BY lang ORDER BY n_chars
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS f2$cumExtra
+       |  FROM hist
+       |),
+       |tot AS (SELECT lang, CAST(sum(c1) AS BIGINT) AS n1, CAST(sum(c2) AS BIGINT) AS n2
+       |        FROM hist GROUP BY 1),
+       |""".stripMargin
 
   /** #280 psi_drift — Population Stability Index of the event-type mix
     * between the first and second half of the observed time span (the
@@ -120,11 +232,8 @@ object MonitorOps {
     val ev = Tables.events(s, dir).select(to_date(col("ts")).as("d"), col("event_type"))
     val span = ev.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
     val types = ev.select(col("event_type")).distinct()
-    val calendar = types.crossJoin(broadcast(span))
-      .select(col("event_type"), explode(expr("sequence(lo, hi)")).as("d"))
     val daily = ev.groupBy(col("event_type"), col("d")).agg(count(lit(1)).as("c"))
-    val dense = calendar.join(daily, Seq("event_type", "d"), "left")
-      .select(col("event_type"), col("d"), coalesce(col("c"), lit(0L)).as("c"))
+    val dense = dateCalendar(types.crossJoin(broadcast(span)), daily, "event_type")
     val stats = dense.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_days"), sum(col("c")).as("total"))
     val wCum = Window.partitionBy(col("event_type")).orderBy(col("d"))
@@ -188,9 +297,7 @@ object MonitorOps {
     * daily count — the window and weekday aggs never touch raw events.
     */
   def seasonalDecompose(s: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.events(s, dir)
-      .groupBy(to_date(col("ts")).as("d"))
-      .agg(count(lit(1)).as("c"))
+    val daily = dailyCount(Tables.events(s, dir), "c")
     val w7 = Window.orderBy(col("d")).rowsBetween(-3, 3)
     val interior = daily
       .withColumn("sum7", sum(col("c")).over(w7))
@@ -294,26 +401,13 @@ object MonitorOps {
     * produce the same bits (the deterministic-chain rule), 6-dp emit.
     */
   def holtForecast(s: SparkSession, dir: String): DataFrame =
-    holtFromDaily(
-      Tables.events(s, dir)
-        .groupBy(to_date(col("ts")).as("d"), col("event_type"))
-        .agg(count(lit(1)).as("x")))
+    holtFromDaily(dailyCount(Tables.events(s, dir), "x", "event_type"))
 
-  /** Dense calendar per type (missing days are true zeros) over any
-    * (event_type, d, x) daily-count frame — shared by the Holt family.
+  /** [[typeCalendar]] with the count read as a double — shared by the
+    * Holt family.
     */
-  private[graft] def denseDaily(daily: DataFrame): DataFrame = {
-    val span = daily.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
-    val types = daily.select(col("event_type")).distinct()
-    types.crossJoin(broadcast(span))
-      .select(col("event_type"), explode(expr("sequence(0, datediff(hi, lo))")).as("k"))
-      .join(
-        daily.crossJoin(broadcast(span))
-          .groupBy(col("event_type"), datediff(col("d"), col("lo")).as("k"))
-          .agg(sum(col("x")).as("x")),
-        Seq("event_type", "k"), "left")
-      .select(col("event_type"), col("k"), coalesce(col("x"), lit(0L)).cast("double").as("x"))
-  }
+  private def denseDaily(daily: DataFrame): DataFrame =
+    typeCalendar(daily, "x").select(col("event_type"), col("k"), col("x").cast("double").as("x"))
 
   /** The Holt fold over any (event_type, d, x) daily-count frame —
     * shared by the batch op and the streaming twin
@@ -353,7 +447,11 @@ object MonitorOps {
       .orderBy(col("event_type"), col("h"))
   }
 
-  val holtForecastSql: String =
+  /** The Holt family's oracle calendar: the `ev`, `span`, `types`,
+    * `cal` (type × day offset) and `cnt` (per type and offset) CTEs
+    * after `WITH RECURSIVE`, ending in a comma.
+    */
+  private val holtCalendarSql: String =
     """WITH RECURSIVE ev AS (SELECT CAST(ts AS DATE) AS d, event_type FROM events),
       |span AS (SELECT min(d) AS lo, max(d) AS hi FROM ev),
       |types AS (SELECT DISTINCT event_type FROM ev),
@@ -365,31 +463,35 @@ object MonitorOps {
       |  SELECT event_type, datediff('day', lo, d) AS k, count(*) AS x
       |  FROM ev, span GROUP BY 1, 2
       |),
-      |dense AS (
-      |  SELECT cal.event_type, cal.k,
-      |    CAST(coalesce(cnt.x, 0) AS DOUBLE) AS x
-      |  FROM cal LEFT JOIN cnt ON cal.event_type = cnt.event_type AND cal.k = cnt.k
-      |),
-      |init AS (
-      |  SELECT a.event_type, a.x AS l, b.x - a.x AS t
-      |  FROM dense a JOIN dense b ON a.event_type = b.event_type AND a.k = 0 AND b.k = 1
-      |),
-      |rec AS (
-      |  SELECT event_type, 0 AS k, l, t FROM init
-      |  UNION ALL
-      |  SELECT r.event_type, r.k + 1,
-      |    0.5 * d.x + 0.5 * (r.l + r.t) AS l,
-      |    0.25 * ((0.5 * d.x + 0.5 * (r.l + r.t)) - r.l) + 0.75 * r.t AS t
-      |  FROM rec r JOIN dense d ON d.event_type = r.event_type AND d.k = r.k + 1
-      |),
-      |last AS (SELECT max(k) AS kmax FROM rec),
-      |fin AS (SELECT event_type, l, t FROM rec, last WHERE k = kmax)
-      |SELECT event_type, h,
-      |  (CAST(round(l, 6) AS DOUBLE) + 0.0) AS level,
-      |  (CAST(round(t, 6) AS DOUBLE) + 0.0) AS trend,
-      |  (CAST(round(l + CAST(h AS DOUBLE) * t, 6) AS DOUBLE) + 0.0) AS forecast
-      |FROM fin, (SELECT unnest(generate_series(1, 7)) AS h)
-      |ORDER BY event_type, h""".stripMargin
+      |""".stripMargin
+
+  val holtForecastSql: String =
+    holtCalendarSql +
+      """|dense AS (
+         |  SELECT cal.event_type, cal.k,
+         |    CAST(coalesce(cnt.x, 0) AS DOUBLE) AS x
+         |  FROM cal LEFT JOIN cnt ON cal.event_type = cnt.event_type AND cal.k = cnt.k
+         |),
+         |init AS (
+         |  SELECT a.event_type, a.x AS l, b.x - a.x AS t
+         |  FROM dense a JOIN dense b ON a.event_type = b.event_type AND a.k = 0 AND b.k = 1
+         |),
+         |rec AS (
+         |  SELECT event_type, 0 AS k, l, t FROM init
+         |  UNION ALL
+         |  SELECT r.event_type, r.k + 1,
+         |    0.5 * d.x + 0.5 * (r.l + r.t) AS l,
+         |    0.25 * ((0.5 * d.x + 0.5 * (r.l + r.t)) - r.l) + 0.75 * r.t AS t
+         |  FROM rec r JOIN dense d ON d.event_type = r.event_type AND d.k = r.k + 1
+         |),
+         |last AS (SELECT max(k) AS kmax FROM rec),
+         |fin AS (SELECT event_type, l, t FROM rec, last WHERE k = kmax)
+         |SELECT event_type, h,
+         |  (CAST(round(l, 6) AS DOUBLE) + 0.0) AS level,
+         |  (CAST(round(t, 6) AS DOUBLE) + 0.0) AS trend,
+         |  (CAST(round(l + CAST(h AS DOUBLE) * t, 6) AS DOUBLE) + 0.0) AS forecast
+         |FROM fin, (SELECT unnest(generate_series(1, 7)) AS h)
+         |ORDER BY event_type, h""".stripMargin
 
   /** #318 holt_winters_forecast — additive Holt–Winters triple
     * exponential smoothing (Winters 1960) with weekly seasonality
@@ -411,10 +513,7 @@ object MonitorOps {
     */
   def holtWintersForecast(s: SparkSession, dir: String): DataFrame = {
     val m = 7
-    val daily = Tables.events(s, dir)
-      .groupBy(to_date(col("ts")).as("d"), col("event_type"))
-      .agg(count(lit(1)).as("x"))
-    val folded = denseDaily(daily)
+    val folded = denseDaily(dailyCount(Tables.events(s, dir), "x", "event_type"))
       .groupBy(col("event_type"))
       .agg(sort_array(collect_list(struct(col("k"), col("x")))).as("arr"))
       // the two-week init (l₀, t₀, s₀) needs 14 observed days; the
@@ -455,56 +554,46 @@ object MonitorOps {
   }
 
   val holtWintersForecastSql: String =
-    """WITH RECURSIVE ev AS (SELECT CAST(ts AS DATE) AS d, event_type FROM events),
-      |span AS (SELECT min(d) AS lo, max(d) AS hi FROM ev),
-      |types AS (SELECT DISTINCT event_type FROM ev),
-      |cal AS (
-      |  SELECT event_type, unnest(generate_series(0, datediff('day', lo, hi))) AS k
-      |  FROM types, span
-      |),
-      |cnt AS (
-      |  SELECT event_type, datediff('day', lo, d) AS k, count(*) AS x
-      |  FROM ev, span GROUP BY 1, 2
-      |),
-      |dense AS (
-      |  SELECT cal.event_type, cal.k, CAST(coalesce(cnt.x, 0) AS DOUBLE) AS x
-      |  FROM cal LEFT JOIN cnt ON cal.event_type = cnt.event_type AND cal.k = cnt.k
-      |),
-      |sums AS (
-      |  SELECT event_type,
-      |    sum(x) FILTER (WHERE k < 7) AS sum1,
-      |    sum(x) FILTER (WHERE k >= 7 AND k < 14) AS sum2
-      |  FROM dense GROUP BY 1
-      |),
-      |wk1 AS (
-      |  SELECT event_type, list(x ORDER BY k) AS xs FROM dense WHERE k < 7 GROUP BY 1
-      |),
-      |init AS (
-      |  SELECT s.event_type, 6 AS k,
-      |    s.sum1 / 7.0 AS l,
-      |    (s.sum2 / 7.0 - s.sum1 / 7.0) / 7.0 AS t,
-      |    list_transform(w.xs, v -> v - s.sum1 / 7.0) AS sl
-      |  FROM sums s JOIN wk1 w ON s.event_type = w.event_type
-      |),
-      |rec AS (
-      |  SELECT event_type, k, l, t, sl FROM init
-      |  UNION ALL
-      |  SELECT r.event_type, r.k + 1,
-      |    0.5 * (d.x - r.sl[1]) + 0.5 * (r.l + r.t) AS l,
-      |    0.25 * ((0.5 * (d.x - r.sl[1]) + 0.5 * (r.l + r.t)) - r.l) + 0.75 * r.t AS t,
-      |    r.sl[2:7] ||
-      |      [0.5 * (d.x - (0.5 * (d.x - r.sl[1]) + 0.5 * (r.l + r.t))) + 0.5 * r.sl[1]] AS sl
-      |  FROM rec r JOIN dense d ON d.event_type = r.event_type AND d.k = r.k + 1
-      |),
-      |last AS (SELECT max(k) AS kmax FROM rec),
-      |fin AS (SELECT event_type, l, t, sl FROM rec, last WHERE k = kmax)
-      |SELECT event_type, h,
-      |  (CAST(round(l, 6) AS DOUBLE) + 0.0) AS level,
-      |  (CAST(round(t, 6) AS DOUBLE) + 0.0) AS trend,
-      |  (CAST(round(sl[h], 6) AS DOUBLE) + 0.0) AS seasonal,
-      |  (CAST(round(l + CAST(h AS DOUBLE) * t + sl[h], 6) AS DOUBLE) + 0.0) AS forecast
-      |FROM fin, (SELECT unnest(generate_series(1, 7)) AS h)
-      |ORDER BY event_type, h""".stripMargin
+    holtCalendarSql +
+      """|dense AS (
+         |  SELECT cal.event_type, cal.k, CAST(coalesce(cnt.x, 0) AS DOUBLE) AS x
+         |  FROM cal LEFT JOIN cnt ON cal.event_type = cnt.event_type AND cal.k = cnt.k
+         |),
+         |sums AS (
+         |  SELECT event_type,
+         |    sum(x) FILTER (WHERE k < 7) AS sum1,
+         |    sum(x) FILTER (WHERE k >= 7 AND k < 14) AS sum2
+         |  FROM dense GROUP BY 1
+         |),
+         |wk1 AS (
+         |  SELECT event_type, list(x ORDER BY k) AS xs FROM dense WHERE k < 7 GROUP BY 1
+         |),
+         |init AS (
+         |  SELECT s.event_type, 6 AS k,
+         |    s.sum1 / 7.0 AS l,
+         |    (s.sum2 / 7.0 - s.sum1 / 7.0) / 7.0 AS t,
+         |    list_transform(w.xs, v -> v - s.sum1 / 7.0) AS sl
+         |  FROM sums s JOIN wk1 w ON s.event_type = w.event_type
+         |),
+         |rec AS (
+         |  SELECT event_type, k, l, t, sl FROM init
+         |  UNION ALL
+         |  SELECT r.event_type, r.k + 1,
+         |    0.5 * (d.x - r.sl[1]) + 0.5 * (r.l + r.t) AS l,
+         |    0.25 * ((0.5 * (d.x - r.sl[1]) + 0.5 * (r.l + r.t)) - r.l) + 0.75 * r.t AS t,
+         |    r.sl[2:7] ||
+         |      [0.5 * (d.x - (0.5 * (d.x - r.sl[1]) + 0.5 * (r.l + r.t))) + 0.5 * r.sl[1]] AS sl
+         |  FROM rec r JOIN dense d ON d.event_type = r.event_type AND d.k = r.k + 1
+         |),
+         |last AS (SELECT max(k) AS kmax FROM rec),
+         |fin AS (SELECT event_type, l, t, sl FROM rec, last WHERE k = kmax)
+         |SELECT event_type, h,
+         |  (CAST(round(l, 6) AS DOUBLE) + 0.0) AS level,
+         |  (CAST(round(t, 6) AS DOUBLE) + 0.0) AS trend,
+         |  (CAST(round(sl[h], 6) AS DOUBLE) + 0.0) AS seasonal,
+         |  (CAST(round(l + CAST(h AS DOUBLE) * t + sl[h], 6) AS DOUBLE) + 0.0) AS forecast
+         |FROM fin, (SELECT unnest(generate_series(1, 7)) AS h)
+         |ORDER BY event_type, h""".stripMargin
 
   /** #327 ks_drift_test — two-sample Kolmogorov–Smirnov test of the
     * doc-length distribution between the first and second half of the
@@ -521,25 +610,8 @@ object MonitorOps {
     * quotient touches floats. Exact oracle.
     */
   def ksDriftTest(s: SparkSession, dir: String): DataFrame = {
-    val d0 = Tables.documents(s, dir).select(col("doc_id"), col("lang"), col("n_chars"))
-    val span = d0.agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
-    val hist = d0.crossJoin(broadcast(span))
-      .select(col("lang"), col("n_chars"),
-        when((col("doc_id") - col("lo")) * 2 <= (col("hi") - col("lo")), 1)
-          .otherwise(2).as("half"))
-      .groupBy(col("lang"), col("n_chars"))
-      .agg(
-        sum(when(col("half") === 1, 1L).otherwise(0L)).as("c1"),
-        sum(when(col("half") === 2, 1L).otherwise(0L)).as("c2"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("lang")).orderBy(col("n_chars"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    val tot = hist.groupBy(col("lang"))
-      .agg(sum(col("c1")).as("n1"), sum(col("c2")).as("n2"))
-    hist
-      .withColumn("f1", sum(col("c1")).over(w))
-      .withColumn("f2", sum(col("c2")).over(w))
-      .join(broadcast(tot), Seq("lang"))
+    val (cum, tot) = halvesEcdf(Tables.documents(s, dir))
+    cum.join(broadcast(tot), Seq("lang"))
       .select(col("lang"), col("n1"), col("n2"),
         abs(dec0(col("f1")) * dec0(col("n2")) - dec0(col("f2")) * dec0(col("n1"))).as("num"))
       .groupBy(col("lang"), col("n1"), col("n2"))
@@ -554,35 +626,19 @@ object MonitorOps {
   }
 
   val ksDriftTestSql: String =
-    """WITH span AS (SELECT min(doc_id) AS lo, max(doc_id) AS hi FROM documents),
-      |hist AS (
-      |  SELECT lang, n_chars,
-      |    CAST(sum(CASE WHEN (doc_id - lo) * 2 <= (hi - lo) THEN 1 ELSE 0 END) AS BIGINT) AS c1,
-      |    CAST(sum(CASE WHEN (doc_id - lo) * 2 <= (hi - lo) THEN 0 ELSE 1 END) AS BIGINT) AS c2
-      |  FROM documents CROSS JOIN span GROUP BY 1, 2
-      |),
-      |cum AS (
-      |  SELECT lang, n_chars, c1, c2,
-      |    CAST(sum(c1) OVER (PARTITION BY lang ORDER BY n_chars
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS f1,
-      |    CAST(sum(c2) OVER (PARTITION BY lang ORDER BY n_chars
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS f2
-      |  FROM hist
-      |),
-      |tot AS (SELECT lang, CAST(sum(c1) AS BIGINT) AS n1, CAST(sum(c2) AS BIGINT) AS n2
-      |        FROM hist GROUP BY 1),
-      |sup AS (
-      |  SELECT cum.lang, tot.n1, tot.n2,
-      |    max(abs(CAST(f1 AS DECIMAL(38,0)) * CAST(n2 AS DECIMAL(38,0))
-      |          - CAST(f2 AS DECIMAL(38,0)) * CAST(n1 AS DECIMAL(38,0)))) AS mnum
-      |  FROM cum JOIN tot ON cum.lang = tot.lang GROUP BY 1, 2, 3
-      |)
-      |SELECT lang, n1, n2,
-      |  (CAST(round(CAST(mnum AS DOUBLE) / (CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE)), 6) AS DOUBLE) + 0.0) AS ks_d,
-      |  (CAST(round(1.358 * sqrt(CAST(n1 + n2 AS DOUBLE) / (CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE))), 6) AS DOUBLE) + 0.0) AS d_crit,
-      |  CAST(round(CAST(mnum AS DOUBLE) / (CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE)), 6) AS DOUBLE)
-      |    > (CAST(round(1.358 * sqrt(CAST(n1 + n2 AS DOUBLE) / (CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE))), 6) AS DOUBLE) + 0.0) AS drifted
-      |FROM sup ORDER BY lang""".stripMargin
+    halvesEcdfSql() +
+      """|sup AS (
+         |  SELECT cum.lang, tot.n1, tot.n2,
+         |    max(abs(CAST(f1 AS DECIMAL(38,0)) * CAST(n2 AS DECIMAL(38,0))
+         |          - CAST(f2 AS DECIMAL(38,0)) * CAST(n1 AS DECIMAL(38,0)))) AS mnum
+         |  FROM cum JOIN tot ON cum.lang = tot.lang GROUP BY 1, 2, 3
+         |)
+         |SELECT lang, n1, n2,
+         |  (CAST(round(CAST(mnum AS DOUBLE) / (CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE)), 6) AS DOUBLE) + 0.0) AS ks_d,
+         |  (CAST(round(1.358 * sqrt(CAST(n1 + n2 AS DOUBLE) / (CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE))), 6) AS DOUBLE) + 0.0) AS d_crit,
+         |  CAST(round(CAST(mnum AS DOUBLE) / (CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE)), 6) AS DOUBLE)
+         |    > (CAST(round(1.358 * sqrt(CAST(n1 + n2 AS DOUBLE) / (CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE))), 6) AS DOUBLE) + 0.0) AS drifted
+         |FROM sup ORDER BY lang""".stripMargin
 
   /** #332 forecast_backtest — one-step-ahead backtest of the two
     * structural baselines every forecast must beat (Hyndman's
@@ -596,22 +652,8 @@ object MonitorOps {
     * means via the mean6 device. Exact oracle.
     */
   def forecastBacktest(s: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.events(s, dir)
-      .groupBy(to_date(col("ts")).as("d"), col("event_type"))
-      .agg(count(lit(1)).as("x"))
-    val span = daily.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
-    val types = daily.select(col("event_type")).distinct()
-    val dense = types.crossJoin(broadcast(span))
-      .select(col("event_type"), col("lo"), col("hi"),
-        explode(expr("sequence(0, datediff(hi, lo))")).as("k"))
-      .join(
-        daily.crossJoin(broadcast(span))
-          .groupBy(col("event_type"), datediff(col("d"), col("lo")).as("k"))
-          .agg(sum(col("x")).as("x0")),
-        Seq("event_type", "k"), "left")
-      .select(col("event_type"), col("k"),
-        datediff(col("hi"), col("lo")).as("kmax"),
-        coalesce(col("x0"), lit(0L)).as("x"))
+    val dense = typeCalendar(dailyCount(Tables.events(s, dir), "x", "event_type"), "x0", "lo", "hi")
+      .select(col("event_type"), col("k"), datediff(col("hi"), col("lo")).as("kmax"), col("x"))
     val denseCut = graft.Lineage.cut(dense) // calendar-bounded, read 3x
     val base = denseCut.select(col("event_type"), col("k"), col("x"))
     val lag1 = base.select(col("event_type"), (col("k") + 1).as("k"), col("x").as("p1"))
@@ -692,20 +734,8 @@ object MonitorOps {
     * oracle.
     */
   def mannKendallTrend(s: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.events(s, dir)
-      .groupBy(to_date(col("ts")).as("d"), col("event_type"))
-      .agg(count(lit(1)).as("x"))
-    val span = daily.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
-    val types = daily.select(col("event_type")).distinct()
-    val dense = types.crossJoin(broadcast(span))
-      .select(col("event_type"), explode(expr("sequence(0, datediff(hi, lo))")).as("k"))
-      .join(
-        daily.crossJoin(broadcast(span))
-          .groupBy(col("event_type"), datediff(col("d"), col("lo")).as("k"))
-          .agg(sum(col("x")).as("x0")),
-        Seq("event_type", "k"), "left")
-      .select(col("event_type"), col("k"), coalesce(col("x0"), lit(0L)).as("x"))
-    val denseCut = graft.Lineage.cut(dense) // calendar-bounded, read 3x
+    val denseCut = graft.Lineage.cut( // calendar-bounded, read 3x
+      typeCalendar(dailyCount(Tables.events(s, dir), "x", "event_type"), "x0"))
     val a = denseCut.select(col("event_type"), col("k").as("ki"), col("x").as("xi"))
     val b = denseCut.select(col("event_type"), col("k").as("kj"), col("x").as("xj"))
     val sStat = a.join(b, Seq("event_type")).filter(col("ki") < col("kj"))
@@ -839,7 +869,7 @@ object MonitorOps {
     * into order-free DECIMALs. Exact oracle.
     */
   def durbinWatson(s: SparkSession, dir: String): DataFrame = {
-    val wp = org.apache.spark.sql.expressions.Window.orderBy(col("day"))
+    val wp = Window.orderBy(col("day"))
     val r = seasonalDecompose(s, dir).select(col("day"), col("residual"))
       .withColumn("rp", lag(col("residual"), 1).over(wp))
     val m = r.agg(
@@ -883,14 +913,7 @@ object MonitorOps {
     * dense frame against the broadcast 14-row lag axis. Exact oracle.
     */
   def acfTable(s: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.events(s, dir).groupBy(to_date(col("ts")).as("d")).agg(count(lit(1)).as("x"))
-    val span = daily.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
-    val dense = span.select(explode(expr("sequence(0, datediff(hi, lo))")).as("k"))
-      .join(
-        daily.crossJoin(broadcast(span))
-          .groupBy(datediff(col("d"), col("lo")).as("k")).agg(sum(col("x")).as("x0")),
-        Seq("k"), "left")
-      .select(col("k"), coalesce(col("x0"), lit(0L)).as("x"))
+    val dense = seriesCalendar(dailyCount(Tables.events(s, dir), "x"))
     val tot = dense.agg(count(lit(1)).as("n"), sum(col("x")).as("sx"))
     val dev = graft.Lineage.cut( // calendar-bounded, read 3x (denom + both join sides)
       dense.crossJoin(broadcast(tot))
@@ -954,25 +977,9 @@ object MonitorOps {
     * oracle.
     */
   def emdDrift(s: SparkSession, dir: String): DataFrame = {
-    val wp = org.apache.spark.sql.expressions.Window
-    val d0 = Tables.documents(s, dir).select(col("doc_id"), col("lang"), col("n_chars"))
-    val span = d0.agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
-    val hist = d0.crossJoin(broadcast(span))
-      .select(col("lang"), col("n_chars"),
-        when((col("doc_id") - col("lo")) * 2 <= (col("hi") - col("lo")), 1)
-          .otherwise(2).as("half"))
-      .groupBy(col("lang"), col("n_chars"))
-      .agg(
-        sum(when(col("half") === 1, 1L).otherwise(0L)).as("c1"),
-        sum(when(col("half") === 2, 1L).otherwise(0L)).as("c2"))
-    val wcum = wp.partitionBy(col("lang")).orderBy(col("n_chars"))
-      .rowsBetween(wp.unboundedPreceding, 0)
-    val wlead = wp.partitionBy(col("lang")).orderBy(col("n_chars"))
-    val tot = hist.groupBy(col("lang"))
-      .agg(sum(col("c1")).as("n1"), sum(col("c2")).as("n2"))
-    hist
-      .withColumn("f1", sum(col("c1")).over(wcum))
-      .withColumn("f2", sum(col("c2")).over(wcum))
+    val (cum, tot) = halvesEcdf(Tables.documents(s, dir))
+    val wlead = Window.partitionBy(col("lang")).orderBy(col("n_chars"))
+    cum
       .withColumn("dv", lead(col("n_chars"), 1).over(wlead) - col("n_chars"))
       .filter(col("dv").isNotNull)
       .join(broadcast(tot), Seq("lang"))
@@ -988,35 +995,18 @@ object MonitorOps {
   }
 
   val emdDriftSql: String =
-    """WITH span AS (SELECT min(doc_id) AS lo, max(doc_id) AS hi FROM documents),
-      |hist AS (
-      |  SELECT lang, n_chars,
-      |    CAST(sum(CASE WHEN (doc_id - lo) * 2 <= (hi - lo) THEN 1 ELSE 0 END) AS BIGINT) AS c1,
-      |    CAST(sum(CASE WHEN (doc_id - lo) * 2 <= (hi - lo) THEN 0 ELSE 1 END) AS BIGINT) AS c2
-      |  FROM documents CROSS JOIN span GROUP BY 1, 2
-      |),
-      |cum AS (
-      |  SELECT lang, n_chars, c1, c2,
-      |    CAST(sum(c1) OVER (PARTITION BY lang ORDER BY n_chars
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS f1,
-      |    CAST(sum(c2) OVER (PARTITION BY lang ORDER BY n_chars
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS f2,
-      |    lead(n_chars) OVER (PARTITION BY lang ORDER BY n_chars) - n_chars AS dv
-      |  FROM hist
-      |),
-      |tot AS (SELECT lang, CAST(sum(c1) AS BIGINT) AS n1, CAST(sum(c2) AS BIGINT) AS n2
-      |        FROM hist GROUP BY 1),
-      |seg AS (
-      |  SELECT cum.lang, n1, n2,
-      |    sum(abs(CAST(f1 AS DECIMAL(38,0)) * CAST(n2 AS DECIMAL(38,0))
-      |          - CAST(f2 AS DECIMAL(38,0)) * CAST(n1 AS DECIMAL(38,0)))
-      |        * CAST(dv AS DECIMAL(38,0))) AS num
-      |  FROM cum JOIN tot ON cum.lang = tot.lang
-      |  WHERE dv IS NOT NULL GROUP BY 1, 2, 3
-      |)
-      |SELECT lang, n1, n2,
-      |  (CAST(round(CAST(num AS DOUBLE) / (CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE)), 6) AS DOUBLE) + 0.0) AS emd_chars
-      |FROM seg ORDER BY lang""".stripMargin
+    halvesEcdfSql(",\n    lead(n_chars) OVER (PARTITION BY lang ORDER BY n_chars) - n_chars AS dv") +
+      """|seg AS (
+         |  SELECT cum.lang, n1, n2,
+         |    sum(abs(CAST(f1 AS DECIMAL(38,0)) * CAST(n2 AS DECIMAL(38,0))
+         |          - CAST(f2 AS DECIMAL(38,0)) * CAST(n1 AS DECIMAL(38,0)))
+         |        * CAST(dv AS DECIMAL(38,0))) AS num
+         |  FROM cum JOIN tot ON cum.lang = tot.lang
+         |  WHERE dv IS NOT NULL GROUP BY 1, 2, 3
+         |)
+         |SELECT lang, n1, n2,
+         |  (CAST(round(CAST(num AS DOUBLE) / (CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE)), 6) AS DOUBLE) + 0.0) AS emd_chars
+         |FROM seg ORDER BY lang""".stripMargin
 
   /** #367 variance_ratio_test — Lo–MacKinlay variance ratios of the
     * daily volume series at horizons q ∈ {2, 4, 8}: VR(q) =
@@ -1030,16 +1020,8 @@ object MonitorOps {
     * ratio. Exact oracle.
     */
   def varianceRatioTest(s: SparkSession, dir: String): DataFrame = {
-    val wp = org.apache.spark.sql.expressions.Window
-    val daily = Tables.events(s, dir).groupBy(to_date(col("ts")).as("d")).agg(count(lit(1)).as("x"))
-    val span = daily.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
-    val dense = span.select(explode(expr("sequence(0, datediff(hi, lo))")).as("k"))
-      .join(
-        daily.crossJoin(broadcast(span))
-          .groupBy(datediff(col("d"), col("lo")).as("k")).agg(sum(col("x")).as("x0")),
-        Seq("k"), "left")
-      .select(col("k"), coalesce(col("x0"), lit(0L)).as("x"))
-    val denseCut = graft.Lineage.cut(dense) // calendar-bounded, read 3x
+    val denseCut = graft.Lineage.cut( // calendar-bounded, read 3x
+      seriesCalendar(dailyCount(Tables.events(s, dir), "x")))
     val base = denseCut.agg(count(lit(1)).as("n"),
       sum(dec0(col("x"))).as("s1"), sum(dec0(col("x")) * dec0(col("x"))).as("s2"))
     def varD(n: Column, s1: Column, s2: Column): Column = {
@@ -1260,13 +1242,10 @@ object MonitorOps {
     * Exact oracle.
     */
   def grangerDaily(s: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.events(s, dir)
-      .filter(col("event_type").isin("view", "purchase"))
-      .groupBy(to_date(col("ts")).as("d"), col("event_type"))
-      .agg(count(lit(1)).as("x"))
+    val daily = dailyCount(
+      Tables.events(s, dir).filter(col("event_type").isin("view", "purchase")), "x", "event_type")
     val span = daily.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
-    val grid = span.select(explode(expr("sequence(0, datediff(hi, lo))")).as("k"))
-      .crossJoin(broadcast(span))
+    val grid = span.select(offsets).crossJoin(broadcast(span))
     def series(t: String) = grid
       .join(
         daily.filter(col("event_type") === t)
@@ -1275,7 +1254,7 @@ object MonitorOps {
         Seq("k"), "left")
       .select(col("k"), coalesce(col("x"), lit(0L)).as(t))
     val aligned = series("view").join(series("purchase"), Seq("k"))
-    val w = org.apache.spark.sql.expressions.Window.orderBy(col("k"))
+    val w = Window.orderBy(col("k"))
     // the |days|-bounded lagged grid feeds both direction aggregates:
     // cut it so the daily count and calendar join run once
     val lagged = graft.Lineage.cut(aligned
@@ -1283,7 +1262,7 @@ object MonitorOps {
       .withColumn("pl", lag(col("purchase"), 1).over(w))
       .filter(col("vl").isNotNull))
     def dir0(name: String, y: String, yl: String, xl: String) = {
-      def d0(c: org.apache.spark.sql.Column) = sum(c.cast("decimal(38,0)"))
+      def d0(c: Column) = sum(c.cast("decimal(38,0)"))
       lagged.agg(
         count(lit(1)).as("n"),
         d0(col(y)).as("sy"), d0(col(yl)).as("syl"), d0(col(xl)).as("sxl"),
@@ -1409,75 +1388,42 @@ object MonitorOps {
     * oracle.
     */
   def cvmDriftTest(s: SparkSession, dir: String): DataFrame = {
-    val d0 = Tables.documents(s, dir).select(col("doc_id"), col("lang"), col("n_chars"))
-    val span = d0.agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
-    val hist = d0.crossJoin(broadcast(span))
-      .select(col("lang"), col("n_chars"),
-        when((col("doc_id") - col("lo")) * 2 <= (col("hi") - col("lo")), 1)
-          .otherwise(2).as("half"))
-      .groupBy(col("lang"), col("n_chars"))
-      .agg(
-        sum(when(col("half") === 1, 1L).otherwise(0L)).as("c1"),
-        sum(when(col("half") === 2, 1L).otherwise(0L)).as("c2"))
-    val w = Window.partitionBy(col("lang")).orderBy(col("n_chars"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val tot = hist.groupBy(col("lang"))
-      .agg(sum(col("c1")).as("n1"), sum(col("c2")).as("n2"))
+    val (cum, tot) = halvesEcdf(Tables.documents(s, dir))
     val gap = dec0(col("f1")) * dec0(col("n2")) - dec0(col("f2")) * dec0(col("n1"))
-    def dd(c: String) = col(c).cast("double")
-    hist
-      .withColumn("f1", sum(col("c1")).over(w))
-      .withColumn("f2", sum(col("c2")).over(w))
-      .join(broadcast(tot), Seq("lang"))
+    cum.join(broadcast(tot), Seq("lang"))
       .select(col("lang"), col("n1"), col("n2"),
         (dec0(col("c1") + col("c2")) * gap * gap).as("term"))
       .groupBy(col("lang"), col("n1"), col("n2"))
       .agg(sum(col("term")).as("num"))
       .select(col("lang"), col("n1"), col("n2"),
         emit(col("num").cast("double") /
-          (dd("n1") * dd("n2") * (dd("n1") + dd("n2")) * (dd("n1") + dd("n2"))), 6)
+          (d("n1") * d("n2") * (d("n1") + d("n2")) * (d("n1") + d("n2"))), 6)
           .as("cvm_t"))
       .withColumn("drifted", col("cvm_t") > lit(0.461))
       .orderBy(col("lang"))
   }
 
   val cvmDriftTestSql: String =
-    """WITH span AS (SELECT min(doc_id) AS lo, max(doc_id) AS hi FROM documents),
-      |hist AS (
-      |  SELECT lang, n_chars,
-      |    CAST(sum(CASE WHEN (doc_id - lo) * 2 <= (hi - lo) THEN 1 ELSE 0 END) AS BIGINT) AS c1,
-      |    CAST(sum(CASE WHEN (doc_id - lo) * 2 <= (hi - lo) THEN 0 ELSE 1 END) AS BIGINT) AS c2
-      |  FROM documents CROSS JOIN span GROUP BY 1, 2
-      |),
-      |cum AS (
-      |  SELECT lang, n_chars, c1, c2,
-      |    CAST(sum(c1) OVER (PARTITION BY lang ORDER BY n_chars
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS f1,
-      |    CAST(sum(c2) OVER (PARTITION BY lang ORDER BY n_chars
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS f2
-      |  FROM hist
-      |),
-      |tot AS (SELECT lang, CAST(sum(c1) AS BIGINT) AS n1, CAST(sum(c2) AS BIGINT) AS n2
-      |        FROM hist GROUP BY 1),
-      |agg AS (
-      |  SELECT cum.lang, tot.n1, tot.n2,
-      |    sum(CAST(c1 + c2 AS DECIMAL(38,0))
-      |      * (CAST(f1 AS DECIMAL(38,0)) * CAST(n2 AS DECIMAL(38,0))
-      |         - CAST(f2 AS DECIMAL(38,0)) * CAST(n1 AS DECIMAL(38,0)))
-      |      * (CAST(f1 AS DECIMAL(38,0)) * CAST(n2 AS DECIMAL(38,0))
-      |         - CAST(f2 AS DECIMAL(38,0)) * CAST(n1 AS DECIMAL(38,0)))) AS num
-      |  FROM cum JOIN tot ON cum.lang = tot.lang GROUP BY 1, 2, 3
-      |)
-      |SELECT lang, n1, n2,
-      |  (CAST(round(CAST(num AS DOUBLE)
-      |    / (CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE)
-      |       * (CAST(n1 AS DOUBLE) + CAST(n2 AS DOUBLE))
-      |       * (CAST(n1 AS DOUBLE) + CAST(n2 AS DOUBLE))), 6) AS DOUBLE) + 0.0) AS cvm_t,
-      |  (CAST(round(CAST(num AS DOUBLE)
-      |    / (CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE)
-      |       * (CAST(n1 AS DOUBLE) + CAST(n2 AS DOUBLE))
-      |       * (CAST(n1 AS DOUBLE) + CAST(n2 AS DOUBLE))), 6) AS DOUBLE) + 0.0) > 0.461 AS drifted
-      |FROM agg ORDER BY lang""".stripMargin
+    halvesEcdfSql() +
+      """|agg AS (
+         |  SELECT cum.lang, tot.n1, tot.n2,
+         |    sum(CAST(c1 + c2 AS DECIMAL(38,0))
+         |      * (CAST(f1 AS DECIMAL(38,0)) * CAST(n2 AS DECIMAL(38,0))
+         |         - CAST(f2 AS DECIMAL(38,0)) * CAST(n1 AS DECIMAL(38,0)))
+         |      * (CAST(f1 AS DECIMAL(38,0)) * CAST(n2 AS DECIMAL(38,0))
+         |         - CAST(f2 AS DECIMAL(38,0)) * CAST(n1 AS DECIMAL(38,0)))) AS num
+         |  FROM cum JOIN tot ON cum.lang = tot.lang GROUP BY 1, 2, 3
+         |)
+         |SELECT lang, n1, n2,
+         |  (CAST(round(CAST(num AS DOUBLE)
+         |    / (CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE)
+         |       * (CAST(n1 AS DOUBLE) + CAST(n2 AS DOUBLE))
+         |       * (CAST(n1 AS DOUBLE) + CAST(n2 AS DOUBLE))), 6) AS DOUBLE) + 0.0) AS cvm_t,
+         |  (CAST(round(CAST(num AS DOUBLE)
+         |    / (CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE)
+         |       * (CAST(n1 AS DOUBLE) + CAST(n2 AS DOUBLE))
+         |       * (CAST(n1 AS DOUBLE) + CAST(n2 AS DOUBLE))), 6) AS DOUBLE) + 0.0) > 0.461 AS drifted
+         |FROM agg ORDER BY lang""".stripMargin
 
   /** #391 spectral_power — the fixed-period periodogram of the daily
     * event count: demeaned DFT power at candidate periods {7, 14, 30}
@@ -1497,9 +1443,7 @@ object MonitorOps {
     */
   def spectralPower(s: SparkSession, dir: String): DataFrame = {
     val tau = 6.283185307179586
-    val daily = Tables.events(s, dir)
-      .groupBy(to_date(col("ts")).as("d"))
-      .agg(count(lit(1)).as("c"))
+    val daily = dailyCount(Tables.events(s, dir), "c")
     val span = daily.agg(
       min(col("d")).as("lo"), count(lit(1)).as("t_days"), sum(col("c")).as("sc"))
     val mean = col("sc").cast("double") / col("t_days").cast("double")
@@ -1578,9 +1522,7 @@ object MonitorOps {
     * oracle.
     */
   def pageHinkley(s: SparkSession, dir: String): DataFrame =
-    pageHinkleyFromDaily(Tables.events(s, dir)
-      .groupBy(to_date(col("ts")).as("d"))
-      .agg(count(lit(1)).as("c")))
+    pageHinkleyFromDaily(dailyCount(Tables.events(s, dir), "c"))
 
   /** The Page–Hinkley arithmetic over an already-aggregated (d, c)
     * daily-count relation — shared verbatim by the streaming twin
@@ -1650,9 +1592,7 @@ object MonitorOps {
     * ratio broadcast onto each. Exact oracle.
     */
   def hacMeanSe(s: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.events(s, dir)
-      .groupBy(to_date(col("ts")).as("d"))
-      .agg(count(lit(1)).as("c"))
+    val daily = dailyCount(Tables.events(s, dir), "c")
     val wOrd = Window.orderBy(col("d"))
     val lagged = (1 to 5).foldLeft(daily) { (df, k) =>
       df.withColumn(s"c$k", lag(col("c"), k).over(wOrd))
@@ -1775,7 +1715,6 @@ object MonitorOps {
         sum(dec0(col("n_chars"))).as("s1"),
         sum(dec0(col("n_chars")) * dec0(col("n_chars"))).as("s2"))
     val cut = graft.Lineage.cut(cells)
-    def d(c: String) = col(c).cast("double")
     val mean = (d("s1") / d("n")).as("m")
     val withM = cut.select(col("lang"), col("half"), col("n"), col("s1"), col("s2"), mean)
     // constant-size frames from here: means per row/col/grand, harmonic n
@@ -1931,9 +1870,7 @@ object MonitorOps {
     * output rows. Exact oracle.
     */
   def gumbelReturnLevels(s: SparkSession, dir: String): DataFrame =
-    gumbelFromDaily(Tables.events(s, dir)
-      .groupBy(to_date(col("ts")).as("d"))
-      .agg(count(lit(1)).as("c")))
+    gumbelFromDaily(dailyCount(Tables.events(s, dir), "c"))
 
   /** The Gumbel fit over an already-aggregated (d, c) daily-count
     * relation — shared verbatim by the streaming twin
@@ -1948,7 +1885,6 @@ object MonitorOps {
       count(lit(1)).as("k"),
       sum(dec0(col("mx"))).as("s1"),
       sum(dec0(col("mx")) * dec0(col("mx"))).as("s2"))
-    def d(c: String) = col(c).cast("double")
     val mean = d("s1") / d("k")
     val vr = (d("s2") - d("s1") * (d("s1") / d("k"))) / (d("k") - 1.0)
     val beta = sqrt(vr) * sqrt(lit(6.0)) / lit(math.Pi)
@@ -2011,11 +1947,8 @@ object MonitorOps {
   def binarySegmentation(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir).select(to_date(col("ts")).as("d"))
     val span = ev.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
-    val calendar = span
-      .select(explode(expr("sequence(lo, hi)")).as("d"))
     val daily = ev.groupBy(col("d")).agg(count(lit(1)).as("c"))
-    val dense = graft.Lineage.cut(calendar.join(daily, Seq("d"), "left")
-      .select(col("d"), coalesce(col("c"), lit(0L)).as("c")))
+    val dense = graft.Lineage.cut(dateCalendar(span, daily))
     // one scan level: scaled cusum + argmax day inside a segment
     def level(df: DataFrame, segCol: Column): DataFrame = {
       val seg = df.withColumn("seg", segCol)

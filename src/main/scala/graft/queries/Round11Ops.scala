@@ -7,16 +7,14 @@ import org.apache.spark.sql.functions._
 import graft.{Key, OracleMath, Tables}
 import graft.Key.{exact, rowsOnly}
 
-/** Round-11 operators — the monitoring/QA layer a production corpus
-  * pipeline runs beside its nightly build: distribution-drift scoring
-  * (PSI), change-point location (integer-exact CUSUM), ordered-funnel
-  * completion within a time window, frequent behavior sequences, and
-  * calendar seasonality decomposition. Every cross-row float total
-  * goes through the order-free DECIMAL rule or stays in scaled
-  * integers end-to-end (the mean6/events_autocorr discipline), so the
-  * DuckDB oracle hashes match bit-for-bit at any partitioning.
-  * Its time-series and drift keys (psi_drift, cusum_changepoint,
-  * seasonal_decompose and theil_sen_trend) live in [[MonitorOps]].
+/** Round-11 operators — the QA layer a production corpus pipeline
+  * runs beside its nightly build, among them ordered-funnel
+  * completion within a time window and frequent behavior sequences.
+  * Every cross-row float total goes through the order-free DECIMAL
+  * rule or stays in scaled integers end-to-end (the
+  * mean6/events_autocorr discipline), so the DuckDB oracle hashes
+  * match bit-for-bit at any partitioning. The drift, change-point, seasonality and trend keys
+  * live in [[MonitorOps]].
   */
 object Round11Ops {
   import OracleMath._

@@ -15,11 +15,8 @@ import graft.Key.{exact, rowsOnly}
   * Every cross-row float total follows the house order-free rule
   * (DECIMAL sums or exact integers), and per-row float chains mirror
   * the oracle's operation ORDER exactly so 6-dp emits are identical.
-  * Its A/B keys live in [[ExperimentOps]].
-  * Its time-series and drift keys (holt_forecast,
-  * holt_winters_forecast, forecast_backtest, mann_kendall_trend,
-  * seasonal_strength, durbin_watson and ks_drift_test) live in
-  * [[MonitorOps]].
+  * Its A/B keys live in [[ExperimentOps]], its forecasting, trend and
+  * drift keys in [[MonitorOps]].
   */
 object Round12Ops {
   import OracleMath._

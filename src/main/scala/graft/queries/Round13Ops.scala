@@ -13,9 +13,8 @@ import graft.Key.exact
   * DECIMAL sums (or stay exact integers), per-row float chains mirror
   * the oracle's operation ORDER exactly, global sorts never touch
   * data-volume-sized relations. The log-rank test lives in
-  * [[ExperimentOps]].
-  * Its time-series and drift keys (acf_table, pacf_table, ljung_box,
-  * variance_ratio_test and emd_drift) live in [[MonitorOps]].
+  * [[ExperimentOps]]; the autocorrelation, variance-ratio and
+  * earth-mover drift keys live in [[MonitorOps]].
   */
 object Round13Ops {
   import OracleMath._

@@ -6,20 +6,17 @@ import org.apache.spark.sql.functions._
 import graft.{Key, OracleMath, Tables}
 import graft.Key.exact
 
-/** Round-14 operators (repo round 8) — four axes the catalog did not
+/** Round-14 operators (repo round 8) — three axes the catalog did not
   * yet cover: collocation mining (PMI over adjacent word pairs — the
   * phrase-discovery primitive under every "merge multiword entities
-  * before training" preprocessing recipe), lead-lag causal screening
-  * (a Granger-style F-test between daily event series — the first
-  * question a growth team asks of two correlated metrics), spectral
-  * direction (the leading principal component of the embedding
-  * covariance via bounded power iteration), and the sequence-budget
-  * menu (the packing-strategy envelope per max_len candidate).
+  * before training" preprocessing recipe), spectral direction (the
+  * leading principal component of the embedding covariance via
+  * bounded power iteration), and the sequence-budget menu (the
+  * packing-strategy envelope per max_len candidate).
   * House rules as ever: cross-row totals stay exact (integer counts,
   * DECIMAL(38,0) cross-products), per-row float chains mirror the
   * oracle's operation order, rankings sort on ROUNDED measures with
-  * unique tie-breaks, bounded outputs.
-  * Its time-series and drift keys (granger_daily) live in
+  * unique tie-breaks, bounded outputs. The Granger screen lives in
   * [[MonitorOps]].
   */
 object Round14Ops {

@@ -8,23 +8,17 @@ import graft.{Key, OracleMath, Tables}
 import graft.Key.exact
 
 /** Round-16 operators (repo round 8, continued) — closing the
-  * remaining drift / corpus-diversity axes: the Cramér–von Mises
-  * two-sample statistic (the integrated-gap complement to KS's
-  * single worst point), lexical-diversity
-  * distinct-n-gram ratios (the repetition fingerprint of generated
-  * or boilerplate text), a fixed-period periodogram (IS the weekly
-  * cycle the dominant rhythm, not just present — seasonal_strength
-  * assumes period 7; this tests 7 against its alternatives), and
-  * mean average precision (the order-sensitive retrieval summary
-  * beside MRR's first-hit view).
+  * remaining corpus-diversity axes: lexical-diversity distinct-n-gram
+  * ratios (the repetition fingerprint of generated or boilerplate
+  * text) and mean average precision (the order-sensitive retrieval
+  * summary beside MRR's first-hit view).
   *
   * House rules as Round15Ops: exact integer/decimal moments, double
   * chains mirrored token for token, libm-adjacent factors rounded to
   * 12 dp before order-free DECIMAL(38,12) sums (the markov device),
   * emits via OracleMath.emit, bounded outputs, unique sort keys.
-  * CUPED and Mantel–Haenszel live in [[ExperimentOps]].
-  * Its time-series and drift keys (spectral_power and cvm_drift_test)
-  * live in [[MonitorOps]].
+  * CUPED and Mantel–Haenszel live in [[ExperimentOps]]; the
+  * Cramér–von Mises test and the periodogram in [[MonitorOps]].
   */
 object Round16Ops {
   import OracleMath._

@@ -12,19 +12,15 @@ import graft.Key.exact
   * Mantel–Haenszel's stratified 2×2), class-based tf-idf
   * characteristic terms (what VOCABULARY distinguishes each source),
   * Krippendorff's alpha (the chance-corrected agreement that
-  * generalizes kappa's assumptions),
-  * the Page–Hinkley sequential drift detector (the online
-  * changepoint alarm beside the retrospective CUSUM), and embedding
-  * label-separation validity (Calinski–Harabasz + Davies–Bouldin —
-  * DO the labels carve the embedding space, the geometry check
-  * behind label_centroid_sim).
+  * generalizes kappa's assumptions), and embedding label-separation
+  * validity (Calinski–Harabasz + Davies–Bouldin — DO the labels carve
+  * the embedding space, the geometry check behind label_centroid_sim).
   *
   * House rules as Round15/16: exact integer/decimal moments, double
   * chains mirrored token for token, 12-dp-rounded terms into
   * order-free DECIMAL(38,12) sums, emits via OracleMath.emit,
   * bounded outputs, unique sort keys. The delta-method ratio-metric
-  * CI lives in [[ExperimentOps]].
-  * Its time-series and drift keys (page_hinkley) live in
+  * CI lives in [[ExperimentOps]], the Page–Hinkley drift alarm in
   * [[MonitorOps]].
   */
 object Round17Ops {

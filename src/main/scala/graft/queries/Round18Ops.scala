@@ -10,21 +10,16 @@ import graft.Key.exact
 /** Round-18 operators (repo round 8, continued) — the data-mixture
   * optimization step (DoReMi-style multiplicative reweighting, the
   * operation that turns per-source loss measurements into the next
-  * training mix), an autocorrelation-robust standard error for daily
-  * means (Newey–West — daily series are serially correlated and the
-  * i.i.d. SE overstates certainty), a two-factor interaction screen
-  * (does the language effect on length DRIFT between corpus halves —
-  * the factorial question one-way tests can't pose), the
-  * information-gain decision stump (the single most predictive
-  * threshold, the root of every tree a feature-usefulness probe
-  * needs). graph_closeness lives in [[GraphOps]].
+  * training mix) and the information-gain decision stump (the single
+  * most predictive threshold, the root of every tree a
+  * feature-usefulness probe needs). graph_closeness lives in
+  * [[GraphOps]]; the Newey–West standard error and the language ×
+  * corpus-half interaction screen in [[MonitorOps]].
   *
   * House rules as Round15-17: exact integer/decimal moments, double
   * chains mirrored token for token, 12-dp-rounded libm-adjacent
   * terms into order-free DECIMAL(38,12) sums, emits via
   * OracleMath.emit, bounded outputs, unique sort keys.
-  * Its time-series and drift keys (hac_mean_se and
-  * lang_drift_interaction) live in [[MonitorOps]].
   */
 object Round18Ops {
   import OracleMath._

@@ -7,18 +7,17 @@ import org.apache.spark.sql.functions._
 import graft.{Key, OracleMath, Tables}
 import graft.Key.exact
 
-/** Round-20 operators (repo round 8, continued) — four axes the
+/** Round-20 operators (repo round 8, continued) — three axes the
   * statistics sweep still lacked: the ENERGY two-sample test (all
   * pairwise |x−y| distances, computed exactly in O(n log n) by the
   * sorted-cumulative identity — the modern omnibus alternative where
-  * KS/CvM read only vertical CDF gaps), extreme-value capacity
-  * planning (Gumbel block maxima with return levels — "what daily
-  * peak should we size for"), Yuen's trimmed-mean t-test (the robust
-  * two-sample inference winsorized_mean #290 reports but never
-  * tests), and Jensen–Shannon divergence between source token
+  * KS/CvM read only vertical CDF gaps), Yuen's trimmed-mean t-test
+  * (the robust two-sample inference winsorized_mean #290 reports but
+  * never tests), and Jensen–Shannon divergence between source token
   * distributions (the symmetric bounded corpus-mix distance;
   * source_vocab_overlap #300 compares vocabularies as SETS, this
-  * compares them as DISTRIBUTIONS).
+  * compares them as DISTRIBUTIONS). The Gumbel return levels live in
+  * [[MonitorOps]].
   *
   * House rules as Round15–19: exact integer/decimal moments
   * (energy's pairwise sums are EXACT decimals end-to-end — no 12-dp
@@ -26,8 +25,6 @@ import graft.Key.exact
   * mirrored token for token, emits via OracleMath.emit with the §6 #5
   * decimal recovery on every oracle ratio emit, bounded outputs,
   * unique sort keys.
-  * Its time-series and drift keys (gumbel_return_levels) live in
-  * [[MonitorOps]].
   */
 object Round20Ops {
   import OracleMath._

@@ -7,24 +7,20 @@ import org.apache.spark.sql.functions._
 import graft.{Key, OracleMath, Tables}
 import graft.Key.exact
 
-/** Round-24 operators (repo round 8, continued) — three axes: BINARY
-  * SEGMENTATION of the daily series (cusum_changepoint #269 finds ONE
-  * break; real series break more than once — recurse once into each
-  * half, the standard multi-changepoint baseline), funnel stage
-  * LATENCY (funnel_sessions #245 counts who reaches each stage; this
-  * prices HOW LONG each transition takes — the percentile table a UX
-  * review reads), and the retention DECAY-LAW fit (retention_cohorts
-  * #28 tabulates the curve; this fits ln r = a·ln w + b and emits the
-  * decay exponent — one number to compare products/cohorts by).
+/** Round-24 operators (repo round 8, continued) — two axes: funnel
+  * stage LATENCY (funnel_sessions #245 counts who reaches each stage;
+  * this prices HOW LONG each transition takes — the percentile table
+  * a UX review reads), and the retention DECAY-LAW fit
+  * (retention_cohorts #28 tabulates the curve; this fits
+  * ln r = a·ln w + b and emits the decay exponent — one number to
+  * compare products/cohorts by). Binary segmentation lives in
+  * [[MonitorOps]].
   *
   * House rules as Round15–23: exact integer/decimal arithmetic
-  * wherever values are exact (the whole segmentation runs on scaled
-  * integer cusums), 12-dp-rounded libm terms into order-free
-  * DECIMAL(38,12) sums otherwise, mirrored double chains, emits via
-  * OracleMath.emit with §6 #5 recovery on oracle ratio emits, bounded
-  * outputs, unique sort keys.
-  * Its time-series and drift keys (binary_segmentation) live in
-  * [[MonitorOps]].
+  * wherever values are exact, 12-dp-rounded libm terms into
+  * order-free DECIMAL(38,12) sums otherwise, mirrored double chains,
+  * emits via OracleMath.emit with §6 #5 recovery on oracle ratio
+  * emits, bounded outputs, unique sort keys.
   */
 object Round24Ops {
   import OracleMath._

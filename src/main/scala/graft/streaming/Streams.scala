@@ -999,9 +999,7 @@ object Streams {
     * tier would materialize the forecast each morning.
     */
   def holtCountsStream(events: DataFrame): DataFrame =
-    events
-      .groupBy(to_date(col("ts")).as("d"), col("event_type"))
-      .agg(count(lit(1)).as("x"))
+    graft.queries.MonitorOps.dailyCount(events, "x", "event_type")
 
   /** #49z streaming Page–Hinkley drift alarm — §2 #397 as a continuous
     * query: the live side is ONE update-mode daily count (map-side
@@ -1012,9 +1010,7 @@ object Streams {
     * stream ≡ batch is an identity, spec-pinned.
     */
   def phCountsStream(events: DataFrame): DataFrame =
-    events
-      .groupBy(to_date(col("ts")).as("d"))
-      .agg(count(lit(1)).as("c"))
+    graft.queries.MonitorOps.dailyCount(events, "c")
 
   /** Serve the Page–Hinkley table from drained live daily counts
     * (bounded state snapshot first — the holtFromCounts rule). */
