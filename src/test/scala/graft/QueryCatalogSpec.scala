@@ -1992,6 +1992,55 @@ class QueryCatalogSpec extends AnyFunSuite with TempDirs {
       ("B", 0L, false), ("B", 4L, true)), s"$frame")
   }
 
+  test("the daily count and the dense calendars read a day without events as 0") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    import graft.queries.MonitorOps
+    def at(day: Int) = java.sql.Timestamp.valueOf(f"2024-03-$day%02d 12:00:00")
+    // two events on 03-01, one on 03-04: 03-02 and 03-03 have none
+    val ev = Seq(at(1), at(1), at(4)).toDF("ts")
+    val daily = MonitorOps.dailyCount(ev, "x")
+    assert(daily.select(date_format($"d", "MM-dd"), $"x").as[(String, Long)].collect().toMap ==
+      Map("03-01" -> 2L, "03-04" -> 1L))
+    val byK = MonitorOps.seriesCalendar(daily).as[(Int, Long)].collect().sortBy(_._1).toSeq
+    assert(byK == Seq((0, 2L), (1, 0L), (2, 0L), (3, 1L)), s"$byK")
+    val span = daily.agg(min($"d").as("lo"), max($"d").as("hi"))
+    val byDate = MonitorOps.dateCalendar(span, daily.withColumnRenamed("x", "c"))
+      .select(date_format($"d", "MM-dd"), $"c").as[(String, Long)].collect().sortBy(_._1).toSeq
+    assert(byDate == Seq("03-01" -> 2L, "03-02" -> 0L, "03-03" -> 0L, "03-04" -> 1L), s"$byDate")
+  }
+
+  test("the per-type calendar starts a type that first occurs late at the global lo") {
+    import spark.implicits._
+    import graft.queries.MonitorOps
+    def at(day: Int) = java.sql.Timestamp.valueOf(f"2024-03-$day%02d 12:00:00")
+    // views on 03-01 and 03-03; the only click is on 03-03
+    val ev = Seq(("view", at(1)), ("view", at(3)), ("click", at(3)), ("click", at(3)))
+      .toDF("event_type", "ts")
+    val cal = MonitorOps.typeCalendar(MonitorOps.dailyCount(ev, "x", "event_type"), "x0")
+      .as[(String, Int, Long)].collect().sortBy(r => (r._1, r._2)).toSeq
+    assert(cal == Seq(("click", 0, 0L), ("click", 1, 0L), ("click", 2, 2L),
+      ("view", 0, 1L), ("view", 1, 0L), ("view", 2, 1L)), s"$cal")
+  }
+
+  test("the halves ECDF puts the midpoint doc in half 1 and ends f1/f2 at n1/n2") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    // ids 1…5: the midpoint is 3, so docs 1-3 are half 1 and 4-5 half 2
+    val docs = Seq((1L, "en", 20L), (2L, "en", 10L), (3L, "de", 10L), (4L, "en", 10L),
+      (5L, "en", 30L)).toDF("doc_id", "lang", "n_chars")
+    val (cum, tot) = graft.queries.MonitorOps.halvesEcdf(docs)
+    val rows = cum.join(tot, Seq("lang"))
+      .select($"lang", $"n_chars", $"c1", $"c2", $"f1", $"f2", $"n1", $"n2")
+      .as[(String, Long, Long, Long, Long, Long, Long, Long)].collect()
+      .sortBy(r => (r._1, r._2)).toSeq
+    assert(rows == Seq(
+      ("de", 10L, 1L, 0L, 1L, 0L, 1L, 0L),
+      ("en", 10L, 1L, 1L, 1L, 1L, 2L, 2L),
+      ("en", 20L, 1L, 0L, 2L, 1L, 2L, 2L),
+      ("en", 30L, 0L, 1L, 2L, 2L, 2L, 2L)), s"$rows")
+  }
+
   test("ab_lift_report rounds a count ratio as DuckDB does: 323/640 reads 0.504687") {
     import spark.implicits._
     // 323/640 is 0.5046875 in decimal, but the double times 1e6 is
