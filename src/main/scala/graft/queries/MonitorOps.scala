@@ -607,7 +607,8 @@ object MonitorOps {
     * value-domain-bounded relation (window partitioned by lang, never
     * raw docs); D's numerator |F1·n2 − F2·n1| stays in DECIMAL(38,0)
     * (the graph_assortativity overflow rule) and only the final
-    * quotient touches floats. Exact oracle.
+    * quotient touches floats; D, a ratio of counts, rounds the DuckDB
+    * way (`roundDouble`). Exact oracle.
     */
   def ksDriftTest(s: SparkSession, dir: String): DataFrame = {
     val (cum, tot) = halvesEcdf(Tables.documents(s, dir))
@@ -617,8 +618,7 @@ object MonitorOps {
       .groupBy(col("lang"), col("n1"), col("n2"))
       .agg(max(col("num")).as("mnum"))
       .select(col("lang"), col("n1"), col("n2"),
-        emit(col("mnum").cast("double") / (col("n1").cast("double") * col("n2").cast("double")), 6)
-          .as("ks_d"),
+        (roundDouble(col("mnum").cast("double") / (d("n1") * d("n2")), 6) + lit(0.0)).as("ks_d"),
         emit(lit(1.358) * sqrt((col("n1") + col("n2")).cast("double")
           / (col("n1").cast("double") * col("n2").cast("double"))), 6).as("d_crit"))
       .withColumn("drifted", col("ks_d") > col("d_crit"))
@@ -973,8 +973,8 @@ object MonitorOps {
     * distribution, which KS under-weighs. Exact rational end to end:
     * over consecutive distinct values, |F1·n2 − F2·n1|·Δv accumulates
     * in DECIMAL(38,0) (the KS histogram + a lead over the
-    * value-domain-bounded relation), one division at the end. Exact
-    * oracle.
+    * value-domain-bounded relation), one division at the end, rounded
+    * the DuckDB way (`roundDouble`: a ratio of integers). Exact oracle.
     */
   def emdDrift(s: SparkSession, dir: String): DataFrame = {
     val (cum, tot) = halvesEcdf(Tables.documents(s, dir))
@@ -989,8 +989,8 @@ object MonitorOps {
       .groupBy(col("lang"), col("n1"), col("n2"))
       .agg(sum(col("seg")).as("num"))
       .select(col("lang"), col("n1"), col("n2"),
-        emit(col("num").cast("double")
-          / (col("n1").cast("double") * col("n2").cast("double")), 6).as("emd_chars"))
+        (roundDouble(col("num").cast("double") / (d("n1") * d("n2")), 6) + lit(0.0))
+          .as("emd_chars"))
       .orderBy(col("lang"))
   }
 

@@ -2061,6 +2061,36 @@ class QueryCatalogSpec extends AnyFunSuite with TempDirs {
     assert(r.getAs[Double]("rate_a") == 0.504687, s"$r")
   }
 
+  /** A `documents` table of (doc_id, n_chars) rows, all in one lang. */
+  private def docsDir(prefix: String, docs: Seq[(Long, Long)]): String = {
+    import spark.implicits._
+    val dir = tempDir(prefix).toString
+    docs.map { case (id, n) => (id, "", "en", "web", n) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.parquet(s"$dir/documents.parquet")
+    dir
+  }
+
+  test("ks_drift_test rounds its count ratio as DuckDB does: 323/640 reads 0.504687") {
+    // doc 1 is the whole first half; of the 640 second-half docs 323
+    // sit at 10 chars and 317 at 30, so the widest ECDF gap is 323/640
+    val dir = docsDir("graft_ks_round", Seq(1L -> 20L) ++
+      (1000L until 1323L).map(_ -> 10L) ++ (1323L until 1640L).map(_ -> 30L))
+    val r = SparkEntry.queries("ks_drift_test")(spark, dir).head()
+    assert(r.getAs[Long]("n1") == 1L && r.getAs[Long]("n2") == 640L, s"$r")
+    assert(r.getAs[Double]("ks_d") == 0.504687, s"$r")
+  }
+
+  test("emd_drift rounds its count ratio as DuckDB does: 323/640 reads 0.504687") {
+    // doc 1 (half 1) at 11 chars; 323 second-half docs at 10 and 317 at
+    // 11: only the step 10→11 counts, with gap 323 over 1·640
+    val dir = docsDir("graft_emd_round", Seq(1L -> 11L) ++
+      (1000L until 1323L).map(_ -> 10L) ++ (1323L until 1640L).map(_ -> 11L))
+    val r = SparkEntry.queries("emd_drift")(spark, dir).head()
+    assert(r.getAs[Long]("n1") == 1L && r.getAs[Long]("n2") == 640L, s"$r")
+    assert(r.getAs[Double]("emd_chars") == 0.504687, s"$r")
+  }
+
   test("theta-sketch audience overlap tracks the exact matrix within 2%") {
     import org.apache.spark.sql.functions._
     val approx = SparkEntry.queries("audience_overlap_sketch")(spark, dir)
