@@ -977,7 +977,7 @@ object Streams {
     * query: the live side is ONE update-mode count per event type
     * (map-side-combined, |types| state rows total); PSI against the
     * static baseline is SERVED from the drained counts through the
-    * batch op's own arithmetic ([[graft.queries.Round11Ops.psiFinish]]
+    * batch op's own arithmetic ([[graft.queries.MonitorOps.psiFinish]]
     * — the mauSketchStream serve-from-state pattern), so stream ≡
     * batch is an identity, spec-pinned. At scale the baseline is a
     * bounded broadcast (|types| rows) and the stream state never
@@ -988,11 +988,12 @@ object Streams {
 
   /** #49w streaming Holt forecast feed — continuous twin of §2 #307
     * holt_forecast under the serve-from-state pattern: the live side
-    * is ONE update-mode count per (day, type) key (|days|·|types|
-    * state rows, map-side combined — a long-running deployment
+    * is ONE update-mode count per (day, type) key
+    * ([[graft.queries.MonitorOps.dailyCount]], |days|·|types| state
+    * rows, map-side combined — a long-running deployment
     * windows the day key like #47); the forecast table is SERVED from
     * drained counts through the batch op's own calendar-densify +
-    * sequential fold ([[graft.queries.Round12Ops.holtFromDaily]]), so
+    * sequential fold ([[graft.queries.MonitorOps.holtFromDaily]]), so
     * stream ≡ batch is an identity, spec-pinned with a mid-stream
     * split. The recurrence itself never runs inside streaming state —
     * it is a bounded post-read fold, which is exactly how a serving
@@ -1002,11 +1003,12 @@ object Streams {
     graft.queries.MonitorOps.dailyCount(events, "x", "event_type")
 
   /** #49z streaming Page–Hinkley drift alarm — §2 #397 as a continuous
-    * query: the live side is ONE update-mode daily count (map-side
-    * combined, |days| state rows; a deployment bounds it with an
+    * query: the live side is ONE update-mode daily count
+    * ([[graft.queries.MonitorOps.dailyCount]], map-side combined,
+    * |days| state rows; a deployment bounds it with an
     * event-time watermark on the day key); the alarm table is SERVED
     * from the drained state through the batch op's own arithmetic
-    * ([[graft.queries.Round17Ops.pageHinkleyFromDaily]]), so
+    * ([[graft.queries.MonitorOps.pageHinkleyFromDaily]]), so
     * stream ≡ batch is an identity, spec-pinned.
     */
   def phCountsStream(events: DataFrame): DataFrame =
@@ -1022,7 +1024,7 @@ object Streams {
     * (one update-mode aggregate; the weekly block maxima and the
     * method-of-moments fit are constant-size arithmetic served from
     * the drained state via
-    * [[graft.queries.Round20Ops.gumbelFromDaily]]): the return-level
+    * [[graft.queries.MonitorOps.gumbelFromDaily]]): the return-level
     * table refreshes continuously as days close, stream ≡ batch by
     * identity, spec-pinned.
     */
